@@ -2,12 +2,13 @@
 G9 DefineConsensus, G10 CountBraid) and spaced-seed error correction
 (A8 PreCorrect).
 
-The reference computes PWM consensus inside reducers
-(Node.Consensus, src/Brush/Node.java:1293-1377).  Here it is a *pure SQL*
-positional aggregation: explode extension characters with posexplode,
-weighted-majority per (node, side, position) via max_by, compare each
-extension against the consensus with a join — no UDF, fully
-whole-stage-codegen, and the group size is bounded by J1's per-key cap.
+The reference computes PWM consensus inside one reducer per (node, side),
+with all of that side's neighbour extensions in hand (Node.Consensus,
+src/Brush/Node.java:1293-1377).  Here it is the same shape in SQL: one
+exchange gathers each (src, d) side's extensions into a sorted array, and
+array higher-order functions (transform / filter / aggregate / exists)
+work out the bounded length, the column votes, the N-ratio and each
+edge's mismatch within that row — no UDF, no per-base rows, no joins back.
 """
 
 from __future__ import annotations
@@ -25,138 +26,122 @@ def D2():
     return F.substring("et", 2, 1)
 
 
-def _extensions(nodes: DataFrame, edges: DataFrame, max_ext: int) -> DataFrame:
-    """Per edge: the neighbor's extension string beyond the overlap, as seen
-    from (src, side d1), plus the neighbor's coverage as vote weight
-    (DARKMSG payload, src/Brush/CutChimericLinks.java:97-109)."""
+def _sides(nodes: DataFrame, edges: DataFrame, max_ext: int) -> DataFrame:
+    """One row per (src, d) side: ``n_edges``, every edge of the side, and
+    ``xs``, the non-empty neighbour extensions beyond the overlap as seen
+    from (src, side d1), each with its neighbour's coverage as vote weight
+    ``w`` and its truncated integer weight ``iw`` (DARKMSG payload,
+    src/Brush/CutChimericLinks.java:97-109; Node.java:1332).  ``xs`` is
+    sorted by length descending, then ``ext``, then ``dst``."""
     nbr = nodes.select(F.col("node_id").alias("dst"),
                        F.col("seq").alias("nseq"), F.col("cov").alias("ncov"))
     oriented = F.when(D2() == "f", F.col("nseq")).otherwise(dna.rc(F.col("nseq")))
+    ext = oriented.substr(F.col("ov") + 1, F.lit(max_ext))
+    x = F.struct(
+        (-F.length(ext)).alias("nl"), ext.alias("ext"), "dst", "et", "ov",
+        F.col("ncov").alias("w"),
+        F.greatest(F.floor("ncov").cast("int"), F.lit(0)).alias("iw"),
+    )
     return (
-        edges.join(nbr, "dst")
-        .select(
-            "src", D1().alias("d"), "et", "dst", "ov",
-            F.col("ncov").alias("w"),
-            oriented.substr(F.col("ov") + 1, F.lit(max_ext)).alias("ext"),
-        )
-        .filter(F.length("ext") > 0)
+        edges.join(nbr, "dst", "left")
+        .groupBy("src", D1().alias("d"))
+        .agg(F.count(F.lit(1)).alias("n_edges"),
+             F.array_sort(F.filter(F.collect_list(x),
+                                   lambda e: F.length(e["ext"]) > 0)).alias("xs"))
     )
 
 
-def pwm_consensus(nodes: DataFrame, edges: DataFrame, majority: float = 0.6,
-                  pwm_n: float = 0.1, max_ext: int = 100) -> tuple[DataFrame, DataFrame]:
-    """Returns (consensus, mismatches):
+def _consensus(sides: DataFrame, majority: float) -> DataFrame:
+    """Adds ``clen``, the bounded consensus length, and ``cons``, the
+    consensus string over it (Node.Consensus, src/Brush/Node.java:1293-1377):
 
-    consensus: (src, d, pos, cchar, total_w) — weighted-majority char per
-    position ('N' when no base exceeds ``majority`` of the column weight);
-    mismatches: (src, d, et, dst, ov, mismatch_cnt) for every edge whose
-    extension disagrees with the consensus at >= 1 non-N position
-    (src/Brush/CutChimericLinks.java:306-375).
-
-    Faithful to Node.Consensus (src/Brush/Node.java:1293-1377):
     - the consensus is BOUNDED to the 2nd-longest extension's length —
       or the 3rd-longest when the two longest carry weight sum <= 2
       (weak evidence) and a 3rd exists (:1313-1320).  Positions covered
       by a single extension are never 100%-majority filler, so the
       N-ratio measures genuinely contested columns;
     - vote weights are the truncated integer coverage (:1332);
-    - a base wins a column only with share STRICTLY above ``majority``
-      (:1348-1361);
-    - a side whose N-ratio over the bounded length exceeds ``pwm_n``
-      yields no consensus (null -> no cuts, :1369-1371);
-    - sides with < 2 extensions never cut (their single extension is its
-      own consensus, :1373-1374).
-    """
-    ext = _extensions(nodes, edges, max_ext).withColumn(
-        "iw", F.greatest(F.floor("w").cast("int"), F.lit(0)))
-    # bounded consensus length per side (Node.Consensus:1313-1320)
-    by_len = Window.partitionBy("src", "d").orderBy(
-        F.length("ext").desc(), F.col("ext"), F.col("dst"))
-    ranked = ext.withColumn("rnk", F.row_number().over(by_len))
-    side_len = ranked.groupBy("src", "d").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(F.when(F.col("rnk") == 2, F.length("ext"))).alias("len2"),
-        F.max(F.when(F.col("rnk") == 3, F.length("ext"))).alias("len3"),
-        F.sum(F.when(F.col("rnk") <= 2, F.col("w")).otherwise(F.lit(0.0))).alias("w12"),
-    ).filter(F.col("n") >= 2).select(
-        "src", "d",
-        F.when((F.col("n") == 2) | (F.col("w12") > 2.0), F.col("len2"))
-        .otherwise(F.coalesce(F.col("len3"), F.col("len2"))).alias("clen"),
+    - a base wins a column only with share STRICTLY above ``majority``,
+      ties going to the higher (weight, char) (:1348-1361); else 'N'.
+
+    Sides with < 2 extensions get null ``clen`` and ``cons``."""
+    xs = F.col("xs")
+    l2, l3 = F.length(F.get(xs, 1)["ext"]), F.length(F.get(xs, 2)["ext"])
+    strong = (F.size(xs) == 2) | (F.get(xs, 0)["w"] + F.get(xs, 1)["w"] > 2.0)
+    zero = F.lit(0).cast("bigint")
+
+    def votes(i):  # (ch, iw) of every extension reaching 1-based column i
+        return F.transform(F.filter(xs, lambda e: F.length(e["ext"]) >= i),
+                           lambda e: F.struct(e["ext"].substr(i, F.lit(1)).alias("ch"),
+                                              e["iw"].alias("iw")))
+
+    def tally(col):  # (total weight, top (cw, ch)) of one column's votes
+        def cw(ch):
+            return F.aggregate(col, zero, lambda a, v: a + F.when(v["ch"] == ch, v["iw"])
+                               .otherwise(0))
+        chars = F.array_distinct(F.transform(col, lambda v: v["ch"]))
+        return F.struct(
+            F.aggregate(col, zero, lambda a, v: a + v["iw"]).alias("tot"),
+            F.array_max(F.transform(chars, lambda ch: F.struct(
+                cw(ch).alias("cw"), ch.alias("ch")))).alias("top"))
+
+    def winner(t):  # the column's char, or 'N' without a strict majority
+        return F.when(t["top"]["cw"] > F.lit(majority) * t["tot"], t["top"]["ch"]) \
+            .otherwise(F.lit("N"))
+
+    cols = F.transform(F.sequence(F.lit(1), F.col("clen")), votes)
+    return (
+        sides.withColumn("clen", F.when(strong, l2).otherwise(F.coalesce(l3, l2)))
+        .withColumn("cons", F.array_join(F.transform(F.transform(cols, tally), winner), ""))
     )
-    # NOTE: split's (?!^) also matches at end-of-string, yielding a bogus
-    # trailing "" element — the pos < length(ext) guard drops it (it would
-    # otherwise cast phantom '' votes at each extension's end column)
-    chars = ext.select(
-        "src", "d", "et", "dst", "ov", "iw", F.length("ext").alias("elen"),
-        F.posexplode(F.split(F.col("ext"), "(?!^)")).alias("pos", "ch"),
-    ).filter(F.col("pos") < F.col("elen")).drop("elen") \
-        .join(side_len, ["src", "d"]).filter(F.col("pos") < F.col("clen"))
-    col_w = chars.groupBy("src", "d", "pos", "ch").agg(F.sum("iw").alias("cw"))
-    col_tot = col_w.groupBy("src", "d", "pos").agg(
-        F.sum("cw").alias("total_w"),
-        F.max_by("ch", F.struct(F.col("cw"), F.col("ch"))).alias("top_ch"),
-        F.max("cw").alias("top_w"),
-    )
-    consensus = col_tot.select(
-        "src", "d", "pos",
-        F.when(F.col("top_w") > majority * F.col("total_w"), F.col("top_ch"))
-        .otherwise(F.lit("N")).alias("cchar"),
-        "total_w",
-    )
-    # N-ratio over the bounded length: no consensus -> no cuts
-    n_ratio = consensus.join(side_len, ["src", "d"]).groupBy("src", "d").agg(
-        (F.sum(F.when(F.col("cchar") == "N", 1).otherwise(0))
-         / F.max("clen")).alias("nr")
-    )
-    good_sides = n_ratio.filter(F.col("nr") <= pwm_n).select("src", "d")
-    mismatches = (
-        chars.join(consensus, ["src", "d", "pos"])
-        .join(good_sides, ["src", "d"])
-        .filter((F.col("cchar") != "N") & (F.col("ch") != F.col("cchar")))
-        .groupBy("src", "d", "et", "dst", "ov")
-        .agg(F.count(F.lit(1)).alias("mismatch_cnt"))
-    )
-    return consensus, mismatches
+
+
+def _n_ratio() -> F.Column:
+    """Share of 'N' columns in the bounded consensus (Node.java:1369-1371)."""
+    return (F.col("clen") - F.length(F.replace("cons", F.lit("N"), F.lit("")))) \
+        / F.col("clen")
 
 
 def cut_chimeric_links(nodes: DataFrame, edges: DataFrame, majority: float = 0.6,
-                       pwm_n: float = 0.1, max_ext: int = 100,
-                       min_side_edges: int = 2) -> DataFrame:
-    """G1: removal edge set — edges whose extension mismatches the
-    (>=2-edge) side consensus.  Apply with graph.remove_edges."""
-    sided = edges.withColumn("d", D1())
-    multi = (
-        sided.groupBy("src", "d").agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= min_side_edges).select("src", "d")
-    )
-    _, mism = pwm_consensus(nodes, edges, majority, pwm_n, max_ext)
-    return (
-        mism.join(multi, ["src", "d"])
-        .select("src", "et", "dst", "ov")
-    )
+                       pwm_n: float = 0.1, max_ext: int = 100) -> DataFrame:
+    """G1: removal edge set (src, et, dst, ov) — edges whose extension
+    disagrees with their side's consensus at >= 1 non-N column
+    (src/Brush/CutChimericLinks.java:306-375).  Apply with
+    graph.remove_edges.
+
+    Sides with < 2 extensions never cut (their single extension is its
+    own consensus, Node.java:1373-1374), and a side whose N-ratio exceeds
+    ``pwm_n`` has no consensus and so no cuts (:1369-1371)."""
+    cons = _consensus(_sides(nodes, edges, max_ext).filter(F.size("xs") >= 2), majority)
+
+    def mismatch(e):
+        return F.exists(
+            F.sequence(F.lit(1), F.least(F.length(e["ext"]), F.col("clen"))),
+            lambda i: (F.col("cons").substr(i, F.lit(1)) != "N")
+            & (e["ext"].substr(i, F.lit(1)) != F.col("cons").substr(i, F.lit(1))))
+
+    # no Filter above `cons`: Catalyst would push it below the projection
+    # and compute the consensus twice.  array_distinct keeps a duplicated
+    # edge row to one cut, as the removal set is a set.
+    cut = F.when(_n_ratio() <= pwm_n, F.array_distinct(F.transform(
+        F.filter("xs", mismatch),
+        lambda e: F.struct(*(e[c].alias(c) for c in ("et", "dst", "ov"))))))
+    return cons.select("src", F.inline(cut))
 
 
 def define_consensus(nodes: DataFrame, edges: DataFrame, majority: float = 0.6,
                      pwm_n: float = 0.1, max_ext: int = 100) -> DataFrame:
     """G9: per (node, side) color — 'B' if a valid consensus of the side's
     extensions exists, else 'W' (src/Brush/DefineConsensus.java:288-341).
-    A single-extension side is its own consensus -> 'B'
-    (src/Brush/Node.java:1373-1374).  Output: (node_id, d, color)."""
-    consensus, _ = pwm_consensus(nodes, edges, majority, pwm_n, max_ext)
-    per_side = consensus.groupBy(F.col("src").alias("node_id"), "d").agg(
-        (F.sum(F.when(F.col("cchar") == "N", 1).otherwise(0)) / F.count(F.lit(1))).alias("nr")
+    A single-edge side is its own consensus -> 'B'
+    (src/Brush/Node.java:1373-1374); a side of >= 2 edges with < 2
+    extensions gets no color.  Output: (node_id, d, color)."""
+    single = F.col("n_edges") == 1
+    sides = _sides(nodes, edges, max_ext).filter(single | (F.size("xs") >= 2))
+    return _consensus(sides, majority).select(
+        F.col("src").alias("node_id"), "d",
+        F.when(single | (_n_ratio() <= pwm_n), F.lit("B")).otherwise(F.lit("W")).alias("color"),
     )
-    multi = per_side.select(
-        "node_id", "d",
-        F.when(F.col("nr") <= pwm_n, F.lit("B")).otherwise(F.lit("W")).alias("color"),
-    )
-    singles = (
-        edges.select("src", D1().alias("d"))
-        .groupBy("src", "d").agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") == 1)
-        .select(F.col("src").alias("node_id"), "d", F.lit("B").alias("color"))
-    )
-    return multi.unionByName(singles)
 
 
 def count_braids(nodes: DataFrame, edges: DataFrame, **consensus_kw) -> DataFrame:

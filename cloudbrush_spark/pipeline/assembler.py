@@ -111,8 +111,8 @@ class Assembler:
                            ) -> tuple[DataFrame, DataFrame]:
         p = self.params
         for rnd in range(2):  # loop <= 2 rounds (BrushAssembler.java:347-367)
-            cuts = consensus_ops.cut_chimeric_links(
-                nodes, edges, p.majority, p.pwm_n)
+            cuts = self._ckpt(consensus_ops.cut_chimeric_links(
+                nodes, edges, p.majority, p.pwm_n))
             n_cut = cuts.count()
             self.counters[f"chimeric_cut_r{rnd}"] = n_cut
             if n_cut == 0:

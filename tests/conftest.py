@@ -1,3 +1,5 @@
+from pathlib import Path
+
 import pytest
 
 # Long-running property/e2e/lifecycle tests (each >= ~20 s; ~2,600 s of
@@ -86,10 +88,20 @@ _SLOW_TESTS = {
 }
 
 
-def pytest_collection_modifyitems(config, items):
+def pytest_collection_modifyitems(session, config, items):
+    names = {item.name.split("[")[0] for item in items}
     for item in items:
         if item.name.split("[")[0] in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # a stale entry would silently stop marking anything: check it when
+    # the whole directory was collected cleanly (a partial selection or a
+    # module that failed to import leaves tests out legitimately)
+    here = Path(__file__).resolve().parent
+    whole = any(Path(a).resolve() in (here, *here.parents) for a in config.args)
+    stale = sorted(_SLOW_TESTS - names)
+    if whole and not session.testsfailed and stale:
+        raise pytest.UsageError(
+            f"tests/conftest.py _SLOW_TESTS names no collected test: {', '.join(stale)}")
 
 
 @pytest.fixture(scope="session")
