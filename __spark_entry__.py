@@ -51,13 +51,18 @@ def _widen_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     a structural no-op, so nothing here tunes FOR local mode — it only
     removes a fixture-layout artifact local mode suffers."""
     try:
-        # a Spark-written dataset is a DIRECTORY of part files; getsize
-        # on the directory entry returns ~4KB and would mis-estimate
-        # splits as 1 at ANY scale, silently inverting the "structural
-        # no-op at production scale" guard — sum the data files instead
+        # a Spark-written dataset is a DIRECTORY of part files, nested
+        # one level per partition column (k=1/part-0.parquet); getsize on
+        # the directory entry returns ~4KB and would mis-estimate splits
+        # as 1 at ANY scale, silently inverting the "structural no-op at
+        # production scale" guard — sum the data files of the whole tree
+        # instead, skipping the _/.-prefixed metadata Spark skips too
         if os.path.isdir(path):
-            size = sum(e.stat().st_size for e in os.scandir(path)
-                       if e.is_file() and not e.name.startswith(("_", ".")))
+            size = 0
+            for root, dirs, files in os.walk(path):
+                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+                size += sum(os.path.getsize(os.path.join(root, f))
+                            for f in files if not f.startswith(("_", ".")))
         else:
             size = os.path.getsize(path)
     except OSError:

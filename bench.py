@@ -7,7 +7,7 @@ artifact and must stay under its 2,000-char tail window:
  "sf": ..., health + compact work digest}
 The bulky per-query WORK map prints as its own EARLIER JSON line
 ("metric": "headline_queries_work") and is mirrored to
-probes/bench_work_latest.json.
+probes/bench_work_latest.json when a probes/ directory exists.
 
 Each query is forced with a full materialization (collect of the final,
 already-aggregated result — headline results are small by construction).
@@ -244,7 +244,7 @@ def main() -> None:
     # The full per-query work map made the r13 final line 5.6KB — past
     # the driver's 2,000-char stdout tail window, so BENCH_r13.json had
     # parsed:null.  Emit the bulky map on its OWN earlier line plus a
-    # committed sidecar under probes/, and keep the FINAL line compact
+    # sidecar under probes/ (if present), and keep the FINAL line compact
     # (headline wall + health + a work digest), well under the window.
     work_line = {"metric": "headline_queries_work", "sf": float(sf),
                  "work": work}

@@ -14,8 +14,9 @@ Design (Spark-first, not a port): each round
   5. third-party edges are re-pointed with an orientation map
      (replacelink, src/Brush/PairMark.java:277-283 — here two joins).
 
-Expected halving per round -> O(log chain) rounds.  ``localCheckpoint``
-every round truncates lineage (the #1 Spark iteration hazard, SURVEY §4).
+Expected halving per round -> O(log chain) rounds.  A severing
+``plans.cut`` every round truncates lineage (the #1 Spark iteration
+hazard, SURVEY §4; see plans/sever.py for why it also severs).
 Like the reference's adaptive switch to a single-reducer serial merge
 (G7 QuickMark / G8 QuickMerge, src/Brush/BrushAssembler.java:506-556),
 small residual link sets finish with one driver-side chain walk
@@ -36,33 +37,7 @@ from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import dna
 from cloudbrush_spark.operators.graph import compressible
-from cloudbrush_spark.plans.sever import sever_origin
-
-
-def _cut(df: DataFrame) -> DataFrame:
-    """Round boundary: localCheckpoint + ORIGIN-PLAN SEVERING.
-
-    ``localCheckpoint`` truncates the visible lineage, but the returned
-    LogicalRDD retains the pre-checkpoint logical plan (origin stats /
-    constraints), and that reference CHAINS across rounds: round r's
-    origin plan contains round r-1's LogicalRDD, whose origin contains
-    r-2's, ...  Catalyst passes that re-walk the plan per round —
-    stats estimation (``SizeInBytesOnlyStatsPlanVisitor.visitJoin``),
-    InjectRuntimeFilter, constant folding — then run over an
-    ever-deepening join tree, and per-round DRIVER time grows
-    geometrically even though the data shrinks: measured on a 600k-node
-    chain, rounds 10/11/12 cost 1.8s/3.5s/11.9s with plain
-    localCheckpoint and 1.3s flat with this cut (a 1.5M-node chain's
-    round 14 cost 345s before the fix).  Severing rebuilds the frame
-    from the materialized internal RDD (zero-copy — ``toRdd`` on a
-    checkpointed frame IS the checkpoint RDD), so no Catalyst walk can
-    recurse into history.  The severed frame has no origin stats, which
-    suppresses static broadcast planning downstream — inside the loop
-    every join is either hinted or AQE-converted from actual runtime
-    sizes, so plans are unchanged (and measured faster end-to-end).
-    Severing mechanics + the fail-loud Connect fallback live in
-    ``plans.sever_origin``."""
-    return sever_origin(df.localCheckpoint(eager=True))
+from cloudbrush_spark.plans import cut
 
 
 def D1():
@@ -95,8 +70,8 @@ def _coin_male(col, seed: int, coin: str):
     raise ValueError(f"unknown coin {coin!r}")
 
 
-def _pick_merges(links: DataFrame, seed: int, coin: str = "xxhash64") -> DataFrame:
-    """One merge per male node into a female tail.
+def pick_merges(links: DataFrame, seed: int, coin: str = "xxhash64") -> DataFrame:
+    """G5 PairMark: one merge per male node into a female tail.
 
     Output: (a, d1, b, d2, ov, o_a) — a merges into b.
     """
@@ -115,18 +90,8 @@ def _pick_merges(links: DataFrame, seed: int, coin: str = "xxhash64") -> DataFra
     )
 
 
-def pick_merges(links: DataFrame, seed: int, coin: str = "xxhash64") -> DataFrame:
-    """Public G5 PairMark step (see _pick_merges)."""
-    return _pick_merges(links, seed, coin)
-
-
 def merge_nodes(nodes: DataFrame, merges: DataFrame) -> DataFrame:
-    """Public G6 PairMerge node step (see _merge_nodes)."""
-    return _merge_nodes(nodes, merges)
-
-
-def _merge_nodes(nodes: DataFrame, merges: DataFrame) -> DataFrame:
-    """Build the next node table: females extended, males dropped.
+    """G6 PairMerge node step: females extended, males dropped.
 
     A ``pair_ends`` member-read column, when present, splices through the
     merge (female's list ++ absorbed male's list — reference PairMerge
@@ -374,8 +339,7 @@ def _serial_contract(nodes: DataFrame, edges: DataFrame,
 
 
 def contract_chains(nodes: DataFrame, edges: DataFrame, seed: int = 42,
-                    max_rounds: int = 64, checkpoint_every: int = 1,
-                    serial_threshold: int = 4096, coin: str = "xxhash64",
+                    max_rounds: int = 64, serial_threshold: int = 4096,
                     verbose: bool = False) -> tuple[DataFrame, DataFrame, int]:
     """Contract all compressible chains to single nodes.
 
@@ -392,30 +356,26 @@ def contract_chains(nodes: DataFrame, edges: DataFrame, seed: int = 42,
     rounds = 0
     for rnd in range(max_rounds):
         t0 = time.time()
-        links = _cut(compressible(nodes, edges))
+        links = cut(compressible(nodes, edges), sever=True)
         n_links = links.count()
         if n_links == 0:
             break
         if n_links <= serial_threshold:
             nodes, edges = _serial_contract(nodes, edges, links.collect())
-            nodes = nodes.localCheckpoint(eager=True)
-            edges = edges.localCheckpoint(eager=True)
+            nodes, edges = cut(nodes), cut(edges)
             rounds += 1
             if verbose:
                 print(f"contract serial finish: {n_links} links "
                       f"({time.time() - t0:.1f}s)", flush=True)
             break
-        merges = _cut(_pick_merges(links, seed + rnd, coin))
+        merges = cut(pick_merges(links, seed + rnd), sever=True)
         n_merges = merges.count()
         if n_merges == 0:
             # all-same-coin pathology on a residual chain: next seed reshuffles
             rounds += 1
             continue
-        nodes = _merge_nodes(nodes, merges)
-        edges = _rewrite_edges(edges, merges)
-        if (rnd + 1) % checkpoint_every == 0:
-            nodes = _cut(nodes)
-            edges = _cut(edges)
+        nodes = cut(merge_nodes(nodes, merges), sever=True)
+        edges = cut(_rewrite_edges(edges, merges), sever=True)
         rounds += 1
         if verbose:
             print(f"contract round {rnd}: {n_merges} merges "

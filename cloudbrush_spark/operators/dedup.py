@@ -24,44 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import dna, text
-from cloudbrush_spark.plans.sever import sever_origin
-
-
-def _stage_cut(df: DataFrame, sever: bool = False) -> DataFrame:
-    """Materialize a small intermediate frame so a fanned-out DAG reads it
-    instead of re-executing (and racing) the expensive upstream pipeline.
-
-    Uses the RELIABLE checkpoint (replicated to ``spark.checkpoint.dir``)
-    when one is configured — the mode to run on a multi-executor cluster,
-    where executor loss / dynamic-allocation scale-in would invalidate
-    executor-local blocks — and falls back to ``localCheckpoint(eager=True)``
-    otherwise, which is correct and cheapest on local[*] where executor
-    loss cannot happen.
-
-    ``sever=True`` additionally rebuilds the frame from the materialized
-    internal RDD, dropping the checkpoint's retained ORIGIN logical plan.
-    Checkpoint LogicalRDDs keep the pre-checkpoint plan for stats /
-    constraints, and in an ITERATIVE loop those references CHAIN: round
-    r's origin contains round r-1's LogicalRDD and so on, and Catalyst's
-    stats / runtime-filter / folding passes then re-walk an ever-
-    deepening tree each round — per-round driver time grows
-    geometrically while data shrinks (measured in the contraction loop:
-    345 s for a late round whose data was ~1,000 rows; see
-    ``operators/contraction._cut``).  Use sever=True for the per-round
-    cut of any unbounded loop; leave it off for one-shot cuts, where the
-    origin stats help downstream static broadcast planning."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        out = df.checkpoint(eager=True)
-    else:
-        out = df.localCheckpoint(eager=True)
-    if sever:
-        out = sever_origin(out)
-    # mark the wrapper so downstream operators (dedup_clusters) can skip
-    # a redundant second cut of an already-materialized frame — one
-    # fewer sequential checkpoint job on every composed pipeline (r15)
-    out._cb_cut = True
-    return out
+from cloudbrush_spark.plans import cut
 
 
 # Over-cap bucket lists are usually tiny (bound: members * bands /
@@ -195,7 +158,7 @@ def _cap_list_frame(big_lazy: DataFrame, schema: str,
         return None
     if len(rows) <= collect_max:
         return big_lazy.sparkSession.createDataFrame(rows, schema)
-    return _stage_cut(big_lazy)
+    return cut(big_lazy)
 
 
 def dedup_reads(reads: DataFrame, id_col: str = "read_id", seq_col: str = "seq",
@@ -346,13 +309,9 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     # query).  One eager cut turns the DAG into linear-once + cheap
     # fan-out — the same role a shuffle materialization plays at scale.
     #
-    # Cluster caveat: localCheckpoint blocks live only on executors, so it
-    # is NOT fault-tolerant — an executor loss (or dynamic-allocation
-    # scale-in) after the cut makes downstream reads fail.  On a real
-    # cluster set spark.checkpoint.dir and use _stage_cut's reliable mode
-    # (DataFrame.checkpoint) instead; locally the eager cut is exactly
-    # right and avoids the parallel-stage cold-cache race.
-    banded = _stage_cut(banded)
+    # On a cluster, set spark.checkpoint.dir so the cut is a reliable
+    # checkpoint (plans.cut) rather than executor-local blocks.
+    banded = cut(banded)
     # oversized-bucket detection via groupBy (map-side partials, skew-proof)
     # + broadcast anti-join — never a window holding a whole hot bucket in
     # one task.
@@ -427,7 +386,7 @@ def minhash_dedup_pairs_from_shingles(shingles: DataFrame, id_col: str = "doc_id
 
     The shingle frame feeds both the signature aggregate and the exact-
     Jaccard verification — persisted here so it evaluates once.
-    persist(), not localCheckpoint(eager=False): the lazy checkpoint
+    persist(), not a lazy (``eager=False``) local checkpoint: that
     materializes by RE-RUNNING the marked tasks after the driving query's
     execution is torn down, and those replayed tasks report to that
     query's already-unregistered SQLMetrics accumulators — the source of
@@ -436,7 +395,7 @@ def minhash_dedup_pairs_from_shingles(shingles: DataFrame, id_col: str = "doc_id
 
     Cache lifecycle: the returned pair set is FAR smaller than the
     shingle set, so the final result is eagerly materialized
-    (localCheckpoint(eager=True)) and the shingle cache released before
+    (``plans.cut``) and the shingle cache released before
     returning — a long-running session calling this repeatedly holds
     storage memory only for its own results, never for leaked
     intermediates (the round-4 bench leak: +6s on this query and memory
@@ -450,8 +409,8 @@ def minhash_dedup_pairs_from_shingles(shingles: DataFrame, id_col: str = "doc_id
         # _jaccard_for_pairs references the pair frame in several join
         # branches, and without a cut the whole signature aggregate +
         # banding pipeline re-executes once per branch (measured 2-3x)
-        cands = _stage_cut(lsh_candidate_pairs(sigs, id_col, bands,
-                                               rows_per_band, overcap=overcap))
+        cands = cut(lsh_candidate_pairs(sigs, id_col, bands,
+                                        rows_per_band, overcap=overcap))
         # ONE count over the checkpointed candidate frame serves every
         # bounded-size decision below (the old shape paid a separate
         # limit().count() job inside _candidate_shingles — r14 verdict #5)
@@ -472,11 +431,11 @@ def minhash_dedup_pairs_from_shingles(shingles: DataFrame, id_col: str = "doc_id
             # Past the _candidate_shingles gate the frame IS the
             # corpus-width stream — there the cut would materialize a
             # corpus-width distinct and is deliberately skipped.
-            sh_v = _stage_cut(sh_v)
+            sh_v = cut(sh_v)
         elif not shingles_distinct:
             sh_v = sh_v.distinct()
         jac = _jaccard_for_pairs(sh_v, cands, id_col, n_pairs=n_cands)
-        return _stage_cut(jac.filter(F.col("jaccard") >= jaccard_threshold))
+        return cut(jac.filter(F.col("jaccard") >= jaccard_threshold))
     finally:
         shingles.unpersist()
 
@@ -577,7 +536,7 @@ def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
         .persist(StorageLevel.MEMORY_AND_DISK)
     try:
         sigs = minhash_signatures_from_shingles(sh, id_col, num_hashes)
-        banded = _stage_cut(_band_keys(sigs, id_col, bands, rows_per_band))
+        banded = cut(_band_keys(sigs, id_col, bands, rows_per_band))
         big = (banded.groupBy("band", "bkey").count()
                .filter(F.col("count") > max_bucket).select("band", "bkey"))
         small = banded.join(F.broadcast(big), ["band", "bkey"], "left_anti")
@@ -596,14 +555,14 @@ def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
                     .join(reps, ["band", "bkey"])
                     .select(F.col(id_col).alias("a"), "b"))
             pairs = pairs.unionByName(star)
-        cands = _stage_cut(pairs.distinct())
+        cands = cut(pairs.distinct())
         # one count over the checkpointed frame feeds every bounded-size
         # decision (candidate filter, verify broadcast hints) — r15, the
         # same zero-extra-jobs plumbing as the self-join path
         n_cands = cands.count()
         sh_v = _candidate_shingles(sh, cands, id_col, n_cands=n_cands)
         if sh_v is not sh:
-            sh_v = _stage_cut(sh_v.distinct())
+            sh_v = cut(sh_v.distinct())
         else:
             sh_v = sh_v.distinct()
         jac = _jaccard_for_pairs(sh_v, cands, id_col, n_pairs=n_cands)
@@ -611,7 +570,7 @@ def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
             F.expr("substring(a, 3)").cast(new_t).alias("new_id"),
             F.expr("substring(b, 3)").cast(ref_t).alias("ref_id"),
             "jaccard")
-        return _stage_cut(out)
+        return cut(out)
     finally:
         sh.unpersist()
 
@@ -860,7 +819,7 @@ def hamming_near_pairs(sig: DataFrame, id_col: str,
     # recompute the expensive signature aggregate against a cold cache
     n_sig = sig.count()
     try:
-        return _stage_cut(_hamming_pairs_from_cached(
+        return cut(_hamming_pairs_from_cached(
             sig, id_col, nchunks, width, mask, max_hamming, bucket_cap,
             n_sig=n_sig))
     finally:
@@ -921,13 +880,13 @@ def _hamming_pairs_from_cached(sig: DataFrame, id_col: str, nchunks: int,
     # whole thing is ONE exchange with no round-robin
     # sort-before-repartition, and AQE never coalesces it (r14).
     if distinct_sigs:
-        dsig = _stage_cut(sig.select(id_col, "sim_hi", "sim_lo")
-                          .repartition(npart, "sim_hi", "sim_lo"))
+        dsig = cut(sig.select(id_col, "sim_hi", "sim_lo")
+                   .repartition(npart, "sim_hi", "sim_lo"))
         id_cols = [id_col]
     else:
-        dsig = _stage_cut(sig.select("sim_hi", "sim_lo")
-                          .repartition(npart, "sim_hi", "sim_lo")
-                          .dropDuplicates())
+        dsig = cut(sig.select("sim_hi", "sim_lo")
+                   .repartition(npart, "sim_hi", "sim_lo")
+                   .dropDuplicates())
         id_cols = []
     chunks = dsig.select(
         *id_cols, "sim_hi", "sim_lo",
@@ -1025,7 +984,7 @@ def _hamming_pairs_from_cached(sig: DataFrame, id_col: str, nchunks: int,
             ])).alias("s"),
         ).select(*id_cols, "sim_hi", "sim_lo", "c", "v",
                  F.col("s.sc").alias("sc"), F.col("s.sv").alias("sv"))
-        sub = _stage_cut(sub)  # ns rows per hot member — small;
+        sub = cut(sub)  # ns rows per hot member — small;
         # cuts the chunk/CASE pipeline from re-running for the sub-bucket
         # cap aggregate, its broadcast and the pair join
         big2 = (sub.groupBy("c", "v", "sc", "sv").count()
@@ -1102,13 +1061,13 @@ def dedup_clusters(pairs: DataFrame, items: DataFrame | None = None,
     would then silently drop whole clusters.  With jumping, 50
     iterations cover diameter ~2^50; if the fixpoint is somehow still
     not reached the function RAISES rather than returning wrong labels.
-    ``_stage_cut`` truncates lineage each round like the assembler's
+    ``plans.cut`` truncates lineage each round like the assembler's
     contraction loop; the driver-side loop holds only a changed-row
     probe, never data.
     """
     # cut BEFORE the loop: the edge list is re-joined every round, and an
     # un-checkpointed ``pairs`` input (this package's pair operators end
-    # in _stage_cut, but arbitrary caller-built pair frames don't) would
+    # in plans.cut, but arbitrary caller-built pair frames don't) would
     # otherwise replay its whole upstream plan once per iteration.  Cut
     # the DIRECTED edges and derive the symmetrized form lazily: the
     # union of two column-swapped projections is a map-side no-op each
@@ -1116,12 +1075,12 @@ def dedup_clusters(pairs: DataFrame, items: DataFrame | None = None,
     # |pairs| rows (profiled at x100: 1,168 core-seconds — 19% of the
     # whole query — spent writing the 103M-row symmetrized copy).
     # An input that IS already a checkpoint (every pair operator in this
-    # package ends in _stage_cut, marked ``_cb_cut``) skips the second
+    # package ends in plans.cut, marked ``_cb_cut``) skips the second
     # cut: the narrow (a, b) projection re-reads materialized blocks per
     # round, which is exactly what the cut would have bought (r15).
     edges = pairs.select("a", "b")
     if not getattr(pairs, "_cb_cut", False):
-        edges = _stage_cut(edges)
+        edges = cut(edges)
     # the edge list is materialized, so its count is one cheap job — and
     # it decides the ALGORITHM, not just a hint: a bounded edge list
     # (near-dup graphs are orders of magnitude smaller than the corpus)
@@ -1146,7 +1105,7 @@ def dedup_clusters(pairs: DataFrame, items: DataFrame | None = None,
         sym = edges.unionByName(
             edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
         nodes = sym.select(F.col("a").alias("member")).distinct()
-        labels = _stage_cut(nodes.withColumn("label", F.col("member")))
+        labels = cut(nodes.withColumn("label", F.col("member")))
         # one cheap count over the checkpointed label table: the node
         # count bounds every per-round frame (labels, jump build side,
         # round-0 frontier), so each loop join below can carry an EXACT
@@ -1204,8 +1163,8 @@ def dedup_clusters(pairs: DataFrame, items: DataFrame | None = None,
             )
             cand = cand.unionByName(jump)
         # sever=True: per-round cuts of an unbounded loop must not chain
-        # origin plans (geometric driver-time growth — see _stage_cut)
-        merged = _stage_cut(
+        # origin plans (see plans/sever.py)
+        merged = cut(
             cand.groupBy("member").agg(
                 F.min("label").alias("label"),
                 # exactly one tagged row per member (labels is keyed by
@@ -1302,15 +1261,15 @@ def simhash_clusters(docs: DataFrame, id_col: str = "doc_id",
         # so cluster sizes can be summed at the NODE level below — the
         # corpus-width groupBy("label") + size join the old shape paid
         # are then node-level aggregates instead (r14, guide §2.3)
-        nodes = _stage_cut(sig.groupBy("sim_hi", "sim_lo")
-                           .agg(F.min(id_col).alias("node_id"),
-                                F.count(F.lit(1)).alias("m")))
+        nodes = cut(sig.groupBy("sim_hi", "sim_lo")
+                    .agg(F.min(id_col).alias("node_id"),
+                         F.count(F.lit(1)).alias("m")))
         # cut the pair set before the CC: dedup_clusters' symmetrize union
         # references the pair plan twice, and the banded-Hamming pipeline
         # is by far the dominant cost on a duplicate-saturated corpus
         # (x10 fixture: ~117s of ~145s total) — executing it once must not
         # depend on Catalyst finding the exchange reuse
-        sig_pairs = _stage_cut(_hamming_pairs_from_cached(
+        sig_pairs = cut(_hamming_pairs_from_cached(
             nodes.select(F.col("node_id").alias(id_col), "sim_hi", "sim_lo"),
             id_col, nchunks, width, mask, max_hamming, bucket_cap,
             distinct_sigs=True))
@@ -1325,15 +1284,15 @@ def simhash_clusters(docs: DataFrame, id_col: str = "doc_id",
                  F.col("cluster_rep").alias("label"))
         # node-level: attach each node's label, sum member counts per
         # label, re-attach — all bounded by the distinct-signature count
-        nodemap = _stage_cut(nodes.join(labels, "node_id")
-                             .select("sim_hi", "sim_lo", "label", "m"))
+        nodemap = cut(nodes.join(labels, "node_id")
+                      .select("sim_hi", "sim_lo", "label", "m"))
         sizes = nodemap.groupBy("label").agg(F.sum("m").alias("n"))
         node2 = nodemap.join(sizes, "label") \
             .select("sim_hi", "sim_lo", "label", "n")
         # ONE corpus-width join recovers the members (the old shape paid
         # two sequential corpus-width joins plus a corpus-width size
         # aggregate and size join — 4 full-width exchanges -> 1)
-        return _stage_cut(
+        return cut(
             sig.join(node2, ["sim_hi", "sim_lo"])
             .select(F.col("label").alias("cluster_rep"),
                     F.col(id_col).alias("member"), "n"))

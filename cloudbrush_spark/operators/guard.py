@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import text
+from cloudbrush_spark.plans import cut
 
 # Engine-portable patterns (identical semantics under Java regex and RE2):
 # character classes, bounded repetition and \b word boundaries only — no
@@ -492,7 +493,6 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
 
     cand = grams
     if hash_prefilter:
-        from cloudbrush_spark.operators.dedup import _stage_cut
         hashed = grams.withColumn("gh", F.xxhash64("g"))
         hot = _df_keys(hashed, "gh")
         # cut the candidate frame: it is SMALL (the repeated-content
@@ -500,7 +500,7 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
         # full-corpus explode runs exactly twice (df pass + this pass),
         # same as the exact-only plan, while the full-width shuffle
         # carries 8-byte hashes instead of ~100-byte gram strings
-        cand = _stage_cut(hashed.join(hot, "gh", "left_semi").drop("gh"))
+        cand = cut(hashed.join(hot, "gh", "left_semi").drop("gh"))
     shared = _df_keys(cand, "g")
     hits = cand.join(shared, "g", "left_semi").select(id_col, "pos")
     w = Window.partitionBy(id_col).orderBy("pos")

@@ -27,26 +27,15 @@ identical output — see OPTIMIZATION_r14.md):
   specialized apart — the old plan generated + shuffled the ~200x
   window explosion twice and re-read it a third time for the hot-key
   count (guide §2.4: remove shuffles outright).
-- The DEFAULT generation pass is a pure-JVM expression pipeline
-  (posexplode over substring windows + xxhash64).  An Arrow
-  ``mapInArrow`` kernel (numpy rolling polynomial hash over the flat
-  Arrow string buffer, guide §4.2) is available via ``use_arrow=True``:
-  it nearly halves JVM executor CPU (130 -> 75 CPU-s at sf0.1) but
-  pays a fixed per-task Python-worker latency (fork + numpy/pyarrow
-  import + first-batch warmup, measured ~7 s/task cold on a loaded
-  host) that the short local tasks cannot amortize — wall 20-37 s vs
-  10 s, so the JVM path is the default.  The kernel is the right
-  choice only where tasks are long enough to amortize worker startup
-  (many batches per task) AND executor CPU is the binding resource.
-  The JVM path also handles non-ASCII sequence alphabets.
-- Optional broadcast SEMI prefilter (``prefilter=True``): suffix
-  windows whose seed k-mer matches NO read prefix can never produce a
-  candidate, so the big side is pre-filtered against the distinct
-  prefix-key set before the exchange (guide §3.2 Bloom/semi-join
-  pre-filtering; 585 MB -> 74 MB shuffled at sf0.1).  The prefix-key
-  set is 2 keys/read — broadcastable up to ~10^8 reads; pass
-  ``prefilter=False`` beyond that (the single-exchange shape above
-  still holds; only the exchange carries all windows again).
+- The generation pass is a pure-JVM expression pipeline (posexplode
+  over substring windows + xxhash64).
+- Count-gated broadcast SEMI prefilter: suffix windows whose seed k-mer
+  matches NO read prefix can never produce a candidate, so the big
+  side is pre-filtered against the distinct prefix-key set before the
+  exchange (guide §3.2 Bloom/semi-join pre-filtering; 585 MB -> 74 MB
+  shuffled at sf0.1).  The prefix-key set is 2 keys/read, so past
+  ``PREFILTER_KEYS_MAX`` the prefilter is skipped (the single-exchange
+  shape above still holds; only the exchange carries all windows).
 - The per-key cap guard is a streaming window count OVER THE JOIN'S OWN
   EXCHANGE (sorted once, counted in one pass), replacing the separate
   full-posting count aggregate + union-of-counts regroup + broadcast
@@ -70,16 +59,14 @@ identical output — see OPTIMIZATION_r14.md):
   hash-table build;
 - AQE skew-join handles residual imbalance.
 
-Key-hashing note: seed keys are hashed to 64-bit integers before the
-exchange (a 24-char UTF8 k-mer is ~3x the bytes of a long and far
-slower to hash/compare).  The JVM path uses xxhash64, the Arrow kernel
-a polynomial rolling hash mod 2^64 — each path is self-consistent, and
-the two accepted 2^-64-scale collision modes are unchanged from r13: a
-JOIN-side collision only creates a false candidate that the exact J2
-verify rejects; a CAP-side collision merges two keys' counts and can
-drop an innocent key whole (documented, bounded).  With the Arrow path
-the blacklist is matched by hash as well (same collision class); the
-JVM path keeps the string-level blacklist anti-join.
+Key-hashing note: seed keys are hashed to 64-bit integers (xxhash64)
+before the exchange (a 24-char UTF8 k-mer is ~3x the bytes of a long
+and far slower to hash/compare).  The homopolymer and blacklist
+filters run on the k-mer strings before hashing, so only two
+2^-64-scale collision modes remain: a JOIN-side collision only creates
+a false candidate that the exact J2 verify rejects; a CAP-side
+collision merges two keys' counts and can drop an innocent key whole
+(documented, bounded).
 """
 
 from __future__ import annotations
@@ -89,17 +76,11 @@ from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import dna
 
-# Polynomial rolling-hash multiplier for the Arrow kernel (odd, so x*B is
-# a bijection mod 2^64); FNV-1a's 64-bit prime.
-_POLY_B = 1099511628211
-
-# Auto-prefilter gate: the broadcast distinct prefix-key set is 2 keys
-# per read (16 B/key framed — ~160 MB at this bound, the top of the
-# comfortable broadcast range).  ``match_prefix(prefilter=None)`` counts
-# the reads (one cheap job) and disables the prefilter past the bound
-# instead of relying on the caller to remember ``prefilter=False`` at
-# scale (r14 verdict #3: every other bound in this package is
-# count-gated automatically; this one was a manual footgun).
+# Prefilter gate: the broadcast distinct prefix-key set is 2 keys per
+# read (16 B/key framed — ~160 MB at this bound, the top of the
+# comfortable broadcast range).  ``match_prefix`` counts the reads (one
+# cheap job) and skips the prefilter past the bound, like every other
+# count-gated bound in this package.
 PREFILTER_KEYS_MAX = 10_000_000
 
 
@@ -109,7 +90,7 @@ def _oriented(seq_col, d_col):
 
 def _oriented_both(nodes: DataFrame) -> DataFrame:
     """(node_id, d, oseq) for both orientations; null sequences dropped
-    (they generate no postings in any path)."""
+    (they generate no postings)."""
     return nodes.filter(F.col("seq").isNotNull()).select(
         "node_id",
         F.explode(F.array(
@@ -120,9 +101,9 @@ def _oriented_both(nodes: DataFrame) -> DataFrame:
 
 
 def _postings(nodes: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
-    """(prefix_postings, suffix_postings) over both orientations — the
-    string-kmer two-pass form; the JVM fallback path and the string-level
-    noise-filter tests build on it."""
+    """(prefix_postings, suffix_postings) over both orientations, keyed by
+    the k-mer string; ``match_prefix`` and the string-level noise-filter
+    tests build on it."""
     both = _oriented_both(nodes)
     prefixes = both.select(
         F.substring("oseq", 1, k).alias("kmer"), "node_id", "d"
@@ -141,7 +122,7 @@ def _postings(nodes: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
 
 def _drop_noise_keys(postings: DataFrame, k: int, high_kmers: DataFrame | None) -> DataFrame:
     """Homopolymer + high-frequency seed removal (skew control) at the
-    string level — the JVM fallback's filter."""
+    string level."""
     homopolymers = [c * k for c in "ACGT"]
     out = postings.filter(~F.col("kmer").isin(homopolymers))
     if high_kmers is not None:
@@ -149,148 +130,8 @@ def _drop_noise_keys(postings: DataFrame, k: int, high_kmers: DataFrame | None) 
     return out
 
 
-def _poly_hash_bytes(data: bytes) -> int:
-    """Driver-side twin of the kernel's rolling hash (whole-byte-string
-    form, used for the homopolymer / blacklist exclusion constants).
-    Returns the SIGNED 64-bit value (Spark LongType convention)."""
-    acc = 0
-    for b in data:
-        acc = (acc * _POLY_B + b) & 0xFFFFFFFFFFFFFFFF
-    return acc - (1 << 64) if acc >= (1 << 63) else acc
-
-
-def _roll_hash_batch(batch, k: int, np, prefix_only: bool = False):
-    """All-window polynomial hashes for the batch's ``oseq`` column,
-    vectorized over the FLAT Arrow string buffer (one contiguous byte
-    run + offsets — guide §4.2's re-slicing property).
-
-    Returns ``(hash[int64 view], ov[int32], row_idx)`` where ``ov = 0``
-    tags the prefix window (start 1) and interior windows carry
-    ``ov = len - start + 1`` (>= k by construction); rows shorter than k
-    contribute their single short prefix window, hashed over the bytes
-    they have (matching ``substring(oseq, 1, k)`` on a short string).
-    """
-    import pyarrow as pa
-    arr = batch.column("oseq")
-    if isinstance(arr, pa.ChunkedArray):  # pragma: no cover - RecordBatch cols are flat
-        arr = arr.combine_chunks()
-    bufs = arr.buffers()
-    if bufs[0] is not None and arr.null_count:
-        raise ValueError("null oseq reached the posting kernel "
-                         "(_oriented_both filters them)")
-    if pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type):
-        off = np.frombuffer(bufs[1], dtype=np.int64,
-                            count=len(arr) + 1, offset=arr.offset * 8)
-    else:
-        off = np.frombuffer(bufs[1], dtype=np.int32,
-                            count=len(arr) + 1,
-                            offset=arr.offset * 4).astype(np.int64)
-    data = np.frombuffer(bufs[2], dtype=np.uint8)
-    if data.size and int(data.max()) > 127:
-        raise ValueError(
-            "non-ASCII sequence bytes: byte windows != char windows; "
-            "call match_prefix(use_arrow=False) for this input")
-    n = int(off[-1])
-    H = np.zeros(max(n - k + 1, 0), dtype=np.uint64)
-    if H.shape[0]:
-        dd = data[:n].astype(np.uint64)
-        for j in range(k):
-            # byte at window offset j carries B^(k-1-j); powers are
-            # reduced mod 2^64 in exact Python ints so the vectorized
-            # multiply wraps silently (unsigned array ops don't warn)
-            p = np.uint64(pow(_POLY_B, k - 1 - j, 1 << 64))
-            H += dd[j:j + H.shape[0]] * p
-
-    def _short(row: int, start_local: int) -> np.uint64:
-        seg = data[off[row] + start_local:off[row + 1]]
-        acc = 0
-        for b in seg[:k]:
-            acc = (acc * _POLY_B + int(b)) & 0xFFFFFFFFFFFFFFFF
-        return np.uint64(acc)
-
-    L = np.diff(off)
-    if prefix_only:
-        starts = off[:-1]
-        h = np.empty(len(L), dtype=np.uint64)
-        okm = (L >= k) & (starts <= (n - k))
-        h[okm] = H[starts[okm]]
-        for r in np.nonzero(~okm)[0]:
-            h[r] = _short(int(r), 0)
-        return h.view(np.int64), None, np.arange(len(L))
-    nw = np.maximum(L - k + 1, 1).astype(np.int64)
-    tot = int(nw.sum())
-    row_idx = np.repeat(np.arange(len(L)), nw)
-    ends = np.cumsum(nw)
-    local_i = np.arange(tot, dtype=np.int64) - np.repeat(ends - nw, nw)
-    gpos = off[row_idx] + local_i
-    okm = (local_i + k <= L[row_idx]) & (gpos <= (n - k))
-    h = np.empty(tot, dtype=np.uint64)
-    h[okm] = H[gpos[okm]]
-    for t in np.nonzero(~okm)[0]:
-        h[t] = _short(int(row_idx[t]), int(local_i[t]))
-    ov = np.where(local_i == 0, 0, L[row_idx] - local_i).astype(np.int32)
-    return h.view(np.int64), ov, row_idx
-
-
-def _arrow_postings(both: DataFrame, k: int, excl_hashes) -> DataFrame:
-    """Single-pass posting generation (node_id, d, khash, ov) via the
-    numpy rolling-hash kernel; ``excl_hashes`` (sorted int64 ndarray
-    broadcast) drops homopolymer / blacklisted seed keys in-kernel."""
-    id_type = dict(both.dtypes)["node_id"]
-    schema = f"node_id {id_type}, d string, khash long, ov int"
-    excl_bc = both.sparkSession.sparkContext.broadcast(excl_hashes)
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        excl = excl_bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h, ov, row_idx = _roll_hash_batch(batch, k, np)
-            keep = ~np.isin(h, excl)
-            h, ov, row_idx = h[keep], ov[keep], row_idx[keep]
-            idx = pa.array(row_idx)
-            yield pa.record_batch(
-                [batch.column("node_id").take(idx),
-                 batch.column("d").take(idx),
-                 pa.array(h), pa.array(ov)],
-                names=["node_id", "d", "khash", "ov"])
-
-    return both.select("node_id", "d", "oseq").mapInArrow(gen, schema)
-
-
-def _arrow_prefix_keys(both: DataFrame, k: int, excl_hashes) -> DataFrame:
-    """Distinct prefix-window hashes (the semi-prefilter's build side),
-    via the same kernel in prefix-only mode — 2 keys/read, cheap."""
-    excl_bc = both.sparkSession.sparkContext.broadcast(excl_hashes)
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        excl = excl_bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h, _, _ = _roll_hash_batch(batch, k, np, prefix_only=True)
-            h = h[~np.isin(h, excl)]
-            yield pa.record_batch([pa.array(h)], names=["khash"])
-
-    return both.select("oseq").mapInArrow(gen, "khash long").distinct()
-
-
-def _arrow_available() -> bool:
-    try:  # pragma: no cover - trivially environment-dependent
-        import numpy  # noqa: F401
-        import pyarrow  # noqa: F401
-        return True
-    except ImportError:  # pragma: no cover
-        return False
-
-
 def match_prefix(nodes: DataFrame, k: int, high_kmers: DataFrame | None = None,
-                 per_key_cap: int = 2000, prefilter: bool | None = None,
-                 use_arrow: bool = False) -> DataFrame:
+                 per_key_cap: int = 2000) -> DataFrame:
     """J1: candidate overlap edges (src, d1, dst, d2, ov), maximal ov per
     oriented pair.
 
@@ -312,57 +153,29 @@ def match_prefix(nodes: DataFrame, k: int, high_kmers: DataFrame | None = None,
       single-candidate edges survive, and dropping true edges is the
       wrong default for a verified pipeline.
 
-    ``prefilter`` semi-joins the posting stream against the broadcast
-    distinct prefix-key set before the exchange: suffix windows matching
-    no read prefix cannot produce candidates, so dropping them is
-    invisible in the output — including to the cap guard, whose drops
-    are only observable on keys that join.  The prefix-key set is
-    2/read, so the default ``None`` COUNT-GATES it automatically: one
-    cheap count of ``nodes`` enables the prefilter only while
-    ``2 * reads <= PREFILTER_KEYS_MAX`` (past it, multi-GB broadcasts
-    don't fly and the identical single-exchange plan simply carries all
-    windows — same output either side of the gate, pinned in
-    tests/test_overlap.py).  Explicit ``True``/``False`` skip the count
-    and force the mode.
-
-    ``use_arrow=False`` (default) runs the pure-JVM expression path —
-    fastest measured end-to-end at bench scale and the path for
-    non-ASCII sequence alphabets.  ``use_arrow=True`` opts in to the
-    numpy ``mapInArrow`` kernel: ~1.7x less executor CPU but a fixed
-    per-task Python-worker latency; see the module docstring for the
-    measured tradeoff.
+    The posting stream is semi-joined against the broadcast distinct
+    prefix-key set before the exchange: suffix windows matching no read
+    prefix cannot produce candidates, so dropping them is invisible in
+    the output — including to the cap guard, whose drops are only
+    observable on keys that join.  The prefix-key set is 2/read, so one
+    cheap count of ``nodes`` COUNT-GATES the prefilter: it runs only
+    while ``2 * reads <= PREFILTER_KEYS_MAX`` (past it, multi-GB
+    broadcasts don't fly and the identical single-exchange plan simply
+    carries all windows — same output either side of the gate, pinned
+    in tests/test_overlap.py).
     """
-    if not use_arrow or not _arrow_available():
-        use_arrow = False
-    if prefilter is None:
-        prefilter = nodes.count() * 2 <= PREFILTER_KEYS_MAX
-    both = _oriented_both(nodes)
-    if use_arrow:
-        excl = [_poly_hash_bytes((c * k).encode()) for c in "ACGT"]
-        if high_kmers is not None:
-            # blacklist is broadcast-small by contract (P3 threshold);
-            # hash it driver-side so the kernel excludes it in-stream
-            excl += [_poly_hash_bytes(r[0].encode())
-                     for r in high_kmers.select("kmer").collect()]
-        import numpy as np
-        excl_arr = np.sort(np.array(sorted(set(excl)), dtype=np.int64))
-        un = _arrow_postings(both, k, excl_arr)
-        pref_keys = (_arrow_prefix_keys(both, k, excl_arr)
-                     if prefilter else None)
-    else:
-        prefixes, suffixes = _postings(nodes, k)
-        prefixes = _drop_noise_keys(prefixes, k, high_kmers)
-        suffixes = _drop_noise_keys(suffixes, k, high_kmers)
-        un = (
-            prefixes.select("node_id", "d", F.xxhash64("kmer").alias("khash"),
-                            F.lit(0).alias("ov"))
-            .unionByName(suffixes.select(
-                "node_id", "d", F.xxhash64("kmer").alias("khash"),
-                F.col("ov").cast("int").alias("ov")))
-        )
-        pref_keys = (prefixes.select(F.xxhash64("kmer").alias("khash"))
-                     .distinct() if prefilter else None)
-    if pref_keys is not None:
+    prefixes, suffixes = _postings(nodes, k)
+    prefixes = _drop_noise_keys(prefixes, k, high_kmers)
+    suffixes = _drop_noise_keys(suffixes, k, high_kmers)
+    un = (
+        prefixes.select("node_id", "d", F.xxhash64("kmer").alias("khash"),
+                        F.lit(0).alias("ov"))
+        .unionByName(suffixes.select(
+            "node_id", "d", F.xxhash64("kmer").alias("khash"),
+            F.col("ov").cast("int").alias("ov")))
+    )
+    if nodes.count() * 2 <= PREFILTER_KEYS_MAX:
+        pref_keys = prefixes.select(F.xxhash64("kmer").alias("khash")).distinct()
         un = un.join(F.broadcast(pref_keys), "khash", "semi")
     # ONE exchange on the hashed seed key feeds the cap guard AND both
     # sides of the candidate self-join (exchange reuse is structural:

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import text as textfn
 from cloudbrush_spark.operators import textops
-from cloudbrush_spark.operators.dedup import _stage_cut
+from cloudbrush_spark.plans import cut
 
 QUANTILES = ((25, "p25"), (50, "p50"), (75, "p75"), (90, "p90"))
 
@@ -67,7 +67,7 @@ def corpus_report(docs: DataFrame, id_col: str = "doc_id",
     legs (approx_count_distinct / percentile_approx); their agreement
     tolerance is 10% for the HLL (2x its target rsd) and 5%-or-±1 for
     the quantile sketch."""
-    feats = _stage_cut(docs.select(
+    feats = cut(docs.select(
         F.col(source_col).alias("src"),
         textfn.token_count(text_col).cast("long").alias("ws"),
         textops.quality_col(text_col).alias("q"),

@@ -42,6 +42,8 @@ import threading
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cloudbrush_spark.plans import cut
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -110,15 +112,14 @@ def _collapse(vectors: DataFrame, id_col: str, vec_col: str):
     key; ``groups`` is the DISTINCT-vector frame — one row per unique vector
     with the min-id representative, member count and the vector itself.
 
-    ``groups`` is eagerly cut (``dedup._stage_cut``): it feeds the bucketing
+    ``groups`` is eagerly cut (``plans.cut``): it feeds the bucketing
     pipeline, both re-rank join sides and the member-recovery joins, which
     launch as parallel stages and would otherwise each replay the collapse
     aggregate.  ``keyed`` stays lazy — re-deriving it is one scan + md5.
     """
-    from cloudbrush_spark.operators.dedup import _stage_cut
     keyed = vectors.select(F.col(id_col), _vkey(F.col(vec_col)).alias("vkey"),
                            F.col(vec_col).alias("__vec"))
-    groups = _stage_cut(keyed.groupBy("vkey").agg(
+    groups = cut(keyed.groupBy("vkey").agg(
         F.min(id_col).alias("rep"),
         F.count(F.lit(1)).alias("m"),
         F.min_by("__vec", id_col).alias("__vec"),
@@ -213,10 +214,10 @@ def _capped_rep_pairs(groups: DataFrame, dim: int, planes: int, seed: int,
     <= max_bucket members, so candidates <= tables * n * max_bucket / 2
     + n star rows — linear in n with the cap constant.
     """
-    from cloudbrush_spark.operators.dedup import _cap_list_frame, _stage_cut
+    from cloudbrush_spark.operators.dedup import _cap_list_frame
     b = lsh_bucket(groups, dim, planes, seed, id_col="rep", vec_col="__vec",
                    tables=tables)
-    b1 = _stage_cut(b.select("rep", "tbl", "bucket"))
+    b1 = cut(b.select("rep", "tbl", "bucket"))
     # over-cap bucket list, bounded by n * tables / max_bucket rows — the
     # same cap pattern as the SimHash side (dedup._hamming_pairs_from_
     # cached): collected driver-side below the OVERCAP_COLLECT_MAX
@@ -241,7 +242,7 @@ def _capped_rep_pairs(groups: DataFrame, dim: int, planes: int, seed: int,
     sig2 = (hot.select("rep").distinct()
             .join(groups.select("rep", "__vec"), "rep")
             .select("rep", _sig_expr("__vec", hp2).alias("bucket2")))
-    sub = _stage_cut(hot.join(sig2, "rep"))
+    sub = cut(hot.join(sig2, "rep"))
     big2 = (sub.groupBy("tbl", "bucket", "bucket2").count()
             .filter(F.col("count") > max_bucket)
             .select("tbl", "bucket", "bucket2"))
@@ -1190,8 +1191,7 @@ def cosine_topk_quantized(vectors: DataFrame, queries: DataFrame, k: int = 10,
     top = quantized_select(codes, q, k)
     # Stage-cut so the winner frame evaluates once (the id collect below
     # plus the result join would otherwise each re-run the selection).
-    from cloudbrush_spark.operators.dedup import _stage_cut
-    top = _stage_cut(top)
+    top = cut(top)
     ids = [r[0] for r in
            top.select("neighbor_id").distinct()
            .limit(rerank_collect_max + 1).collect()]
@@ -1582,8 +1582,7 @@ def ivf_quantized_select(spark, path: str, queries: DataFrame,
         # corpus-batch path (broadcast_queries=False) keeps the lazy
         # frame: materializing a corpus-scale query batch is the bigger
         # cost there and the joins are AQE-planned shuffles anyway.
-        from cloudbrush_spark.operators.dedup import _stage_cut
-        q = _stage_cut(q)
+        q = cut(q)
     qx = q.select("query_id", "qc", "qcn",
                   F.explode("probes").alias("bucket"))
     # nprobe >= n_centroids probes every bucket by construction: skip
@@ -1672,8 +1671,7 @@ def cosine_topk_ivf_quantized(spark, path: str, queries: DataFrame,
     if ids is None:
         # Stage-cut: the winner frame is consumed twice
         # (id collect + join).
-        from cloudbrush_spark.operators.dedup import _stage_cut
-        top = _stage_cut(top)
+        top = cut(top)
         ids = [r[0] for r in
                top.select("neighbor_id").distinct()
                .limit(rerank_collect_max + 1).collect()]

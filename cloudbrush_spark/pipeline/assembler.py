@@ -2,8 +2,9 @@
 (src/Brush/BrushAssembler.java:256-893) as Python control flow over
 DataFrame actions.
 
-Stage boundaries ``localCheckpoint`` to truncate lineage (replacing the
-reference's HDFS directory renames); loop decisions read counts
+Stage boundaries go through ``plans.cut`` to truncate lineage (replacing
+the reference's HDFS directory renames; a reliable checkpoint when
+``spark.checkpoint.dir`` is set); loop decisions read counts
 (replacing Hadoop counters).  Every stage returns/records its counters in
 ``self.counters`` mirroring the reference's per-stage printouts.
 """
@@ -20,6 +21,7 @@ from cloudbrush_spark.operators import bubbles as bubbles_ops
 from cloudbrush_spark.operators import consensus as consensus_ops
 from cloudbrush_spark.operators import contraction, dedup, graph, kmers, mates, overlap
 from cloudbrush_spark.operators import stats as stats_ops
+from cloudbrush_spark.plans import cut
 
 
 @dataclass
@@ -35,9 +37,6 @@ class Assembler:
     # what makes a multi-day 100 TB assembly restartable.  Counters of
     # skipped stages are not re-emitted.
     checkpoint_dir: str | None = None
-
-    def _ckpt(self, df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True)
 
     def _stage(self, name: str, fn) -> tuple[DataFrame, DataFrame]:
         if not self.checkpoint_dir:
@@ -75,7 +74,7 @@ class Assembler:
                     self.counters.get("precorrect_fixes", 0) + n_fixes
                 if n_fixes == 0:
                     break
-                reads = self._ckpt(consensus_ops.apply_corrections(reads, fixes))
+                reads = cut(consensus_ops.apply_corrections(reads, fixes))
             self._log(f"precorrect: {self.counters.get('precorrect_fixes', 0)} fixes")
         if p.trust_filter:
             # A6 as a post-correction gate (IdentifyTrustedReads.java:73-94):
@@ -84,13 +83,13 @@ class Assembler:
             # coverage a true k-mer is seen tens of times, so these are the
             # reads whose merge-through causes the residual base error.
             tr = kmers.trusted_reads(reads, p.k, p.trust_threshold)
-            reads = self._ckpt(
+            reads = cut(
                 reads.join(tr.filter("trusted"), on="read_id", how="left_semi"))
             self.counters["trusted_reads"] = reads.count()
             self._log(f"trust_filter: kept {self.counters['trusted_reads']} trusted reads")
-        nodes = self._ckpt(dedup.dedup_reads(reads, k=p.k))
+        nodes = cut(dedup.dedup_reads(reads, k=p.k))
         self.counters["nodes"] = nodes.count()
-        hk = self._ckpt(kmers.high_kmers(
+        hk = cut(kmers.high_kmers(
             nodes, p.k, up_kmer=p.up_kmer, id_col="node_id", cov_col="cov"))
         self.counters["high_kmers"] = hk.count()
         self._log(f"preprocess: {self.counters['nodes']} nodes, "
@@ -100,7 +99,7 @@ class Assembler:
     # -- buildOverlap: J1 -> J2 -> J3 (BrushAssembler.java:313-333) --------
     def build_overlap(self, nodes: DataFrame, high_kmers: DataFrame) -> DataFrame:
         p = self.params
-        edges = self._ckpt(overlap.build_overlap_graph(
+        edges = cut(overlap.build_overlap_graph(
             nodes, p.k, high_kmers, per_key_cap=p.up_kmer))
         self.counters["edges"] = edges.count()
         self._log(f"build_overlap: {self.counters['edges']} edges")
@@ -111,14 +110,14 @@ class Assembler:
                            ) -> tuple[DataFrame, DataFrame]:
         p = self.params
         for rnd in range(2):  # loop <= 2 rounds (BrushAssembler.java:347-367)
-            cuts = self._ckpt(consensus_ops.cut_chimeric_links(
+            cuts = cut(consensus_ops.cut_chimeric_links(
                 nodes, edges, p.majority, p.pwm_n))
             n_cut = cuts.count()
             self.counters[f"chimeric_cut_r{rnd}"] = n_cut
             if n_cut == 0:
                 break
-            edges = self._ckpt(graph.remove_edges(edges, cuts))
-        edges = self._ckpt(graph.transitive_reduction(nodes, edges))
+            edges = cut(graph.remove_edges(edges, cuts))
+        edges = cut(graph.transitive_reduction(nodes, edges))
         self.counters["edges_after_tr"] = edges.count()
         nodes, edges = self.compress_chains(nodes, edges)
         if self.params.diagnostics:
@@ -140,7 +139,7 @@ class Assembler:
             verbose=self.verbose)
         self.counters["compress_rounds"] = \
             self.counters.get("compress_rounds", 0) + rounds
-        return self._ckpt(nodes), self._ckpt(edges)
+        return cut(nodes), cut(edges)
 
     # -- removeTips (BrushAssembler.java:565-618) --------------------------
     def remove_tips(self, nodes: DataFrame, edges: DataFrame
@@ -212,7 +211,7 @@ class Assembler:
                 self.counters.get("edge_adjust_cuts", 0) + n
             if n == 0:
                 break
-            edges = self._ckpt(graph.remove_edges(edges, removals))
+            edges = cut(graph.remove_edges(edges, removals))
             nodes, edges = self.compress_chains(nodes, edges)
             self._log(f"edge_adjustment round: {n} cuts")
         return nodes, edges
@@ -231,7 +230,7 @@ class Assembler:
                 self.counters.get("mate_edge_cuts", 0) + n
             if n == 0:
                 break
-            edges = self._ckpt(graph.remove_edges(edges, removals))
+            edges = cut(graph.remove_edges(edges, removals))
             nodes, edges = self.compress_chains(nodes, edges)
             self._log(f"pair_edge_adjustment round: {n} cuts")
         return nodes, edges

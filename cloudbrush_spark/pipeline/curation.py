@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import text
 from cloudbrush_spark.operators import dedup, sampling, textops
+from cloudbrush_spark.plans import cut
 
 
 def _nd_barrier(c):
@@ -203,8 +204,8 @@ def curate(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # corpus scale) never exists.  src then fans out into three
     # independent branches (the MinHash pair stage, the cluster
     # singleton universe, the final feature join) — cut the lineage
-    # once, like the operators' own fan-out pattern (dedup._stage_cut).
-    src = dedup._stage_cut(
+    # once, like the operators' own fan-out pattern (plans.cut).
+    src = cut(
         kept.withColumn("fp", text.fingerprint_from_tokens(F.col("__toks")))
         .groupBy("fp")
         .agg(F.min_by(F.struct(F.col(id_col), F.col("ws_tokens"),

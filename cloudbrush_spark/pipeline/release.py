@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 
 from cloudbrush_spark.operators import sampling
 from cloudbrush_spark.pipeline import curation
+from cloudbrush_spark.plans import cut
 from cloudbrush_spark.sources import corpus as corpus_sink
 
 
@@ -97,16 +98,12 @@ class ReleasePipeline:
             # no durable checkpoint: still CUT each multi-consumer
             # stage (in-memory materialization) — a lazy plan would
             # re-execute the whole upstream chain (the regex-heavy
-            # curate DAG) per use.  A stage that already cut its own
-            # output (the embdedup gate does, so it can unpersist its
-            # cached drop frame eagerly) marks it _cb_precut —
-            # re-cutting would hold a second checkpoint copy of the
-            # same manifest per release.
-            from cloudbrush_spark.operators.dedup import _stage_cut
+            # curate DAG) per use.  ``cut`` returns a stage's output
+            # unchanged when the stage already cut it (the embdedup gate
+            # does, so it can unpersist its cached drop frame eagerly).
             self.counters[f"ran_{name}"] = 1
             out = fn()
-            return out if fuse or getattr(out, "_cb_precut", False) \
-                else _stage_cut(out)
+            return out if fuse else cut(out)
         # markers go through the Hadoop FS API so a checkpoint_dir on
         # HDFS/S3 resumes exactly like a local one (os.path marker
         # checks silently never resume there, and the marker write
@@ -389,14 +386,8 @@ class ReleasePipeline:
                         # materializes lazily-returned frames after
                         # this function exits, which previously leaked
                         # the cached blocks per release in a long-lived
-                        # session (r13, advisor finding).  _cb_precut
-                        # tells _stage not to cut a second copy.
-                        from cloudbrush_spark.operators.dedup import \
-                            _stage_cut
-                        out = _stage_cut(
-                            manifest.join(drop, id_col, "left_anti"))
-                        out._cb_precut = True
-                        return out
+                        # session.
+                        return cut(manifest.join(drop, id_col, "left_anti"))
                     finally:
                         drop.unpersist()
                 dim = embedding_dim
@@ -418,12 +409,7 @@ class ReleasePipeline:
                     self.counters["embdedup_dropped"] = drop.count()
                     # cut-then-unpersist: same rationale as the
                     # index-backed branch above
-                    from cloudbrush_spark.operators.dedup import \
-                        _stage_cut
-                    out = _stage_cut(
-                        manifest.join(drop, id_col, "left_anti"))
-                    out._cb_precut = True
-                    return out
+                    return cut(manifest.join(drop, id_col, "left_anti"))
                 finally:
                     drop.unpersist()
 
@@ -512,8 +498,7 @@ class ReleasePipeline:
             # a cut the fused chain would re-execute per consumer.  Net
             # vs the per-stage cuts: two checkpoint job chains -> one,
             # identical rows (deterministic md5-keyed samplers).
-            from cloudbrush_spark.operators.dedup import _stage_cut
-            rel_manifest = _stage_cut(rel_manifest)
+            rel_manifest = cut(rel_manifest)
 
         def _publish() -> DataFrame:
             if prev_corpus_path is not None:

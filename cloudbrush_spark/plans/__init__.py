@@ -8,6 +8,7 @@ from cloudbrush_spark.plans.explain import (  # noqa: F401
     shuffle_count,
 )
 from cloudbrush_spark.plans.sever import (  # noqa: F401
+    cut,
     origin_stats_defined,
     sever_origin,
 )

@@ -34,10 +34,10 @@ def get_spark(app_name: str = "cloudbrush-spark", extra_conf: dict | None = None
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
-        # reliable checkpoints (_stage_cut's cluster mode, used once per
-        # dedup_clusters round) are NOT auto-deleted by default; without
-        # this a long-running curation service fills the checkpoint volume
-        # with dead label-frame copies
+        # reliable checkpoints (plans.cut's cluster mode, used at every
+        # stage boundary and loop round) are NOT auto-deleted by default;
+        # without this a long-running service fills the checkpoint volume
+        # with dead intermediate copies
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in (extra_conf or {}).items():

@@ -83,8 +83,6 @@ _SLOW_TESTS = {
     "test_doubles_side_table_files_hold_disjoint_id_ranges",
     "test_cli_compact_index",
     "test_sql_release_side_tables_registered",
-    # NOT marked despite ~20 s: test_arrow_kernel_matches_jvm_path — the
-    # overlap JVM/Arrow equivalence pin stays in the driver-window run.
 }
 
 

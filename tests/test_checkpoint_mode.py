@@ -1,4 +1,4 @@
-"""``_stage_cut``'s RELIABLE-checkpoint (cluster) mode.
+"""``plans.cut``'s RELIABLE-checkpoint (cluster) mode.
 
 With ``spark.checkpoint.dir`` configured the helper switches from
 ``localCheckpoint`` (executor-local blocks — correct on local[*] only) to
@@ -9,10 +9,12 @@ fallback ever executed in CI; this test drives the cluster path end to
 end in a SUBPROCESS (one SparkContext per JVM — the shared session
 fixture cannot flip modes) and asserts:
 
-1. dedup_clusters / curation outputs are IDENTICAL to the
-   localCheckpoint-mode results computed in the parent session;
+1. assembly contigs and dedup_clusters / curation outputs are IDENTICAL
+   to the localCheckpoint-mode results computed in the parent session;
 2. reliable checkpoint files actually landed in the checkpoint dir
-   (the mode really ran);
+   (the mode really ran) — and the assembly alone, before any curation
+   work, already writes them: its stage and contraction boundaries go
+   through the same helper;
 3. the ContextCleaner (``spark.cleaner.referenceTracking.cleanCheckpoints``
    is set in ``get_spark``) removes the checkpoint data once the frames
    are unreachable — a long-running curation service must not fill the
@@ -26,8 +28,12 @@ import sys
 
 from pyspark.sql import functions as F  # noqa: F401  (parity with sibling tests)
 
+from cloudbrush_spark.config import BrushParams
 from cloudbrush_spark.operators import dedup
 from cloudbrush_spark.pipeline import curation
+from cloudbrush_spark.pipeline.assembler import Assembler
+from cloudbrush_spark.sources.fasta import read_sfa
+from tests.test_assembly_e2e import _reads
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -46,12 +52,32 @@ import gc, json, os, sys, tempfile, time
 sys.path.insert(0, os.environ["CB_REPO"])
 from pyspark.sql import functions as F
 from cloudbrush_spark.session import get_spark
+from cloudbrush_spark.config import BrushParams
 from cloudbrush_spark.operators import dedup
 from cloudbrush_spark.pipeline import curation
+from cloudbrush_spark.pipeline.assembler import Assembler
+from cloudbrush_spark.sources.fasta import read_sfa
 
 ckdir = tempfile.mkdtemp(prefix="cb-ck-")
-spark = get_spark("ck-mode", extra_conf={"spark.sql.shuffle.partitions": "4"})
+# the assembly runs at the session fixture's shuffle width, so only the
+# checkpoint mode differs from the in-session run it is compared with
+spark = get_spark("ck-mode", extra_conf={"spark.sql.shuffle.partitions": "8"})
 spark.sparkContext.setCheckpointDir(ckdir)
+
+def ck_files():
+    n = 0
+    for _, _, fs in os.walk(ckdir):
+        n += len(fs)
+    return n
+
+# the assembly runs first, so the files counted after it are its own
+asm_before = ck_files()
+nodes, edges = Assembler(spark, BrushParams(k=21, readlen=36)).assemble(
+    read_sfa(spark, os.environ["CB_READS"]))
+contigs = sorted(r.seq for r in nodes.select("seq").collect())
+asm_after = ck_files()
+
+spark.conf.set("spark.sql.shuffle.partitions", "4")
 
 docs = spark.createDataFrame(json.loads(os.environ["CB_DOCS"]),
                              "doc_id long, text string")
@@ -64,17 +90,11 @@ items = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
 cl = dedup.dedup_clusters(pairs, items=items)
 crows = sorted((r.cluster_rep, r.member, r.n) for r in cl.collect())
 
-def ck_files():
-    n = 0
-    for _, _, fs in os.walk(ckdir):
-        n += len(fs)
-    return n
-
 used = ck_files() > 0
 # drop every reference, force BOTH collectors (the ContextCleaner keys on
 # JVM weak references — python gc alone only detaches the py4j proxies),
 # and poll for the cleaner to reclaim the checkpoint data
-man = cl = None
+man = cl = nodes = edges = None
 deadline = time.time() + 60
 cleaned = False
 while time.time() < deadline:
@@ -85,11 +105,22 @@ while time.time() < deadline:
         break
     time.sleep(1)
 print("RESULT " + json.dumps({"rows": rows, "crows": crows,
+                              "contigs": contigs, "asm_before": asm_before,
+                              "asm_after": asm_after,
                               "used": used, "cleaned": cleaned}))
 '''
 
 
-def test_reliable_checkpoint_mode_matches_and_cleans(spark):
+def test_reliable_checkpoint_mode_matches_and_cleans(spark, tmp_path):
+    _, reads = _reads(seed=7, genome_size=600, read_len=36, coverage=72,
+                      error_rate=0.005)
+    reads_path = tmp_path / "reads.sfa"
+    reads_path.write_text("".join(f"r{i}\t{s}\n" for i, s in enumerate(reads)))
+    nodes, _ = Assembler(spark, BrushParams(k=21, readlen=36)).assemble(
+        read_sfa(spark, str(reads_path)))
+    want_contigs = sorted(r.seq for r in nodes.select("seq").collect())
+    assert want_contigs, "fixture must assemble"
+
     docs_rows = _docs_rows()
     # expected outputs via the default (localCheckpoint) mode in-session
     docs = spark.createDataFrame(docs_rows, "doc_id long, text string")
@@ -102,7 +133,8 @@ def test_reliable_checkpoint_mode_matches_and_cleans(spark):
                         for r in dedup.dedup_clusters(pairs, items=items).collect())
     assert want_rows, "fixture must survive the gate"
 
-    env = dict(os.environ, CB_REPO=REPO, CB_DOCS=json.dumps(docs_rows))
+    env = dict(os.environ, CB_REPO=REPO, CB_DOCS=json.dumps(docs_rows),
+               CB_READS=str(reads_path))
     proc = subprocess.run([sys.executable, "-c", SCRIPT], env=env,
                           capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
@@ -110,6 +142,9 @@ def test_reliable_checkpoint_mode_matches_and_cleans(spark):
     assert line, proc.stdout[-3000:]
     got = json.loads(line[-1][len("RESULT "):])
     assert got["used"], "reliable checkpoint mode never wrote to the dir"
+    assert got["asm_before"] == 0
+    assert got["asm_after"] > 0, "the assembly wrote no reliable checkpoint"
+    assert got["contigs"] == want_contigs
     assert got["rows"] == want_rows
     assert got["crows"] == want_crows
     assert got["cleaned"], "checkpoint data not reclaimed by ContextCleaner"

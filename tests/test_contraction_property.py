@@ -328,6 +328,21 @@ def test_sever_origin_drops_origin_plan(spark):
     assert sorted(r.v for r in severed.collect()) == [i * 2 for i in range(10)]
 
 
+def test_cut_materializes_once_and_severs_once(spark):
+    """plans.cut returns a frame it already cut as is (no second job),
+    and ``sever=True`` on a frame cut without a sever only severs it."""
+    from cloudbrush_spark.plans import cut, origin_stats_defined
+
+    ck = cut(spark.range(10).selectExpr("id", "id * 2 as v"))
+    assert origin_stats_defined(ck)
+    assert cut(ck) is ck
+    severed = cut(ck, sever=True)
+    assert severed is not ck and not origin_stats_defined(severed)
+    assert cut(severed, sever=True) is severed
+    assert cut(severed) is severed
+    assert sorted(r.v for r in severed.collect()) == [i * 2 for i in range(10)]
+
+
 def test_sever_origin_fallback_warns_once(spark, monkeypatch):
     """Where the private API is unreachable (Spark Connect), sever_origin
     must warn LOUDLY (once per process) and hand back the input frame."""

@@ -4,9 +4,9 @@ Every emitted edge must satisfy the overlap predicate by construction;
 symmetric closure must hold (SURVEY §7 M2 test contract).
 """
 
-import pytest
 from pyspark.sql import functions as F
 
+from cloudbrush_spark import plans
 from cloudbrush_spark.functions import dna
 from cloudbrush_spark.operators import overlap
 from tests.conftest import make_nodes
@@ -113,43 +113,22 @@ def test_homopolymer_seeds_dropped(spark):
 
 
 def test_prefilter_gate_sides_identical(spark, monkeypatch):
-    """r15 (r14 verdict #4): prefilter=None count-gates the broadcast
-    prefix-key set automatically.  Both sides of the gate — and the gate
-    itself, forced to each side via PREFILTER_KEYS_MAX — must produce
-    identical candidate sets."""
+    """A count of the reads gates the broadcast
+    prefix-key set.  Both sides of the gate, forced via
+    PREFILTER_KEYS_MAX, must produce identical candidate sets."""
     genome = "ACGGTCATTACGGAGCTTAGCAATCGGATCCA"
     rows = [(f"r{i}", genome[i:i + 14]) for i in range(0, 18, 3)]
     nodes = make_nodes(spark, [(n, s, 1.0) for n, s in rows])
-    want = {tuple(r) for r in
-            overlap.match_prefix(nodes, K, prefilter=True).collect()}
-    assert want == {tuple(r) for r in
-                    overlap.match_prefix(nodes, K, prefilter=False).collect()}
-    # auto mode lands on the prefilter side (tiny input)...
+    # tiny input: the gate lands on the prefilter side...
     monkeypatch.setattr(overlap, "PREFILTER_KEYS_MAX", 10_000_000)
-    assert want == {tuple(r) for r in
-                    overlap.match_prefix(nodes, K).collect()}
+    on = overlap.match_prefix(nodes, K)
+    assert "LeftSemi" in plans.explain_str(on)
+    want = {tuple(r) for r in on.collect()}
+    assert want
     # ...and on the pass-through side when the bound says the key set
     # would not fly
     monkeypatch.setattr(overlap, "PREFILTER_KEYS_MAX", 1)
-    assert want == {tuple(r) for r in
-                    overlap.match_prefix(nodes, K).collect()}
+    off = overlap.match_prefix(nodes, K)
+    assert "LeftSemi" not in plans.explain_str(off)
+    assert want == {tuple(r) for r in off.collect()}
 
-
-@pytest.mark.skipif(not overlap._arrow_available(), reason="numpy/pyarrow absent")
-def test_arrow_kernel_matches_jvm_path(spark):
-    """r14: the default flipped to the pure-JVM expression path; the
-    opt-in Arrow kernel must stay byte-equivalent — same candidates
-    (incl. cap semantics), same edges, including blacklist handling
-    (string anti-join vs in-kernel hash exclusion) and short reads."""
-    genome = "ACGGTCATTACGGAGCTTAGCAATCGGATCCA"
-    rows = [(f"r{i}", genome[i:i + 14]) for i in range(0, 18, 3)]
-    rows.append(("tiny", "ACG"))  # shorter than k: prefix-window edge case
-    nodes = make_nodes(spark, [(n, s, 1.0) for n, s in rows])
-    hk = spark.createDataFrame([("GGTCA",), ("TGACC",)], "kmer string")
-    for kwargs in ({}, {"prefilter": False}, {"high_kmers": hk},
-                   {"per_key_cap": 3}):
-        jvm = overlap.match_prefix(nodes, K, use_arrow=False, **kwargs)
-        arr = overlap.match_prefix(nodes, K, use_arrow=True, **kwargs)
-        a = {tuple(r) for r in jvm.collect()}
-        b = {tuple(r) for r in arr.collect()}
-        assert a == b, f"arrow != jvm for {kwargs}"
