@@ -2159,9 +2159,8 @@ def q_emb_near_dup_lsh(spark, sf_dir):
 def _private_tmp_root() -> str:
     """Per-user mode-0700 scratch root for the harness's DETERMINISTIC
     cache paths (r12, advisor finding): ``tempfile.gettempdir()`` is
-    shared, so a predictable name like ``cb_annidx_<md5>`` could be
-    pre-created/poisoned by another local user (the harness trusts a
-    cached index on its _SUCCESS marker alone).  Keying by uid and
+    shared, so a predictable name like ``cb_release_<sf>`` could be
+    pre-created/poisoned by another local user.  Keying by uid and
     refusing a directory we don't own closes that off; the poisoned
     case falls back to a fresh private mkdtemp (cache reuse lost,
     soundness kept).  Random mkdtemp paths elsewhere are already safe.
@@ -2196,69 +2195,16 @@ def _private_tmp_root() -> str:
     return root
 
 
-def _ann_index_root(sf_dir: str) -> str:
-    """Deterministic per-sf_dir cache root for the persisted ANN
-    indexes (codes / ivf / ivfq) — written once, reused across
-    harness/bench invocations instead of accumulating mkdtemp copies.
-    The key folds in the embeddings table's (mtime, size) fingerprint
-    so a fixture regenerated in place invalidates the cache instead of
-    silently serving indexes built from the old vectors.  Lives under
-    the per-user 0700 root (see ``_private_tmp_root``)."""
-    import hashlib as _hl
-    import os as _os
-    ep = _os.path.join(_os.path.abspath(sf_dir), "embeddings.parquet")
-    try:
-        st = _os.stat(ep)
-        fp = f"{st.st_mtime_ns}_{st.st_size}"
-    except OSError:
-        fp = "nofile"
-    slug = _hl.md5(f"{_os.path.abspath(sf_dir)}|{fp}".encode()) \
-        .hexdigest()[:12]
-    return _os.path.join(_private_tmp_root(), f"cb_annidx_{slug}")
-
-
-def _ivf_complete(idx_path: str) -> bool:
-    """An IVF index write is complete iff its LAST artifact (the
-    centroid table — written after /vectors and, on the quantized
-    layout, after /doubles) committed; checking /vectors/_SUCCESS would
-    bless a write killed between the two."""
-    import os as _os
-    return _os.path.exists(idx_path + "/centroids/_SUCCESS")
-
-
-def q_ann_ivfq_only(spark, sf_dir):
-    """Bench-only single-op form of the r11 COMPOSED IVF+int8 index
-    probe (driver correctness row: ann_contracts 'ann_ivfq'; plan pins
-    in tests/test_plans.py).  Reuses the per-sf_dir cached index; the
-    first call on a fresh machine pays the one-time index write.
-
-    The benched shape is a ~5% QUERY BATCH against the index — the
-    workload a persisted index exists for (retrieval/dedup lookups
-    against a big corpus); an all-corpus-as-queries batch probes every
-    bucket by construction and belongs to the all-pairs operators
-    (embedding_near_dup / ann contract rows), not here."""
-    import os as _os
-    emb = _emb(spark, sf_dir)
-    iq = _ann_index_root(sf_dir) + "/ivfq"
-    if not _ivf_complete(iq):
-        similarity.write_ivf_index(emb, iq, n_centroids=16, seed=42,
-                                   quantized=True)
-    q = emb.filter(F.col("vec_id") % 20 == 0)
-    return similarity.cosine_topk_ivf_quantized(spark, iq, q, k=5,
-                                                nprobe=2)
-
-
 def q_ann_contracts(spark, sf_dir):
     """Merged soundness/recall contracts for the APPROXIMATE similarity
     scale paths — ANN-LSH (16 tables x 6 hyperplanes), ANN-IVF
     (driver-trained coarse quantizer, 16 centroids, nprobe=2), int8
     scalar-quantized two-stage top-k (r9: select on array<tinyint>
-    codes, exact re-rank of the winners; r10 persisted-codes form; r11
-    IVF-partitioned-codes composition 'ann_ivfq') and embedding
-    near-dup LSH (16 tables x 4 hyperplanes) — one row per variant so
-    each keeps a driver CORRECTNESS row inside the 50-query window
-    (they shared the same contract shape as separate entries through
-    round 4).
+    codes, exact re-rank of the winners) and embedding near-dup LSH
+    (16 tables x 4 hyperplanes; cluster and cross-corpus forms) — one
+    row per variant so each keeps its own CORRECTNESS row inside the
+    50-query window (they shared the same contract shape as separate
+    entries through round 4).
 
     Row schema (variant, n_base, invalid_rows, bad_cosine, recall_ok):
     ``n_base`` is recomputed INDEPENDENTLY by the DuckDB oracle from the
@@ -2291,100 +2237,6 @@ def q_ann_contracts(spark, sf_dir):
     # recall@5 >= 90% vs the exact twin (measured 0.986 at sf0.01).
     quant = similarity.cosine_topk_quantized(emb, emb, k=5)
     r_q8 = tag(_ann_contract(emb, quant, recall_pct=90), "ann_q8")
-    # r10: PERSISTED-codes variant — the corpus selection scans ONLY the
-    # int8 codes table written once by write_quantized_codes (its
-    # ReadSchema carries no double vector column — pinned in
-    # tests/test_plans.py — so the per-query full-corpus pass reads ~1/8
-    # the vector bytes); the <= queries*k winners re-rank against the
-    # doubles via an In() pushdown.  Same contract as ann_q8: bad_cosine
-    # == 0 proves the exact re-rank, recall@5 >= 90% vs the exact twin.
-    # The persisted indexes are written ONCE per sf_dir into a
-    # deterministic temp location and reused across harness/bench
-    # invocations (the writes are deterministic functions of the
-    # embeddings table; r11 — repeated mkdtemp copies used to
-    # accumulate unbounded under /tmp).
-    import os as _os
-    _idx = _ann_index_root(sf_dir)
-    _cdir = _idx + "/codes"
-    if not _os.path.exists(_cdir + "/_SUCCESS"):
-        similarity.write_quantized_codes(emb, _cdir)
-    _codes = similarity.read_quantized_codes(spark, _cdir)
-    quantp = similarity.cosine_topk_quantized(emb, emb, k=5, codes=_codes)
-    r_q8p = tag(_ann_contract(emb, quantp, recall_pct=90), "ann_q8p")
-    # r10: persisted IVF index — probes scan ONLY the nprobe partitions
-    # of the centroid-partitioned index (PartitionFilters, pinned in
-    # tests/test_similarity.py); same contract as ann_ivf.
-    _ipath = _idx + "/ivf"
-    if not _ivf_complete(_ipath):
-        similarity.write_ivf_index(emb, _ipath, n_centroids=16, seed=42)
-    ivfp = similarity.cosine_topk_ivf_indexed(spark, _ipath, emb, k=5,
-                                              nprobe=2)
-    r_ivfp = tag(_ann_contract(emb, ivfp, recall_pct=20), "ann_ivfp")
-    # r11 'ann_ivfq': the COMPOSED index — centroid partitions store
-    # int8 codes only (probe = PartitionFilter on nprobe buckets AND a
-    # codes-only ReadSchema on the same scan, pinned in
-    # tests/test_plans.py), doubles live once in an id-sorted side
-    # table only the winner re-rank reads (In() row-group pruning).
-    # bad_cosine == 0 again proves the exact re-rank; recall@5 >= 20%
-    # vs brute force.  Measured at sf0.01: 0.446 vs the plain ann_ivfp
-    # index's 0.446 — ONE hit in 2500 lost to int8 near-tie swaps; the
-    # recall loss is entirely IVF probing, exactly as designed.
-    _iqpath = _idx + "/ivfq"
-    if not _ivf_complete(_iqpath):
-        similarity.write_ivf_index(emb, _iqpath, n_centroids=16, seed=42,
-                                   quantized=True)
-    ivfq = similarity.cosine_topk_ivf_quantized(spark, _iqpath, emb, k=5,
-                                                nprobe=2)
-    r_ivfq = tag(_ann_contract(emb, ivfq, recall_pct=20), "ann_ivfq")
-    # r14 'ann_auto': the SHIPPED probe default — nprobe=None resolved
-    # through auto_nprobe(K) = clamp(round(sqrt(K)), 2, K) against the
-    # index's actual centroid count — driver-hash-verified on a
-    # dedicated 64-centroid composed index (auto = 8, probing 12.5% of
-    # buckets, the same fraction as the explicit-nprobe legs above but
-    # through the resolution path every production caller hits).  Until
-    # r14 the default's correctness rested on pytest + probes alone
-    # (r13 verdict missing #1).  recall_pct=20 matches the other IVF
-    # legs; measured well above (sqrt-K holds recall where a fixed
-    # nprobe craters — probes/ivfq_autonprobe_recall*.json).
-    _iapath = _idx + "/ivfauto64"
-    if not _ivf_complete(_iapath):
-        similarity.write_ivf_index(emb, _iapath, n_centroids=64, seed=42,
-                                   quantized=True)
-    ivfa = similarity.cosine_topk_ivf_quantized(spark, _iapath, emb, k=5,
-                                                nprobe=None)
-    r_auto = tag(_ann_contract(emb, ivfa, recall_pct=20), "ann_auto")
-    # r14 'ann_del': the takedown lever driver-hash-verified — a
-    # dedicated composed index tombstones the deterministic id set
-    # vec_id % 97 == 3 (delete_from_ivf_index at index-build time; the
-    # /deletes dir persists with the cached index, so the leg is
-    # idempotent across harness runs).  The LEAK COUNTER is what makes
-    # deletion load-bearing on the hash: any tombstoned id appearing in
-    # the probe output bumps invalid_rows above the oracle's 0.  The
-    # contract (queries, soundness joins, brute-force recall twin) runs
-    # over the LIVE corpus — n_base is the live count, which DuckDB
-    # recomputes independently as count(vec_id % 97 <> 3).
-    _dpath = _idx + "/ivfdel"
-    dele = emb.filter(F.col("vec_id") % 97 == 3) \
-        .select(F.col("vec_id").alias("neighbor_id"))
-    live = emb.filter(F.col("vec_id") % 97 != 3)
-    if not _ivf_complete(_dpath):
-        similarity.write_ivf_index(emb, _dpath, n_centroids=16, seed=42,
-                                   quantized=True)
-    if not _os.path.exists(_dpath + "/deletes"):
-        similarity.delete_from_ivf_index(
-            spark, _dpath, emb.filter(F.col("vec_id") % 97 == 3)
-            .select("vec_id"))
-    ivfd = similarity.cosine_topk_ivf_quantized(spark, _dpath, live, k=5,
-                                                nprobe=2)
-    leak = ivfd.join(dele, "neighbor_id", "left_semi") \
-        .agg(F.count(F.lit(1)).alias("leaked"))
-    r_del = (_ann_contract(live, ivfd, recall_pct=20).crossJoin(leak)
-             .select(F.lit("ann_del").alias("variant"),
-                     F.col("n_queries").alias("n_base"),
-                     (F.col("invalid_rows")
-                      + F.coalesce("leaked", F.lit(0)))
-                     .alias("invalid_rows"),
-                     "bad_cosine", "recall_ok"))
     a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
     exact = (
@@ -2495,10 +2347,8 @@ def q_ann_contracts(spark, sf_dir):
                 F.coalesce("bad_cosine", F.lit(0)).alias("bad_cosine"),
                 (F.lit(100) * F.col("got") >= F.lit(50) * F.col("n_base"))
                 .alias("recall_ok")))
-    return (r_lsh.unionByName(r_ivf).unionByName(r_q8).unionByName(r_q8p)
-            .unionByName(r_ivfp).unionByName(r_ivfq).unionByName(r_auto)
-            .unionByName(r_del).unionByName(r_emb).unionByName(r_embc)
-            .unionByName(r_cross))
+    return (r_lsh.unionByName(r_ivf).unionByName(r_q8).unionByName(r_emb)
+            .unionByName(r_embc).unionByName(r_cross))
 
 
 def q_probe_funnel(spark, sf_dir):
@@ -4774,8 +4624,6 @@ _ORACLES["ann_contracts"] = """
         FROM emb a JOIN emb b ON a.vec_id < b.vec_id
     ),
     nq AS (SELECT count(DISTINCT vec_id) AS n FROM embeddings),
-    nqd AS (SELECT count(DISTINCT vec_id) AS n FROM embeddings
-            WHERE vec_id % 97 <> 3),
     ne AS (SELECT count(*) AS n FROM scored WHERE c >= 0.42),
     edges AS (
         SELECT a, b FROM scored WHERE c >= 0.42
@@ -4798,27 +4646,7 @@ _ORACLES["ann_contracts"] = """
            CAST(0 AS BIGINT), TRUE
     FROM nq
     UNION ALL
-    SELECT 'ann_ivfp', CAST(nq.n AS BIGINT), CAST(0 AS BIGINT),
-           CAST(0 AS BIGINT), TRUE
-    FROM nq
-    UNION ALL
-    SELECT 'ann_ivfq', CAST(nq.n AS BIGINT), CAST(0 AS BIGINT),
-           CAST(0 AS BIGINT), TRUE
-    FROM nq
-    UNION ALL
-    SELECT 'ann_auto', CAST(nq.n AS BIGINT), CAST(0 AS BIGINT),
-           CAST(0 AS BIGINT), TRUE
-    FROM nq
-    UNION ALL
-    SELECT 'ann_del', CAST(nqd.n AS BIGINT), CAST(0 AS BIGINT),
-           CAST(0 AS BIGINT), TRUE
-    FROM nqd
-    UNION ALL
     SELECT 'ann_q8', CAST(nq.n AS BIGINT), CAST(0 AS BIGINT),
-           CAST(0 AS BIGINT), TRUE
-    FROM nq
-    UNION ALL
-    SELECT 'ann_q8p', CAST(nq.n AS BIGINT), CAST(0 AS BIGINT),
            CAST(0 AS BIGINT), TRUE
     FROM nq
     UNION ALL

@@ -68,10 +68,6 @@ HEADLINE = [
     # added round 10 (appended; single-op form — the driver row is the
     # curation_filter 'bm25' contract leg)
     "bm25",
-    # added round 11 (appended; composed IVF+int8 index probe — the
-    # driver row is the ann_contracts 'ann_ivfq' leg; reuses the
-    # per-sf_dir cached index, first-ever run pays the one-time write)
-    "ann_ivfq",
 ]
 
 
@@ -208,7 +204,6 @@ def main() -> None:
     qs["pack_sequences"] = entrymod.q_pack_sequences_only
     qs["span_scrub"] = entrymod.q_span_scrub_only
     qs["bm25"] = entrymod.q_bm25_only
-    qs["ann_ivfq"] = entrymod.q_ann_ivfq_only
     # warm the JVM + parquet footers with one cheap action
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
     # host-health probe: record the parallel/single ratio so a run under

@@ -125,106 +125,6 @@ def _build_parser() -> argparse.ArgumentParser:
                          "(cross-corpus embedding dedup gate)")
     ap.add_argument("-emb_dedup_threshold", type=float, default=0.95,
                     help="release: cross-release embedding dedup cutoff")
-    ap.add_argument("-write_index", action="store_true",
-                    help="release: after publish, write the published "
-                         "docs' embeddings as a quantized IVF index at "
-                         "<out>/emb_index (requires -embeddings) — the "
-                         "-prior_index input of the NEXT release")
-    ap.add_argument("-prior_index", default=None, metavar="DIR",
-                    help="release: a persisted IVF index of the previous "
-                         "release (similarity.write_ivf_index over its "
-                         "doc_id/embedding table) — the index-backed form "
-                         "of -prior_embeddings; each new doc probes "
-                         "nprobe buckets instead of an all-pairs LSH pass")
-    ap.add_argument("-prior_index_nprobe", type=int, default=None,
-                    help="release: buckets each new doc probes in the "
-                         "-prior_index gate — the recall/IO lever "
-                         "(gate-level recall contract in "
-                         "tests/test_release.py).  Default: auto-scaled "
-                         "to the index's centroid count (sqrt-K; "
-                         "similarity.auto_nprobe)")
-    ap.add_argument("-compact_index", default=None, metavar="DIR",
-                    help="compact an appended IVF index's accreted "
-                         "per-append files in place (markers/replay "
-                         "contract preserved; similarity.compact_index)")
-    ap.add_argument("-compact_repair", action="store_true",
-                    help="with -compact_index: finish/roll back a "
-                         "crashed compaction's swap before compacting")
-    ap.add_argument("-split_index", default=None, metavar="DIR",
-                    help="re-cluster an IVF index's over-skewed buckets "
-                         "in place (the remedy for index_stats' "
-                         "bucket_skew drift signal; markers/replay "
-                         "preserved; similarity.split_fat_buckets)")
-    ap.add_argument("-skew_threshold", type=float, default=4.0,
-                    help="with -split_index: split buckets holding more "
-                         "than this multiple of the median bucket's "
-                         "rows (default 4.0)")
-    ap.add_argument("-split_repair", action="store_true",
-                    help="with -split_index: finish/roll back a crashed "
-                         "split's swap before splitting")
-    ap.add_argument("-merge_index", default=None, metavar="DIR",
-                    help="merge an IVF index's under-populated buckets "
-                         "into their nearest neighbors in place "
-                         "(renumbered contiguously; markers/replay "
-                         "preserved; similarity.merge_small_buckets)")
-    ap.add_argument("-small_threshold", type=float, default=None,
-                    help="with -merge_index/-rebalance_index/"
-                         "-maintain_index: merge buckets holding fewer "
-                         "than sqrt(corpus)/this rows (default 4.0 for "
-                         "-merge_index, conservative 8.0 inside "
-                         "rebalance/maintain); never merges below the "
-                         "sqrt(corpus) centroid floor")
-    ap.add_argument("-merge_repair", action="store_true",
-                    help="with -merge_index: roll a crashed merge "
-                         "forward from its committed plan before "
-                         "merging")
-    ap.add_argument("-k_floor", type=int, default=None,
-                    help="with -merge_index: never merge below this "
-                         "many centroids (default: the ceil(sqrt("
-                         "corpus)) IVF sizing rule)")
-    ap.add_argument("-rebalance_index", default=None, metavar="DIR",
-                    help="full drift maintenance: split fat buckets "
-                         "then merge thin ones back toward the sqrt(n) "
-                         "centroid floor (uses -skew_threshold and "
-                         "-small_threshold; similarity.rebalance_index)")
-    ap.add_argument("-maintain_index", default=None, metavar="DIR",
-                    help="one cron-able maintenance pass: read "
-                         "index_stats and run exactly what the index "
-                         "needs — rebalance past -skew_threshold, "
-                         "compact past ~8 files/bucket or with "
-                         "tombstones pending; no-op when healthy "
-                         "(similarity.maintain_index)")
-    ap.add_argument("-delete_index", default=None, metavar="DIR",
-                    help="tombstone ids in an IVF index (takedown "
-                         "lever): effective immediately at probe time, "
-                         "purged physically by the next -compact_index "
-                         "(similarity.delete_from_ivf_index; requires "
-                         "-ids)")
-    ap.add_argument("-undelete_index", default=None, metavar="DIR",
-                    help="lift pending tombstones not yet purged "
-                         "(similarity.undelete_from_ivf_index; "
-                         "requires -ids)")
-    ap.add_argument("-ids", default=None,
-                    help="with -delete_index/-undelete_index: comma-"
-                         "separated id list, or a path to a parquet "
-                         "of ids (single column or the index id "
-                         "column)")
-    ap.add_argument("-index_stats", default=None, metavar="DIR",
-                    help="print an IVF index's operational snapshot as "
-                         "JSON: bucket-size histogram + skew (the "
-                         "frozen-centroid drift signal), file counts "
-                         "(the compaction signal), marker/intent state "
-                         "(similarity.index_stats)")
-    ap.add_argument("-append_index", default=None, metavar="DIR",
-                    help="append -embeddings' vectors to an EXISTING "
-                         "persisted IVF index (plain or quantized "
-                         "layout) without a rebuild — the crawl-per-day "
-                         "maintenance flow (similarity."
-                         "append_to_ivf_index: frozen centroids, "
-                         "idempotent batch commit markers; prints the "
-                         "rows appended, 0 for a replayed batch).  The "
-                         "embeddings table's id column is vec_id, or "
-                         "doc_id if vec_id is absent")
     ap.add_argument("-dsir_target", default=None, metavar="PARQUET",
                     help="release: target-domain docs parquet (doc_id, "
                          "text); writes DSIR importance weights of the "
@@ -392,147 +292,6 @@ def main(argv: list[str] | None = None) -> int:
         print(f"wrote {out}")
         return 0
 
-    if args.append_index:
-        if not args.embeddings:
-            raise SystemExit("-append_index requires -embeddings "
-                             "(the new crawl's vectors)")
-        from pyspark.sql.types import ArrayType
-
-        from cloudbrush_spark.operators.similarity import (
-            _infer_index_id_col, append_to_ivf_index)
-        vecs = spark.read.parquet(args.embeddings)
-        # the INDEX's id column is authoritative (a release-written
-        # index uses doc_id, standalone ones usually vec_id) — appending
-        # under a different id name would fork the parquet schema.
-        # Resolution is schema-typed, not name-guessed (r13, advisor
-        # finding): the id is the single non-array non-layout column,
-        # and an unrecognizable layout is a named error, not a silent
-        # wrong pick.
-        idx_schema = spark.read.parquet(
-            args.append_index + "/vectors").schema
-        try:
-            idx_id = _infer_index_id_col(idx_schema.fields)
-        except ValueError as e:
-            raise SystemExit(f"-append_index: {e}")
-        quantized = "q_codes" in idx_schema.fieldNames()
-        vec_src = (args.append_index + "/doubles") if quantized \
-            else (args.append_index + "/vectors")
-        vec_arrays = [f.name for f in
-                      spark.read.parquet(vec_src).schema.fields
-                      if isinstance(f.dataType, ArrayType)
-                      and f.name != "q_codes"]
-        # same contract as the id column (r14, advisor finding): an
-        # unrecognizable vector layout is a NAMED error, not a silent
-        # 'embedding' guess — a wrong pick forks the parquet schema the
-        # same way a wrong id would
-        if len(vec_arrays) != 1:
-            raise SystemExit(
-                f"-append_index: cannot resolve the index vector "
-                f"column: expected exactly one non-code array column "
-                f"in {vec_src}, found {vec_arrays or 'none'}")
-        idx_vec = vec_arrays[0]
-        if idx_id not in vecs.columns:
-            src = next((c for c in ("vec_id", "doc_id")
-                        if c in vecs.columns), None)
-            if src is None:
-                raise SystemExit(
-                    f"-append_index: the index id column is "
-                    f"'{idx_id}' but the embeddings table has neither "
-                    f"it, 'vec_id', nor 'doc_id' (columns: "
-                    f"{vecs.columns})")
-            vecs = vecs.withColumnRenamed(src, idx_id)
-        if idx_vec not in vecs.columns:
-            if "embedding" in vecs.columns:
-                vecs = vecs.withColumnRenamed("embedding", idx_vec)
-            else:
-                raise SystemExit(
-                    f"-append_index: the index vector column is "
-                    f"'{idx_vec}' but the embeddings table has neither "
-                    f"it nor 'embedding' (columns: {vecs.columns})")
-        n = append_to_ivf_index(vecs, args.append_index, id_col=idx_id,
-                                vec_col=idx_vec)
-        print(f"appended: {n} rows -> {args.append_index}")
-        return 0
-
-    if args.compact_index:
-        from cloudbrush_spark.operators.similarity import compact_index
-        n = compact_index(spark, args.compact_index,
-                          repair=args.compact_repair)
-        print(f"compacted index: {n} files before -> {args.compact_index}")
-        return 0
-
-    if args.split_index:
-        from cloudbrush_spark.operators.similarity import split_fat_buckets
-        s = split_fat_buckets(spark, args.split_index,
-                              skew_threshold=args.skew_threshold,
-                              repair=args.split_repair)
-        print(json.dumps(s))
-        return 0
-
-    if args.merge_index:
-        from cloudbrush_spark.operators.similarity import \
-            merge_small_buckets
-        st = 4.0 if args.small_threshold is None else args.small_threshold
-        s = merge_small_buckets(spark, args.merge_index,
-                                small_threshold=st,
-                                k_floor=args.k_floor,
-                                repair=args.merge_repair)
-        print(json.dumps(s))
-        return 0
-
-    if args.rebalance_index:
-        from cloudbrush_spark.operators.similarity import rebalance_index
-        st = 8.0 if args.small_threshold is None else args.small_threshold
-        s = rebalance_index(spark, args.rebalance_index,
-                            skew_threshold=args.skew_threshold,
-                            small_threshold=st)
-        print(json.dumps(s))
-        return 0
-
-    if args.maintain_index:
-        from cloudbrush_spark.operators.similarity import maintain_index
-        st = 8.0 if args.small_threshold is None else args.small_threshold
-        s = maintain_index(spark, args.maintain_index,
-                           skew_threshold=args.skew_threshold,
-                           small_threshold=st)
-        print(json.dumps(s))
-        return 0
-
-    if args.delete_index or args.undelete_index:
-        from cloudbrush_spark.operators.similarity import (
-            delete_from_ivf_index, undelete_from_ivf_index)
-        if not args.ids:
-            raise SystemExit(
-                "-delete_index/-undelete_index require -ids "
-                "(comma-separated list or a parquet path)")
-        # a path that exists (or names parquet, or carries a filesystem
-        # scheme — hdfs://, s3a://: driver-local os.path.exists sees
-        # none of those) is an ids table; anything else parses as a
-        # comma-separated literal list — path detection first keeps
-        # `-ids /gone/path` from being silently tombstoned as the
-        # literal string id "/gone/path"
-        if ("://" in args.ids or os.path.exists(args.ids)
-                or args.ids.endswith(".parquet")):
-            ids = spark.read.parquet(args.ids)
-        else:
-            raw = [s.strip() for s in args.ids.split(",") if s.strip()]
-            try:
-                ids = [int(s) for s in raw]
-            except ValueError:
-                ids = raw
-        if args.delete_index:
-            n = delete_from_ivf_index(spark, args.delete_index, ids)
-            print(json.dumps({"tombstoned": n}))
-        else:
-            n = undelete_from_ivf_index(spark, args.undelete_index, ids)
-            print(json.dumps({"lifted": n}))
-        return 0
-
-    if args.index_stats:
-        from cloudbrush_spark.operators.similarity import index_stats
-        print(json.dumps(index_stats(spark, args.index_stats)))
-        return 0
-
     if args.compact:
         if not args.out:
             raise SystemExit("-compact requires -out DIR")
@@ -560,22 +319,15 @@ def main(argv: list[str] | None = None) -> int:
                  if args.benchmark else None)
         if args.bench_embeddings and not args.embeddings:
             raise SystemExit("-bench_embeddings requires -embeddings")
-        if (args.prior_embeddings or args.prior_index
-                or args.write_index) and not args.embeddings:
-            raise SystemExit("-prior_embeddings/-prior_index/-write_index "
-                             "requires -embeddings (the current corpus's "
-                             "vectors)")
-        if args.prior_embeddings and args.prior_index:
-            raise SystemExit("-prior_embeddings and -prior_index are "
-                             "mutually exclusive forms of the same gate")
+        if args.prior_embeddings and not args.embeddings:
+            raise SystemExit("-prior_embeddings requires -embeddings (the "
+                             "current corpus's vectors)")
         if args.embeddings and not (args.bench_embeddings
-                                    or args.prior_embeddings
-                                    or args.prior_index
-                                    or args.write_index):
+                                    or args.prior_embeddings):
             raise SystemExit(
                 "-embeddings needs -bench_embeddings (semantic "
-                "decontamination), -prior_embeddings/-prior_index "
-                "(cross-release embedding dedup) and/or -write_index")
+                "decontamination) and/or -prior_embeddings (cross-release "
+                "embedding dedup)")
         sem_kw = {}
         if args.bench_embeddings:
             sem_kw = dict(
@@ -590,8 +342,6 @@ def main(argv: list[str] | None = None) -> int:
                 or args.bucket_width is not None
                 or args.prev_release is not None
                 or args.prior_embeddings is not None
-                or args.prior_index is not None
-                or args.write_index
                 or args.dsir_target is not None):
             from cloudbrush_spark.pipeline.release import (
                 ReleasePipeline, incremental_release)
@@ -611,7 +361,7 @@ def main(argv: list[str] | None = None) -> int:
             if args.bucket_width is not None:
                 rel_kw["bucketed_publish"] = True
                 rel_kw["publish_bucket_width"] = args.bucket_width
-            if args.prior_embeddings or args.prior_index or args.write_index:
+            if args.prior_embeddings:
                 def _dvec(path):
                     df = spark.read.parquet(path)
                     if "doc_id" not in df.columns and "vec_id" in df.columns:
@@ -622,14 +372,8 @@ def main(argv: list[str] | None = None) -> int:
                                     lambda x: x.cast("double"))
                         .alias("embedding"))
                 rel_kw["embeddings"] = _dvec(args.embeddings)
-                if args.prior_index:
-                    rel_kw["prior_index_path"] = args.prior_index
-                    rel_kw["prior_index_nprobe"] = args.prior_index_nprobe
-                elif args.prior_embeddings:
-                    rel_kw["prior_embeddings"] = _dvec(args.prior_embeddings)
+                rel_kw["prior_embeddings"] = _dvec(args.prior_embeddings)
                 rel_kw["embedding_threshold"] = args.emb_dedup_threshold
-                if args.write_index:
-                    rel_kw["write_index"] = True
             if args.dsir_target:
                 rel_kw["dsir_target"] = spark.read.parquet(args.dsir_target)
             if args.prev_release and not args.base:

@@ -150,9 +150,6 @@ class ReleasePipeline:
             prior_embeddings: DataFrame | None = None,
             embedding_dim: int | None = None,
             embedding_threshold: float = 0.95,
-            prior_index_path: str | None = None,
-            prior_index_nprobe: int | None = None,
-            write_index: bool = False,
             **curate_kw) -> DataFrame:
         """Run the full release; returns the RELEASE MANIFEST — one row
         per published row: (id, copy, split, shard_id, offset, ws_tokens,
@@ -204,29 +201,6 @@ class ReleasePipeline:
         difference) and with the feature cache (gate features are
         text-side and unaffected).
 
-        ``prior_index_path`` is the INDEX-BACKED form of the same gate:
-        instead of an all-pairs LSH pass over new ∪ prior vectors, each
-        new doc probes the previous release's PERSISTED IVF index
-        (``write_ivf_index``, plain or quantized layout) with
-        ``prior_index_nprobe`` buckets and is dropped when its best
-        match reaches the threshold.  At 100 TB this is the shape that
-        wins: release N's index is built once and every later crawl
-        reads nprobe/n_centroids of it (int8 bytes on the quantized
-        layout) instead of re-bucketing the whole prior release per
-        crawl.  Recall is bounded by IVF probing; the default
-        ``prior_index_nprobe=None`` auto-scales to the index's centroid
-        count (``similarity.auto_nprobe`` — sqrt-K, so a sqrt-n
-        auto-sized index keeps gate recall as it grows; raise it toward
-        the LSH form's recall if needed).  Requires ``embeddings`` for
-        the new corpus, mutually exclusive with ``prior_embeddings``.
-
-        ``write_index=True`` (requires ``embeddings``) closes the loop:
-        after publish, the PUBLISHED docs' embeddings are written as a
-        quantized IVF index at ``out_path/emb_index`` (sqrt-n
-        centroids), which the NEXT release passes as
-        ``prior_index_path`` — each release gates against its
-        predecessor's index instead of re-bucketing the prior corpus.
-
         ``dsir_target`` (a ``(id_col, text_col)`` corpus of the domain
         you want more of) enables the DSIR stage: per-published-doc
         importance weights ``avg log p_target − avg log p_raw`` under
@@ -234,26 +208,10 @@ class ReleasePipeline:
         et al. 2023), written as the ``dsir.parquet`` side table for a
         downstream resample/budget pass.  A side output — it never
         changes the published rows, so it composes with everything."""
-        if prior_embeddings is not None and prior_index_path is not None:
+        if (embeddings is None) != (prior_embeddings is None):
             raise ValueError(
-                "prior_embeddings and prior_index_path are mutually "
-                "exclusive forms of the same gate — pass the raw prior "
-                "vectors OR the persisted index, not both")
-        _gate_ref = (prior_embeddings if prior_embeddings is not None
-                     else prior_index_path)
-        if embeddings is None and _gate_ref is not None:
-            raise ValueError(
-                "the embedding-dedup gate needs embeddings AND a prior "
-                "reference (prior_embeddings or prior_index_path) "
-                "together")
-        if embeddings is not None and _gate_ref is None \
-                and not write_index:
-            raise ValueError(
-                "embeddings given without a consumer: pass "
-                "prior_embeddings/prior_index_path (dedup gate) and/or "
-                "write_index=True (build this release's index)")
-        if write_index and embeddings is None:
-            raise ValueError("write_index=True requires embeddings")
+                "the embedding-dedup gate needs embeddings AND "
+                "prior_embeddings together")
         if prev_corpus_path is not None and (
                 prev_manifest is None or publish_changed_ids is None):
             raise ValueError(
@@ -324,7 +282,7 @@ class ReleasePipeline:
             lambda: curation.curate(docs, id_col=id_col, text_col=text_col,
                                     benchmark=benchmark, **curate_kw))
 
-        if embeddings is not None and _gate_ref is not None:
+        if embeddings is not None:
             # cross-corpus embedding dedup gate (r11): runs BEFORE
             # mixture/budget/pack so a dropped doc never competes for
             # the token budget or a shard slot
@@ -333,63 +291,6 @@ class ReleasePipeline:
                 new_v = (embeddings
                          .join(manifest.select(id_col), id_col, "left_semi")
                          .select(F.col(id_col), "embedding"))
-                if prior_index_path is not None:
-                    # index-backed: probe release N's persisted index.
-                    # Query ids namespace NEGATIVE so the probe's
-                    # self-pair exclusion can never suppress the
-                    # unchanged-doc self match (same id both releases —
-                    # exactly the match this gate exists to find).
-                    # k=3, drop on ANY winner over the threshold: with
-                    # k=1 on the quantized layout the exact threshold
-                    # would apply only to the int8-argmax winner, and a
-                    # true duplicate losing an int8 near-tie to a
-                    # non-duplicate would slip through.  The query
-                    # batch is the whole curated corpus, so the probe's
-                    # query-side broadcast is disabled (AQE plans the
-                    # joins from stats instead of force-broadcasting
-                    # millions of double vectors).
-                    q = new_v.select((-F.col(id_col) - 1).alias(id_col),
-                                     "embedding")
-                    qz = "q_codes" in self.spark.read.parquet(
-                        prior_index_path + "/vectors").columns
-                    probe = (similarity.cosine_topk_ivf_quantized if qz
-                             else similarity.cosine_topk_ivf_indexed)
-                    # resolve auto-nprobe HERE (one bounded count) so
-                    # the effective value lands in the run's counters —
-                    # the number an operator checks when gate recall
-                    # drifts release over release
-                    nprobe = prior_index_nprobe
-                    if nprobe is None:
-                        ncent = self.spark.read.parquet(
-                            prior_index_path + "/centroids").count()
-                        nprobe = similarity.auto_nprobe(int(ncent))
-                    self.counters["embdedup_nprobe"] = nprobe
-                    top = probe(self.spark, prior_index_path, q, k=3,
-                                nprobe=nprobe, id_col=id_col,
-                                broadcast_queries=False)
-                    drop = (top.filter(F.col("cosine")
-                                       >= embedding_threshold)
-                            .select((-F.col("query_id") - 1)
-                                    .alias(id_col)).distinct())
-                    drop = drop.persist()
-                    try:
-                        # gate observability (r12): drop count in the
-                        # run's counters — the number an operator
-                        # watches release over release to spot
-                        # index-recall decay (frozen centroids
-                        # drifting; see the gate-recall contract in
-                        # tests/test_release.py for the measured
-                        # index-vs-LSH-vs-exact gap on the fixture)
-                        self.counters["embdedup_dropped"] = drop.count()
-                        # cut the join HERE so the cached drop frame
-                        # can be released before returning — _stage
-                        # materializes lazily-returned frames after
-                        # this function exits, which previously leaked
-                        # the cached blocks per release in a long-lived
-                        # session.
-                        return cut(manifest.join(drop, id_col, "left_anti"))
-                    finally:
-                        drop.unpersist()
                 dim = embedding_dim
                 if dim is None:
                     row = embeddings.select(
@@ -407,8 +308,11 @@ class ReleasePipeline:
                     .persist()
                 try:
                     self.counters["embdedup_dropped"] = drop.count()
-                    # cut-then-unpersist: same rationale as the
-                    # index-backed branch above
+                    # cut the join HERE so the cached drop frame can be
+                    # released before returning — _stage materializes
+                    # lazily-returned frames after this function exits,
+                    # which would leak the cached blocks per release in
+                    # a long-lived session
                     return cut(manifest.join(drop, id_col, "left_anti"))
                 finally:
                     drop.unpersist()
@@ -563,35 +467,6 @@ class ReleasePipeline:
                     os.path.join(out_path, "spans.parquet"))
 
             self._stage("spans", _spans)
-
-        if write_index:
-            # the published docs' embeddings become this release's
-            # quantized IVF index — the prior_index_path of release N+1
-            def _index() -> DataFrame:
-                from cloudbrush_spark.operators import similarity
-                pub_ids = out.select(id_col).distinct()
-                missing = pub_ids.join(embeddings.select(id_col), id_col,
-                                       "left_anti").count()
-                if missing:
-                    # a silently partial index would let release N+2's
-                    # gate miss duplicates of every uncovered doc
-                    raise ValueError(
-                        f"write_index: {missing} published docs have no "
-                        "row in `embeddings` — the index must cover the "
-                        "whole release (on an incremental release, pass "
-                        "embeddings for the full merged snapshot, not "
-                        "just the crawl)")
-                pub = (embeddings
-                       .join(pub_ids, id_col, "left_semi")
-                       .select(F.col(id_col), "embedding"))
-                similarity.write_ivf_index(
-                    pub, os.path.join(out_path, "emb_index"),
-                    n_centroids=None, seed=42, id_col=id_col,
-                    quantized=True)
-                return self.spark.read.parquet(
-                    os.path.join(out_path, "emb_index", "centroids"))
-
-            self._stage("index", _index)
 
         if dsir_target is not None:
             # DSIR importance weights over the PUBLISHED documents (one

@@ -505,42 +505,6 @@ def stream_publish(docs: DataFrame, out_dir: str):
     return docs.writeStream.foreachBatch(write_batch)
 
 
-def stream_index_append(vectors: DataFrame, index_path: str,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding"):
-    """Keep a persisted IVF index fresh from a vector STREAM — the sink
-    that closes the crawl-ingest story for the ANN side: embed upstream,
-    ``readStream`` the vectors, and the index that release gates and
-    probes read stays current without a batch job in the loop.
-
-    Exactly-once WITHOUT sink-side batch-id markers: foreachBatch
-    delivers at-least-once, and
-    :func:`~cloudbrush_spark.operators.similarity.append_to_ivf_index`
-    already brackets every append with a content-digest batch token —
-    a re-delivered micro-batch (same rows) digests to the same token
-    and replays as a committed no-op.  The appender's concurrency
-    contract applies per micro-batch too: a batch landing while a
-    compaction/split/merge holds the structural marker fails THAT batch
-    loudly (the stream's retry policy re-delivers it; the token makes
-    an eventually-successful retry exactly-once) instead of writing
-    files a swap would silently drop.
-
-    Empty micro-batches are skipped (a zero-row append would burn one
-    ``_appended_0_0`` marker for nothing).  Returns the
-    ``DataStreamWriter``; callers ``.start()`` it with their
-    ``checkpointLocation`` and trigger.
-    """
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from cloudbrush_spark.operators.similarity import (
-            append_to_ivf_index)
-        if batch_df.isEmpty():
-            return
-        append_to_ivf_index(batch_df.select(id_col, vec_col),
-                            index_path, id_col=id_col, vec_col=vec_col)
-
-    return vectors.writeStream.foreachBatch(write_batch)
-
-
 def stream_rollup_maintain(events: DataFrame, table_dir: str,
                            window: str = "1 hour",
                            watermark: str = "10 minutes"):

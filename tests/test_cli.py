@@ -319,168 +319,6 @@ def test_cli_prior_embeddings_and_dsir(tmp_path, spark, capsys):
     assert os.path.exists(os.path.join(out, "dsir.parquet"))
 
 
-def test_cli_prior_index_gate(tmp_path, spark, capsys):
-    """-prior_index runs the index-backed embedding-dedup gate; the
-    flag-pairing guards refuse the ambiguous combinations."""
-    import pytest
-
-    from cloudbrush_spark.__main__ import main
-    from cloudbrush_spark.operators import similarity
-    from tests.test_release import _docs_distinct, _emb_for
-    docs = _docs_distinct(spark, 12)
-    p = str(tmp_path / "d.parquet")
-    docs.write.parquet(p)
-    emb = _emb_for(docs, spark)
-    e_p = str(tmp_path / "emb.parquet")
-    emb.write.parquet(e_p)
-    idx = str(tmp_path / "idx")
-    similarity.write_ivf_index(emb.filter("doc_id < 6"), idx,
-                               n_centroids=4, seed=42, id_col="doc_id",
-                               quantized=True)
-    with pytest.raises(SystemExit, match="mutually exclusive"):
-        main(["-curate", p, "-out", str(tmp_path / "x"),
-              "-embeddings", e_p, "-prior_embeddings", e_p,
-              "-prior_index", idx])
-    out = str(tmp_path / "rel")
-    rc = main(["-curate", p, "-out", out, "-max_tokens", "2000",
-               "-embeddings", e_p, "-prior_index", idx,
-               "-prior_index_nprobe", "4",
-               "-emb_dedup_threshold", "0.99"])
-    assert rc == 0
-    import os
-
-    from cloudbrush_spark.sources import corpus as corpus_sink
-    kept = {r.doc_id for r in corpus_sink.read_corpus(
-        spark, os.path.join(out, "corpus")).select("doc_id").collect()}
-    assert kept == set(range(6, 12)), kept
-
-
-def test_cli_append_index(tmp_path, spark, capsys):
-    """-append_index drives the crawl-per-day index maintenance flow
-    from the CLI (r12): append new embeddings to an existing quantized
-    index, idempotent on replay; refuses without -embeddings."""
-    import random as _rnd
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from cloudbrush_spark.operators import similarity
-    rng = _rnd.Random(13)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(80)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    idx = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs.filter(F.col("vec_id") < 50), idx,
-                               n_centroids=4, seed=42, quantized=True)
-    newp = str(tmp_path / "new.parquet")
-    vecs.filter(F.col("vec_id") >= 50).write.parquet(newp)
-
-    rc = main(["-append_index", idx, "-embeddings", newp])
-    assert rc == 0
-    assert "appended: 30 rows" in capsys.readouterr().out
-    assert spark.read.parquet(idx + "/vectors").count() == 80
-    # replay is a no-op through the CLI too
-    rc = main(["-append_index", idx, "-embeddings", newp])
-    assert rc == 0
-    assert "appended: 0 rows" in capsys.readouterr().out
-    assert spark.read.parquet(idx + "/vectors").count() == 80
-    with pytest.raises(SystemExit, match="requires -embeddings"):
-        main(["-append_index", idx])
-
-
-def test_cli_append_index_resolves_index_id_column(tmp_path, spark, capsys):
-    """The CLI appends under the INDEX's id column even when the crawl
-    table names it differently (a release-written index uses doc_id,
-    crawl embeddings usually vec_id) — a mismatched name would fork the
-    bucket directories' parquet schema."""
-    import random as _rnd
-
-    from pyspark.sql import functions as F
-
-    from cloudbrush_spark.operators import similarity
-    rng = _rnd.Random(17)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
-    prior = spark.createDataFrame(
-        rows[:25], "doc_id long, embedding array<double>")
-    idx = str(tmp_path / "idx")
-    similarity.write_ivf_index(prior, idx, n_centroids=4, seed=42,
-                               id_col="doc_id", quantized=True)
-    crawl = spark.createDataFrame(
-        rows[25:], "vec_id long, embedding array<double>")
-    newp = str(tmp_path / "new.parquet")
-    crawl.write.parquet(newp)
-    rc = main(["-append_index", idx, "-embeddings", newp])
-    assert rc == 0
-    assert "appended: 15 rows" in capsys.readouterr().out
-    part = spark.read.parquet(idx + "/vectors")
-    assert "doc_id" in part.columns and part.count() == 40
-
-
-def test_cli_append_index_custom_vec_col_and_clear_errors(
-        tmp_path, spark, capsys):
-    """r13: the index's vector column is resolved from its SCHEMA (the
-    array-typed column), not hardcoded to 'embedding' — a plain-layout
-    index written with a custom vec_col appends correctly; and an
-    embeddings table with no resolvable id column is a NAMED SystemExit
-    instead of a confusing downstream error."""
-    import random as _rnd
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from cloudbrush_spark.operators import similarity
-    rng = _rnd.Random(19)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
-    prior = spark.createDataFrame(
-        rows[:25], "doc_id long, vec array<double>")
-    idx = str(tmp_path / "idx")
-    similarity.write_ivf_index(prior, idx, n_centroids=4, seed=42,
-                               id_col="doc_id", vec_col="vec")
-    crawl = spark.createDataFrame(
-        rows[25:], "vec_id long, embedding array<double>")
-    newp = str(tmp_path / "new.parquet")
-    crawl.write.parquet(newp)
-    rc = main(["-append_index", idx, "-embeddings", newp])
-    assert rc == 0
-    assert "appended: 15 rows" in capsys.readouterr().out
-    part = spark.read.parquet(idx + "/vectors")
-    assert {"doc_id", "vec"} <= set(part.columns) and part.count() == 40
-    # no resolvable id column in the embeddings table -> named error
-    bad = spark.createDataFrame(
-        [(i, [0.1] * 8) for i in range(3)],
-        "weird_id long, embedding array<double>")
-    badp = str(tmp_path / "bad.parquet")
-    bad.write.parquet(badp)
-    with pytest.raises(SystemExit, match="neither it, 'vec_id'"):
-        main(["-append_index", idx, "-embeddings", badp])
-
-
-def test_cli_compact_index(tmp_path, spark, capsys):
-    """-compact_index drives the r13 file-growth fix from the CLI."""
-    import glob as _glob
-    import random as _rnd
-
-    from pyspark.sql import functions as F
-
-    from cloudbrush_spark.operators import similarity
-    rng = _rnd.Random(23)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(80)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    idx = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs.filter(F.col("vec_id") < 40), idx,
-                               n_centroids=4, seed=42, quantized=True)
-    for lo in (40, 60):
-        similarity.append_to_ivf_index(
-            vecs.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 20)),
-            idx)
-    before = len(_glob.glob(idx + "/vectors/**/*.parquet", recursive=True))
-    rc = main(["-compact_index", idx])
-    assert rc == 0
-    assert "compacted index:" in capsys.readouterr().out
-    after = len(_glob.glob(idx + "/vectors/**/*.parquet", recursive=True))
-    assert after < before
-    assert spark.read.parquet(idx + "/vectors").count() == 80
-
-
 def test_private_tmp_root_rejects_symlink_and_lax_modes(tmp_path,
                                                         monkeypatch):
     """r13 advisor finding: the per-user deterministic cache root must
@@ -516,172 +354,3 @@ def test_private_tmp_root_rejects_symlink_and_lax_modes(tmp_path,
     os.chmod(expect, 0o755)
     alt3 = entrymod._private_tmp_root()
     assert alt3 != expect
-
-
-def test_cli_index_stats(tmp_path, spark, capsys):
-    """-index_stats prints the operational snapshot as one JSON line."""
-    import json as _json
-    import random as _rnd
-
-    from cloudbrush_spark.operators import similarity
-    rng = _rnd.Random(29)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(50)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    idx = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs, idx, n_centroids=4, seed=42,
-                               quantized=True)
-    rc = main(["-index_stats", idx])
-    assert rc == 0
-    st = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert st["rows"] == 50 and st["n_centroids"] == 4
-    assert st["compacting"] is False
-
-
-def test_cli_append_index_ambiguous_vec_col_is_named_error(tmp_path, spark):
-    """r14 (advisor finding): when the index's vector source has zero or
-    multiple candidate array columns, the CLI raises a NAMED SystemExit
-    listing them instead of silently guessing 'embedding' — a wrong
-    silent pick forks the bucket directories' parquet schema."""
-    import pytest
-
-    df = spark.createDataFrame(
-        [(1, [0.1] * 4, [0.2] * 4, 0)],
-        "doc_id long, v1 array<double>, v2 array<double>, bucket int")
-    idx = str(tmp_path / "idx")
-    df.write.partitionBy("bucket").parquet(idx + "/vectors")
-    emb = spark.createDataFrame(
-        [(2, [0.3] * 4)], "doc_id long, embedding array<double>")
-    newp = str(tmp_path / "new.parquet")
-    emb.write.parquet(newp)
-    with pytest.raises(SystemExit,
-                       match="cannot resolve the index vector column"):
-        main(["-append_index", idx, "-embeddings", newp])
-
-
-def test_cli_split_index(tmp_path, spark, capsys):
-    """-split_index drives the r14 drift remedy from the CLI: a drifted
-    index's skew drops, the summary prints as JSON, and a healthy index
-    is a no-op."""
-    import json as _json
-    import random as _rnd
-
-    from cloudbrush_spark.operators import similarity
-    rng = _rnd.Random(23)
-
-    def cluster(c, n, base):
-        ctr = [10.0 * (1 if i == c else 0) for i in range(8)]
-        return [(base + j, [x + rng.gauss(0, 0.5) for x in ctr])
-                for j in range(n)]
-
-    train = spark.createDataFrame(
-        cluster(0, 100, 0), "vec_id long, embedding array<double>")
-    idx = str(tmp_path / "idx")
-    similarity.write_ivf_index(train, idx, n_centroids=8, seed=42,
-                               quantized=True)
-    drift = spark.createDataFrame(
-        cluster(1, 150, 1000) + cluster(2, 150, 2000),
-        "vec_id long, embedding array<double>")
-    assert similarity.append_to_ivf_index(drift, idx) == 300
-    rc = main(["-split_index", idx, "-skew_threshold", "3.0"])
-    assert rc == 0
-    s = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert s["split_buckets"] and s["n_centroids_after"] > 8
-    # second run: healthy now (or at least strictly less to do)
-    rc = main(["-split_index", idx, "-skew_threshold", "3.0"])
-    assert rc == 0
-
-
-def test_cli_merge_and_rebalance_index(tmp_path, spark, capsys):
-    """-merge_index folds thin buckets from the CLI (JSON summary);
-    -rebalance_index chains split+merge on a drifted index and the
-    resulting centroid set stays contiguous."""
-    import json as _json
-    import random as _rnd
-
-    from cloudbrush_spark.operators import similarity
-    from pyspark.sql import functions as F
-    rng = _rnd.Random(31)
-
-    def cluster(sign, n, base):
-        return [(base + j, [sign * 10.0 + rng.gauss(0, 0.5)
-                            for _ in range(8)]) for j in range(n)]
-
-    rows = cluster(1, 100, 0) + cluster(-1, 100, 500)
-    rows += [(900 + i, [100.0 + 7.0 * i if d == i else 0.0
-                        for d in range(8)]) for i in range(3)]
-    vecs = spark.createDataFrame(rows,
-                                 "vec_id long, embedding array<double>")
-    idx = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs, idx, n_centroids=8, seed=42,
-                               quantized=True)
-    # the sqrt(corpus) default floor (15 > K=8 here) correctly refuses
-    # to shrink a small index; an explicit -k_floor overrides it
-    rc = main(["-merge_index", idx, "-small_threshold", "3.0"])
-    assert rc == 0
-    s = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert s["merged_buckets"] == []
-    rc = main(["-merge_index", idx, "-small_threshold", "3.0",
-               "-k_floor", "2"])
-    assert rc == 0
-    s = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert s["merged_buckets"], s
-    assert s["n_centroids_after"] < s["n_centroids_before"]
-    cent = sorted(r.bucket for r in
-                  spark.read.parquet(idx + "/centroids").collect())
-    assert cent == list(range(s["n_centroids_after"]))
-
-    # rebalance on a drifted index: split then merge in one call
-    rng2 = _rnd.Random(23)
-
-    def dcluster(c, n, base):
-        ctr = [10.0 * (1 if i == c else 0) for i in range(8)]
-        return [(base + j, [x + rng2.gauss(0, 0.5) for x in ctr])
-                for j in range(n)]
-
-    train = spark.createDataFrame(
-        dcluster(0, 100, 0), "vec_id long, embedding array<double>")
-    idx2 = str(tmp_path / "idx2")
-    similarity.write_ivf_index(train, idx2, n_centroids=8, seed=42,
-                               quantized=True)
-    drift = spark.createDataFrame(
-        dcluster(1, 150, 1000) + dcluster(2, 150, 2000),
-        "vec_id long, embedding array<double>")
-    assert similarity.append_to_ivf_index(drift, idx2) == 300
-    rc = main(["-rebalance_index", idx2, "-skew_threshold", "3.0",
-               "-small_threshold", "3.0"])
-    assert rc == 0
-    s2 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert s2["split"]["split_buckets"]
-    k = spark.read.parquet(idx2 + "/centroids").count()
-    assert sorted(r.bucket for r in
-                  spark.read.parquet(idx2 + "/centroids").collect()) \
-        == list(range(k))
-    mx = spark.read.parquet(idx2 + "/vectors") \
-        .agg(F.max("bucket")).collect()[0][0]
-    assert mx < k
-
-
-def test_cli_delete_undelete_index(tmp_path, spark, capsys):
-    """-delete_index tombstones ids from the CLI (comma list), probes
-    exclude them, -undelete_index lifts them."""
-    import json as _json
-    import random as _rnd
-
-    from cloudbrush_spark.operators import similarity
-    rng = _rnd.Random(5)
-    rows = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(60)]
-    vecs = spark.createDataFrame(rows,
-                                 "vec_id long, embedding array<double>")
-    idx = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs, idx, n_centroids=4, seed=42,
-                               quantized=True)
-    rc = main(["-delete_index", idx, "-ids", "3,4"])
-    assert rc == 0
-    out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out == {"tombstoned": 2}
-    assert similarity.index_stats(spark, idx)["pending_deletes"] == 2
-    rc = main(["-undelete_index", idx, "-ids", "4,99"])
-    assert rc == 0
-    out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out == {"lifted": 1}
-    assert similarity.index_stats(spark, idx)["pending_deletes"] == 1

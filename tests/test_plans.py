@@ -300,78 +300,3 @@ def test_stratified_sample_prunes_and_never_single_partitions(spark):
     # the corpus would show as Sort [h ...] with no partitioning
     assert "SinglePartition" not in plan.split("cnt")[0]  # corpus side
     assert plan.count("Window") >= 1
-
-
-def test_quantized_codes_selection_scan_never_reads_doubles(spark, tmp_path):
-    """The persisted-codes ANN's byte lever, pinned in the plan: the
-    codes-table scan's ReadSchema carries q_codes (tinyint array) and NO
-    double embedding column, and the doubles table is touched only by
-    the re-rank — with the bounded winner-id list pushed into its scan
-    as an In() filter for row-group pruning."""
-    import random as _rnd
-    from cloudbrush_spark.operators import similarity
-    rng = _rnd.Random(11)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(300)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    vec_path, codes_path = str(tmp_path / "v"), str(tmp_path / "c")
-    df.write.parquet(vec_path)
-    vecs = spark.read.parquet(vec_path)
-    similarity.write_quantized_codes(vecs, codes_path)
-    codes = similarity.read_quantized_codes(spark, codes_path)
-    q = vecs.filter(F.col("vec_id") < 3)
-    # query side as a literal frame (the 100 TB shape: queries broadcast
-    # from the driver) so the only file scan in the selection plan is the
-    # codes table itself
-    qrows = similarity.quantize_embeddings(q).select("vec_id", "q_codes") \
-        .collect()
-    qq = spark.createDataFrame(
-        [(int(r.vec_id), list(r.q_codes)) for r in qrows],
-        "query_id long, qc array<tinyint>").withColumn("qcn", F.lit(1.0))
-    sel = similarity.quantized_select(codes, qq, 4)
-    sel_schemas = plans.read_schema(sel)
-    assert sel_schemas and any("q_codes" in s for s in sel_schemas)
-    assert all("embedding" not in s and "array<double>" not in s
-               for s in sel_schemas), sel_schemas
-    # the doubles scan exists only for the re-rank and carries the In()
-    # winner filter (parquet row-group pruning)
-    out = similarity.cosine_topk_quantized(vecs, q, k=4, codes=codes)
-    pushed = plans.pushed_filters(out)
-    assert any("In(vec_id" in p for p in pushed), pushed
-
-
-def test_ivf_quantized_probe_prunes_partitions_and_reads_codes_only(
-        spark, tmp_path):
-    """The composed (r11) index multiplies the two persisted levers ON
-    THE SAME SCAN: the selection scan carries a PartitionFilter on the
-    probed buckets (unprobed directories never listed) AND a ReadSchema
-    with q_codes and NO double column (int8 bytes inside the probed
-    partitions); the doubles side table is touched only by the re-rank,
-    with the In() winner filter pushed for row-group pruning."""
-    import random as _rnd
-    from cloudbrush_spark.operators import similarity
-    rng = _rnd.Random(7)
-    centers = [[8 * (1 if i == c else 0) for i in range(8)] for c in range(4)]
-    rows = []
-    for vid in range(200):
-        ctr = centers[vid % 4]
-        rows.append((vid, [x + rng.uniform(-0.4, 0.4) for x in ctr]))
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = str(tmp_path / "ivfq")
-    similarity.write_ivf_index(vecs, path, n_centroids=8, seed=42,
-                               quantized=True)
-    q = vecs.filter(F.col("vec_id") < 2)
-    # the selection stage (the full probe stage-cuts the winner frame,
-    # severing the selection plan from the output's — pin it directly)
-    _, sel = similarity.ivf_quantized_select(spark, path, q, k=3, nprobe=2)
-    plan = plans.explain_str(sel)
-    assert "PartitionFilters" in plan and "bucket" in \
-        plan.split("PartitionFilters", 1)[1][:200], plan
-    # the codes scan (the /vectors one) must not read any double column
-    schemas = plans.read_schema(sel)
-    codes_scans = [s for s in schemas if "q_codes" in s]
-    assert codes_scans and all(
-        "array<double>" not in s for s in codes_scans), schemas
-    # full probe: the /doubles scan exists only behind the In() re-rank
-    out = similarity.cosine_topk_ivf_quantized(spark, path, q, k=3, nprobe=2)
-    pushed = plans.pushed_filters(out)
-    assert any("In(vec_id" in p for p in pushed), pushed

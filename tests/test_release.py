@@ -753,185 +753,3 @@ def test_release_new_stages_compose_with_incremental_publish(spark,
     kept = {r.doc_id for r in b1.select("doc_id").distinct().collect()}
     assert kept.isdisjoint({0, 2, 4, 5})
     assert os.path.exists(os.path.join(out1, "dsir.parquet"))
-
-
-def test_release_embedding_dedup_gate_index_backed(spark, tmp_path):
-    """prior_index_path: the gate probes the previous release's
-    persisted IVF index (quantized layout here) instead of running the
-    all-pairs LSH pass — same drops on separated vectors, including the
-    unchanged-doc self match the probe's namespacing must not suppress."""
-    from cloudbrush_spark.operators import similarity
-    from cloudbrush_spark.sources import corpus as corpus_sink
-    docs = _docs_distinct(spark, 20)
-    emb = _emb_for(docs, spark)
-    prior = emb.filter(F.col("doc_id") < 10)
-    idx = str(tmp_path / "prior_idx")
-    similarity.write_ivf_index(prior, idx, n_centroids=4, seed=42,
-                               id_col="doc_id", quantized=True)
-    out = str(tmp_path / "rel")
-    release(spark, docs, out, max_tokens=2000,
-            embeddings=emb, prior_index_path=idx,
-            prior_index_nprobe=4, embedding_threshold=0.99)
-    back = corpus_sink.read_corpus(spark, os.path.join(out, "corpus"))
-    kept = {r.doc_id for r in back.select("doc_id").collect()}
-    assert kept == set(range(10, 20)), kept
-    # both prior forms refused together; index without embeddings refused
-    import pytest
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        release(spark, docs, str(tmp_path / "x"), max_tokens=2000,
-                embeddings=emb, prior_embeddings=prior,
-                prior_index_path=idx)
-    with pytest.raises(ValueError, match="together"):
-        release(spark, docs, str(tmp_path / "y"), max_tokens=2000,
-                prior_index_path=idx)
-
-
-def test_release_write_index_feeds_next_release_gate(spark, tmp_path):
-    """write_index closes the release loop: release N writes its
-    published docs' quantized IVF index at <out>/emb_index, and release
-    N+1 gates against it via prior_index_path — docs already shipped in
-    N are dropped from N+1."""
-    docs_n = _docs_distinct(spark, 10)
-    emb_n = _emb_for(docs_n, spark)
-    out0 = str(tmp_path / "rel0")
-    release(spark, docs_n, out0, max_tokens=2000,
-            embeddings=emb_n, write_index=True)
-    assert os.path.exists(os.path.join(out0, "emb_index",
-                                       "centroids", "_SUCCESS"))
-    part = spark.read.parquet(os.path.join(out0, "emb_index", "vectors"))
-    assert "q_codes" in part.columns  # quantized layout
-    # release N+1: same 10 docs plus 10 new ones
-    docs_n1 = _docs_distinct(spark, 20)
-    emb_n1 = _emb_for(docs_n1, spark)
-    out1 = str(tmp_path / "rel1")
-    release(spark, docs_n1, out1, max_tokens=2000,
-            embeddings=emb_n1,
-            prior_index_path=os.path.join(out0, "emb_index"),
-            embedding_threshold=0.99)
-    from cloudbrush_spark.sources import corpus as corpus_sink
-    kept = {r.doc_id for r in corpus_sink.read_corpus(
-        spark, os.path.join(out1, "corpus")).select("doc_id").collect()}
-    assert kept == set(range(10, 20)), kept
-    # embeddings without any consumer is refused
-    import pytest
-    with pytest.raises(ValueError, match="without a consumer"):
-        release(spark, docs_n, str(tmp_path / "x"), max_tokens=2000,
-                embeddings=emb_n)
-
-
-def test_index_gate_recall_contract_vs_lsh_vs_exact(spark, tmp_path):
-    """Gate-level recall contract (r12): on the synthetic cross-release
-    fixture, the drop-set of the INDEX-BACKED gate (prior_index_path,
-    k=3, nprobe=4) and the all-pairs LSH gate (prior_embeddings) are
-    each measured against exact-cosine truth.  Both gates verify with
-    exact cosine, so neither may drop a non-duplicate (precision 1 by
-    construction — asserted); the pinned floor is RECALL >= 0.9 for
-    both, and the measured values are recorded in docs/COVERAGE.md so a
-    user choosing -prior_index over -prior_embeddings knows the gap.
-    The run's counters expose the drop count (embdedup_dropped)."""
-    import math
-
-    from cloudbrush_spark.operators import similarity
-    from cloudbrush_spark.sources import corpus as corpus_sink
-    docs = _docs_distinct(spark, 40)
-    emb = _emb_for(docs, spark)
-    # prior release: drifted twins of docs 0-19 under the same ids —
-    # some land above the threshold (true near-dups), some below
-    prior = _emb_for(docs.filter(F.col("doc_id") < 20), spark, drift=0.05)
-    thr = 0.995
-    # exact-cosine truth, python-side
-    new_vecs = {r.doc_id: list(r.embedding) for r in emb.collect()}
-    prior_vecs = {r.doc_id: list(r.embedding) for r in prior.collect()}
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / (math.sqrt(sum(x * x for x in a))
-                    * math.sqrt(sum(x * x for x in b)))
-
-    truth = {i for i, v in new_vecs.items()
-             if any(cos(v, p) >= thr for p in prior_vecs.values())}
-    assert truth and truth < set(new_vecs)  # non-degenerate fixture
-
-    idx = str(tmp_path / "prior_idx")
-    similarity.write_ivf_index(prior, idx, n_centroids=16, sample=20,
-                               seed=42, id_col="doc_id", quantized=True)
-
-    def gate_drops(out, **gate_kw):
-        counters = {}
-        release(spark, docs, out, max_tokens=2000, embeddings=emb,
-                embedding_threshold=thr, counters=counters, **gate_kw)
-        kept = {r.doc_id for r in corpus_sink.read_corpus(
-            spark, os.path.join(out, "corpus")).select("doc_id").collect()}
-        dropped = set(new_vecs) - kept
-        assert counters.get("embdedup_dropped") == len(dropped)
-        return dropped
-
-    d_index = gate_drops(str(tmp_path / "rel_idx"),
-                         prior_index_path=idx, prior_index_nprobe=4)
-    d_lsh = gate_drops(str(tmp_path / "rel_lsh"),
-                       prior_embeddings=prior)
-    # precision 1 by construction: exact-cosine verification in both
-    assert d_index <= truth, (sorted(d_index - truth), sorted(truth))
-    assert d_lsh <= truth, (sorted(d_lsh - truth), sorted(truth))
-    recall_index = len(d_index & truth) / len(truth)
-    recall_lsh = len(d_lsh & truth) / len(truth)
-    # pinned floor; measured values recorded in docs/COVERAGE.md
-    assert recall_index >= 0.9, (recall_index, sorted(truth - d_index))
-    assert recall_lsh >= 0.9, (recall_lsh, sorted(truth - d_lsh))
-
-
-def test_index_gate_recall_on_big_k_prior_index(spark, tmp_path):
-    """r13 extension of the gate recall contract: the same drifted-twin
-    drop-set measured against a >=1024-centroid prior index probed at
-    the AUTO-scaled nprobe (the gate's new default,
-    similarity.auto_nprobe -> 32 at K=1024) — the r12 contract ran at
-    16 centroids / nprobe=4, exactly the regime where the nprobe/K
-    coupling cannot be observed.  Floor held at 0.9; precision stays 1
-    by construction (exact-cosine verification)."""
-    import math
-    import random as _rnd
-
-    from cloudbrush_spark.operators import similarity
-    from cloudbrush_spark.sources import corpus as corpus_sink
-    docs = _docs_distinct(spark, 40)
-    emb = _emb_for(docs, spark)
-    twins = _emb_for(docs.filter(F.col("doc_id") < 20), spark, drift=0.05)
-    # pad the prior release with distinct filler vectors so its index
-    # genuinely trains >=1024 centroids (ids disjoint from the corpus)
-    filler = []
-    for i in range(1480):
-        rng = _rnd.Random(10_000 + i)
-        filler.append((10_000 + i,
-                       [rng.uniform(-1, 1) for _ in range(8)]))
-    prior = twins.unionByName(spark.createDataFrame(
-        filler, "doc_id long, embedding array<double>"))
-    thr = 0.995
-    new_vecs = {r.doc_id: list(r.embedding) for r in emb.collect()}
-    prior_vecs = [list(r.embedding) for r in prior.collect()]
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / (math.sqrt(sum(x * x for x in a))
-                    * math.sqrt(sum(x * x for x in b)))
-
-    truth = {i for i, v in new_vecs.items()
-             if any(cos(v, p) >= thr for p in prior_vecs)}
-    assert truth and truth < set(new_vecs)  # non-degenerate fixture
-    idx = str(tmp_path / "prior_idx_bigk")
-    cents = similarity.write_ivf_index(prior, idx, n_centroids=1024,
-                                       sample=1500, seed=42,
-                                       id_col="doc_id", quantized=True)
-    assert len(cents) == 1024
-    counters = {}
-    out = str(tmp_path / "rel_bigk")
-    release(spark, docs, out, max_tokens=2000, embeddings=emb,
-            embedding_threshold=thr, prior_index_path=idx,
-            counters=counters)  # prior_index_nprobe defaults to auto
-    kept = {r.doc_id for r in corpus_sink.read_corpus(
-        spark, os.path.join(out, "corpus")).select("doc_id").collect()}
-    dropped = set(new_vecs) - kept
-    assert counters.get("embdedup_dropped") == len(dropped)
-    assert counters.get("embdedup_nprobe") == 32  # auto_nprobe(1024)
-    assert dropped <= truth, (sorted(dropped - truth), sorted(truth))
-    recall = len(dropped & truth) / len(truth)
-    assert recall >= 0.9, (recall, sorted(truth - dropped))

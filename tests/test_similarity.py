@@ -234,6 +234,43 @@ def test_ivf_topk_end_to_end_on_sorted_corpus(spark):
     assert same / len(rowsd) > 0.95
 
 
+def test_ivf_matches_python_reference(spark, clustered):
+    """cosine_topk_ivf reproduces exactly the brute-force top-k WITHIN each
+    query's probed buckets, given the centroids the operator trains
+    (ivf_centroids over the collapsed groups, same seed and sample)."""
+    vecs = clustered.select("vec_id", "embedding")
+    _, groups = similarity._collapse(vecs, "vec_id", "embedding")
+    cents = similarity.ivf_centroids(groups, 8, seed=42, vec_col="__vec")
+    out = similarity.cosine_topk_ivf(vecs, k=3, n_centroids=8, nprobe=2,
+                                     seed=42)
+    got = {}
+    for r in out.filter(F.col("query_id").isin([0, 30, 60, 90])).collect():
+        got.setdefault(r.query_id, []).append((r.rank, r.neighbor_id, r.cosine))
+    data = {r.vec_id: r.embedding for r in vecs.collect()}
+
+    def nearest(v, n):
+        # the operator's score: -0.5||c||^2 + v.c, ties toward the larger index
+        scored = sorted(
+            ((sum(x * c for x, c in zip(v, cv)) - 0.5 * sum(c * c for c in cv), i)
+             for i, cv in enumerate(cents)), reverse=True)
+        return [i for _, i in scored[:n]]
+    assign = {i: nearest(v, 1)[0] for i, v in data.items()}
+
+    def cos(a, b):
+        d = sum(x * y for x, y in zip(a, b))
+        return d / math.sqrt(sum(x*x for x in a)) / math.sqrt(sum(x*x for x in b))
+    assert set(got) == {0, 30, 60, 90}
+    for qid in (0, 30, 60, 90):
+        probes = set(nearest(data[qid], 2))
+        cand = [(i, cos(data[qid], v)) for i, v in data.items()
+                if i != qid and assign[i] in probes]
+        want = sorted(cand, key=lambda t: (-t[1], t[0]))[:3]
+        assert [(rk, nid) for rk, nid, _ in sorted(got[qid])] == \
+            [(rk + 1, i) for rk, (i, _) in enumerate(want)]
+        for (_, _, c), (_, wc) in zip(sorted(got[qid]), want):
+            assert abs(c - wc) < 1e-9
+
+
 def test_quantize_embeddings_error_bound_and_types(spark, clustered):
     """Codes are array<tinyint> within [-127,127]; reconstruction error
     per component is bounded by scale/2 (+ float slack); zero vectors
@@ -267,7 +304,7 @@ def test_quantized_topk_matches_exact_on_separated_clusters(spark, clustered):
         assert e[k] == g[k]  # exact re-rank, bitwise
 
 
-def test_quantized_selection_rank_is_deterministic(spark):
+def test_quantized_rank_ties_are_deterministic(spark):
     """Integer-score ties break by neighbor_id: identical vectors must
     yield the same ranked list on every run (retry-safe cut line)."""
     rows = [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(6)]
@@ -277,46 +314,6 @@ def test_quantized_selection_rank_is_deterministic(spark):
     assert sorted((r.rank, r.neighbor_id) for r in out1.collect()) == \
         sorted((r.rank, r.neighbor_id) for r in out2.collect()) == \
         [(1, 1), (2, 2), (3, 3)]
-
-
-def test_persisted_codes_topk_matches_inline(spark, clustered, tmp_path):
-    """The persisted-codes path (selection over the codes TABLE, winners
-    joined back to the doubles) returns the same ranked rows and the same
-    bitwise-exact cosines as the inline form — persistence is a plan/IO
-    change, never a semantic one."""
-    vec_path = str(tmp_path / "vecs")
-    codes_path = str(tmp_path / "codes")
-    clustered.select("vec_id", "embedding").write.parquet(vec_path)
-    vecs = spark.read.parquet(vec_path)
-    similarity.write_quantized_codes(vecs, codes_path)
-    codes = similarity.read_quantized_codes(spark, codes_path)
-    assert dict(codes.dtypes)["q_codes"] == "array<tinyint>"
-    q = vecs.filter(F.col("vec_id") < 5)
-    inline = similarity.cosine_topk_quantized(vecs, q, k=5)
-    persisted = similarity.cosine_topk_quantized(vecs, q, k=5, codes=codes)
-    a = sorted((r.query_id, r.rank, r.neighbor_id, r.cosine)
-               for r in inline.collect())
-    b = sorted((r.query_id, r.rank, r.neighbor_id, r.cosine)
-               for r in persisted.collect())
-    assert a == b
-
-
-def test_persisted_codes_rerank_distributed_over_cap(spark, clustered,
-                                                     tmp_path):
-    """rerank_collect_max=0 forces the distributed re-rank branch (no
-    driver id collect, broadcast winner join instead) — identical rows."""
-    vec_path = str(tmp_path / "vecs")
-    codes_path = str(tmp_path / "codes")
-    clustered.select("vec_id", "embedding").write.parquet(vec_path)
-    vecs = spark.read.parquet(vec_path)
-    similarity.write_quantized_codes(vecs, codes_path)
-    codes = similarity.read_quantized_codes(spark, codes_path)
-    q = vecs.filter(F.col("vec_id") < 3)
-    capped = similarity.cosine_topk_quantized(vecs, q, k=4, codes=codes)
-    dist = similarity.cosine_topk_quantized(vecs, q, k=4, codes=codes,
-                                            rerank_collect_max=0)
-    assert sorted(map(tuple, capped.collect())) == \
-        sorted(map(tuple, dist.collect()))
 
 
 def test_quantized_zero_vectors_excluded_not_nan(spark):
@@ -331,40 +328,6 @@ def test_quantized_zero_vectors_excluded_not_nan(spark):
     assert all(r.query_id != 98 and r.neighbor_id != 98 for r in out)
     assert all(r.cosine == r.cosine and r.cosine is not None for r in out)
     assert {r.query_id for r in out} == {0, 1, 2, 3}
-    # persisted path honors the same guard
-    import tempfile
-    d = tempfile.mkdtemp(prefix="cb_q8z_")
-    similarity.write_quantized_codes(df, d + "/codes")
-    codes = similarity.read_quantized_codes(spark, d + "/codes")
-    outp = similarity.cosine_topk_quantized(df, df, k=3, codes=codes).collect()
-    assert all(r.query_id != 98 and r.neighbor_id != 98 for r in outp)
-    assert all(r.cosine == r.cosine for r in outp)
-
-
-def test_persisted_codes_parquet_bytes_are_fraction_of_doubles(spark,
-                                                               tmp_path):
-    """The byte lever, measured: the persisted codes table is a small
-    fraction of the doubles table on disk (tinyint+RLE vs
-    array<double>), so a selection scan over codes reads far fewer bytes
-    than one over the embeddings.  Asserted at <= 1/3 to be robust to
-    parquet overhead at toy scale; measured 1/3.9 at the x10 fixture's
-    float32 table (docs/SCALE.md) — this fixture is array<double>, so
-    the ratio here is larger."""
-    import os as _os
-    import random as _rnd
-    rng = _rnd.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(2000)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    vec_path = str(tmp_path / "vecs")
-    codes_path = str(tmp_path / "codes")
-    df.write.parquet(vec_path)
-    similarity.write_quantized_codes(df, codes_path)
-    def _bytes(p):
-        return sum(_os.path.getsize(_os.path.join(r, f))
-                   for r, _, fs in _os.walk(p) for f in fs
-                   if f.endswith(".parquet"))
-    vb, cb = _bytes(vec_path), _bytes(codes_path)
-    assert cb * 3 <= vb, (cb, vb)
 
 
 def test_cross_corpus_embedding_near_dups(spark, clustered):
@@ -416,151 +379,8 @@ def test_cross_corpus_embedding_exact_dup_no_lsh_needed(spark):
     assert all(r.a != 101 for r in got)
 
 
-def test_ivf_index_matches_python_reference(spark, clustered, tmp_path):
-    """The persisted IVF index reproduces exactly the brute-force top-k
-    WITHIN each query's probed buckets (same centroids: deterministic
-    seed/sample) — and the probe scan carries a PartitionFilter on the
-    bucket directory, never a full-corpus read."""
-    from cloudbrush_spark import plans
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "ivf")
-    cents = similarity.write_ivf_index(vecs, path, n_centroids=8, seed=42)
-    q = vecs.filter(F.col("vec_id").isin([0, 30, 60, 90]))
-    out = similarity.cosine_topk_ivf_indexed(spark, path, q, k=3, nprobe=2)
-    plan = plans.explain_str(out)
-    assert "PartitionFilters" in plan and "bucket" in \
-        plan.split("PartitionFilters", 1)[1][:200]
-    got = {}
-    for r in out.collect():
-        got.setdefault(r.query_id, []).append((r.rank, r.neighbor_id, r.cosine))
-    # python reference with the returned centroids
-    import math
-    data = {r.vec_id: r.embedding for r in vecs.collect()}
-    def nearest(v, n):
-        scored = sorted(
-            ((sum(x * c for x, c in zip(v, cv)) - 0.5 * sum(c * c for c in cv), i)
-             for i, cv in enumerate(cents)), reverse=True)
-        return [i for _, i in scored[:n]]
-    assign = {i: nearest(v, 1)[0] for i, v in data.items()}
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / math.sqrt(sum(x*x for x in a)) / math.sqrt(sum(x*x for x in b))
-    for qid in (0, 30, 60, 90):
-        probes = set(nearest(data[qid], 2))
-        cand = [(i, cos(data[qid], v)) for i, v in data.items()
-                if i != qid and assign[i] in probes]
-        want = sorted(cand, key=lambda t: (-t[1], t[0]))[:3]
-        assert [(rk, nid) for rk, nid, _ in sorted(got[qid])] == \
-            [(rk + 1, i) for rk, (i, _) in enumerate(want)]
-        for (_, _, c), (_, wc) in zip(sorted(got[qid]), want):
-            assert abs(c - wc) < 1e-9
-
-
-def test_ivf_quantized_index_layout_and_parity(spark, clustered, tmp_path):
-    """The composed index (r11): bucket partitions store ONLY int8
-    codes (+scale) — no double column in the partition files — doubles
-    live once in the id-sorted side table; and the probe's top-k
-    matches the plain persisted-IVF index's neighbor SET on separated
-    clusters, with the reported cosine exactly the double cosine."""
-    vecs = clustered.select("vec_id", "embedding")
-    pq = str(tmp_path / "ivfq")
-    pp = str(tmp_path / "ivfp")
-    cq = similarity.write_ivf_index(vecs, pq, n_centroids=8, seed=42,
-                                    quantized=True)
-    cp = similarity.write_ivf_index(vecs, pp, n_centroids=8, seed=42)
-    assert cq == cp  # same deterministic coarse quantizer
-    part = spark.read.parquet(pq + "/vectors")
-    assert set(part.columns) == {"vec_id", "q_scale", "q_codes", "bucket"}
-    assert dict(part.dtypes)["q_codes"] == "array<tinyint>"
-    dbl = spark.read.parquet(pq + "/doubles")
-    assert set(dbl.columns) == {"vec_id", "embedding"}
-    q = vecs.filter(F.col("vec_id").isin([0, 30, 60, 90]))
-    got = similarity.cosine_topk_ivf_quantized(spark, pq, q, k=3, nprobe=2)
-    ref = similarity.cosine_topk_ivf_indexed(spark, pp, q, k=3, nprobe=2)
-    g = {(r.query_id, r.neighbor_id): r.cosine for r in got.collect()}
-    r_ = {(r.query_id, r.neighbor_id): r.cosine for r in ref.collect()}
-    # int8 selection may swap near-ties at the cut (cosines within the
-    # quantization error), but recall vs the exact-selection index stays
-    # >= 2/3 per query here, the top-1 neighbor agrees, and every common
-    # pair's cosine is the exact double cosine BITWISE (the re-rank must
-    # not leak quantized scores)
-    for qid in (0, 30, 60, 90):
-        gn = {n for (qq, n) in g if qq == qid}
-        rn = {n for (qq, n) in r_ if qq == qid}
-        assert len(gn & rn) >= 2, (qid, gn, rn)
-    top1_g = {r.query_id: r.neighbor_id for r in got.collect() if r.rank == 1}
-    top1_r = {r.query_id: r.neighbor_id for r in ref.collect() if r.rank == 1}
-    assert top1_g == top1_r
-    assert all(g[k2] == r_[k2] for k2 in set(g) & set(r_))
-
-
-def test_ivf_quantized_over_cap_rerank_falls_back_distributed(spark,
-                                                              clustered,
-                                                              tmp_path):
-    """Past rerank_collect_max the winner re-rank joins distributed
-    instead of collecting ids — results identical."""
-    vecs = clustered.select("vec_id", "embedding")
-    pq = str(tmp_path / "ivfq")
-    similarity.write_ivf_index(vecs, pq, n_centroids=8, seed=42,
-                               quantized=True)
-    q = vecs.filter(F.col("vec_id").isin([0, 30]))
-    a = similarity.cosine_topk_ivf_quantized(spark, pq, q, k=3, nprobe=2)
-    b = similarity.cosine_topk_ivf_quantized(spark, pq, q, k=3, nprobe=2,
-                                             rerank_collect_max=1)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_append_to_ivf_index_both_layouts(spark, clustered, tmp_path):
-    """append_to_ivf_index: new vectors join the frozen-centroid buckets
-    without a rebuild, on both the plain and quantized layouts — a probe
-    after the append finds appended neighbors exactly as a full rebuild
-    with the same centroids would."""
-    vecs = clustered.select("vec_id", "embedding")
-    old = vecs.filter(F.col("vec_id") % 2 == 0)
-    new = vecs.filter(F.col("vec_id") % 2 == 1)
-    for quantized in (False, True):
-        path = str(tmp_path / f"ivf_{quantized}")
-        full = str(tmp_path / f"full_{quantized}")
-        similarity.write_ivf_index(old, path, n_centroids=8, seed=42,
-                                   quantized=quantized)
-        n = similarity.append_to_ivf_index(new, path)
-        assert n == new.count()
-        # rebuild-from-everything reference with the SAME centroids:
-        # train on `old` only (deterministic seed/sample) then append —
-        # i.e. compare against an index whose partitions hold the union
-        q = vecs.filter(F.col("vec_id").isin([0, 30]))
-        if quantized:
-            got = similarity.cosine_topk_ivf_quantized(spark, path, q,
-                                                       k=3, nprobe=2)
-        else:
-            got = similarity.cosine_topk_ivf_indexed(spark, path, q,
-                                                     k=3, nprobe=2)
-        rows = got.collect()
-        assert {r.query_id for r in rows} == {0, 30}
-        # odd (appended) ids are reachable as neighbors
-        assert any(r.neighbor_id % 2 == 1 for r in rows), rows
-        # quantized layout: doubles side table covers the union
-        if quantized:
-            dbl = spark.read.parquet(path + "/doubles")
-            assert dbl.count() == vecs.count()
-
-
-def test_ivf_index_auto_centroids(spark, clustered, tmp_path):
-    """n_centroids=None sizes the coarse quantizer at sqrt(corpus)
-    clamped to [16, 65536] — for the 100-vector fixture that is the
-    16 floor — and the index stays probe-correct."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "auto")
-    cents = similarity.write_ivf_index(vecs, path, n_centroids=None,
-                                       seed=42)
-    assert len(cents) == 16  # floor(sqrt(100)) = 10 -> clamped to 16
-    out = similarity.cosine_topk_ivf_indexed(
-        spark, path, vecs.filter(F.col("vec_id") == 0), k=3, nprobe=2)
-    assert out.count() == 3
-
-
 # --------------------------------------------------------------------------
-# round 12: broadcast centroid assignment, marker hygiene, file skipping
+# round 12: broadcast centroid assignment
 # --------------------------------------------------------------------------
 
 def test_centroid_topn_literal_broadcast_equivalence(spark, monkeypatch):
@@ -594,37 +414,6 @@ def test_centroid_topn_literal_broadcast_equivalence(spark, monkeypatch):
                for v in dl.values() if 41 in v and 42 in v)
 
 
-def test_ivf_index_past_literal_clamp_writes_and_probes(spark, tmp_path):
-    """A >=1024-centroid quantized index — four times the old 256 literal
-    clamp — is written through the broadcast-assignment path, lands one
-    directory per used bucket, and probes correctly: every query's
-    neighbors come back, cosines are exact doubles, and the selection
-    scan still carries the PartitionFilter (the pruning lever now scales
-    past 256 instead of saturating)."""
-    from cloudbrush_spark import plans
-    rng = random.Random(5)
-    rows = [(i, [rng.gauss(2.0 * (i % 10 == d), 0.5) for d in range(8)])
-            for i in range(3000)]
-    vecs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>").repartition(8)
-    path = str(tmp_path / "ivf1024")
-    cents = similarity.write_ivf_index(vecs, path, n_centroids=1024,
-                                       sample=3000, seed=42, quantized=True)
-    assert len(cents) == 1024
-    used = spark.read.parquet(path + "/vectors") \
-        .select("bucket").distinct().count()
-    assert used > 256  # the old clamp is genuinely exceeded
-    q = vecs.filter(F.col("vec_id") < 3)
-    _, sel = similarity.ivf_quantized_select(spark, path, q, k=3, nprobe=4)
-    plan = plans.explain_str(sel)
-    assert "PartitionFilters" in plan and "bucket" in \
-        plan.split("PartitionFilters", 1)[1][:200]
-    out = similarity.cosine_topk_ivf_quantized(spark, path, q, k=3, nprobe=4)
-    got = out.collect()
-    assert {r.query_id for r in got} == {0, 1, 2}
-    assert all(-1.0001 <= r.cosine <= 1.0001 for r in got)
-
-
 def test_ivf_centroids_distributed_kmeans_path(spark, monkeypatch):
     """Past CENTROID_DRIVER_KMEANS_MAX the training leaves the driver
     (Spark MLlib KMeans over the uniform sample) — forced low here; the
@@ -636,136 +425,6 @@ def test_ivf_centroids_distributed_kmeans_path(spark, monkeypatch):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = similarity.ivf_centroids(df, n_centroids=16, sample=300, seed=42)
     assert len(cents) == 16 and all(len(c) == 6 for c in cents)
-
-
-def test_doubles_side_table_files_hold_disjoint_id_ranges(spark, tmp_path):
-    """The /doubles side table is range-partitioned before the sorted
-    write (r12): files hold DISJOINT id ranges, so the winner re-rank's
-    In() pushdown skips whole files instead of probing row groups inside
-    every file.  Pinned at the layout level (per-file parquet min/max of
-    the id column) plus the probed-file count for a point query set."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-    rng = random.Random(9)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(2000)]
-    vecs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>").repartition(16)
-    path = str(tmp_path / "ivfq")
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "200")
-    try:
-        similarity.write_ivf_index(vecs, path, n_centroids=8, seed=42,
-                                   quantized=True)
-    finally:
-        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-    files = sorted(_glob.glob(path + "/doubles/*.parquet"))
-    assert len(files) >= 4, files
-    spans = []
-    for f in files:
-        ids = _pq.read_table(f, columns=["vec_id"])["vec_id"].to_pylist()
-        spans.append((min(ids), max(ids), f))
-    spans.sort()
-    for (lo1, hi1, _), (lo2, hi2, _) in zip(spans, spans[1:]):
-        assert hi1 < lo2, (spans,)  # disjoint, non-overlapping ranges
-    # a bounded winner set touches a strict subset of the files
-    winners = [5, 6, 7]
-    hit = [f for lo, hi, f in spans if any(lo <= w <= hi for w in winners)]
-    assert 0 < len(hit) < len(files)
-
-
-def _marker_names(path):
-    import os as _os
-    return sorted(n for n in _os.listdir(path)
-                  if n.startswith(("_appended_", "_appending_",
-                                   "_append_history_")))
-
-
-def test_append_markers_trailing_window_and_pruned_replay(
-        spark, clustered, tmp_path, monkeypatch):
-    """K+1 appends leave exactly K full markers plus ONE compact history
-    file (r12 — the rollup sink's trailing-window bound), and a replay
-    of a PRUNED batch is still a no-op (the pinned semantics: history
-    folds the pruned tokens, so replay detection never loses a batch)."""
-    monkeypatch.setattr(similarity, "APPEND_MARKER_KEEP", 3)
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs.filter(F.col("vec_id") < 20), path,
-                               n_centroids=4, seed=42, quantized=True)
-    batches = [vecs.filter((F.col("vec_id") >= 20 + 10 * i)
-                           & (F.col("vec_id") < 30 + 10 * i))
-               for i in range(4)]
-    for b in batches:
-        assert similarity.append_to_ivf_index(b, path) == 10
-    names = _marker_names(path)
-    full = [n for n in names if n.startswith("_appended_")]
-    hist = [n for n in names if n.startswith("_append_history_")]
-    assert len(full) == 3 and len(hist) == 1, names
-    before = spark.read.parquet(path + "/vectors").count()
-    # batch 0's marker was pruned into history: replay is STILL a no-op
-    assert similarity.append_to_ivf_index(batches[0], path) == 0
-    assert spark.read.parquet(path + "/vectors").count() == before
-
-
-def test_append_replay_noop_and_partial_append_fails_loudly(
-        spark, clustered, tmp_path):
-    """The append commit contract: an already-committed batch returns 0
-    and appends nothing; an intent marker without its commit marker (a
-    previous append died mid-write) fails LOUDLY instead of silently
-    double-appending."""
-    import os as _os
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs.filter(F.col("vec_id") < 50), path,
-                               n_centroids=4, seed=42, quantized=True)
-    batch = vecs.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 60))
-    assert similarity.append_to_ivf_index(batch, path) == 10
-    before = spark.read.parquet(path + "/vectors").count()
-    assert similarity.append_to_ivf_index(batch, path) == 0  # replay
-    assert spark.read.parquet(path + "/vectors").count() == before
-    # simulate a died-mid-write batch: intent marker, no commit marker
-    tok = [n for n in _os.listdir(path) if n.startswith("_appended_")][0]
-    _os.rename(_os.path.join(path, tok),
-               _os.path.join(path, tok.replace("_appended_", "_appending_")))
-    # r14: the message now leads with the still-in-flight possibility
-    # (an intent marker is ambiguous between a live writer and a crash)
-    with pytest.raises(RuntimeError, match="intent marker without"):
-        similarity.append_to_ivf_index(batch, path)
-
-
-def test_append_token_covers_vector_content(spark, clustered, tmp_path):
-    """Same ids, re-embedded vectors => a NEW batch, not a replay (r12 —
-    the token digests (id, vector) rows, not the id set)."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs.filter(F.col("vec_id") < 50), path,
-                               n_centroids=4, seed=42, quantized=True)
-    batch = vecs.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 55))
-    assert similarity.append_to_ivf_index(batch, path) == 5
-    reembedded = batch.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x * 1.5).alias("embedding"))
-    assert similarity.append_to_ivf_index(reembedded, path) == 5
-
-
-def test_rebuild_clears_append_markers(spark, clustered, tmp_path):
-    """write_ivf_index at an existing root WIPES append markers and the
-    history (r12): after the documented remedy for drift/partial appends
-    — a rebuild — re-appending a previously appended batch really
-    appends instead of silently returning 0 with the rows missing."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    base = vecs.filter(F.col("vec_id") < 50)
-    batch = vecs.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 60))
-    similarity.write_ivf_index(base, path, n_centroids=4, seed=42,
-                               quantized=True)
-    assert similarity.append_to_ivf_index(batch, path) == 10
-    # rebuild from base only — the appended rows are gone from /vectors
-    similarity.write_ivf_index(base, path, n_centroids=4, seed=42,
-                               quantized=True)
-    assert _marker_names(path) == []
-    assert similarity.append_to_ivf_index(batch, path) == 10
-    got = spark.read.parquet(path + "/vectors").count()
-    assert got == 60
 
 
 def test_broadcast_centroid_cache_reused_and_bounded(spark, monkeypatch):
@@ -789,33 +448,8 @@ def test_broadcast_centroid_cache_reused_and_bounded(spark, monkeypatch):
     assert list(b0b.value[0][0]) == [0.0] * 4
 
 
-def test_append_aligns_vector_type_with_index(spark, clustered, tmp_path):
-    """A float crawl appended to a double index is CAST to the index's
-    stored element type before anything else (r12) — appending raw
-    would leave the bucket directories with two parquet element types
-    and break every later scan.  Exercises the real CLI shape: the
-    driver's embeddings fixtures store array<float>."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs.filter(F.col("vec_id") < 50), path,
-                               n_centroids=4, seed=42, quantized=True)
-    crawl = (vecs.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 60))
-             .select("vec_id", F.transform(
-                 "embedding", lambda x: x.cast("float")).alias("embedding")))
-    assert dict(crawl.dtypes)["embedding"] == "array<float>"
-    assert similarity.append_to_ivf_index(crawl, path) == 10
-    # every scan of the index still works, and the appended rows rank
-    dbl = spark.read.parquet(path + "/doubles")
-    assert dict(dbl.dtypes)["embedding"] == "array<double>"
-    assert dbl.count() == 60
-    out = similarity.cosine_topk_ivf_quantized(
-        spark, path, vecs.filter(F.col("vec_id") == 55), k=3, nprobe=4)
-    assert out.count() == 3
-
-
 # --------------------------------------------------------------------------
-# round 13: auto-nprobe, legacy-token replay, appender enforcement,
-# compaction
+# round 13: auto-nprobe, broadcast-cache thread safety
 # --------------------------------------------------------------------------
 
 def test_auto_nprobe_rule():
@@ -829,210 +463,6 @@ def test_auto_nprobe_rule():
     assert similarity.auto_nprobe(447) == 21
     assert similarity.auto_nprobe(1024) == 32
     assert similarity.auto_nprobe(30000) == 173
-
-
-@pytest.fixture(scope="module")
-def bigk_index(spark, tmp_path_factory):
-    """A >=1024-centroid quantized index over a 3000-vector clustered
-    corpus (10 soft clusters, 8-d) — the fixture every big-K recall pin
-    probes.  Module-scoped: training 1024 centroids once is the
-    expensive part."""
-    rng = random.Random(5)
-    rows = [(i, [rng.gauss(2.0 * (i % 10 == d), 0.5) for d in range(8)])
-            for i in range(3000)]
-    vecs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>").repartition(8)
-    path = str(tmp_path_factory.mktemp("bigk") / "ivf1024")
-    similarity.write_ivf_index(vecs, path, n_centroids=1024,
-                               sample=3000, seed=42, quantized=True)
-    return path, vecs
-
-
-def _recall_vs_bruteforce(spark, path, vecs, q, k, nprobe):
-    truth = similarity.cosine_topk_bruteforce(vecs, q, k=k)
-    t = {}
-    for r in truth.collect():
-        t.setdefault(r.query_id, set()).add(r.neighbor_id)
-    got = similarity.cosine_topk_ivf_quantized(spark, path, q, k=k,
-                                               nprobe=nprobe)
-    g = {}
-    for r in got.collect():
-        g.setdefault(r.query_id, set()).add(r.neighbor_id)
-    hits = sum(len(t[qid] & g.get(qid, set())) for qid in t)
-    return hits / sum(len(s) for s in t.values())
-
-
-def test_ivfq_recall_at_big_k_auto_nprobe(spark, bigk_index):
-    """THE r13 recall contract at big K: on a >=1024-centroid index the
-    default (auto-scaled) nprobe holds recall@5 where the r12 fixed
-    default nprobe=2 craters — every prior recall pin ran at 16
-    centroids, which is exactly how the nprobe/K coupling stayed
-    unmeasured.  Floors pinned under the measured values (deterministic
-    fixture/seeds); the 16->447->1024 sweep lives in
-    probes/ivfq_autonprobe_recall.json."""
-    path, vecs = bigk_index
-    q = vecs.filter(F.col("vec_id") % 100 == 7)  # 30 queries, all clusters
-    auto = _recall_vs_bruteforce(spark, path, vecs, q, k=5, nprobe=None)
-    fixed = _recall_vs_bruteforce(spark, path, vecs, q, k=5, nprobe=2)
-    # floor at 0.8: measured ~0.9 on this deterministic fixture — 0.6
-    # guarded only the crater (fixed-2 reads ~0.25) and would let a
-    # 0.9 -> 0.65 real regression through (r13 verdict #4)
-    assert auto >= 0.8, (auto, fixed)
-    assert auto > fixed + 0.1, (auto, fixed)
-
-
-def test_append_legacy_id_only_token_is_replay(spark, clustered, tmp_path):
-    """A batch committed PRE-r12 left markers under the legacy id-only
-    token format; replaying it against the r13 appender must still be a
-    no-op (advisor finding: checking only the content-bearing token
-    would silently double-append every pre-r12 batch)."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs.filter(F.col("vec_id") < 50), path,
-                               n_centroids=4, seed=42, quantized=True)
-    # simulate a PRE-r14 index: no _format stamp (r14 indexes are born
-    # format-2 and skip the legacy check entirely — pinned separately)
-    import os as _os
-    _os.remove(f"{path}/_format")
-    batch = vecs.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 60))
-    row = batch.agg(
-        F.sum(F.xxhash64(F.col("vec_id"))
-              .bitwiseAND(F.lit(0xFFFFFFFF))).alias("h"),
-        F.count(F.lit(1)).alias("n")).collect()[0]
-    legacy = f"{int(row.h):x}_{int(row.n)}"
-    open(f"{path}/_appended_{legacy}", "w").close()
-    before = spark.read.parquet(path + "/vectors").count()
-    assert similarity.append_to_ivf_index(batch, path) == 0
-    assert spark.read.parquet(path + "/vectors").count() == before
-    # ... and a legacy token folded into the pruned HISTORY also replays
-    import os as _os
-    _os.remove(f"{path}/_appended_{legacy}")
-    with open(f"{path}/_append_history_1", "w") as fh:
-        fh.write(legacy + "\n")
-    assert similarity.append_to_ivf_index(batch, path) == 0
-
-
-def test_exclusive_create_refuses_existing(spark, tmp_path):
-    """The mutual-exclusion primitive both the appender and compactor
-    build on: create(overwrite=False) on an existing marker raises the
-    caller's message instead of truncating the other writer's marker."""
-    from cloudbrush_spark.sources.corpus import _hfs
-    jvm, _, fs, root = _hfs(spark, str(tmp_path))
-    marker = jvm.org.apache.hadoop.fs.Path(root, "_m")
-    similarity._exclusive_create(fs, marker, "first take")
-    with pytest.raises(RuntimeError, match="lost race"):
-        similarity._exclusive_create(fs, marker, "lost race")
-
-
-def test_failed_rebuild_keeps_markers(spark, clustered, tmp_path,
-                                      monkeypatch):
-    """Markers are cleared AFTER the rebuild's overwrites land (r13,
-    advisor finding): a rebuild that dies before writing leaves the OLD
-    index live WITH its replay protection — clearing first would let a
-    replayed append double-append into the surviving old index."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    base = vecs.filter(F.col("vec_id") < 50)
-    similarity.write_ivf_index(base, path, n_centroids=4, seed=42,
-                               quantized=True)
-    batch = vecs.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 60))
-    assert similarity.append_to_ivf_index(batch, path) == 10
-    def boom(*a, **k):
-        raise RuntimeError("simulated mid-rebuild failure")
-    monkeypatch.setattr(similarity, "quantize_embeddings", boom)
-    with pytest.raises(RuntimeError, match="simulated"):
-        similarity.write_ivf_index(base, path, n_centroids=4, seed=42,
-                                   quantized=True)
-    monkeypatch.undo()
-    # old index + markers both survive: replay is still a no-op
-    assert spark.read.parquet(path + "/vectors").count() == 60
-    assert similarity.append_to_ivf_index(batch, path) == 0
-
-
-def test_compact_index_bounds_files_preserves_probes_and_replay(
-        spark, clustered, tmp_path):
-    """compact_index after N appends: file count drops to ~one per
-    bucket dir (+ the doubles budget), probe results are IDENTICAL,
-    replay of every compacted-away batch is still a no-op, and new
-    appends keep working — the crawl-per-day file-growth fix (r13)."""
-    import glob as _glob
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs.filter(F.col("vec_id") < 40), path,
-                               n_centroids=4, seed=42, quantized=True)
-    batches = [vecs.filter((F.col("vec_id") >= 40 + 10 * i)
-                           & (F.col("vec_id") < 50 + 10 * i))
-               for i in range(5)]
-    for b in batches:
-        assert similarity.append_to_ivf_index(b, path) == 10
-    q = vecs.filter(F.col("vec_id") < 3)
-    def probe():
-        return sorted(
-            (r.query_id, r.neighbor_id, r.rank, round(r.cosine, 9))
-            for r in similarity.cosine_topk_ivf_quantized(
-                spark, path, q, k=5, nprobe=4).collect())
-    want = probe()
-    nvec = spark.read.parquet(path + "/vectors").count()
-    files_of = lambda sub: [f for f in _glob.glob(
-        path + f"/{sub}/**/*.parquet", recursive=True)]
-    before_v, before_d = len(files_of("vectors")), len(files_of("doubles"))
-    got_before = similarity.compact_index(spark, path, files=2)
-    assert got_before == before_v + before_d
-    buckets = len(_glob.glob(path + "/vectors/bucket=*"))
-    assert len(files_of("vectors")) == buckets < before_v
-    assert len(files_of("doubles")) == 2 < before_d
-    # no marker/tmp litter, data identical, probe identical
-    assert not _glob.glob(path + "/*_compact_*")
-    import os as _os
-    assert not _os.path.exists(path + "/_compacting")
-    assert spark.read.parquet(path + "/vectors").count() == nvec
-    assert probe() == want
-    # replay of a compacted-away batch: still a no-op
-    assert similarity.append_to_ivf_index(batches[0], path) == 0
-    # and a genuinely new batch still appends
-    new = vecs.filter(F.col("vec_id") >= 90)
-    assert similarity.append_to_ivf_index(new, path) == new.count()
-
-
-def test_compact_index_interlocks_and_repair(spark, clustered, tmp_path):
-    """The _compacting marker excludes appenders and concurrent
-    compactors; in-flight append intents abort compaction; repair=True
-    finishes a crashed swap (live dir missing, complete tmp present)."""
-    import os as _os
-    import shutil as _sh
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs.filter(F.col("vec_id") < 50), path,
-                               n_centroids=4, seed=42, quantized=True)
-    batch = vecs.filter(F.col("vec_id") >= 50)
-    # 1) _compacting blocks appends and other compactors
-    open(path + "/_compacting", "w").close()
-    with pytest.raises(RuntimeError, match="compaction is in progress"):
-        similarity.append_to_ivf_index(batch, path)
-    # the Dekker back-off released the appender's own intent marker —
-    # a leftover would read as died-mid-write on the next attempt
-    assert not [n for n in _os.listdir(path)
-                if n.startswith("_appending_")]
-    with pytest.raises(RuntimeError, match="already in progress"):
-        similarity.compact_index(spark, path)
-    _os.remove(path + "/_compacting")
-    # 2) an in-flight append intent aborts compaction (marker released)
-    open(path + "/_appending_deadbeef_1", "w").close()
-    with pytest.raises(RuntimeError, match="in-flight append"):
-        similarity.compact_index(spark, path)
-    assert not _os.path.exists(path + "/_compacting")
-    _os.remove(path + "/_appending_deadbeef_1")
-    # 3) crashed mid-swap: live /vectors renamed aside, complete tmp
-    #    present, marker held -> repair=True finishes the swap
-    want = spark.read.parquet(path + "/vectors").count()
-    _sh.copytree(path + "/vectors", path + "/vectors_compact_tmp")
-    _os.rename(path + "/vectors", path + "/vectors_compact_old")
-    open(path + "/_compacting", "w").close()
-    with pytest.raises(RuntimeError, match="repair=True"):
-        similarity.compact_index(spark, path)
-    similarity.compact_index(spark, path, repair=True)
-    assert spark.read.parquet(path + "/vectors").count() == want
-    assert not _os.path.exists(path + "/_compacting")
 
 
 def test_broadcast_centroid_cache_thread_hammer(spark, monkeypatch):
@@ -1065,827 +495,3 @@ def test_broadcast_centroid_cache_thread_hammer(spark, monkeypatch):
         t.join()
     assert not errs, errs
     assert len(similarity._centroid_bc_cache) <= 2
-
-
-def test_index_stats_snapshot(spark, clustered, tmp_path):
-    """index_stats (r13): the measurement behind the module's own
-    maintenance guidance — bucket histogram + skew (frozen-centroid
-    drift), file counts (compaction cadence), marker/intent state
-    (writer-death detection)."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs.filter(F.col("vec_id") < 60), path,
-                               n_centroids=4, seed=42, quantized=True)
-    assert similarity.append_to_ivf_index(
-        vecs.filter(F.col("vec_id") >= 60), path) == 40
-    st = similarity.index_stats(spark, path)
-    assert st["n_centroids"] == 4
-    assert 1 <= st["buckets_used"] <= 4
-    assert st["rows"] == 100
-    assert st["bucket_rows_max"] >= st["bucket_rows_p50"] \
-        >= st["bucket_rows_min"] >= 1
-    assert st["bucket_skew"] >= 1.0
-    assert st["quantized"] is True
-    assert st["data_files"] >= st["buckets_used"]
-    assert st["files_per_bucket"] >= 1.0
-    assert st["append_markers"] == 1 and st["history_batches"] == 0
-    assert st["in_flight_intents"] == [] and st["compacting"] is False
-    # a dead writer's intent and a compaction marker both surface
-    open(path + "/_appending_feed_9", "w").close()
-    open(path + "/_compacting", "w").close()
-    st2 = similarity.index_stats(spark, path)
-    assert st2["in_flight_intents"] == ["_appending_feed_9"]
-    assert st2["compacting"] is True
-
-
-def test_all_bucket_probe_skips_probed_union_prejob(spark, clustered,
-                                                    tmp_path):
-    """r14 (verdict #5): when nprobe >= n_centroids every bucket is
-    probed by construction, so the probed-union pre-job — a full Spark
-    job running distinct().collect() over the exploded query set — must
-    be skipped.  Both probe constructors run their driver-side collects
-    eagerly, so pin via job-group job counts at CONSTRUCTION time: the
-    all-bucket shape launches strictly fewer jobs than the pruned shape
-    (whose extra jobs are the pre-job), and the all-bucket probe's
-    results agree with brute force."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "ivfq8")
-    similarity.write_ivf_index(vecs, path, n_centroids=8, seed=42,
-                               quantized=True)
-    q = vecs.filter(F.col("vec_id") < 10)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def jobs_during(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup("", "")
-        return out, len(tracker.getJobIdsForGroup(group))
-
-    # parquet reads launch their own listing/footer jobs, so pin the
-    # RELATIVE count: the all-bucket shape must launch strictly fewer
-    # construction jobs than the pruned shape (whose extra jobs are
-    # exactly the probed-union pre-job)
-    _, n_all = jobs_during(
-        "pin_allbucket",
-        lambda: similarity.ivf_quantized_select(spark, path, q, k=3,
-                                                nprobe=8))
-    _, n_pruned = jobs_during(
-        "pin_pruned",
-        lambda: similarity.ivf_quantized_select(spark, path, q, k=3,
-                                                nprobe=2))
-    assert n_all < n_pruned, (n_all, n_pruned)
-    # same for the non-quantized indexed path
-    path2 = str(tmp_path / "ivf8")
-    similarity.write_ivf_index(vecs, path2, n_centroids=8, seed=42)
-    _, n_all2 = jobs_during(
-        "pin_allbucket2",
-        lambda: similarity.cosine_topk_ivf_indexed(spark, path2, q, k=3,
-                                                   nprobe=8))
-    _, n_pruned2 = jobs_during(
-        "pin_pruned2",
-        lambda: similarity.cosine_topk_ivf_indexed(spark, path2, q, k=3,
-                                                   nprobe=2))
-    assert n_all2 < n_pruned2, (n_all2, n_pruned2)
-    # the short-circuit must not change results: all-bucket probe ==
-    # brute force over the corpus (every bucket scanned)
-    got = similarity.cosine_topk_ivf_quantized(spark, path, q, k=3,
-                                               nprobe=8)
-    want = similarity.cosine_topk_bruteforce(vecs, q, k=3)
-    g = {(r.query_id, r.neighbor_id) for r in got.collect()}
-    w = {(r.query_id, r.neighbor_id) for r in want.collect()}
-    # int8 selection may swap near-ties; require >=90% agreement and
-    # identical query coverage
-    assert len(g & w) >= 0.9 * len(w), (len(g & w), len(w))
-    assert {a for a, _ in g} == {a for a, _ in w}
-
-
-def test_exclusive_create_warns_on_non_atomic_scheme():
-    """r14 (verdict #7): on schemes where create(overwrite=False) is
-    an exists-check + create (plain S3A), _exclusive_create must WARN
-    about the residual race instead of only documenting it; hdfs and
-    file schemes stay silent."""
-
-    class _Uri:
-        def __init__(self, scheme):
-            self._s = scheme
-
-        def getScheme(self):
-            return self._s
-
-        def getPath(self):
-            return "/never-used"
-
-    class _Marker:
-        def __init__(self, scheme):
-            self._u = _Uri(scheme)
-
-        def toUri(self):
-            return self._u
-
-    class _Stream:
-        def close(self):
-            pass
-
-    class _FS:
-        def create(self, marker, overwrite):
-            assert overwrite is False
-            return _Stream()
-
-    import warnings as _w
-
-    with pytest.warns(RuntimeWarning, match="best-effort"):
-        similarity._exclusive_create(_FS(), _Marker("s3a"), "boom")
-    with _w.catch_warnings():
-        _w.simplefilter("error")
-        similarity._exclusive_create(_FS(), _Marker("hdfs"), "boom")
-
-
-def test_fresh_index_ignores_legacy_token_collision(spark, clustered,
-                                                    tmp_path):
-    """r14 (advisor finding): a post-r14 index is stamped format-2, so
-    the appender never consults legacy id-only tokens — a planted
-    legacy marker (the collision a re-embedded batch would produce)
-    must NOT suppress the append."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs.filter(F.col("vec_id") < 50), path,
-                               n_centroids=4, seed=42, quantized=True)
-    assert similarity._index_format(spark, path) == similarity.INDEX_FORMAT
-    batch = vecs.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 60))
-    row = batch.agg(
-        F.sum(F.xxhash64(F.col("vec_id"))
-              .bitwiseAND(F.lit(0xFFFFFFFF))).alias("h"),
-        F.count(F.lit(1)).alias("n")).collect()[0]
-    open(f"{path}/_appended_{int(row.h):x}_{int(row.n)}", "w").close()
-    assert similarity.append_to_ivf_index(batch, path) == 10
-
-
-def test_legacy_suppression_warns(spark, clustered, tmp_path):
-    """On a pre-r14 index (no _format stamp) a LEGACY id-only match is
-    ambiguous — same ids re-embedded digest to the same legacy token —
-    so the suppressed append must be observable via a RuntimeWarning
-    (r14, advisor finding: the drop used to be silent)."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs.filter(F.col("vec_id") < 50), path,
-                               n_centroids=4, seed=42, quantized=True)
-    import os as _os
-    _os.remove(f"{path}/_format")
-    batch = vecs.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 60))
-    row = batch.agg(
-        F.sum(F.xxhash64(F.col("vec_id"))
-              .bitwiseAND(F.lit(0xFFFFFFFF))).alias("h"),
-        F.count(F.lit(1)).alias("n")).collect()[0]
-    legacy = f"{int(row.h):x}_{int(row.n)}"
-    open(f"{path}/_appended_{legacy}", "w").close()
-    with pytest.warns(RuntimeWarning, match="LEGACY id-only marker"):
-        assert similarity.append_to_ivf_index(batch, path) == 0
-    # ... and the history-folded legacy path warns too
-    _os.remove(f"{path}/_appended_{legacy}")
-    with open(f"{path}/_append_history_1", "w") as fh:
-        fh.write(legacy + "\n")
-    with pytest.warns(RuntimeWarning, match="LEGACY id-only marker"):
-        assert similarity.append_to_ivf_index(batch, path) == 0
-
-
-def test_rebuilding_sentinel_blocks_appends(spark, clustered, tmp_path,
-                                            monkeypatch):
-    """r14 (advisor finding): a rebuild that dies DURING its destructive
-    writes leaves the _rebuilding sentinel, and appends against that
-    index refuse loudly instead of writing into (or being silently
-    dropped by the markers of) a half-rebuilt index.  A completed
-    rebuild clears the sentinel and appends flow again."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    base = vecs.filter(F.col("vec_id") < 50)
-    similarity.write_ivf_index(base, path, n_centroids=4, seed=42,
-                               quantized=True)
-    import os as _os
-    assert not _os.path.exists(f"{path}/_rebuilding")
-    batch = vecs.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 60))
-    # simulate a crash DURING the writes: fail the marker clear that
-    # runs after the overwrites (everything before it is the write
-    # phase; the sentinel must survive the crash)
-    def boom(*a, **k):
-        raise RuntimeError("simulated crash after overwrites")
-    monkeypatch.setattr(similarity, "_clear_append_markers", boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        similarity.write_ivf_index(base, path, n_centroids=4, seed=42,
-                                   quantized=True)
-    monkeypatch.undo()
-    assert _os.path.exists(f"{path}/_rebuilding")
-    with pytest.raises(RuntimeError, match="_rebuilding"):
-        similarity.append_to_ivf_index(batch, path)
-    # re-running the rebuild to completion heals the index
-    similarity.write_ivf_index(base, path, n_centroids=4, seed=42,
-                               quantized=True)
-    assert not _os.path.exists(f"{path}/_rebuilding")
-    assert similarity.append_to_ivf_index(batch, path) == 10
-
-
-def test_compact_repair_on_gone_vectors_reports_unrecoverable(
-        spark, clustered, tmp_path):
-    """r14 (advisor finding): repair=True on a root whose /vectors and
-    all tmp/old copies are gone must raise the clear 'rebuild it' error
-    — and keep raising IT on retry — instead of re-taking _compacting,
-    failing the read, and wedging every later attempt on the leftover
-    marker."""
-    import shutil
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs, path, n_centroids=4, seed=42,
-                               quantized=True)
-    shutil.rmtree(f"{path}/vectors")
-    for _ in range(2):  # retries must not wedge on _compacting
-        with pytest.raises(RuntimeError, match="rebuild it"):
-            similarity.compact_index(spark, path, repair=True)
-    import os as _os
-    assert not _os.path.exists(f"{path}/_compacting")
-
-
-def _drifted_index(spark, tmp_path, quantized=True):
-    """Index trained on ONE cluster, then three unseen clusters appended
-    — the frozen-centroid drift shape: appended mass piles into few
-    buckets and bucket_skew climbs."""
-    rng = random.Random(23)
-
-    def cluster(c, n, base):
-        ctr = [10.0 * (1 if i == c else 0) for i in range(8)]
-        return [(base + j, [x + rng.gauss(0, 0.5) for x in ctr])
-                for j in range(n)]
-
-    train = spark.createDataFrame(
-        cluster(0, 100, 0), "vec_id long, embedding array<double>")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(train, path, n_centroids=8, seed=42,
-                               quantized=quantized)
-    drift_rows = (cluster(1, 150, 1000) + cluster(2, 150, 2000)
-                  + cluster(3, 150, 3000))
-    drift = spark.createDataFrame(
-        drift_rows, "vec_id long, embedding array<double>")
-    assert similarity.append_to_ivf_index(drift, path) == 450
-    allv = train.unionByName(drift)
-    return path, allv, drift
-
-
-def test_split_fat_buckets_heals_drifted_index(spark, tmp_path):
-    """r14 (verdict #3): the remedy index_stats.bucket_skew measures but
-    nothing pulled short of a full rebuild — split over-skewed buckets
-    in place.  Pins: skew drops, centroid count grows (auto_nprobe
-    scales with it), probe at the auto default matches brute force,
-    replay of pre-split batches is still a no-op, and post-split
-    appends keep flowing."""
-    path, allv, drift = _drifted_index(spark, tmp_path)
-    before = similarity.index_stats(spark, path)
-    assert before["bucket_skew"] > 3.0  # the drift is real
-    summary = similarity.split_fat_buckets(spark, path,
-                                           skew_threshold=3.0, seed=7)
-    assert summary["split_buckets"], summary
-    assert summary["n_centroids_after"] > summary["n_centroids_before"]
-    after = similarity.index_stats(spark, path)
-    assert after["bucket_skew"] < before["bucket_skew"], (before, after)
-    assert after["rows"] == before["rows"]  # nothing lost or duplicated
-    # centroid ids must stay contiguous 0..K-1 (probes resolve buckets
-    # positionally)
-    cent = sorted(r.bucket for r in
-                  spark.read.parquet(path + "/centroids").collect())
-    assert cent == list(range(len(cent)))
-    # probe at the SHIPPED default (nprobe=None -> auto) matches brute
-    # force on drifted-cluster queries
-    q = allv.filter(F.col("vec_id") % 50 == 3)
-    rec = _recall_vs_bruteforce(spark, path, allv, q, k=5, nprobe=None)
-    assert rec >= 0.85, rec
-    # replay of the pre-split drift batch is STILL a no-op (markers and
-    # history untouched by the split)
-    assert similarity.append_to_ivf_index(drift, path) == 0
-    # and new appends keep working against the grown centroid set
-    extra = spark.createDataFrame(
-        [(9000 + i, [5.0 + 0.01 * i] * 8) for i in range(10)],
-        "vec_id long, embedding array<double>")
-    assert similarity.append_to_ivf_index(extra, path) == 10
-
-
-def test_split_fat_buckets_noop_and_interlocks(spark, clustered, tmp_path):
-    """A healthy (freshly k-means'd) index has nothing to split — the
-    summary says so and the index is untouched; the split refuses on a
-    concurrent structural rewrite and on in-flight append intents."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs, path, n_centroids=4, seed=42,
-                               quantized=True)
-    before = sorted(r.vec_id for r in
-                    spark.read.parquet(path + "/vectors").collect())
-    s = similarity.split_fat_buckets(spark, path, skew_threshold=4.0)
-    assert s["split_buckets"] == []
-    assert s["n_centroids_after"] == s["n_centroids_before"] == 4
-    assert sorted(r.vec_id for r in
-                  spark.read.parquet(path + "/vectors").collect()) == before
-    import os as _os
-    assert not _os.path.exists(f"{path}/_compacting")
-    # interlock: a live _compacting marker refuses the split
-    open(f"{path}/_compacting", "w").close()
-    with pytest.raises(RuntimeError, match="structural rewrite"):
-        similarity.split_fat_buckets(spark, path)
-    _os.remove(f"{path}/_compacting")
-    # interlock: an in-flight append intent refuses the split
-    open(f"{path}/_appending_deadbeef_5", "w").close()
-    with pytest.raises(RuntimeError, match="in-flight append intent"):
-        similarity.split_fat_buckets(spark, path)
-    _os.remove(f"{path}/_appending_deadbeef_5")
-    assert not _os.path.exists(f"{path}/_compacting")
-
-
-def test_split_fat_buckets_crash_repair(spark, tmp_path, monkeypatch):
-    """A split that dies at the commit point (centroid swap) leaves the
-    _compacting marker; repair=True restores a consistent index —
-    either rolled back or rolled forward — with no rows lost and probes
-    matching brute force."""
-    path, allv, drift = _drifted_index(spark, tmp_path)
-    rows_before = spark.read.parquet(path + "/vectors").count()
-
-    def boom(fs, hpath, root, name):
-        raise RuntimeError("simulated crash at the centroid swap")
-    monkeypatch.setattr(similarity, "_swap_compacted", boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        similarity.split_fat_buckets(spark, path, skew_threshold=3.0,
-                                     seed=7)
-    monkeypatch.undo()
-    import os as _os
-    assert _os.path.exists(f"{path}/_compacting")  # repair required
-    # appends refuse while the crashed split's marker stands
-    with pytest.raises(RuntimeError, match="compaction is in progress"):
-        similarity.append_to_ivf_index(
-            spark.createDataFrame([(7777, [1.0] * 8)],
-                                  "vec_id long, embedding array<double>"),
-            path)
-    s = similarity.split_fat_buckets(spark, path, skew_threshold=3.0,
-                                     seed=7, repair=True)
-    assert not _os.path.exists(f"{path}/_compacting")
-    assert spark.read.parquet(path + "/vectors").count() == rows_before
-    assert s["split_buckets"]  # the re-run completed the split
-    q = allv.filter(F.col("vec_id") % 50 == 3)
-    rec = _recall_vs_bruteforce(spark, path, allv, q, k=5, nprobe=None)
-    assert rec >= 0.85, rec
-    assert similarity.append_to_ivf_index(drift, path) == 0  # replay
-
-
-def test_split_fat_buckets_plain_layout_and_unsplittable_mass(
-        spark, tmp_path):
-    """The split works on the plain (non-quantized) layout, and a
-    mass-duplicate fat bucket (one vector repeated — k-means cannot
-    separate it) is left as-is with no new centroid ids allocated."""
-    rows = [(i, [1.0, 2.0, 3.0, 4.0, 1.0, 2.0, 3.0, 4.0])
-            for i in range(200)]  # 200 identical vectors
-    rng = random.Random(9)
-    rows += [(1000 + i, [rng.gauss(-5, 0.3) for _ in range(8)])
-             for i in range(20)]
-    vecs = spark.createDataFrame(rows,
-                                 "vec_id long, embedding array<double>")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs, path, n_centroids=4, seed=42,
-                               quantized=False)
-    s = similarity.split_fat_buckets(spark, path, skew_threshold=2.0)
-    # whatever k-means did with the duplicate mass, the index stays
-    # consistent: contiguous centroid ids, no rows lost, probes exact
-    cent = sorted(r.bucket for r in
-                  spark.read.parquet(path + "/centroids").collect())
-    assert cent == list(range(len(cent)))
-    assert spark.read.parquet(path + "/vectors").count() == 220
-    assert s["n_centroids_after"] == len(cent)
-    q = vecs.filter(F.col("vec_id").isin([0, 1000, 1001]))
-    got = similarity.cosine_topk_ivf_indexed(spark, path, q, k=3,
-                                             nprobe=None)
-    assert got.select("query_id").distinct().count() == 3
-
-
-def _thin_bucket_index(spark, tmp_path, quantized=True):
-    """An over-provisioned index: two real clusters plus three extreme
-    outliers, K=8 — k-means gives the outliers near-singleton lists, so
-    the index carries thin buckets a merge should fold away."""
-    rng = random.Random(31)
-
-    def cluster(sign, n, base):
-        return [(base + j, [sign * 10.0 + rng.gauss(0, 0.5)
-                            for _ in range(8)]) for j in range(n)]
-
-    rows = cluster(1, 100, 0) + cluster(-1, 100, 500)
-    rows += [(900 + i, [100.0 + 7.0 * i if d == i else 0.0
-                        for d in range(8)]) for i in range(3)]
-    vecs = spark.createDataFrame(rows,
-                                 "vec_id long, embedding array<double>")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs, path, n_centroids=8, seed=42,
-                               quantized=quantized)
-    return path, vecs
-
-
-def test_merge_small_buckets_folds_thin_buckets(spark, tmp_path):
-    """The counterpart of the split: thin buckets merge into their
-    nearest surviving neighbor by metadata moves only.  Pins: K drops
-    but never below the floor, centroid ids stay contiguous (probes are
-    positional), no rows lost, probes at the auto default keep matching
-    brute force, replay of committed batches is still a no-op, and
-    appends keep flowing against the renumbered centroid set."""
-    path, vecs = _thin_bucket_index(spark, tmp_path)
-    before = similarity.index_stats(spark, path)
-    s = similarity.merge_small_buckets(spark, path, small_threshold=3.0,
-                                       k_floor=2)
-    assert s["merged_buckets"], s
-    assert s["n_centroids_after"] < s["n_centroids_before"]
-    assert s["n_centroids_after"] >= 2
-    after = similarity.index_stats(spark, path)
-    assert after["rows"] == before["rows"]
-    cent = sorted(r.bucket for r in
-                  spark.read.parquet(path + "/centroids").collect())
-    assert cent == list(range(s["n_centroids_after"]))
-    # every vector row's bucket id resolves inside the new centroid set
-    mx = spark.read.parquet(path + "/vectors") \
-        .agg(F.max("bucket")).collect()[0][0]
-    assert mx < s["n_centroids_after"]
-    q = vecs.filter(F.col("vec_id") % 40 == 1)
-    rec = _recall_vs_bruteforce(spark, path, vecs, q, k=5, nprobe=None)
-    assert rec >= 0.85, rec
-    # marker cleanliness + appends against the renumbered index
-    import os as _os
-    assert not _os.path.exists(f"{path}/_compacting")
-    assert not _os.path.exists(f"{path}/_merge_plan")
-    extra = spark.createDataFrame(
-        [(5000 + i, [5.0 - 0.01 * i] * 8) for i in range(10)],
-        "vec_id long, embedding array<double>")
-    assert similarity.append_to_ivf_index(extra, path) == 10
-    assert similarity.append_to_ivf_index(extra, path) == 0  # replay
-
-
-def test_merge_small_buckets_weighted_centroid_and_floor(spark, tmp_path):
-    """The absorber's centroid moves to the row-count-weighted mean of
-    itself and everything it absorbed; k_floor stops the merge (the
-    sqrt rule by default, explicit floors win)."""
-    import numpy as np
-    path, vecs = _thin_bucket_index(spark, tmp_path, quantized=False)
-    cent0 = {r.bucket: np.array(r.centroid) for r in
-             spark.read.parquet(path + "/centroids").collect()}
-    counts0 = {r.bucket: r.n for r in
-               spark.read.parquet(path + "/vectors")
-               .groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-               .collect()}
-    counts0 = {b: counts0.get(b, 0) for b in cent0}
-    # floor at the current K: nothing may merge
-    s = similarity.merge_small_buckets(spark, path, small_threshold=3.0,
-                                       k_floor=len(cent0))
-    assert s["merged_buckets"] == []
-    assert s["n_centroids_after"] == len(cent0)
-    # now merge for real and check one absorber's weighted mean
-    s = similarity.merge_small_buckets(spark, path, small_threshold=3.0,
-                                       k_floor=2)
-    assert s["merged_buckets"]
-    cent1 = {r.bucket: np.array(r.centroid) for r in
-             spark.read.parquet(path + "/centroids").collect()}
-    by_absorber = {}
-    for m in s["merged_buckets"]:
-        by_absorber.setdefault(m["into"], []).append(m["bucket"])
-    merged_set = {m["bucket"] for m in s["merged_buckets"]}
-    survivors = sorted(b for b in cent0 if b not in merged_set)
-    renum = {old: i for i, old in enumerate(survivors)}
-    for a, ts in by_absorber.items():
-        w = counts0[a]
-        acc = cent0[a] * w
-        for t in ts:
-            acc = acc + cent0[t] * counts0[t]
-            w += counts0[t]
-        expect = acc / w if w else cent0[a]
-        assert np.allclose(cent1[renum[a]], expect), (a, ts)
-    # untouched survivors keep their centroid bit-for-bit
-    for old in survivors:
-        if old not in by_absorber:
-            assert np.allclose(cent1[renum[old]], cent0[old])
-
-
-def test_merge_small_buckets_noop_and_interlocks(spark, clustered,
-                                                 tmp_path):
-    """A balanced index has nothing to merge; the merge refuses on a
-    concurrent structural rewrite, on in-flight append intents, and on
-    a crashed SPLIT's artifacts (cross-op repair confusion would mangle
-    the layout)."""
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs, path, n_centroids=4, seed=42,
-                               quantized=True)
-    before = sorted(r.vec_id for r in
-                    spark.read.parquet(path + "/vectors").collect())
-    s = similarity.merge_small_buckets(spark, path, small_threshold=4.0)
-    assert s["merged_buckets"] == []
-    assert sorted(r.vec_id for r in
-                  spark.read.parquet(path + "/vectors").collect()) == before
-    import os as _os
-    assert not _os.path.exists(f"{path}/_compacting")
-    open(f"{path}/_compacting", "w").close()
-    with pytest.raises(RuntimeError, match="structural rewrite"):
-        similarity.merge_small_buckets(spark, path)
-    _os.remove(f"{path}/_compacting")
-    open(f"{path}/_appending_deadbeef_5", "w").close()
-    with pytest.raises(RuntimeError, match="in-flight append intent"):
-        similarity.merge_small_buckets(spark, path)
-    _os.remove(f"{path}/_appending_deadbeef_5")
-    # cross-op guards: merge repair refuses split leftovers; compact
-    # repair refuses merge leftovers
-    _os.mkdir(f"{path}/vectors_split_old_3")
-    with pytest.raises(RuntimeError, match="crashed split"):
-        similarity.merge_small_buckets(spark, path, repair=True)
-    _os.rmdir(f"{path}/vectors_split_old_3")
-    open(f"{path}/_merge_plan", "w").close()
-    with pytest.raises(RuntimeError, match="crashed split/merge"):
-        similarity.compact_index(spark, path, repair=True)
-    with pytest.raises(RuntimeError, match="crashed merge"):
-        similarity.split_fat_buckets(spark, path, repair=True)
-    _os.remove(f"{path}/_merge_plan")
-    assert not _os.path.exists(f"{path}/_compacting")
-
-
-def test_merge_small_buckets_crash_repair(spark, tmp_path, monkeypatch):
-    """A merge that dies after committing its plan leaves the marker and
-    the plan; repair=True rolls FORWARD deterministically — no rows
-    lost, contiguous ids, probes matching brute force.  Two crash
-    points: before any move, and after every rename but before the
-    layout swap (resume path)."""
-    import os as _os
-    path, vecs = _thin_bucket_index(spark, tmp_path)
-    rows_before = spark.read.parquet(path + "/vectors").count()
-
-    real_moves = similarity._execute_merge_moves
-
-    def boom(*a, **kw):
-        raise RuntimeError("simulated crash before the moves")
-    monkeypatch.setattr(similarity, "_execute_merge_moves", boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        similarity.merge_small_buckets(spark, path, small_threshold=3.0,
-                                       k_floor=2)
-    monkeypatch.undo()
-    assert _os.path.exists(f"{path}/_compacting")
-    assert _os.path.exists(f"{path}/_merge_plan")
-    with pytest.raises(RuntimeError, match="compaction is in progress"):
-        similarity.append_to_ivf_index(
-            spark.createDataFrame([(7777, [1.0] * 8)],
-                                  "vec_id long, embedding array<double>"),
-            path)
-    s = similarity.merge_small_buckets(spark, path, small_threshold=3.0,
-                                       k_floor=2, repair=True)
-    assert not _os.path.exists(f"{path}/_compacting")
-    assert not _os.path.exists(f"{path}/_merge_plan")
-    assert spark.read.parquet(path + "/vectors").count() == rows_before
-    k_after = spark.read.parquet(path + "/centroids").count()
-    cent = sorted(r.bucket for r in
-                  spark.read.parquet(path + "/centroids").collect())
-    assert cent == list(range(k_after))
-    q = vecs.filter(F.col("vec_id") % 40 == 1)
-    rec = _recall_vs_bruteforce(spark, path, vecs, q, k=5, nprobe=None)
-    assert rec >= 0.85, rec
-
-    # second fixture: crash AFTER all renames (inside the sanity check,
-    # before the old dir is deleted) — repair resumes mid-move
-    path2, vecs2 = _thin_bucket_index(
-        spark, tmp_path.joinpath("two"), quantized=False)
-    rows2 = spark.read.parquet(path2 + "/vectors").count()
-
-    def late_boom(fs, dirpath):
-        raise RuntimeError("simulated crash after the renames")
-    monkeypatch.setattr(similarity, "_count_data_files", late_boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        similarity.merge_small_buckets(spark, path2, small_threshold=3.0,
-                                       k_floor=2)
-    monkeypatch.undo()
-    assert _os.path.exists(f"{path2}/_merge_plan")
-    s2 = similarity.merge_small_buckets(spark, path2,
-                                        small_threshold=3.0,
-                                        k_floor=2, repair=True)
-    assert spark.read.parquet(path2 + "/vectors").count() == rows2
-    k2 = spark.read.parquet(path2 + "/centroids").count()
-    assert sorted(r.bucket for r in
-                  spark.read.parquet(path2 + "/centroids").collect()) \
-        == list(range(k2))
-    got = similarity.cosine_topk_ivf_indexed(
-        spark, path2, vecs2.filter(F.col("vec_id").isin([0, 500, 900])),
-        k=3, nprobe=None)
-    assert got.select("query_id").distinct().count() == 3
-
-
-def test_rebalance_index_drift_lifecycle(spark, tmp_path):
-    """The full maintenance story on the drift fixture: rebalance =
-    split (skew repaired) then merge (K held near the sqrt floor), with
-    probes at the shipped auto default still matching brute force and
-    the replay contract intact end-to-end."""
-    path, allv, drift = _drifted_index(spark, tmp_path)
-    before = similarity.index_stats(spark, path)
-    assert before["bucket_skew"] > 3.0
-    s = similarity.rebalance_index(spark, path, skew_threshold=3.0,
-                                   small_threshold=3.0)
-    assert s["split"]["split_buckets"]
-    after = similarity.index_stats(spark, path)
-    assert after["bucket_skew"] < before["bucket_skew"]
-    assert after["rows"] == before["rows"]
-    k = after["n_centroids"]
-    assert k == s["merge"]["n_centroids_after"]
-    cent = sorted(r.bucket for r in
-                  spark.read.parquet(path + "/centroids").collect())
-    assert cent == list(range(k))
-    q = allv.filter(F.col("vec_id") % 50 == 3)
-    rec = _recall_vs_bruteforce(spark, path, allv, q, k=5, nprobe=None)
-    assert rec >= 0.85, rec
-    assert similarity.append_to_ivf_index(drift, path) == 0  # replay
-
-
-def test_delete_tombstones_suppress_probes_and_compact_purges(
-        spark, tmp_path):
-    """The takedown lever (r14): delete_from_ivf_index suppresses ids
-    at probe time immediately (anti-join; rows still in the
-    partitions), index_stats counts them, and the next compact_index
-    physically purges rows from /vectors AND /doubles and clears the
-    tombstones — with probe results IDENTICAL before and after the
-    purge (suppression == purge)."""
-    import os as _os
-    path, vecs = _thin_bucket_index(spark, tmp_path)
-    q = vecs.filter(F.col("vec_id") == 0)
-    base = similarity.cosine_topk_ivf_quantized(spark, path, q, k=3,
-                                                nprobe=None).collect()
-    victim = sorted(base, key=lambda r: r.rank)[0].neighbor_id
-    n = similarity.delete_from_ivf_index(spark, path, [victim])
-    assert n == 1
-    assert not _os.path.exists(f"{path}/_compacting")
-    st = similarity.index_stats(spark, path)
-    assert st["pending_deletes"] == 1
-    after_del = similarity.cosine_topk_ivf_quantized(
-        spark, path, q, k=3, nprobe=None).collect()
-    got = {r.neighbor_id for r in after_del}
-    assert victim not in got and len(got) == 3
-    # the suppressed probe behaves like a probe over the corpus WITHOUT
-    # the victim: high overlap with that brute force (IVF stays
-    # approximate — an unprobed bucket can hide a tail neighbor), and
-    # never the victim
-    truth = {r.neighbor_id for r in similarity.cosine_topk_bruteforce(
-        vecs.filter(F.col("vec_id") != victim), q, k=3).collect()}
-    assert len(got & truth) >= 2, (got, truth)
-    rows_before = spark.read.parquet(path + "/vectors").count()
-    dbl_before = spark.read.parquet(path + "/doubles").count()
-    similarity.compact_index(spark, path)
-    assert not _os.path.exists(f"{path}/deletes")
-    assert spark.read.parquet(path + "/vectors").count() \
-        == rows_before - 1
-    assert spark.read.parquet(path + "/doubles").count() \
-        == dbl_before - 1
-    assert similarity.index_stats(spark, path)["pending_deletes"] == 0
-    purged = similarity.cosine_topk_ivf_quantized(
-        spark, path, q, k=3, nprobe=None).collect()
-    assert sorted((r.neighbor_id, r.rank) for r in purged) \
-        == sorted((r.neighbor_id, r.rank) for r in after_del)
-
-
-def test_delete_undelete_and_append_interplay(spark, tmp_path):
-    """Tombstones suppress rows APPENDED AFTER the delete too (the
-    appender warns); undelete lifts pending tombstones and the
-    suppressed rows — original and appended — become visible again;
-    lifting ids never tombstoned is a 0 no-op."""
-    import os as _os
-    path, vecs = _thin_bucket_index(spark, tmp_path, quantized=False)
-    assert similarity.delete_from_ivf_index(spark, path, [0, 1, 2]) == 3
-    assert similarity.undelete_from_ivf_index(spark, path, [1]) == 1
-    assert similarity.undelete_from_ivf_index(spark, path, [777]) == 0
-    st = similarity.index_stats(spark, path)
-    assert st["pending_deletes"] == 2
-    # append a batch that carries a tombstoned id -> warns, appends
-    batch = spark.createDataFrame(
-        [(0, [9.5] * 8), (4000, [9.4] * 8)],
-        "vec_id long, embedding array<double>")
-    with pytest.warns(RuntimeWarning, match="PENDING DELETE"):
-        assert similarity.append_to_ivf_index(batch, path) == 2
-    q = spark.createDataFrame([(9999, [9.5] * 8)],
-                              "vec_id long, embedding array<double>")
-    got = {r.neighbor_id for r in similarity.cosine_topk_ivf_indexed(
-        spark, path, q, k=4, nprobe=None).collect()}
-    assert 4000 in got and 0 not in got  # the appended copy is hidden
-    assert similarity.undelete_from_ivf_index(spark, path, [0, 2]) == 2
-    assert not _os.path.exists(f"{path}/deletes")  # all lifted
-    got2 = {r.neighbor_id for r in similarity.cosine_topk_ivf_indexed(
-        spark, path, q, k=4, nprobe=None).collect()}
-    assert 0 in got2  # visible again, including the appended row
-
-
-def test_delete_interlocks_and_marker_cleanliness(spark, tmp_path):
-    """Deletes serialize against structural rewrites via the same
-    _compacting marker (a tombstone landing inside a compaction's
-    snapshot window would be dropped with its rows resurrected), and a
-    crashed undelete's half-swapped tombstone table is repaired by
-    compact_index(repair=True)."""
-    import os as _os
-    path, vecs = _thin_bucket_index(spark, tmp_path)
-    open(f"{path}/_compacting", "w").close()
-    with pytest.raises(RuntimeError, match="delete_from_ivf_index"):
-        similarity.delete_from_ivf_index(spark, path, [1])
-    with pytest.raises(RuntimeError, match="undelete_from_ivf_index"):
-        similarity.undelete_from_ivf_index(spark, path, [1])
-    _os.remove(f"{path}/_compacting")
-    assert similarity.delete_from_ivf_index(spark, path, [1, 2]) == 2
-    # simulate an undelete crash mid-swap: live renamed aside, tmp
-    # complete but not renamed in
-    import shutil
-    shutil.move(f"{path}/deletes", f"{path}/deletes_compact_old")
-    shutil.copytree(f"{path}/deletes_compact_old",
-                    f"{path}/deletes_compact_tmp")
-    similarity.compact_index(spark, path, repair=True)
-    assert _os.path.exists(f"{path}/deletes") \
-        or similarity.index_stats(spark, path)["pending_deletes"] == 0
-    assert not _os.path.exists(f"{path}/deletes_compact_old")
-    assert not _os.path.exists(f"{path}/deletes_compact_tmp")
-
-
-def test_maintain_index_runs_exactly_what_is_needed(spark, tmp_path):
-    """The executable cadence: a healthy index is a strict no-op
-    (actions == []); a drifted index triggers rebalance; pending
-    tombstones trigger a (purging) compaction even when file counts are
-    fine; stats_after reflects the work done."""
-    path, allv, drift = _drifted_index(spark, tmp_path)
-    s = similarity.maintain_index(spark, path, skew_threshold=3.0,
-                                  small_threshold=3.0)
-    ops = [a["op"] for a in s["actions"]]
-    assert "rebalance" in ops, s
-    assert s["stats_after"]["bucket_skew"] \
-        < s["stats_before"]["bucket_skew"]
-    # now healthy at this threshold: second pass may compact (appends +
-    # split accrete files) but must converge to a full no-op
-    for _ in range(3):
-        s2 = similarity.maintain_index(spark, path, skew_threshold=3.0,
-                                       small_threshold=3.0)
-        if s2["actions"] == []:
-            break
-    assert s2["actions"] == [], s2
-    # tombstones alone trigger the purge path
-    assert similarity.delete_from_ivf_index(spark, path, [1000]) == 1
-    s3 = similarity.maintain_index(spark, path, skew_threshold=3.0,
-                                   small_threshold=3.0)
-    assert [a["op"] for a in s3["actions"]] == ["compact"]
-    assert s3["stats_after"]["pending_deletes"] == 0
-    assert s3["stats_after"]["rows"] == s2["stats_after"]["rows"] - 1
-
-
-def test_tombstones_survive_split_and_merge(spark, tmp_path):
-    """Tombstones are id-based, so structural rewrites that relocate
-    rows (split, merge) must not resurrect a deleted id — and the
-    relocated tombstoned rows still purge on the next compaction."""
-    import os as _os
-    path, allv, drift = _drifted_index(spark, tmp_path)
-    victim = 1000  # a drift-cluster id the split will relocate
-    assert similarity.delete_from_ivf_index(spark, path, [victim]) == 1
-    s = similarity.split_fat_buckets(spark, path, skew_threshold=3.0,
-                                     seed=7)
-    assert s["split_buckets"]
-    sm = similarity.merge_small_buckets(spark, path, small_threshold=3.0,
-                                        k_floor=2)
-    q = allv.filter(F.col("vec_id") == 1001)
-    got = {r.neighbor_id for r in similarity.cosine_topk_ivf_quantized(
-        spark, path, q, k=10, nprobe=None).collect()}
-    assert victim not in got and got, got
-    rows = spark.read.parquet(path + "/vectors").count()
-    similarity.compact_index(spark, path)
-    assert spark.read.parquet(path + "/vectors").count() == rows - 1
-    assert not _os.path.exists(f"{path}/deletes")
-
-
-def test_rebuild_structural_interlocks_and_tombstone_reset(
-        spark, clustered, tmp_path):
-    """r14 review findings: write_ivf_index refuses while a structural
-    rewrite or an append holds the index (its overwrites would
-    interleave with their renames); compact_index refuses on a
-    half-rebuilt index (_rebuilding); and a completed rebuild clears
-    stale tombstones — the rebuild's input corpus is authoritative."""
-    import os as _os
-    vecs = clustered.select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    similarity.write_ivf_index(vecs, path, n_centroids=4, seed=42,
-                               quantized=True)
-    # rebuild refuses while _compacting stands, and backs off cleanly
-    open(f"{path}/_compacting", "w").close()
-    with pytest.raises(RuntimeError, match="cannot rebuild"):
-        similarity.write_ivf_index(vecs, path, n_centroids=4, seed=42,
-                                   quantized=True)
-    assert not _os.path.exists(f"{path}/_rebuilding")  # claim released
-    _os.remove(f"{path}/_compacting")
-    # rebuild refuses on an in-flight append intent
-    open(f"{path}/_appending_deadbeef_5", "w").close()
-    with pytest.raises(RuntimeError, match="append in flight"):
-        similarity.write_ivf_index(vecs, path, n_centroids=4, seed=42,
-                                   quantized=True)
-    _os.remove(f"{path}/_appending_deadbeef_5")
-    # compact refuses on a half-rebuilt index
-    open(f"{path}/_rebuilding", "w").close()
-    with pytest.raises(RuntimeError, match="rebuild of"):
-        similarity.compact_index(spark, path)
-    assert not _os.path.exists(f"{path}/_compacting")
-    _os.remove(f"{path}/_rebuilding")
-    # a rebuild clears stale tombstones: the fresh corpus is live
-    first = sorted(r.vec_id for r in vecs.limit(1).collect())
-    assert similarity.delete_from_ivf_index(spark, path, first) == 1
-    similarity.write_ivf_index(vecs, path, n_centroids=4, seed=42,
-                               quantized=True)
-    assert not _os.path.exists(f"{path}/deletes")
-    assert similarity.index_stats(spark, path)["pending_deletes"] == 0

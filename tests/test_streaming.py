@@ -698,59 +698,3 @@ def test_read_rollup_requires_committed_batch(spark, tmp_path):
     from cloudbrush_spark.streaming.windows import read_rollup
     with _pytest.raises(ValueError, match="committed"):
         read_rollup(spark, str(tmp_path / "nothing"))
-
-
-def test_stream_index_append_exactly_once_via_batch_tokens(spark, tmp_path):
-    """The ANN-side ingest sink (r14): a vector stream appends into a
-    persisted IVF index through foreachBatch, with the appender's
-    content-digest batch token supplying exactly-once — a full replay
-    from a FRESH checkpoint re-delivers every micro-batch and each one
-    is a committed no-op (rows unchanged, no duplicate ranks)."""
-    import os
-    import random as _rnd
-    from cloudbrush_spark.operators import similarity
-    from cloudbrush_spark.streaming.windows import stream_index_append
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (ArrayType, DoubleType, LongType,
-                                   StructField, StructType)
-
-    rng = _rnd.Random(11)
-    base = spark.createDataFrame(
-        [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(80)],
-        "vec_id long, embedding array<double>")
-    idx = str(tmp_path / "idx")
-    similarity.write_ivf_index(base, idx, n_centroids=4, seed=42,
-                               quantized=True)
-    schema = StructType([
-        StructField("vec_id", LongType()),
-        StructField("embedding", ArrayType(DoubleType()))])
-    src = str(tmp_path / "vecs")
-    for i in range(3):
-        spark.createDataFrame(
-            [(1000 + 10 * i + j, [rng.gauss(0, 1) for _ in range(8)])
-             for j in range(5)], schema).coalesce(1) \
-            .write.parquet(f"{src}/f{i}")
-
-    def run(ckpt):
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1).parquet(src + "/*"))
-        q = (stream_index_append(stream, idx)
-             .option("checkpointLocation", str(tmp_path / ckpt))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    run("ck1")
-    rows = spark.read.parquet(idx + "/vectors").count()
-    assert rows == 80 + 15
-    markers = [n for n in os.listdir(idx) if n.startswith("_appended_")]
-    assert len(markers) == 3  # one committed token per micro-batch
-    run("ck2")  # fresh checkpoint: full redelivery, all no-ops
-    assert spark.read.parquet(idx + "/vectors").count() == 95
-    assert sorted(n for n in os.listdir(idx)
-                  if n.startswith("_appended_")) == sorted(markers)
-    # the streamed vectors are probe-visible
-    q1 = spark.createDataFrame(
-        [(9999, [0.5] * 8)], "vec_id long, embedding array<double>")
-    got = similarity.cosine_topk_ivf_quantized(
-        spark, idx, q1, k=95, nprobe=4).count()
-    assert got == 95
