@@ -550,8 +550,7 @@ def auto_nprobe(n_centroids: int) -> int:
     The sqrt-K rule is the standard middle path (how practitioners tune
     FAISS-style IVF: nprobe grows with nlist, sub-linearly): probed
     fraction decays only as 1/sqrt(K) — neighbors concentrate in the
-    query's nearest lists, so recall degrades slowly (measured across
-    16 → 447 → 1024 centroids in ``probes/ivfq_autonprobe_recall.json``) —
+    query's nearest lists, so recall degrades slowly —
     while probed bytes under sqrt-n auto-sizing grow as n^(3/4), not n.
     At the small-index corner the rule reproduces the tuned constant
     this engine shipped with: ``auto_nprobe(16) == 4``.

@@ -46,6 +46,7 @@ _SLOW_TESTS = {
     "test_cli_assemble_stats_convert",
     "test_sql_release_side_tables_registered",
     "test_assembly_digest_invariant_to_partitions_and_aqe",
+    "test_embedding_gate_recall_contract_vs_exact",
 }
 
 

@@ -696,6 +696,58 @@ def test_release_embedding_dedup_gate(spark, tmp_path):
     kept = {r.doc_id for r in back.select("doc_id").collect()}
     # exact self-duplicates at cosine 1.0: docs 0-9 dropped, 10-19 kept
     assert kept == set(range(10, 20)), kept
+    # the gate needs both sides: either one alone is refused
+    import pytest
+    with pytest.raises(ValueError, match="together"):
+        release(spark, docs, str(tmp_path / "x"), max_tokens=2000,
+                embeddings=emb)
+    with pytest.raises(ValueError, match="together"):
+        release(spark, docs, str(tmp_path / "y"), max_tokens=2000,
+                prior_embeddings=prior)
+
+
+def test_embedding_gate_recall_contract_vs_exact(spark, tmp_path):
+    """Gate-level recall contract: on drifted twins of a prior release
+    (some above the threshold, some below), the drop-set of the LSH
+    gate (prior_embeddings) is measured against exact-cosine truth.
+    The gate verifies with exact cosine, so it may not drop a
+    non-duplicate (precision 1 by construction — asserted); the pinned
+    floor is RECALL >= 0.9.  The run's counters expose the drop count
+    (embdedup_dropped)."""
+    import math
+
+    from cloudbrush_spark.sources import corpus as corpus_sink
+    docs = _docs_distinct(spark, 40)
+    emb = _emb_for(docs, spark)
+    # prior release: drifted twins of docs 0-19 under the same ids
+    prior = _emb_for(docs.filter(F.col("doc_id") < 20), spark, drift=0.05)
+    thr = 0.995
+    # exact-cosine truth, python-side
+    new_vecs = {r.doc_id: list(r.embedding) for r in emb.collect()}
+    prior_vecs = [list(r.embedding) for r in prior.collect()]
+
+    def cos(a, b):
+        d = sum(x * y for x, y in zip(a, b))
+        return d / (math.sqrt(sum(x * x for x in a))
+                    * math.sqrt(sum(x * x for x in b)))
+
+    truth = {i for i, v in new_vecs.items()
+             if any(cos(v, p) >= thr for p in prior_vecs)}
+    assert truth and truth < set(new_vecs)  # non-degenerate fixture
+
+    counters = {}
+    out = str(tmp_path / "rel")
+    release(spark, docs, out, max_tokens=2000, embeddings=emb,
+            prior_embeddings=prior, embedding_threshold=thr,
+            counters=counters)
+    kept = {r.doc_id for r in corpus_sink.read_corpus(
+        spark, os.path.join(out, "corpus")).select("doc_id").collect()}
+    dropped = set(new_vecs) - kept
+    assert counters.get("embdedup_dropped") == len(dropped)
+    # precision 1 by construction: exact-cosine verification
+    assert dropped <= truth, (sorted(dropped - truth), sorted(truth))
+    recall = len(dropped & truth) / len(truth)
+    assert recall >= 0.9, (recall, sorted(truth - dropped))
 
 
 def test_release_dsir_stage_writes_weights(spark, tmp_path):
