@@ -1053,7 +1053,7 @@ def q_repeated_spans_only(spark, sf_dir):
     token spans whose 13-grams all occur in >= 2 docs, the gram-level
     approximation of suffix-array exact-substring dedup.  Benched
     separately so the corpus_guard row's round-over-round time stays
-    comparable (the minhash/shard_pack override precedent)."""
+    comparable (the minhash override precedent)."""
     from cloudbrush_spark.operators import guard
     return guard.repeated_spans(_t(spark, sf_dir, "documents"),
                                 n=13, min_df=2)
@@ -1062,9 +1062,9 @@ def q_repeated_spans_only(spark, sf_dir):
 def q_span_scrub_only(spark, sf_dir):
     """Repeated-passage REMOVAL (guard.span_scrub) bench/probe form: the
     repeated_spans detection on the raw whitespace token stream plus the
-    mask join + higher-order token filter — what the release chain's
-    stage 0b actually costs.  An aggregate over the scrubbed text (not
-    the text itself) keeps the bench row's collect bounded."""
+    mask join + higher-order token filter — what ``-curate
+    -scrub_spans_df`` actually costs.  An aggregate over the scrubbed
+    text (not the text itself) keeps the bench row's collect bounded."""
     from cloudbrush_spark.operators import guard
     out = guard.span_scrub(_t(spark, sf_dir, "documents"), n=13, min_df=2)
     return out.select(
@@ -1087,37 +1087,6 @@ def q_corpus_guard(spark, sf_dir):
     return q_corpus_guard_base(spark, sf_dir).unionByName(spans)
 
 
-def q_shard_pack_only(spark, sf_dir):
-    """Deterministic token-budget shard packing (sampling.pack_shards):
-    order docs by an md5 permutation, prefix-sum whitespace token counts
-    along it, cut a shard every 1000 tokens.  The distributed two-phase
-    cumsum (per-bucket totals -> driver-scale bucket prefix -> bucketed
-    window) must equal the oracle's single sequential window — the
-    hash pins the exact (shard_id, offset) of every document."""
-    from cloudbrush_spark.operators import sampling
-    docs = _t(spark, sf_dir, "documents")
-    wdf = docs.select(
-        "doc_id", textfn.token_count("text").cast("long").alias("n_tokens"))
-    return sampling.pack_shards(wdf, "n_tokens", budget=1000, buckets=1024)
-
-
-def q_budget_select_only(spark, sf_dir):
-    """The shard_pack 'budget' leg alone (probe/scale form):
-    sampling.budget_select over the corpus's computed quality — keep the
-    highest-quality docs whose cumulative whitespace-token count fits
-    30% of the corpus total (order quality DESC, doc_id; truncate at
-    the first overflow)."""
-    from cloudbrush_spark.operators import sampling
-    docs = _t(spark, sf_dir, "documents")
-    qdf = docs.select(
-        "doc_id", textfn.token_count("text").cast("long").alias("n_tokens"),
-        textops.quality_col("text").alias("quality"))
-    # 30% of total tokens, integer math both engines (sum*3 div 10)
-    total = qdf.agg(F.sum("n_tokens")).first()[0] or 0
-    return sampling.budget_select(qdf, "n_tokens", "quality",
-                                  budget=total * 3 // 10)
-
-
 def q_corpus_report_only(spark, sf_dir):
     """The curation_filter 'report' leg alone (probe/bench form): the
     one-pass corpus data card (operators/report.corpus_report)."""
@@ -1125,48 +1094,9 @@ def q_corpus_report_only(spark, sf_dir):
     return corpus_report(_t(spark, sf_dir, "documents"))
 
 
-def q_pack_sequences_only(spark, sf_dir):
-    """Fixed-length training-sequence packing
-    (sampling.pack_sequences): concatenate the corpus's whitespace
-    token stream along the md5 permutation and cut every 512 tokens,
-    splitting boundary-crossing documents — one row per (doc, sequence)
-    chunk.  Same two-phase cumsum as pack_shards; the bounded explode
-    adds no shuffle."""
-    from cloudbrush_spark.operators import sampling
-    docs = _t(spark, sf_dir, "documents")
-    wdf = docs.select(
-        "doc_id", textfn.token_count("text").cast("long").alias("n_tokens"))
-    return sampling.pack_sequences(wdf, "n_tokens", max_len=512,
-                                   buckets=1024)
-
-
-def q_shard_pack(spark, sf_dir):
-    """Token-budget operators in one tagged-union row (r8).  'pack' =
-    the r7 shard-packing leg unchanged (q_shard_pack_only — still the
-    form bench.py times).  'budget' = sampling.budget_select
-    (q_budget_select_only).  The distributed form is the range-bucketed
-    two-phase cumsum with budget-pruned buckets; the oracle is a single
-    sequential window over the same quality twin — the hash pins the
-    exact selected set and each doc's start offset.  'seq' (r9) =
-    sampling.pack_sequences (q_pack_sequences_only) — the hash pins
-    every (doc, sequence) chunk's (seq_id, seq_offset, n_toks), i.e.
-    the exact token-stream concatenation-and-cut a training loader
-    would replay.  Canonical (op, doc_id, v1, v2, v3) BIGINT columns."""
-    pack = q_shard_pack_only(spark, sf_dir).select(
-        F.lit("pack").alias("op"), "doc_id", F.col("wt").alias("v1"),
-        F.col("shard_id").alias("v2"), F.col("offset").alias("v3"))
-    budget = q_budget_select_only(spark, sf_dir).select(
-        F.lit("budget").alias("op"), "doc_id", F.col("wt").alias("v1"),
-        F.col("start").alias("v2"), F.lit(0).cast("long").alias("v3"))
-    seq = q_pack_sequences_only(spark, sf_dir).select(
-        F.lit("seq").alias("op"), "doc_id", F.col("seq_id").alias("v1"),
-        F.col("seq_offset").alias("v2"), F.col("n_toks").alias("v3"))
-    return pack.unionByName(budget).unionByName(seq)
-
-
 def q_sink_formats(spark, sf_dir):
     """K1+K2 sink formatting in one tagged union row (merged r7 to free a
-    registry slot for shard_pack; both legs unchanged): k1 = FASTA record
+    registry slot; both legs unchanged): k1 = FASTA record
     strings, k2 = SFA expand emit ids.  Canonical (op, k, v) strings."""
     k1 = q_k1_fasta_format(spark, sf_dir).select(
         F.lit("fasta").alias("op"), F.col("value").alias("k"),
@@ -1177,51 +1107,10 @@ def q_sink_formats(spark, sf_dir):
     return k1.unionByName(k2)
 
 
-def q_curation_pipeline(spark, sf_dir):
-    """FULL RELEASE composite (pipeline/release.py, r8) — the document
-    analogue of the reference's single -reads -> -asm driver chain
-    (src/Brush/BrushAssembler.java:829-893): quality/lang/length gate ->
-    exact fingerprint dedup -> MinHash/LSH cluster dedup -> deterministic
-    md5 split (= the r7 curation manifest) -> DOMAIN-MIXTURE resampling
-    (2.5x src0-4 / 1.0x src5-9 / 0.3x src10-19, copy column) ->
-    token-budget SHARD PACKING (1000-token shards over doc_id#copy
-    identities, bucketed two-phase cumsum) -> PUBLISH through the corpus
-    sink into a scratch dir.  The returned rows are rebuilt from the
-    READ-BACK parquet joined to the release manifest, so the sink's
-    manifest join, split-partitioned write, per-copy duplication, shard
-    assignment and content fidelity all sit on the driver's hash:
-    a lost/duplicated copy breaks the row count, a wrong split/shard
-    breaks the value hash, and ``text_ok`` compares the read-back text
-    md5 against the source md5 row-by-row (the oracle emits the
-    trivially-true twin — the ann_contracts invariant pattern)."""
-    from cloudbrush_spark.pipeline.release import release as run_release
-    from cloudbrush_spark.sources import corpus
-    docs = _t(spark, sf_dir, "documents")
-    weights = {f"src{i}": (2.5 if i < 5 else 1.0 if i < 10 else 0.3)
-               for i in range(20)}
-    # per-user 0700 root: the name is deterministic, so the shared
-    # system tmp would be poisonable/raceable by another local user
-    path = os.path.join(
-        _private_tmp_root(),
-        "cb_release_" + os.path.basename(os.path.normpath(sf_dir)))
-    rel = run_release(spark, docs, path, mixture_weights=weights,
-                      budget=1000, files_per_split=4)
-    back = corpus.read_corpus(spark, os.path.join(path, "corpus"))
-    src_md5 = docs.select("doc_id", F.md5("text").alias("__src_md5"))
-    return (
-        back.join(src_md5, "doc_id")
-        .join(rel.select("doc_id", "copy", "ws_tokens", "quality"),
-              ["doc_id", "copy"])
-        .select("doc_id", "copy", "split", "shard_id", "offset",
-                "ws_tokens", "quality",
-                (F.md5("text") == F.col("__src_md5")).alias("text_ok"))
-    )
-
-
 def q_event_windows(spark, sf_dir):
     """Batch event-time windowing in ONE tagged-union row — hourly tumbling
     window per event type + 30-min-gap sessionization (merged r6 to free a
-    registry slot for curation_pipeline; the single-op forms above stay in
+    registry slot; the single-op forms above stay in
     bench.py and the streaming twins in stream_equivalence) + the r8
     'json' leg: schema-on-read extraction over the semi-structured
     ``props`` JSON column (sessions.json_props_agg — from_json with an
@@ -2087,8 +1976,8 @@ def q_text_fp_split(spark, sf_dir):
         F.lit("mixture").alias("op"), "doc_id",
         F.concat("source", F.lit("#"), F.col("copy").cast("string")).alias("v"))
     # late r8: per-domain quality CALIBRATION — the exact within-source
-    # rank by (quality desc, doc_id), assembled via the budget_select
-    # two-phase bucket pattern (never one-task-per-domain windows); the
+    # rank by (quality desc, doc_id), assembled via a two-phase
+    # quality-bucket pattern (never one-task-per-domain windows); the
     # DuckDB twin is the direct row_number window, so the two-phase
     # assembly is hash-pinned rank-for-rank.  v = source#rank/n.
     from cloudbrush_spark.operators import textops
@@ -2154,45 +2043,6 @@ def q_emb_near_dup_lsh(spark, sf_dir):
             .alias("recall_ok"),
         )
     )
-
-
-def _private_tmp_root() -> str:
-    """Per-user mode-0700 scratch root for the harness's DETERMINISTIC
-    cache paths (r12, advisor finding): ``tempfile.gettempdir()`` is
-    shared, so a predictable name like ``cb_release_<sf>`` could be
-    pre-created/poisoned by another local user.  Keying by uid and
-    refusing a directory we don't own closes that off; the poisoned
-    case falls back to a fresh private mkdtemp (cache reuse lost,
-    soundness kept).  Random mkdtemp paths elsewhere are already safe.
-
-    The pre-existing-root check uses lstat and requires a REAL
-    directory with no group/other permission bits (r13, advisor
-    finding): a plain ``os.stat().st_uid`` check follows symlinks, so
-    an attacker could pre-create the deterministic name as a symlink
-    to some directory the victim uid owns (/tmp itself, when running
-    as root) and reinstate the poisoning vector; ``makedirs(mode=)``
-    is also umask-masked, so the fresh root is chmod'd explicitly."""
-    import os as _os
-    import stat as _st
-    import tempfile as _tf
-    root = _os.path.join(_tf.gettempdir(), f"cb_u{_os.getuid()}")
-    try:
-        _os.makedirs(root, mode=0o700, exist_ok=False)
-        _os.chmod(root, 0o700)
-    except FileExistsError:
-        try:
-            st = _os.lstat(root)
-        except OSError:
-            # vanished between makedirs and lstat (tmp cleaner, or an
-            # attacker churning the name) — degrade like every other
-            # odd state instead of crashing the harness
-            return _tf.mkdtemp(prefix="cb_priv_")
-        if (not _st.S_ISDIR(st.st_mode) or st.st_uid != _os.getuid()
-                or (st.st_mode & 0o077) != 0):
-            return _tf.mkdtemp(prefix="cb_priv_")
-    except OSError:
-        return _tf.mkdtemp(prefix="cb_priv_")
-    return root
 
 
 def q_ann_contracts(spark, sf_dir):
@@ -2369,10 +2219,10 @@ def q_probe_cohort(spark, sf_dir):
 
 
 def q_probe_emb_near_dup(spark, sf_dir):
-    """Scale-probe leg (NOT in ``queries()`` — used only by
-    scripts/scale_probe.py): the LSH star-mode near-dup pair path ALONE,
-    without the O(n^2) brute-force twin that lives inside the
-    ``ann_contracts`` correctness row (infeasible at 200k vectors).
+    """Scale-probe leg (NOT in ``queries()``): the LSH star-mode
+    near-dup pair path ALONE, without the O(n^2) brute-force twin that
+    lives inside the ``ann_contracts`` correctness row (infeasible at
+    200k vectors).
     Star over-cap mode is the 100 TB configuration — over-cap buckets
     emit rep-anchored edges instead of all pairs."""
     emb = _emb(spark, sf_dir)
@@ -3707,43 +3557,21 @@ _SHINGLES_CTE = f"""
 """
 
 
-def _lsh_cand_ctes(sh: str, star: bool = False, cross: bool = False) -> str:
+def _lsh_cand_ctes(sh: str, cross: bool = False) -> str:
     """The MinHash/LSH candidate CTE chain (sigs -> banded -> small ->
     cand -> inter) over shingle relation ``sh`` — the ONE source of truth
     for the LSH parameterization (16 md5 minhashes, band = h // 4, bucket
-    cap 50), shared by the minhash_lsh_dedup oracle and the
-    curation_pipeline oracle so the two can never drift apart.
-    ``star=True`` adds dedup.lsh_candidate_pairs' overcap='star' mirror:
-    each over-cap bucket contributes linear (bucket-min-id, member)
-    candidates instead of quadratic pairs.  ``cross=True`` mirrors
+    cap 50), shared by the self and cross legs of the minhash_lsh_dedup
+    oracle so the two can never drift apart.  ``cross=True`` mirrors
     dedup.cross_corpus_near_dups over a TAGGED relation ('n|'/'r|' id
     prefixes): candidates are new-side x ref-side only, never
     within-side."""
     if cross:
-        assert not star, "cross oracle leg uses the default drop mode"
-        star_cte = ""
         cand = """
             SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
             FROM small x JOIN small y USING (band, bkey)
             WHERE x.doc_id LIKE 'n|%' AND y.doc_id LIKE 'r|%'"""
-    elif star:
-        star_cte = """
-        bigb AS (
-            SELECT band, bkey, min(doc_id) AS rep
-            FROM banded GROUP BY band, bkey HAVING count(*) > 50
-        ),"""
-        cand = """
-            SELECT DISTINCT a, b FROM (
-                SELECT x.doc_id AS a, y.doc_id AS b
-                FROM small x JOIN small y USING (band, bkey)
-                WHERE x.doc_id < y.doc_id
-                UNION ALL
-                SELECT g.rep AS a, x.doc_id AS b
-                FROM banded x JOIN bigb g USING (band, bkey)
-                WHERE x.doc_id <> g.rep
-            )"""
     else:
-        star_cte = ""
         cand = """
             SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
             FROM small x JOIN small y USING (band, bkey)
@@ -3763,7 +3591,7 @@ def _lsh_cand_ctes(sh: str, star: bool = False, cross: bool = False) -> str:
             SELECT doc_id, band, bkey
             FROM (SELECT *, count(*) OVER (PARTITION BY band, bkey) AS bsz FROM banded)
             WHERE bsz <= 50
-        ),{star_cte}
+        ),
         cand AS ({cand}),
         inter AS (
             SELECT c.a, c.b, count(*) AS i
@@ -3774,12 +3602,11 @@ def _lsh_cand_ctes(sh: str, star: bool = False, cross: bool = False) -> str:
         )"""
 
 
-def _split_case_sql(src_rel: str) -> str:
-    """md5-bucket deterministic split (sampling.assign_split twin:
-    seed='split', 1000 buckets, 900/950 thresholds) over ``src_rel``'s
-    doc_id — shared by the hash_split oracle and the curation_pipeline
-    split stage so the thresholds live in exactly one place."""
-    return f"""
+# md5-bucket deterministic split (sampling.assign_split twin:
+# seed='split', 1000 buckets, 900/950 thresholds) over the documents —
+# shared by the hash_split oracle and the text_fp_split 'split' leg so
+# the thresholds live in exactly one place
+_SPLIT_SQL = """
         SELECT doc_id,
                CASE WHEN b < 900 THEN 'train'
                     WHEN b < 950 THEN 'val'
@@ -3790,7 +3617,7 @@ def _split_case_sql(src_rel: str) -> str:
                         i -> (strpos('0123456789abcdef',
                                      substring(md5('split|' || doc_id::VARCHAR), i, 1)) - 1)
                              * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT) % 1000 AS b
-            FROM {src_rel})"""
+            FROM documents)"""
 
 
 def _minhash_lsh_sql() -> str:
@@ -3929,14 +3756,14 @@ _ORACLES["winnow_fp"] = f"""
     SELECT DISTINCT doc_id, wmin AS fp FROM winm WHERE pos <= n - 4
 """
 
-_ORACLES["hash_split"] = _split_case_sql("documents")
+_ORACLES["hash_split"] = _SPLIT_SQL
 
 _ORACLES["text_fp_split"] = f"""
     SELECT 'winnow' AS op, doc_id, CAST(fp AS VARCHAR) AS v
     FROM ({_ORACLES["winnow_fp"]})
     UNION ALL
     SELECT 'split' AS op, doc_id, split AS v
-    FROM ({_split_case_sql("documents")})
+    FROM ({_SPLIT_SQL})
     UNION ALL
     SELECT 'mixture' AS op, doc_id, source || '#' || i::VARCHAR AS v
     FROM (
@@ -4013,8 +3840,7 @@ _ORACLES["simhash_clusters"] = f"""
     FROM mem m JOIN sz ON sz.cluster_rep = m.cluster_rep
 """
 
-# The per-doc gate, shared by the curation_filter 'doc' leg and the
-# curation_pipeline composite's gate CTE
+# The per-doc gate of the curation_filter 'doc' leg
 _CURATION_GATE_SQL = f"""
     WITH q AS ({_quality_sql()}),
          l AS ({_lang_id_sql()}),
@@ -4155,90 +3981,6 @@ _ORACLES["dedup_clusters"] = f"""
     sizes AS (SELECT cluster_rep, count(*) AS n FROM labels GROUP BY 1)
     SELECT l.cluster_rep, l.member, s.n
     FROM labels l JOIN sizes s USING (cluster_rep)
-"""
-# End-to-end curation composite: curation_filter gate -> exact fingerprint
-# dedup (min-id survivor) -> MinHash/LSH verified pairs over the survivors
-# (same parameterization as minhash_lsh_dedup, re-derived over the kept
-# subset) -> recursive-CTE connected components -> representative-only ->
-# md5 split buckets.  Mirrors pipeline/curation.curate stage for stage.
-_ORACLES["curation_pipeline"] = f"""
-    WITH RECURSIVE cf AS ({_CURATION_GATE_SQL}),
-    kept AS (SELECT d.doc_id, d.text FROM documents d
-             JOIN cf ON cf.doc_id = d.doc_id WHERE cf.keep),
-    fps AS (SELECT doc_id, md5({_NORM}) AS fp FROM kept),
-    exact AS (SELECT min(doc_id) AS doc_id FROM fps GROUP BY fp),
-    src AS (SELECT k.doc_id, k.text FROM kept k
-            JOIN exact ON exact.doc_id = k.doc_id),
-    toks AS (SELECT doc_id, {_TOKS_NE} AS t FROM src),
-    csh AS (
-        SELECT DISTINCT doc_id, array_to_string(list_slice(t, i, i + 2), ' ') AS sh
-        FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i)
-    ),
-    cssz AS (SELECT doc_id, count(*) AS sz FROM csh GROUP BY 1),
-    {_lsh_cand_ctes("csh", star=True)},
-    pairs AS (
-        SELECT i2.a, i2.b FROM (
-            SELECT n.a, n.b, n.i / (sa.sz + sb.sz - n.i) AS j
-            FROM inter n
-            JOIN cssz sa ON sa.doc_id = n.a
-            JOIN cssz sb ON sb.doc_id = n.b) i2
-        WHERE j >= 0.5
-    ),
-    edges AS (SELECT a, b FROM pairs UNION ALL SELECT b AS a, a AS b FROM pairs),
-    reach(member, lab) AS (
-        SELECT doc_id, doc_id FROM src
-        UNION
-        SELECT e.b, r.lab FROM reach r JOIN edges e ON e.a = r.member
-    ),
-    labels AS (SELECT member, min(lab) AS cluster_rep FROM reach GROUP BY member),
-    reps AS (SELECT member AS doc_id FROM labels WHERE member = cluster_rep),
-    splits AS ({_split_case_sql("reps")}),
-    man AS (
-        SELECT s.doc_id, s.split, cf.ws_tokens, cf.quality
-        FROM splits s JOIN cf ON cf.doc_id = s.doc_id),
-    -- r8 full release: domain-mixture resampling over the curated
-    -- survivors (same weights/seed as the text_fp_split mixture leg)
-    mixn AS (
-        SELECT m.doc_id, m.split, m.ws_tokens, m.quality,
-               CASE WHEN CAST(substr(d.source, 4) AS INT) < 5
-                    THEN 2 + CASE WHEN
-                        CAST(list_sum(list_transform(generate_series(1, 8),
-                             i -> (strpos('0123456789abcdef',
-                                   substring(md5('mixture|' || m.doc_id::VARCHAR), i, 1)) - 1)
-                                  * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT)
-                        % 1000000 < 500000 THEN 1 ELSE 0 END
-                    WHEN CAST(substr(d.source, 4) AS INT) < 10 THEN 1
-                    ELSE CASE WHEN
-                        CAST(list_sum(list_transform(generate_series(1, 8),
-                             i -> (strpos('0123456789abcdef',
-                                   substring(md5('mixture|' || m.doc_id::VARCHAR), i, 1)) - 1)
-                                  * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT)
-                        % 1000000 < 300000 THEN 1 ELSE 0 END END AS n
-        FROM man m JOIN documents d ON d.doc_id = m.doc_id),
-    mix AS (
-        SELECT doc_id, split, ws_tokens, quality, i AS "copy",
-               doc_id::VARCHAR || '#' || i::VARCHAR AS rel_id
-        FROM mixn, LATERAL (SELECT unnest(generate_series(1, n)) AS i)),
-    -- token-budget shard packing over doc_id#copy identities: the
-    -- sequential single-window twin of the bucketed two-phase cumsum
-    relh AS (
-        SELECT *,
-               CAST(list_sum(list_transform(generate_series(1, 8),
-                    i -> (strpos('0123456789abcdef',
-                                 substring(md5('pack|' || rel_id), i, 1)) - 1)
-                         * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT) AS h
-        FROM mix),
-    packed AS (
-        SELECT doc_id, "copy", split, ws_tokens, quality,
-               coalesce(sum(ws_tokens) OVER (ORDER BY h % 1024, h, rel_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS start
-        FROM relh)
-    SELECT doc_id, "copy", split,
-           CAST(start // 1000 AS BIGINT) AS shard_id,
-           CAST(start % 1000 AS BIGINT) AS "offset",
-           ws_tokens, quality, TRUE AS text_ok
-    FROM packed
 """
 
 # Batch event-time windowing union: the tumbling-window and sessionize
@@ -5446,75 +5188,6 @@ _ORACLES["corpus_guard"] = f"""
     UNION ALL SELECT * FROM spans
 """
 
-_ORACLES["shard_pack"] = f"""
-    SELECT 'pack' AS op, doc_id, wt AS v1, shard_id AS v2, "offset" AS v3
-    FROM (
-        WITH w AS (
-            SELECT doc_id,
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(string_split_regex(trim(text), '\\s+')) END AS wt,
-                   CAST(list_sum(list_transform(generate_series(1, 8),
-                        i -> (strpos('0123456789abcdef',
-                                     substring(md5('pack|' || doc_id::VARCHAR), i, 1)) - 1)
-                             * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT) AS h
-            FROM documents),
-        s AS (
-            SELECT doc_id, CAST(wt AS BIGINT) AS wt,
-                   coalesce(sum(wt) OVER (ORDER BY h % 1024, h, doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
-            FROM w)
-        SELECT doc_id, wt,
-               CAST(start // 1000 AS BIGINT) AS shard_id,
-               CAST(start % 1000 AS BIGINT) AS "offset"
-        FROM s)
-    UNION ALL
-    SELECT 'budget' AS op, doc_id, wt AS v1, start AS v2,
-           CAST(0 AS BIGINT) AS v3
-    FROM (
-        -- single sequential window twin of the range-bucketed two-phase
-        -- cumsum: order quality DESC, doc_id; keep while it fits 30% of
-        -- the corpus's total whitespace tokens (integer math: sum*3//10)
-        WITH q AS ({_quality_sql()}),
-        s AS (
-            SELECT doc_id, CAST(n_tokens AS BIGINT) AS wt,
-                   CAST(coalesce(sum(n_tokens) OVER (
-                        ORDER BY quality DESC, doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                        0) AS BIGINT) AS start
-            FROM q),
-        b AS (SELECT CAST(sum(n_tokens) AS BIGINT) * 3 // 10 AS lim FROM q)
-        SELECT doc_id, wt, start FROM s, b WHERE start + wt <= lim)
-    UNION ALL
-    SELECT 'seq' AS op, doc_id, seq_id AS v1, seq_offset AS v2, n_toks AS v3
-    FROM (
-        -- sequential twin of pack_sequences: same md5-order exclusive
-        -- cumsum as the 'pack' leg, then per-doc chunk enumeration over
-        -- the crossed 512-token boundaries via generate_series
-        WITH w AS (
-            SELECT doc_id,
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(string_split_regex(trim(text), '\\s+')) END AS wt,
-                   CAST(list_sum(list_transform(generate_series(1, 8),
-                        i -> (strpos('0123456789abcdef',
-                                     substring(md5('pack|' || doc_id::VARCHAR), i, 1)) - 1)
-                             * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT) AS h
-            FROM documents),
-        s AS (
-            SELECT doc_id, CAST(wt AS BIGINT) AS wt,
-                   CAST(coalesce(sum(wt) OVER (ORDER BY h % 1024, h, doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start
-            FROM w),
-        c AS (
-            SELECT doc_id, wt, start,
-                   unnest(generate_series(start // 512,
-                                          (start + wt - 1) // 512)) AS sid
-            FROM s WHERE wt > 0)
-        SELECT doc_id, CAST(sid AS BIGINT) AS seq_id,
-               CAST(greatest(start, sid * 512) - sid * 512 AS BIGINT) AS seq_offset,
-               CAST(least(start + wt, (sid + 1) * 512)
-                    - greatest(start, sid * 512) AS BIGINT) AS n_toks
-        FROM c)
-"""
 
 from cloudbrush_spark.oracle_fixtures import SQL_OVERLAP_EDGES  # noqa: E402
 
@@ -5544,7 +5217,7 @@ _ORACLES["sink_formats"] = f"""
 # Contract surface
 # ---------------------------------------------------------------------------
 
-# EXACTLY 50 entries: the driver's correctness check covers the first 50
+# AT MOST 50 entries: the driver's correctness check covers the first 50
 # registry entries, and round 4 proved that anything past that cap gets no
 # CORRECTNESS row at all (7 §2 operators went unverified purely by
 # position).  Ordering: never-yet-green first, then the round-4
@@ -5557,9 +5230,8 @@ _ORACLES["sink_formats"] = f"""
 #   - tpch_q1/q3/q5/q6     -> tpch_suite tagged union (r6; all four verified)
 #   - stream_tumbling_window -> stream_equivalence (r6; + sessionize + dedup)
 #   - g5_pairmark/g6_pairmerge -> g5g6_pairmark_merge tagged union (r6)
-#   - tumbling_window/sessionize -> event_windows tagged union (r6; slot
-#     freed for curation_pipeline — both still verified, plus their
-#     streaming twins in stream_equivalence)
+#   - tumbling_window/sessionize -> event_windows tagged union (r6; both
+#     still verified, plus their streaming twins in stream_equivalence)
 #   - g5g6_distributed_fixpoint -> G5-G8 covered by g5g6/g7g8 entries
 #   - ann_topk_lsh/ann_topk_ivf/emb_near_dup_lsh/emb_near_dup -> ann_contracts
 #   - asof/range/rollup/topk_per_group/set_ops -> relational_extras
@@ -5568,7 +5240,7 @@ _ORACLES["sink_formats"] = f"""
 #   - s1_fastq_roundtrip/s2_sfa_roundtrip -> source_roundtrips tagged
 #     union (r7; slot freed for corpus_guard — both legs still verified)
 #   - k1_fasta_format/k2_explode_emit -> sink_formats tagged union (r7;
-#     slot freed for shard_pack — both legs still verified)
+#     both legs still verified)
 # The pruned query functions stay defined above (bench.py and tests use
 # them); they are simply not registered.
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
@@ -5576,13 +5248,11 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "relational_extras": q_relational_extras,    # asof/range/rollup/topk/except
     # --- new in round 7 ---
     "corpus_guard": q_corpus_guard,              # decontam / pii / repetition
-    "shard_pack": q_shard_pack,                  # token-budget shard packing
     "source_roundtrips": q_source_roundtrips,    # s1 fastq + s2 sfa union
     "sink_formats": q_sink_formats,              # k1 fasta + k2 sfa union
     "simhash_clusters": q_simhash_clusters,      # linear simhash product
     "text_fp_split": q_text_fp_split,            # winnow + split union (r7)
     # --- new in round 6 ---
-    "curation_pipeline": q_curation_pipeline,    # end-to-end curation
     "event_windows": q_event_windows,            # tumble + sessionize union
     "tpch_suite": q_tpch_suite,                  # 19-leg TPC-H union
     "stream_equivalence": q_stream_equivalence,  # stream tumble/sess/dedup

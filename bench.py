@@ -46,21 +46,17 @@ HEADLINE = [
     # added round 6 (appended so earlier entries keep their warm-up
     # context and stay comparable across rounds)
     "dedup_clusters",
-    "curation_pipeline",
     # added round 7
     "simhash_clusters",
     "corpus_guard",
-    "shard_pack",
     # added round 8 (appended; single-op forms so earlier entries stay
     # comparable)
-    "budget_select",
     "corpus_report",
     # added late round 8
     "json_props_agg",
     "heavy_tokens",
     "repeated_spans",
     # added round 9 (appended; single-op forms)
-    "pack_sequences",
     "span_scrub",
     # added late round 9: the two join-heaviest new tpch_suite legs
     "tpch_q8",
@@ -191,8 +187,6 @@ def main() -> None:
     # comparisons stay apples-to-apples (the tpch_q* precedent); the
     # union forms are the driver's correctness surface, not the bench's
     qs["minhash_lsh_dedup"] = entrymod.q_minhash_pairs_self
-    qs["shard_pack"] = entrymod.q_shard_pack_only
-    qs["budget_select"] = entrymod.q_budget_select_only
     qs["corpus_report"] = entrymod.q_corpus_report_only
     qs["json_props_agg"] = entrymod.q_probe_json_agg
     qs["heavy_tokens"] = entrymod.q_probe_heavy_tokens
@@ -201,7 +195,6 @@ def main() -> None:
     # leg as its own appended entry
     qs["corpus_guard"] = entrymod.q_corpus_guard_base
     qs["repeated_spans"] = entrymod.q_repeated_spans_only
-    qs["pack_sequences"] = entrymod.q_pack_sequences_only
     qs["span_scrub"] = entrymod.q_span_scrub_only
     qs["bm25"] = entrymod.q_bm25_only
     # warm the JVM + parquet footers with one cheap action

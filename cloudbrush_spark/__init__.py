@@ -9,9 +9,9 @@ classification and distribution statistics.  This package re-expresses every
 one of those operators Spark-first (DataFrame / SQL / Catalyst), organized
 as:
 
-- ``functions/``  — column-expression kits (DNA algebra, text analysis,
-                    content-addressed hashing).  No UDF where a built-in
-                    expression exists.
+- ``functions/``  — column-expression kits (DNA algebra, text
+                    analysis).  No UDF where a built-in expression
+                    exists.
 - ``operators/``  — the generic relational/graph operator library
                     (duckdb-oracle-checkable) + LLM-data-pipeline operators
                     (dedup families, similarity search, multimodal plumbing).

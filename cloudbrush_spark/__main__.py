@@ -56,21 +56,17 @@ def _build_parser() -> argparse.ArgumentParser:
     ap.add_argument("-precorrect", action="store_true",
                     help="A8 spaced-seed error correction before dedup")
     ap.add_argument("-ckpt", default=None,
-                    help="stage-checkpoint dir (restartable partial runs)")
+                    help="assembly stage-checkpoint dir (restartable "
+                         "partial -reads/-asm runs)")
     ap.add_argument("-sql", default=None, metavar="QUERY",
                     help="raw-SQL entry point: run QUERY via spark.sql "
                          "over the temp views registered from -data "
-                         "(analytic tables) and/or -release (published "
-                         "corpus + release_manifest); prints rows as "
-                         "JSON lines (capped by -limit) or writes "
-                         "parquet with -out")
+                         "(analytic tables); prints rows as JSON lines "
+                         "(capped by -limit) or writes parquet with -out")
     ap.add_argument("-data", default=None, metavar="DIR",
                     help="-sql: parquet table directory whose tables "
                          "register as temp views (region/nation/.../"
                          "documents/embeddings)")
-    ap.add_argument("-release", default=None, metavar="DIR",
-                    help="-sql: published release directory to register "
-                         "as corpus/release_manifest views")
     ap.add_argument("-limit", type=int, default=100,
                     help="-sql: max rows printed without -out")
     ap.add_argument("-run_stats", default=None, metavar="DIR",
@@ -116,42 +112,6 @@ def _build_parser() -> argparse.ArgumentParser:
                          "document id (vec_id column)")
     ap.add_argument("-semantic_threshold", type=float, default=0.95,
                     help="curation: semantic decontamination cosine cutoff")
-    ap.add_argument("-prior_embeddings", default=None, metavar="PARQUET",
-                    help="release: the PREVIOUS release's embeddings "
-                         "parquet (vec_id/doc_id, embedding); with "
-                         "-embeddings, new docs whose embedding "
-                         "near-duplicates the prior release (cosine >= "
-                         "-emb_dedup_threshold) are dropped after curation "
-                         "(cross-corpus embedding dedup gate)")
-    ap.add_argument("-emb_dedup_threshold", type=float, default=0.95,
-                    help="release: cross-release embedding dedup cutoff")
-    ap.add_argument("-dsir_target", default=None, metavar="PARQUET",
-                    help="release: target-domain docs parquet (doc_id, "
-                         "text); writes DSIR importance weights of the "
-                         "published docs to <out>/dsir.parquet")
-    # full-release flags: either one upgrades -curate to the resumable
-    # curate -> mixture -> shard-pack -> publish chain
-    # (pipeline/release.py), the analogue of the reference's single
-    # -reads -> -asm driver chain; -ckpt makes the chain restartable
-    ap.add_argument("-mixture", default=None, metavar="JSON",
-                    help="release: domain-mixture weights as a JSON object "
-                         "{source: weight}; w>1 up-samples (copy column), "
-                         "w<1 down-samples deterministically")
-    ap.add_argument("-budget", type=int, default=None, metavar="TOKENS",
-                    help="release: shard token budget — packs published "
-                         "rows into fixed-weight shards (shard_id/offset "
-                         "columns)")
-    ap.add_argument("-token_budget", type=int, default=None,
-                    metavar="TOKENS",
-                    help="release: global quality-ordered token cap — "
-                         "spend at most this many whitespace tokens on "
-                         "the best mixture rows (sampling.budget_select)")
-    ap.add_argument("-src_budget", default=None, metavar="JSON",
-                    help="release: per-source token budgets as a JSON "
-                         "object {source: tokens} — each domain fills "
-                         "its own cap by quality "
-                         "(sampling.budget_select_per_source); mutually "
-                         "exclusive with -token_budget")
     ap.add_argument("-boiler_df", type=int, default=None, metavar="N",
                     help="curation: remove every line whose corpus-wide "
                          "occurrence count exceeds N (cross-document "
@@ -160,52 +120,13 @@ def _build_parser() -> argparse.ArgumentParser:
                     help="curation: remove every cross-document repeated "
                          "passage (maximal run of word 13-grams shared "
                          "by >= N docs) from ALL carriers before "
-                         "gating/publishing (guard.span_scrub — the "
-                         "scrub counterpart of -audit_spans)")
+                         "gating/publishing (guard.span_scrub)")
     ap.add_argument("-report", action="store_true",
                     help="write the published corpus's data card "
                          "(operators/report.corpus_report — per-split "
                          "volumes, quality/length histograms, dup rate, "
                          "token quantiles, sketch contracts) to "
                          "OUT/report.parquet")
-    ap.add_argument("-audit_spans", action="store_true",
-                    help="write the released corpus's repeated-content "
-                         "audit (guard.repeated_spans — maximal cross-"
-                         "document repeated passages, the memorization-"
-                         "risk appendix) to OUT/spans.parquet")
-    ap.add_argument("-base", default=None, metavar="PARQUET",
-                    help="release: previous snapshot corpus — upgrades "
-                         "the release to an INCREMENTAL release "
-                         "(pipeline/release.incremental_release): a "
-                         "merge_upsert delta against -curate's input "
-                         "decides insert/update/keep/delete, per-doc "
-                         "gate features recompute only for the delta, "
-                         "and every cross-document stage reruns "
-                         "globally (output identical to a from-scratch "
-                         "release of the new snapshot)")
-    ap.add_argument("-prev_features", default=None, metavar="PARQUET",
-                    help="release: the previous release's feature cache "
-                         "(OUT/features.parquet, written by "
-                         "-cache_features or a prior incremental run) — "
-                         "kept documents reuse these rows instead of "
-                         "re-running the gate projection")
-    ap.add_argument("-cache_features", action="store_true",
-                    help="release: write the per-document gate-feature "
-                         "cache to OUT/features.parquet so the next "
-                         "crawl can release incrementally")
-    ap.add_argument("-prev_release", default=None, metavar="DIR",
-                    help="incremental release: the previous release's "
-                         "output directory — the PUBLISH stage then "
-                         "rewrites only the bucket directories the "
-                         "delta touches and hardlinks the rest over "
-                         "(the previous release must have been "
-                         "published bucketed, e.g. via -bucket_width)")
-    ap.add_argument("-bucket_width", type=int, default=None,
-                    help="release: publish the corpus in the bucketed "
-                         "directory layout with id-range buckets of "
-                         "this width (floor(id/W)) — the layout "
-                         "incremental publish carries directories "
-                         "over from; omit for the classic flat layout")
     ap.add_argument("-prior", default=None, metavar="PARQUET",
                     help="curation: previous-release corpus (doc_id, "
                          "text) — drop gated docs that near-duplicate "
@@ -261,14 +182,10 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.sql:
         from cloudbrush_spark import sql as cbsql
-        views: list[str] = []
-        if args.data:
-            views += cbsql.register_table_views(spark, args.data)
-        if args.release:
-            views += cbsql.register_release_views(spark, args.release)
+        views = (cbsql.register_table_views(spark, args.data)
+                 if args.data else [])
         if not views:
-            raise SystemExit("-sql needs -data DIR and/or -release DIR "
-                             "to register views")
+            raise SystemExit("-sql needs -data DIR to register views")
         df = cbsql.run_sql(spark, args.sql)
         if args.out:
             df.write.mode("overwrite").parquet(args.out)
@@ -317,17 +234,9 @@ def main(argv: list[str] | None = None) -> int:
             docs = reader(spark, args.curate, args.input_schema)
         bench = (spark.read.parquet(args.benchmark)
                  if args.benchmark else None)
-        if args.bench_embeddings and not args.embeddings:
-            raise SystemExit("-bench_embeddings requires -embeddings")
-        if args.prior_embeddings and not args.embeddings:
-            raise SystemExit("-prior_embeddings requires -embeddings (the "
-                             "current corpus's vectors)")
-        if args.embeddings and not (args.bench_embeddings
-                                    or args.prior_embeddings):
-            raise SystemExit(
-                "-embeddings needs -bench_embeddings (semantic "
-                "decontamination) and/or -prior_embeddings (cross-release "
-                "embedding dedup)")
+        if bool(args.bench_embeddings) != bool(args.embeddings):
+            raise SystemExit("-bench_embeddings and -embeddings go "
+                             "together (semantic decontamination)")
         sem_kw = {}
         if args.bench_embeddings:
             sem_kw = dict(
@@ -336,89 +245,9 @@ def main(argv: list[str] | None = None) -> int:
                 semantic_threshold=args.semantic_threshold)
         if args.prior:
             sem_kw["reference_docs"] = spark.read.parquet(args.prior)
-        if (args.mixture is not None or args.budget is not None
-                or args.token_budget is not None
-                or args.src_budget is not None
-                or args.bucket_width is not None
-                or args.prev_release is not None
-                or args.prior_embeddings is not None
-                or args.dsir_target is not None):
-            from cloudbrush_spark.pipeline.release import (
-                ReleasePipeline, incremental_release)
-            weights = json.loads(args.mixture) if args.mixture else None
-            src_budgets = (json.loads(args.src_budget)
-                           if args.src_budget else None)
-            rel_kw = dict(
-                mixture_weights=weights, budget=args.budget,
-                token_budget=args.token_budget,
-                source_token_budgets=src_budgets,
-                report=args.report, audit_spans=args.audit_spans,
-                files_per_split=args.files_per_split, benchmark=bench,
-                quality_min=args.quality_min, lang=args.lang,
-                min_tokens=args.min_tokens, max_tokens=args.max_tokens,
-                decontam_n=args.decontam_n, **sem_kw)
-            extra_info: dict = {}
-            if args.bucket_width is not None:
-                rel_kw["bucketed_publish"] = True
-                rel_kw["publish_bucket_width"] = args.bucket_width
-            if args.prior_embeddings:
-                def _dvec(path):
-                    df = spark.read.parquet(path)
-                    if "doc_id" not in df.columns and "vec_id" in df.columns:
-                        df = df.withColumnRenamed("vec_id", "doc_id")
-                    return df.select(
-                        "doc_id",
-                        F.transform("embedding",
-                                    lambda x: x.cast("double"))
-                        .alias("embedding"))
-                rel_kw["embeddings"] = _dvec(args.embeddings)
-                rel_kw["prior_embeddings"] = _dvec(args.prior_embeddings)
-                rel_kw["embedding_threshold"] = args.emb_dedup_threshold
-            if args.dsir_target:
-                rel_kw["dsir_target"] = spark.read.parquet(args.dsir_target)
-            if args.prev_release and not args.base:
-                # without -base there is no delta to bound the rewrite,
-                # so the publish would silently fall back to a full
-                # from-scratch release — refuse instead of surprising
-                raise SystemExit(
-                    "-prev_release requires -base (and -prev_features): "
-                    "an incremental publish needs the previous snapshot "
-                    "to compute the delta; without it the run would be "
-                    "a full republish, not what you asked for.")
-            if args.base:
-                prev = (spark.read.parquet(args.prev_features)
-                        if args.prev_features else None)
-                rel = incremental_release(
-                    spark, spark.read.parquet(args.base), docs, args.out,
-                    prev_features=prev, checkpoint_dir=args.ckpt,
-                    prev_release_path=args.prev_release,
-                    verbose=True, boilerplate_max_df=args.boiler_df,
-                    scrub_spans_min_df=args.scrub_spans_df, **rel_kw)
-                delta = spark.read.parquet(
-                    os.path.join(args.out, "delta.parquet"))
-                extra_info["delta"] = {
-                    r.action: r.n for r in delta.groupBy("action")
-                    .agg(F.count(F.lit(1)).alias("n")).collect()}
-            else:
-                pipe = ReleasePipeline(spark, checkpoint_dir=args.ckpt,
-                                       verbose=True)
-                rel = pipe.run(
-                    docs, args.out, boilerplate_max_df=args.boiler_df,
-                    scrub_spans_min_df=args.scrub_spans_df,
-                    cache_features=args.cache_features, **rel_kw)
-                extra_info["stages"] = pipe.counters
-            counts = {r.split: r.n for r in rel.groupBy("split")
-                      .agg(F.count(F.lit(1)).alias("n")).collect()}
-            n_shards = rel.agg(F.count_distinct("shard_id").alias("n")) \
-                .collect()[0].n
-            print("released:", json.dumps(
-                {"splits": counts, "shards": n_shards, **extra_info},
-                sort_keys=True))
-            return 0
         if args.boiler_df is not None:
-            # plain-curate path: scrub the corpus itself so the
-            # published text (not just the gate) is boilerplate-free —
-            # same contract as the release chain's stage 0
+            # scrub the corpus itself so the published text (not just
+            # the gate) is boilerplate-free
             from cloudbrush_spark.operators.guard import boilerplate_scrub
             cleaned = boilerplate_scrub(docs, max_df=args.boiler_df)
             other = [c for c in docs.columns if c != "text"]
@@ -427,7 +256,7 @@ def main(argv: list[str] | None = None) -> int:
                                F.col("clean_text").alias("text")),
                 "doc_id")
         if args.scrub_spans_df is not None:
-            # same pre-curate placement as the release chain's stage 0b
+            # before curate, like the boilerplate scrub
             from cloudbrush_spark.operators.guard import span_scrub
             cleaned = span_scrub(docs, min_df=args.scrub_spans_df)
             other = [c for c in docs.columns if c != "text"]

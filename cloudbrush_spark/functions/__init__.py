@@ -1,1 +1,1 @@
-from cloudbrush_spark.functions import dna, hashing, text  # noqa: F401
+from cloudbrush_spark.functions import dna, text  # noqa: F401

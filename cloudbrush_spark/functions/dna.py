@@ -21,9 +21,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Edge types of the bidirected string graph (src/Brush/Node.java:78).
-EDGE_TYPES = ("ff", "fr", "rf", "rr")
-
 _FLIP_DIR = {"f": "r", "r": "f"}
 # flip_link: reversing an edge (a -et-> b) gives (b -flip(et)-> a).
 _FLIP_LINK = {"ff": "rr", "rr": "ff", "fr": "fr", "rf": "rf"}
@@ -90,10 +87,6 @@ def rc_py(seq: str) -> str:
     """Driver-side reverse complement (for the collect()-fallback contraction)."""
     comp = str.maketrans("ACGT", "TGCA")
     return seq.translate(comp)[::-1]
-
-
-def str_concat_py(a: str, b: str, ov: int) -> str:
-    return a + b[ov:]
 
 
 def valid_seq(col: Column | str) -> Column:

@@ -107,13 +107,6 @@ def punct_ratio(col: Column | str) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise((n - stripped) / n)
 
 
-def upper_ratio(col: Column | str) -> Column:
-    col = F.col(col) if isinstance(col, str) else col
-    n = F.length(col)
-    uppers = n - F.length(F.regexp_replace(col, r"[A-Z]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(uppers / n)
-
-
 def stopword_ratio(col: Column | str) -> Column:
     """Fraction of tokens that are English stopwords."""
     return stopword_ratio_from_tokens(tokens(col))

@@ -20,7 +20,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import dna, text
@@ -187,16 +187,6 @@ def dedup_reads(reads: DataFrame, id_col: str = "read_id", seq_col: str = "seq",
     )
 
 
-def exact_dedup(df: DataFrame, key: Column, id_col: str) -> DataFrame:
-    """Generic exact dedup: one survivor (min id) per key + duplicate count."""
-    return (
-        df.withColumn("__key", key)
-        .groupBy("__key")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_cnt"))
-        .drop("__key")
-    )
-
-
 def fingerprint_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Near-exact dedup on the normalized-token fingerprint (case/punct/ws
     insensitive).  Output: one row per fingerprint with survivor + count."""
@@ -210,24 +200,6 @@ def fingerprint_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
 # --------------------------------------------------------------------------
 # MinHash + LSH
 # --------------------------------------------------------------------------
-
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                       shingle_n: int = 3, num_hashes: int = 16) -> DataFrame:
-    """Per-document MinHash signature, one row per (doc, hash_idx).
-
-    Hash family: ``md5(i || shingle)`` — content-addressed and engine-
-    portable (identical in any SQL engine, which is what makes this operator
-    oracle-checkable), deterministic across runs, and uniformly distributed.
-    Word-level ``shingle_n``-grams are the shingle universe.
-
-    Plan shape: explode shingles -> distinct -> ONE wide aggregate with
-    ``num_hashes`` min() columns -> melt back to (doc, h, minhash).  The
-    hash-index explode would push num_hashes x |shingles| rows through the
-    shuffle; the wide form hashes the same values but shuffles only
-    |shingles| rows with map-side partial mins (~2x faster measured).
-    """
-    shingles = _shingle_sets(docs, id_col, text_col, shingle_n)
-    return minhash_signatures_from_shingles(shingles, id_col, num_hashes)
 
 
 def minhash_signatures_from_shingles(shingles: DataFrame, id_col: str = "doc_id",
@@ -619,13 +591,6 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str =
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
     )
-
-
-def ngram_jaccard_pairs_for(docs: DataFrame, pairs: DataFrame, id_col: str,
-                            text_col: str, shingle_n: int) -> DataFrame:
-    """Exact Jaccard for a given candidate-pair set (verification step)."""
-    sh = _shingle_sets(docs, id_col, text_col, shingle_n)
-    return _jaccard_for_pairs(sh, pairs, id_col)
 
 
 def _jaccard_for_pairs(sh: DataFrame, pairs: DataFrame, id_col: str,

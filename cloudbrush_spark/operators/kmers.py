@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cloudbrush_spark.functions import dna, text
+from cloudbrush_spark.functions import dna
 
 
 def kmer_counts(reads: DataFrame, k: int, id_col: str = "read_id", seq_col: str = "seq",
@@ -46,12 +46,6 @@ def high_kmers(reads: DataFrame, k: int, up_kmer: int = 2000, **kw) -> DataFrame
     return kmer_counts(reads, k, **kw).filter(F.col("cnt") > up_kmer).select("kmer", "cnt")
 
 
-def kmer_histogram(kmer_cnt: DataFrame) -> DataFrame:
-    """A4 KmerStatus: count -> number of k-mers at that count
-    (src/Brush/KmerStatus.java:50-72)."""
-    return kmer_cnt.groupBy(F.col("cnt").alias("cnt")).agg(F.count(F.lit(1)).alias("num_kmers"))
-
-
 def kmer_freq_of_reads(reads: DataFrame, k: int, id_col: str = "read_id",
                        seq_col: str = "seq") -> DataFrame:
     """A5 KmerFrequencyOfReads: for each read, the sum over its k-mers of the
@@ -80,23 +74,4 @@ def trusted_reads(reads: DataFrame, k: int, threshold: int,
     freqs = kmer_freq_of_reads(reads, k, id_col, seq_col)
     return freqs.select(
         id_col, (F.col("min_freq") > threshold).alias("trusted")
-    )
-
-
-def ngram_counts(docs: DataFrame, n: int, text_col: str = "text",
-                 word_grams: bool = True) -> DataFrame:
-    """Text generalization: word (or char) n-gram counts + doc frequency.
-
-    Output: (gram, cnt, doc_cnt).
-    """
-    if word_grams:
-        grams = docs.select(
-            F.col("doc_id"),
-            F.explode(text.word_shingles(text.tokens(text_col), n)).alias("gram"),
-        )
-    else:
-        grams = docs.select(F.col("doc_id"), F.explode(text.char_shingles(text_col, n)).alias("gram"))
-    return grams.groupBy("gram").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.countDistinct("doc_id").alias("doc_cnt"),
     )

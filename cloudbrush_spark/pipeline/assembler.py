@@ -41,8 +41,10 @@ class Assembler:
     def _stage(self, name: str, fn) -> tuple[DataFrame, DataFrame]:
         if not self.checkpoint_dir:
             return fn()
-        # Hadoop FS markers: a checkpoint_dir on HDFS/S3 resumes like a
-        # local one (see ReleasePipeline._stage)
+        # markers go through the Hadoop FS API so a checkpoint_dir on
+        # HDFS/S3 resumes like a local one (os.path marker checks never
+        # see those schemes: the run would silently never resume, and
+        # the marker write would fail outright)
         from cloudbrush_spark.sources.corpus import fs_exists, fs_write_text
         base = f"{self.checkpoint_dir}/{name}"
         marker = f"{base}/_DONE"

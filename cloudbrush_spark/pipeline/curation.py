@@ -64,19 +64,15 @@ def gate_features(docs: DataFrame, id_col: str = "doc_id",
     """The curate gate's per-document feature projection as a standalone
     product: (id, __toks, ws_tokens, quality, lang_pred).  Every column
     is a PURE function of the document's own text — no cross-document
-    state — which is what makes these features cacheable across
-    releases: an incremental release recomputes them only for inserted/
-    updated documents and reuses the previous release's rows for
-    unchanged ones (see ``release.incremental_release``).  Two chained
-    narrow projections, zero shuffle: the first materializes the
-    tokenizer regex ONCE as ``__toks`` and the second derives every
-    token-level feature from that array (the ``*_from_tokens``
-    variants) — the standalone column helpers each rebuild the
-    tokenizer expression, and codegen subexpression elimination does
-    not reliably dedupe the copies across the lambda-function trees
-    (measured ~20% off the projection at sf0.1; CollapseProject keeps
-    the split because ``__toks`` is non-cheap and multiply
-    referenced)."""
+    state.  Two chained narrow projections, zero shuffle: the first
+    materializes the tokenizer regex ONCE as ``__toks`` and the second
+    derives every token-level feature from that array (the
+    ``*_from_tokens`` variants) — the standalone column helpers each
+    rebuild the tokenizer expression, and codegen subexpression
+    elimination does not reliably dedupe the copies across the
+    lambda-function trees (measured ~20% off the projection at sf0.1;
+    CollapseProject keeps the split because ``__toks`` is non-cheap and
+    multiply referenced)."""
     toks = F.col("__toks")
     best = textops.lang_best_from_tokens(toks)
     # _nd_barrier on the two expensive roots (the tokenizer array and
@@ -110,8 +106,7 @@ def curate(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
            corpus_vectors: DataFrame | None = None,
            semantic_threshold: float = 0.95,
            vec_id_col: str = "vec_id",
-           reference_docs: DataFrame | None = None,
-           features: DataFrame | None = None) -> DataFrame:
+           reference_docs: DataFrame | None = None) -> DataFrame:
     """Curated-corpus manifest: one row per surviving document with its
     split assignment and headline features.
 
@@ -129,13 +124,7 @@ def curate(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # the tokenizer regex over the survivors; the raw text column is
     # dropped after the gate, so the checkpoint carries tokens in its
     # place rather than both
-    # ``features`` short-circuits the projection with a PRECOMPUTED
-    # frame of the same schema (gate_features output) — the incremental-
-    # release path, where unchanged documents' features come from the
-    # previous release's cache and only the delta was recomputed.
-    feats = features if features is not None \
-        else gate_features(docs, id_col, text_col)
-    kept = feats.filter(
+    kept = gate_features(docs, id_col, text_col).filter(
         (F.col("quality") >= quality_min) & (F.col("lang_pred") == lang)
         & F.col("ws_tokens").between(min_tokens, max_tokens))
 

@@ -72,9 +72,9 @@ def host_parallel_probe(spark: SparkSession, rows: int = 200_000) -> tuple[float
     engine regression (observed round 6: ratio 6.6, effective ~5 of 32
     cores, overlap_graph "regressed" 12.4s -> 24s with zero code change).
     The probe is sized to the host core count so a healthy 8-core machine
-    is not misread as throttled.  One shared implementation (bench.py and
-    scripts/cpu_probe.py both call it) so a recalibration cannot
-    desynchronize the recorded ratios from the documented probe.
+    is not misread as throttled.  One shared implementation (bench.py
+    calls it) so a recalibration cannot desynchronize the recorded
+    ratios from the documented probe.
     """
     import time
 
@@ -168,24 +168,4 @@ def host_witness_delta(before: dict, after: dict) -> dict:
     steal = out.pop("proc_stat_steal_ticks_delta", None)
     if steal is not None and total > 0:
         out["steal_pct"] = round(100.0 * steal / total, 2)
-    return out
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Load the driver's parquet tables and register them as temp views.
-
-    Returns a dict name -> DataFrame.  Registering views lets operators be
-    written either in the DataFrame API or via ``spark.sql``.
-    """
-    names = names or (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    )
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
     return out

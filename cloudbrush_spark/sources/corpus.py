@@ -35,18 +35,8 @@ plain shuffle join AQE can split — pass ``broadcast_manifest=False``
 
 from __future__ import annotations
 
-import json
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-#: marker file written next to a bucketed publish recording the bucket
-#: function parameters; ``publish_corpus_incremental`` refuses to run
-#: against a base release whose recorded params differ from its own
-#: (mismatched params would make dirty detection silently diverge from
-#: the base's physical directories — a duplicated/corrupted corpus).
-BUCKET_MARKER = "_cb_bucket_params.json"
 
 
 def _hfs(spark: SparkSession, path: str):
@@ -88,102 +78,28 @@ def fs_read_text(spark: SparkSession, path: str) -> str:
         ins.close()
 
 
-def _write_bucket_marker(spark: SparkSession, path: str,
-                         files_per_split: int,
-                         bucket_width: int | None,
-                         id_col: str) -> None:
-    fs_write_text(spark, f"{path}/{BUCKET_MARKER}", json.dumps(
-        {"files_per_split": files_per_split,
-         "bucket_width": bucket_width,
-         "id_col": id_col}))
-
-
-def _read_bucket_marker(spark: SparkSession, path: str) -> dict | None:
-    mp = f"{path}/{BUCKET_MARKER}"
-    if not fs_exists(spark, mp):
-        return None
-    return json.loads(fs_read_text(spark, mp))
-
-
-def _pbucket(id_col: str, files_per_split: int,
-             bucket_width: int | None):
-    """Deterministic id→directory bucket for the bucketed publish
-    layout: hash (bounded count, balanced) or id-range (delta-local).
-    Range mode uses integer ``div`` (exact past 2^53, where float floor
-    division would drift); ids are assumed non-negative."""
-    if bucket_width is not None:
-        return F.expr(f"{id_col} div {int(bucket_width)}").cast("long")
-    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_split))
-
-
 def publish_corpus(docs: DataFrame, manifest: DataFrame, path: str,
                    id_col: str = "doc_id", split_col: str = "split",
                    files_per_split: int = 16,
                    n_splits: int = 3,
                    max_records_per_file: int = 5_000_000,
                    broadcast_manifest: bool = False,
-                   compression: str = "zstd",
-                   carry_cols: tuple[str, ...] = (),
-                   bucketed: bool = False,
-                   bucket_width: int | None = None) -> None:
+                   compression: str = "zstd") -> None:
     """Join the curation manifest back to the raw corpus and write the
     published training set at ``path`` partitioned by split.
 
     If ``docs`` already carries a ``split_col`` column (a stale
     assignment from an earlier pipeline), it is dropped: the manifest's
     assignment is authoritative, and keeping both would make the join
-    output ambiguous.
-
-    ``carry_cols`` names extra manifest columns copied onto the published
-    rows (e.g. the release pipeline's copy/shard_id/offset) — a manifest
-    id may then map to SEVERAL published rows (one per up-sampled copy).
-
-    ``bucketed=True`` materializes the file bucket as a PARTITION
-    directory (``split=X/pbucket=Y/``) instead of an internal file
-    split.  Same id-sorted files; the point is that the id→directory
-    mapping becomes deterministic and directory-granular, which is what
-    lets :func:`publish_corpus_incremental` carry UNCHANGED directories
-    over from the previous release instead of rewriting the world.  Two
-    bucket functions: the default ``pmod(xxhash64(id),
-    files_per_split)`` keeps the bounded balanced-file contract;
-    ``bucket_width=W`` uses ``floor(id / W)`` instead — id-RANGE
-    buckets that PRESERVE DELTA LOCALITY (a crawl that re-touches
-    recent documents and appends new ids dirties only the trailing
-    directories, where a hash bucket scatters the same delta over every
-    directory; directory count then grows with the id space, ~W docs
-    per directory).  A corpus meant to serve as the base of incremental
-    publishes must be written with ``bucketed=True`` and the SAME
-    bucket function; :func:`read_corpus` hides the helper column on
-    read-back."""
+    output ambiguous."""
     if split_col in docs.columns:
         docs = docs.drop(split_col)
-    m = manifest.select(id_col, split_col, *carry_cols)
+    m = manifest.select(id_col, split_col)
     if broadcast_manifest:
         m = F.broadcast(m)
-    out = docs.join(m, id_col)
-    if bucketed:
-        out = out.withColumn(
-            "pbucket", _pbucket(id_col, files_per_split, bucket_width))
-        parts = (n_splits * files_per_split if bucket_width is None
-                 else None)
-        out = (
-            (out.repartition(parts, F.col(split_col), F.col("pbucket"))
-             if parts is not None else
-             out.repartition(F.col(split_col), F.col("pbucket")))
-            .sortWithinPartitions(split_col, "pbucket", id_col)
-        )
-        (out.write.mode("overwrite")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", max_records_per_file)
-            .partitionBy(split_col, "pbucket")
-            .parquet(path))
-        # record the bucket function so a later incremental publish can
-        # refuse to run with divergent params (see BUCKET_MARKER)
-        _write_bucket_marker(docs.sparkSession, path,
-                             files_per_split, bucket_width, id_col)
-        return
     out = (
-        out.repartitionByRange(
+        docs.join(m, id_col)
+        .repartitionByRange(
             n_splits * files_per_split,
             F.col(split_col),
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_split)))
@@ -200,248 +116,15 @@ def publish_corpus(docs: DataFrame, manifest: DataFrame, path: str,
         .parquet(path))
 
 
-def publish_corpus_incremental(docs: DataFrame, manifest: DataFrame,
-                               path: str, prev_path: str,
-                               prev_manifest: DataFrame,
-                               changed_ids: DataFrame,
-                               id_col: str = "doc_id",
-                               split_col: str = "split",
-                               files_per_split: int = 16,
-                               n_splits: int = 3,
-                               max_records_per_file: int = 5_000_000,
-                               compression: str = "zstd",
-                               carry_cols: tuple[str, ...] = (),
-                               bucket_width: int | None = None) -> dict:
-    """Publish release N+1 rewriting ONLY the bucket directories the
-    delta touches; every other ``split=X/pbucket=Y/`` directory is
-    carried over from release N's corpus byte-for-byte (local
-    ``file:`` releases hardlink; any other scheme copies through the
-    Hadoop FileSystem API — see the filesystem paragraph below).
-
-    A directory must be rewritten iff ANY row in it changed, under
-    either release's assignment.  Dirty ids are (a) the symmetric
-    difference of the two release manifests over their common columns —
-    catches every split/copy/shard/offset/feature reassignment even for
-    documents whose text is untouched — UNION (b) ``changed_ids``, the
-    text-level delta (insert/update/delete ids from
-    ``joins.merge_upsert``), which catches a text update whose manifest
-    row happens to be identical.  Dirty ids map to dirty directories
-    under BOTH manifests (a doc that moved split dirties its old and
-    new directory); everything else is provably byte-identical: same
-    member rows, same manifest attributes, same id-sorted order.
-
-    The dirty-directory list is small (bounded by the bucket count), so
-    the driver-side bookkeeping never scales with the corpus.  BUCKET
-    FUNCTION MATTERS: with hash buckets a uniformly-scattered 1%% delta
-    dirties ``1 - 0.99^(docs_per_bucket)`` of directories (≈ all of
-    them past ~500 docs/bucket) — hash bucketing only skips on deltas
-    far sparser than the bucket size.  Real crawl deltas are CLUSTERED
-    (recent ids re-touched, new ids appended), which ``bucket_width``
-    id-range buckets preserve: the dirty directories are the touched id
-    ranges plus the appended tail, everything else carries over.  Use
-    the same ``bucket_width`` the base release was published with.
-
-    ``prev_path`` must have been written with ``bucketed=True`` layout
-    and the same bucket function — enforced: the base release's
-    ``BUCKET_MARKER`` (written by :func:`publish_corpus` at publish
-    time) is compared against this call's params and a mismatch raises
-    (recomputing prev-manifest bucket keys with different params would
-    silently carry stale directories alongside the rewritten ones); a
-    missing marker (pre-marker release) warns and proceeds on the
-    caller's word.  All file traffic goes through the Hadoop FileSystem
-    API resolved from the paths' schemes, so releases on HDFS/S3/ABFS
-    carry server-side — with a hardlink fast-path when both releases
-    live on the local ``file:`` scheme.  Returns counters:
-    {"rewritten": n, "carried": n}."""
-    spark = docs.sparkSession
-    marker = _read_bucket_marker(spark, prev_path)
-    if marker is None:
-        warnings.warn(
-            f"publish_corpus_incremental: {prev_path} carries no "
-            f"{BUCKET_MARKER}; cannot verify it was published with "
-            f"files_per_split={files_per_split}, "
-            f"bucket_width={bucket_width} — proceeding on the caller's "
-            "word. Mismatched bucket params silently corrupt the "
-            "published corpus.", stacklevel=2)
-    else:
-        want = {"files_per_split": files_per_split,
-                "bucket_width": bucket_width,
-                "id_col": id_col}
-        if bucket_width is not None:
-            # range mode ignores files_per_split (see _pbucket)
-            want["files_per_split"] = marker.get("files_per_split")
-        if "id_col" not in marker:
-            want.pop("id_col")  # pre-id_col marker (early r11)
-        if marker != want:
-            raise ValueError(
-                f"bucket-function mismatch: {prev_path} was published "
-                f"with {marker}, this incremental publish was called "
-                f"with {want}. Dirty detection would diverge from the "
-                "base release's physical directories; re-publish the "
-                "base or pass the matching params.")
-
-    mcols = sorted(c for c in manifest.columns
-                   if c in set(prev_manifest.columns))
-    pb = _pbucket(id_col, files_per_split, bucket_width)
-
-    def _bucket_digest(m: DataFrame) -> DataFrame:
-        # one map-side-combinable aggregate per manifest: an order-
-        # insensitive multiset digest (sum of per-row hashes, wrapping
-        # long arithmetic) + row count per directory key.  Detects ANY
-        # row-set change in a directory at a fraction of the cost of a
-        # full exceptAll symmetric diff (measured at x100: the exceptAll
-        # form's two wide shuffles cost more than the publish write it
-        # was saving).
-        # mask to 32 bits so the sum of up to 2^31 rows per directory
-        # stays inside a long under ANSI arithmetic; the count column
-        # covers the (already astronomically unlikely) masked-sum
-        # collision space further
-        row_h = F.xxhash64(*[F.col(c) for c in mcols]) \
-            .bitwiseAND(F.lit(0xFFFFFFFF))
-        return (m.groupBy(F.col(split_col).alias("s"), pb.alias("b"))
-                .agg(F.sum(row_h).alias("h"),
-                     F.count(F.lit(1)).alias("cnt")))
-    new_d = _bucket_digest(manifest)
-    prev_d = _bucket_digest(prev_manifest)
-    diff_dirs = (
-        new_d.alias("n")
-        .join(prev_d.alias("p"), ["s", "b"], "full_outer")
-        .filter(F.col("n.h").isNull() | F.col("p.h").isNull()
-                | (F.col("n.h") != F.col("p.h"))
-                | (F.col("n.cnt") != F.col("p.cnt")))
-        .select("s", "b"))
-    # text-level delta (an update can leave its manifest row identical):
-    # map the changed ids to their directories under both assignments
-    delta_dirs = (
-        manifest.join(changed_ids.select(id_col), id_col, "left_semi")
-        .select(F.col(split_col).alias("s"), pb.alias("b"))
-        .union(prev_manifest.join(changed_ids.select(id_col), id_col,
-                                  "left_semi")
-               .select(F.col(split_col).alias("s"), pb.alias("b"))))
-    dirty_dirs = diff_dirs.union(delta_dirs).distinct().collect()
-    dirty_set = {(r.s, int(r.b)) for r in dirty_dirs}
-    # rewrite the dirty directories from the new corpus
-    if split_col in docs.columns:
-        docs = docs.drop(split_col)
-    m = manifest.select(id_col, split_col, *carry_cols)
-    out = docs.join(m, id_col).withColumn("pbucket", pb)
-    if dirty_set:
-        # bounded literal membership test (a 3000-term OR tree would
-        # bloat the expression; one isin on the concatenated key stays
-        # a single predicate)
-        keys = [f"{s}\x00{b}" for s, b in sorted(dirty_set)]
-        cond = F.concat_ws("\x00", F.col(split_col),
-                           F.col("pbucket").cast("string")).isin(keys)
-        (out.filter(cond)
-            .repartition(max(1, min(len(dirty_set), 1024)),
-                         F.col(split_col), F.col("pbucket"))
-            .sortWithinPartitions(split_col, "pbucket", id_col)
-            .write.mode("overwrite")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", max_records_per_file)
-            .partitionBy(split_col, "pbucket")
-            .parquet(path))
-    else:
-        _, _, dfs0, droot0 = _hfs(spark, path)
-        dfs0.mkdirs(droot0)
-        dfs0.create(spark._jvm.org.apache.hadoop.fs.Path(
-            droot0, "_SUCCESS"), True).close()
-    # carry over every clean directory from the previous release.
-    # Hadoop FS API throughout: listStatus sees whatever scheme the
-    # release lives on, and FileUtil.copy is scheme-aware (server-side
-    # where the store supports it).  When BOTH releases are local
-    # (file: scheme) a hardlink replaces the copy — carried terabytes
-    # cost zero bytes of IO on a posix filesystem.
-    jvm, conf, sfs, sroot = _hfs(spark, prev_path)
-    _, _, dfs, droot = _hfs(spark, path)
-    HPath = jvm.org.apache.hadoop.fs.Path
-    FileUtil = jvm.org.apache.hadoop.fs.FileUtil
-    local = sfs.getScheme() == "file" and dfs.getScheme() == "file"
-
-    def _link_or_copy(src_st, dst_dir):
-        sp = src_st.getPath()
-        dp = HPath(dst_dir, sp.getName())
-        if local:
-            import os
-            try:
-                os.link(sp.toUri().getPath(), dp.toUri().getPath())
-                return
-            except OSError:
-                pass  # cross-device / no-hardlink FS: fall through
-        FileUtil.copy(sfs, sp, dfs, dp, False, conf)
-
-    def _carry_dir(s_st, b_st):
-        sdir = s_st.getPath().getName()
-        bdir = b_st.getPath().getName()
-        dst = HPath(HPath(droot, sdir), bdir)
-        dfs.mkdirs(dst)
-        for f_st in sfs.listStatus(b_st.getPath()):
-            if f_st.getPath().getName().endswith(".parquet"):
-                _link_or_copy(f_st, dst)
-
-    clean_dirs = []
-    for s_st in sorted(sfs.listStatus(sroot),
-                       key=lambda st: st.getPath().getName()):
-        sdir = s_st.getPath().getName()
-        if not (s_st.isDirectory() and sdir.startswith(f"{split_col}=")):
-            continue
-        sval = sdir.split("=", 1)[1]
-        for b_st in sorted(sfs.listStatus(s_st.getPath()),
-                           key=lambda st: st.getPath().getName()):
-            bdir = b_st.getPath().getName()
-            if not (b_st.isDirectory() and bdir.startswith("pbucket=")):
-                continue
-            if (sval, int(bdir.split("=", 1)[1])) in dirty_set:
-                continue
-            clean_dirs.append((s_st, b_st))
-    # the per-directory copies are independent IO calls (server-side on
-    # object stores) — a sequential driver loop over thousands of
-    # directories would serialize minutes of pure latency; py4j handles
-    # concurrent calls over per-thread gateway connections
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=min(16, max(1, len(clean_dirs)))) \
-            as pool:
-        list(pool.map(lambda sb: _carry_dir(*sb), clean_dirs))
-    _write_bucket_marker(spark, path, files_per_split, bucket_width,
-                         id_col)
-    return {"rewritten": len(dirty_set), "carried": len(clean_dirs)}
-
-
 def read_corpus(spark: SparkSession, path: str,
                 split: str | None = None,
-                split_col: str = "split",
-                id_range: tuple[int, int] | None = None,
-                id_col: str = "doc_id") -> DataFrame:
+                split_col: str = "split") -> DataFrame:
     """Read a published corpus; ``split`` filters via partition pruning
     (directory-level — verify with .explain(): PartitionFilters, not
-    PushedFilters).
-
-    ``id_range=(lo, hi)`` (inclusive) filters by document id — and on a
-    corpus published with range buckets (``bucket_width=W``, recorded
-    in the ``BUCKET_MARKER``), the id range is additionally translated
-    to a ``pbucket`` PARTITION filter (``lo div W .. hi div W``), so an
-    id-range scan prunes at the directory level before any file is
-    listed — the read-side payoff of the range-bucketed layout (hash
-    layouts scatter an id range over every directory; there only the
-    parquet min/max row-group stats prune, which the id-sorted files
-    already serve)."""
+    PushedFilters)."""
     df = spark.read.parquet(path)
     if split is not None:
         df = df.filter(F.col(split_col) == split)
-    if id_range is not None:
-        lo, hi = id_range
-        df = df.filter((F.col(id_col) >= lo) & (F.col(id_col) <= hi))
-        marker = _read_bucket_marker(spark, path)
-        if (marker and marker.get("bucket_width")
-                and marker.get("id_col") == id_col
-                and "pbucket" in df.columns):
-            w = int(marker["bucket_width"])
-            df = df.filter((F.col("pbucket") >= lo // w)
-                           & (F.col("pbucket") <= hi // w))
-    if "pbucket" in df.columns:
-        # internal file-bucket partition column of the bucketed layout
-        # (see publish_corpus(bucketed=True)) — not part of the corpus
-        df = df.drop("pbucket")
     return df
 
 

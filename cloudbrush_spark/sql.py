@@ -3,21 +3,16 @@
 SURVEY §2.8/§7: the relational operator family "comes free from Spark
 SQL and should be exposed" — a user's first query against an analytics
 engine is usually ``SELECT ...`` over named tables, not a Python API
-call.  This module registers the engine's data surfaces as session temp
-views so that textual SQL reaches everything:
-
-- :func:`register_table_views` — the analytic tables (the TPC-H-ish
-  parquet directory: region/nation/customer/supplier/part/orders/
-  lineitem/events/documents/embeddings).
-- :func:`register_release_views` — a published release: ``corpus`` (the
-  split-partitioned training set as read back, bucket helper column
-  hidden) and ``release_manifest``.
+call.  :func:`register_table_views` registers the analytic tables (the
+TPC-H-ish parquet directory: region/nation/customer/supplier/part/
+orders/lineitem/events/documents/embeddings) as session temp views, so
+textual SQL reaches them.
 
 Scale note: a temp view over ``spark.read.parquet`` is purely logical —
 Catalyst still pushes filters/prunes columns/prunes partitions through
 it, so the SQL surface costs nothing over the DataFrame API (plan-pinned
 in ``tests/test_cli.py``).  The CLI counterpart is ``-sql 'SELECT ...'``
-(``python -m cloudbrush_spark -sql ... -data DIR [-release DIR]``).
+(``python -m cloudbrush_spark -sql ... -data DIR``).
 """
 
 from __future__ import annotations
@@ -39,28 +34,6 @@ def register_table_views(spark: SparkSession, data_dir: str,
         if fs_exists(spark, p):
             spark.read.parquet(p).createOrReplaceTempView(t)
             registered.append(t)
-    return registered
-
-
-def register_release_views(spark: SparkSession, release_dir: str) -> list[str]:
-    """Register a published release's ``corpus`` and
-    ``release_manifest`` views (see ``pipeline/release.py`` for the
-    layout)."""
-    from cloudbrush_spark.sources import corpus as corpus_sink
-    from cloudbrush_spark.sources.corpus import fs_exists
-    registered = []
-    cpath = f"{release_dir}/corpus"
-    if fs_exists(spark, cpath):
-        corpus_sink.read_corpus(spark, cpath) \
-            .createOrReplaceTempView("corpus")
-        registered.append("corpus")
-    side_tables = ("release_manifest", "delta", "features", "report",
-                   "spans", "dsir")
-    for name in side_tables:
-        p = f"{release_dir}/{name}.parquet"
-        if fs_exists(spark, p):
-            spark.read.parquet(p).createOrReplaceTempView(name)
-            registered.append(name)
     return registered
 
 

@@ -9,6 +9,7 @@ report while iterating.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
@@ -114,7 +115,9 @@ def compare(spark_df, oracle_pdf: pd.DataFrame, float_tol: float = 0.0) -> list[
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None) -> int:
-    sys.path.insert(0, "/root/repo")
+    # the checkout this file lives in, so the harness checks its own
+    # registry
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from cloudbrush_spark.session import get_spark
 

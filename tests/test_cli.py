@@ -8,6 +8,13 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cloudbrush_spark.__main__ import main  # noqa: E402
+from tests.test_curation import GOOD, GOOD2  # noqa: E402
+
+# deterministic quality filler: enough distinct words, low repetition
+FILLER = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+          "lambda mu nu xi omicron pi rho sigma tau upsilon")
+PLANTED = ("this work is licensed under the creative commons attribution "
+           "share alike four point zero international license terms")
 
 
 def _write_reads(path: str) -> str:
@@ -129,10 +136,12 @@ def test_cli_curate_with_semantic_decontamination(tmp_path, spark, capsys):
     manifest = spark.read.parquet(os.path.join(out, "manifest.parquet"))
     assert {r.doc_id for r in manifest.collect()} == {1}
 
-    # one flag without the other is a usage error
+    # one flag without the other is a usage error, either way round
     import pytest
-    with pytest.raises(SystemExit):
+    with pytest.raises(SystemExit, match="together"):
         main(["-curate", src, "-out", out, "-embeddings", vpath])
+    with pytest.raises(SystemExit, match="together"):
+        main(["-curate", src, "-out", out, "-bench_embeddings", bpath])
 
 
 def test_cli_curate_boiler_df_scrubs_published_text(tmp_path, spark, capsys):
@@ -158,6 +167,33 @@ def test_cli_curate_boiler_df_scrubs_published_text(tmp_path, spark, capsys):
         F.col("text").contains("subscribe to our newsletter")).count() == 0
     row = corpus.limit(1).collect()[0]
     assert row.text.startswith(base) and "\n" not in row.text
+
+    # -scrub_spans_df: a passage planted verbatim in all 12 docs is
+    # scrubbed before curate; the two base texts (df=6 each, below the
+    # cutoff of 7) survive — the scrub is targeted, not a dedup
+    rows = [(i, f"{GOOD if i % 2 == 0 else GOOD2} {FILLER} unique token "
+                f"number {i} ends here {PLANTED}") for i in range(12)]
+    src2 = str(tmp_path / "planted.parquet")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(src2)
+    out2 = str(tmp_path / "published_spans")
+    rc = main(["-curate", src2, "-out", out2, "-files_per_split", "1",
+               "-max_tokens", "2000", "-scrub_spans_df", "7"])
+    assert rc == 0
+    corpus = spark.read.parquet(os.path.join(out2, "corpus"))
+    assert corpus.count() > 0
+    assert corpus.filter(
+        F.col("text").contains("creative commons")).count() == 0
+    assert corpus.filter(
+        F.col("text").contains("quick brown fox")
+        | F.col("text").contains("story about the sea")).count() \
+        == corpus.count()
+    # the scrub runs before curate, so every manifest ws_tokens is the
+    # whitespace token count of the text the corpus actually shipped
+    man = spark.read.parquet(os.path.join(out2, "manifest.parquet"))
+    shipped = corpus.join(man.select("doc_id", "ws_tokens"), "doc_id")
+    assert shipped.count() == corpus.count()
+    assert shipped.filter(F.size(F.split(F.trim("text"), r"\s+"))
+                          != F.col("ws_tokens")).count() == 0
 
 
 def test_cli_curate_reads_jsonl_input(tmp_path, spark, capsys):
@@ -230,23 +266,13 @@ def test_cli_sql_runs_query_over_registered_views(tmp_path, spark, capsys):
     assert spark.read.parquet(outp).first().n == 5
 
 
-def test_cli_sql_release_views_and_pushdown(tmp_path, spark, capsys):
-    """-release registers corpus/release_manifest views; and the view
-    layer is purely logical — a filtered SQL over a table view still
-    pushes the predicate into the parquet scan (the temp view costs
-    nothing over the DataFrame API)."""
-    from cloudbrush_spark import sql as cbsql
+def test_cli_sql_view_pushdown(tmp_path, spark, capsys):
+    """The -data view layer is purely logical: a filtered SQL over a
+    table view still pushes the predicate into the parquet scan and
+    prunes columns (the temp view costs nothing over the DataFrame
+    API)."""
     from cloudbrush_spark import plans
-    from cloudbrush_spark.pipeline.release import release
-    from tests.test_release import _docs_distinct
-    out0 = str(tmp_path / "rel")
-    release(spark, _docs_distinct(spark, 12), out0, max_tokens=2000)
-    rc = main(["-sql",
-               "SELECT count(*) AS n FROM corpus JOIN release_manifest "
-               "USING (doc_id)", "-release", out0])
-    assert rc == 0
-    assert '"n":' in capsys.readouterr().out.replace(" ", "")
-    # pushdown through a view
+    from cloudbrush_spark import sql as cbsql
     sf = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
     cbsql.register_table_views(spark, sf, tables=("part",))
     q = cbsql.run_sql(spark,
@@ -263,94 +289,27 @@ def test_cli_sql_without_views_errors(tmp_path, spark):
         main(["-sql", "SELECT 1"])
 
 
-def test_sql_release_side_tables_registered(tmp_path, spark, capsys):
-    """register_release_views exposes every side table the release
-    wrote (delta/features from an incremental run) alongside
-    corpus/release_manifest."""
-    from cloudbrush_spark import sql as cbsql
-    from cloudbrush_spark.pipeline.release import incremental_release, release
-    from tests.test_release import _distinct_snapshot_and_crawl
-    base, crawl = _distinct_snapshot_and_crawl(spark)
-    out0, out1 = str(tmp_path / "r0"), str(tmp_path / "r1")
-    release(spark, base, out0, max_tokens=2000, cache_features=True)
-    prev = spark.read.parquet(os.path.join(out0, "features.parquet"))
-    incremental_release(spark, base, crawl, out1, prev_features=prev,
-                        max_tokens=2000)
-    views = cbsql.register_release_views(spark, out1)
-    assert {"corpus", "release_manifest", "delta", "features"} <= set(views)
-    n = cbsql.run_sql(
-        spark, "SELECT count(*) AS n FROM delta WHERE action = 'insert'"
-    ).first().n
-    assert n == 2
+def _varied_docs(spark, n=30):
+    """Docs distinct enough to SURVIVE the near-dup cluster dedup with
+    per-doc quality spread: a shared English base plus a doc-specific
+    gibberish tail whose varying length shifts the stopword-ratio
+    component."""
+    rows = []
+    for i in range(n):
+        tail = " ".join(f"tok{i}x{j}" for j in range(10 + (i * 7) % 20))
+        rows.append((i, f"{GOOD} {FILLER} {tail}",
+                     "webcrawl" if i % 2 else "curated"))
+    return spark.createDataFrame(
+        rows, "doc_id long, text string, source string")
 
 
-def test_cli_prior_embeddings_and_dsir(tmp_path, spark, capsys):
-    """-prior_embeddings/-dsir_target run the release pipeline with the
-    r11 gates; -prior_embeddings without -embeddings is refused."""
-    import pytest
-
+def test_curate_cli_report_flag(tmp_path, spark, capsys):
     from cloudbrush_spark.__main__ import main
-    from tests.test_release import _docs_distinct, _emb_for
-    docs = _docs_distinct(spark, 12)
-    p = str(tmp_path / "d.parquet")
-    docs.write.parquet(p)
-    emb = _emb_for(docs, spark)
-    e_p = str(tmp_path / "emb.parquet")
-    emb.write.parquet(e_p)
-    pe_p = str(tmp_path / "prior.parquet")
-    emb.filter("doc_id < 6").write.parquet(pe_p)
-    t_p = str(tmp_path / "target.parquet")
-    docs.filter("doc_id % 2 = 0").select("doc_id", "text") \
-        .write.parquet(t_p)
-    with pytest.raises(SystemExit, match="requires -embeddings"):
-        main(["-curate", p, "-out", str(tmp_path / "x"),
-              "-prior_embeddings", pe_p])
-    out = str(tmp_path / "rel")
-    rc = main(["-curate", p, "-out", out, "-max_tokens", "2000",
-               "-embeddings", e_p, "-prior_embeddings", pe_p,
-               "-emb_dedup_threshold", "0.99", "-dsir_target", t_p])
+    src = str(tmp_path / "docs.parquet")
+    _varied_docs(spark).write.parquet(src)
+    out = str(tmp_path / "out")
+    rc = main(["-curate", src, "-out", out, "-files_per_split", "1",
+               "-max_tokens", "2000", "-report"])
     assert rc == 0
-    import os
-
-    from cloudbrush_spark.sources import corpus as corpus_sink
-    kept = {r.doc_id for r in corpus_sink.read_corpus(
-        spark, os.path.join(out, "corpus")).select("doc_id").collect()}
-    assert kept == set(range(6, 12)), kept
-    assert os.path.exists(os.path.join(out, "dsir.parquet"))
-
-
-def test_private_tmp_root_rejects_symlink_and_lax_modes(tmp_path,
-                                                        monkeypatch):
-    """r13 advisor finding: the per-user deterministic cache root must
-    be validated with lstat — a pre-created SYMLINK at the expected name
-    (pointing at a directory the victim uid owns, e.g. /tmp when
-    running as root) passed the old stat().st_uid check and reinstated
-    the cache-poisoning vector.  Symlinks, non-directories and roots
-    with group/other bits all fall back to a private mkdtemp; a clean
-    pre-existing 0700 root is reused."""
-    import os
-
-    import __spark_entry__ as entrymod
-    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
-    expect = str(tmp_path / f"cb_u{os.getuid()}")
-    # fresh: created 0700 and reused on the second call
-    root = entrymod._private_tmp_root()
-    assert root == expect
-    assert (os.lstat(root).st_mode & 0o777) == 0o700
-    assert entrymod._private_tmp_root() == expect
-    # symlink at the expected name -> mkdtemp fallback (never follows)
-    os.rmdir(expect)
-    os.symlink(str(tmp_path), expect)
-    alt = entrymod._private_tmp_root()
-    assert alt != expect and os.path.isdir(alt) and not os.path.islink(alt)
-    os.remove(expect)
-    # plain file at the expected name -> fallback
-    open(expect, "w").close()
-    alt2 = entrymod._private_tmp_root()
-    assert alt2 != expect
-    os.remove(expect)
-    # group/other-readable pre-existing dir -> fallback
-    os.makedirs(expect, mode=0o755)
-    os.chmod(expect, 0o755)
-    alt3 = entrymod._private_tmp_root()
-    assert alt3 != expect
+    card = spark.read.parquet(os.path.join(out, "report.parquet"))
+    assert card.filter("k1 = 'corpus'").count() == 1

@@ -87,146 +87,3 @@ def test_publish_replaces_stale_split_column(spark):
         back = corpus.read_corpus(spark, path)
         # the manifest's assignment wins; no ambiguous-column crash
         assert {r.split for r in back.collect()} == {"train", "val", "test"}
-
-
-def _inc_fixture(spark, n=64):
-    """Base docs/manifest plus a crawl that updates ids 0-1, deletes 2,
-    inserts n and n+1 — clustered delta for id-range buckets."""
-    docs, manifest = _fixture(spark, n)
-    crawl = docs.filter(F.col("doc_id") != 2).withColumn(
-        "text", F.when(F.col("doc_id") < 2,
-                       F.concat(F.col("text"), F.lit(" updated")))
-        .otherwise(F.col("text")))
-    ins = spark.range(n, n + 2).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("document body "), F.col("id")).alias("text"))
-    crawl = crawl.unionByName(ins)
-    m2 = crawl.select("doc_id").join(manifest, "doc_id", "left") \
-        .withColumn("split", F.coalesce("split", F.lit("train")))
-    changed = spark.createDataFrame(
-        [(0,), (1,), (2,), (n,), (n + 1,)], "doc_id long")
-    return docs, manifest, crawl, m2, changed
-
-
-def test_incremental_publish_file_uri_scheme_dispatch(spark, tmp_path):
-    """The carry path runs through the Hadoop FileSystem API: publishing
-    and incrementally republishing via explicit file: URIs (the scheme
-    dispatch every hdfs:/s3a: release takes) produces rows identical to
-    the plain-path form, with directories actually carried."""
-    docs, manifest, crawl, m2, changed = _inc_fixture(spark)
-    base = "file:" + str(tmp_path / "rel0")
-    nxt = "file:" + str(tmp_path / "rel1")
-    corpus.publish_corpus(docs, manifest, base, bucketed=True,
-                          bucket_width=8)
-    stats = corpus.publish_corpus_incremental(
-        crawl, m2, nxt, base, manifest, changed, bucket_width=8)
-    assert stats["carried"] > 0, stats
-    back = corpus.read_corpus(spark, nxt)
-    exp = crawl.join(m2, "doc_id").select("doc_id", "text", "split")
-    assert back.select("doc_id", "text", "split") \
-        .exceptAll(exp).count() == 0
-    assert exp.exceptAll(back.select("doc_id", "text", "split")) \
-        .count() == 0
-    # marker travels with the new release (chained increments validate)
-    assert corpus._read_bucket_marker(spark, nxt) == {
-        "files_per_split": 16, "bucket_width": 8, "id_col": "doc_id"}
-
-
-def test_incremental_publish_rejects_bucket_param_mismatch(spark, tmp_path):
-    """A base published with one bucket function refuses an incremental
-    publish called with another — silent divergence of dirty-detection
-    keys from the base's physical directories would corrupt the corpus."""
-    import pytest
-
-    docs, manifest, crawl, m2, changed = _inc_fixture(spark)
-    base = str(tmp_path / "rel0")
-    corpus.publish_corpus(docs, manifest, base, bucketed=True,
-                          bucket_width=8)
-    with pytest.raises(ValueError, match="bucket-function mismatch"):
-        corpus.publish_corpus_incremental(
-            crawl, m2, str(tmp_path / "rel1"), base, manifest, changed,
-            bucket_width=None)
-    # hash mode recorded, range mode requested — also refused
-    base2 = str(tmp_path / "rel2")
-    corpus.publish_corpus(docs, manifest, base2, bucketed=True,
-                          files_per_split=4)
-    with pytest.raises(ValueError, match="bucket-function mismatch"):
-        corpus.publish_corpus_incremental(
-            crawl, m2, str(tmp_path / "rel3"), base2, manifest, changed,
-            files_per_split=4, bucket_width=8)
-
-
-def test_incremental_publish_warns_on_missing_marker(spark, tmp_path):
-    """Pre-marker releases still publish (back-compat) but warn."""
-    import warnings as _w
-
-    docs, manifest, crawl, m2, changed = _inc_fixture(spark)
-    base = str(tmp_path / "rel0")
-    corpus.publish_corpus(docs, manifest, base, bucketed=True,
-                          bucket_width=8)
-    os.remove(os.path.join(base, corpus.BUCKET_MARKER))
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        corpus.publish_corpus_incremental(
-            crawl, m2, str(tmp_path / "rel1"), base, manifest, changed,
-            bucket_width=8)
-    assert any("cannot verify" in str(r.message) for r in rec)
-
-
-def test_read_corpus_id_range_prunes_bucket_directories(spark, tmp_path):
-    """On a range-bucketed corpus, id_range translates to a pbucket
-    PARTITION filter via the recorded bucket marker: only the id
-    range's directories are scanned (directory-level, before file
-    listing), and the row set equals the plain filter's."""
-    docs, manifest = _fixture(spark, 200)
-    path = str(tmp_path / "corpus")
-    corpus.publish_corpus(docs, manifest, path, bucketed=True,
-                          bucket_width=20)
-    got = corpus.read_corpus(spark, path, id_range=(45, 72))
-    plain = corpus.read_corpus(spark, path) \
-        .filter((F.col("doc_id") >= 45) & (F.col("doc_id") <= 72))
-    assert sorted(r.doc_id for r in got.collect()) == \
-        sorted(r.doc_id for r in plain.collect())
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    pf = plan.split("PartitionFilters", 1)[1][:300]
-    assert "pbucket" in pf, plan
-    scanned = {r.f for r in got.select(
-        F.input_file_name().alias("f")).distinct().collect()}
-    assert scanned and all(
-        any(f"pbucket={b}/" in f for b in (2, 3)) for f in scanned)
-    # hash-bucketed corpora (no width in the marker): plain row filter
-    path2 = str(tmp_path / "hashed")
-    corpus.publish_corpus(docs, manifest, path2, bucketed=True)
-    got2 = corpus.read_corpus(spark, path2, id_range=(45, 72))
-    assert sorted(r.doc_id for r in got2.collect()) == \
-        sorted(r.doc_id for r in plain.collect())
-
-
-def test_incremental_publish_chains_across_releases(spark, tmp_path):
-    """Release N+2 publishes incrementally against N+1's carried-over
-    corpus and marker: the marker written by the first incremental
-    publish validates the second, and the chained corpus equals a
-    from-scratch publish of the final snapshot."""
-    docs, manifest, crawl, m2, changed = _inc_fixture(spark)
-    r0, r1, r2 = (str(tmp_path / f"rel{i}") for i in range(3))
-    corpus.publish_corpus(docs, manifest, r0, bucketed=True,
-                          bucket_width=8)
-    corpus.publish_corpus_incremental(
-        crawl, m2, r1, r0, manifest, changed, bucket_width=8)
-    # second crawl: update one doc, add one
-    crawl2 = crawl.withColumn(
-        "text", F.when(F.col("doc_id") == 10,
-                       F.concat(F.col("text"), F.lit(" again")))
-        .otherwise(F.col("text"))).unionByName(
-        spark.createDataFrame([(200, "document body 200")],
-                              "doc_id long, text string"))
-    m3 = crawl2.select("doc_id").join(m2, "doc_id", "left") \
-        .withColumn("split", F.coalesce("split", F.lit("train")))
-    changed2 = spark.createDataFrame([(10,), (200,)], "doc_id long")
-    stats = corpus.publish_corpus_incremental(
-        crawl2, m3, r2, r1, m2, changed2, bucket_width=8)
-    assert stats["carried"] > 0
-    back = corpus.read_corpus(spark, r2).select("doc_id", "text", "split")
-    exp = crawl2.join(m3, "doc_id").select("doc_id", "text", "split")
-    assert back.exceptAll(exp).count() == 0
-    assert exp.exceptAll(back).count() == 0

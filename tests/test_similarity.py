@@ -495,3 +495,52 @@ def test_broadcast_centroid_cache_thread_hammer(spark, monkeypatch):
         t.join()
     assert not errs, errs
     assert len(similarity._centroid_bc_cache) <= 2
+
+
+def _emb_for(ids, spark, drift=0.0):
+    """Deterministic per-id 8-d embeddings: id i gets a unit-ish vector
+    seeded by i; ``drift`` perturbs every vector (to make two corpora
+    near- but not exact-duplicates)."""
+    rows = []
+    for i in ids:
+        rng = random.Random(i)
+        v = [rng.uniform(-1, 1) for _ in range(8)]
+        if drift:
+            v = [x + drift * rng.uniform(-1, 1) for x in v]
+        rows.append((i, v))
+    return spark.createDataFrame(rows, "doc_id long, embedding array<double>")
+
+
+def test_cross_corpus_embedding_recall_contract_vs_exact(spark):
+    """Gate-level recall contract: on drifted twins of a prior release
+    (some above the threshold, some below), the new ids the operator
+    matches are measured against exact-cosine truth.  Every match is
+    exact-cosine verified, so precision is 1 by construction (asserted);
+    the pinned floor is RECALL >= 0.9.  Prior ids are namespaced
+    negative (the operator needs disjoint id spaces, and a release's
+    doc ids legally overlap the next one's)."""
+    new = _emb_for(range(40), spark)
+    # prior release: drifted twins of docs 0-19 under the same ids
+    prior = _emb_for(range(20), spark, drift=0.05)
+    thr = 0.995
+    new_vecs = {r.doc_id: list(r.embedding) for r in new.collect()}
+    prior_vecs = [list(r.embedding) for r in prior.collect()]
+
+    def cos(a, b):
+        d = sum(x * y for x, y in zip(a, b))
+        return d / (math.sqrt(sum(x * x for x in a))
+                    * math.sqrt(sum(x * x for x in b)))
+
+    truth = {i for i, v in new_vecs.items()
+             if any(cos(v, p) >= thr for p in prior_vecs)}
+    assert truth and truth < set(new_vecs)  # non-degenerate fixture
+
+    ref = prior.select((-F.col("doc_id") - 1).alias("doc_id"), "embedding")
+    got = similarity.cross_corpus_embedding_near_dups(
+        new, ref, dim=8, threshold=thr, seed=42, id_col="doc_id",
+        tables=8).collect()
+    assert all(r.b < 0 for r in got)  # every match is a prior-side id
+    dropped = {r.a for r in got}
+    assert dropped <= truth, (sorted(dropped - truth), sorted(truth))
+    recall = len(dropped & truth) / len(truth)
+    assert recall >= 0.9, (recall, sorted(truth - dropped))

@@ -547,77 +547,6 @@ def test_stateful_sessionize_withholds_unfinalized(spark, tmp_path):
     assert out.count() == 0
 
 
-def test_streamed_crawl_to_incremental_release_end_to_end(spark, tmp_path):
-    """The full crawl-ingest story as one pipeline: a crawl arrives as a
-    STREAM (micro-batches, at-least-once) -> stream_publish lands it
-    exactly-once -> compact_batches bounds the small files -> the
-    compacted crawl releases INCREMENTALLY against the previous snapshot
-    (delete_missing=False: a crawl is a partial view).  The resulting
-    manifest must equal a from-scratch release of the merged snapshot —
-    the ingest path must not change what ships."""
-    import os
-    from tests.test_curation import GOOD
-    from tests.test_release import FILLER
-    from cloudbrush_spark.pipeline.release import incremental_release, release
-    from cloudbrush_spark.sources.corpus import compact_batches
-    from cloudbrush_spark.streaming.windows import (
-        DOC_SCHEMA, read_document_stream, stream_publish)
-
-    def txt(i, suffix=""):
-        tail = " ".join(f"tok{i}x{j}" for j in range(10 + (i * 7) % 20))
-        return f"{GOOD} {FILLER} {tail}{suffix}"
-
-    base = spark.createDataFrame(
-        [(i, txt(i)) for i in range(12)], DOC_SCHEMA)
-
-    # the crawl stream: one file per micro-batch — updates, inserts, and
-    # unchanged resends; ids 6..11 are absent (partial view -> keep)
-    src = str(tmp_path / "crawl")
-    spark.createDataFrame(
-        [(i, txt(i, " refreshed")) for i in (0, 1)], DOC_SCHEMA) \
-        .coalesce(1).write.parquet(f"{src}/f0")
-    spark.createDataFrame(
-        [(i, txt(i)) for i in range(100, 104)], DOC_SCHEMA) \
-        .coalesce(1).write.parquet(f"{src}/f1")
-    spark.createDataFrame(
-        [(i, txt(i)) for i in range(2, 6)], DOC_SCHEMA) \
-        .coalesce(1).write.parquet(f"{src}/f2")
-
-    landed = str(tmp_path / "landed")
-    os.makedirs(landed)
-    q = (stream_publish(
-            read_document_stream(spark, src + "/*", max_files_per_trigger=1),
-            landed)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    compacted = str(tmp_path / "compacted")
-    assert compact_batches(spark, landed, compacted, files=2) == 3
-    crawl_docs = spark.read.parquet(compacted)
-    assert crawl_docs.count() == 10
-
-    inc = incremental_release(
-        spark, base, crawl_docs, str(tmp_path / "inc"),
-        delete_missing=False, max_tokens=2000)
-    key = lambda r: (r.doc_id, r.copy, r.split, r.shard_id,  # noqa: E731
-                     r.offset, r.ws_tokens, r.quality)
-    got = sorted(key(r) for r in inc.collect())
-
-    # from-scratch twin over the merged snapshot: crawl wins its keys,
-    # base survives for the rest
-    snapshot = crawl_docs.unionByName(
-        base.join(crawl_docs.select("doc_id"), "doc_id", "left_anti"))
-    want = sorted(key(r) for r in release(
-        spark, snapshot, str(tmp_path / "full"), max_tokens=2000).collect())
-    assert got == want and len(got) > 10
-    # absent-from-crawl docs were kept, not deleted
-    delta = {r.doc_id: r.action for r in spark.read.parquet(
-        str(tmp_path / "inc") + "/delta.parquet").collect()}
-    assert all(delta[i] == "keep" for i in range(6, 12))
-    assert delta[0] == "update" and delta[100] == "insert"
-
-
 # --- stream_rollup_maintain (late r9): continuous aggregate table ------------
 
 def test_stream_rollup_maintain_converges_to_batch_aggregate(spark, tmp_path):
