@@ -99,3 +99,35 @@ def lm_score(docs: DataFrame, unigrams: DataFrame, bigrams: DataFrame,
     return scored.groupBy(id_col).agg(
         F.sum(F.col("w1").isNotNull().cast("long")).alias("n_bigrams"),
         F.avg("lp").alias("avg_logprob"))
+
+
+def importance_weights(docs: DataFrame, target_model, raw_model,
+                       k: float = 1.0, id_col: str = "doc_id",
+                       text_col: str = "text") -> DataFrame:
+    """DSIR-style data-selection weights (Xie et al. 2023, "Data
+    Selection for Language Models via Importance Resampling"): per
+    document, ``weight = avg log p_target(x) − avg log p_raw(x)`` under
+    two n-gram models — positive means the document looks more like the
+    TARGET distribution (the domain you want more of) than like the raw
+    pool it came from.  Feed the weights to
+    ``sampling.mixture_resample``/``budget_select`` to resample the pool
+    toward the target.
+
+    ``target_model`` / ``raw_model`` are ``bigram_lm`` outputs
+    (unigrams, bigrams, vocab_size).  Two scoring passes over the same
+    bigram explode shape, joined on the id — both models broadcast, so
+    the corpus is read once per pass with no extra shuffle beyond the
+    per-doc aggregate.  Output: (id_col, n_bigrams, logp_target,
+    logp_raw, weight)."""
+    t_uni, t_big, t_v = target_model
+    r_uni, r_big, r_v = raw_model
+    t = lm_score(docs, t_uni, t_big, t_v, k=k, id_col=id_col,
+                 text_col=text_col) \
+        .withColumnRenamed("avg_logprob", "logp_target")
+    r = lm_score(docs, r_uni, r_big, r_v, k=k, id_col=id_col,
+                 text_col=text_col) \
+        .select(id_col, F.col("avg_logprob").alias("logp_raw"))
+    return (t.join(r, id_col)
+            .withColumn("weight", F.col("logp_target") - F.col("logp_raw"))
+            .select(id_col, "n_bigrams", "logp_target", "logp_raw",
+                    "weight"))

@@ -172,6 +172,40 @@ def test_decontaminate_corpus_side_has_single_aggregation_shuffle(spark):
     assert "SortMergeJoin" not in plan or "gh" not in plan.split("SortMergeJoin")[1][:200]
 
 
+def test_pack_shards_no_global_single_partition_sort_on_rows(spark):
+    """pack_shards' only SinglePartition window must be over the
+    bucket-totals frame (buckets rows), never the row-level data: the
+    row-level window is partitioned by bucket."""
+    from cloudbrush_spark.operators import sampling
+    df = spark.range(0, 1000).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 30 + 1).alias("n_tokens"))
+    q = sampling.pack_shards(df, "n_tokens", budget=100, buckets=16)
+    plan = plans.explain_str(q)
+    # the bucket-prefix frame reaches the row side through a broadcast
+    assert plans.has_broadcast_join(q)
+    # row-level cumsum window is hash-partitioned by bucket
+    assert "hashpartitioning(b" in plan
+
+
+def test_budget_select_prunes_buckets_before_the_row_sort(spark):
+    """budget_select's row-level cumsum window is partitioned by the
+    quality range bucket (never SinglePartition), the surviving bucket
+    list reaches the rows by BROADCAST, and the budget prune (pre <=
+    budget) sits on the bucket-totals side of that join — so buckets
+    past the budget are dropped before any per-bucket sort happens."""
+    from cloudbrush_spark.operators import sampling
+    df = spark.range(0, 1000).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 30 + 1).alias("n_tokens"),
+        ((F.col("id") % 13) / 12.0).alias("quality"))
+    q = sampling.budget_select(df, "n_tokens", "quality", budget=500,
+                               buckets=16)
+    plan = plans.explain_str(q)
+    assert plans.has_broadcast_join(q)
+    assert "hashpartitioning(b" in plan
+    # the prune filter references the bucket prefix, not row columns
+    assert "(pre" in plan and "500" in plan
+
+
 def test_mixture_resample_is_narrow(spark):
     """Mixture construction (filter + bounded explode) must add no
     exchange — reweighting a 100 TB corpus is a single linear pass."""
@@ -231,6 +265,25 @@ def test_tpch_r9_legs_keep_their_join_shapes(spark):
     # and supplier dims must broadcast, never shuffle the fact twice.
     q9 = plans.explain_str(entry.q_tpch_q9(spark, SF))
     assert "BroadcastExchange" in q9
+
+
+def test_pack_sequences_single_exchange_no_global_sort(spark):
+    """pack_sequences must keep pack_shards' two-phase shape: the only
+    unpartitioned window is the buckets-row totals frame; the corpus
+    itself never passes through a SinglePartition exchange or a global
+    Sort."""
+    from cloudbrush_spark.operators import sampling
+    df = spark.createDataFrame(
+        [(i, i % 50 + 1) for i in range(200)], "doc_id long, n_tokens long")
+    plan = plans.explain_str(
+        sampling.pack_sequences(df, "n_tokens", max_len=64, buckets=8))
+    # the bucket-totals frame is the one allowed SinglePartition window;
+    # it must be fed by the AGGREGATED buckets-row frame, never the rows
+    segs = plan.split("SinglePartition")
+    assert len(segs) <= 2
+    if len(segs) == 2:
+        assert "HashAggregate" in segs[0].rsplit("Exchange", 2)[-2] \
+            or "HashAggregate" in plan.split("SinglePartition")[0][-2000:]
 
 
 def test_stratified_sample_prunes_and_never_single_partitions(spark):
