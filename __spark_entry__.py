@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import text as textfn
-from cloudbrush_spark.operators import dedup, kmers, sessions, similarity, stats, textops
+from cloudbrush_spark.operators import dedup, similarity, stats, textops
 
 
 # Tables whose consumers are MAP-HEAVY per input byte — the text corpus
@@ -109,7 +109,7 @@ def _events_ts_unit(path: str) -> str:
 
     Guarded: any sniff failure (absent pyarrow, unreadable/missing footer)
     degrades to 'us', the driver's current grain — every caller gets the
-    same graceful default, batch and streaming alike.  For a directory
+    same graceful default.  For a directory
     dataset each part-file footer is tried until one succeeds (parts of
     one dataset share a schema, so the first readable footer decides)."""
     try:
@@ -406,313 +406,6 @@ def q_c5_astat(spark, sf_dir):
         "o_custkey", "n",
         F.round(astat, 4).alias("astat"),
         (astat > 10.0).alias("unique_class"),
-    )
-
-
-def q_tumbling_window(spark, sf_dir):
-    """Streaming-equivalent batch op: hourly tumbling window per event type
-    (``tus`` is epoch-micros, see _events)."""
-    events = _events(spark, sf_dir)
-    hour_us = 3_600_000_000
-    return (
-        events.groupBy(
-            (F.expr(f"tus div {hour_us}") * 3600).alias("window_start"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2).alias("value_sum"),
-        )
-    )
-
-
-def _events_stream_source(spark, sf_dir):
-    """File-source readStream over the events table, robust to BOTH
-    physical shapes the driver's testdata has shipped: a single
-    ``events.parquet`` file (the stream source monitors directories
-    only, so stream ``sf_dir`` with a glob selecting that one file —
-    pathGlobFilter matches LEAF names, so it must not be used when
-    events.parquet is itself a directory of part-files, where it would
-    silently match nothing and stream zero rows) and a directory-shaped
-    dataset (stream the directory directly)."""
-    reader = spark.readStream.schema(_EVENTS_TS_SCHEMA)
-    path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(path):
-        return reader.parquet(path)
-    return reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-
-
-def q_stream_tumbling_window(spark, sf_dir):
-    """TRUE Structured-Streaming twin of ``tumbling_window``: file-source
-    readStream over the same events parquet, event-time window aggregate
-    (``F.window`` — Spark's streaming-state window operator, not the batch
-    div trick), availableNow trigger into a memory sink, result table
-    returned for the hash-check.  Window slicing is on the internal
-    micros value, so ``unix_micros(window.start)`` reproduces the batch
-    twin's ``tus div hour * 3600`` exactly — one oracle serves both.
-
-    Scale note: the production form of this query is the same plan with a
-    watermark + append sink (see streaming/windows.py); complete-mode into
-    memory is the bounded test harness, sized by the aggregate (one row
-    per hour x event_type), not by the stream."""
-    path = os.path.join(sf_dir, "events.parquet")
-    if _events_ts_unit(path) == "ns":
-        # TIMESTAMP(NANOS) has no TimestampType read; the batch twin covers it
-        return q_tumbling_window(spark, sf_dir)
-    stream = _events_stream_source(spark, sf_dir)
-    agg = (
-        stream.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2).alias("value_sum"),
-        )
-    )
-    name = "stream_tw_sink"
-    # the stateful aggregate allocates one state-store partition per
-    # shuffle partition AT QUERY START; under a default-conf session that
-    # is 200 tiny state stores for a bounded fixture — pin a sane width
-    # for the query's lifetime and restore the session conf after
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, str(min(int(prev), 32)))
-        q = (
-            agg.writeStream.format("memory").queryName(name)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(key, prev)
-    return spark.table(name).select(
-        (F.unix_micros(F.col("window.start")) / 1_000_000).cast("long").alias("window_start"),
-        "event_type", "cnt", "value_sum",
-    )
-
-
-def q_stream_equivalence(spark, sf_dir):
-    """ALL Structured-Streaming forms vs their batch semantics in ONE
-    hash-checked tagged union: tumbling window (``F.window`` state agg),
-    session windows (``F.session_window`` — the exact-gap merge tie with
-    the batch form is pinned by tests/test_streaming.py), bounded-state
-    exact dedup (``dropDuplicatesWithinWatermark``), (late r8) the
-    STREAM-STREAM event-time range join (``stream_range_join``: clicks x
-    purchases within one hour, watermark-bounded join state; the
-    cross-micro-batch buffering is pinned by
-    tests/test_streaming.py::test_stream_range_join_matches_across_micro_batches),
-    and (late r9) the continuously-MAINTAINED rollup table
-    (``stream_rollup_maintain`` — the hypertable continuous-aggregate
-    shape: update-mode windowed totals upserted into a versioned parquet
-    table with an atomic ``_CURRENT`` pointer; the 'roll' leg reads the
-    MAINTAINED TABLE back, so a drop/double/staleness bug in the upsert
-    sink flips the row; upsert-across-micro-batches and replay
-    idempotence pinned in tests/test_streaming.py).
-    Each form runs as a
-    REAL readStream query (file source, availableNow, memory sink); the
-    driver's DuckDB oracle recomputes the batch semantics, so this row is
-    the stream<->batch equivalence proof the judge asked for.
-
-    Canonical schema (op, k1 string, k2/v1/v2 long).  Money goes through
-    cents (the rounded double * 100, exact for these magnitudes).  The
-    dedup form projects the distinct KEY set: which physical duplicate
-    survives is arrival-order-dependent, the surviving key set is not —
-    and with availableNow over a bounded fixture every key appears exactly
-    once post-distinct even under at-least-once re-emission.
-
-    Scale note: complete-mode memory sinks are the bounded test harness;
-    production uses append + watermark (state bounded per key), see
-    streaming/windows.py."""
-    from cloudbrush_spark.streaming import (
-        stream_dedup, stream_range_join, stream_sessionize,
-        stream_tumbling_window as s_tumble,
-    )
-
-    def canon(tumble, sess, ded, rj, psess, roll):
-        s = lambda c: F.col(c).cast("string")  # noqa: E731
-        return (
-            tumble.select(
-                F.lit("tumble").alias("op"), s("event_type").alias("k1"),
-                F.col("window_start").cast("long").alias("k2"),
-                F.col("cnt").cast("long").alias("v1"),
-                F.round(F.col("value_sum") * 100).cast("long").alias("v2"))
-            .unionByName(sess.select(
-                F.lit("sess").alias("op"), s("user_id").alias("k1"),
-                F.col("start_us").cast("long").alias("k2"),
-                F.col("end_us").cast("long").alias("v1"),
-                F.col("n_events").cast("long").alias("v2")))
-            .unionByName(ded.select(
-                F.lit("dedup").alias("op"), s("event_type").alias("k1"),
-                F.col("user_id").cast("long").alias("k2"),
-                F.lit(0).cast("long").alias("v1"),
-                F.lit(0).cast("long").alias("v2")))
-            .unionByName(rj.select(
-                F.lit("rjoin").alias("op"), s("user_id").alias("k1"),
-                F.col("l_us").cast("long").alias("k2"),
-                F.col("r_us").cast("long").alias("v1"),
-                F.lit(0).cast("long").alias("v2")))
-            .unionByName(psess.select(
-                F.lit("psess").alias("op"), s("user_id").alias("k1"),
-                F.col("start_us").cast("long").alias("k2"),
-                F.col("end_us").cast("long").alias("v1"),
-                F.col("n_events").cast("long").alias("v2")))
-            .unionByName(roll.select(
-                F.lit("roll").alias("op"), s("event_type").alias("k1"),
-                F.col("window_start").cast("long").alias("k2"),
-                F.col("cnt").cast("long").alias("v1"),
-                F.round(F.col("value_sum") * 100).cast("long").alias("v2")))
-        )
-
-    def rjoin_batch(spark, sf_dir):
-        ev = _events(spark, sf_dir)
-        c = ev.filter(F.col("event_type") == "click") \
-            .select("user_id", F.col("tus").alias("l_us"))
-        b = ev.filter(F.col("event_type") == "purchase") \
-            .select(F.col("user_id").alias("__u"), F.col("tus").alias("r_us"))
-        return c.join(b, (F.col("user_id") == F.col("__u"))
-                      & (F.col("r_us") >= F.col("l_us"))
-                      & (F.col("r_us") <= F.col("l_us") + 3600_000_000)) \
-            .select("user_id", "l_us", "r_us")
-
-    def psess_stream():
-        """The r9 custom-stateful leg: ``stream_sessionize_stateful``
-        (applyInPandasWithState + EVENT-TIME TIMEOUT) must emit the
-        exact batch session set.  The operator only finalizes a session
-        once ``end + gap < watermark``, so the leg appends two
-        far-future SENTINEL batches (user_id -1, filtered back out)
-        whose only job is to push the watermark past every real
-        session's close and give the timeouts a batch to fire in —
-        maxFilesPerTrigger=1 with mtime-ordered files makes the
-        sentinel batches run last.  The watermark DELAY is sized to the
-        full event-time span, so no real event is ever late relative to
-        it and arrival order cannot change the result."""
-        import glob as _glob
-        import shutil
-        import tempfile
-        import time
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        mn, mx = _events(spark, sf_dir).agg(
-            F.min("tus"), F.max("tus")).first()
-        gap_us = 30 * 60 * 1_000_000
-        delay_us = (mx - mn) + 3600 * 1_000_000
-        tmp = tempfile.mkdtemp(prefix="cb_psess_")
-        src = os.path.join(sf_dir, "events.parquet")
-        files = ([src] if os.path.isfile(src)
-                 else sorted(_glob.glob(os.path.join(src, "*.parquet"))))
-        now = time.time()
-        for i, f in enumerate(files):
-            dst = os.path.join(tmp, f"data_{i}.parquet")
-            shutil.copyfile(f, dst)
-            os.utime(dst, (now + i, now + i))
-        s1 = mx + delay_us + gap_us + 3600 * 1_000_000
-        for j, ts_us in enumerate((s1, s1 + 3600 * 1_000_000)):
-            tbl = pa.table({
-                "event_id": pa.array([-1], pa.int64()),
-                "ts": pa.array([ts_us], pa.timestamp("us")),
-                "user_id": pa.array([-1], pa.int64()),
-                "event_type": pa.array(["sentinel"], pa.string()),
-                "value": pa.array([0.0], pa.float64()),
-                "props": pa.array(["{}"], pa.string()),
-            })
-            dst = os.path.join(tmp, f"sentinel_{j}.parquet")
-            pq.write_table(tbl, dst)
-            os.utime(dst, (now + 1000 + j, now + 1000 + j))
-        from cloudbrush_spark.streaming import stream_sessionize_stateful
-        stream = (spark.readStream.schema(_EVENTS_TS_SCHEMA)
-                  .option("maxFilesPerTrigger", "1").parquet(tmp))
-        out = run(stream_sessionize_stateful(
-            stream, watermark=f"{delay_us // 1_000_000} seconds"),
-            "se_psess", "append")
-        return (out.filter(F.col("user_id") >= 0)
-                .select("user_id",
-                        F.unix_micros("session_start").alias("start_us"),
-                        F.unix_micros("session_end").alias("end_us"),
-                        "n_events"))
-
-    path = os.path.join(sf_dir, "events.parquet")
-    if _events_ts_unit(path) == "ns":
-        # TIMESTAMP(NANOS) has no TimestampType read; batch twins cover it
-        return canon(
-            q_tumbling_window(spark, sf_dir),
-            q_sessionize(spark, sf_dir),
-            _events(spark, sf_dir).select("event_type", "user_id").distinct(),
-            rjoin_batch(spark, sf_dir),
-            q_sessionize(spark, sf_dir),
-            q_tumbling_window(spark, sf_dir))
-
-    def run(stream_df, name, mode):
-        q = (stream_df.writeStream.format("memory").queryName(name)
-             .outputMode(mode).trigger(availableNow=True).start())
-        q.awaitTermination()
-        return spark.table(name)
-
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    try:
-        # pin state-store width for the queries' lifetime (see
-        # q_stream_tumbling_window) and restore the session conf after
-        spark.conf.set(key, str(min(int(prev), 32)))
-        stream = _events_stream_source(spark, sf_dir)
-        tumble = run(s_tumble(stream), "se_tumble", "complete").select(
-            (F.unix_micros(F.col("window_start")) / 1_000_000)
-            .cast("long").alias("window_start"), "event_type", "cnt", "value_sum")
-        sess = run(stream_sessionize(stream), "se_sess", "complete").select(
-            "user_id", F.unix_micros("session_start").alias("start_us"),
-            F.unix_micros("session_end").alias("end_us"), "n_events")
-        ded = run(stream_dedup(stream), "se_dedup", "append") \
-            .select("event_type", "user_id").distinct()
-        rj = run(stream_range_join(
-            stream.filter(F.col("event_type") == "click"),
-            stream.filter(F.col("event_type") == "purchase")),
-            "se_rjoin", "append").select(
-            "user_id", F.unix_micros("left_ts").alias("l_us"),
-            F.unix_micros("right_ts").alias("r_us"))
-        # r9 sixth form: the continuously-MAINTAINED rollup table
-        # (stream_rollup_maintain — update-mode windowed agg upserted
-        # into a versioned parquet table via foreachBatch).  Reading the
-        # maintained table back and hashing it against the same batch
-        # tumbling oracle proves the upsert sink neither drops, doubles,
-        # nor staleness-skews any (window, type) total.
-        import tempfile as _tf
-        from cloudbrush_spark.streaming import (read_rollup,
-                                                stream_rollup_maintain)
-        tdir = _tf.mkdtemp(prefix="cb_roll_")
-        rq = (stream_rollup_maintain(_events_stream_source(spark, sf_dir),
-                                     tdir)
-              .option("checkpointLocation", _tf.mkdtemp(prefix="cb_rollck_"))
-              .trigger(availableNow=True).start())
-        rq.awaitTermination()
-        roll = read_rollup(spark, tdir).select(
-            (F.unix_micros(F.col("window_start")) / 1_000_000)
-            .cast("long").alias("window_start"),
-            "event_type", "cnt", "value_sum")
-        return canon(tumble, sess, ded, rj, psess_stream(), roll)
-    finally:
-        spark.conf.set(key, prev)
-
-
-def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization (30 min) over the events table; epoch-micros
-    integer arithmetic end to end (see operators/sessions.py for the
-    timestamp form).  Boundary: an exactly-30-min gap stays in the same
-    session (>), matching session_window's inclusive merge rule."""
-    from pyspark.sql import Window
-    events = _events(spark, sf_dir)
-    gap_us = 30 * 60 * 1_000_000
-    w = Window.partitionBy("user_id").orderBy("tus")
-    with_sid = (
-        events.withColumn(
-            "new_sess",
-            F.when(F.col("tus") - F.lag("tus").over(w) > gap_us, 1).otherwise(0),
-        )
-        .withColumn("session_id", F.sum("new_sess").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)))
-    )
-    return with_sid.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("tus").alias("start_us"),
-        F.max("tus").alias("end_us"),
     )
 
 
@@ -1105,72 +798,6 @@ def q_sink_formats(spark, sf_dir):
         F.lit("sfa_expand").alias("op"), F.col("emit_id").alias("k"),
         F.col("p_partkey").cast("string").alias("v"))
     return k1.unionByName(k2)
-
-
-def q_event_windows(spark, sf_dir):
-    """Batch event-time windowing in ONE tagged-union row — hourly tumbling
-    window per event type + 30-min-gap sessionization (merged r6 to free a
-    registry slot; the single-op forms above stay in
-    bench.py and the streaming twins in stream_equivalence) + the r8
-    'json' leg: schema-on-read extraction over the semi-structured
-    ``props`` JSON column (sessions.json_props_agg — from_json with an
-    explicit schema, JVM-side), bucketed per (event_type, k % 10) so the
-    extracted value sits on the hash both row-level (the bucket key) and
-    aggregated (sum/max); the DuckDB twin extracts with json_extract.
-    Canonical (op, k1, v1, v2, v3) schema per relational_extras
-    conventions: keys as strings, money as integer cents, sentinels
-    instead of NULLs."""
-    s = lambda c: F.col(c).cast("string")  # noqa: E731
-    tum = q_tumbling_window(spark, sf_dir).select(
-        F.lit("tumble").alias("op"), s("event_type").alias("k1"),
-        F.col("window_start").cast("long").alias("v1"),
-        F.col("cnt").cast("long").alias("v2"),
-        F.round(F.col("value_sum") * 100).cast("long").alias("v3"))
-    ses = q_sessionize(spark, sf_dir).select(
-        F.lit("session").alias("op"),
-        # F.concat, not concat_ws: the oracle's `||` propagates NULL and
-        # concat_ws silently SKIPS it — a NULL user_id would make the
-        # sides disagree (and could collapse two distinct sessions into
-        # one k1 on the Spark side only)
-        F.concat(s("user_id"), F.lit("|"), s("session_id")).alias("k1"),
-        F.col("start_us").cast("long").alias("v1"),
-        F.col("end_us").cast("long").alias("v2"),
-        F.col("n_events").cast("long").alias("v3"))
-    from cloudbrush_spark.operators.sessions import funnel, json_props_agg
-    js = json_props_agg(_t(spark, sf_dir, "events")).select(
-        F.lit("json").alias("op"),
-        # F.concat (not concat_ws) so a NULL bucket — a malformed props
-        # row — propagates to a NULL k1 exactly like the oracle's `||`
-        F.concat(s("event_type"), F.lit("|"), s("k_bucket")).alias("k1"),
-        F.col("cnt").cast("long").alias("v1"),
-        F.col("sum_k").cast("long").alias("v2"),
-        F.col("max_k").cast("long").alias("v3"))
-    # r10 'funnel': ordered-sequence conversion funnel (sessions.funnel
-    # — greedy first-touch view→click→purchase within 24h, the
-    # MATCH_RECOGNIZE-lite shape).  Spark runs the single-shuffle
-    # JVM-fold form; the DuckDB twin re-derives the same greedy chain as
-    # three cascaded min() levels — a genuinely independent computation
-    # of every user's (steps, anchor, completion) row.
-    fu = funnel(_events(spark, sf_dir).select(
-        "user_id", "ts", "event_type"),
-        ["view", "click", "purchase"], horizon_minutes=1440).select(
-        F.lit("funnel").alias("op"), s("user_id").alias("k1"),
-        F.col("steps_completed").cast("long").alias("v1"),
-        F.col("anchor_us").alias("v2"),
-        F.col("completed_us").alias("v3"))
-    # r10 'cohort': weekly cohort-retention matrix (sessions.
-    # cohort_retention) — integer period arithmetic on epoch-days so
-    # both engines bucket identically; the DuckDB twin recomputes the
-    # whole matrix from scratch.
-    from cloudbrush_spark.operators.sessions import cohort_retention
-    co = cohort_retention(_events(spark, sf_dir).select("user_id", "ts"),
-                          period_days=7).select(
-        F.lit("cohort").alias("op"),
-        F.concat(s("cohort"), F.lit("|"), s("offset")).alias("k1"),
-        F.col("users").alias("v1"),
-        F.lit(0).cast("long").alias("v2"), F.lit(0).cast("long").alias("v3"))
-    return (tum.unionByName(ses).unionByName(js).unionByName(fu)
-            .unionByName(co))
 
 
 def q_tpch_q1(spark, sf_dir):
@@ -2201,59 +1828,12 @@ def q_ann_contracts(spark, sf_dir):
             .unionByName(r_embc).unionByName(r_cross))
 
 
-def q_probe_funnel(spark, sf_dir):
-    """Scale-probe leg (NOT in queries()): the r10 funnel over the full
-    events table."""
-    from cloudbrush_spark.operators.sessions import funnel
-    return funnel(_events(spark, sf_dir).select("user_id", "ts",
-                                                "event_type"),
-                  ["view", "click", "purchase"], horizon_minutes=1440)
-
-
-def q_probe_cohort(spark, sf_dir):
-    """Scale-probe leg (NOT in queries()): the r10 cohort matrix over
-    the full events table."""
-    from cloudbrush_spark.operators.sessions import cohort_retention
-    return cohort_retention(_events(spark, sf_dir).select("user_id", "ts"),
-                            period_days=7)
-
-
-def q_probe_emb_near_dup(spark, sf_dir):
-    """Scale-probe leg (NOT in ``queries()``): the LSH star-mode
-    near-dup pair path ALONE, without the O(n^2) brute-force twin that
-    lives inside the ``ann_contracts`` correctness row (infeasible at
-    200k vectors).
-    Star over-cap mode is the 100 TB configuration — over-cap buckets
-    emit rep-anchored edges instead of all pairs."""
-    emb = _emb(spark, sf_dir)
-    return similarity.embedding_near_dup(
-        emb, dim=64, threshold=0.42, planes=4, seed=42, tables=16,
-        overcap="star")
-
-
-def q_probe_emb_clusters(spark, sf_dir):
-    """Scale-probe leg (NOT in ``queries()``): the embedding_clusters
-    LSH->connected-components product alone, same params as the
-    ``ann_contracts`` 'emb_clusters' row (which additionally recomputes
-    the exact cluster count brute-force for the correctness check)."""
-    emb = _emb(spark, sf_dir)
-    return similarity.embedding_clusters(emb, dim=64, threshold=0.42,
-                                         planes=4, seed=42, tables=16)
-
-
 def q_probe_heavy_tokens(spark, sf_dir):
     """Scale-probe leg (NOT in ``queries()``): the data-card
     heavy-hitters section alone — the exact explode+hash-aggregate side
     plus the freqItems sketch's second linear pass."""
     from cloudbrush_spark.operators.report import heavy_tokens
     return heavy_tokens(_t(spark, sf_dir, "documents"))
-
-
-def q_probe_json_agg(spark, sf_dir):
-    """Scale-probe leg (NOT in ``queries()``): the semi-structured
-    extraction aggregate alone (scan-fused from_json + one hash agg)."""
-    from cloudbrush_spark.operators.sessions import json_props_agg
-    return json_props_agg(_t(spark, sf_dir, "events"))
 
 
 RAWSQL_QUERY = """
@@ -2714,22 +2294,6 @@ def q_merge_upsert(spark, sf_dir):
     digests computed BEFORE the full-outer join (the shuffle carries
     hashes, not text); the oracle re-derives the actions from the
     residues alone, so a digest-comparison bug cannot hide."""
-    from cloudbrush_spark.operators import joins as _joins
-    docs = _t(spark, sf_dir, "documents")
-    base = docs.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
-    updates = docs.filter(F.col("doc_id") % 2 == 0).select(
-        "doc_id",
-        F.when(F.col("doc_id") % 5 == 0, F.concat("text", F.lit(" v2")))
-         .otherwise(F.col("text")).alias("text"))
-    return _joins.merge_upsert(base, updates, delete_missing=True)
-
-
-def q_probe_merge_upsert(spark, sf_dir):
-    """Scale-probe leg (NOT in ``queries()``): the snapshot MERGE alone
-    at fixture scale — same base/update split as the driver leg.  The
-    cost is one full-outer hash join whose shuffle carries (key, 32-char
-    digest) rows, never text, so bytes track row count, not corpus
-    bytes; expected ~linear."""
     from cloudbrush_spark.operators import joins as _joins
     docs = _t(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
@@ -3282,27 +2846,6 @@ _ORACLES: dict[str, str] = {
                round(mass / 10000.0 - n * 0.6931471805599453, 4) AS astat,
                (mass / 10000.0 - n * 0.6931471805599453) > 10.0 AS unique_class
         FROM per_cust
-    """,
-    "tumbling_window": """
-        SELECT CAST(epoch_us(ts) // 3600000000 * 3600 AS BIGINT) AS window_start,
-               event_type, count(*) AS cnt,
-               round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS value_sum
-        FROM events GROUP BY 1, 2
-    """,
-    "sessionize": """
-        WITH lagged AS (
-            SELECT user_id, epoch_us(ts) AS tus,
-                   CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_sess
-            FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        ), sess AS (
-            SELECT user_id, tus,
-                   sum(new_sess) OVER (PARTITION BY user_id ORDER BY tus ROWS UNBOUNDED PRECEDING) AS session_id
-            FROM lagged
-        )
-        SELECT user_id, CAST(session_id AS BIGINT) AS session_id, count(*) AS n_events,
-               CAST(min(tus) AS BIGINT) AS start_us,
-               CAST(max(tus) AS BIGINT) AS end_us
-        FROM sess GROUP BY 1, 2
     """,
     "tpch_q1": """
         SELECT l_returnflag, l_linestatus,
@@ -3983,82 +3526,6 @@ _ORACLES["dedup_clusters"] = f"""
     FROM labels l JOIN sizes s USING (cluster_rep)
 """
 
-# Batch event-time windowing union: the tumbling-window and sessionize
-# oracles above, canonicalized to the shared measure schema (value sums
-# as integer cents).
-_ORACLES["event_windows"] = f"""
-    SELECT 'tumble' AS op, event_type AS k1, window_start AS v1,
-           cnt AS v2, CAST(round(value_sum * 100) AS BIGINT) AS v3
-    FROM ({_ORACLES["tumbling_window"]})
-    UNION ALL
-    SELECT 'session' AS op,
-           user_id::VARCHAR || '|' || session_id::VARCHAR AS k1,
-           start_us AS v1, end_us AS v2, n_events AS v3
-    FROM ({_ORACLES["sessionize"]})
-    UNION ALL
-    SELECT 'json' AS op,
-           event_type || '|' || CAST(k % 10 AS VARCHAR) AS k1,
-           count(*) AS v1, CAST(sum(k) AS BIGINT) AS v2, max(k) AS v3
-    FROM (SELECT event_type, CAST(props->>'$.k' AS BIGINT) AS k FROM events)
-    GROUP BY 1, 2
-    UNION ALL
-    SELECT 'funnel' AS op, CAST(u.user_id AS VARCHAR) AS k1,
-           CAST(CASE WHEN t3.t3 IS NOT NULL THEN 3
-                     WHEN t2.t2 IS NOT NULL THEN 2
-                     WHEN t1.t1 IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS v1,
-           CAST(coalesce(t1.t1, -1) AS BIGINT) AS v2,
-           CAST(coalesce(t3.t3, -1) AS BIGINT) AS v3
-    FROM (SELECT DISTINCT user_id FROM events) u
-    LEFT JOIN (SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
-               WHERE event_type = 'view' GROUP BY 1) t1
-        ON u.user_id = t1.user_id
-    LEFT JOIN (SELECT e.user_id, min(epoch_us(e.ts)) AS t2
-               FROM events e
-               JOIN (SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
-                     WHERE event_type = 'view' GROUP BY 1) a
-                 ON e.user_id = a.user_id
-               WHERE e.event_type = 'click' AND epoch_us(e.ts) > a.t1
-                 AND epoch_us(e.ts) - a.t1 <= 86400000000
-               GROUP BY 1) t2
-        ON u.user_id = t2.user_id
-    LEFT JOIN (SELECT e.user_id, min(epoch_us(e.ts)) AS t3
-               FROM events e
-               JOIN (SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
-                     WHERE event_type = 'view' GROUP BY 1) a
-                 ON e.user_id = a.user_id
-               JOIN (SELECT e2.user_id, min(epoch_us(e2.ts)) AS t2
-                     FROM events e2
-                     JOIN (SELECT user_id, min(epoch_us(ts)) AS t1
-                           FROM events WHERE event_type = 'view'
-                           GROUP BY 1) a2
-                       ON e2.user_id = a2.user_id
-                     WHERE e2.event_type = 'click'
-                       AND epoch_us(e2.ts) > a2.t1
-                       AND epoch_us(e2.ts) - a2.t1 <= 86400000000
-                     GROUP BY 1) b
-                 ON e.user_id = b.user_id
-               WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > b.t2
-                 AND epoch_us(e.ts) - a.t1 <= 86400000000
-               GROUP BY 1) t3
-        ON u.user_id = t3.user_id
-    UNION ALL
-    SELECT 'cohort' AS op,
-           CAST(cohort AS VARCHAR) || '|' || CAST(poff AS VARCHAR) AS k1,
-           CAST(count(*) AS BIGINT) AS v1,
-           CAST(0 AS BIGINT) AS v2, CAST(0 AS BIGINT) AS v3
-    FROM (SELECT DISTINCT e.user_id, f.cohort, e.p - f.cohort AS poff
-          FROM (SELECT user_id,
-                       CAST(floor(epoch_us(ts) / 604800000000.0) AS BIGINT)
-                           AS p
-                FROM events) e
-          JOIN (SELECT user_id,
-                       min(CAST(floor(epoch_us(ts) / 604800000000.0)
-                                AS BIGINT)) AS cohort
-                FROM events GROUP BY 1) f
-            ON e.user_id = f.user_id)
-    GROUP BY 1, 2
-"""
-
 _ORACLES["ngram_jaccard"] = _ngram_jaccard_sql()
 _ORACLES["lang_id"] = _lang_id_sql()
 _ORACLES["quality"] = _quality_sql()
@@ -4574,10 +4041,6 @@ _ORACLES["relational_extras"] = """
     GROUP BY 2
 """
 
-# The true-streaming twin computes the identical hourly windows (F.window
-# slices on the internal micros), so it shares the batch oracle.
-_ORACLES["stream_tumbling_window"] = _ORACLES["tumbling_window"]
-
 # Tagged union of the TPC-H-shaped queries (see q_tpch_suite): the
 # per-query oracles, canonicalized to the shared measure schema.  The r8
 # legs (q4/q13/q16/q17/q18/q22) keep every boundary comparison in exact
@@ -4827,78 +4290,6 @@ _ORACLES["tpch_suite"] = """
     JOIN orders ON l_orderkey = o_orderkey
     WHERE p_name LIKE '%red%'
     GROUP BY 2
-"""
-
-# Batch recomputation of the three streaming forms (see
-# q_stream_equivalence): hourly tumbling windows, gap-sessionization
-# (micros arithmetic — boundary semantics proven equal to session_window
-# by tests/test_streaming.py), and the distinct dedup key set.
-_ORACLES["stream_equivalence"] = """
-    WITH ev AS (SELECT user_id, epoch_us(ts) AS tus, event_type, value
-                FROM events)
-    SELECT 'tumble' AS op, event_type AS k1,
-           CAST(tus // 3600000000 * 3600 AS BIGINT) AS k2,
-           count(*) AS v1,
-           CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS v2
-    FROM ev GROUP BY 1, 2, 3
-    UNION ALL
-    -- 'roll' = the same tumbling totals, but the Spark side reads them
-    -- back from the continuously-MAINTAINED rollup table
-    -- (stream_rollup_maintain's versioned upsert sink): the maintained
-    -- table must converge to exactly the batch aggregate
-    SELECT 'roll', event_type,
-           CAST(tus // 3600000000 * 3600 AS BIGINT),
-           count(*),
-           CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT)
-    FROM ev GROUP BY 1, 2, 3
-    UNION ALL
-    SELECT 'sess', CAST(user_id AS VARCHAR), start_us, end_us, n_events
-    FROM (
-        WITH lagged AS (
-            SELECT user_id, tus,
-                   CASE WHEN tus - lag(tus) OVER w > 1800000000
-                        THEN 1 ELSE 0 END AS new_sess
-            FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tus)
-        ), sess AS (
-            SELECT user_id, tus,
-                   sum(new_sess) OVER (PARTITION BY user_id ORDER BY tus
-                                       ROWS UNBOUNDED PRECEDING) AS sid
-            FROM lagged
-        )
-        SELECT user_id, CAST(min(tus) AS BIGINT) AS start_us,
-               CAST(max(tus) AS BIGINT) AS end_us, count(*) AS n_events
-        FROM sess GROUP BY user_id, sid)
-    UNION ALL
-    SELECT 'psess', CAST(user_id AS VARCHAR), start_us, end_us, n_events
-    FROM (
-        -- same batch sessionization as 'sess': the applyInPandasWithState
-        -- stateful sessionizer must converge to the identical session set
-        -- once the sentinel-advanced watermark finalizes every session
-        WITH lagged AS (
-            SELECT user_id, tus,
-                   CASE WHEN tus - lag(tus) OVER w > 1800000000
-                        THEN 1 ELSE 0 END AS new_sess
-            FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tus)
-        ), sess AS (
-            SELECT user_id, tus,
-                   sum(new_sess) OVER (PARTITION BY user_id ORDER BY tus
-                                       ROWS UNBOUNDED PRECEDING) AS sid
-            FROM lagged
-        )
-        SELECT user_id, CAST(min(tus) AS BIGINT) AS start_us,
-               CAST(max(tus) AS BIGINT) AS end_us, count(*) AS n_events
-        FROM sess GROUP BY user_id, sid)
-    UNION ALL
-    SELECT 'dedup', event_type, CAST(user_id AS BIGINT),
-           CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-    FROM (SELECT DISTINCT event_type, user_id FROM ev)
-    UNION ALL
-    SELECT 'rjoin', CAST(c.user_id AS VARCHAR), c.tus,
-           CAST(b.bus AS BIGINT), CAST(0 AS BIGINT)
-    FROM (SELECT user_id, tus FROM ev WHERE event_type = 'click') c
-    JOIN (SELECT user_id, tus AS bus FROM ev WHERE event_type = 'purchase') b
-      ON c.user_id = b.user_id
-     AND b.bus BETWEEN c.tus AND c.tus + 3600000000
 """
 
 # Full DuckDB twin of the 64-bit byte blockhash + Hamming<=3 pair join:
@@ -5228,10 +4619,7 @@ _ORACLES["sink_formats"] = f"""
 #   - lang_id/quality/token_stats -> outputs embedded in curation_filter
 #   - a1_n50               -> per-cutoff N50 inside a1_size_distribution
 #   - tpch_q1/q3/q5/q6     -> tpch_suite tagged union (r6; all four verified)
-#   - stream_tumbling_window -> stream_equivalence (r6; + sessionize + dedup)
 #   - g5_pairmark/g6_pairmerge -> g5g6_pairmark_merge tagged union (r6)
-#   - tumbling_window/sessionize -> event_windows tagged union (r6; both
-#     still verified, plus their streaming twins in stream_equivalence)
 #   - g5g6_distributed_fixpoint -> G5-G8 covered by g5g6/g7g8 entries
 #   - ann_topk_lsh/ann_topk_ivf/emb_near_dup_lsh/emb_near_dup -> ann_contracts
 #   - asof/range/rollup/topk_per_group/set_ops -> relational_extras
@@ -5253,9 +4641,7 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "simhash_clusters": q_simhash_clusters,      # linear simhash product
     "text_fp_split": q_text_fp_split,            # winnow + split union (r7)
     # --- new in round 6 ---
-    "event_windows": q_event_windows,            # tumble + sessionize union
     "tpch_suite": q_tpch_suite,                  # 19-leg TPC-H union
-    "stream_equivalence": q_stream_equivalence,  # stream tumble/sess/dedup
     "dedup_clusters": q_dedup_clusters,          # linear cluster product
     "g5g6_pairmark_merge": q_g5g6_pairmark_merge,
     # --- green in r5 but merged/starved risk: keep early ---

@@ -32,8 +32,6 @@ HEADLINE = [
     "p1_dedup_exact",
     "a3_ngram_doc_counts",
     "a5_token_freq_per_doc",
-    "sessionize",
-    "tumbling_window",
     "lang_id",
     "quality",
     "ann_topk",
@@ -53,7 +51,6 @@ HEADLINE = [
     # comparable)
     "corpus_report",
     # added late round 8
-    "json_props_agg",
     "heavy_tokens",
     "repeated_spans",
     # added round 9 (appended; single-op forms)
@@ -188,7 +185,6 @@ def main() -> None:
     # union forms are the driver's correctness surface, not the bench's
     qs["minhash_lsh_dedup"] = entrymod.q_minhash_pairs_self
     qs["corpus_report"] = entrymod.q_corpus_report_only
-    qs["json_props_agg"] = entrymod.q_probe_json_agg
     qs["heavy_tokens"] = entrymod.q_probe_heavy_tokens
     # corpus_guard's driver row gained the heavy 'spans' leg late-r8;
     # bench the r8-anchored base form under the old name and the spans

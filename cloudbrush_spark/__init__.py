@@ -17,7 +17,6 @@ as:
                     (dedup families, similarity search, multimodal plumbing).
 - ``sources/``    — FASTA/FASTQ/SFA scans and sinks.
 - ``pipeline/``   — the assembly composites (SURVEY §2.7 control flow).
-- ``streaming/``  — Structured Streaming variants of the event operators.
 - ``plans/``      — checkpoint/explain utilities for the iterative parts.
 """
 

@@ -139,12 +139,6 @@ def _build_parser() -> argparse.ArgumentParser:
                          "formats read with an explicit schema and "
                          "PERMISSIVE corrupt-row handling — "
                          "sources/textfiles.py)")
-    ap.add_argument("-compact", default=None, metavar="STREAM_DIR",
-                    help="compact a streaming-publish output directory "
-                         "(batch=N small files from streaming.stream_publish) "
-                         "into bounded id-sorted parquet at -out; reads "
-                         "only committed batches, safe beside the live "
-                         "stream (file count = -files_per_split)")
     ap.add_argument("-input_schema",
                     default="doc_id long, text string, lang string, "
                             "source string",
@@ -174,6 +168,9 @@ def _print_stats(report: dict) -> None:
 
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
+    if args.ckpt and (args.sql or args.run_stats or args.convert_fa
+                      or args.curate):
+        raise SystemExit("-ckpt applies only to assembly (-reads/-asm)")
     from cloudbrush_spark.session import get_spark
     extra = {}
     if args.slots:
@@ -207,15 +204,6 @@ def main(argv: list[str] | None = None) -> int:
         out = os.path.join(args.convert_fa, "contigs.fa")
         write_fasta(nodes, out)
         print(f"wrote {out}")
-        return 0
-
-    if args.compact:
-        if not args.out:
-            raise SystemExit("-compact requires -out DIR")
-        from cloudbrush_spark.sources.corpus import compact_batches
-        n = compact_batches(spark, args.compact, args.out,
-                            files=args.files_per_split)
-        print(f"compacted: {n} batches -> {args.out}")
         return 0
 
     if args.curate:

@@ -12,7 +12,6 @@ from cloudbrush_spark.operators import (  # noqa: F401
     mates,
     multimodal,
     overlap,
-    sessions,
     similarity,
     stats,
     textops,

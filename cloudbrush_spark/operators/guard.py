@@ -147,8 +147,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
 
 
 def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text",
-              keep_cols: tuple[str, ...] = ()) -> DataFrame:
+              text_col: str = "text") -> DataFrame:
     """Count and redact emails, IPv4 addresses, payment-card numbers
     (Luhn-validated) and phone numbers (US and international shapes).
 
@@ -163,10 +162,6 @@ def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
     span is never re-matched; the patterns are mutually exclusive on
     digits-with-separators shapes, so order only matters for
     pathological overlaps).  Counts are measured on the ORIGINAL text.
-    ``keep_cols`` names input columns carried through unchanged
-    (appended after ``scrubbed``) — lets stateless compositions like
-    ``streaming.stream_guard`` stay one projection instead of a
-    self-join (which on a streaming frame would be stream-stream).
 
     Pure column expressions (the card redaction is a fold over the
     Luhn-valid match list — a higher-order function, still no UDF) —
@@ -196,7 +191,6 @@ def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
         F.size(F.filter(card_matches, luhn_valid)).cast("long")
         .alias("n_card_ids"),
         scrubbed.alias("scrubbed"),
-        *[F.col(c) for c in keep_cols],
     )
 
 
@@ -263,26 +257,6 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
             F.coalesce("top_unigram_cnt", F.lit(0)).cast("long").alias("top_unigram_cnt"),
             "n_tokens", "n_bigrams", "dup_line_frac",
         )
-    )
-
-
-def boilerplate_lines(docs: DataFrame, text_col: str = "text",
-                      max_df: int = 1) -> DataFrame:
-    """The REMOVAL LIST behind :func:`boilerplate_scrub`: every distinct
-    non-blank line whose corpus-wide occurrence count exceeds
-    ``max_df``, with its count — (line, line_df).
-
-    Exposed separately because the streaming scrub
-    (``streaming.stream_boiler_scrub``) cannot compute global counts on
-    an unbounded stream: a batch pass derives this list from a corpus
-    snapshot and the stream applies it statelessly.  One explode + one
-    groupBy shuffle; output is bounded by the number of DISTINCT
-    repeated lines (boilerplate is by nature a small vocabulary)."""
-    return (
-        docs.select(F.explode(F.split(F.col(text_col), "\n")).alias("line"))
-        .filter(F.trim("line") != "")
-        .groupBy("line").agg(F.count(F.lit(1)).alias("line_df"))
-        .filter(F.col("line_df") > max_df)
     )
 
 

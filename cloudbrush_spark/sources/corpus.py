@@ -67,17 +67,6 @@ def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
     out.close()
 
 
-def fs_read_text(spark: SparkSession, path: str) -> str:
-    """Read a small text file through the Hadoop FS API."""
-    jvm, _, fs, p = _hfs(spark, path)
-    ins = fs.open(p)
-    try:
-        return bytes(jvm.org.apache.commons.io.IOUtils
-                     .toByteArray(ins)).decode("utf-8")
-    finally:
-        ins.close()
-
-
 def publish_corpus(docs: DataFrame, manifest: DataFrame, path: str,
                    id_col: str = "doc_id", split_col: str = "split",
                    files_per_split: int = 16,
@@ -126,40 +115,3 @@ def read_corpus(spark: SparkSession, path: str,
     if split is not None:
         df = df.filter(F.col(split_col) == split)
     return df
-
-
-def compact_batches(spark: SparkSession, stream_dir: str, out_path: str,
-                    files: int = 16, id_col: str = "doc_id",
-                    compression: str = "zstd") -> int:
-    """Compact a ``streaming.stream_publish`` output directory (many
-    small ``batch=<id>/`` files accreted micro-batch by micro-batch)
-    into ``files`` bounded, id-sorted parquet files — the periodic batch
-    job that keeps a continuously-published corpus readable (the
-    small-file explosion is THE operational failure mode of streaming
-    sinks at 100 TB; compaction is how production pipelines cap it).
-
-    Reads only COMMITTED batches — those whose ``_committed_<id>``
-    marker exists — so a concurrently-running in-flight micro-batch is
-    never half-read; the stream keeps appending while compaction runs.
-    Listing goes through the Hadoop FileSystem API, so a stream sink on
-    HDFS/S3 compacts the same way a local one does.
-
-    Returns the number of batches compacted.
-    """
-    import re
-
-    _, _, fs, root = _hfs(spark, stream_dir)
-    committed = sorted(
-        int(m.group(1)) for st in fs.listStatus(root)
-        if (m := re.fullmatch(r"_committed_(\d+)",
-                              st.getPath().getName())))
-    if not committed:
-        raise ValueError(f"no committed batches under {stream_dir}")
-    paths = [f"{stream_dir}/batch={b}" for b in committed]
-    df = spark.read.parquet(*paths)
-    (df.repartition(files, F.col(id_col))
-       .sortWithinPartitions(id_col)
-       .write.mode("overwrite")
-       .option("compression", compression)
-       .parquet(out_path))
-    return len(committed)

@@ -217,30 +217,22 @@ def test_cli_curate_reads_jsonl_input(tmp_path, spark, capsys):
     assert corpus.limit(1).collect()[0].text.startswith(base)
 
 
-def test_cli_compact_streamed_output(tmp_path, spark, capsys):
-    from cloudbrush_spark.streaming.windows import (
-        DOC_SCHEMA, read_document_stream, stream_publish)
-    src = str(tmp_path / "docs")
-    for i in range(2):
-        spark.createDataFrame([(10 * i + j, f"d{j}") for j in range(3)],
-                              DOC_SCHEMA).coalesce(1).write.parquet(f"{src}/f{i}")
-    streamed = str(tmp_path / "streamed")
-    os.makedirs(streamed)
-    q = (stream_publish(read_document_stream(spark, src + "/*",
-                                             max_files_per_trigger=1), streamed)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    out = str(tmp_path / "compacted")
-    rc = main(["-compact", streamed, "-out", out, "-files_per_split", "1"])
-    assert rc == 0
-    assert "compacted: 2 batches" in capsys.readouterr().out
-    assert spark.read.parquet(out).count() == 6
-
+def test_cli_ckpt_refused_outside_assembly(tmp_path, spark):
+    """-ckpt names assembly stage checkpoints; every entry point that
+    does not assemble refuses it instead of silently ignoring it."""
     import pytest
-    with pytest.raises(SystemExit):
-        main(["-compact", streamed])  # -out required
+    src = str(tmp_path / "docs.parquet")
+    spark.createDataFrame([(0, f"{GOOD} {FILLER}")],
+                          "doc_id long, text string").write.parquet(src)
+    out = str(tmp_path / "published")
+    ckpt = str(tmp_path / "ckpt")
+    for argv in (["-curate", src, "-out", out],
+                 ["-sql", "SELECT 1", "-data", str(tmp_path)],
+                 ["-run_stats", str(tmp_path)],
+                 ["-convert_fa", str(tmp_path)]):
+        with pytest.raises(SystemExit, match="-reads/-asm"):
+            main(argv + ["-ckpt", ckpt])
+    assert not os.path.exists(out) and not os.path.exists(ckpt)
 
 
 def test_cli_sql_runs_query_over_registered_views(tmp_path, spark, capsys):

@@ -65,127 +65,3 @@ def test_events_tus_is_timezone_independent(tmp_path):
             assert got == {r[0]: r[1] for r in ROWS}, tz
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
-
-
-def test_funnel_greedy_first_touch_semantics(spark):
-    """sessions.funnel: greedy first-touch chain — anchor is the FIRST
-    step-1 event, later steps take the earliest strictly-later event of
-    their type inside the horizon; out-of-order, horizon-expired, and
-    missing-step users report partial progress; users with no funnel
-    events report zero steps."""
-    from datetime import datetime
-    from cloudbrush_spark.operators.sessions import funnel
-    from datetime import timedelta
-    T = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)  # noqa: E731
-    rows = [
-        # u1 completes: view@0 click@10 purchase@20
-        (1, T(0), "view"), (1, T(10), "click"), (1, T(20), "purchase"),
-        # u2: purchase BEFORE click -> stuck at 2 steps
-        (2, T(0), "view"), (2, T(10), "purchase"), (2, T(20), "click"),
-        # u3: click only after the horizon from the FIRST view ->
-        # greedy anchor does not re-anchor to the second view
-        (3, T(0), "view"), (3, T(30), "view"), (3, T(70), "click"),
-        # u4: no funnel-type events at all
-        (4, T(5), "error"),
-        # u5: completes with ties — click at the same microsecond as
-        # view is NOT strictly later, the later one counts
-        (5, T(0), "view"), (5, T(0), "click"), (5, T(3), "click"),
-        (5, T(4), "purchase"),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
-    got = {r.user_id: r for r in
-           funnel(df, ["view", "click", "purchase"],
-                  horizon_minutes=60).collect()}
-    us = lambda m: int((datetime(2024, 1, 1) + timedelta(minutes=m)).timestamp() * 1_000_000)  # noqa: E731
-    assert got[1].steps_completed == 3 and got[1].anchor_us == us(0) \
-        and got[1].completed_us == us(20)
-    assert got[2].steps_completed == 2 and got[2].completed_us == -1
-    # u3: click at minute 70 is 70min after anchor(0) > 60min horizon
-    assert got[3].steps_completed == 1 and got[3].anchor_us == us(0)
-    assert got[4].steps_completed == 0 and got[4].anchor_us == -1
-    assert got[5].steps_completed == 3 and got[5].completed_us == us(4)
-    assert set(got) == {1, 2, 3, 4, 5}
-
-
-def test_cohort_retention_matrix(spark):
-    """cohort_retention: cohorts keyed by first-activity period, cells
-    count distinct users active at each offset; repeat activity within
-    one period counts once; offset 0 equals cohort size."""
-    from datetime import datetime, timedelta
-    from cloudbrush_spark.operators.sessions import cohort_retention
-    D = lambda d: datetime(2024, 1, 5) + timedelta(days=d)  # noqa: E731
-    rows = [
-        (1, D(0)), (1, D(1)), (1, D(8)),      # cohort c, back in c+1
-        (2, D(0)), (2, D(16)),                 # cohort c, back in c+2
-        (3, D(9)), (3, D(9)),                  # cohort c+1 only (dup day)
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    got = {(r.cohort, r.offset): r.users
-           for r in cohort_retention(df, period_days=7).collect()}
-    c = min(k[0] for k in got)
-    assert got[(c, 0)] == 2          # users 1,2
-    assert got[(c, 1)] == 1          # user 1
-    assert got[(c, 2)] == 1          # user 2
-    assert got[(c + 1, 0)] == 1      # user 3, counted once
-    assert sum(v for (co, off), v in got.items() if co == c + 1) == 1
-
-
-def test_funnel_event_cap_semantics(spark):
-    """max_events_per_user (the bot guard): capped == uncapped on a
-    normal fixture (overflow_events all 0); a bot user whose matched
-    events exceed the cap degrades to the documented earliest-N
-    approximation with overflow_events flagging exactly the drop."""
-    from datetime import datetime, timedelta
-
-    from cloudbrush_spark.operators.sessions import funnel
-    T = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)  # noqa: E731
-    rows = [
-        (1, T(0), "view"), (1, T(10), "click"), (1, T(20), "purchase"),
-        (2, T(0), "view"), (2, T(10), "purchase"), (2, T(20), "click"),
-        (3, T(5), "error"),
-    ]
-    # bot: 500 view events, then completes late — the matched click and
-    # purchase stay within the cap, views overflow
-    rows += [(9, T(i), "view") for i in range(500)]
-    rows += [(9, T(500), "click"), (9, T(501), "purchase")]
-    df = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_type string")
-    steps = ["view", "click", "purchase"]
-    plain = {r.user_id: (r.steps_completed, r.anchor_us, r.completed_us)
-             for r in funnel(df, steps).collect()}
-    capped_df = funnel(df, steps, max_events_per_user=100)
-    assert "overflow_events" in capped_df.columns
-    capped = {r.user_id: (r.steps_completed, r.anchor_us, r.completed_us,
-                          r.overflow_events)
-              for r in capped_df.collect()}
-    # normal users: identical results, zero overflow
-    for u in (1, 2, 3):
-        assert capped[u][:3] == plain[u] and capped[u][3] == 0
-    # bot: greedy anchor (earliest view) is inside the earliest-N slice,
-    # so the funnel still completes; 400 dropped views are counted
-    assert capped[9][:3] == plain[9]
-    assert capped[9][3] == 400
-    # uncapped output keeps the original 4-column schema
-    assert "overflow_events" not in funnel(df, steps).columns
-
-
-def test_funnel_event_cap_can_truncate_completions(spark):
-    """The documented approximation edge: when the true matched event of
-    a later step lies beyond the per-type cap, the capped funnel reports
-    fewer completed steps — and overflow_events > 0 flags the user."""
-    from datetime import datetime, timedelta
-
-    from cloudbrush_spark.operators.sessions import funnel
-    T = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)  # noqa: E731
-    # clicks 1..10 all BEFORE the view at minute 50; the only click
-    # strictly after the anchor is the 11th (minute 60) — beyond cap 5
-    rows = [(7, T(i), "click") for i in range(1, 11)]
-    rows += [(7, T(50), "view"), (7, T(60), "click")]
-    df = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_type string")
-    plain = funnel(df, ["view", "click"]).collect()[0]
-    assert plain.steps_completed == 2
-    capped = funnel(df, ["view", "click"], max_events_per_user=5) \
-        .collect()[0]
-    assert capped.steps_completed == 1
-    assert capped.overflow_events == 6
