@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import dna
+from cloudbrush_spark.operators import smallgraph
 from cloudbrush_spark.operators.graph import compressible
 from cloudbrush_spark.plans import cut
 
@@ -186,130 +187,32 @@ def _rewrite_edges(edges: DataFrame, merges: DataFrame) -> DataFrame:
     return d.distinct()
 
 
-def _rc_str(s: str) -> str:
-    return dna.rc_py(s)
-
-
 def _serial_contract(nodes: DataFrame, edges: DataFrame,
                      link_rows: list) -> tuple[DataFrame, DataFrame]:
-    """G7/G8 serial finish: contract the residual chain subgraph in the
-    driver (the reference collapses it into ONE reducer via the constant
-    MERTAG, src/Brush/QuickMark.java:129-137 + QuickMerge chain walks
-    src/Brush/TailInfo.java:54-107).  Only chain MEMBERS move to the
-    driver — every other node/edge stays distributed.
+    """G7/G8 serial finish: contract the residual chain subgraph with
+    ``smallgraph.chain_walk`` in the driver (the reference collapses it
+    into ONE reducer via the constant MERTAG,
+    src/Brush/QuickMark.java:129-137).  Only chain MEMBERS move to the
+    driver — every other node/edge stays distributed, and third-party
+    edges are re-pointed with the same orientation map the distributed
+    rounds use.
 
     ``link_rows``: collected compressible links (src, et, dst, ov).
-    Each chain is walked end-to-end (cycles get one link dropped, like
-    QuickMerge's cycle fix, src/Brush/QuickMerge.java:354-365), merged
-    into its lexicographically-smallest end node, and third-party edges
-    are re-pointed with the same orientation map the distributed rounds
-    use.
     """
     spark = nodes.sparkSession
     has_pairs = "pair_ends" in nodes.columns
-    # per-node outgoing link per side (mutual uniqueness makes this 1:1)
-    out = {}
-    members = set()
-    for r in link_rows:
-        out[(r.src, r.et[0])] = (r.dst, r.et[1], r.ov)
-        members.add(r.src)
-        members.add(r.dst)
-
+    members = {r.src for r in link_rows} | {r.dst for r in link_rows}
     member_df = spark.createDataFrame([(m,) for m in members], "node_id string")
-    attrs = {row.node_id: row for row in
-             nodes.join(member_df, "node_id").collect()}
-
-    def free_side(n: str, side: str) -> bool:
-        return (n, side) not in out
-
-    # chain starts: member whose one side has a link and the other doesn't;
-    # pure cycles have no start — break at the smallest id
-    visited = set()
-    merged_rows, mapping_rows, drop_rows = [], [], []
-
-    def walk(start: str, o0: str):
-        """Walk from start oriented o0 (so links leave its o0 side)."""
-        chain = [(start, o0)]
-        visited.add(start)
-        cur, o = start, o0
-        while True:
-            nxt = out.get((cur, o))
-            if nxt is None:
-                break
-            dst, d2, ov = nxt
-            drop_rows.append((cur, o + d2, dst, ov))
-            if dst in visited:      # cycle closed: stop (link dropped)
-                break
-            chain.append((dst, d2, ov))
-            visited.add(dst)
-            cur, o = dst, d2
-        return chain
-
-    # deterministic start order
-    starts = sorted(m for m in members
-                    if free_side(m, "f") != free_side(m, "r"))
-    chains = []
-    for s in starts:
-        if s in visited:
-            continue
-        o0 = "f" if not free_side(s, "f") else "r"
-        chains.append(walk(s, o0))
-    # residual cycles
-    for s in sorted(members):
-        if s not in visited:
-            chains.append(walk(s, "f"))
-
-    for chain in chains:
-        if len(chain) == 1:
-            visited.discard(chain[0][0])
-            continue
-        # orient the whole chain so its content reads left->right; the
-        # surviving id is the smaller end, flipping the walk if needed
-        first, last = chain[0][0], chain[-1][0]
-        pairs: list = []
-        orient_of = {}
-        # node i orientation: o_i from the walk; seq contribution =
-        # orient(seq, o_i), trimmed by the incoming overlap
-        (n0, o0) = chain[0]
-        a0 = attrs[n0]
-        merged = a0.seq if o0 == "f" else _rc_str(a0.seq)
-        orient_of[n0] = o0
-        # iterative length-weighted coverage, the reference's pairwise
-        # formula applied along the walk (src/Brush/PairMerge.java:149:
-        # weights use the CURRENT merged length, so coverage is mildly
-        # merge-order-dependent — same as the reference)
-        cur_cov, cur_len = a0.cov, len(a0.seq)
-        if has_pairs:
-            pairs.extend(a0.pair_ends or [])
-        for (n, o, ov) in chain[1:]:
-            a = attrs[n]
-            oseq = a.seq if o == "f" else _rc_str(a.seq)
-            merged = merged + oseq[ov:]
-            orient_of[n] = o
-            l = len(a.seq)
-            cur_cov = (cur_cov * cur_len + a.cov * l) / (cur_len + l)
-            cur_len = cur_len + l - ov
-            if has_pairs:
-                pairs.extend(a.pair_ends or [])
-        new_id = min(first, last)
-        if new_id != first:
-            # flip: reverse-complement the merged seq and all orientations
-            merged = _rc_str(merged)
-            orient_of = {n: ("r" if o == "f" else "f")
-                         for n, o in orient_of.items()}
-        row = [new_id, merged, cur_cov]
-        if has_pairs:
-            row.append(sorted(pairs))
-        merged_rows.append(tuple(row))
-        for n, o in orient_of.items():
-            mapping_rows.append((n, new_id, o))
-
+    attrs, _ = smallgraph.from_rows(
+        nodes.join(member_df, "node_id").collect(), [])
+    merged_rows, mapping_rows, drop_rows = smallgraph.chain_walk(link_rows, attrs)
     if not merged_rows:
         return nodes, edges
 
     schema = "node_id string, seq string, cov double" + \
         (", pair_ends array<string>" if has_pairs else "")
-    new_nodes_df = spark.createDataFrame(merged_rows, schema)
+    new_nodes_df = spark.createDataFrame(
+        [r if has_pairs else r[:3] for r in merged_rows], schema)
     mapping = spark.createDataFrame(mapping_rows, "m_id string, m_to string, o_a string")
     drops = spark.createDataFrame(drop_rows, "src string, et string, dst string, ov int")
     drops_rev = drops.select(F.col("dst").alias("src"), dna.flip_link("et").alias("et"),

@@ -193,13 +193,20 @@ def find_tips(nodes: DataFrame, edges: DataFrame, tiplength: int) -> DataFrame:
     return doomed
 
 
-def remove_low_coverage(nodes: DataFrame, edges: DataFrame, low_cov_thresh: float,
-                        max_len: int) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """C4: drop short low-coverage nodes + their links
-    (src/Brush/RemoveLowCoverage.java:67-104).  Returns (nodes, edges, doomed)."""
-    doomed = nodes.filter(
+def low_coverage_nodes(nodes: DataFrame, low_cov_thresh: float,
+                       max_len: int) -> DataFrame:
+    """C4 detection half: ids of short low-coverage nodes
+    (src/Brush/RemoveLowCoverage.java:67-104)."""
+    return nodes.filter(
         (F.length("seq") <= max_len) & (F.col("cov") <= low_cov_thresh)
     ).select("node_id")
+
+
+def remove_low_coverage(nodes: DataFrame, edges: DataFrame, low_cov_thresh: float,
+                        max_len: int) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """C4: drop short low-coverage nodes + their links.
+    Returns (nodes, edges, doomed)."""
+    doomed = low_coverage_nodes(nodes, low_cov_thresh, max_len)
     new_nodes, new_edges = remove_nodes(nodes, edges, doomed)
     return new_nodes, new_edges, doomed
 

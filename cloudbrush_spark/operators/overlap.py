@@ -162,7 +162,9 @@ def match_prefix(nodes: DataFrame, k: int, high_kmers: DataFrame | None = None,
     while ``2 * reads <= PREFILTER_KEYS_MAX`` (past it, multi-GB
     broadcasts don't fly and the identical single-exchange plan simply
     carries all windows — same output either side of the gate, pinned
-    in tests/test_overlap.py).
+    in tests/test_overlap.py).  The count is cheap only when ``nodes``
+    is already cut (``plans.cut``), as the assembler's node table is: on
+    an uncut derived frame it re-runs the whole upstream plan once more.
     """
     prefixes, suffixes = _postings(nodes, k)
     prefixes = _drop_noise_keys(prefixes, k, high_kmers)

@@ -406,64 +406,3 @@ SQL_OVERLAP_EDGES = """
                UNION ALL
                SELECT dst AS src, 'rr' AS et, src AS dst, ov FROM ofwd)
 """
-
-
-# ---------------------------------------------------------------------------
-# CONSISTENT chain fixture (distributed G5/G6 fixpoint oracle): node
-# sequences are slices of a per-chain walk string, so every edge satisfies
-# suffix(orient(src,d1),ov) == prefix(orient(dst,d2),ov) and the contracted
-# sequence is merge-order INVARIANT (the plain chain fixture's md5-random
-# seqs are not overlap-consistent, so serial and distributed trims differ
-# legitimately there).  12 chains x 8 nodes, len 32, constant ov 8: node i
-# of chain c = walkstr(c)[24*i : 24*i+32]; full contraction = walkstr[:200].
-# ---------------------------------------------------------------------------
-
-_CONS_OV = 8
-
-
-def _walkstr(c):
-    return F.concat(*[
-        _dna32(F.concat(F.lit("w"), c.cast("string"), F.lit(f"#{j}")))
-        for j in range(7)
-    ])
-
-
-def cons_chain_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    k = _part_k(spark, sf_dir, 96)
-    c = F.floor((F.col("k") - 1) / 8).cast("long")
-    i = (F.col("k") - 1) % 8
-    oriented = F.substring(_walkstr(c), (i * 24 + 1).cast("int"), 32)
-    from cloudbrush_spark.functions import dna
-    return k.select(
-        _id6(F.col("k")).alias("node_id"),
-        F.when(F.col("k") % 3 != 0, oriented)
-        .otherwise(dna.rc(oriented)).alias("seq"),
-        (F.col("k") % 9 + 1).cast("double").alias("cov"),
-    )
-
-
-def cons_chain_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    k = _part_k(spark, sf_dir, 96).filter((F.col("k") - 1) % 8 < 7)
-    fwd = k.select(
-        _id6(F.col("k")).alias("src"),
-        F.concat(_ori(F.col("k")), _ori(F.col("k") + 1)).alias("et"),
-        _id6(F.col("k") + 1).alias("dst"),
-        F.lit(_CONS_OV).alias("ov"),
-    )
-    return symmetrize(fwd)
-
-
-# expected contracted sequences: one canonical 200bp walk prefix per chain
-SQL_CONS_CHAIN_RESULT = """
-    ccw AS (
-        SELECT c, substring(string_agg(blk, '' ORDER BY j), 1, 200) AS w
-        FROM (
-            SELECT c.c, j.j,
-                   translate(md5('w' || CAST(c.c AS VARCHAR) || '#' || CAST(j.j AS VARCHAR)),
-                             '0123456789abcdef', 'AACCGGTTACGTACGT') AS blk
-            FROM (SELECT DISTINCT (p_partkey - 1) // 8 AS c FROM part
-                  WHERE p_partkey BETWEEN 1 AND 96) c
-            CROSS JOIN (VALUES (0),(1),(2),(3),(4),(5),(6)) AS j(j)
-        ) t GROUP BY c
-    )
-"""

@@ -7,6 +7,14 @@ the reference's HDFS directory renames; a reliable checkpoint when
 ``spark.checkpoint.dir`` is set); loop decisions read counts
 (replacing Hadoop counters).  Every stage returns/records its counters in
 ``self.counters`` mirroring the reference's per-stage printouts.
+
+The cleanup tail after transitive reduction (``compress_chains`` and the
+tips, bubbles, low-coverage and edge-adjustment stages) starts with one
+bounded collect of the edge and node tables.  When both hold at most
+``smallgraph.DRIVER_MAX_ROWS`` rows the stage's whole loop runs over
+driver dicts and builds its output frames once, as the reference hands
+small residual graphs to one reducer (src/Brush/BrushAssembler.java:
+506-556); otherwise the distributed loop below runs.
 """
 
 from __future__ import annotations
@@ -19,7 +27,8 @@ from pyspark.sql import functions as F
 from cloudbrush_spark.config import BrushParams
 from cloudbrush_spark.operators import bubbles as bubbles_ops
 from cloudbrush_spark.operators import consensus as consensus_ops
-from cloudbrush_spark.operators import contraction, dedup, graph, kmers, mates, overlap
+from cloudbrush_spark.operators import (
+    contraction, dedup, graph, kmers, mates, overlap, smallgraph)
 from cloudbrush_spark.operators import stats as stats_ops
 from cloudbrush_spark.plans import cut
 
@@ -64,6 +73,111 @@ class Assembler:
         if self.verbose:
             import time
             print(f"[assembler {time.strftime('%H:%M:%S')}] {msg}", flush=True)
+
+    def _driver_graph(self, stage: str, nodes: DataFrame, edges: DataFrame):
+        """``smallgraph`` (nodes, edges) when each table holds at most
+        ``smallgraph.DRIVER_MAX_ROWS`` rows, else None.  One bounded
+        ``limit(bound + 1).collect()`` per table both decides the path and
+        fetches the rows."""
+        bound = smallgraph.DRIVER_MAX_ROWS
+        e_rows = edges.limit(bound + 1).collect()
+        n_rows = nodes.limit(bound + 1).collect() if len(e_rows) <= bound else []
+        if len(e_rows) > bound or len(n_rows) > bound:
+            self._log(f"{stage}: distributed (more than {bound} "
+                      f"{'edges' if len(e_rows) > bound else 'nodes'})")
+            return None
+        self._log(f"{stage}: driver finish ({len(n_rows)} nodes, "
+                  f"{len(e_rows)} edges)")
+        self.counters["driver_finish"] = self.counters.get("driver_finish", 0) + 1
+        return smallgraph.from_rows(n_rows, e_rows)
+
+    def _frames(self, g: tuple[dict, set], nodes: DataFrame, edges: DataFrame
+                ) -> tuple[DataFrame, DataFrame]:
+        """A driver graph as frames with the schemas of ``nodes`` and
+        ``edges``.  They are built from Arrow tables: a frame built from a
+        list of rows starts Python workers on every job that reads it."""
+        import pyarrow as pa
+        g_nodes, g_edges = g
+        ids = sorted(g_nodes)
+        node_cols = {"node_id": ids,
+                     "seq": [g_nodes[n][0] for n in ids],
+                     "cov": [g_nodes[n][1] for n in ids],
+                     "pair_ends": [g_nodes[n][2] for n in ids]}
+        edge_rows = sorted(g_edges)
+        edge_cols = {c: [e[i] for e in edge_rows]
+                     for i, c in enumerate(("src", "et", "dst", "ov"))}
+        return (
+            self.spark.createDataFrame(
+                pa.table({c: node_cols[c] for c in nodes.columns}), nodes.schema),
+            self.spark.createDataFrame(
+                pa.table({c: edge_cols[c] for c in edges.columns}), edges.schema))
+
+    # -- driver forms of the cleanup loops: each mirrors the distributed
+    # loop of the stage method below it, on ``smallgraph`` (nodes, edges)
+    def _compress_small(self, nodes: dict, edges: set) -> tuple[dict, set]:
+        nodes, edges, n_links = smallgraph.contract(nodes, edges)
+        if n_links:
+            self.counters["compress_rounds"] = \
+                self.counters.get("compress_rounds", 0) + 1
+        return nodes, edges
+
+    def _tips_small(self, nodes: dict, edges: set) -> tuple[dict, set]:
+        p = self.params
+        total, islands = 0, None
+        while True:
+            doomed, isl = smallgraph.find_tips(nodes, edges, p.tiplength)
+            if islands is None:
+                islands = isl
+            if not doomed:
+                break
+            total += len(doomed)
+            nodes, edges = self._compress_small(
+                *smallgraph.remove_nodes(nodes, edges, doomed))
+        self.counters["tips_island"] = self.counters.get("tips_island", 0) + islands
+        self.counters["tips_removed"] = self.counters.get("tips_removed", 0) + total
+        self._log(f"remove_tips: {total} tips removed, {islands} islands")
+        return nodes, edges
+
+    def _bubbles_small(self, nodes: dict, edges: set) -> tuple[dict, set]:
+        p = self.params
+        total = 0
+        while True:
+            pops = smallgraph.find_bubbles(
+                nodes, edges, p.maxbubblelen, p.bubble_edit_rate)
+            if not pops:
+                break
+            total += len(pops)
+            nodes, edges = self._compress_small(
+                *smallgraph.pop_bubbles(nodes, edges, pops))
+        self.counters["bubbles_popped"] = self.counters.get("bubbles_popped", 0) + total
+        self._log(f"pop_all_bubbles: {total} popped")
+        return nodes, edges
+
+    def _low_cov_small(self, nodes: dict, edges: set) -> tuple[dict, set]:
+        p = self.params
+        doomed = smallgraph.low_coverage(nodes, p.low_cov_thresh, p.max_low_cov_len)
+        self.counters["lowcov_removed"] = len(doomed)
+        nodes, edges = self._compress_small(
+            *smallgraph.remove_nodes(nodes, edges, doomed))
+        nodes, edges = self._bubbles_small(*self._tips_small(nodes, edges))
+        self._log(f"remove_low_cov: {len(doomed)} removed")
+        return nodes, edges
+
+    def _edge_adjust_small(self, nodes: dict, edges: set,
+                           max_rounds: int) -> tuple[dict, set]:
+        p = self.params
+        for _ in range(max_rounds):
+            uniq = smallgraph.unique_nodes(nodes, p.kmer_cov, p.readlen, p.k)
+            removals = smallgraph.self_loops(edges) | smallgraph.overlap_boundary_cuts(
+                [e for e in edges if e[0] in uniq])
+            self.counters["edge_adjust_cuts"] = \
+                self.counters.get("edge_adjust_cuts", 0) + len(removals)
+            if not removals:
+                break
+            nodes, edges = self._compress_small(
+                nodes, smallgraph.remove_edges(edges, removals))
+            self._log(f"edge_adjustment round: {len(removals)} cuts")
+        return nodes, edges
 
     # -- preprocess: P1 -> P2 -> P3 (BrushAssembler.java:256-309) ----------
     def preprocess(self, reads: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -135,6 +249,15 @@ class Assembler:
     # -- compressChains (BrushAssembler.java:468-560) ----------------------
     def compress_chains(self, nodes: DataFrame, edges: DataFrame
                         ) -> tuple[DataFrame, DataFrame]:
+        g = self._driver_graph("compress_chains", nodes, edges)
+        if g is not None:
+            return self._frames(self._compress_small(*g), nodes, edges)
+        return self._contract(nodes, edges)
+
+    def _contract(self, nodes: DataFrame, edges: DataFrame
+                  ) -> tuple[DataFrame, DataFrame]:
+        """Distributed chain contraction, for the loops of stages that
+        were too large for the driver."""
         nodes, edges, rounds = contraction.contract_chains(
             nodes, edges, seed=self.params.random_seed,
             serial_threshold=self.params.serial_threshold,
@@ -146,6 +269,9 @@ class Assembler:
     # -- removeTips (BrushAssembler.java:565-618) --------------------------
     def remove_tips(self, nodes: DataFrame, edges: DataFrame
                     ) -> tuple[DataFrame, DataFrame]:
+        g = self._driver_graph("remove_tips", nodes, edges)
+        if g is not None:
+            return self._frames(self._tips_small(*g), nodes, edges)
         p = self.params
         total = 0
         # reference reports disconnected tip-short nodes separately
@@ -155,13 +281,13 @@ class Assembler:
         self.counters["tips_island"] = \
             self.counters.get("tips_island", 0) + islands
         while True:
-            doomed = graph.find_tips(nodes, edges, p.tiplength)
+            doomed = cut(graph.find_tips(nodes, edges, p.tiplength))
             n = doomed.count()
             if n == 0:
                 break
             total += n
             nodes, edges = graph.remove_nodes(nodes, edges, doomed)
-            nodes, edges = self.compress_chains(nodes, edges)
+            nodes, edges = self._contract(nodes, edges)
         self.counters["tips_removed"] = self.counters.get("tips_removed", 0) + total
         self._log(f"remove_tips: {total} tips removed, {islands} islands")
         return nodes, edges
@@ -169,17 +295,20 @@ class Assembler:
     # -- popallbubbles (BrushAssembler.java:623-676) -----------------------
     def pop_all_bubbles(self, nodes: DataFrame, edges: DataFrame
                         ) -> tuple[DataFrame, DataFrame]:
+        g = self._driver_graph("pop_all_bubbles", nodes, edges)
+        if g is not None:
+            return self._frames(self._bubbles_small(*g), nodes, edges)
         p = self.params
         total = 0
         while True:
-            pops = bubbles_ops.find_bubbles(
-                nodes, edges, p.maxbubblelen, p.bubble_edit_rate)
+            pops = cut(bubbles_ops.find_bubbles(
+                nodes, edges, p.maxbubblelen, p.bubble_edit_rate))
             n = pops.count()
             if n == 0:
                 break
             total += n
             nodes, edges = bubbles_ops.pop_bubbles(nodes, edges, pops)
-            nodes, edges = self.compress_chains(nodes, edges)
+            nodes, edges = self._contract(nodes, edges)
         self.counters["bubbles_popped"] = self.counters.get("bubbles_popped", 0) + total
         self._log(f"pop_all_bubbles: {total} popped")
         return nodes, edges
@@ -187,10 +316,14 @@ class Assembler:
     # -- removelowcov (BrushAssembler.java:682-703) ------------------------
     def remove_low_cov(self, nodes: DataFrame, edges: DataFrame
                        ) -> tuple[DataFrame, DataFrame]:
+        g = self._driver_graph("remove_low_cov", nodes, edges)
+        if g is not None:
+            return self._frames(self._low_cov_small(*g), nodes, edges)
         p = self.params
-        nodes, edges, doomed = graph.remove_low_coverage(
-            nodes, edges, p.low_cov_thresh, p.max_low_cov_len)
+        doomed = cut(graph.low_coverage_nodes(
+            nodes, p.low_cov_thresh, p.max_low_cov_len))
         self.counters["lowcov_removed"] = doomed.count()
+        nodes, edges = graph.remove_nodes(nodes, edges, doomed)
         nodes, edges = self.compress_chains(nodes, edges)
         nodes, edges = self.remove_tips(nodes, edges)
         nodes, edges = self.pop_all_bubbles(nodes, edges)
@@ -200,6 +333,9 @@ class Assembler:
     # -- edgeAdjustment: C5 loop (BrushAssembler.java:400-464) -------------
     def edge_adjustment(self, nodes: DataFrame, edges: DataFrame,
                         max_rounds: int = 4) -> tuple[DataFrame, DataFrame]:
+        g = self._driver_graph("edge_adjustment", nodes, edges)
+        if g is not None:
+            return self._frames(self._edge_adjust_small(*g, max_rounds), nodes, edges)
         p = self.params
         for _ in range(max_rounds):
             loops = graph.self_loops(edges)
@@ -207,14 +343,14 @@ class Assembler:
             uniq = classified.filter(F.col("unique")).select(
                 F.col("node_id").alias("src"))
             boundary = graph.overlap_boundary_cuts(edges.join(uniq, "src"))
-            removals = loops.unionByName(boundary).distinct()
+            removals = cut(loops.unionByName(boundary).distinct())
             n = removals.count()
             self.counters["edge_adjust_cuts"] = \
                 self.counters.get("edge_adjust_cuts", 0) + n
             if n == 0:
                 break
             edges = cut(graph.remove_edges(edges, removals))
-            nodes, edges = self.compress_chains(nodes, edges)
+            nodes, edges = self._contract(nodes, edges)
             self._log(f"edge_adjustment round: {n} cuts")
         return nodes, edges
 
@@ -233,7 +369,7 @@ class Assembler:
             if n == 0:
                 break
             edges = cut(graph.remove_edges(edges, removals))
-            nodes, edges = self.compress_chains(nodes, edges)
+            nodes, edges = self._contract(nodes, edges)
             self._log(f"pair_edge_adjustment round: {n} cuts")
         return nodes, edges
 

@@ -6,14 +6,19 @@ The reads are drawn the way the benchmark draws ``asm_deep`` (uniform
 random genome, 36 bp reads at 72x, random strand, 0.5% substitutions),
 re-stated here so the test stands on its own.  The canonical contig
 digest pins the whole pipeline: any change to a stage that moves one
-contig base fails it.
+contig base fails it.  It runs twice: with the default driver-finish
+bound, where the whole post-reduction cleanup tail runs in the driver,
+and with the bound forced to 0, where every stage takes the distributed
+loop.
 """
 
 import hashlib
 
 import numpy as np
+import pytest
 
 from cloudbrush_spark.config import BrushParams
+from cloudbrush_spark.operators import smallgraph
 from cloudbrush_spark.pipeline.assembler import Assembler
 from cloudbrush_spark.sources.fasta import read_sfa
 
@@ -72,7 +77,15 @@ def _fidelity(genome: str, contigs: list[str]) -> float:
     return sum(w in genome or w in rc for w in wins) / len(wins) if wins else 0.0
 
 
-def test_assemble_small_genome_end_to_end(spark, tmp_path):
+# stages that take the bounded collect: compress_chains after transitive
+# reduction, remove_tips, pop_all_bubbles, remove_low_cov, edge_adjustment
+@pytest.mark.parametrize("bound,driver_stages", [
+    pytest.param(smallgraph.DRIVER_MAX_ROWS, 5, id="default_bound"),
+    pytest.param(0, 0, id="bound_0"),
+])
+def test_assemble_small_genome_end_to_end(spark, tmp_path, monkeypatch,
+                                          bound, driver_stages):
+    monkeypatch.setattr(smallgraph, "DRIVER_MAX_ROWS", bound)
     genome, reads = _reads(seed=5, genome_size=1000, read_len=36, coverage=72,
                            error_rate=0.005)
     path = tmp_path / "reads.sfa"
@@ -84,3 +97,4 @@ def test_assemble_small_genome_end_to_end(spark, tmp_path):
     dist = asm.stats_report(nodes, genome_size=len(genome))["distribution"]
     assert dist.orderBy("cutoff").first()["n50"] == _n50(contigs)
     assert _digest(contigs) == DIGEST
+    assert asm.counters.get("driver_finish", 0) == driver_stages
