@@ -51,8 +51,11 @@ def _build_parser() -> argparse.ArgumentParser:
     ap.add_argument("-slots", type=int, default=None,
                     help="parallelism (shuffle partitions); default: session")
     ap.add_argument("-nodes", type=int, default=4096,
-                    help="serial-contraction threshold (reference -nodes; "
-                         "reference default 1000, ours 4096)")
+                    help="serial-contraction threshold of the distributed "
+                         "contraction (reference -nodes; reference default "
+                         "1000, ours 4096); a graph that fits the driver "
+                         "budget (smallgraph.DRIVER_MAX_BYTES) is contracted "
+                         "in the driver whatever this is")
     ap.add_argument("-precorrect", action="store_true",
                     help="A8 spaced-seed error correction before dedup")
     ap.add_argument("-ckpt", default=None,

@@ -26,7 +26,10 @@ class BrushParams:
                                     # contraction switches to the driver-side
                                     # serial finish — the reference's -nodes
                                     # flag (src/Brush/BrushConfig.java:224,
-                                    # BrushAssembler.java:516-517)
+                                    # BrushAssembler.java:516-517).  Only the
+                                    # distributed contraction reads it: a
+                                    # graph within smallgraph.DRIVER_MAX_BYTES
+                                    # is always contracted in the driver
     mate_adjust: bool = False       # J4 pairedgeAdjustment: implemented but
                                     # default-off, like the reference's
                                     # commented-out call site

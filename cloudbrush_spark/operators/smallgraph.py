@@ -7,8 +7,8 @@ genome at 72x leaves ~3.4k nodes and ~5k edges), yet every distributed
 round of the cleanup loops costs a fixed handful of Spark jobs.  The
 reference hands such residual graphs to one reducer (QuickMark /
 QuickMerge, src/Brush/BrushAssembler.java:506-556); the assembler does
-the same with these functions once a bounded collect shows the graph
-holds at most ``DRIVER_MAX_ROWS`` edges and nodes.
+the same with these functions once ``driver_bytes`` estimates that the
+graph fits in ``DRIVER_MAX_BYTES`` of driver memory.
 
 Every function mirrors its distributed twin in ``graph``, ``bubbles`` and
 ``contraction`` with the same tie rules, and
@@ -30,11 +30,49 @@ from collections import Counter, defaultdict
 
 from cloudbrush_spark.functions.dna import flip_dir_py, flip_link_py, rc_py
 
-# Row bound on each of the edge and node tables for finishing a stage in
-# the driver: ~250k short-string rows are tens of MB of Python objects,
-# the same driver budget as the string-id union-find bound
-# (``dedup._driver_cc_max``).
-DRIVER_MAX_ROWS = 250_000
+# Driver-memory budget for finishing a stage in the driver, in the bytes
+# ``driver_bytes`` estimates.  The read lists dominate on real data: after
+# contraction each node carries the ids of all its member reads, so a few
+# thousand contigs can hold millions of ids.  The unit costs are upper
+# bounds of the measured growth of the driver process's peak RSS
+# (ru_maxrss) over the collect, the whole driver finish of one stage and
+# its Arrow output tables, on chain graphs of 2k-300k nodes whose read
+# lists hold up to 3.6M ids of 9-24 characters and whose sequences are
+# up to 10 kb (4-core x86-64, CPython 3, local Spark).  At the budget
+# that is at most about 0.5 GB of driver RSS.
+DRIVER_MAX_BYTES = 512 << 20
+ROW_BYTES = 800     # per node or edge row
+CHAR_BYTES = 5      # per character of an id or sequence string
+ID_BYTES = 64       # per ``pair_ends`` entry, beyond its characters
+
+
+def driver_bytes(nodes, edges) -> tuple[int, int, int]:
+    """``(node rows, edge rows, estimated driver bytes)`` of a graph's
+    frames from one aggregate over both tables; no row is collected."""
+    from pyspark.sql import functions as F
+
+    def length(c):
+        return F.coalesce(F.length(c), F.lit(0))
+
+    zero = F.lit(0).cast("long")
+    if "pair_ends" in nodes.columns:
+        ids = F.coalesce(F.size("pair_ends"), zero)
+        id_chars = F.coalesce(F.aggregate(
+            "pair_ends", zero, lambda acc, x: acc + length(x)), zero)
+    else:
+        ids = id_chars = zero
+    cols = ("n_nodes", "n_edges", "chars", "ids")
+    sized = nodes.select(
+        F.lit(1).alias("n_nodes"), F.lit(0).alias("n_edges"),
+        (length("node_id") + length("seq") + id_chars).alias("chars"),
+        ids.alias("ids")
+    ).unionByName(edges.select(
+        F.lit(0).alias("n_nodes"), F.lit(1).alias("n_edges"),
+        (length("src") + length("dst")).alias("chars"), zero.alias("ids")))
+    row = sized.agg(*[F.coalesce(F.sum(c), zero).alias(c) for c in cols]).first()
+    n_nodes, n_edges, chars, n_ids = (int(row[c]) for c in cols)
+    return (n_nodes, n_edges, ROW_BYTES * (n_nodes + n_edges)
+            + CHAR_BYTES * chars + ID_BYTES * n_ids)
 
 
 def from_rows(node_rows, edge_rows) -> tuple[dict, set]:

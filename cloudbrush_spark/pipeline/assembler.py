@@ -10,11 +10,12 @@ the reference's HDFS directory renames; a reliable checkpoint when
 
 The cleanup tail after transitive reduction (``compress_chains`` and the
 tips, bubbles, low-coverage and edge-adjustment stages) starts with one
-bounded collect of the edge and node tables.  When both hold at most
-``smallgraph.DRIVER_MAX_ROWS`` rows the stage's whole loop runs over
-driver dicts and builds its output frames once, as the reference hands
-small residual graphs to one reducer (src/Brush/BrushAssembler.java:
-506-556); otherwise the distributed loop below runs.
+aggregate that sizes the edge and node tables.  When the graph fits in
+``smallgraph.DRIVER_MAX_BYTES`` of driver memory the stage's whole loop
+runs over driver dicts and builds its output frames once, as the
+reference hands small residual graphs to one reducer
+(src/Brush/BrushAssembler.java:506-556); otherwise the distributed loop
+below runs.
 """
 
 from __future__ import annotations
@@ -75,21 +76,18 @@ class Assembler:
             print(f"[assembler {time.strftime('%H:%M:%S')}] {msg}", flush=True)
 
     def _driver_graph(self, stage: str, nodes: DataFrame, edges: DataFrame):
-        """``smallgraph`` (nodes, edges) when each table holds at most
-        ``smallgraph.DRIVER_MAX_ROWS`` rows, else None.  One bounded
-        ``limit(bound + 1).collect()`` per table both decides the path and
-        fetches the rows."""
-        bound = smallgraph.DRIVER_MAX_ROWS
-        e_rows = edges.limit(bound + 1).collect()
-        n_rows = nodes.limit(bound + 1).collect() if len(e_rows) <= bound else []
-        if len(e_rows) > bound or len(n_rows) > bound:
-            self._log(f"{stage}: distributed (more than {bound} "
-                      f"{'edges' if len(e_rows) > bound else 'nodes'})")
+        """``smallgraph`` (nodes, edges) when ``smallgraph.driver_bytes``
+        estimates the graph fits in ``smallgraph.DRIVER_MAX_BYTES``, else
+        None.  The estimate is one aggregate, so a graph that stays
+        distributed moves no rows to the driver."""
+        n_nodes, n_edges, est = smallgraph.driver_bytes(nodes, edges)
+        size = f"{n_nodes} nodes, {n_edges} edges, ~{est / 2**20:.1f} MB in the driver"
+        if est > smallgraph.DRIVER_MAX_BYTES:
+            self._log(f"{stage}: distributed ({size})")
             return None
-        self._log(f"{stage}: driver finish ({len(n_rows)} nodes, "
-                  f"{len(e_rows)} edges)")
+        self._log(f"{stage}: driver finish ({size})")
         self.counters["driver_finish"] = self.counters.get("driver_finish", 0) + 1
-        return smallgraph.from_rows(n_rows, e_rows)
+        return smallgraph.from_rows(nodes.collect(), edges.collect())
 
     def _frames(self, g: tuple[dict, set], nodes: DataFrame, edges: DataFrame
                 ) -> tuple[DataFrame, DataFrame]:
@@ -323,8 +321,7 @@ class Assembler:
         doomed = cut(graph.low_coverage_nodes(
             nodes, p.low_cov_thresh, p.max_low_cov_len))
         self.counters["lowcov_removed"] = doomed.count()
-        nodes, edges = graph.remove_nodes(nodes, edges, doomed)
-        nodes, edges = self.compress_chains(nodes, edges)
+        nodes, edges = self._contract(*graph.remove_nodes(nodes, edges, doomed))
         nodes, edges = self.remove_tips(nodes, edges)
         nodes, edges = self.pop_all_bubbles(nodes, edges)
         self._log(f"remove_low_cov: {self.counters['lowcov_removed']} removed")

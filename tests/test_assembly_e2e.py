@@ -77,15 +77,16 @@ def _fidelity(genome: str, contigs: list[str]) -> float:
     return sum(w in genome or w in rc for w in wins) / len(wins) if wins else 0.0
 
 
-# stages that take the bounded collect: compress_chains after transitive
-# reduction, remove_tips, pop_all_bubbles, remove_low_cov, edge_adjustment
+# stages that size the graph for the driver finish: compress_chains after
+# transitive reduction, remove_tips, pop_all_bubbles, remove_low_cov,
+# edge_adjustment
 @pytest.mark.parametrize("bound,driver_stages", [
-    pytest.param(smallgraph.DRIVER_MAX_ROWS, 5, id="default_bound"),
+    pytest.param(smallgraph.DRIVER_MAX_BYTES, 5, id="default_bound"),
     pytest.param(0, 0, id="bound_0"),
 ])
 def test_assemble_small_genome_end_to_end(spark, tmp_path, monkeypatch,
                                           bound, driver_stages):
-    monkeypatch.setattr(smallgraph, "DRIVER_MAX_ROWS", bound)
+    monkeypatch.setattr(smallgraph, "DRIVER_MAX_BYTES", bound)
     genome, reads = _reads(seed=5, genome_size=1000, read_len=36, coverage=72,
                            error_rate=0.005)
     path = tmp_path / "reads.sfa"

@@ -262,3 +262,38 @@ def test_contract_matches_distributed(spark, seed):
     n_dis, _, _ = contraction.contract_chains(ndf, edf, seed=seed, serial_threshold=0)
     assert contigs((n, a[0], a[2]) for n, a in got_nodes.items()) == \
         contigs((r.node_id, r.seq, r.pair_ends) for r in n_dis.collect())
+
+
+def test_driver_bytes_counts_read_lists(spark, monkeypatch):
+    """The driver-finish gate sizes the read lists and sequences, not
+    just the rows: the same graph with longer read lists leaves the
+    driver."""
+    from cloudbrush_spark.pipeline.assembler import Assembler
+    nodes, edges = _chain_graph(random.Random(8))
+    schema = "node_id string, seq string, cov double, pair_ends array<string>"
+    ndf = spark.createDataFrame(
+        [(n, s, c, p) for n, (s, c, p) in nodes.items()], schema)
+    edf = make_edges(spark, sorted(edges))
+    chars = sum(len(n) + len(s) + sum(map(len, p)) for n, (s, _, p) in nodes.items()) \
+        + sum(len(s) + len(d) for s, _, d, _ in edges)
+    n_ids = sum(len(p) for _, _, p in nodes.values())
+    for unit, want in (("ROW_BYTES", len(nodes) + len(edges)),
+                       ("CHAR_BYTES", chars), ("ID_BYTES", n_ids)):
+        for u in ("ROW_BYTES", "CHAR_BYTES", "ID_BYTES"):
+            monkeypatch.setattr(smallgraph, u, int(u == unit))
+        assert smallgraph.driver_bytes(ndf, edf) == (len(nodes), len(edges), want)
+    monkeypatch.undo()
+
+    est = smallgraph.driver_bytes(ndf, edf)[2]
+    monkeypatch.setattr(smallgraph, "DRIVER_MAX_BYTES", est)
+    asm = Assembler(spark)
+    got, _ = asm.compress_chains(ndf, edf)
+    assert asm.counters["driver_finish"] == 1
+    assert {r.node_id: (r.seq, r.cov, r.pair_ends) for r in got.collect()} == \
+        smallgraph.contract(nodes, edges)[0]
+
+    long_lists = spark.createDataFrame(
+        [(n, s, c, p * 100) for n, (s, c, p) in nodes.items()], schema)
+    assert smallgraph.driver_bytes(long_lists, edf)[:2] == (len(nodes), len(edges))
+    asm.compress_chains(long_lists, edf)
+    assert asm.counters["driver_finish"] == 1
