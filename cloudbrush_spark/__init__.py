@@ -14,10 +14,11 @@ as:
                     exists.
 - ``operators/``  — the generic relational/graph operator library
                     (duckdb-oracle-checkable) + LLM-data-pipeline operators
-                    (dedup families, similarity search, multimodal plumbing).
+                    (dedup families, similarity search, binary-payload
+                    dedup).
 - ``sources/``    — FASTA/FASTQ/SFA scans and sinks.
 - ``pipeline/``   — the assembly composites (SURVEY §2.7 control flow).
-- ``plans/``      — checkpoint/explain utilities for the iterative parts.
+- ``plans/``      — the stage-boundary checkpoint for the iterative parts.
 """
 
 __version__ = "0.1.0"

@@ -45,16 +45,6 @@ def token_count(col: Column | str) -> Column:
     )
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """Sub-word-ish token estimate: words + digit runs + punctuation marks,
-    the standard cheap proxy for BPE token counts."""
-    col = F.col(col) if isinstance(col, str) else col
-    return F.size(F.filter(
-        F.split(F.regexp_replace(col, r"([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s])", "$1"), ""),
-        lambda t: F.trim(t) != F.lit(""),
-    ))
-
-
 def char_shingles(name: str, n: int) -> Column:
     """Array of character n-grams of column *name* (SQL-expr, codegen-friendly)."""
     return F.expr(

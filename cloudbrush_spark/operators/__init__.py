@@ -1,5 +1,6 @@
-"""Operator library: reference surface (SURVEY §2) + LLM-pipeline +
-multimodal + join extensions."""
+"""Operator library: reference surface (SURVEY §2) + LLM-pipeline
+(dedup, similarity, sampling, scoring) + binary-payload dedup + join
+extensions."""
 
 from cloudbrush_spark.operators import (  # noqa: F401
     bubbles,

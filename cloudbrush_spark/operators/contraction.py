@@ -200,21 +200,26 @@ def _serial_contract(nodes: DataFrame, edges: DataFrame,
     ``link_rows``: collected compressible links (src, et, dst, ov).
     """
     spark = nodes.sparkSession
-    has_pairs = "pair_ends" in nodes.columns
+
+    def frame(rows, schema: str):
+        # ``schema`` is flat DDL ("name type, ..."); rows are tuples that
+        # start with its fields, in order
+        names = [f.split()[0] for f in schema.split(",")]
+        return smallgraph.arrow_frame(
+            spark, {c: [r[i] for r in rows] for i, c in enumerate(names)}, schema)
+
     members = {r.src for r in link_rows} | {r.dst for r in link_rows}
-    member_df = spark.createDataFrame([(m,) for m in members], "node_id string")
+    member_df = frame([(m,) for m in sorted(members)], "node_id string")
     attrs, _ = smallgraph.from_rows(
         nodes.join(member_df, "node_id").collect(), [])
     merged_rows, mapping_rows, drop_rows = smallgraph.chain_walk(link_rows, attrs)
     if not merged_rows:
         return nodes, edges
 
-    schema = "node_id string, seq string, cov double" + \
-        (", pair_ends array<string>" if has_pairs else "")
-    new_nodes_df = spark.createDataFrame(
-        [r if has_pairs else r[:3] for r in merged_rows], schema)
-    mapping = spark.createDataFrame(mapping_rows, "m_id string, m_to string, o_a string")
-    drops = spark.createDataFrame(drop_rows, "src string, et string, dst string, ov int")
+    new_nodes_df = frame(merged_rows, "node_id string, seq string, cov double" + (
+        ", pair_ends array<string>" if "pair_ends" in nodes.columns else ""))
+    mapping = frame(mapping_rows, "m_id string, m_to string, o_a string")
+    drops = frame(drop_rows, "src string, et string, dst string, ov int")
     drops_rev = drops.select(F.col("dst").alias("src"), dna.flip_link("et").alias("et"),
                              F.col("src").alias("dst"), "ov")
     consumed = mapping.select(F.col("m_id").alias("node_id"))

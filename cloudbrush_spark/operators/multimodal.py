@@ -1,7 +1,6 @@
 """Multimodal (binary) column operators: opaque image/audio/video payloads
-as ``binary`` columns with typed metadata, content-hash dedup, a
-perceptual-hash-style near-dup path, and the decode / feature-extract /
-resize / frame-sample plumbing as Arrow-batched ``mapInPandas`` stages.
+as ``binary`` columns with typed metadata, content-hash dedup and a
+perceptual-hash-style near-dup path.
 
 Design for 100 TB of media:
 - payload bytes stay opaque to the planner; every metadata/hash column is
@@ -11,12 +10,7 @@ Design for 100 TB of media:
 - exact dedup is a hash aggregate on the content digest (bounded key);
 - near-dup reuses the banded Hamming core (``dedup.hamming_near_pairs``)
   over a 64-bit blockhash — identical scale levers: distinct-signature
-  banding, adaptive chunk width, bucket caps;
-- decode libraries (PIL/ffmpeg/librosa) are NOT assumed present: the real
-  decode path raises ``NotImplementedError`` unless the library imports,
-  and a ``fake='deterministic'`` mode exercises the full Spark plumbing
-  (schema, batching, partitioning) with content-derived fake pixels so the
-  pipeline is testable anywhere.
+  banding, adaptive chunk width, bucket caps.
 
 The reference has no media surface; this generalizes its canonical-form
 dedup (src/Brush/GenNonContainedReads.java:118-126 — group by content key,
@@ -29,7 +23,6 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # magic-byte prefixes (hex, uppercase) -> sniffed format
 _MAGIC = {
@@ -140,165 +133,3 @@ def blockhash_near_pairs(df: DataFrame, content_col: str = "content",
     return hamming_near_pairs(sig, "id", "bh_hi", "bh_lo",
                               max_hamming=max_hamming, bucket_cap=bucket_cap)
 
-
-# --------------------------------------------------------------------------
-# decode / feature / resize / frame-sample plumbing (mapInPandas stages)
-# --------------------------------------------------------------------------
-
-DECODE_SCHEMA = T.StructType([
-    T.StructField("id", T.StringType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("channels", T.IntegerType()),
-    T.StructField("pixels", T.BinaryType()),      # H*W*C row-major uint8
-])
-
-
-def decode_images(df: DataFrame, content_col: str = "content",
-                  id_col: str = "path", fake: bool = False) -> DataFrame:
-    """Decode an image payload column to (id, width, height, channels,
-    pixels).  ``fake=True`` derives a deterministic 8x8 RGB image from the
-    payload bytes — full plumbing (schema, Arrow batching, partition
-    preservation) without touching the payload format.
-
-    The real path uses PIL when importable (any format); otherwise it
-    falls back to the vendored pure-python codec
-    (functions/imagecodec.py: uncompressed 24-bit BMP + binary PPM), so
-    the real decode stage runs in CI too.  Unsupported payloads raise
-    ValueError inside the executor — per-record decode failure, the
-    behavior a real media pipeline must handle anyway.
-    """
-    import numpy as np
-    import pandas as pd
-
-    src = df.select(F.col(id_col).cast("string").alias("id"),
-                    F.col(content_col).alias("c"))
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        try:
-            import PIL.Image
-            have_pil = True
-        except ImportError:
-            have_pil = False
-        for pdf in it:
-            rows = {k: [] for k in ("id", "width", "height", "channels", "pixels")}
-            for i, buf in zip(pdf["id"], pdf["c"]):
-                raw = bytes(buf)
-                if fake:
-                    # deterministic fake: tile payload bytes into 8x8x3
-                    b = np.frombuffer(raw, dtype=np.uint8)
-                    px = np.resize(b if b.size else np.zeros(1, np.uint8),
-                                   8 * 8 * 3).astype(np.uint8).tobytes()
-                    w = h = 8
-                    ch = 3
-                elif have_pil:  # pragma: no cover - PIL not in this container
-                    import io
-                    img = PIL.Image.open(io.BytesIO(raw)).convert("RGB")
-                    w, h = img.size
-                    ch = 3
-                    px = np.asarray(img, dtype=np.uint8).ravel().tobytes()
-                else:
-                    from cloudbrush_spark.functions.imagecodec import (
-                        decode_image_bytes,
-                    )
-                    w, h, ch, px = decode_image_bytes(raw)
-                rows["id"].append(i)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["channels"].append(ch)
-                rows["pixels"].append(px)
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(batches, DECODE_SCHEMA)
-
-
-def resize_images(decoded: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize of decoded pixel buffers to (out_w, out_h),
-    preserving the decode schema — the standard normalize-resolution
-    stage between decode and feature extraction.  Library-free integer
-    index mapping (numpy fancy indexing per Arrow batch), deterministic
-    so the stage is oracle/goldens-testable; a PIL/opencv-backed
-    interpolating resize would slot into the same mapInPandas contract.
-
-    Scale note: pure per-row transformation — no shuffle, partition
-    count preserved, output bounded at out_w*out_h*channels bytes per
-    row regardless of input resolution (the reason to resize BEFORE any
-    wide stage that shuffles pixels)."""
-    import numpy as np
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = {k: [] for k in ("id", "width", "height", "channels", "pixels")}
-            for i, w, h, ch, buf in zip(pdf["id"], pdf["width"], pdf["height"],
-                                        pdf["channels"], pdf["pixels"]):
-                w, h, ch = int(w), int(h), int(ch)
-                px = np.frombuffer(bytes(buf), dtype=np.uint8)
-                if w <= 0 or h <= 0 or px.size != w * h * ch:
-                    continue  # undecodable row: drop, like decode failures
-                img = px.reshape(h, w, ch)
-                ys = (np.arange(out_h) * h) // out_h
-                xs = (np.arange(out_w) * w) // out_w
-                res = img[ys][:, xs]
-                out["id"].append(i)
-                out["width"].append(out_w)
-                out["height"].append(out_h)
-                out["channels"].append(ch)
-                out["pixels"].append(res.ravel().tobytes())
-            yield pd.DataFrame(out)
-
-    return decoded.select("id", "width", "height", "channels", "pixels") \
-        .mapInPandas(batches, DECODE_SCHEMA)
-
-
-FEATURE_SCHEMA = "id string, feature array<float>"
-
-
-def extract_features(decoded: DataFrame, dim: int = 16) -> DataFrame:
-    """Feature vector per decoded image: per-bucket pixel-intensity
-    histogram, L2-normalized — a deterministic, library-free stand-in with
-    the exact shape of an embedding-model stage (Arrow batch in, fixed-dim
-    ``array<float>`` out, ready for operators/similarity.py)."""
-    import numpy as np
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            ids, feats = [], []
-            for i, buf in zip(pdf["id"], pdf["pixels"]):
-                px = np.frombuffer(bytes(buf), dtype=np.uint8)
-                hist, _ = np.histogram(px, bins=dim, range=(0, 256))
-                v = hist.astype(np.float64)
-                n = np.linalg.norm(v)
-                feats.append((v / n if n else v).astype(np.float32).tolist())
-                ids.append(i)
-            yield pd.DataFrame({"id": ids, "feature": feats})
-
-    return decoded.select("id", "pixels").mapInPandas(batches, FEATURE_SCHEMA)
-
-
-def frame_sample(df: DataFrame, content_col: str = "content",
-                 id_col: str = "path", every_bytes: int = 4096,
-                 max_frames: int = 8) -> DataFrame:
-    """Frame sampling for opaque video payloads: emit up to ``max_frames``
-    fixed-stride byte windows per payload as (id, frame_idx, frame).  Real
-    codec-aware sampling would slot into the same mapInPandas stage; the
-    byte-stride version keeps the fan-out contract (one input row ->
-    bounded multiple output rows) testable without ffmpeg."""
-    import pandas as pd
-
-    src = df.select(F.col(id_col).cast("string").alias("id"),
-                    F.col(content_col).alias("c"))
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for i, buf in zip(pdf["id"], pdf["c"]):
-                raw = bytes(buf)
-                for k in range(min(max_frames, max(1, len(raw) // every_bytes))):
-                    ids.append(i)
-                    idxs.append(k)
-                    frames.append(raw[k * every_bytes:(k + 1) * every_bytes])
-            yield pd.DataFrame({"id": ids, "frame_idx": idxs, "frame": frames})
-
-    return src.mapInPandas(batches, "id string, frame_idx int, frame binary")

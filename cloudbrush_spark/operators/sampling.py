@@ -50,39 +50,14 @@ def deterministic_sample(df: DataFrame, id_col: str, fraction: float,
     return df.filter(hash_bucket(id_col, 1_000_000, seed) < int(fraction * 1_000_000))
 
 
-def mixture_sample(df: DataFrame, weights: dict[str, float],
-                   source_col: str = "source", id_col: str = "doc_id",
-                   seed: str = "mixture") -> DataFrame:
-    """Domain-reweighted (mixture) sampling: keep each row with its
-    source's retention fraction, chosen by content hash — the
-    down-sampling half of training-mixture construction (e.g. keep 100%
-    of a curated domain, 30% of a crawl domain).  Sources absent from
-    ``weights`` are dropped (weight 0).
-
-    Deterministic and engine-portable like the other md5 samplers:
-    re-runs, repartitions and other engines keep the identical subset.
-    Pure filter expression — zero shuffle, codegen'd CASE over the
-    source column."""
-    b = hash_bucket(id_col, 1_000_000, seed)
-    thr: Column = F.lit(0)
-    for src, w in sorted(weights.items()):
-        # round, not truncate: mixture_resample rounds its fractional
-        # threshold, so w=0.3 must gate on the SAME bucket boundary here
-        # (int(0.3*1e6) truncates to 299999 and the two samplers would
-        # disagree on exactly the boundary hash bucket)
-        thr = F.when(F.col(source_col) == src,
-                     F.lit(int(round(w * 1_000_000)))).otherwise(thr)
-    return df.filter(b < thr)
-
-
 def mixture_resample(df: DataFrame, weights: dict[str, float],
                      source_col: str = "source", id_col: str = "doc_id",
                      seed: str = "mixture") -> DataFrame:
     """Mixture construction with UP-sampling: emit each row
     ``floor(w) + (hash < frac(w))`` times, where ``w`` is its source's
     weight — so ``w = 2.5`` duplicates every row twice and gives a
-    deterministic 50% of rows a third copy, and ``w = 0.3`` reduces to
-    the ``mixture_sample`` down-sampling filter.  Adds a ``copy`` column
+    deterministic 50% of rows a third copy, and ``w = 0.3`` keeps a
+    deterministic 30% (a pure down-sampling filter).  Adds a ``copy`` column
     (1..n) so downstream shuffles/dedup can tell the copies apart.
 
     The fractional coin is the same md5 bucket as every sampler here:
@@ -107,243 +82,15 @@ def mixture_resample(df: DataFrame, weights: dict[str, float],
     )
 
 
-def budget_select(df: DataFrame, weight_col: str, quality_col: str,
-                  budget: int, id_col: str = "doc_id",
-                  buckets: int = 1024) -> DataFrame:
-    """Quality-ordered token-budget selection: keep the highest-quality
-    rows whose cumulative weight fits a global ``budget`` — the
-    "take the best documents until N tokens" step that decides what a
-    fixed training-token budget is actually spent on.
-
-    Semantics (total order: ``quality`` DESC, id ASC): a row is kept iff
-    ``start + wt <= budget`` where ``start`` is the total weight of all
-    rows strictly before it — truncate at the first overflow, no
-    skip-and-refill, so every engine computes the identical set and the
-    oracle is a single window cumsum.
-
-    Scale shape: the same two-phase cumsum as ``pack_shards`` but
-    RANGE-bucketed on quality (``bucket = clamp(floor((1 - q) * B))`` is
-    monotone in -quality, so bucket order refines the global order;
-    equal qualities land in one bucket and break ties on id), plus a
-    budget PRUNE: a bucket whose exclusive weight prefix already exceeds
-    the budget cannot contribute a kept row, and the inner join against
-    the surviving bucket list drops it BEFORE the per-bucket window
-    sort.  Selecting the top 1% of a 100 TB corpus therefore sorts ~1%
-    of it; the only unpartitioned window is the ``buckets``-row totals
-    frame.  Quality scores cluster (rounded composites), so unlike the
-    md5 bucketing the range buckets can skew — size ``buckets`` to the
-    score resolution, and note the per-bucket sort is still bounded by
-    the skewed bucket, never the corpus."""
-    if budget < 0:
-        raise ValueError(f"budget must be >= 0, got {budget}")
-    return (
-        _budget_select(df, weight_col, quality_col,
-                       F.lit(int(budget)).cast("long"), [], id_col, buckets)
-        .select(id_col, "wt", F.col("q").alias(quality_col), "start")
-    )
-
-
-def budget_select_per_source(df: DataFrame, weight_col: str,
-                             quality_col: str, budgets: dict[str, int],
-                             source_col: str = "source",
-                             id_col: str = "doc_id",
-                             buckets: int = 1024) -> DataFrame:
-    """Per-domain token-budget allocation: run :func:`budget_select`
-    INDEPENDENTLY within each source, with each source's own budget —
-    "spend 50 B tokens on web, 30 B on code, 20 B on books", the
-    standard way a training mixture is specified when the target is
-    token counts rather than sampling rates (``mixture_resample``).
-    Sources absent from ``budgets`` are dropped, like ``mixture_sample``.
-
-    Scale shape: identical to the global form — the cumsum group key
-    just becomes (source, quality-bucket), the bucket-prefix frame
-    |sources| x ``buckets`` rows, and the budget prune per-source.  One
-    extra column in two shuffle keys, no new exchange."""
-    bad = {s: b for s, b in budgets.items() if b < 0}
-    if bad:
-        raise ValueError(f"budgets must be >= 0, got {bad}")
-    lim: Column = F.lit(None).cast("long")
-    for src, b in sorted(budgets.items()):
-        lim = F.when(F.col(source_col) == src,
-                     F.lit(int(b)).cast("long")).otherwise(lim)
-    return (
-        _budget_select(df.filter(lim.isNotNull()), weight_col, quality_col,
-                       lim, [source_col], id_col, buckets)
-        .select(source_col, id_col, "wt", F.col("q").alias(quality_col),
-                "start")
-    )
-
-
-def _budget_select(df: DataFrame, weight_col: str, quality_col: str,
-                   lim: Column, group_cols: list[str], id_col: str,
-                   buckets: int) -> DataFrame:
-    """Shared two-phase budget cumsum: group_cols=[] is the global form,
-    [source] the per-domain form.  ``lim`` must be constant within a
-    group (a literal, or a CASE over the group column)."""
-    wdf = (
-        df.select(
-            *group_cols, F.col(id_col),
-            F.coalesce(F.col(weight_col).cast("long"), F.lit(0)).alias("wt"),
-            # NULL quality sorts as 0.0 (lowest priority, deterministic)
-            # rather than falling out of the null-rejecting bucket join
-            F.coalesce(F.col(quality_col).cast("double"),
-                       F.lit(0.0)).alias("q"),
-            lim.alias("__lim"))
-        .withColumn(
-            "b",
-            F.least(
-                F.greatest(
-                    F.floor((F.lit(1.0) - F.col("q")) * buckets).cast("int"),
-                    F.lit(0)),
-                F.lit(buckets - 1)))
-    )
-    totals = wdf.groupBy(*group_cols, "b").agg(
-        F.sum("wt").alias("tot"), F.max("__lim").alias("__glim"))
-    wb = (Window.partitionBy(*group_cols).orderBy("b")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    # pre <= budget (not <): a zero-weight row at the exact budget
-    # boundary satisfies start + 0 <= budget and must stay selectable
-    prefix = (
-        totals
-        .withColumn("pre", F.coalesce(F.sum("tot").over(wb), F.lit(0)))
-        .filter(F.col("pre") <= F.col("__glim"))
-    )
-    keys = [*group_cols, "b"]
-    ww = (Window.partitionBy(*keys).orderBy(F.col("q").desc(), id_col)
-          .rowsBetween(Window.unboundedPreceding, -1))
-    return (
-        wdf.join(F.broadcast(prefix.select(*keys, "pre")), keys)
-        .withColumn("start",
-                    F.col("pre") + F.coalesce(F.sum("wt").over(ww), F.lit(0)))
-        .filter(F.col("start") + F.col("wt") <= F.col("__lim"))
-        .withColumn("start", F.col("start").cast("long"))
-    )
-
-
 def _md5_long(id_col: str, seed: str) -> Column:
     """First 8 hex chars of md5(seed|id) as a long in [0, 2^32) — the
-    shared engine-portable order/bucket key."""
+    engine-portable order/bucket key of ``stratified_sample``."""
     return F.conv(
         F.substring(
             F.md5(F.concat_ws("|", F.lit(seed), F.col(id_col).cast("string"))),
             1, 8),
         16, 10,
     ).cast("long")
-
-
-def _md5_order_start(df: DataFrame, weight_col: str, id_col: str,
-                     buckets: int, seed: str) -> DataFrame:
-    """(id, wt, start) where ``start`` is the exclusive prefix sum of
-    ``weight_col`` along the deterministic md5 permutation — the shared
-    two-phase cumsum under :func:`pack_shards` and
-    :func:`pack_sequences`: per-bucket totals (map-side, ``buckets``
-    rows) -> driver-scale bucket-prefix window -> within-bucket window.
-    No global one-task sort; see pack_shards for the full argument."""
-    h = _md5_long(id_col, seed)
-    wdf = (
-        df.select(
-            F.col(id_col),
-            # NULL weight = zero-width row (kept, costs nothing) — an
-            # un-coalesced NULL would silently vanish from the window
-            # sums and desynchronize the assignment from the oracle's
-            F.coalesce(F.col(weight_col).cast("long"), F.lit(0)).alias("wt"),
-            h.alias("h"))
-        .withColumn("b", (F.col("h") % buckets).cast("int"))
-    )
-    totals = wdf.groupBy("b").agg(F.sum("wt").alias("tot"))
-    wb = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    prefix = totals.withColumn(
-        "pre", F.coalesce(F.sum("tot").over(wb), F.lit(0)))
-    ww = (Window.partitionBy("b").orderBy("h", id_col)
-          .rowsBetween(Window.unboundedPreceding, -1))
-    return (
-        wdf.join(F.broadcast(prefix.select("b", "pre")), "b")
-        .withColumn("start",
-                    F.col("pre") + F.coalesce(F.sum("wt").over(ww), F.lit(0)))
-    )
-
-
-def pack_shards(df: DataFrame, weight_col: str, id_col: str = "doc_id",
-                budget: int = 1_000_000, buckets: int = 1024,
-                seed: str = "pack") -> DataFrame:
-    """Pack rows into fixed-weight shards (training-shard assignment):
-    order all rows by a deterministic content-hash permutation, run a
-    prefix sum of ``weight_col`` along that order, and cut a shard
-    boundary every ``budget`` units.
-
-    Output: (id, wt, shard_id, offset) — ``shard_id = floor(start /
-    budget)`` and ``offset = start % budget`` where ``start`` is the
-    total weight of all rows ordered before this one.  A row heavier
-    than the remaining shard space starts in that shard and spills over
-    (greedy semantics — every engine computes the identical assignment
-    because the order is the md5 permutation, not physical row order).
-
-    Scale shape: a global prefix sum WITHOUT a global one-task sort.
-    The md5 order is decomposed as (bucket, h, id) with ``bucket = h %
-    buckets``; per-bucket totals aggregate map-side (``buckets`` rows),
-    their exclusive cumsum runs on that driver-scale frame (the only
-    unpartitioned window — B rows, deliberate), and each row's start is
-    bucket-prefix + within-bucket exclusive cumsum (a window partitioned
-    by bucket).  Size ``buckets`` so a bucket's rows fit one task
-    comfortably (~rows/1e5); the per-bucket sort is the same work a
-    repartitionByRange+sortWithinPartitions shuffle would do, with no
-    skew because the hash is uniform."""
-    packed = _md5_order_start(df, weight_col, id_col, buckets, seed)
-    return packed.select(
-        id_col, "wt",
-        # integer division (DIV), never long/int -> double: floor(x / b)
-        # loses exactness once cumulative weight passes 2^53 (~9e15
-        # tokens — inside the 100 TB design envelope) and would silently
-        # mis-assign shards there
-        F.expr(f"start div {int(budget)}").cast("long").alias("shard_id"),
-        (F.col("start") % budget).cast("long").alias("offset"),
-    )
-
-
-def pack_sequences(df: DataFrame, weight_col: str, max_len: int = 2048,
-                   id_col: str = "doc_id", buckets: int = 1024,
-                   seed: str = "pack") -> DataFrame:
-    """Pack documents into fixed-length TRAINING SEQUENCES (the
-    GPT-style contiguous-stream packing a pretraining loader runs):
-    concatenate all documents along the deterministic md5 permutation
-    and cut every ``max_len`` tokens; a document crossing a boundary is
-    SPLIT across consecutive sequences (no padding, no token dropped) —
-    the semantics of packing one token stream, vs :func:`pack_shards`
-    which never splits a row and pads shards implicitly.
-
-    Output: one row per (document, sequence) CHUNK —
-    (id, seq_id, seq_offset, doc_offset, n_toks): tokens
-    [doc_offset, doc_offset + n_toks) of the document land at
-    [seq_offset, seq_offset + n_toks) of sequence ``seq_id``.  Every
-    sequence except the last is exactly full; chunk rows for one doc are
-    contiguous in both coordinate systems.  Zero-weight rows emit no
-    chunk (an empty document contributes no tokens to the stream).
-
-    Scale shape: the same two-phase bucketed cumsum as ``pack_shards``
-    (shared ``_md5_order_start`` — no global one-task sort), then a
-    per-row bounded explode (ceil(wt / max_len) + 1 chunks at most).
-    All boundary arithmetic is integer DIV on longs — exact past 2^53
-    cumulative tokens, the same overflow note as pack_shards."""
-    if max_len <= 0:
-        raise ValueError(f"max_len must be positive, got {max_len}")
-    ml = int(max_len)
-    packed = _md5_order_start(df, weight_col, id_col, buckets, seed) \
-        .filter(F.col("wt") > 0)
-    chunks = packed.select(
-        F.col(id_col), "wt", "start",
-        F.explode(F.sequence(
-            F.expr(f"start div {ml}"),
-            F.expr(f"(start + wt - 1) div {ml}"))).alias("seq_id"))
-    chunk_lo = F.greatest(F.col("start"), F.col("seq_id") * ml)
-    chunk_hi = F.least(F.col("start") + F.col("wt"),
-                       (F.col("seq_id") + 1) * ml)
-    return chunks.select(
-        id_col,
-        F.col("seq_id").cast("long").alias("seq_id"),
-        (chunk_lo - F.col("seq_id") * ml).cast("long").alias("seq_offset"),
-        (chunk_lo - F.col("start")).cast("long").alias("doc_offset"),
-        (chunk_hi - chunk_lo).cast("long").alias("n_toks"),
-    )
 
 
 def calibrated_quality(df: DataFrame, quality_col: str,
@@ -357,14 +104,14 @@ def calibrated_quality(df: DataFrame, quality_col: str,
     across domains (a 0.8 on web text and a 0.8 on code mean different
     things), so mixture/budget decisions over mixed sources should
     compare within-domain RANKS, not raw scores — the standard
-    quantile-calibration step before a global ``budget_select``.
+    quantile-calibration step before a global quality cut.
 
     Scale shape: never ``Window.partitionBy(source)`` alone (that puts
     an entire domain — terabytes — into ONE task).  The rank is
-    assembled with the budget_select two-phase pattern: quality RANGE
-    buckets within each source, per-(source, bucket) counts -> a
-    broadcast bucket-prefix (a bounded |sources| x ``buckets`` frame) ->
-    within-(source, bucket) row_number over bounded partitions.  Equal
+    assembled in two phases: quality RANGE buckets within each source,
+    per-(source, bucket) counts -> a broadcast bucket-prefix (a bounded
+    |sources| x ``buckets`` frame) -> within-(source, bucket) row_number
+    over bounded partitions.  Equal
     qualities always share a bucket, so prefix + in-bucket rank is the
     exact global within-source rank.
 
@@ -420,9 +167,9 @@ def stratified_sample(df: DataFrame, n: int, source_col: str = "source",
     bucket-prefix (bounded |sources| x ``buckets`` frame) -> buckets
     whose prefix already exceeds ``n`` are PRUNED before any sort
     (sampling 10k from a billion-row domain sorts ~10k rows per
-    surviving bucket, the budget_select prune applied to ranking) ->
-    within-bucket row_number; bucket order is monotone in the hash, so
-    prefix + in-bucket rank is the exact global within-source rank.
+    surviving bucket) -> within-bucket row_number; bucket order is
+    monotone in the hash, so prefix + in-bucket rank is the exact global
+    within-source rank.
 
     Output: (id_col, source_col, samp_rank) for the selected rows,
     ``samp_rank`` in [1, n] per source.

@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import math
 import random
-import threading
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -342,32 +341,15 @@ def cosine_topk_lsh(vectors: DataFrame, dim: int, k: int = 10,
     return _expand_topk(rep_topk, keyed, groups, id_col, k)
 
 
-#: Past this many centroids, training leaves the driver: Lloyd's over a
-#: numpy sample costs sample x K x dim flops per iteration, and at the
-#: ~30k centroids a 10^9-vector corpus wants (sqrt-n rule) the driver
-#: pass is days of single-node matmul — distributed KMeans (Spark MLlib)
-#: is the scale form.  Kept separate from CENTROID_LITERAL_MAX: the two
-#: ceilings are different resources (driver flops vs plan size).
-CENTROID_DRIVER_KMEANS_MAX = 4096
-
-
 def ivf_centroids(vectors: DataFrame, n_centroids: int = 16, sample: int = 4096,
                   iters: int = 8, seed: int = 42,
                   vec_col: str = "embedding") -> list[list[float]]:
-    """Coarse quantizer for IVF.
-
-    Up to ``CENTROID_DRIVER_KMEANS_MAX`` centroids: Lloyd's k-means over
-    a bounded driver-side sample (numpy).  The sample is the ONLY data
-    that leaves the cluster; the centroids are trained once on a few
-    thousand rows — no iterative Spark job.  Distances use the
-    ``||x||^2 - 2x.c + ||c||^2`` matmul expansion, chunked over sample
-    rows, so memory is O(chunk x K), never the sample x K x dim cube.
-
-    Above it (r12): distributed k-means (``pyspark.ml.clustering.KMeans``,
-    ``initMode='random'`` — k-means|| init costs ~2k extra passes and a
-    coarse quantizer doesn't need it) over the same uniform sample, kept
-    as a DataFrame instead of collected.  Assignment during training runs
-    executor-side in the JVM; only the K centers come back to the driver.
+    """Coarse quantizer for IVF: Lloyd's k-means over a bounded
+    driver-side sample (numpy).  The sample is the ONLY data that leaves
+    the cluster; the centroids are trained once on a few thousand rows —
+    no iterative Spark job.  Distances use the ``||x||^2 - 2x.c + ||c||^2``
+    matmul expansion, chunked over sample rows, so memory is O(chunk x K),
+    never the sample x K x dim cube.
 
     The sample is UNIFORM over the corpus: rows are ordered by a seeded
     content hash and the smallest ``sample`` taken (TakeOrdered — a
@@ -380,24 +362,6 @@ def ivf_centroids(vectors: DataFrame, n_centroids: int = 16, sample: int = 4096,
     sampled = (vectors.select(vec_col)
                .orderBy(F.xxhash64(F.col(vec_col), F.lit(seed)))
                .limit(sample))
-    if n_centroids > CENTROID_DRIVER_KMEANS_MAX:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-        spark = vectors.sparkSession
-        # TakeOrdered lands the sample on one partition — spread it back
-        # out so the iterative assignment parallelizes
-        feats = (sampled
-                 .repartition(spark.sparkContext.defaultParallelism or 4)
-                 .select(array_to_vector(
-                     F.col(vec_col).cast("array<double>")).alias("__fv"))
-                 .persist())
-        # MLlib errors on k > sample rows; the driver path clamps
-        # silently — match that contract (one bounded count)
-        k = min(n_centroids, feats.count())
-        model = KMeans(k=k, maxIter=iters, seed=seed,
-                       initMode="random", featuresCol="__fv").fit(feats)
-        feats.unpersist()
-        return [[float(x) for x in c] for c in model.clusterCenters()]
     rows = sampled.collect()
     X = np.array([list(r[0]) for r in rows], dtype=np.float64)
     rng = np.random.RandomState(seed)
@@ -429,131 +393,33 @@ def _centroid_scores(vec, centroids: list[list[float]]):
     return F.array(*scores)
 
 
-#: Past this many centroids the assignment switches from plan-literal
-#: score arrays to a broadcast centroid matrix + Arrow-batched argmax:
-#: thousands of dim-sized literals blow expression-tree/codegen limits
-#: long before they blow memory.  Tests monkeypatch this to force either
-#: path; the two are equivalence-pinned (tests/test_similarity.py).
-CENTROID_LITERAL_MAX = 256
-
-#: Centroid broadcasts kept alive per session (LRU): ``cosine_topk_ivf``
-#: assigns the corpus and the probes with the SAME centroid matrix, and
-#: re-broadcasting a 30k x 512 matrix per assignment would pile up
-#: ~100 MB of broadcast copies per call.  Evicted entries are explicitly unpersisted.
-_CENTROID_BC_KEEP = 4
-_centroid_bc_cache: "dict[tuple, object]" = {}
-# The cache is module state mutated by pop/insert/evict; without a lock,
-# two threads probing DIFFERENT centroid sets concurrently (the library is
-# importable from any threaded host, not just the single-threaded CLI)
-# can interleave evictions and unpersist a broadcast the other thread
-# just took — a task-time Broadcast fetch error (r12 verdict finding).
-_centroid_bc_lock = threading.Lock()
-
-
-def _broadcast_centroids(spark, cmat, bias):
-    """One Spark broadcast per distinct centroid matrix per session,
-    LRU-bounded (see ``_CENTROID_BC_KEEP``).  Keyed by content digest +
-    the JVM app id, so a restarted session never reuses a dead handle."""
-    import hashlib
-    key = (spark.sparkContext.applicationId,
-           hashlib.md5(cmat.tobytes()).hexdigest())
-    with _centroid_bc_lock:
-        bc = _centroid_bc_cache.pop(key, None)
-        if bc is None:
-            bc = spark.sparkContext.broadcast((cmat, bias))
-        _centroid_bc_cache[key] = bc  # re-insert = move to MRU position
-        evict = []
-        while len(_centroid_bc_cache) > _CENTROID_BC_KEEP:
-            evict.append(_centroid_bc_cache.pop(
-                next(iter(_centroid_bc_cache))))
-    for evicted in evict:
-        try:
-            evicted.unpersist()
-        except Exception:
-            pass  # the owning session may already be stopped
-    return bc
-
-
 def _centroid_topn(vec, centroids: list[list[float]], n: int):
     """``array<int>`` of the ``n`` nearest centroid indices for a vector
     column (nearest by L2 via the ``-0.5||c||^2 + v.c`` score; ties break
     toward the LARGER index — the ``reverse(array_sort(...))`` convention
     the literal path has always had).
 
-    Two physical forms, identical semantics:
-
-    - ``len(centroids) <= CENTROID_LITERAL_MAX``: the scores ride the
-      plan as literal arrays — whole-stage codegen, zero Python.
-    - above (r12): the centroid matrix ships ONCE per executor as a
-      Spark broadcast, and an Arrow-batched pandas UDF computes each
-      batch's score matrix with one numpy matmul (chunked so a batch
-      never materializes more than ~32 MB of scores).  The obvious
-      relational alternative — ``crossJoin(broadcast(centroid_table))``
-      + ``groupBy(id).agg(max_by(...))`` — expands every corpus row into
-      K rows before the partial aggregate (10^9 vectors x 30k centroids
-      = 3x10^13 intermediate rows); the matmul form is a PROJECTION: no
-      shuffle, no row blowup, and the centroids move once per executor,
-      not once per row.
+    The scores ride the plan as literal arrays — whole-stage codegen,
+    zero Python.  That form is sized for the tens of centroids its
+    callers use (``cosine_topk_ivf`` defaults to 16); thousands of
+    dim-sized literals would hit expression-tree and codegen limits.
     """
-    k = len(centroids)
-    nn = min(n, k)
-    if k <= CENTROID_LITERAL_MAX:
-        scores = _centroid_scores(vec, centroids)
-        return F.transform(F.slice(F.reverse(F.array_sort(scores)), 1, nn),
-                           lambda s: s["i"])
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import SparkSession
-    from pyspark.sql.functions import pandas_udf
-
-    spark = SparkSession.getActiveSession() \
-        or SparkSession.builder.getOrCreate()
-    cmat = np.asarray(centroids, dtype=np.float64)
-    bias = -0.5 * (cmat * cmat).sum(axis=1)
-    bc = _broadcast_centroids(spark, cmat, bias)
-    # rows per score chunk so chunk x K stays ~32 MB regardless of K
-    step = max(1, 4_000_000 // k)
-
-    def _topn(v):
-        cb, bb = bc.value
-        out: list[list[int]] = []
-        vals = v.to_numpy()
-        for lo in range(0, len(vals), step):
-            block = vals[lo:lo + step]
-            if len(block) == 0:
-                continue
-            x = np.array([np.asarray(e, dtype=np.float64) for e in block])
-            s = x @ cb.T + bb
-            # ties toward the LARGER index, matching the literal path:
-            # stable-argsort the REVERSED columns (first occurrence among
-            # equals = largest original index) and map back
-            order = np.argsort(-s[:, ::-1], axis=1, kind="stable")[:, :nn]
-            out.extend((s.shape[1] - 1 - order).astype("int32").tolist())
-        return pd.Series(out, dtype=object)
-
-    # real class objects, not strings: the module's `from __future__ import
-    # annotations` would stringify inline hints, and pandas/numpy are local
-    # imports here so pyspark's type-hint resolution could not eval them
-    _topn.__annotations__ = {"v": pd.Series, "return": pd.Series}
-    return pandas_udf(_topn, "array<int>")(vec)
+    scores = _centroid_scores(vec, centroids)
+    return F.transform(F.slice(F.reverse(F.array_sort(scores)), 1,
+                               min(n, len(centroids))),
+                       lambda s: s["i"])
 
 
 def auto_nprobe(n_centroids: int) -> int:
     """nprobe sized to the centroid count: ``clamp(round(sqrt(K)), 2, K)``.
 
-    A FIXED nprobe is the IVF scale bug the r12 clamp removal exposed:
-    the probed fraction is nprobe/K, so when the sqrt-n auto-sizing
-    raises K with the corpus (16 → ~30k at 10^9 vectors), a constant
-    ``nprobe=2`` probes 0.007% of the lists and recall craters silently.
-    Probing a CONSTANT fraction instead would erase the selectivity win
-    of more centroids (bytes/query = fraction × corpus, linear in n).
-    The sqrt-K rule is the standard middle path (how practitioners tune
-    FAISS-style IVF: nprobe grows with nlist, sub-linearly): probed
-    fraction decays only as 1/sqrt(K) — neighbors concentrate in the
-    query's nearest lists, so recall degrades slowly —
-    while probed bytes under sqrt-n auto-sizing grow as n^(3/4), not n.
-    At the small-index corner the rule reproduces the tuned constant
-    this engine shipped with: ``auto_nprobe(16) == 4``.
+    The probed fraction is nprobe/K, so a FIXED nprobe loses recall as K
+    grows, and a CONSTANT fraction erases the selectivity win of more
+    centroids.  The sqrt-K rule is the standard middle path (how
+    practitioners tune FAISS-style IVF: nprobe grows with nlist,
+    sub-linearly): the probed fraction decays only as 1/sqrt(K) —
+    neighbors concentrate in the query's nearest lists, so recall
+    degrades slowly.  At the default ``auto_nprobe(16) == 4``.
 
     ``cosine_topk_ivf`` resolves ``nprobe=None`` through this rule
     against its ACTUAL centroid count; explicit integers always win."""

@@ -85,6 +85,14 @@ def from_rows(node_rows, edge_rows) -> tuple[dict, set]:
     return nodes, edges
 
 
+def arrow_frame(spark, columns: dict, schema):
+    """A frame of ``columns`` (name -> values, in the order of ``schema``'s
+    fields) built from an Arrow table.  A frame built from a list of rows
+    starts Python workers on every job that reads it; this one does not."""
+    import pyarrow as pa
+    return spark.createDataFrame(pa.table(columns), schema)
+
+
 def compressible(edges) -> list:
     """G4: links (a, d1d2, b) with a unique edge on a's d1 side and on
     b's flip(d2) side, a != b."""

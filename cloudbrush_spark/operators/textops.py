@@ -107,20 +107,6 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace + BPE-ish token counts per document."""
-    return docs.select(
-        "doc_id",
-        text.token_count(text_col).cast("long").alias("ws_tokens"),
-        text.bpe_ish_token_count(text_col).cast("long").alias("bpe_ish_tokens"),
-    )
-
-
-def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Normalized-content md5 fingerprint per document."""
-    return docs.select("doc_id", text.fingerprint(text_col).alias("fp"))
-
-
 def winnow_fingerprints(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", k: int = 8,
                         window: int = 4) -> DataFrame:

@@ -92,9 +92,7 @@ class Assembler:
     def _frames(self, g: tuple[dict, set], nodes: DataFrame, edges: DataFrame
                 ) -> tuple[DataFrame, DataFrame]:
         """A driver graph as frames with the schemas of ``nodes`` and
-        ``edges``.  They are built from Arrow tables: a frame built from a
-        list of rows starts Python workers on every job that reads it."""
-        import pyarrow as pa
+        ``edges``, built from Arrow tables (``smallgraph.arrow_frame``)."""
         g_nodes, g_edges = g
         ids = sorted(g_nodes)
         node_cols = {"node_id": ids,
@@ -105,10 +103,10 @@ class Assembler:
         edge_cols = {c: [e[i] for e in edge_rows]
                      for i, c in enumerate(("src", "et", "dst", "ov"))}
         return (
-            self.spark.createDataFrame(
-                pa.table({c: node_cols[c] for c in nodes.columns}), nodes.schema),
-            self.spark.createDataFrame(
-                pa.table({c: edge_cols[c] for c in edges.columns}), edges.schema))
+            smallgraph.arrow_frame(
+                self.spark, {c: node_cols[c] for c in nodes.columns}, nodes.schema),
+            smallgraph.arrow_frame(
+                self.spark, {c: edge_cols[c] for c in edges.columns}, edges.schema))
 
     # -- driver forms of the cleanup loops: each mirrors the distributed
     # loop of the stage method below it, on ``smallgraph`` (nodes, edges)

@@ -106,20 +106,3 @@ def cut(df: DataFrame, sever: bool = False) -> DataFrame:
     df._cb_cut = state
     return df
 
-
-def origin_stats_defined(df: DataFrame) -> bool:
-    """True when ``df``'s analyzed plan is a LogicalRDD that RETAINS
-    origin stats (i.e. severing did not happen).  Raises if the plan is
-    not a LogicalRDD at all — callers pin checkpointed frames only.
-
-    ``originStats`` is a curried constructor val with no public
-    accessor in Spark 4.1, so this reads the field through Java
-    reflection — acceptable in a TEST detector (the pin this serves
-    exists precisely to catch Spark moving these internals)."""
-    plan = df._jdf.queryExecution().analyzed()
-    name = plan.getClass().getSimpleName()
-    if name != "LogicalRDD":
-        raise AssertionError(f"expected LogicalRDD, got {name}")
-    field = plan.getClass().getDeclaredField("originStats")
-    field.setAccessible(True)
-    return bool(field.get(plan).isDefined())

@@ -16,7 +16,6 @@ _SLOW_TESTS = {
     "test_assemble_resumes_from_stage_checkpoints",
     "test_resume_from_each_stage_checkpoint_keeps_digest",
     "test_stage_counters",
-    "test_centroid_topn_literal_broadcast_equivalence",
     "test_contract_matches_bruteforce",
     "test_trusted_assembly_is_read_consensus_exact",
     "test_csv_roundtrip_property",

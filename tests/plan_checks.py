@@ -1,14 +1,11 @@
-"""Physical-plan inspection helpers.
+"""Physical-plan helpers for the plan-shape tests.
 
 The engine's scale story rests on plan shape: filters pushed to the
 parquet scan, columns pruned, small sides broadcast, no accidental
 single-partition exchanges over row-level data.  These helpers make those
-properties *assertable in tests* instead of eyeballed — every operator's
-test can pin the plan it is supposed to produce (the `.explain` loop the
-build brief demands, mechanized).
+properties assertable instead of eyeballed, and tell whether a
+checkpointed frame kept its origin stats (``plans.sever_origin``).
 """
-
-from __future__ import annotations
 
 import contextlib
 import io
@@ -49,3 +46,21 @@ def read_schema(df: DataFrame) -> list[str]:
     """ReadSchema struct strings of every scan — the column-pruning witness."""
     return [m.group(1) for m in
             re.finditer(r"ReadSchema: (struct<[^>]*>)", explain_str(df, "formatted"))]
+
+
+def origin_stats_defined(df: DataFrame) -> bool:
+    """True when ``df``'s analyzed plan is a LogicalRDD that RETAINS
+    origin stats (i.e. severing did not happen).  Raises if the plan is
+    not a LogicalRDD at all — callers pin checkpointed frames only.
+
+    ``originStats`` is a curried constructor val with no public
+    accessor in Spark 4.1, so this reads the field through Java
+    reflection — acceptable in a test detector (the pin this serves
+    exists precisely to catch Spark moving these internals)."""
+    plan = df._jdf.queryExecution().analyzed()
+    name = plan.getClass().getSimpleName()
+    if name != "LogicalRDD":
+        raise AssertionError(f"expected LogicalRDD, got {name}")
+    field = plan.getClass().getDeclaredField("originStats")
+    field.setAccessible(True)
+    return bool(field.get(plan).isDefined())

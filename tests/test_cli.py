@@ -263,15 +263,15 @@ def test_cli_sql_view_pushdown(tmp_path, spark, capsys):
     table view still pushes the predicate into the parquet scan and
     prunes columns (the temp view costs nothing over the DataFrame
     API)."""
-    from cloudbrush_spark import plans
     from cloudbrush_spark import sql as cbsql
+    from tests import plan_checks
     sf = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
     cbsql.register_table_views(spark, sf, tables=("part",))
     q = cbsql.run_sql(spark,
                       "SELECT p_partkey FROM part WHERE p_size > 40")
-    pushed = plans.pushed_filters(q)
+    pushed = plan_checks.pushed_filters(q)
     assert pushed and "p_size" in pushed[0]
-    schemas = plans.read_schema(q)
+    schemas = plan_checks.read_schema(q)
     assert schemas and "p_name" not in schemas[0]
 
 

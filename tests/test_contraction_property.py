@@ -314,7 +314,8 @@ def test_sever_origin_drops_origin_plan(spark):
     them.  If Spark moves the API, sever_origin's except-branch would
     silently hand back the plain checkpoint and (b) turns red here,
     instead of the loop quietly regressing to 345 s/round."""
-    from cloudbrush_spark.plans import origin_stats_defined, sever_origin
+    from cloudbrush_spark.plans import sever_origin
+    from tests.plan_checks import origin_stats_defined
 
     df = spark.range(10).selectExpr("id", "id * 2 as v")
     ck = df.localCheckpoint(eager=True)
@@ -331,7 +332,8 @@ def test_sever_origin_drops_origin_plan(spark):
 def test_cut_materializes_once_and_severs_once(spark):
     """plans.cut returns a frame it already cut as is (no second job),
     and ``sever=True`` on a frame cut without a sever only severs it."""
-    from cloudbrush_spark.plans import cut, origin_stats_defined
+    from cloudbrush_spark.plans import cut
+    from tests.plan_checks import origin_stats_defined
 
     ck = cut(spark.range(10).selectExpr("id", "id * 2 as v"))
     assert origin_stats_defined(ck)

@@ -93,64 +93,3 @@ def test_lm_score_one_row_per_doc(spark, model):
     out = lm.lm_score(docs, unigrams, bigrams, V)
     assert out.count() == 20
     assert out.select("doc_id").distinct().count() == 20
-
-
-def test_importance_weights_rank_target_like_docs_higher(spark):
-    """DSIR weights: documents resembling the TARGET corpus weigh
-    positive, documents resembling the raw pool weigh negative, and the
-    weight equals the python-reference log-prob difference."""
-    target = spark.createDataFrame(
-        [(i, "the theorem follows from the lemma and the proof of the "
-             "corollary follows from the theorem") for i in range(3)],
-        "doc_id long, text string")
-    raw = spark.createDataFrame(
-        [(i, "click here to buy now and save big with this amazing "
-             "deal just click here now") for i in range(3)],
-        "doc_id long, text string")
-    tm = lm.bigram_lm(target)
-    rm = lm.bigram_lm(raw)
-    docs = spark.createDataFrame(
-        [(0, "the proof follows from the lemma"),
-         (1, "click here to save big now"),
-         (2, "zzz qqq unrelated vvv")],
-        "doc_id long, text string")
-    got = {r.doc_id: r for r in
-           lm.importance_weights(docs, tm, rm).collect()}
-    assert got[0].weight > 0 > got[1].weight
-    assert got[0].weight > got[2].weight > got[1].weight or \
-        abs(got[2].weight) < abs(got[0].weight)
-    # reference check for doc 0
-    tuni, tbig, tV = _py_model([(r.doc_id, r.text) for r in target.collect()])
-    runi, rbig, rV = _py_model([(r.doc_id, r.text) for r in raw.collect()])
-    _, lt = _py_score("the proof follows from the lemma", tuni, tbig, tV)
-    _, lr = _py_score("the proof follows from the lemma", runi, rbig, rV)
-    assert abs(got[0].weight - (lt - lr)) < 1e-9
-
-
-def test_dsir_weights_compose_with_budget_select(spark):
-    """The DSIR product loop closed end-to-end: importance weights from
-    lm.importance_weights feed sampling.budget_select as the quality
-    column, so the token budget is spent on the most target-like docs —
-    the Xie et al. resampling recipe expressed with the existing
-    primitives (the composition the docstrings point at, pinned)."""
-    from cloudbrush_spark.operators import lm, sampling
-    from pyspark.sql import functions as F
-
-    fluent = "the quick brown fox jumps over the lazy dog near the river"
-    target_rows = [(100 + i, fluent) for i in range(8)]
-    target = spark.createDataFrame(target_rows, "doc_id long, text string")
-    pool_rows = [(i, fluent) for i in range(4)]  # target-like
-    pool_rows += [(10 + i, "zzz qqq xxx vvv kkk jjj www yyy uuu ttt")
-                  for i in range(4)]  # gibberish
-    pool = spark.createDataFrame(pool_rows, "doc_id long, text string")
-    t_model = lm.bigram_lm(target)
-    r_model = lm.bigram_lm(pool)
-    w = lm.importance_weights(pool, t_model, r_model)
-    cand = (pool.join(w.select("doc_id", "weight"), "doc_id")
-            .withColumn("ws_tokens",
-                        F.size(F.split(F.col("text"), " "))))
-    # budget for exactly 4 docs of 12 tokens: the 4 target-like docs win
-    sel = sampling.budget_select(cand, "ws_tokens", "weight", 48,
-                                 id_col="doc_id")
-    kept = {r.doc_id for r in sel.select("doc_id").collect()}
-    assert kept == {0, 1, 2, 3}, kept

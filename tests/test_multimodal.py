@@ -1,8 +1,5 @@
-"""Multimodal binary-column operators: metadata sniff, exact dedup,
-blockhash near-dup, and the mapInPandas decode/feature/frame plumbing."""
-
-import pytest
-from pyspark.sql import functions as F
+"""Multimodal binary-column operators: metadata sniff, exact dedup and
+blockhash near-dup."""
 
 from cloudbrush_spark.operators import multimodal
 
@@ -42,94 +39,3 @@ def test_blockhash_identical_and_near_payloads(spark):
     assert pairs[("x", "y")] == 0         # identical bytes -> hamming 0
     # the perturbed payload is within the hamming budget of the original
     assert ("x", "z") in pairs and pairs[("x", "z")] <= 3
-
-
-def test_decode_images_fake_path_plumbing(spark):
-    df = _blobs(spark, [("a", b"\x01\x02\x03"), ("b", b"")])
-    out = {r.id: r for r in multimodal.decode_images(df, fake=True).collect()}
-    assert out["a"].width == 8 and out["a"].height == 8 and out["a"].channels == 3
-    assert len(out["a"].pixels) == 8 * 8 * 3
-    # deterministic: same payload -> same pixels
-    again = {r.id: r for r in multimodal.decode_images(df, fake=True).collect()}
-    assert out["a"].pixels == again["a"].pixels
-
-
-def test_decode_images_real_path_bmp_ppm(spark):
-    """REAL decode path (fake=False) end-to-end via the vendored codec:
-    a 3x2 RGB image round-trips through both BMP (bottom-up BGR rows,
-    4-byte padding) and PPM encodings to identical row-major RGB8."""
-    from cloudbrush_spark.functions.imagecodec import encode_bmp, encode_ppm
-    rgb = bytes([
-        255, 0, 0,   0, 255, 0,   0, 0, 255,     # row 0: R G B
-        10, 20, 30,  40, 50, 60,  70, 80, 90,    # row 1
-    ])
-    df = _blobs(spark, [("bmp", encode_bmp(3, 2, rgb)),
-                        ("ppm", encode_ppm(3, 2, rgb))])
-    out = {r.id: r for r in multimodal.decode_images(df, fake=False).collect()}
-    for k in ("bmp", "ppm"):
-        assert (out[k].width, out[k].height, out[k].channels) == (3, 2, 3)
-        assert bytes(out[k].pixels) == rgb
-
-
-def test_decode_images_real_path_rejects_garbage(spark):
-    from py4j.protocol import Py4JJavaError
-    df = _blobs(spark, [("a", b"\x01")])
-    try:
-        import PIL  # noqa: F401
-        pytest.skip("PIL present; fallback codec not reachable")
-    except ImportError:
-        with pytest.raises((Py4JJavaError, Exception)):
-            multimodal.decode_images(df, fake=False).collect()
-
-
-def test_extract_features_shape_and_norm(spark):
-    df = _blobs(spark, [("a", bytes(range(64)))])
-    decoded = multimodal.decode_images(df, fake=True)
-    feat = multimodal.extract_features(decoded, dim=16).collect()[0]
-    assert len(feat.feature) == 16
-    assert sum(x * x for x in feat.feature) == pytest.approx(1.0, abs=1e-5)
-
-
-def test_frame_sample_bounded_fanout(spark):
-    df = _blobs(spark, [("v", bytes(20000))])
-    frames = multimodal.frame_sample(df, every_bytes=4096, max_frames=3).collect()
-    assert [f.frame_idx for f in frames] == [0, 1, 2]
-    assert all(len(f.frame) == 4096 for f in frames)
-
-
-def test_resize_images_nearest_neighbor(spark):
-    """Resize preserves the decode schema, hits exact output dims, and is
-    deterministic; a checkerboard downsample keeps corner pixel values."""
-    import numpy as np
-    # 4x4 RGB checkerboard: (0,0)=10, (3,3)=240
-    img = np.zeros((4, 4, 3), dtype=np.uint8)
-    img[0, 0] = 10
-    img[3, 3] = 240
-    df = spark.createDataFrame(
-        [("a", 4, 4, 3, bytearray(img.ravel().tobytes()))],
-        "id string, width int, height int, channels int, pixels binary")
-    out = multimodal.resize_images(df, out_w=2, out_h=2).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r.width, r.height, r.channels) == (2, 2, 3)
-    res = np.frombuffer(bytes(r.pixels), dtype=np.uint8).reshape(2, 2, 3)
-    assert res[0, 0, 0] == 10        # nearest-neighbor keeps top-left
-    assert len(bytes(r.pixels)) == 2 * 2 * 3
-    # malformed row (pixel count mismatch) is dropped, not crashed
-    bad = spark.createDataFrame(
-        [("b", 4, 4, 3, bytearray(b"\x00\x01"))],
-        "id string, width int, height int, channels int, pixels binary")
-    assert multimodal.resize_images(bad, 2, 2).count() == 0
-
-
-def test_decode_resize_feature_pipeline(spark):
-    """decode -> resize -> feature: the full multimodal stage chain holds
-    schemas end to end and emits fixed-dim normalized vectors."""
-    df = spark.createDataFrame(
-        [("x", bytearray(b"payload-bytes-for-fake-decode"))],
-        "id string, content binary")
-    decoded = multimodal.decode_images(df, content_col="content",
-                                       id_col="id", fake=True)
-    resized = multimodal.resize_images(decoded, out_w=4, out_h=4)
-    feats = multimodal.extract_features(resized, dim=8).collect()
-    assert len(feats) == 1 and len(feats[0].feature) == 8

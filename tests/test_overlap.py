@@ -6,9 +6,9 @@ symmetric closure must hold (SURVEY §7 M2 test contract).
 
 from pyspark.sql import functions as F
 
-from cloudbrush_spark import plans
 from cloudbrush_spark.functions import dna
 from cloudbrush_spark.operators import overlap
+from tests import plan_checks
 from tests.conftest import make_nodes
 
 K = 5
@@ -122,13 +122,13 @@ def test_prefilter_gate_sides_identical(spark, monkeypatch):
     # tiny input: the gate lands on the prefilter side...
     monkeypatch.setattr(overlap, "PREFILTER_KEYS_MAX", 10_000_000)
     on = overlap.match_prefix(nodes, K)
-    assert "LeftSemi" in plans.explain_str(on)
+    assert "LeftSemi" in plan_checks.explain_str(on)
     want = {tuple(r) for r in on.collect()}
     assert want
     # ...and on the pass-through side when the bound says the key set
     # would not fly
     monkeypatch.setattr(overlap, "PREFILTER_KEYS_MAX", 1)
     off = overlap.match_prefix(nodes, K)
-    assert "LeftSemi" not in plans.explain_str(off)
+    assert "LeftSemi" not in plan_checks.explain_str(off)
     assert want == {tuple(r) for r in off.collect()}
 

@@ -1,12 +1,12 @@
 """Plan-shape tests: the scale guarantees (pushdown, pruning, broadcast)
-pinned as assertions via cloudbrush_spark.plans."""
+pinned as assertions via tests/plan_checks.py."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from cloudbrush_spark import plans
+from tests import plan_checks
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -18,13 +18,13 @@ def part(spark):
 
 def test_filter_pushdown_reaches_scan(part):
     q = part.filter(F.col("p_size") > 40).select("p_partkey")
-    pushed = plans.pushed_filters(q)
+    pushed = plan_checks.pushed_filters(q)
     assert pushed and "p_size" in pushed[0]
 
 
 def test_column_pruning_reaches_scan(part):
     q = part.select("p_partkey", "p_size")
-    schemas = plans.read_schema(q)
+    schemas = plan_checks.read_schema(q)
     assert schemas and "p_name" not in schemas[0] and "p_partkey" in schemas[0]
 
 
@@ -34,7 +34,7 @@ def test_small_dim_join_broadcasts(spark, part):
     q = orders.join(
         F.broadcast(customer.filter(F.col("c_mktsegment") == "BUILDING")),
         orders.o_custkey == customer.c_custkey)
-    assert plans.has_broadcast_join(q)
+    assert plan_checks.has_broadcast_join(q)
 
 
 def test_two_phase_n50_histogram_before_any_global_exchange(spark):
@@ -44,7 +44,7 @@ def test_two_phase_n50_histogram_before_any_global_exchange(spark):
     row-level scan."""
     from cloudbrush_spark.operators import stats
     df = spark.range(0, 10000).select((F.col("id") % 97).alias("sz"))
-    plan = plans.explain_str(stats.n50(df, "sz"))
+    plan = plan_checks.explain_str(stats.n50(df, "sz"))
     first_single = plan.find("SinglePartition")
     first_agg = plan.find("HashAggregate")
     assert first_agg != -1
@@ -60,7 +60,7 @@ def test_asof_join_avoids_nested_loop(spark):
     from cloudbrush_spark.operators import joins
     left = spark.createDataFrame([("u", 100)], "k string, lts long")
     right = spark.createDataFrame([("u", 90)], "k string, rts long")
-    plan = plans.explain_str(joins.asof_join(left, right, "k", "lts", "rts"))
+    plan = plan_checks.explain_str(joins.asof_join(left, right, "k", "lts", "rts"))
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
     assert "Window" in plan
 
@@ -76,7 +76,7 @@ def test_overlap_posting_join_never_broadcasts_postings(spark):
     from cloudbrush_spark.operators import overlap
 
     reads = gfx.overlap_reads(spark, SF)
-    plan = plans.explain_str(overlap.match_prefix(reads, 24))
+    plan = plan_checks.explain_str(overlap.match_prefix(reads, 24))
     assert "ShuffledHashJoin" in plan
     # every inner join in the candidate path is the posting join — none
     # of them may be broadcast (the LeftAnti joins against the tiny
@@ -90,9 +90,9 @@ def test_tpch_q6_filters_reach_parquet_scan(spark):
     and the scan schema must carry only the referenced columns."""
     import __spark_entry__ as entrymod
     q = entrymod.q_tpch_q6(spark, SF)
-    pushed = " ".join(plans.pushed_filters(q))
+    pushed = " ".join(plan_checks.pushed_filters(q))
     assert "l_shipdate" in pushed and "l_quantity" in pushed
-    schemas = plans.read_schema(q)
+    schemas = plan_checks.read_schema(q)
     assert schemas and "l_comment" not in schemas[0]
 
 
@@ -115,7 +115,7 @@ def test_vector_lsh_cap_broadcasts_and_avoids_nested_loop(spark):
     cand = similarity._capped_rep_pairs(groups, dim=8, planes=4, seed=7,
                                         tables=2, max_bucket=50,
                                         star_overcap=True)
-    plan = plans.explain_str(cand)
+    plan = plan_checks.explain_str(cand)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     # regime 2: one tight direction cluster blows the cap
@@ -127,8 +127,8 @@ def test_vector_lsh_cap_broadcasts_and_avoids_nested_loop(spark):
     hcand = similarity._capped_rep_pairs(hgroups, dim=4, planes=4, seed=7,
                                          tables=2, max_bucket=20,
                                          star_overcap=True)
-    hplan = plans.explain_str(hcand)
-    assert plans.has_broadcast_join(hcand)
+    hplan = plan_checks.explain_str(hcand)
+    assert plan_checks.has_broadcast_join(hcand)
     assert "BroadcastNestedLoopJoin" not in hplan
     assert "CartesianProduct" not in hplan
 
@@ -137,7 +137,7 @@ def test_pii_scrub_is_shuffle_free(spark):
     """PII scrub must stay a pure narrow projection — zero exchanges."""
     from cloudbrush_spark.operators import guard
     docs = spark.createDataFrame([(1, "a@b.co x")], "doc_id long, text string")
-    assert plans.shuffle_count(guard.pii_scrub(docs)) == 0
+    assert plan_checks.shuffle_count(guard.pii_scrub(docs)) == 0
 
 
 def test_semantic_decontaminate_is_shuffle_free(spark):
@@ -151,8 +151,8 @@ def test_semantic_decontaminate_is_shuffle_free(spark):
     bench = spark.createDataFrame(
         [(9, [1.0, 0.0])], "vec_id long, embedding array<float>")
     q = guard.semantic_decontaminate(vecs, bench)
-    assert plans.shuffle_count(q) == 0
-    plan = plans.explain_str(q)
+    assert plan_checks.shuffle_count(q) == 0
+    plan = plan_checks.explain_str(q)
     assert "Join" not in plan
     assert "MapInPandas" in plan or "mapInPandas" in plan.lower()
 
@@ -166,44 +166,10 @@ def test_decontaminate_corpus_side_has_single_aggregation_shuffle(spark):
         [(i, "a b c d e f") for i in range(4)], "doc_id long, text string")
     bench = spark.createDataFrame([(9, "a b c d e")], "doc_id long, text string")
     q = guard.decontaminate(docs, bench, n=5)
-    assert plans.has_broadcast_join(q)
-    plan = plans.explain_str(q)
+    assert plan_checks.has_broadcast_join(q)
+    plan = plan_checks.explain_str(q)
     # no sort-merge join anywhere on the gram-matching path
     assert "SortMergeJoin" not in plan or "gh" not in plan.split("SortMergeJoin")[1][:200]
-
-
-def test_pack_shards_no_global_single_partition_sort_on_rows(spark):
-    """pack_shards' only SinglePartition window must be over the
-    bucket-totals frame (buckets rows), never the row-level data: the
-    row-level window is partitioned by bucket."""
-    from cloudbrush_spark.operators import sampling
-    df = spark.range(0, 1000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 30 + 1).alias("n_tokens"))
-    q = sampling.pack_shards(df, "n_tokens", budget=100, buckets=16)
-    plan = plans.explain_str(q)
-    # the bucket-prefix frame reaches the row side through a broadcast
-    assert plans.has_broadcast_join(q)
-    # row-level cumsum window is hash-partitioned by bucket
-    assert "hashpartitioning(b" in plan
-
-
-def test_budget_select_prunes_buckets_before_the_row_sort(spark):
-    """budget_select's row-level cumsum window is partitioned by the
-    quality range bucket (never SinglePartition), the surviving bucket
-    list reaches the rows by BROADCAST, and the budget prune (pre <=
-    budget) sits on the bucket-totals side of that join — so buckets
-    past the budget are dropped before any per-bucket sort happens."""
-    from cloudbrush_spark.operators import sampling
-    df = spark.range(0, 1000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 30 + 1).alias("n_tokens"),
-        ((F.col("id") % 13) / 12.0).alias("quality"))
-    q = sampling.budget_select(df, "n_tokens", "quality", budget=500,
-                               buckets=16)
-    plan = plans.explain_str(q)
-    assert plans.has_broadcast_join(q)
-    assert "hashpartitioning(b" in plan
-    # the prune filter references the bucket prefix, not row columns
-    assert "(pre" in plan and "500" in plan
 
 
 def test_mixture_resample_is_narrow(spark):
@@ -213,7 +179,7 @@ def test_mixture_resample_is_narrow(spark):
     df = spark.createDataFrame(
         [(1, "a"), (2, "b")], "doc_id long, source string")
     q = sampling.mixture_resample(df, {"a": 2.5, "b": 0.3})
-    assert plans.shuffle_count(q) == 0
+    assert plan_checks.shuffle_count(q) == 0
 
 
 def test_tpch_semi_and_anti_legs_plan_as_semi_anti_joins(spark):
@@ -223,12 +189,12 @@ def test_tpch_semi_and_anti_legs_plan_as_semi_anti_joins(spark):
     LEFT ANTI joins — never inner-join + distinct, which would shuffle
     the full match fan-out at 100 TB."""
     import __spark_entry__ as entry
-    q4 = plans.explain_str(entry.q_tpch_q4(spark, SF))
+    q4 = plan_checks.explain_str(entry.q_tpch_q4(spark, SF))
     assert "LeftSemi" in q4
-    q16 = plans.explain_str(entry.q_tpch_q16(spark, SF))
-    assert "LeftAnti" in q16 and plans.has_broadcast_join(
+    q16 = plan_checks.explain_str(entry.q_tpch_q16(spark, SF))
+    assert "LeftAnti" in q16 and plan_checks.has_broadcast_join(
         entry.q_tpch_q16(spark, SF))
-    q22 = plans.explain_str(entry.q_tpch_q22(spark, SF))
+    q22 = plan_checks.explain_str(entry.q_tpch_q22(spark, SF))
     assert "LeftAnti" in q22
 
 
@@ -239,7 +205,7 @@ def test_boilerplate_scrub_no_nested_loop_no_global_exchange(spark):
     from cloudbrush_spark.operators import guard
     df = spark.createDataFrame(
         [(1, "a\nb"), (2, "b\nc")], "doc_id long, text string")
-    plan = plans.explain_str(guard.boilerplate_scrub(df))
+    plan = plan_checks.explain_str(guard.boilerplate_scrub(df))
     assert "BroadcastNestedLoop" not in plan
     assert "SinglePartition" not in plan
 
@@ -250,40 +216,21 @@ def test_tpch_r9_legs_keep_their_join_shapes(spark):
     — the match fan-out of a 7-line order would shuffle 7x at 100 TB);
     q15's scalar max and q19's part dimension must broadcast."""
     import __spark_entry__ as entry
-    q21 = plans.explain_str(entry.q_tpch_q21(spark, SF))
+    q21 = plan_checks.explain_str(entry.q_tpch_q21(spark, SF))
     assert "LeftSemi" in q21 and "LeftAnti" in q21
-    q15 = plans.explain_str(entry.q_tpch_q15(spark, SF))
+    q15 = plan_checks.explain_str(entry.q_tpch_q15(spark, SF))
     assert "BroadcastNestedLoopJoin" in q15 or "BroadcastExchange" in q15
-    assert plans.has_broadcast_join(entry.q_tpch_q19(spark, SF))
+    assert plan_checks.has_broadcast_join(entry.q_tpch_q19(spark, SF))
     # q8: the region-restricted customer set must stay a broadcast LEFT
     # SEMI (an inner join would duplicate fact rows for no reason and a
     # shuffled semi would move the 100 TB fact for a dimension filter);
     # every dimension chain broadcasts.
-    q8 = plans.explain_str(entry.q_tpch_q8(spark, SF))
+    q8 = plan_checks.explain_str(entry.q_tpch_q8(spark, SF))
     assert "LeftSemi" in q8 and "BroadcastExchange" in q8
     # q9: part carries p_retailprice through the aggregate — the part
     # and supplier dims must broadcast, never shuffle the fact twice.
-    q9 = plans.explain_str(entry.q_tpch_q9(spark, SF))
+    q9 = plan_checks.explain_str(entry.q_tpch_q9(spark, SF))
     assert "BroadcastExchange" in q9
-
-
-def test_pack_sequences_single_exchange_no_global_sort(spark):
-    """pack_sequences must keep pack_shards' two-phase shape: the only
-    unpartitioned window is the buckets-row totals frame; the corpus
-    itself never passes through a SinglePartition exchange or a global
-    Sort."""
-    from cloudbrush_spark.operators import sampling
-    df = spark.createDataFrame(
-        [(i, i % 50 + 1) for i in range(200)], "doc_id long, n_tokens long")
-    plan = plans.explain_str(
-        sampling.pack_sequences(df, "n_tokens", max_len=64, buckets=8))
-    # the bucket-totals frame is the one allowed SinglePartition window;
-    # it must be fed by the AGGREGATED buckets-row frame, never the rows
-    segs = plan.split("SinglePartition")
-    assert len(segs) <= 2
-    if len(segs) == 2:
-        assert "HashAggregate" in segs[0].rsplit("Exchange", 2)[-2] \
-            or "HashAggregate" in plan.split("SinglePartition")[0][-2000:]
 
 
 def test_stratified_sample_prunes_and_never_single_partitions(spark):
@@ -295,7 +242,7 @@ def test_stratified_sample_prunes_and_never_single_partitions(spark):
     from cloudbrush_spark.operators import sampling
     df = spark.createDataFrame(
         [(i, f"s{i % 4}") for i in range(400)], "doc_id long, source string")
-    plan = plans.explain_str(sampling.stratified_sample(df, 5))
+    plan = plan_checks.explain_str(sampling.stratified_sample(df, 5))
     # the in-bucket rank partitions by (source, bucket); a global Sort of
     # the corpus would show as Sort [h ...] with no partitioning
     assert "SinglePartition" not in plan.split("cnt")[0]  # corpus side

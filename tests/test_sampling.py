@@ -33,88 +33,6 @@ def test_deterministic_sample_fraction(spark):
     assert a == a2
 
 
-def test_pack_shards_matches_python_reference(spark):
-    """The full (shard_id, offset) assignment equals a single-threaded
-    prefix sum over the md5 order — the bucketed two-phase cumsum must
-    be exactly the sequential semantics."""
-    import hashlib
-
-    rows = [(i, (i * 37) % 90 + 10) for i in range(500)]  # weights 10..99
-    df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
-    budget, buckets = 1000, 16
-    got = {r.doc_id: (r.shard_id, r.offset, r.wt)
-           for r in sampling.pack_shards(
-               df, "n_tokens", budget=budget, buckets=buckets).collect()}
-
-    def h(i):
-        return int(hashlib.md5(f"pack|{i}".encode()).hexdigest()[:8], 16)
-
-    ordered = sorted(rows, key=lambda r: (h(r[0]) % buckets, h(r[0]), r[0]))
-    start = 0
-    for doc_id, wt in ordered:
-        assert got[doc_id] == (start // budget, start % budget, wt), doc_id
-        start += wt
-    assert len(got) == 500
-
-
-def test_pack_shards_stable_under_repartition(spark):
-    df = spark.range(0, 2000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 50 + 1).alias("n_tokens"))
-    a = sampling.pack_shards(df, "n_tokens", budget=500)
-    b = sampling.pack_shards(df.repartition(23), "n_tokens", budget=500)
-    diff = (a.select("doc_id", F.col("shard_id").alias("s1"))
-            .join(b.select("doc_id", F.col("shard_id").alias("s2")), "doc_id")
-            .filter(F.col("s1") != F.col("s2")).count())
-    assert diff == 0
-
-
-def test_pack_shards_oversized_row_spills(spark):
-    """A row heavier than the budget starts in its shard and spills;
-    shard ids it covers entirely simply have no starting rows."""
-    df = spark.createDataFrame(
-        [(1, 10), (2, 2500), (3, 10), (4, 10)], "doc_id long, n_tokens long")
-    out = sampling.pack_shards(df, "n_tokens", budget=100, buckets=4)
-    rows = out.collect()
-    # total weight conserved and offsets always inside the budget
-    assert sum(r.wt for r in rows) == 2530
-    assert all(0 <= r.offset < 100 for r in rows)
-    # the doc AFTER the heavy one lands >= 25 shards later
-    by_start = sorted(rows, key=lambda r: r.shard_id * 100 + r.offset)
-    heavy_idx = [i for i, r in enumerate(by_start) if r.doc_id == 2][0]
-    if heavy_idx + 1 < len(by_start):
-        nxt = by_start[heavy_idx + 1]
-        heavy = by_start[heavy_idx]
-        assert nxt.shard_id * 100 + nxt.offset \
-            == heavy.shard_id * 100 + heavy.offset + 2500
-
-
-def test_pack_shards_null_weight_is_zero_width(spark):
-    df = spark.createDataFrame(
-        [(1, 40), (2, None), (3, 40), (4, 40)], "doc_id long, n_tokens long")
-    out = sampling.pack_shards(df, "n_tokens", budget=100, buckets=4)
-    rows = {r.doc_id: r for r in out.collect()}
-    assert rows[2].wt == 0                       # kept, zero width
-    assert len(rows) == 4
-    assert sum(r.wt for r in rows.values()) == 120
-
-
-def test_mixture_sample_per_source_fractions(spark):
-    df = spark.range(0, 30000).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("src"), (F.col("id") % 3).cast("string")).alias("source"))
-    out = sampling.mixture_sample(df, {"src0": 1.0, "src1": 0.3})
-    counts = {r.source: r.cnt for r in
-              out.groupBy("source").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    assert counts["src0"] == 10000                  # weight 1.0 keeps all
-    assert abs(counts["src1"] / 10000 - 0.3) < 0.02
-    assert "src2" not in counts                     # unlisted source dropped
-    # deterministic under repartition
-    again = sampling.mixture_sample(df.repartition(13), {"src0": 1.0, "src1": 0.3})
-    assert again.count() == out.count()
-    sym = out.select("doc_id").exceptAll(again.select("doc_id")).count()
-    assert sym == 0
-
-
 def test_mixture_resample_upsamples_deterministically(spark):
     df = spark.range(0, 20000).select(
         F.col("id").alias("doc_id"),
@@ -132,125 +50,15 @@ def test_mixture_resample_upsamples_deterministically(spark):
     assert len(per) == 10000 and set(per.values()) <= {2, 3}
     mx = out.agg(F.min("copy").alias("a"), F.max("copy").alias("b")).collect()[0]
     assert mx.a == 1 and mx.b == 3
-    # reduction: w <= 1 resample == mixture_sample filter (plus copy=1)
-    a = sampling.mixture_sample(df, {"src1": 0.3}).select("doc_id")
+    # reduction: w <= 1 resample == the md5-bucket filter (plus copy=1)
+    a = df.filter((F.col("source") == "src1")
+                  & (sampling.hash_bucket("doc_id", 1_000_000, "mixture")
+                     < 300000)).select("doc_id")
     bres = sampling.mixture_resample(df, {"src1": 0.3}).select("doc_id")
     assert a.exceptAll(bres).count() == 0 and bres.exceptAll(a).count() == 0
     # determinism under repartition
     again = sampling.mixture_resample(df.repartition(11), {"src0": 2.5, "src1": 0.3})
     assert again.count() == out.count()
-
-
-def test_pack_shards_single_bucket_and_tiny_budget(spark):
-    """buckets=1 degenerates to the sequential window; budget smaller
-    than every weight still assigns one start per row."""
-    df = spark.createDataFrame(
-        [(i, 50) for i in range(10)], "doc_id long, n_tokens long")
-    out = sampling.pack_shards(df, "n_tokens", budget=10, buckets=1).collect()
-    assert len(out) == 10
-    starts = sorted(r.shard_id * 10 + r.offset for r in out)
-    assert starts == [i * 50 for i in range(10)]
-
-
-def test_budget_select_matches_python_reference(spark):
-    """The selected set and every start offset equal a single-threaded
-    cumsum over (quality DESC, doc_id) — the range-bucketed two-phase
-    form must be exactly the sequential truncate-at-overflow semantics,
-    including quality ties broken by doc_id."""
-    rows = [(i, (i * 13) % 20 + 1, ((i * 7) % 11) / 10.0) for i in range(400)]
-    df = spark.createDataFrame(rows, "doc_id long, n_tokens long, quality double")
-    total = sum(w for _, w, _ in rows)
-    budget = total * 3 // 10
-    got = {r.doc_id: (r.wt, r.start) for r in sampling.budget_select(
-        df, "n_tokens", "quality", budget=budget, buckets=16).collect()}
-
-    start, want = 0, {}
-    for doc_id, wt, _q in sorted(rows, key=lambda r: (-r[2], r[0])):
-        if start + wt <= budget:
-            want[doc_id] = (wt, start)
-        start += wt
-    assert got == want
-    assert 0 < len(want) < len(rows)  # the fixture exercises a real cut
-
-
-def test_budget_select_truncates_at_first_overflow(spark):
-    """Fill-until-overflow, never skip-and-refill: once a doc overshoots
-    the budget, every lower-priority doc is excluded even if it would
-    individually fit (start counts ALL prior docs, kept or not)."""
-    df = spark.createDataFrame(
-        [(1, 50, 0.9), (2, 60, 0.8), (3, 5, 0.7)],
-        "doc_id long, n_tokens long, quality double")
-    got = sorted(r.doc_id for r in sampling.budget_select(
-        df, "n_tokens", "quality", budget=100).collect())
-    assert got == [1]  # doc 2 overflows; doc 3 would fit but start=110
-
-
-def test_budget_select_zero_weight_at_exact_boundary(spark):
-    """A zero-width row whose start lands exactly on the budget boundary
-    satisfies start + 0 <= budget and must survive the bucket prune
-    (prune is pre <= budget, not <)."""
-    df = spark.createDataFrame(
-        [(1, 100, 0.9), (2, 0, 0.8), (3, 10, 0.7)],
-        "doc_id long, n_tokens long, quality double")
-    got = sorted(r.doc_id for r in sampling.budget_select(
-        df, "n_tokens", "quality", budget=100, buckets=4).collect())
-    assert got == [1, 2]
-
-
-def test_budget_select_stable_under_repartition_and_full_budget(spark):
-    df = spark.range(0, 3000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 40 + 1).alias("n_tokens"),
-        ((F.col("id") % 17) / 16.0).alias("quality"))
-    a = sampling.budget_select(df, "n_tokens", "quality", budget=10_000)
-    b = sampling.budget_select(df.repartition(19), "n_tokens", "quality",
-                               budget=10_000)
-    assert a.count() == b.count()
-    assert a.select("doc_id", "start").exceptAll(
-        b.select("doc_id", "start")).count() == 0
-    # budget >= total selects everything
-    everything = sampling.budget_select(df, "n_tokens", "quality",
-                                        budget=10**9)
-    assert everything.count() == 3000
-
-
-def test_budget_select_per_source_matches_python_reference(spark):
-    """Each source fills its OWN budget independently (quality DESC,
-    doc_id within the source); unlisted sources are dropped entirely."""
-    rows = [(i, f"src{i % 3}", (i * 13) % 20 + 1, ((i * 7) % 11) / 10.0)
-            for i in range(300)]
-    df = spark.createDataFrame(
-        rows, "doc_id long, source string, n_tokens long, quality double")
-    budgets = {"src0": 300, "src1": 150}
-    got = {(r.source, r.doc_id): (r.wt, r.start)
-           for r in sampling.budget_select_per_source(
-               df, "n_tokens", "quality", budgets, buckets=8).collect()}
-
-    want = {}
-    for src, lim in budgets.items():
-        start = 0
-        mine = [r for r in rows if r[1] == src]
-        for doc_id, _s, wt, _q in sorted(mine, key=lambda r: (-r[3], r[0])):
-            if start + wt <= lim:
-                want[(src, doc_id)] = (wt, start)
-            start += wt
-    assert got == want
-    assert not any(s == "src2" for s, _ in got)
-    assert {s for s, _ in got} == {"src0", "src1"}
-
-
-def test_budget_select_per_source_isolates_budgets(spark):
-    """A source exhausting its budget must not eat into another
-    source's allocation (per-group prefix, not a shared one)."""
-    df = spark.createDataFrame(
-        [(1, "a", 100, 0.9), (2, "a", 100, 0.8),
-         (3, "b", 10, 0.1), (4, "b", 10, 0.05)],
-        "doc_id long, source string, n_tokens long, quality double")
-    got = sorted((r.source, r.doc_id) for r in
-                 sampling.budget_select_per_source(
-                     df, "n_tokens", "quality",
-                     {"a": 100, "b": 20}).collect())
-    # a: only doc 1 fits; b: both fit despite terrible quality
-    assert got == [("a", 1), ("b", 3), ("b", 4)]
 
 
 def test_mixture_resample_zero_and_integer_weights(spark):
@@ -292,77 +100,6 @@ def test_calibrated_quality_never_one_task_per_source(spark):
     assert "__src" in plan and " b#" in plan
     got = {r.doc_id: r.q_rank for r in out.collect()}
     assert got[99] == 1 and got[0] == 100  # q=0.99 best, q=0.0 worst
-
-
-def test_pack_sequences_matches_python_reference(spark):
-    """Chunk rows equal a single-threaded token-stream walk over the md5
-    order: documents concatenate, every max_len tokens a cut, crossing
-    docs split — no token dropped or duplicated."""
-    import hashlib
-
-    rows = [(i, (i * 37) % 90 + 10) for i in range(300)]
-    df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
-    ml, buckets = 256, 16
-    got = {}
-    for r in sampling.pack_sequences(df, "n_tokens", max_len=ml,
-                                     buckets=buckets).collect():
-        got.setdefault(r.doc_id, []).append(
-            (r.seq_id, r.seq_offset, r.doc_offset, r.n_toks))
-
-    def h(i):
-        return int(hashlib.md5(f"pack|{i}".encode()).hexdigest()[:8], 16)
-
-    ordered = sorted(rows, key=lambda r: (h(r[0]) % buckets, h(r[0]), r[0]))
-    start = 0
-    for doc_id, wt in ordered:
-        want = []
-        for s in range(start // ml, (start + wt - 1) // ml + 1):
-            lo, hi = max(start, s * ml), min(start + wt, (s + 1) * ml)
-            want.append((s, lo - s * ml, lo - start, hi - lo))
-        assert sorted(got[doc_id]) == want, doc_id
-        start += wt
-    assert len(got) == 300
-
-
-def test_pack_sequences_stream_invariants(spark):
-    """Every sequence except the last is exactly full; per-doc chunks
-    tile [0, wt); total chunk tokens == total weight."""
-    rows = [(i, w) for i, w in enumerate([5, 700, 3, 260, 1, 512, 130])]
-    df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
-    out = sampling.pack_sequences(df, "n_tokens", max_len=128).collect()
-    total = sum(w for _, w in rows)
-    assert sum(r.n_toks for r in out) == total
-    per_seq = {}
-    for r in out:
-        per_seq[r.seq_id] = per_seq.get(r.seq_id, 0) + r.n_toks
-    last = max(per_seq)
-    assert set(per_seq) == set(range(last + 1))      # no empty sequence
-    for s, n in per_seq.items():
-        assert n == 128 if s < last else 0 < n <= 128
-    per_doc = {}
-    for r in out:
-        per_doc.setdefault(r.doc_id, []).append((r.doc_offset, r.n_toks))
-    for doc_id, w in rows:
-        chunks = sorted(per_doc[doc_id])
-        assert chunks[0][0] == 0
-        pos = 0
-        for off, n in chunks:
-            assert off == pos and n > 0
-            pos += n
-        assert pos == w
-
-
-def test_pack_sequences_zero_weight_and_validation(spark):
-    import pytest as _pytest
-    df = spark.createDataFrame(
-        [(1, 0), (2, None), (3, 10)], "doc_id long, n_tokens long")
-    out = sampling.pack_sequences(df, "n_tokens", max_len=8).collect()
-    assert {r.doc_id for r in out} == {3}            # empty docs: no chunk
-    assert [(r.seq_id, r.seq_offset, r.doc_offset, r.n_toks)
-            for r in sorted(out, key=lambda r: r.seq_id)] == \
-        [(0, 0, 0, 8), (1, 0, 8, 2)]
-    with _pytest.raises(ValueError):
-        sampling.pack_sequences(df, "n_tokens", max_len=0)
 
 
 def test_stratified_sample_exact_n_deterministic(spark):

@@ -380,76 +380,7 @@ def test_cross_corpus_embedding_exact_dup_no_lsh_needed(spark):
 
 
 # --------------------------------------------------------------------------
-# round 12: broadcast centroid assignment
-# --------------------------------------------------------------------------
-
-def test_centroid_topn_literal_broadcast_equivalence(spark, monkeypatch):
-    """The two physical forms of centroid assignment — plan-literal score
-    arrays (<= CENTROID_LITERAL_MAX) and the broadcast-matrix Arrow
-    matmul (above it, r12) — produce IDENTICAL top-n bucket lists on a
-    fixture that exercises both exact ties (duplicate centroids,
-    duplicate vectors; ties break toward the larger index) and the
-    straddle point."""
-    rng = random.Random(3)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(200)]
-    rows += [(1000 + i, rows[i][1]) for i in range(10)]  # duplicate vectors
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(300)]
-    cents[42] = list(cents[41])  # duplicate centroid -> exact score tie
-    monkeypatch.setattr(similarity, "CENTROID_LITERAL_MAX", 1000)
-    lit = df.select(
-        "vec_id",
-        similarity._centroid_topn(F.col("embedding"), cents, 3).alias("t"),
-    ).collect()
-    monkeypatch.setattr(similarity, "CENTROID_LITERAL_MAX", 16)
-    bro = df.select(
-        "vec_id",
-        similarity._centroid_topn(F.col("embedding"), cents, 3).alias("t"),
-    ).collect()
-    dl = {r.vec_id: list(r.t) for r in lit}
-    db = {r.vec_id: list(r.t) for r in bro}
-    assert dl == db
-    # the duplicate-centroid tie resolved toward the larger index in both
-    assert all(41 not in v or v.index(42) < v.index(41)
-               for v in dl.values() if 41 in v and 42 in v)
-
-
-def test_ivf_centroids_distributed_kmeans_path(spark, monkeypatch):
-    """Past CENTROID_DRIVER_KMEANS_MAX the training leaves the driver
-    (Spark MLlib KMeans over the uniform sample) — forced low here; the
-    centers come back with the right count/dim and feed a working
-    index."""
-    monkeypatch.setattr(similarity, "CENTROID_DRIVER_KMEANS_MAX", 8)
-    rng = random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(6)]) for i in range(300)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = similarity.ivf_centroids(df, n_centroids=16, sample=300, seed=42)
-    assert len(cents) == 16 and all(len(c) == 6 for c in cents)
-
-
-def test_broadcast_centroid_cache_reused_and_bounded(spark, monkeypatch):
-    """The broadcast-path centroid matrix is cached per (session,
-    content) and LRU-bounded (r12): re-probing the same index must NOT
-    pile a fresh ~K x dim broadcast onto the driver per call, and
-    evicted entries are unpersisted."""
-    import numpy as np
-    monkeypatch.setattr(similarity, "_CENTROID_BC_KEEP", 2)
-    monkeypatch.setattr(similarity, "_centroid_bc_cache", {})
-    mats = [np.full((4, 4), float(i)) for i in range(3)]
-    bias = np.zeros(4)
-    b0 = similarity._broadcast_centroids(spark, mats[0], bias)
-    assert similarity._broadcast_centroids(spark, mats[0], bias) is b0
-    similarity._broadcast_centroids(spark, mats[1], bias)
-    assert len(similarity._centroid_bc_cache) == 2
-    similarity._broadcast_centroids(spark, mats[2], bias)  # evicts mats[0]
-    assert len(similarity._centroid_bc_cache) == 2
-    b0b = similarity._broadcast_centroids(spark, mats[0], bias)
-    assert b0b is not b0  # evicted -> rebroadcast, still usable
-    assert list(b0b.value[0][0]) == [0.0] * 4
-
-
-# --------------------------------------------------------------------------
-# round 13: auto-nprobe, broadcast-cache thread safety
+# round 13: auto-nprobe
 # --------------------------------------------------------------------------
 
 def test_auto_nprobe_rule():
@@ -463,38 +394,6 @@ def test_auto_nprobe_rule():
     assert similarity.auto_nprobe(447) == 21
     assert similarity.auto_nprobe(1024) == 32
     assert similarity.auto_nprobe(30000) == 173
-
-
-def test_broadcast_centroid_cache_thread_hammer(spark, monkeypatch):
-    """The LRU cache is shared module state; concurrent probes of
-    DIFFERENT indexes from a threaded host must not corrupt it or
-    unpersist a broadcast another thread just took (r13 — the lock
-    around pop/insert/evict)."""
-    import threading
-
-    import numpy as np
-    monkeypatch.setattr(similarity, "_CENTROID_BC_KEEP", 2)
-    monkeypatch.setattr(similarity, "_centroid_bc_cache", {})
-    mats = [np.full((4, 4), float(i)) for i in range(6)]
-    bias = np.zeros(4)
-    errs = []
-
-    def worker(i):
-        try:
-            for j in range(40):
-                bc = similarity._broadcast_centroids(
-                    spark, mats[(i + j) % 6], bias)
-                assert bc is not None
-        except Exception as e:  # pragma: no cover - the failure mode
-            errs.append(e)
-
-    ts = [threading.Thread(target=worker, args=(i,)) for i in range(4)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    assert not errs, errs
-    assert len(similarity._centroid_bc_cache) <= 2
 
 
 def _emb_for(ids, spark, drift=0.0):

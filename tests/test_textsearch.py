@@ -8,8 +8,8 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from cloudbrush_spark import plans
 from cloudbrush_spark.operators.textsearch import bm25_topk
+from tests import plan_checks
 
 DOCS = [
     (0, "spark window merge spark spark"),
@@ -80,7 +80,7 @@ def test_bm25_plan_no_posting_explode_no_global_sort(spark, docs):
     TakeOrderedAndProject (partial per-partition top-k), not a global
     Sort feeding the limit."""
     q = bm25_topk(docs, ["spark", "window"], k=3)
-    plan = plans.explain_str(q)
+    plan = plan_checks.explain_str(q)
     assert "TakeOrderedAndProject" in plan
     # every generate (explode) input is the filtered hits column, never
     # the full token array
