@@ -3,7 +3,7 @@ in code by some non-test module: the package itself, ``__spark_entry__.py``,
 ``bench.py``, ``perfbench/`` or ``scripts/``.  A use is an AST ``Name`` or
 ``Attribute`` node, so docstrings, comments and the definition itself do
 not count.  A name that only its own test reaches is dead code and goes,
-unless it is a paper-surface operator listed in ``ALLOWED``."""
+unless ``ALLOWED`` lists it with the reason it stays."""
 
 import ast
 from pathlib import Path
@@ -19,6 +19,9 @@ ALLOWED = {
         "G7/G8 two-node sequence merge of the reference (Node.java:842-854)",
     ("sources/fasta.py", "write_sfa_expanded"):
         "SFA sink that expands contracted nodes back to member reads",
+    ("operators/sampling.py", "pack_shards"):
+        "md5-order shard packing, the exactness check of the bucketed "
+        "prefix sum without a one-task sort",
 }
 
 

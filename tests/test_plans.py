@@ -172,6 +172,21 @@ def test_decontaminate_corpus_side_has_single_aggregation_shuffle(spark):
     assert "SortMergeJoin" not in plan or "gh" not in plan.split("SortMergeJoin")[1][:200]
 
 
+def test_pack_shards_no_global_single_partition_sort_on_rows(spark):
+    """pack_shards' only SinglePartition window must be over the
+    bucket-totals frame (buckets rows), never the row-level data: the
+    row-level window is partitioned by bucket."""
+    from cloudbrush_spark.operators import sampling
+    df = spark.range(0, 1000).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 30 + 1).alias("n_tokens"))
+    q = sampling.pack_shards(df, "n_tokens", budget=100, buckets=16)
+    plan = plan_checks.explain_str(q)
+    # the bucket-prefix frame reaches the row side through a broadcast
+    assert plan_checks.has_broadcast_join(q)
+    # row-level cumsum window is hash-partitioned by bucket
+    assert "hashpartitioning(b" in plan
+
+
 def test_mixture_resample_is_narrow(spark):
     """Mixture construction (filter + bounded explode) must add no
     exchange — reweighting a 100 TB corpus is a single linear pass."""

@@ -33,6 +33,71 @@ def test_deterministic_sample_fraction(spark):
     assert a == a2
 
 
+def test_pack_shards_matches_python_reference(spark):
+    """The full (shard_id, offset) assignment equals a single-threaded
+    prefix sum over the md5 order — the bucketed two-phase cumsum must
+    be exactly the sequential semantics."""
+    import hashlib
+
+    rows = [(i, (i * 37) % 90 + 10) for i in range(500)]  # weights 10..99
+    df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
+    budget, buckets = 1000, 16
+    got = {r.doc_id: (r.shard_id, r.offset, r.wt)
+           for r in sampling.pack_shards(
+               df, "n_tokens", budget=budget, buckets=buckets).collect()}
+
+    def h(i):
+        return int(hashlib.md5(f"pack|{i}".encode()).hexdigest()[:8], 16)
+
+    ordered = sorted(rows, key=lambda r: (h(r[0]) % buckets, h(r[0]), r[0]))
+    start = 0
+    for doc_id, wt in ordered:
+        assert got[doc_id] == (start // budget, start % budget, wt), doc_id
+        start += wt
+    assert len(got) == 500
+
+
+def test_pack_shards_stable_under_repartition(spark):
+    df = spark.range(0, 2000).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 50 + 1).alias("n_tokens"))
+    a = sampling.pack_shards(df, "n_tokens", budget=500)
+    b = sampling.pack_shards(df.repartition(23), "n_tokens", budget=500)
+    diff = (a.select("doc_id", F.col("shard_id").alias("s1"))
+            .join(b.select("doc_id", F.col("shard_id").alias("s2")), "doc_id")
+            .filter(F.col("s1") != F.col("s2")).count())
+    assert diff == 0
+
+
+def test_pack_shards_oversized_row_spills(spark):
+    """A row heavier than the budget starts in its shard and spills;
+    shard ids it covers entirely simply have no starting rows."""
+    df = spark.createDataFrame(
+        [(1, 10), (2, 2500), (3, 10), (4, 10)], "doc_id long, n_tokens long")
+    out = sampling.pack_shards(df, "n_tokens", budget=100, buckets=4)
+    rows = out.collect()
+    # total weight conserved and offsets always inside the budget
+    assert sum(r.wt for r in rows) == 2530
+    assert all(0 <= r.offset < 100 for r in rows)
+    # the doc AFTER the heavy one lands >= 25 shards later
+    by_start = sorted(rows, key=lambda r: r.shard_id * 100 + r.offset)
+    heavy_idx = [i for i, r in enumerate(by_start) if r.doc_id == 2][0]
+    if heavy_idx + 1 < len(by_start):
+        nxt = by_start[heavy_idx + 1]
+        heavy = by_start[heavy_idx]
+        assert nxt.shard_id * 100 + nxt.offset \
+            == heavy.shard_id * 100 + heavy.offset + 2500
+
+
+def test_pack_shards_null_weight_is_zero_width(spark):
+    df = spark.createDataFrame(
+        [(1, 40), (2, None), (3, 40), (4, 40)], "doc_id long, n_tokens long")
+    out = sampling.pack_shards(df, "n_tokens", budget=100, buckets=4)
+    rows = {r.doc_id: r for r in out.collect()}
+    assert rows[2].wt == 0                       # kept, zero width
+    assert len(rows) == 4
+    assert sum(r.wt for r in rows.values()) == 120
+
+
 def test_mixture_resample_upsamples_deterministically(spark):
     df = spark.range(0, 20000).select(
         F.col("id").alias("doc_id"),
@@ -59,6 +124,17 @@ def test_mixture_resample_upsamples_deterministically(spark):
     # determinism under repartition
     again = sampling.mixture_resample(df.repartition(11), {"src0": 2.5, "src1": 0.3})
     assert again.count() == out.count()
+
+
+def test_pack_shards_single_bucket_and_tiny_budget(spark):
+    """buckets=1 degenerates to the sequential window; budget smaller
+    than every weight still assigns one start per row."""
+    df = spark.createDataFrame(
+        [(i, 50) for i in range(10)], "doc_id long, n_tokens long")
+    out = sampling.pack_shards(df, "n_tokens", budget=10, buckets=1).collect()
+    assert len(out) == 10
+    starts = sorted(r.shard_id * 10 + r.offset for r in out)
+    assert starts == [i * 50 for i in range(10)]
 
 
 def test_mixture_resample_zero_and_integer_weights(spark):
