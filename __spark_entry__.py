@@ -447,7 +447,7 @@ def q_curation_filter(spark, sf_dir):
     quality-decile and integer-log2 length histograms, exact-duplicate
     rate, token-count quantiles, and sketch-vs-exact contracts
     (HyperLogLog distinct / percentile_approx), whose ok flags the
-    oracle emits as trivially true (ann_contracts pattern — a sketch
+    oracle emits as trivially true (a contract row — a sketch
     outside tolerance flips the flag and breaks the hash).  Late r8
     adds 'heavy' rows: vocabulary heavy hitters (>2% corpus share,
     exact integer share test) with the df.stat.freqItems single-pass
@@ -470,7 +470,7 @@ def q_curation_filter(spark, sf_dir):
         F.col("tok").alias("k2"), F.col("cnt").alias("v1"),
         F.lit(0).cast("long").alias("v2"), F.col("fi_ok").alias("v3"))
     # r10 'bm25': ranked full-text retrieval (operators/textsearch.bm25_topk)
-    # as a soundness/size contract row (the ann_contracts pattern — BM25
+    # as a soundness/size contract row (BM25
     # scores are floats whose last-ULP ln() differences across engines
     # would flap a value hash): v1 = candidate docs (>=1 query term),
     # recomputed INDEPENDENTLY by DuckDB from the raw text; v2 = invalid
@@ -1364,9 +1364,7 @@ def q_tpch_suite(spark, sf_dir):
 def q_ann_topk(spark, sf_dir):
     """Brute-force cosine top-5 neighbors for query vectors vec_id < 20
     (ids + rank only; exact parity with the oracle)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
+    emb = _emb(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < 20)
     out = similarity.cosine_topk_bruteforce(emb, q, k=5)
     return out.select("query_id", "neighbor_id", "rank")
@@ -1375,47 +1373,6 @@ def q_ann_topk(spark, sf_dir):
 def _emb(spark, sf_dir):
     return _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-
-
-def _ann_contract(emb, approx, recall_pct: int):
-    """Hash-checkable contract for an approximate top-5 variant: one row
-    (n_queries, invalid_rows, bad_cosine, recall_ok) where the invariants —
-    ranks in [1,5] / no self-pairs / reported cosine == recomputed exact
-    cosine / recall@5 vs the in-Spark brute-force twin >= recall_pct% — are
-    all computed IN SPARK with integer arithmetic, so the expected output is
-    a deterministic row DuckDB reproduces without replicating LSH/IVF."""
-    exact = similarity.cosine_topk_bruteforce(emb, emb, k=5) \
-        .select("query_id", "neighbor_id")
-    nq = emb.agg(F.countDistinct("vec_id").alias("n_queries"))
-    qv = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    cv = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
-    dot = F.aggregate(F.zip_with("qv", "cv", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    checked = (
-        approx.join(qv, "query_id").join(cv, "neighbor_id")
-        .withColumn("true_cos", dot / (nrm(F.col("qv")) * nrm(F.col("cv"))))
-    )
-    flags = checked.agg(
-        F.sum(((F.col("rank") < 1) | (F.col("rank") > 5)
-               | (F.col("query_id") == F.col("neighbor_id"))).cast("long"))
-        .alias("invalid_rows"),
-        F.sum((F.abs(F.col("cosine") - F.col("true_cos")) > 1e-9).cast("long"))
-        .alias("bad_cosine"),
-    )
-    hits = approx.join(exact, ["query_id", "neighbor_id"]) \
-        .agg(F.count(F.lit(1)).alias("hits"))
-    return (
-        nq.crossJoin(flags).crossJoin(hits)
-        .select(
-            "n_queries",
-            F.coalesce("invalid_rows", F.lit(0)).alias("invalid_rows"),
-            F.coalesce("bad_cosine", F.lit(0)).alias("bad_cosine"),
-            (F.lit(100) * F.col("hits")
-             >= F.lit(recall_pct * 5) * F.col("n_queries")).alias("recall_ok"),
-        )
     )
 
 
@@ -1562,162 +1519,6 @@ def q_text_fp_split(spark, sf_dir):
         F.concat("source", F.lit("#"),
                  F.col("samp_rank").cast("string")).alias("v"))
     return w.unionByName(s).unionByName(m).unionByName(c).unionByName(st)
-
-
-def q_ann_contracts(spark, sf_dir):
-    """Merged soundness/recall contracts for the APPROXIMATE similarity
-    scale paths — ANN-LSH (16 tables x 6 hyperplanes), ANN-IVF
-    (driver-trained coarse quantizer, 16 centroids, nprobe=2), int8
-    scalar-quantized two-stage top-k (r9: select on array<tinyint>
-    codes, exact re-rank of the winners) and embedding near-dup LSH
-    (16 tables x 4 hyperplanes; cluster and cross-corpus forms) — one
-    row per variant so each keeps its own CORRECTNESS row inside the
-    50-query window (they shared the same contract shape as separate
-    entries through round 4).
-
-    Row schema (variant, n_base, invalid_rows, bad_cosine, recall_ok):
-    ``n_base`` is recomputed INDEPENDENTLY by the DuckDB oracle from the
-    raw vectors (count of distinct query ids for the top-k paths, count
-    of exact cosine>=0.42 pairs for the near-dup path); the counters are
-    soundness invariants computed IN SPARK with integer arithmetic
-    (ranks in [1,5] / no self pairs / reported cosine == recomputed
-    exact cosine / emitted pair passes the exact filter), and
-    ``recall_ok`` compares against the in-Spark brute-force twin
-    (>=25% / >=20% / >=90% / >=50%; measured ~0.52 / ~0.40 / ~0.99 /
-    ~0.95)."""
-    emb = _emb(spark, sf_dir)
-    lsh = similarity.cosine_topk_lsh(emb, dim=64, k=5, planes=6, seed=42,
-                                     tables=16)
-    ivf = similarity.cosine_topk_ivf(emb, k=5, n_centroids=16, nprobe=2,
-                                     seed=42)
-    def tag(contract, variant):
-        return contract.select(
-            F.lit(variant).alias("variant"),
-            F.col("n_queries").alias("n_base"),
-            "invalid_rows", "bad_cosine", "recall_ok",
-        )
-    r_lsh = tag(_ann_contract(emb, lsh, recall_pct=25), "ann_lsh")
-    r_ivf = tag(_ann_contract(emb, ivf, recall_pct=20), "ann_ivf")
-    # r9: int8 scalar-quantized two-stage top-k (select on array<tinyint>
-    # codes — 4x fewer vector bytes on the scan/shuffle — exact re-rank
-    # of the k winners only).  bad_cosine==0 is load-bearing here: the
-    # re-rank projection must reproduce the exact double cosine bitwise,
-    # proving the quantization never leaks into the reported score.
-    # recall@5 >= 90% vs the exact twin (measured 0.986 at sf0.01).
-    quant = similarity.cosine_topk_quantized(emb, emb, k=5)
-    r_q8 = tag(_ann_contract(emb, quant, recall_pct=90), "ann_q8")
-    a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
-    exact = (
-        similarity.with_cosine(a.crossJoin(b).filter(F.col("a") < F.col("b")))
-        .filter(F.col("cosine") >= 0.42).select("a", "b")
-    )
-    lshp = similarity.embedding_near_dup(
-        emb, dim=64, threshold=0.42, planes=4, seed=42, tables=16
-    ).select("a", "b")
-    n_exact = exact.agg(F.count(F.lit(1)).alias("n_base"))
-    viol = lshp.join(exact, ["a", "b"], "left_anti") \
-        .agg(F.count(F.lit(1)).alias("invalid_rows"))
-    n_lsh = lshp.agg(F.count(F.lit(1)).alias("n_lsh"))
-    r_emb = (
-        n_exact.crossJoin(viol).crossJoin(n_lsh)
-        .select(
-            F.lit("emb_lsh").alias("variant"), "n_base",
-            F.coalesce("invalid_rows", F.lit(0)).alias("invalid_rows"),
-            F.lit(0).cast("long").alias("bad_cosine"),
-            (F.lit(100) * F.col("n_lsh") >= F.lit(50) * F.col("n_base"))
-            .alias("recall_ok"),
-        )
-    )
-    # emb_clusters: the cluster-product path (similarity.embedding_clusters,
-    # star-mode LSH edges -> CC).  n_base is the EXACT-graph cluster count —
-    # Spark computes it via dedup_clusters over the brute-force pair set,
-    # DuckDB recomputes it with a recursive CTE, so the hash-match is a
-    # cross-engine check of connected components itself.  invalid_rows are
-    # partition violations (member duplicated/missing, a cluster whose rep
-    # is not among its members, a row whose n disagrees with the actual
-    # cluster size); recall_ok bounds the extra clusters LSH edge-misses
-    # create at 5% of the corpus (measured: 1/500 at sf0.01, 15/2000 at
-    # sf0.1 — star edges are exact-verified so clusters can only split,
-    # never merge wrongly).
-    exact_cc = dedup.dedup_clusters(exact.select("a", "b"),
-                                    items=emb.select("vec_id"),
-                                    id_col="vec_id")
-    c_exact = exact_cc.agg(F.count_distinct("cluster_rep").alias("n_base"))
-    lshc = similarity.embedding_clusters(emb, dim=64, threshold=0.42,
-                                         planes=4, seed=42, tables=16)
-    n_vec = emb.agg(F.count(F.lit(1)).alias("n_vec"))
-    c_lsh = lshc.agg(F.count_distinct("cluster_rep").alias("n_lshc"))
-    dup_members = lshc.agg(
-        (F.count(F.lit(1)) - F.count_distinct("member")).alias("v1"))
-    bad_rep = (lshc.groupBy("cluster_rep")
-               .agg(F.max(F.when(F.col("member") == F.col("cluster_rep"), 1)
-                          .otherwise(0)).alias("has"))
-               .filter(F.col("has") == 0)
-               .agg(F.count(F.lit(1)).alias("v2")))
-    bad_n = (lshc.groupBy("cluster_rep", "n")
-             .agg(F.count(F.lit(1)).alias("cnt"))
-             .filter(F.col("n") != F.col("cnt"))
-             .agg(F.count(F.lit(1)).alias("v3")))
-    total = lshc.agg(F.count(F.lit(1)).alias("v4"))
-    r_embc = (
-        c_exact.crossJoin(n_vec).crossJoin(c_lsh).crossJoin(dup_members)
-        .crossJoin(bad_rep).crossJoin(bad_n).crossJoin(total)
-        .select(
-            F.lit("emb_clusters").alias("variant"), "n_base",
-            (F.col("v1") + F.col("v2") + F.col("v3")
-             + F.abs(F.col("v4") - F.col("n_vec"))).alias("invalid_rows"),
-            F.lit(0).cast("long").alias("bad_cosine"),
-            (F.lit(20) * (F.col("n_lshc") - F.col("n_base"))
-             <= F.col("n_vec")).alias("recall_ok"),
-        )
-    )
-    # r10 'emb_cross': cross-corpus vector dedup (similarity.
-    # cross_corpus_embedding_near_dups) — the vec_id%5==0 slice plays the
-    # NEW crawl (ids shifted +10000 per the disjoint-id contract), the
-    # rest the previous release.  n_base = NEW docs with >= 1 exact
-    # cross-side match at theta (DuckDB recomputes from raw vectors);
-    # invalid_rows = side-membership violations; bad_cosine = emitted
-    # rows whose exact recomputed cosine mismatches or falls below
-    # theta; recall_ok: matched new docs >= 50% of the exact matched set
-    # (star expansion guarantees one row per matched new doc).
-    new_emb = emb.filter(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 10000).alias("vec_id"), "embedding")
-    ref_emb = emb.filter(F.col("vec_id") % 5 != 0)
-    crossp = similarity.cross_corpus_embedding_near_dups(
-        new_emb, ref_emb, dim=64, threshold=0.42, planes=4, seed=42,
-        tables=16)
-    dotx = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
-    nrmx = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    chk = (crossp
-           .join(new_emb.select(F.col("vec_id").alias("a"),
-                                F.col("embedding").alias("va")), "a", "left")
-           .join(ref_emb.select(F.col("vec_id").alias("b"),
-                                F.col("embedding").alias("vb")), "b", "left")
-           .withColumn("tc", dotx / (nrmx(F.col("va")) * nrmx(F.col("vb")))))
-    flags_x = chk.agg(
-        F.sum((F.col("va").isNull() | F.col("vb").isNull()).cast("long"))
-        .alias("invalid_rows"),
-        F.sum(((F.abs(F.col("cosine") - F.col("tc")) > 1e-9)
-               | (F.col("tc") < 0.42)).cast("long")).alias("bad_cosine"))
-    xbase = (exact.withColumn(
-        "new_id",
-        F.when((F.col("a") % 5 == 0) & (F.col("b") % 5 != 0), F.col("a"))
-         .when((F.col("b") % 5 == 0) & (F.col("a") % 5 != 0), F.col("b")))
-        .filter(F.col("new_id").isNotNull())
-        .agg(F.countDistinct("new_id").alias("n_base")))
-    gotx = crossp.agg(F.countDistinct("a").alias("got"))
-    r_cross = (
-        xbase.crossJoin(flags_x).crossJoin(gotx)
-        .select(F.lit("emb_cross").alias("variant"), "n_base",
-                F.coalesce("invalid_rows", F.lit(0)).alias("invalid_rows"),
-                F.coalesce("bad_cosine", F.lit(0)).alias("bad_cosine"),
-                (F.lit(100) * F.col("got") >= F.lit(50) * F.col("n_base"))
-                .alias("recall_ok")))
-    return (r_lsh.unionByName(r_ivf).unionByName(r_q8).unionByName(r_emb)
-            .unionByName(r_embc).unionByName(r_cross))
 
 
 def q_probe_heavy_tokens(spark, sf_dir):
@@ -3157,7 +2958,7 @@ _CURATION_GATE_SQL = f"""
 
 # Corpus data-card twin (operators/report.corpus_report): bounded
 # group-by frames + a histogram cumsum for the exact discrete quantiles;
-# the sketch ok flags are emitted trivially true (ann_contracts pattern)
+# the sketch ok flags are emitted trivially true (contract rows)
 _REPORT_SQL = f"""
     WITH rq AS ({_quality_sql()}),
     rl AS ({_lang_id_sql()}),
@@ -3529,69 +3330,6 @@ _ORACLES["a7_tag_trusted"] = f"""
     SELECT d.doc_id, coalesce(s.trusted, FALSE) AS trusted,
            NOT coalesce(s.trusted, FALSE) AS "unique"
     FROM documents d LEFT JOIN sel s USING (doc_id)
-"""
-
-# ---------------------------------------------------------------------------
-# Approx-ANN contract oracles: the Spark queries emit deterministic
-# invariant rows (soundness counters == 0, integer-math recall flags), so
-# DuckDB only has to reproduce the data-derived fields (n_queries / n_exact)
-# plus constants — no LSH/IVF replication needed.  A recall regression or a
-# soundness break flips a field and the driver's value-hash catches it.
-# ---------------------------------------------------------------------------
-
-# Merged three-variant contract (ann_lsh / ann_ivf / emb_lsh): n_base is
-# the only data-derived field and DuckDB recomputes it independently from
-# the raw vectors; the soundness counters and recall flag are
-# deterministic invariants of a healthy approximate path (see
-# q_ann_contracts).
-_ORACLES["ann_contracts"] = """
-    WITH RECURSIVE emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    scored AS (
-        SELECT a.vec_id AS a, b.vec_id AS b,
-               list_dot_product(a.v, b.v)
-               / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS c
-        FROM emb a JOIN emb b ON a.vec_id < b.vec_id
-    ),
-    nq AS (SELECT count(DISTINCT vec_id) AS n FROM embeddings),
-    ne AS (SELECT count(*) AS n FROM scored WHERE c >= 0.42),
-    edges AS (
-        SELECT a, b FROM scored WHERE c >= 0.42
-        UNION ALL
-        SELECT b AS a, a AS b FROM scored WHERE c >= 0.42
-    ),
-    reach(member, lab) AS (
-        SELECT vec_id, vec_id FROM emb
-        UNION
-        SELECT e.b, r.lab FROM reach r JOIN edges e ON e.a = r.member
-    ),
-    labels AS (SELECT member, min(lab) AS lab FROM reach GROUP BY member),
-    cc AS (SELECT count(DISTINCT lab) AS n FROM labels)
-    SELECT 'ann_lsh' AS variant, CAST(nq.n AS BIGINT) AS n_base,
-           CAST(0 AS BIGINT) AS invalid_rows, CAST(0 AS BIGINT) AS bad_cosine,
-           TRUE AS recall_ok
-    FROM nq
-    UNION ALL
-    SELECT 'ann_ivf', CAST(nq.n AS BIGINT), CAST(0 AS BIGINT),
-           CAST(0 AS BIGINT), TRUE
-    FROM nq
-    UNION ALL
-    SELECT 'ann_q8', CAST(nq.n AS BIGINT), CAST(0 AS BIGINT),
-           CAST(0 AS BIGINT), TRUE
-    FROM nq
-    UNION ALL
-    SELECT 'emb_lsh', CAST(ne.n AS BIGINT), CAST(0 AS BIGINT),
-           CAST(0 AS BIGINT), TRUE
-    FROM ne
-    UNION ALL
-    SELECT 'emb_clusters', CAST(cc.n AS BIGINT), CAST(0 AS BIGINT),
-           CAST(0 AS BIGINT), TRUE
-    FROM cc
-    UNION ALL
-    SELECT 'emb_cross', CAST(cx.n AS BIGINT), CAST(0 AS BIGINT),
-           CAST(0 AS BIGINT), TRUE
-    FROM (SELECT count(DISTINCT CASE WHEN a % 5 = 0 THEN a ELSE b END) AS n
-          FROM scored
-          WHERE c >= 0.42 AND ((a % 5 = 0) <> (b % 5 = 0))) cx
 """
 
 _ORACLES["relational_extras"] = """
@@ -4342,6 +4080,9 @@ _ORACLES["sink_formats"] = f"""
 #   - g5_pairmark/g6_pairmerge -> g5g6_pairmark_merge tagged union (r6)
 #   - g5g6_distributed_fixpoint -> G5-G8 covered by g5g6/g7g8 entries
 #   - ann_topk_lsh/ann_topk_ivf/emb_near_dup_lsh/emb_near_dup -> ann_contracts
+#   - ann_contracts        -> gone with the approximate vector-search
+#     operators it checked (LSH/IVF/int8 top-k, embedding near-dup pairs,
+#     clusters and cross-corpus dedup); ann_topk still checks the exact one
 #   - asof/range/rollup/topk_per_group/set_ops -> relational_extras
 #   - winnow_fp/hash_split -> text_fp_split tagged union (r7; slot freed
 #     for simhash_clusters — both still verified)
@@ -4403,7 +4144,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ngram_jaccard": q_ngram_jaccard,
     "simhash_pairs": q_simhash_pairs,
     "ann_topk": q_ann_topk,
-    "ann_contracts": q_ann_contracts,            # ann_lsh / ann_ivf / emb_lsh
     "curation_filter": q_curation_filter,
 }
 

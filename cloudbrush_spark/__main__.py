@@ -12,7 +12,7 @@ CloudBrush user can run the same commands against this engine:
     python -m cloudbrush_spark -convert_fa out/
 
 Option names match the reference's commons-cli flags (-k, -readlen,
--kmerup, -kmerlow, -kmercov, -bubbleerate, -maj, -N, -lowcov, -slots,
+-kmerup, -kmercov, -bubbleerate, -maj, -N, -lowcov, -slots,
 -nodes, -genome).  The reference's restart flags (-start/-stop/
 -restart_*) are subsumed by ``-ckpt DIR``: every major stage persists to
 parquet there and finished stages are loaded, not recomputed — the same
@@ -42,7 +42,6 @@ def _build_parser() -> argparse.ArgumentParser:
     ap.add_argument("-k", type=int, default=21, help="overlap seed size")
     ap.add_argument("-readlen", type=int, default=36, help="read length")
     ap.add_argument("-kmerup", type=int, default=2000, help="max kmer cov / per-key cap")
-    ap.add_argument("-kmerlow", type=int, default=1, help="min candidates per kmer key")
     ap.add_argument("-kmercov", type=float, default=30.0, help="expected kmer coverage (A-stat)")
     ap.add_argument("-bubbleerate", type=float, default=0.05, help="max bubble error rate")
     ap.add_argument("-maj", type=float, default=0.6, help="PWM consensus majority")
@@ -292,7 +291,7 @@ def main(argv: list[str] | None = None) -> int:
         reads = read_sfa(spark, args.reads)
     params = BrushParams(
         k=args.k, readlen=args.readlen, up_kmer=args.kmerup,
-        low_kmer=args.kmerlow, kmer_cov=args.kmercov,
+        kmer_cov=args.kmercov,
         bubble_edit_rate=args.bubbleerate, majority=args.maj,
         pwm_n=args.pwm_n, low_cov_thresh=args.lowcov,
         serial_threshold=args.nodes, precorrect=args.precorrect,

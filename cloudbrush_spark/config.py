@@ -12,7 +12,6 @@ class BrushParams:
     k: int = 21                     # overlap seed size (required in reference)
     readlen: int = 36               # read length (required in reference)
     up_kmer: int = 2000             # high-frequency k-mer cutoff / per-key cap
-    low_kmer: int = 1               # min candidates per k-mer key
     bubble_edit_rate: float = 0.05  # max edit distance ratio for bubble pop
     low_cov_thresh: float = 1.0     # coverage cutoff for low-cov removal
     majority: float = 0.6           # PWM consensus majority
@@ -51,9 +50,6 @@ class BrushParams:
                                     # error merges through.  Off by
                                     # default like precorrect.
     trust_threshold: int = 1
-    diagnostics: bool = False       # G9/G10 consensus-color + braid counters
-                                    # at the end of buildStringGraph
-                                    # (src/Brush/BrushAssembler.java:379-396)
 
     # derived (src/Brush/BrushConfig.java:86-103)
     tiplength: int = field(init=False)

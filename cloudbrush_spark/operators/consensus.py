@@ -17,13 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import dna
-
-def D1():
-    return F.substring("et", 1, 1)
-
-
-def D2():
-    return F.substring("et", 2, 1)
+from cloudbrush_spark.operators.graph import D1, D2
 
 
 def _sides(nodes: DataFrame, edges: DataFrame, max_ext: int) -> DataFrame:

@@ -37,16 +37,8 @@ from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import dna
 from cloudbrush_spark.operators import smallgraph
-from cloudbrush_spark.operators.graph import compressible
+from cloudbrush_spark.operators.graph import D1, D2, compressible
 from cloudbrush_spark.plans import cut
-
-
-def D1():
-    return F.substring("et", 1, 1)
-
-
-def D2():
-    return F.substring("et", 2, 1)
 
 
 def _orient(seq, d):

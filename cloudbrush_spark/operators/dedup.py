@@ -24,13 +24,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import dna, text
+from cloudbrush_spark.operators.smallgraph import arrow_frame
 from cloudbrush_spark.plans import cut
 
 
-# Over-cap bucket lists are usually tiny (bound: members * bands /
+# Over-cap bucket lists are usually tiny (bound: signatures * chunks /
 # bucket_cap), so the default plan collects them driver-side.  Past this
-# many rows that collect becomes its own cliff (1e9 vectors x 16 tables /
-# 1k cap ~ 16M driver rows) and the list stays distributed instead.
+# many rows that collect becomes its own cliff (1e9 signatures x 8 chunks
+# / 1k cap ~ 8M driver rows) and the list stays distributed instead.
 OVERCAP_COLLECT_MAX = 100_000
 
 # Edge-count bound for solving connected components driver-side (one
@@ -85,8 +86,9 @@ def _driver_union_find(edges: DataFrame, rows):
     doubles as the size gate, so deciding the algorithm and fetching
     the edges is ONE job, not a count plus a collect — r15); ``edges``
     supplies the id dtype.  Returns ``(labels, nodes, n_nodes)``: a
-    (member, label) frame over the paired nodes, its member projection,
-    and the node count.
+    (member, label) frame over the paired nodes, built from an Arrow
+    table so no job that reads it starts Python workers, its member
+    projection, and the node count.
 
     Operates on the edge frame's ``a``/``b`` columns; callers gate this
     path to integral/string id types (``_driver_cc_max``) — Python's
@@ -114,23 +116,15 @@ def _driver_union_find(edges: DataFrame, rows):
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    labels_local = [(m, find(m)) for m in parent]
     from pyspark.sql.types import StructField, StructType
     id_type = edges.schema["a"].dataType
     schema = StructType([StructField("member", id_type, False),
                          StructField("label", id_type, False)])
-    # bound the local frame's slice count: createDataFrame defaults to
-    # defaultParallelism slices, and every downstream branch (sizes
-    # aggregate, size join, singleton anti-join) then schedules that many
-    # near-empty tasks — ~50k rows per slice keeps task counts
-    # proportional to the data (r15; 3 branches x 32 one-row tasks at
-    # bench scale)
-    spark = edges.sparkSession
-    slices = max(1, min(spark.sparkContext.defaultParallelism,
-                        -(-len(labels_local) // 50_000)))
-    labels = spark.createDataFrame(
-        spark.sparkContext.parallelize(labels_local, slices), schema)
-    return labels, labels.select("member"), len(labels_local)
+    members = list(parent)
+    labels = arrow_frame(edges.sparkSession,
+                         {"member": members,
+                          "label": [find(m) for m in members]}, schema)
+    return labels, labels.select("member"), len(members)
 
 
 def _cap_list_frame(big_lazy: DataFrame, schema: str,

@@ -18,6 +18,9 @@ from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import dna
 
+
+# the two direction letters of an edge type ``et`` (d1 d2): the source
+# side and the destination side; the other edge operators import these
 def D1():
     return F.substring("et", 1, 1)
 

@@ -354,9 +354,8 @@ def semantic_decontaminate(vectors: DataFrame, benchmark: DataFrame,
         raise ValueError(
             f"benchmark has {n_bench} vectors (> max_benchmark="
             f"{max_benchmark}); semantic decontamination broadcasts the "
-            "benchmark matrix — a corpus-sized 'benchmark' needs the "
-            "near-dup pair machinery (similarity.embedding_near_dup), "
-            "not a decontamination pass")
+            "benchmark matrix — a corpus-sized 'benchmark' is a "
+            "near-duplicate join, not a decontamination pass")
     rows = benchmark.select(vec_col).collect()
     if rows:
         bm = np.array([r[0] for r in rows], dtype=np.float64)

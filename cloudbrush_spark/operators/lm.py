@@ -25,7 +25,7 @@ Determinism: counts are exact integers in any engine; the log/avg is
 float (per-engine deterministic, cross-engine ULP-sensitive), so the
 driver contract checks counts exactly and score SEPARATION (a planted
 fluent doc must outscore planted gibberish by a wide margin) rather than
-hashing raw floats — the ann_contracts pattern.
+hashing raw floats — a contract row.
 """
 
 from __future__ import annotations

@@ -24,9 +24,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def D1():
-    return F.substring("et", 1, 1)
+from cloudbrush_spark.operators.graph import D1
 
 
 def matename(col: Column) -> Column:

@@ -22,7 +22,7 @@ every row is engine-portable and hashable:
 - ('sketch', 'distinct_fp', exact_distinct, 0, hll_ok)
 - ('tokens_q', 'p25'|'p50'|'p75'|'p90', exact_quantile, 0, sketch_ok)
 
-The sketch rows are the ann_contracts invariant pattern: the hashed
+The sketch rows are contract rows: the hashed
 values are the EXACT numbers (cross-engine recomputable); the
 approximate estimator's agreement is folded into the ok flag, which the
 oracle emits as trivially true — a sketch drifting outside tolerance
@@ -168,7 +168,7 @@ def heavy_tokens(docs: DataFrame, text_col: str = "text",
     covers every reported row with margin; ``fi_ok``=1 iff the exact
     heavy hitter appears in the sketch's candidate list.  The hashed
     values are the EXACT counts — sketch agreement only flips the flag
-    (the ann_contracts/HLL invariant pattern).
+    (the HLL contract-row pattern).
 
     Scale note: the token stream is deliberately NOT checkpointed — it
     is read twice (exact aggregate + sketch), trading a second linear

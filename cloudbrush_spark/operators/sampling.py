@@ -93,75 +93,6 @@ def _md5_long(id_col: str, seed: str) -> Column:
     ).cast("long")
 
 
-def _md5_order_start(df: DataFrame, weight_col: str, id_col: str,
-                     buckets: int, seed: str) -> DataFrame:
-    """(id, wt, start) where ``start`` is the exclusive prefix sum of
-    ``weight_col`` along the deterministic md5 permutation — the
-    two-phase cumsum under :func:`pack_shards`: per-bucket totals
-    (map-side, ``buckets`` rows) -> driver-scale bucket-prefix window ->
-    within-bucket window.  No global one-task sort; see pack_shards for
-    the full argument."""
-    h = _md5_long(id_col, seed)
-    wdf = (
-        df.select(
-            F.col(id_col),
-            # NULL weight = zero-width row (kept, costs nothing) — an
-            # un-coalesced NULL would silently vanish from the window
-            # sums and desynchronize the assignment from the oracle's
-            F.coalesce(F.col(weight_col).cast("long"), F.lit(0)).alias("wt"),
-            h.alias("h"))
-        .withColumn("b", (F.col("h") % buckets).cast("int"))
-    )
-    totals = wdf.groupBy("b").agg(F.sum("wt").alias("tot"))
-    wb = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    prefix = totals.withColumn(
-        "pre", F.coalesce(F.sum("tot").over(wb), F.lit(0)))
-    ww = (Window.partitionBy("b").orderBy("h", id_col)
-          .rowsBetween(Window.unboundedPreceding, -1))
-    return (
-        wdf.join(F.broadcast(prefix.select("b", "pre")), "b")
-        .withColumn("start",
-                    F.col("pre") + F.coalesce(F.sum("wt").over(ww), F.lit(0)))
-    )
-
-
-def pack_shards(df: DataFrame, weight_col: str, id_col: str = "doc_id",
-                budget: int = 1_000_000, buckets: int = 1024,
-                seed: str = "pack") -> DataFrame:
-    """Pack rows into fixed-weight shards (training-shard assignment):
-    order all rows by a deterministic content-hash permutation, run a
-    prefix sum of ``weight_col`` along that order, and cut a shard
-    boundary every ``budget`` units.
-
-    Output: (id, wt, shard_id, offset) — ``shard_id = floor(start /
-    budget)`` and ``offset = start % budget`` where ``start`` is the
-    total weight of all rows ordered before this one.  A row heavier
-    than the remaining shard space starts in that shard and spills over
-    (greedy semantics — every engine computes the identical assignment
-    because the order is the md5 permutation, not physical row order).
-
-    Scale shape: a global prefix sum WITHOUT a global one-task sort.
-    The md5 order is decomposed as (bucket, h, id) with ``bucket = h %
-    buckets``; per-bucket totals aggregate map-side (``buckets`` rows),
-    their exclusive cumsum runs on that driver-scale frame (the only
-    unpartitioned window — B rows, deliberate), and each row's start is
-    bucket-prefix + within-bucket exclusive cumsum (a window partitioned
-    by bucket).  Size ``buckets`` so a bucket's rows fit one task
-    comfortably (~rows/1e5); the per-bucket sort is the same work a
-    repartitionByRange+sortWithinPartitions shuffle would do, with no
-    skew because the hash is uniform."""
-    packed = _md5_order_start(df, weight_col, id_col, buckets, seed)
-    return packed.select(
-        id_col, "wt",
-        # integer division (DIV), never long/int -> double: floor(x / b)
-        # loses exactness once cumulative weight passes 2^53 (~9e15
-        # tokens — inside the 100 TB design envelope) and would silently
-        # mis-assign shards there
-        F.expr(f"start div {int(budget)}").cast("long").alias("shard_id"),
-        (F.col("start") % budget).cast("long").alias("offset"),
-    )
-
-
 def calibrated_quality(df: DataFrame, quality_col: str,
                        source_col: str = "source", id_col: str = "doc_id",
                        buckets: int = 1024) -> DataFrame:

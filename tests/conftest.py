@@ -31,7 +31,6 @@ _SLOW_TESTS = {
     "test_cli_assemble_stats_convert",
     "test_assembly_digest_invariant_to_partitions_and_aqe",
     "test_assembly_digest_invariant_to_core_count",
-    "test_cross_corpus_embedding_recall_contract_vs_exact",
 }
 
 

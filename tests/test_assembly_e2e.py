@@ -77,16 +77,22 @@ def _fidelity(genome: str, contigs: list[str]) -> float:
     return sum(w in genome or w in rc for w in wins) / len(wins) if wins else 0.0
 
 
-# stages that size the graph for the driver finish: compress_chains after
-# transitive reduction, remove_tips, pop_all_bubbles, remove_low_cov,
-# edge_adjustment
-@pytest.mark.parametrize("bound,driver_stages", [
-    pytest.param(smallgraph.DRIVER_MAX_BYTES, 5, id="default_bound"),
-    pytest.param(0, 0, id="bound_0"),
+# stages that can finish in the driver: compress_chains after transitive
+# reduction, remove_tips, pop_all_bubbles, remove_low_cov, edge_adjustment.
+# Within the bound only the first sizes its graph; each later stage takes
+# back the graph the one before it held.  At bound 0 every stage sizes its
+# input, remove_low_cov's inner tips and bubbles passes included.
+@pytest.mark.parametrize("bound,driver_stages,probes", [
+    pytest.param(smallgraph.DRIVER_MAX_BYTES, 5, 1, id="default_bound"),
+    pytest.param(0, 0, 7, id="bound_0"),
 ])
 def test_assemble_small_genome_end_to_end(spark, tmp_path, monkeypatch,
-                                          bound, driver_stages):
+                                          bound, driver_stages, probes):
     monkeypatch.setattr(smallgraph, "DRIVER_MAX_BYTES", bound)
+    sized = []
+    driver_bytes = smallgraph.driver_bytes
+    monkeypatch.setattr(smallgraph, "driver_bytes",
+                        lambda n, e: sized.append(1) or driver_bytes(n, e))
     genome, reads = _reads(seed=5, genome_size=1000, read_len=36, coverage=72,
                            error_rate=0.005)
     path = tmp_path / "reads.sfa"
@@ -99,3 +105,4 @@ def test_assemble_small_genome_end_to_end(spark, tmp_path, monkeypatch,
     assert dist.orderBy("cutoff").first()["n50"] == _n50(contigs)
     assert _digest(contigs) == DIGEST
     assert asm.counters.get("driver_finish", 0) == driver_stages
+    assert len(sized) == probes

@@ -19,9 +19,6 @@ ALLOWED = {
         "G7/G8 two-node sequence merge of the reference (Node.java:842-854)",
     ("sources/fasta.py", "write_sfa_expanded"):
         "SFA sink that expands contracted nodes back to member reads",
-    ("operators/sampling.py", "pack_shards"):
-        "md5-order shard packing, the exactness check of the bucketed "
-        "prefix sum without a one-task sort",
 }
 
 

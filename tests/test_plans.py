@@ -96,43 +96,6 @@ def test_tpch_q6_filters_reach_parquet_scan(spark):
     assert schemas and "l_comment" not in schemas[0]
 
 
-def test_vector_lsh_cap_broadcasts_and_avoids_nested_loop(spark):
-    """The round-7 vector-LSH candidate machinery: on a well-spread corpus
-    the collected over-cap list is EMPTY and the whole cap/level-2 branch
-    is skipped driver-side (no broadcast join needed); on a hot-direction
-    corpus the cap filters plan as BROADCAST joins (the over-cap list is
-    tiny by construction).  In both regimes no join may fall back to a
-    broadcast nested loop — everything is an equi-join on bucket keys or
-    ids."""
-    import random as pyrandom
-
-    from cloudbrush_spark.operators import similarity
-    rng = pyrandom.Random(3)
-    # regime 1: spread-out vectors, no bucket over the cap
-    rows = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(300)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    _, groups = similarity._collapse(vecs, "vec_id", "embedding")
-    cand = similarity._capped_rep_pairs(groups, dim=8, planes=4, seed=7,
-                                        tables=2, max_bucket=50,
-                                        star_overcap=True)
-    plan = plan_checks.explain_str(cand)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    # regime 2: one tight direction cluster blows the cap
-    hot_rows = [(i, [10.0 + rng.gauss(0, 0.01), 20.0 + rng.gauss(0, 0.01),
-                     30.0 + rng.gauss(0, 0.01), 40.0 + rng.gauss(0, 0.01)])
-                for i in range(200)]
-    hot = spark.createDataFrame(hot_rows, "vec_id long, embedding array<double>")
-    _, hgroups = similarity._collapse(hot, "vec_id", "embedding")
-    hcand = similarity._capped_rep_pairs(hgroups, dim=4, planes=4, seed=7,
-                                         tables=2, max_bucket=20,
-                                         star_overcap=True)
-    hplan = plan_checks.explain_str(hcand)
-    assert plan_checks.has_broadcast_join(hcand)
-    assert "BroadcastNestedLoopJoin" not in hplan
-    assert "CartesianProduct" not in hplan
-
-
 def test_pii_scrub_is_shuffle_free(spark):
     """PII scrub must stay a pure narrow projection — zero exchanges."""
     from cloudbrush_spark.operators import guard
@@ -170,21 +133,6 @@ def test_decontaminate_corpus_side_has_single_aggregation_shuffle(spark):
     plan = plan_checks.explain_str(q)
     # no sort-merge join anywhere on the gram-matching path
     assert "SortMergeJoin" not in plan or "gh" not in plan.split("SortMergeJoin")[1][:200]
-
-
-def test_pack_shards_no_global_single_partition_sort_on_rows(spark):
-    """pack_shards' only SinglePartition window must be over the
-    bucket-totals frame (buckets rows), never the row-level data: the
-    row-level window is partitioned by bucket."""
-    from cloudbrush_spark.operators import sampling
-    df = spark.range(0, 1000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 30 + 1).alias("n_tokens"))
-    q = sampling.pack_shards(df, "n_tokens", budget=100, buckets=16)
-    plan = plan_checks.explain_str(q)
-    # the bucket-prefix frame reaches the row side through a broadcast
-    assert plan_checks.has_broadcast_join(q)
-    # row-level cumsum window is hash-partitioned by bucket
-    assert "hashpartitioning(b" in plan
 
 
 def test_mixture_resample_is_narrow(spark):
