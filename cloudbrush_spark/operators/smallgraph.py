@@ -88,9 +88,17 @@ def from_rows(node_rows, edge_rows) -> tuple[dict, set]:
 def arrow_frame(spark, columns: dict, schema):
     """A frame of ``columns`` (name -> values, in the order of ``schema``'s
     fields) built from an Arrow table.  A frame built from a list of rows
-    starts Python workers on every job that reads it; this one does not."""
+    starts Python workers on every job that reads it; this one does not.
+
+    Spark plans a small Arrow table with one partition per row, up to the
+    default parallelism, so every job reading it schedules that many
+    near-empty tasks; the frame is coalesced to one partition per 50k
+    rows instead."""
     import pyarrow as pa
-    return spark.createDataFrame(pa.table(columns), schema)
+    table = pa.table(columns)
+    parts = max(1, min(spark.sparkContext.defaultParallelism,
+                       -(-table.num_rows // 50_000)))
+    return spark.createDataFrame(table, schema).coalesce(parts)
 
 
 def compressible(edges) -> list:

@@ -406,16 +406,13 @@ class Assembler:
         self.counters["final_edges"] = edges.count()
         return nodes, edges
 
-    def stats(self, nodes: DataFrame) -> DataFrame:
-        """A1 contig statistics over the final node table."""
-        sized = nodes.withColumn("len", F.length("seq"))
-        return stats_ops.size_distribution(sized, "len", cov_col="cov")
-
     def stats_report(self, nodes: DataFrame,
                      genome_size: int | None = None) -> dict:
         """The full A1 report: per-cutoff table, top-10 contigs, and the
         genome-target N50 when a genome size is given (the reference's
-        ``-genome`` flag, src/Brush/Stats.java:363-411)."""
+        ``-genome`` flag, src/Brush/Stats.java:363-411).  The table and the
+        genome N50 are computed when this method is called; ``top`` is a
+        lazy frame."""
         sized = nodes.withColumn("len", F.length("seq"))
         return stats_ops.stats_report(sized, "len", cov_col="cov",
                                       genome_size=genome_size)

@@ -40,7 +40,7 @@ def main() -> None:
         F.max("len").alias("max_len"),
     ).collect()[0]
     from cloudbrush_spark.operators import stats as stats_ops
-    n50_row = stats_ops.n50(contigs, "len").collect()[0]
+    n50_row = stats_ops.n50(contigs, "len")
     wall = time.time() - t0
     write_fasta(nodes, "/tmp/ec10k_contigs")
     out = {

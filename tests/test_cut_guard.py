@@ -2,16 +2,14 @@
 between a reliable and a local checkpoint, and the origin-plan sever,
 live in ``cloudbrush_spark/plans/`` alone.  A direct ``.checkpoint(`` or
 ``.localCheckpoint(`` call anywhere else in the package would bypass
-``spark.checkpoint.dir`` on a cluster.  The one exception is
-``operators/stats.py``'s lazy histogram cut, a different tool (it
-materializes a small aggregate as a side effect of its first read)."""
+``spark.checkpoint.dir`` on a cluster."""
 
 import io
 import tokenize
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "cloudbrush_spark"
-ALLOWED = {("operators/stats.py", ".localCheckpoint(eager=False)")}
+ALLOWED = set()
 
 
 def _checkpoint_calls(path: Path):

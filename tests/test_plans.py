@@ -37,23 +37,6 @@ def test_small_dim_join_broadcasts(spark, part):
     assert plan_checks.has_broadcast_join(q)
 
 
-def test_two_phase_n50_histogram_before_any_global_exchange(spark):
-    """The N50 scan must reduce to the size histogram BEFORE any
-    single-partition exchange: the plan's SinglePartition exchange (the
-    final tiny scan) sits above a hash aggregate, never directly above the
-    row-level scan."""
-    from cloudbrush_spark.operators import stats
-    df = spark.range(0, 10000).select((F.col("id") % 97).alias("sz"))
-    plan = plan_checks.explain_str(stats.n50(df, "sz"))
-    first_single = plan.find("SinglePartition")
-    first_agg = plan.find("HashAggregate")
-    assert first_agg != -1
-    # a hash aggregate exists, and hash-partitioned exchanges appear in the
-    # plan (the histogram shuffle) — the global exchange only carries
-    # aggregated rows
-    assert "hashpartitioning(sz" in plan or "hashpartitioning(bkt" in plan
-
-
 def test_asof_join_avoids_nested_loop(spark):
     """The as-of join must plan as union + window (one hash shuffle), never
     a range-condition join (which Spark plans as broadcast nested loop)."""

@@ -297,3 +297,13 @@ def test_driver_bytes_counts_read_lists(spark, monkeypatch):
     assert smallgraph.driver_bytes(long_lists, edf)[:2] == (len(nodes), len(edges))
     asm.compress_chains(long_lists, edf)
     assert asm.counters["driver_finish"] == 1
+
+
+def test_arrow_frame_partitions_per_50k_rows(spark):
+    """A driver-built frame gets one partition per 50k rows, up to the
+    default parallelism, not one per row."""
+    dp = spark.sparkContext.defaultParallelism
+    for rows, want in ((5, 1), (120_001, min(dp, 3))):
+        df = smallgraph.arrow_frame(spark, {"x": list(range(rows))}, "x long")
+        assert df.rdd.getNumPartitions() == want
+        assert df.count() == rows
