@@ -21,7 +21,7 @@ from cloudbrush_spark.operators import dedup, similarity, stats, textops
 
 
 # Tables whose consumers are MAP-HEAVY per input byte — the text corpus
-# feeds tokenize / shingle / 16x md5 / simhash-vote / gate-regex
+# feeds tokenize / shingle / 16x md5 / gate-regex
 # pipelines (~10^3 instructions per byte), so a scan that planned as one
 # task serializes whole CPU-seconds onto one core.  The relational /
 # event / vector tables feed cheap columnar aggregates and joins where a
@@ -43,7 +43,7 @@ def _widen_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     splits than the session has cores — guide §2.5's "unsplittable
     input" case.  The local fixtures are single-file, single-row-group
     parquet, so every scan is ONE task and the map-heavy document
-    pipelines (tokenize / shingle / 16x md5 / simhash votes / gate
+    pipelines (tokenize / shingle / 16x md5 / gate
     regexes) serialize onto one core before their first exchange
     (measured at sf0.1: 4.2 executor-CPU-seconds single-threaded at the
     head of the minhash pipeline).  The split estimate is driver-side
@@ -1445,41 +1445,11 @@ def q_g5g6_pairmark_merge(spark, sf_dir):
     return mark.unionByName(merge)
 
 
-def q_ngram_jaccard(spark, sf_dir):
-    """Exact n-gram Jaccard similarity self-join (inverted-index form),
-    word 3-gram shingles, threshold 0.2."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.2,
-                                      max_shingle_df=1000)
-    return pairs.select("a", "b", F.round("jaccard", 4).alias("jaccard"))
-
-
-def q_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup pairs within Hamming distance 7, via 8-bit-chunk
-    banding (pigeonhole-complete); oracle is the O(n^2) brute-force scan."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.simhash_near_pairs(docs, max_hamming=7)
-
-
-def q_simhash_clusters(spark, sf_dir):
-    """SimHash duplicate clusters (distinct-signature-level CC) — the
-    LINEAR consumable product on duplicate-saturated corpora where the
-    pair enumeration is output-quadratic.  Oracle: DuckDB recomputes the
-    signatures in SQL, brute-forces Hamming<=7 pairs over DISTINCT
-    signatures and closes them with a recursive CTE — a genuinely
-    independent cross-engine check of banding + CC + member recovery.
-    Equivalence to dedup_clusters-over-simhash_near_pairs is additionally
-    pinned by tests/test_joins.py."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.simhash_clusters(docs, max_hamming=7)
-
-
 def q_text_fp_split(spark, sf_dir):
     """Winnowing fingerprints + deterministic md5 train/val/test split in
-    ONE tagged union (merged r7 to free a registry slot for
-    simhash_clusters; the single-op forms above stay defined for bench/
-    tests).  Canonical (op, doc_id, v) schema: winnow fingerprints as
-    decimal strings, split labels as-is."""
+    ONE tagged union (merged r7 to free a registry slot; the single-op
+    forms above stay defined for bench/tests).  Canonical (op, doc_id, v)
+    schema: winnow fingerprints as decimal strings, split labels as-is."""
     w = q_winnow_fp(spark, sf_dir).select(
         F.lit("winnow").alias("op"), "doc_id",
         F.col("fp").cast("string").alias("v"))
@@ -2056,16 +2026,6 @@ def q_mm_binary_dedup(spark, sf_dir):
                                          id_col="doc_id")
 
 
-def q_mm_blockhash_pairs(spark, sf_dir):
-    """Multimodal: perceptual-style near-dup pairs over payload bytes
-    (64-bit blockhash via Arrow-batched pandas, banded Hamming join).
-    Deterministic -> full DuckDB twin of the 8-bit-chunk blockhash join."""
-    from cloudbrush_spark.operators import multimodal
-    blobs = _blob_fixture(spark, sf_dir)
-    return multimodal.blockhash_near_pairs(
-        blobs, content_col="payload", id_col="doc_id", max_hamming=3)
-
-
 # ---------------------------------------------------------------------------
 # Graph-operator fixture queries (G2/G5/G6/G7+G8/G9/G10/C2/C3/C4/J4/A7/K1):
 # one hash-checkable step of each previously pytest-only operator, over the
@@ -2545,8 +2505,6 @@ _ORACLES: dict[str, str] = {
         FROM documents GROUP BY 1
     """,
     "minhash_lsh_dedup": None,   # filled below (shared shingle CTEs)
-    "ngram_jaccard": None,
-    "simhash_pairs": None,
     "g1_pwm_consensus": """
         WITH chars AS (
             SELECT p_brand, i AS pos, substring(p_name, i, 1) AS ch
@@ -2768,72 +2726,6 @@ def _minhash_lsh_sql() -> str:
     return f"SELECT * FROM ({self_q}) UNION ALL SELECT * FROM ({cross_q})"
 
 
-def _ngram_jaccard_sql() -> str:
-    """DuckDB twin of dedup.ngram_jaccard_pairs(shingle_n=3, threshold=0.2,
-    max_shingle_df=1000)."""
-    return f"""
-        WITH {_SHINGLES_CTE},
-        rare AS (
-            SELECT doc_id, sh
-            FROM (SELECT doc_id, sh, count(*) OVER (PARTITION BY sh) AS df FROM sh)
-            WHERE df <= 1000
-        ),
-        inter AS (
-            SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS i
-            FROM rare x JOIN rare y ON x.sh = y.sh AND x.doc_id < y.doc_id
-            GROUP BY 1, 2
-        )
-        SELECT i2.a, i2.b, round(j, 4) AS jaccard FROM (
-            SELECT n.a, n.b, n.i / (sa.sz + sb.sz - n.i) AS j
-            FROM inter n
-            JOIN ssz sa ON sa.doc_id = n.a
-            JOIN ssz sb ON sb.doc_id = n.b) i2
-        WHERE j >= 0.2
-    """
-
-
-# 64-bit SimHash from md5 sign votes, bit-exact twin of dedup.simhash():
-# bit i of the 8-hex-char halves is recovered per hex digit
-# (strpos('0123456789abcdef', ch) - 1) >> (i % 4) — no integer parsing of
-# hex needed, so the SQL is pure ANSI-ish string/bit arithmetic.
-# the list_slice cap mirrors dedup.SIMHASH_MAX_TOKENS: the Spark side
-# slices before the vote aggregate (bit-slice lane + ANSI sum bounds),
-# so the oracle must sign the SAME token prefix or long documents diverge
-_SIMHASH_SIG_CTE = f"""
-        toks AS (SELECT doc_id,
-                        unnest(list_slice({_TOKS_NE}, 1, {dedup.SIMHASH_MAX_TOKENS})) AS tok
-                 FROM documents),
-        hashed AS (SELECT doc_id, md5(tok) AS m FROM toks),
-        bits AS (
-            SELECT doc_id, half.off AS off, bi.i AS i,
-                   CASE WHEN ((strpos('0123456789abcdef',
-                                      substring(m, half.off + 8 - (bi.i // 4), 1)) - 1)
-                              >> (bi.i % 4)) & 1 = 1
-                        THEN 1 ELSE -1 END AS vote
-            FROM hashed,
-                 (SELECT unnest(generate_series(0, 31)) AS i) bi,
-                 (SELECT unnest([0, 8]) AS off) half
-        ),
-        votes AS (SELECT doc_id, off, i, sum(vote) AS s FROM bits GROUP BY 1, 2, 3),
-        sig AS (
-            SELECT doc_id,
-                   CAST(sum(CASE WHEN s > 0 AND off = 0 THEN (1::BIGINT << i) ELSE 0 END) AS BIGINT) AS sim_hi,
-                   CAST(sum(CASE WHEN s > 0 AND off = 8 THEN (1::BIGINT << i) ELSE 0 END) AS BIGINT) AS sim_lo
-            FROM votes GROUP BY 1
-        )
-"""
-
-# brute-force O(n^2) Hamming scan — the exact baseline the banded Spark
-# operator must reproduce at sf0.01
-_ORACLES["simhash_pairs"] = f"""
-    WITH {_SIMHASH_SIG_CTE}
-    SELECT x.doc_id AS a, y.doc_id AS b,
-           CAST(bit_count(xor(x.sim_hi, y.sim_hi))
-                + bit_count(xor(x.sim_lo, y.sim_lo)) AS BIGINT) AS hamming
-    FROM sig x JOIN sig y ON x.doc_id < y.doc_id
-    WHERE bit_count(xor(x.sim_hi, y.sim_hi)) + bit_count(xor(x.sim_lo, y.sim_lo)) <= 7
-"""
-
 _ORACLES["winnow_fp"] = f"""
     WITH normed AS (
         SELECT doc_id, array_to_string({_TOKS_NE}, ' ') AS norm FROM documents
@@ -2908,38 +2800,6 @@ _ORACLES["text_fp_split"] = f"""
                                  * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT) AS hval
                 FROM documents))
     WHERE rk <= 7
-"""
-
-# cluster-mode SimHash: brute-force Hamming pairs over DISTINCT signatures
-# (one node per signature, min doc_id as node id), recursive-CTE connected
-# components, members join their signature's label once — independently
-# re-deriving what Spark computes via banding + hash-min/pointer-jump CC
-_ORACLES["simhash_clusters"] = f"""
-    WITH RECURSIVE {_SIMHASH_SIG_CTE},
-    nodes AS (SELECT sim_hi, sim_lo, min(doc_id) AS node_id
-              FROM sig GROUP BY 1, 2),
-    npairs AS (
-        SELECT x.node_id AS a, y.node_id AS b
-        FROM nodes x JOIN nodes y ON x.node_id < y.node_id
-        WHERE bit_count(xor(x.sim_hi, y.sim_hi))
-              + bit_count(xor(x.sim_lo, y.sim_lo)) <= 7
-    ),
-    edges AS (SELECT a, b FROM npairs UNION ALL SELECT b AS a, a AS b FROM npairs),
-    reach(member, lab) AS (
-        SELECT node_id, node_id FROM nodes
-        UNION
-        SELECT e.b, r.lab FROM reach r JOIN edges e ON e.a = r.member
-    ),
-    labels AS (SELECT member AS node_id, min(lab) AS lab FROM reach GROUP BY 1),
-    mem AS (
-        SELECT l.lab AS cluster_rep, s.doc_id AS member
-        FROM sig s
-        JOIN nodes nn ON nn.sim_hi = s.sim_hi AND nn.sim_lo = s.sim_lo
-        JOIN labels l ON l.node_id = nn.node_id
-    ),
-    sz AS (SELECT cluster_rep, count(*) AS n FROM mem GROUP BY 1)
-    SELECT m.cluster_rep, m.member, CAST(sz.n AS BIGINT) AS n
-    FROM mem m JOIN sz ON sz.cluster_rep = m.cluster_rep
 """
 
 # The per-doc gate of the curation_filter 'doc' leg
@@ -3085,7 +2945,6 @@ _ORACLES["dedup_clusters"] = f"""
     FROM labels l JOIN sizes s USING (cluster_rep)
 """
 
-_ORACLES["ngram_jaccard"] = _ngram_jaccard_sql()
 # ---------------------------------------------------------------------------
 # Graph-operator fixture oracles.  The fixture CTEs (SQL_CHAIN / SQL_STAR /
 # SQL_BUBBLE / SQL_MATE) build the exact rows the Spark builders in
@@ -3750,53 +3609,6 @@ _ORACLES["tpch_suite"] = """
     GROUP BY 2
 """
 
-# Full DuckDB twin of the 64-bit byte blockhash + Hamming<=3 pair join:
-# rebuilds the _blob_fixture payload hex (magic prefix by doc_id residue +
-# utf-8 text bytes), reproduces blockhash64's integer semantics exactly —
-# block mean > global mean  <=>  64*block_sum > total_sum (wrap-pad tiny
-# payloads cyclically like np.resize) — and brute-forces the pair join
-# (exact equivalent of the banded join while no bucket cap triggers).
-_ORACLES["mm_blockhash_pairs"] = """
-    WITH pl AS (
-        SELECT CAST(doc_id AS VARCHAR) AS id,
-               CASE WHEN doc_id % 3 = 0 THEN '89504E47'
-                    WHEN doc_id % 3 = 1 THEN 'FFD8FF' ELSE '' END
-               || upper(hex(encode(text))) AS h
-        FROM documents
-    ),
-    meta AS (
-        SELECT id, h, length(h) // 2 AS n,
-               CASE WHEN length(h) // 2 >= 64 THEN (length(h) // 2) // 64
-                    ELSE 1 END AS bs
-        FROM pl
-    ),
-    bytes AS (
-        SELECT m.id, m.bs, t.j,
-               16 * (strpos('0123456789ABCDEF',
-                     substr(m.h, 2 * (CASE WHEN m.n < 64 THEN t.j % m.n ELSE t.j END) + 1, 1)) - 1)
-               + (strpos('0123456789ABCDEF',
-                     substr(m.h, 2 * (CASE WHEN m.n < 64 THEN t.j % m.n ELSE t.j END) + 2, 1)) - 1) AS v
-        FROM meta m, LATERAL (SELECT unnest(generate_series(0, 64 * m.bs - 1)) AS j) t
-        WHERE m.n > 0
-    ),
-    blocks AS (SELECT id, bs, j // bs AS blk, sum(v) AS s FROM bytes GROUP BY 1, 2, 3),
-    tot AS (SELECT id, sum(s) AS total FROM blocks GROUP BY 1),
-    sig AS (
-        SELECT b.id,
-               sum(CASE WHEN b.blk >= 32 AND 64 * b.s > t.total
-                        THEN (CAST(1 AS BIGINT) << (b.blk - 32)) ELSE 0 END) AS hi,
-               sum(CASE WHEN b.blk < 32 AND 64 * b.s > t.total
-                        THEN (CAST(1 AS BIGINT) << b.blk) ELSE 0 END) AS lo
-        FROM blocks b JOIN tot t USING (id) GROUP BY 1
-        UNION ALL
-        SELECT id, 0 AS hi, 0 AS lo FROM meta WHERE n = 0
-    )
-    SELECT x.id AS a, y.id AS b,
-           bit_count(xor(x.hi, y.hi)) + bit_count(xor(x.lo, y.lo)) AS hamming
-    FROM sig x JOIN sig y ON x.id < y.id
-    WHERE bit_count(xor(x.hi, y.hi)) + bit_count(xor(x.lo, y.lo)) <= 3
-"""
-
 _DNA_FROM_DOCS = "upper(translate(md5(text), '0123456789abcdef', 'acgtacgtacgtacgt'))"
 
 _ORACLES["s2_sfa_roundtrip"] = f"""
@@ -4072,7 +3884,6 @@ _ORACLES["sink_formats"] = f"""
 # position).  Ordering: never-yet-green first, then the round-4
 # regressions, then everything else.  Redundant entries were pruned or
 # merged rather than dropped silently:
-#   - simhash_sig          -> subsumed by simhash_pairs (signature bug flips it)
 #   - fingerprint          -> same md5 fingerprint as p1_dedup_exact
 #   - lang_id/quality/token_stats -> outputs embedded in curation_filter
 #   - a1_n50               -> per-cutoff N50 inside a1_size_distribution
@@ -4084,8 +3895,12 @@ _ORACLES["sink_formats"] = f"""
 #     operators it checked (LSH/IVF/int8 top-k, embedding near-dup pairs,
 #     clusters and cross-corpus dedup); ann_topk still checks the exact one
 #   - asof/range/rollup/topk_per_group/set_ops -> relational_extras
-#   - winnow_fp/hash_split -> text_fp_split tagged union (r7; slot freed
-#     for simhash_clusters — both still verified)
+#   - winnow_fp/hash_split -> text_fp_split tagged union (r7; both
+#     still verified)
+#   - simhash_pairs/simhash_clusters/ngram_jaccard/mm_blockhash_pairs ->
+#     gone with the SimHash/Hamming, n-gram Jaccard and blockhash near-dup
+#     operators they checked; minhash_lsh_dedup and dedup_clusters check
+#     the near-dup path curation runs
 #   - s1_fastq_roundtrip/s2_sfa_roundtrip -> source_roundtrips tagged
 #     union (r7; slot freed for corpus_guard — both legs still verified)
 #   - k1_fasta_format/k2_explode_emit -> sink_formats tagged union (r7;
@@ -4093,6 +3908,8 @@ _ORACLES["sink_formats"] = f"""
 # A pruned query function stays defined above only while bench.py's
 # HEADLINE list resolves it by name or a registered query calls it, and a
 # pruned oracle stays in _ORACLES only while a registered oracle embeds it.
+# A registry entry is pruned only when its operator is deleted; a HEADLINE
+# name goes with its operator too.
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- red in r8 (oracle HUGEINT leak, fixed r9) — never-green-first ---
     "relational_extras": q_relational_extras,    # asof/range/rollup/topk/except
@@ -4100,7 +3917,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "corpus_guard": q_corpus_guard,              # decontam / pii / repetition
     "source_roundtrips": q_source_roundtrips,    # s1 fastq + s2 sfa union
     "sink_formats": q_sink_formats,              # k1 fasta + k2 sfa union
-    "simhash_clusters": q_simhash_clusters,      # linear simhash product
     "text_fp_split": q_text_fp_split,            # winnow + split union (r7)
     # --- new in round 6 ---
     "tpch_suite": q_tpch_suite,                  # 19-leg TPC-H union
@@ -4112,7 +3928,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "j4_mate_adjust": q_j4_mate_adjust,
     "a7_tag_trusted": q_a7_tag_trusted,
     "overlap_graph": q_overlap_graph,
-    "mm_blockhash_pairs": q_mm_blockhash_pairs,  # full DuckDB blockhash twin
     "mm_metadata": q_mm_metadata,
     "mm_binary_dedup": q_mm_binary_dedup,
     # --- SURVEY §2 core (green in r4) ---
@@ -4141,8 +3956,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "c5_astat": q_c5_astat,
     # --- LLM-pipeline dedup/similarity/curation surface ---
     "minhash_lsh_dedup": q_minhash_lsh_dedup,
-    "ngram_jaccard": q_ngram_jaccard,
-    "simhash_pairs": q_simhash_pairs,
     "ann_topk": q_ann_topk,
     "curation_filter": q_curation_filter,
 }

@@ -1,21 +1,20 @@
-"""Deduplication operator family.
+"""Deduplication operators.
 
 Generalizes the reference's read-dedup stage (P1/P2:
 src/Brush/GenNonContainedReads.java:42-316 groups reads by canonical key and
 collapses exact + reverse-complement duplicates into a coverage count;
-src/Brush/RedundantRemoval.java:97-102 drops the marked rows) into the
-dedup surface a training-data pipeline needs: exact, fingerprint,
-MinHash+LSH, SimHash and n-gram-Jaccard near-dup.
+src/Brush/RedundantRemoval.java:97-102 drops the marked rows) to documents.
+What stays is what the pipelines run:
 
-Scale notes (100 TB):
-- every variant is a single hash-shuffle on a *bounded-width* key (hash or
-  signature band), never on the full text;
-- candidate generation is always key-equality (band bucket / shingle), so
-  Catalyst uses plain shuffle-hash joins and AQE can split skewed buckets;
-- per-bucket pair expansion is capped (``max_bucket``) exactly like the
-  reference caps candidates per k-mer key
-  (src/Brush/MatchPrefix.java:366-380) — unbounded buckets are the classic
-  LSH skew bomb at scale.
+- ``dedup_reads``: canonical-key exact dedup of DNA reads (the assembler's
+  preprocess);
+- ``fingerprint_dedup``: normalized-token exact dedup of documents;
+- MinHash/LSH candidate pairs verified by exact Jaccard
+  (``minhash_dedup_pairs*``, ``cross_corpus_near_dups``) — the near-dup
+  method curation runs.  Per-bucket pair expansion is capped
+  (``max_bucket``) like the reference caps candidates per k-mer key
+  (src/Brush/MatchPrefix.java:366-380);
+- ``dedup_clusters``: connected components of a verified pair set.
 """
 
 from __future__ import annotations
@@ -27,12 +26,6 @@ from cloudbrush_spark.functions import dna, text
 from cloudbrush_spark.operators.smallgraph import arrow_frame
 from cloudbrush_spark.plans import cut
 
-
-# Over-cap bucket lists are usually tiny (bound: signatures * chunks /
-# bucket_cap), so the default plan collects them driver-side.  Past this
-# many rows that collect becomes its own cliff (1e9 signatures x 8 chunks
-# / 1k cap ~ 8M driver rows) and the list stays distributed instead.
-OVERCAP_COLLECT_MAX = 100_000
 
 # Edge-count bound for solving connected components driver-side (one
 # collect + union-find) instead of the distributed hash-min loop: 2M
@@ -125,34 +118,6 @@ def _driver_union_find(edges: DataFrame, rows):
                          {"member": members,
                           "label": [find(m) for m in members]}, schema)
     return labels, labels.select("member"), len(members)
-
-
-def _cap_list_frame(big_lazy: DataFrame, schema: str,
-                    collect_max: int | None = None) -> DataFrame | None:
-    """Materialize an over-cap bucket-key list for its multiple downstream
-    uses (anti-join, hot-member semi-join, emptiness branch).
-
-    Common case: collect driver-side and re-emit as a literal frame — the
-    list is provably small, a lazy plan would re-run the bucket aggregate
-    per use, and knowing emptiness driver-side skips the whole level-2
-    plumbing (several jobs) on the no-hot-bucket corpus.  Returns ``None``
-    for empty.
-
-    Past ``collect_max`` rows (default ``OVERCAP_COLLECT_MAX``, resolved
-    at call time so tests can lower it) the driver collect is the cliff,
-    so the SAME list is kept distributed as a checkpointed frame: every
-    downstream join keeps its shape (the ``F.broadcast`` hints now ship
-    the persisted frame — still only a few bytes per bucket key), and the
-    aggregate still runs exactly once.
-    """
-    if collect_max is None:
-        collect_max = OVERCAP_COLLECT_MAX
-    rows = big_lazy.limit(collect_max + 1).collect()
-    if not rows:
-        return None
-    if len(rows) <= collect_max:
-        return big_lazy.sparkSession.createDataFrame(rows, schema)
-    return cut(big_lazy)
 
 
 def dedup_reads(reads: DataFrame, id_col: str = "read_id", seq_col: str = "seq",
@@ -541,52 +506,6 @@ def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
         sh.unpersist()
 
 
-# --------------------------------------------------------------------------
-# n-gram Jaccard (exact)
-# --------------------------------------------------------------------------
-
-def _shingle_sets(docs: DataFrame, id_col: str, text_col: str, shingle_n: int) -> DataFrame:
-    toks = docs.select(F.col(id_col), text.tokens(text_col).alias("toks"))
-    return (
-        toks.select(F.col(id_col), F.explode(text.word_shingles(F.col("toks"), shingle_n)).alias("sh"))
-        .distinct()
-    )
-
-
-def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                        shingle_n: int = 3, threshold: float = 0.5,
-                        max_shingle_df: int = 1000) -> DataFrame:
-    """Exact n-gram Jaccard similarity self-join.
-
-    Inverted-index equi-join on shingle (the same candidate structure as the
-    reference's k-mer overlap join J1, src/Brush/MatchPrefix.java:150-174),
-    then |A ∩ B| from the join count and |A ∪ B| = |A| + |B| - |A ∩ B|.
-    ``max_shingle_df`` drops ubiquitous shingles before the join — the exact
-    analogue of the reference's high-frequency k-mer blacklist
-    (src/Brush/MatchPrefix.java:155-158); at 100 TB this is what prevents
-    the hot-token shuffle explosion.
-    """
-    sh = _shingle_sets(docs, id_col, text_col, shingle_n)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    hot = (sh.groupBy("sh").count()
-           .filter(F.col("count") > max_shingle_df).select("sh"))
-    rare = sh.join(F.broadcast(hot), "sh", "left_anti")
-    a = rare.select(F.col(id_col).alias("a"), "sh")
-    b = rare.select(F.col(id_col).alias("b"), "sh")
-    inter = (
-        a.join(b, "sh").filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b").agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("szb"))
-    return (
-        inter.join(sa, "a").join(sb, "b")
-        .withColumn("jaccard", F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-
-
 def _jaccard_for_pairs(sh: DataFrame, pairs: DataFrame, id_col: str,
                        n_pairs: int | None = None) -> DataFrame:
     """Exact Jaccard for (a, b) candidate pairs against an (id, sh)
@@ -629,355 +548,6 @@ def _jaccard_for_pairs(sh: DataFrame, pairs: DataFrame, id_col: str,
         .withColumn("jaccard", F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")))
         .select("a", "b", "jaccard")
     )
-
-
-# --------------------------------------------------------------------------
-# SimHash
-# --------------------------------------------------------------------------
-
-# Deterministic per-document token budget for the bit-sliced simhash
-# aggregate — see the simhash() docstring for the two overflow bounds
-# (16-bit lane carry at 65,536; ANSI BIGINT sum at ~32,768 worst-case).
-SIMHASH_MAX_TOKENS = 32_000
-
-
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document from md5(token) sign votes, carried as two
-    32-bit halves ``sim_hi``/``sim_lo``.
-
-    Two halves instead of one 64-bit value so the signature (a) never touches
-    the sign bit of a signed long — identical arithmetic in every SQL engine,
-    which is what makes this operator oracle-checkable — and (b) XORs cheaply
-    for Hamming distance.  Hash source is the first/second 8 hex chars of
-    md5(token): content-addressed, engine-portable, uniform.
-
-    Pure expression pipeline: explode tokens -> per-bit +/-1 votes via bit
-    extraction -> sum -> reassemble sign bits.  JVM-side end to end (md5,
-    conv, shiftright are all Catalyst expressions inside codegen).
-
-    Per-document tokens are deterministically capped at ``SIMHASH_MAX_TOKENS``
-    (first tokens win, via an array slice before the explode).  Two hard
-    limits of the bit-sliced aggregate motivate the cap: a 16-bit lane
-    carries into its neighbor once a lane's vote count reaches 65,536, and
-    under Spark 4's default ANSI mode the packed BIGINT ``sum`` itself
-    overflows (ArithmeticException) once the top lane's cumulative sum
-    crosses 2^15 rows worst-case (~32,768 tokens).  The 32,000 cap keeps
-    both bounds safe with margin; a signature over the first 32k tokens is
-    the standard long-document convention for near-dup hashing.
-    """
-    toks = docs.select(
-        F.col(id_col),
-        F.explode(F.slice(text.tokens(text_col), 1, SIMHASH_MAX_TOKENS)).alias("tok"))
-    hashed = toks.select(
-        id_col,
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long").alias("hvh"),
-        F.conv(F.substring(F.md5("tok"), 9, 8), 16, 10).cast("long").alias("hvl"),
-    )
-    # sign(sum of +/-1 votes) == (2 * count_of_set_bits > n), and the 64
-    # per-bit counters are BIT-SLICED four to a long (16-bit lanes): the
-    # aggregate carries 16 packed sum columns instead of 64, quartering
-    # the hash-aggregate state and shuffle row width.  Safe because the
-    # SIMHASH_MAX_TOKENS slice above bounds per-doc votes below both the
-    # lane-carry (65,536) and ANSI signed-sum (~32,768) limits.
-    #
-    # The wide bit expressions are generated as SQL STRINGS and parsed by
-    # one F.expr each: building them as Column-object loops cost ~3s of
-    # py4j round trips PER CALL (thousands of JVM calls for ~1s of actual
-    # execution) — driver-side plan construction is part of the query's
-    # latency budget too.
-    LANES, W = 4, 16
-
-    def packed_sql(src: str, c: int) -> str:
-        return " + ".join(
-            f"shiftleft((shiftright({src}, {LANES * c + lane}) & 1), {W * lane})"
-            for lane in range(LANES)
-        )
-
-    agg = hashed.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.expr(f"sum({packed_sql('hvh', c)})").alias(f"h{c}") for c in range(8)],
-        *[F.expr(f"sum({packed_sql('hvl', c)})").alias(f"l{c}") for c in range(8)],
-    )
-
-    def assemble_sql(prefix: str) -> str:
-        terms = " + ".join(
-            f"IF(2 * (shiftright({prefix}{i // LANES}, {W * (i % LANES)}) & 65535)"
-            f" > n, {1 << i}L, 0L)"
-            for i in range(32)
-        )
-        return f"CAST({terms} AS BIGINT)"
-
-    return agg.select(
-        id_col,
-        F.expr(assemble_sql("h")).alias("sim_hi"),
-        F.expr(assemble_sql("l")).alias("sim_lo"),
-    )
-
-
-def hamming_near_pairs(sig: DataFrame, id_col: str,
-                       hi_col: str = "sim_hi", lo_col: str = "sim_lo",
-                       max_hamming: int = 7, bucket_cap: int = 1000) -> DataFrame:
-    """Near-dup pairs of 64-bit signatures (two 32-bit halves) within a
-    Hamming budget, banded for scale.  Shared core of SimHash text dedup
-    and blockhash binary dedup.
-
-    Scale design (the three levers that survive 1B items):
-
-    1. **Banding over DISTINCT signatures.** Identical content — the
-       dominant duplicate mode at corpus scale — collapses to one
-       signature row before any banding or pair expansion; the
-       1k-identical-docs skew case costs one signature, not 10^6 bucket
-       rows.  Item-level pairs are recovered afterwards by joining members
-       back onto signature pairs (shuffle joins AQE can split).
-    2. **Adaptive chunk width.** Pigeonhole: a pair within Hamming d
-       shares an exact chunk when chunks > d.  For max_hamming <= 3 use
-       4 x 16-bit chunks (65k bucket values — fine-grained buckets);
-       for <= 7, 8 x 8-bit chunks (the minimum table count that keeps
-       recall 1).
-    3. **Hierarchical re-banding of over-cap buckets** (found with a
-       groupBy + broadcast semi/anti-join, never a window over the hot
-       key).  Hot chunk values are STRUCTURAL, not adversarial: majority
-       votes over shared common tokens correlate signature bits across a
-       corpus, so one byte value of one chunk can collect thousands of
-       distinct signatures (observed at sf0.1: one 8-bit chunk bucket
-       held 1,329 of 4,971 signatures, and DROPPING it lost 41 true
-       pairs vs the brute-force oracle).  Instead of dropping, members
-       of an over-cap bucket are re-banded on ``max_hamming + 1``
-       sub-chunks of the full 64 bits rotated half a chunk-width off the
-       level-1 partition: a pair within the Hamming budget differs in at
-       most ``max_hamming`` of the sub-chunks, so pigeonhole again
-       guarantees one equal sub-chunk — recall stays EXACT, while the
-       hot bucket's quadratic pair expansion is subdivided by the
-       rotated bits that near-pairs must mostly share (the offset keeps
-       any sub-chunk from coinciding with the parent chunk, whose bits
-       are equal across the bucket by construction).  Only a
-       sub-bucket that STILL exceeds the cap (signatures agreeing on a
-       parent chunk and a complement sub-chunk in over-cap mass) is
-       dropped — nested skew two levels deep.
-
-    Output: (a, b, hamming) with a < b, exact w.r.t. the brute-force scan
-    whenever no SECOND-level bucket exceeds ``bucket_cap``.
-    """
-    if max_hamming <= 3:
-        nchunks, width, mask = 4, 16, 0xFFFF
-    elif max_hamming <= 7:
-        nchunks, width, mask = 8, 8, 0xFF
-    else:
-        raise ValueError("chunk banding guarantees recall only for max_hamming <= 7")
-    # the signature frame feeds the distinct-banding branch AND both
-    # member-recovery joins — materialize once (signature computation is
-    # the expensive upstream: a 64-wide token aggregate for SimHash, an
-    # Arrow pandas stage for blockhash)
-    from pyspark import StorageLevel
-    sig = sig.select(F.col(id_col),
-                     F.col(hi_col).alias("sim_hi"), F.col(lo_col).alias("sim_lo")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    # populate the cache with ONE linear job before the DAG fans out: the
-    # chunk-explode branches (bucket-cap broadcast + both join sides) and
-    # the member-recovery joins launch in parallel and would each
-    # recompute the expensive signature aggregate against a cold cache
-    n_sig = sig.count()
-    try:
-        return cut(_hamming_pairs_from_cached(
-            sig, id_col, nchunks, width, mask, max_hamming, bucket_cap,
-            n_sig=n_sig))
-    finally:
-        # the pair result is tiny next to the signature frame; eager
-        # checkpoint above materializes it, so the cache can be released
-        # before returning (round-4 lesson: persist without unpersist
-        # degraded every later query in the bench session)
-        sig.unpersist()
-
-
-def _hamming_pairs_from_cached(sig: DataFrame, id_col: str, nchunks: int,
-                               width: int, mask: int, max_hamming: int,
-                               bucket_cap: int,
-                               distinct_sigs: bool = False,
-                               n_sig: int | None = None) -> DataFrame:
-    """``distinct_sigs=True`` asserts the input carries exactly ONE row per
-    (sim_hi, sim_lo) — the signature-NODE form ``simhash_clusters`` builds.
-    The id column then rides the banding directly, which drops four whole
-    plan legs with identical output: the pre-banding ``distinct`` (already
-    distinct), the identical-signature self-join (provably empty), and
-    both member-recovery joins (the pair rows already carry their ids).
-    ``n_sig`` threads a row count the caller already paid for (cache
-    populate / checkpoint count) so the parallelism sizing below does not
-    re-run the job."""
-    half = nchunks // 2
-    sc = sig.sparkSession.sparkContext
-    # parallelism for the pair-expansion stages.  The banded join is an
-    # EXPLOSIVE operator: a few MB of banded signatures in, up to
-    # cap^2/2 candidate rows per bucket out — so AQE's input-byte-based
-    # partition coalescing is exactly wrong for it (profiled at x10: the
-    # whole expansion coalesced onto 2 tasks, 123s of a 146s query).
-    # Explicit repartition(n, keys) is exempt from AQE coalescing, which
-    # is what pins the expansion width below.  Width is sized to the
-    # SIGNATURE COUNT (cached upstream by both callers, so the count is
-    # a no-op job), not blindly to the core count: pinning 32-wide
-    # blocks under a 5k-signature sf0.1 input re-adds ~1s of pure
-    # task-launch overhead across the ~10 downstream stages that fan
-    # out from the cut — the narrow plan AQE picked there was right.
-    # ~1500 signatures per partition reproduces the measured-good x10
-    # width (50k sigs / 32 cores) and shrinks to a handful of tasks on
-    # test-scale inputs; the cap keeps task counts bounded at 1B rows.
-    npart_max = max(sc.defaultParallelism,
-                    int(sig.sparkSession.conf.get("spark.sql.shuffle.partitions")))
-    if n_sig is None:
-        n_sig = sig.count()
-    npart = max(1, min(npart_max, -(-n_sig // 1500)))
-    # one materialized distinct: every downstream branch (cap aggregate,
-    # both pair-join sides, the hot-member explode) re-derives from
-    # ``chunks`` — without the cut each re-derivation replays the
-    # distinct's shuffle.  Round-robin repartition BEFORE the cut so the
-    # checkpointed blocks (the fan-out root of every downstream stage)
-    # carry full parallelism instead of AQE's byte-sized 1-2 partitions.
-    # In distinct_sigs mode the input is already one row per signature,
-    # so the distinct is skipped and the id column rides along.  Both
-    # modes HASH-repartition on the signature (uniform — it is a hash)
-    # rather than distinct().repartition(n): the explicit repartition
-    # satisfies the dedup aggregate's required distribution, so the
-    # whole thing is ONE exchange with no round-robin
-    # sort-before-repartition, and AQE never coalesces it (r14).
-    if distinct_sigs:
-        dsig = cut(sig.select(id_col, "sim_hi", "sim_lo")
-                   .repartition(npart, "sim_hi", "sim_lo"))
-        id_cols = [id_col]
-    else:
-        dsig = cut(sig.select("sim_hi", "sim_lo")
-                   .repartition(npart, "sim_hi", "sim_lo")
-                   .dropDuplicates())
-        id_cols = []
-    chunks = dsig.select(
-        *id_cols, "sim_hi", "sim_lo",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(c).alias("c"),
-                F.shiftright(F.col("sim_hi" if c < half else "sim_lo"), (c % half) * width)
-                .bitwiseAND(F.lit(mask)).alias("v"),
-            )
-            for c in range(nchunks)
-        ])).alias("ch"),
-    ).select(*id_cols, "sim_hi", "sim_lo",
-             F.col("ch.c").alias("c"), F.col("ch.v").alias("v"))
-    # the over-cap bucket list is bounded by n_distinct_sigs * nchunks /
-    # bucket_cap rows; _cap_list_frame collects it once below the driver
-    # threshold and keeps it distributed past it
-    big = _cap_list_frame(
-        chunks.groupBy("c", "v").count()
-        .filter(F.col("count") > bucket_cap).select("c", "v"),
-        "c int, v long")
-    capped = chunks if big is None else \
-        chunks.join(F.broadcast(big), ["c", "v"], "left_anti")
-
-    def pair_join(banded: DataFrame, keys: list[str]) -> DataFrame:
-        ia = [F.col(id_col).alias("ia")] if distinct_sigs else []
-        ib = [F.col(id_col).alias("ib")] if distinct_sigs else []
-        carry = (["ia", "ib"] if distinct_sigs else []) + ["ha", "la", "hb", "lb"]
-        a = banded.select(*ia, F.col("sim_hi").alias("ha"),
-                          F.col("sim_lo").alias("la"), *keys)
-        b = banded.select(*ib, F.col("sim_hi").alias("hb"),
-                          F.col("sim_lo").alias("lb"), *keys)
-        return (
-            a.join(b, keys)
-            .filter((F.col("ha") < F.col("hb"))
-                    | ((F.col("ha") == F.col("hb")) & (F.col("la") < F.col("lb"))))
-            .select(
-                *carry,
-                (F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-                 + F.bit_count(F.col("la").bitwiseXOR(F.col("lb")))).alias("hamming"),
-            )
-            .filter(F.col("hamming") <= max_hamming)
-        )
-
-    # level 2: re-band over-cap bucket members on max_hamming+1 sub-chunks
-    # taken from the full 64 bits ROTATED by width/2 relative to the
-    # level-1 partition.  Pigeonhole holds independently of the parent
-    # chunk: a pair within Hamming d <= max_hamming differs in at most
-    # max_hamming of the ns = max_hamming+1 sub-chunks, so at least one
-    # sub-chunk is equal — recall stays exact.  The half-width offset
-    # guarantees no sub-chunk coincides with the parent chunk's bit
-    # range, so the degenerate "sub-chunk == parent chunk" bucket (which
-    # would inherit the whole hot bucket and stay over cap) cannot form.
-    # Versus the earlier complement-bits scheme this drops the per-parent
-    # CASE dispatch (ns x nchunks x width generated terms) to ns fixed
-    # 1-2-term slice expressions — ~30x less generated code, which cut
-    # ~2s of Janino compile off the cold path with identical sf0.1
-    # output.
-    ns = max_hamming + 1
-
-    def _sub_sql(j: int) -> str:
-        start = (j * width + width // 2) % 64
-        parts, t, pos = [], 0, start
-        while t < width:
-            col = "sim_hi" if pos < 32 else "sim_lo"
-            off = pos % 32
-            take = min(width - t, 32 - off)
-            parts.append(
-                f"shiftleft(shiftright({col}, {off}) & {(1 << take) - 1}, {t})")
-            t += take
-            pos = (pos + take) % 64
-        return " + ".join(parts)
-
-    # level-2 plumbing costs a few extra jobs; pay it only when a hot
-    # bucket actually exists (known from the collected cap list — no
-    # extra emptiness job).  When it does, the level-2 rows FOLD INTO
-    # THE LEVEL-1 PAIR JOIN as a tagged union keyed on (c, v, sc, sv):
-    # level-1 rows carry the sentinel (sc=-1, sv=0), so they can only
-    # ever meet level-1 rows of the same (c, v) and level-2 rows only
-    # level-2 rows of the same sub-bucket — the pair set is exactly the
-    # union the two separate joins produced, through ONE exchange and
-    # ONE join stage instead of two of each (r14 verdict #1: the
-    # always-hot sf0.1 fixture paid the second join's sequential AQE
-    # stage jobs on every run).
-    if big is None:
-        sig_pairs = pair_join(capped, ["c", "v"])
-    else:
-        hot = chunks.join(F.broadcast(big), ["c", "v"], "left_semi")
-        sub_cols = [F.expr(_sub_sql(j)).alias(f"__sv{j}") for j in range(ns)]
-        sub = hot.select(*id_cols, "sim_hi", "sim_lo", "c", "v",
-                         *sub_cols).select(
-            *id_cols, "sim_hi", "sim_lo", "c", "v",
-            F.explode(F.array(*[
-                F.struct(F.lit(j).alias("sc"), F.col(f"__sv{j}").alias("sv"))
-                for j in range(ns)
-            ])).alias("s"),
-        ).select(*id_cols, "sim_hi", "sim_lo", "c", "v",
-                 F.col("s.sc").alias("sc"), F.col("s.sv").alias("sv"))
-        sub = cut(sub)  # ns rows per hot member — small;
-        # cuts the chunk/CASE pipeline from re-running for the sub-bucket
-        # cap aggregate, its broadcast and the pair join
-        big2 = (sub.groupBy("c", "v", "sc", "sv").count()
-                .filter(F.col("count") > bucket_cap)
-                .select("c", "v", "sc", "sv"))
-        capped2 = sub.join(F.broadcast(big2), ["c", "v", "sc", "sv"], "left_anti")
-        lvl1 = capped.select(
-            *id_cols, "sim_hi", "sim_lo", "c", "v",
-            F.lit(-1).alias("sc"), F.lit(0).cast("long").alias("sv"))
-        banded2 = lvl1.unionByName(
-            capped2.select(*id_cols, "sim_hi", "sim_lo", "c", "v", "sc", "sv"))
-        sig_pairs = pair_join(banded2, ["c", "v", "sc", "sv"])
-    sig_pairs = sig_pairs.distinct()
-    if distinct_sigs:
-        # ids rode the banding (1:1 with signatures): no member-recovery
-        # joins, and the identical-signature self-join is provably empty
-        return sig_pairs.select(F.least("ia", "ib").alias("a"),
-                                F.greatest("ia", "ib").alias("b"), "hamming")
-    mem_a = sig.select(F.col(id_col).alias("ia"),
-                       F.col("sim_hi").alias("ha"), F.col("sim_lo").alias("la"))
-    mem_b = sig.select(F.col(id_col).alias("ib"),
-                       F.col("sim_hi").alias("hb"), F.col("sim_lo").alias("lb"))
-    inter = (
-        sig_pairs.join(mem_a, ["ha", "la"]).join(mem_b, ["hb", "lb"])
-        .select(F.least("ia", "ib").alias("a"),
-                F.greatest("ia", "ib").alias("b"), "hamming")
-    )
-    same = (
-        sig.alias("x").join(sig.alias("y"), ["sim_hi", "sim_lo"])
-        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(F.col(f"x.{id_col}").alias("a"), F.col(f"y.{id_col}").alias("b"),
-                F.lit(0).alias("hamming"))
-    )
-    return inter.unionByName(same)
 
 
 def dedup_clusters(pairs: DataFrame, items: DataFrame | None = None,
@@ -1045,11 +615,10 @@ def dedup_clusters(pairs: DataFrame, items: DataFrame | None = None,
     # (near-dup graphs are orders of magnitude smaller than the corpus)
     # is solved exactly by driver-side union-find in ONE collect, where
     # the distributed loop pays ~6 sequential driver round-trips PER
-    # ROUND for up to ~log2(diameter) rounds (measured at sf0.1: the
-    # simhash signature graph took 9 rounds ≈ 54 jobs; union-find does
-    # it in 2).  Past the cap the hash-min loop below is the 100 TB
-    # path — the same collect-when-provably-small / distributed-past-
-    # the-cliff split as ``_cap_list_frame``.
+    # ROUND for up to ~log2(diameter) rounds (a 9-round graph costs
+    # ~54 jobs; union-find does it in 2).  Past the cap the hash-min
+    # loop below is the distributed path: collect while provably small,
+    # stay distributed past the driver cliff.
     bcast_max = 2_000_000  # (member, label) rows well under executor memory
     # ONE bounded limit-collect both decides the algorithm and fetches
     # the driver path's edges (the old shape paid a count job AND a
@@ -1167,93 +736,3 @@ def dedup_clusters(pairs: DataFrame, items: DataFrame | None = None,
         )
         out = out.unionByName(singletons)
     return out
-
-
-def simhash_near_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                       max_hamming: int = 7, bucket_cap: int = 1000) -> DataFrame:
-    """Text near-dup pairs by SimHash Hamming distance — signature
-    computation (md5 sign votes) + the banded ``hamming_near_pairs`` core;
-    see that function for the 100 TB design notes."""
-    return hamming_near_pairs(simhash(docs, id_col, text_col), id_col,
-                              max_hamming=max_hamming, bucket_cap=bucket_cap)
-
-
-def simhash_clusters(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", max_hamming: int = 7,
-                     bucket_cap: int = 1000, max_iter: int = 50) -> DataFrame:
-    """SimHash duplicate CLUSTERS — the linear consumable product for
-    duplicate-saturated corpora, where the pair enumeration
-    (``simhash_near_pairs``) is inherently quadratic in signature-group
-    size: m documents sharing one signature contribute m(m-1)/2 pair rows
-    but only m cluster rows.
-
-    The whole graph computation runs at the DISTINCT-SIGNATURE level:
-
-    1. one signature node per distinct (sim_hi, sim_lo), its min member
-       id as the node id (and the signature frame stays cached across the
-       fan-out, exactly like ``hamming_near_pairs``);
-    2. banded Hamming pairs over signature NODES (``bucket_cap`` applies
-       to distinct signatures, unchanged semantics);
-    3. hash-min + pointer-jumping connected components over those nodes
-       (``dedup_clusters`` — edge count bounded by distinct-signature
-       pairs, never member pairs);
-    4. every document joins its signature node's label ONCE — the only
-       member-level work is two linear joins.
-
-    Same output contract as ``dedup_clusters``: a total partition
-    (cluster_rep, member, n) of the corpus, cluster_rep = min member id.
-    Equivalent by construction to
-    ``dedup_clusters(simhash_near_pairs(docs), items=docs)`` — identical
-    signatures are hamming-0 pairs there, so each signature group is
-    already one component; pinned by ``tests/test_joins.py``.
-    """
-    from pyspark import StorageLevel
-    sig = simhash(docs, id_col, text_col) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    sig.count()  # populate before the multi-branch fan-out (cold-cache race)
-    try:
-        if max_hamming <= 3:
-            nchunks, width, mask = 4, 16, 0xFFFF
-        else:
-            nchunks, width, mask = 8, 8, 0xFF
-        # m = member count per signature node: carried on the node table
-        # so cluster sizes can be summed at the NODE level below — the
-        # corpus-width groupBy("label") + size join the old shape paid
-        # are then node-level aggregates instead (r14, guide §2.3)
-        nodes = cut(sig.groupBy("sim_hi", "sim_lo")
-                    .agg(F.min(id_col).alias("node_id"),
-                         F.count(F.lit(1)).alias("m")))
-        # cut the pair set before the CC: dedup_clusters' symmetrize union
-        # references the pair plan twice, and the banded-Hamming pipeline
-        # is by far the dominant cost on a duplicate-saturated corpus
-        # (x10 fixture: ~117s of ~145s total) — executing it once must not
-        # depend on Catalyst finding the exchange reuse
-        sig_pairs = cut(_hamming_pairs_from_cached(
-            nodes.select(F.col("node_id").alias(id_col), "sim_hi", "sim_lo"),
-            id_col, nchunks, width, mask, max_hamming, bucket_cap,
-            distinct_sigs=True))
-        # pass the CHECKPOINTED pair frame itself (not a select of it):
-        # dedup_clusters projects (a, b) internally and the _cb_cut mark
-        # on the checkpoint lets it skip a redundant second cut (r15)
-        labels = dedup_clusters(
-            sig_pairs,
-            items=nodes.select(F.col("node_id").alias(id_col)),
-            id_col=id_col, max_iter=max_iter,
-        ).select(F.col("member").alias("node_id"),
-                 F.col("cluster_rep").alias("label"))
-        # node-level: attach each node's label, sum member counts per
-        # label, re-attach — all bounded by the distinct-signature count
-        nodemap = cut(nodes.join(labels, "node_id")
-                      .select("sim_hi", "sim_lo", "label", "m"))
-        sizes = nodemap.groupBy("label").agg(F.sum("m").alias("n"))
-        node2 = nodemap.join(sizes, "label") \
-            .select("sim_hi", "sim_lo", "label", "n")
-        # ONE corpus-width join recovers the members (the old shape paid
-        # two sequential corpus-width joins plus a corpus-width size
-        # aggregate and size join — 4 full-width exchanges -> 1)
-        return cut(
-            sig.join(node2, ["sim_hi", "sim_lo"])
-            .select(F.col("label").alias("cluster_rep"),
-                    F.col(id_col).alias("member"), "n"))
-    finally:
-        sig.unpersist()

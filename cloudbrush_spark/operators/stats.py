@@ -56,12 +56,16 @@ def _histogram(df: DataFrame, size_col: str, cov_col: str | None) -> list:
 def _crossing(hist_desc: list, target: int) -> tuple:
     """``(n50, n50_cnt)``: the first size of ``hist_desc`` at which the
     running size sum reaches ``target``/2 and how many items that took, or
-    ``(None, None)`` when it never does.  Inside the crossing size group
-    ``k = ceil((target - 2*cum_before) / (2*sz))`` items are needed."""
+    ``(None, None)`` when it never does — the per-item scan, one size
+    group at a time.  Inside the crossing group
+    ``k = ceil((target - 2*cum_before) / (2*sz))`` items are needed when
+    that is positive (then ``sz > 0``), else one: the scan stops only
+    after adding an item, so a target of 0 or less crosses at once."""
     cum_mass = cum_cnt = 0
     for sz, cnt, _ in hist_desc:
         if 2 * (cum_mass + sz * cnt) >= target:
-            return sz, cum_cnt - (2 * cum_mass - target) // (2 * sz)
+            need = target - 2 * cum_mass
+            return sz, cum_cnt + (-(-need // (2 * sz)) if need > 0 else 1)
         cum_mass += sz * cnt
         cum_cnt += cnt
     return None, None

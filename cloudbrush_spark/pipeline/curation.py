@@ -206,9 +206,9 @@ def curate(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # overcap='star' so mass near-dup boilerplate (over-cap LSH buckets,
     # which the pair product deliberately drops) is still deduplicated:
     # each over-cap bucket contributes linear (rep, member) candidates,
-    # exact-Jaccard verified like every other pair.  Shingles come from
-    # the threaded token arrays (mirrors dedup._shingle_sets minus the
-    # re-tokenization).
+    # exact-Jaccard verified like every other pair.  Shingles are the
+    # word n-grams of the threaded token arrays (no re-tokenization),
+    # the same stream ``dedup.minhash_dedup_pairs`` builds from text.
     shingles = (
         src.select(F.col(id_col),
                    F.explode(text.word_shingles(F.col("__toks"), shingle_n))

@@ -74,13 +74,11 @@ def test_no_items_returns_paired_nodes_only(spark):
     assert out == {(2, 2, 2), (2, 4, 2)}
 
 
-def test_clusters_over_simhash_pairs(spark):
-    # The composition BASELINE.md prescribes for signature-saturated
-    # corpora (simhash_pairs' decade probe: pair volume grew x94 while
-    # input grew x10): feed the quadratic pair enumeration into
-    # dedup_clusters and consume the LINEAR (rep, member, n) partition.
-    # simhash_near_pairs emits (a, b, hamming) — pin that its pair
-    # columns stay drop-in compatible with dedup_clusters.
+def test_clusters_over_minhash_pairs(spark):
+    # Feed the pair enumeration curation runs into dedup_clusters and
+    # consume the LINEAR (rep, member, n) partition.
+    # minhash_dedup_pairs emits (a, b, jaccard) — pin that a pair frame
+    # carrying an extra score column is drop-in dedup_clusters input.
     docs = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),
          (2, "the quick brown fox jumps over the lazy dog"),
@@ -88,7 +86,7 @@ def test_clusters_over_simhash_pairs(spark):
          (4, "entirely different content about spark catalyst plans"),
          (5, "unrelated third topic with its own vocabulary set")],
         "doc_id long, text string")
-    pairs = dedup.simhash_near_pairs(docs, max_hamming=7)
+    pairs = dedup.minhash_dedup_pairs(docs)
     got = {(r.a, r.b) for r in pairs.select("a", "b").collect()}
     assert {(1, 2)} <= got          # identical docs always pair
     assert not {(1, 4), (1, 5), (4, 5)} & got

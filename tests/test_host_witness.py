@@ -53,3 +53,18 @@ def test_bench_final_line_fits_driver_tail_window():
     assert parsed["metric"] == "headline_queries_total"
     assert len(parsed["queries"]) == len(bench.HEADLINE)
     assert parsed["work_total"] == digest
+
+
+def test_bench_headline_names_resolve():
+    """Every bench.HEADLINE name resolves the way ``bench.main`` resolves
+    it: a registered query, a ``q_<name>`` function of the entry module,
+    or an explicit single-op override.  A stale name otherwise surfaces
+    only as a ``SystemExit`` on a full bench run."""
+    import __spark_entry__ as entrymod
+    import bench
+
+    registered = entrymod.queries()
+    stale = [n for n in bench.HEADLINE
+             if n not in registered and not hasattr(entrymod, f"q_{n}")
+             and n not in bench.OVERRIDES]
+    assert not stale, stale

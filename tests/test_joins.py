@@ -1,12 +1,8 @@
-"""asof_join / range_join unit tests + the SimHash identical-docs skew
-fixture (the 1k-duplicate case must collapse to one signature before any
-pair expansion)."""
-
-import time
+"""asof_join / range_join, salted_equijoin and merge_upsert unit tests."""
 
 from pyspark.sql import functions as F
 
-from cloudbrush_spark.operators import dedup, joins
+from cloudbrush_spark.operators import joins
 
 
 def _df(spark, rows, schema):
@@ -63,80 +59,6 @@ def test_range_join_bucket_smaller_than_span(spark):
                  joins.range_join(left, right, "k", "lts", "rts",
                                   lower=0, upper=1000, bucket=256).collect())
     assert out == list(range(0, 1001, 100))
-
-
-def test_simhash_identical_docs_skew_fixture(spark):
-    """1,000 byte-identical docs + 1 distinct: identical content collapses
-    to ONE distinct signature before banding, so the chunk buckets never
-    hold the duplicate mass; all C(1000,2) pairs still come out (via the
-    signature-member self-join), plus nothing across unrelated content."""
-    rows = [(i, "the quick brown fox jumps over the lazy dog") for i in range(1000)]
-    rows.append((5000, "completely different content about spark shuffles and joins"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    t0 = time.time()
-    pairs = dedup.simhash_near_pairs(docs, max_hamming=3)
-    n = pairs.count()
-    elapsed = time.time() - t0
-    assert n == 1000 * 999 // 2
-    assert pairs.filter(F.col("hamming") > 0).count() == 0
-    assert elapsed < 120
-
-
-def test_simhash_token_cap_long_doc(spark):
-    """Docs past SIMHASH_MAX_TOKENS are signed over their first tokens only:
-    the slice keeps the bit-sliced lanes inside both overflow bounds (16-bit
-    lane carry at 65,536 votes; ANSI BIGINT sum at ~32,768 top-lane rows —
-    without the cap a ~70k-token doc throws ArithmeticException under
-    Spark 4's default ANSI mode) and makes the long-doc signature equal by
-    construction to the truncated doc's."""
-    n = dedup.SIMHASH_MAX_TOKENS
-    words = [f"w{i % 4096}" for i in range(n + 38_000)]
-    docs = spark.createDataFrame(
-        [(1, " ".join(words)), (2, " ".join(words[:n]))],
-        "doc_id long, text string")
-    sigs = {r.doc_id: (r.sim_hi, r.sim_lo) for r in dedup.simhash(docs).collect()}
-    assert sigs[1] == sigs[2]
-
-
-def test_simhash_clusters_equals_pair_clusters(spark):
-    """simhash_clusters (distinct-signature-level CC) is equivalent by
-    construction to dedup_clusters over the pair enumeration — same
-    total partition, representatives and sizes."""
-    rows = []
-    base = ("the quick brown fox jumps over the lazy dog and keeps on "
-            "jumping through every test corpus sentence we write here")
-    for i in range(6):  # identical group
-        rows.append((i, base))
-    rows.append((10, base.replace("lazy", "sleepy")))  # near-dup of group
-    rows.append((20, "completely different content about spark shuffle joins"))
-    rows.append((21, "completely different content about spark shuffle joins"))
-    rows.append((30, "a third topic entirely with database query planners"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = dedup.simhash_near_pairs(docs, max_hamming=3)
-    want = {(r.cluster_rep, r.member, r.n) for r in
-            dedup.dedup_clusters(pairs, items=docs).collect()}
-    got = {(r.cluster_rep, r.member, r.n) for r in
-           dedup.simhash_clusters(docs, max_hamming=3).collect()}
-    assert got == want
-    # sanity on the fixture itself: the identical group is one cluster
-    reps = {r[1]: r[0] for r in got}
-    assert len({reps[i] for i in range(6)}) == 1
-
-
-def test_simhash_clusters_skew_fixture_linear(spark):
-    """1,000 identical docs: the cluster product emits 1,001 rows (one per
-    member), never the C(1000,2) pair expansion — the linear consumable
-    for duplicate-saturated corpora."""
-    rows = [(i, "the quick brown fox jumps over the lazy dog") for i in range(1000)]
-    rows.append((5000, "completely different content about spark shuffles and joins"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    t0 = time.time()
-    out = dedup.simhash_clusters(docs, max_hamming=3).collect()
-    elapsed = time.time() - t0
-    assert len(out) == 1001
-    sizes = {r.cluster_rep: r.n for r in out}
-    assert sizes[0] == 1000 and sizes[5000] == 1
-    assert elapsed < 120
 
 
 # --- salted_equijoin (late r8): skew-resistant shuffle equi-join -----------

@@ -1,5 +1,4 @@
-"""Multimodal binary-column operators: metadata sniff, exact dedup and
-blockhash near-dup."""
+"""Multimodal binary-column operators: metadata sniff and exact dedup."""
 
 from cloudbrush_spark.operators import multimodal
 
@@ -28,14 +27,3 @@ def test_exact_binary_dedup_groups_identical_payloads(spark):
            for r in multimodal.exact_binary_dedup(df).collect()}
     assert out == {"a": (2, 6), "c": (1, 3)}
 
-
-def test_blockhash_identical_and_near_payloads(spark):
-    base = bytes(range(256)) * 8
-    tweaked = bytearray(base)
-    tweaked[0] = 255                      # tiny perturbation
-    df = _blobs(spark, [("x", base), ("y", bytes(base)), ("z", bytes(tweaked))])
-    pairs = {(r.a, r.b): r.hamming
-             for r in multimodal.blockhash_near_pairs(df, max_hamming=3).collect()}
-    assert pairs[("x", "y")] == 0         # identical bytes -> hamming 0
-    # the perturbed payload is within the hamming budget of the original
-    assert ("x", "z") in pairs and pairs[("x", "z")] <= 3

@@ -28,7 +28,8 @@ def test_n50_known_values(spark):
     # null sizes are dropped; empty input gives null fields
     for xs, want in (([9, 5, 4, 2], (5, 2, 20)),
                      ([9, None, 5], (9, 1, 14)),
-                     ([], (None, None, None))):
+                     ([], (None, None, None)),
+                     ([0, 0], (0, 1, 0))):
         row = stats.n50(_sizes(spark, xs), "sz")
         assert (row["n50"], row["n50_cnt"], row["total"]) == want, xs
 
@@ -68,6 +69,10 @@ def test_size_distribution_n50_is_crossing_size(spark):
                                      cutoffs=(1,)).collect()
     assert (row.cnt, row.total, row.n50, row.n50_cnt) == (2, 14, 9, 1)
     assert row.mean == pytest.approx(7.0) and row.mean_cov == pytest.approx(2.0)
+    # all sizes 0, cutoff 0: the first item already reaches half of 0
+    (row,) = stats.size_distribution(_sizes(spark, [0, 0]), "sz",
+                                     cutoffs=(0,)).collect()
+    assert (row.cnt, row.total, row.n50, row.n50_cnt) == (2, 0, 0, 1)
     # empty input: empty distribution
     assert stats.size_distribution(_sizes(spark, []), "sz").collect() == []
 
@@ -106,7 +111,7 @@ def test_n50_matches_size_distribution_on_random_data(spark):
             r = d[c]
             assert (r.cnt, r.total, r.n50, r.n50_cnt) == (
                 len(kept), sum(kept), *_scan(kept, sum(kept))), (hi, c)
-        for genome in (tot // 3, tot * 3 // 2):
+        for genome in (0, tot // 3, tot * 3 // 2):
             g = stats.stats_report(df, "sz", cov_col=None, genome_size=genome,
                                    cutoffs=cutoffs)["genome_n50"].collect()[0]
             assert (g.n50, g.n50_cnt) == _scan(xs, genome), (hi, genome)
