@@ -202,8 +202,7 @@ def _serial_contract(nodes: DataFrame, edges: DataFrame,
 
     members = {r.src for r in link_rows} | {r.dst for r in link_rows}
     member_df = frame([(m,) for m in sorted(members)], "node_id string")
-    attrs, _ = smallgraph.from_rows(
-        nodes.join(member_df, "node_id").collect(), [])
+    attrs, _ = smallgraph.collect(nodes.join(member_df, "node_id"))
     merged_rows, mapping_rows, drop_rows = smallgraph.chain_walk(link_rows, attrs)
     if not merged_rows:
         return nodes, edges

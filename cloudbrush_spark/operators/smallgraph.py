@@ -1,18 +1,21 @@
-"""The post-transitive-reduction cleanup tail over driver-side dicts: chain
-contraction (G7/G8), tips (C1), bubbles (C2/C3), low coverage (C4) and
-the A-statistic self-loop/boundary cuts (C5).
+"""The assembly graph after the overlap join, over driver-side dicts: the
+chimeric-link cut (G1), transitive reduction (G3), chain contraction
+(G7/G8), tips (C1), bubbles (C2/C3), low coverage (C4) and the
+A-statistic self-loop/boundary cuts (C5).
 
-After transitive reduction an assembly graph is usually small (a 3 kb
-genome at 72x leaves ~3.4k nodes and ~5k edges), yet every distributed
-round of the cleanup loops costs a fixed handful of Spark jobs.  The
-reference hands such residual graphs to one reducer (QuickMark /
-QuickMerge, src/Brush/BrushAssembler.java:506-556); the assembler does
-the same with these functions once ``driver_bytes`` estimates that the
-graph fits in ``DRIVER_MAX_BYTES`` of driver memory.
+The overlap graph of a small genome fits in the driver (a 3 kb genome at
+72x gives ~3.4k nodes and ~69k edges, ~5k edges after transitive
+reduction), yet every distributed round of the string-graph and cleanup
+loops costs a fixed handful of Spark jobs.  The reference hands such
+residual graphs to one reducer (QuickMark / QuickMerge,
+src/Brush/BrushAssembler.java:506-556); the assembler does the same with
+these functions, from the string graph on, once ``driver_bytes``
+estimates that the graph fits in ``DRIVER_MAX_BYTES`` of driver memory.
 
-Every function mirrors its distributed twin in ``graph``, ``bubbles`` and
-``contraction`` with the same tie rules, and
-``tests/test_smallgraph_property.py`` pins each pair to agree on seeded
+Every function mirrors its distributed twin in ``consensus``, ``graph``,
+``bubbles`` and ``contraction`` with the same tie rules, and
+``tests/test_smallgraph_property.py`` and
+``tests/test_consensus_property.py`` pin each pair to agree on seeded
 random graphs.  One difference is deliberate: ``contract`` is always the
 full chain walk (the G7/G8 serial finish), never the seeded G5/G6
 pairwise rounds.  Contracting a chain gives the same sequence either
@@ -39,7 +42,10 @@ from cloudbrush_spark.functions.dna import flip_dir_py, flip_link_py, rc_py
 # its Arrow output tables, on chain graphs of 2k-300k nodes whose read
 # lists hold up to 3.6M ids of 9-24 characters and whose sequences are
 # up to 10 kb (4-core x86-64, CPython 3, local Spark).  At the budget
-# that is at most about 0.5 GB of driver RSS.
+# that is at most about 0.5 GB of driver RSS.  The string-graph stage
+# (collect, two chimeric-cut rounds, transitive reduction, contraction
+# and output tables) of a 24 kb genome's 72x overlap graph, 27,400 nodes
+# and 561,698 edges estimated at 490 MiB, grew the peak RSS by 349 MiB.
 DRIVER_MAX_BYTES = 512 << 20
 ROW_BYTES = 800     # per node or edge row
 CHAR_BYTES = 5      # per character of an id or sequence string
@@ -75,14 +81,16 @@ def driver_bytes(nodes, edges) -> tuple[int, int, int]:
             + CHAR_BYTES * chars + ID_BYTES * n_ids)
 
 
-def from_rows(node_rows, edge_rows) -> tuple[dict, set]:
-    """(nodes, edges) from collected frame rows; ``pair_ends`` is None
-    when the node frame has no such column."""
-    nodes = {r["node_id"]: (r["seq"], r["cov"],
-                            r["pair_ends"] if "pair_ends" in r else None)
-             for r in (row.asDict() for row in node_rows)}
-    edges = {(r.src, r.et, r.dst, r.ov) for r in edge_rows}
-    return nodes, edges
+def collect(nodes, edges=None) -> tuple[dict, set]:
+    """(nodes, edges) of a graph's frames, collected as Arrow tables (no
+    Row objects); ``pair_ends`` is None when the node frame has no such
+    column, and ``edges`` None gives an empty edge set."""
+    n = nodes.toArrow().to_pydict()
+    pairs = n.get("pair_ends", [None] * len(n["node_id"]))
+    e = edges.select("src", "et", "dst", "ov").toArrow().to_pydict() \
+        if edges is not None else {"src": [], "et": [], "dst": [], "ov": []}
+    return (dict(zip(n["node_id"], zip(n["seq"], n["cov"], pairs))),
+            set(zip(e["src"], e["et"], e["dst"], e["ov"])))
 
 
 def arrow_frame(spark, columns: dict, schema):
@@ -99,6 +107,94 @@ def arrow_frame(spark, columns: dict, schema):
     parts = max(1, min(spark.sparkContext.defaultParallelism,
                        -(-table.num_rows // 50_000)))
     return spark.createDataFrame(table, schema).coalesce(parts)
+
+
+def _consensus_sides(nodes: dict, edges, majority: float, pwm_n: float,
+                     max_ext: int) -> dict:
+    """``consensus._sides`` and ``consensus._consensus`` over dicts:
+    ``{(src, d): (n_edges, xs, cons)}``.  ``xs`` holds the side's
+    non-empty neighbour extensions ``(-len, ext, dst, et, ov, w, iw)`` in
+    the Spark operator's sort order; ``cons`` is the bounded consensus
+    (Node.Consensus, src/Brush/Node.java:1293-1377), or None when the
+    side has < 2 extensions or an N-ratio above ``pwm_n``.  ``edges`` may
+    repeat a row; a repeated row votes again, as in the Spark operator."""
+    sides = defaultdict(lambda: [0, []])
+    rcs = {}
+    for src, et, dst, ov in edges:
+        side = sides[(src, et[0])]
+        side[0] += 1
+        if dst not in nodes:
+            continue
+        seq, cov = nodes[dst][:2]
+        if et[1] == "r":
+            seq = rcs.get(dst) or rcs.setdefault(dst, rc_py(seq))
+        ext = seq[ov:ov + max_ext]
+        if ext:
+            side[1].append((-len(ext), ext, dst, et, ov, cov,
+                            max(math.floor(cov), 0)))
+    out = {}
+    for key, (n_edges, xs) in sides.items():
+        xs.sort()
+        cons = None
+        if len(xs) >= 2:
+            # bounded to the 2nd-longest extension, or the 3rd-longest
+            # when the two longest carry weight <= 2 (:1313-1320)
+            clen = -xs[2][0] if len(xs) > 2 and xs[0][5] + xs[1][5] <= 2.0 \
+                else -xs[1][0]
+            cols = []
+            for i in range(clen):
+                votes = {}
+                for x in xs:   # longest first: the reaching ones lead
+                    if -x[0] <= i:
+                        break
+                    votes[x[1][i]] = votes.get(x[1][i], 0) + x[6]
+                cw, ch = max((w, c) for c, w in votes.items())
+                # strict majority of the truncated weights (:1332-1361)
+                cols.append(ch if cw > majority * sum(votes.values()) else "N")
+            cons = "".join(cols)
+            if cons.count("N") / clen > pwm_n:   # (:1369-1371)
+                cons = None
+        out[key] = (n_edges, xs, cons)
+    return out
+
+
+def chimeric_cuts(nodes: dict, edges, majority: float, pwm_n: float,
+                  max_ext: int = 100) -> set:
+    """G1 (``consensus.cut_chimeric_links``): the edges whose extension
+    disagrees with their side's consensus at a non-N column."""
+    cuts = set()
+    for (src, _), (_, xs, cons) in _consensus_sides(
+            nodes, edges, majority, pwm_n, max_ext).items():
+        if cons is None:
+            continue
+        for _, ext, dst, et, ov, _, _ in xs:
+            if not cons.startswith(ext[:len(cons)]) and any(
+                    c != "N" and e != c for e, c in zip(ext, cons)):
+                cuts.add((src, et, dst, ov))
+    return cuts
+
+
+def transitive_reduction(nodes: dict, edges: set) -> set:
+    """G3 (``graph.transitive_reduction``): drop a->c when some a->b->c
+    passes through b (entering and leaving b on opposite sides) with
+    ov(a->c) = ov(a->b) + ov(b->c) - len(b) > 0, a != c and b a node.
+    Edges are keyed by (node, side), and only edges of the set are ever
+    collected as removals, so the working set stays within the edges."""
+    by_side = defaultdict(set)   # (src, d1) -> {(d2, dst, ov)}
+    for src, et, dst, ov in edges:
+        by_side[(src, et[0])].add((et[1], dst, ov))
+    removed = set()
+    for (a, d1), out in by_side.items():
+        for d, b, ov_ab in out:
+            nxt = by_side.get((b, d))
+            if nxt is None or b not in nodes:
+                continue
+            base = ov_ab - len(nodes[b][0])
+            for d3, c, ov_bc in nxt:
+                ov = base + ov_bc
+                if ov > 0 and c != a and (d3, c, ov) in out:
+                    removed.add((a, d1 + d3, c, ov))
+    return edges - removed
 
 
 def compressible(edges) -> list:

@@ -8,14 +8,17 @@ the reference's HDFS directory renames; a reliable checkpoint when
 (replacing Hadoop counters).  Every stage returns/records its counters in
 ``self.counters`` mirroring the reference's per-stage printouts.
 
-The cleanup tail after transitive reduction (``compress_chains`` and the
-tips, bubbles, low-coverage and edge-adjustment stages) starts with one
-aggregate that sizes the edge and node tables.  When the graph fits in
-``smallgraph.DRIVER_MAX_BYTES`` of driver memory the stage's whole loop
-runs over driver dicts and builds its output frames once, as the
-reference hands small residual graphs to one reducer
-(src/Brush/BrushAssembler.java:506-556); otherwise the distributed loop
-below runs.
+Every stage after the overlap join (``build_string_graph``,
+``compress_chains`` and the tips, bubbles, low-coverage and
+edge-adjustment stages) starts with one aggregate that sizes the edge and
+node tables.  When the graph fits in ``smallgraph.DRIVER_MAX_BYTES`` of
+driver memory the stage's whole loop runs over driver dicts and builds
+its output frames once, as the reference hands small residual graphs to
+one reducer (src/Brush/BrushAssembler.java:506-556); otherwise the
+distributed loop below runs.  A stage handed the frames the previous
+driver finish built takes that graph back without sizing it, so a graph
+that fits after the overlap join is sized and collected once and stays
+in the driver to the end of ``assemble``.
 """
 
 from __future__ import annotations
@@ -79,26 +82,40 @@ class Assembler:
             import time
             print(f"[assembler {time.strftime('%H:%M:%S')}] {msg}", flush=True)
 
-    def _driver_graph(self, stage: str, nodes: DataFrame, edges: DataFrame):
-        """``smallgraph`` (nodes, edges) when ``smallgraph.driver_bytes``
-        estimates the graph fits in ``smallgraph.DRIVER_MAX_BYTES``, else
-        None.  The estimate is one aggregate, so a graph that stays
-        distributed moves no rows to the driver.  Given the very frames
-        the previous driver finish returned, it returns that stage's
-        graph without a job."""
-        held, self._held = self._held, None
+    def _held_graph(self, nodes: DataFrame, edges: DataFrame):
+        """The graph of the last driver finish when ``nodes`` and ``edges``
+        are the very frames it built, else None."""
+        held = self._held
         if held is not None and held[0] is nodes and held[1] is edges:
+            return held[2]
+        return None
+
+    def _driver_graph(self, stage: str, nodes: DataFrame, edges: DataFrame):
+        """``smallgraph`` (nodes, edges) when the graph fits the driver
+        budget (``_sized_graph``), else None.  Given the very frames the
+        previous driver finish returned, it returns that stage's graph
+        without a job."""
+        g, self._held = self._held_graph(nodes, edges), None
+        if g is not None:
             self._log(f"{stage}: driver finish (graph held from the previous stage)")
             self.counters["driver_finish"] += 1
-            return held[2]
+            return g
+        return self._sized_graph(stage, nodes, edges)[1]
+
+    def _sized_graph(self, stage: str, nodes: DataFrame, edges: DataFrame):
+        """``(edge rows, graph)``: the graph is the collected ``smallgraph``
+        (nodes, edges) when ``smallgraph.driver_bytes`` estimates that it
+        fits in ``smallgraph.DRIVER_MAX_BYTES``, else None.  The estimate
+        is one aggregate, so a graph that stays distributed moves no rows
+        to the driver."""
         n_nodes, n_edges, est = smallgraph.driver_bytes(nodes, edges)
         size = f"{n_nodes} nodes, {n_edges} edges, ~{est / 2**20:.1f} MB in the driver"
         if est > smallgraph.DRIVER_MAX_BYTES:
             self._log(f"{stage}: distributed ({size})")
-            return None
+            return n_edges, None
         self._log(f"{stage}: driver finish ({size})")
         self.counters["driver_finish"] = self.counters.get("driver_finish", 0) + 1
-        return smallgraph.from_rows(nodes.collect(), edges.collect())
+        return n_edges, smallgraph.collect(nodes, edges)
 
     def _frames(self, g: tuple[dict, set], nodes: DataFrame, edges: DataFrame
                 ) -> tuple[DataFrame, DataFrame]:
@@ -119,15 +136,27 @@ class Assembler:
             self.spark, {c: node_cols[c] for c in nodes.columns}, nodes.schema)
         out_edges = smallgraph.arrow_frame(
             self.spark, {c: edge_cols[c] for c in edges.columns}, edges.schema)
-        # as ``smallgraph.from_rows`` would read the frames back
+        # as ``smallgraph.collect`` would read the frames back
         pairs = "pair_ends" in nodes.columns
         self._held = (out_nodes, out_edges,
                       ({n: g_nodes[n] if pairs else (*g_nodes[n][:2], None)
                         for n in ids}, g_edges))
         return out_nodes, out_edges
 
-    # -- driver forms of the cleanup loops: each mirrors the distributed
+    # -- driver forms of the stage loops: each mirrors the distributed
     # loop of the stage method below it, on ``smallgraph`` (nodes, edges)
+    def _string_graph_small(self, nodes: dict, edges: set) -> tuple[dict, set]:
+        p = self.params
+        for rnd in range(2):
+            cuts = smallgraph.chimeric_cuts(nodes, edges, p.majority, p.pwm_n)
+            self.counters[f"chimeric_cut_r{rnd}"] = len(cuts)
+            if not cuts:
+                break
+            edges = smallgraph.remove_edges(edges, cuts)
+        edges = smallgraph.transitive_reduction(nodes, edges)
+        self.counters["edges_after_tr"] = len(edges)
+        return self._compress_small(nodes, edges)
+
     def _compress_small(self, nodes: dict, edges: set) -> tuple[dict, set]:
         nodes, edges, n_links = smallgraph.contract(nodes, edges)
         if n_links:
@@ -229,28 +258,32 @@ class Assembler:
     # -- buildOverlap: J1 -> J2 -> J3 (BrushAssembler.java:313-333) --------
     def build_overlap(self, nodes: DataFrame, high_kmers: DataFrame) -> DataFrame:
         p = self.params
-        edges = cut(overlap.build_overlap_graph(
+        # the edge count is taken by build_string_graph's size probe
+        return cut(overlap.build_overlap_graph(
             nodes, p.k, high_kmers, per_key_cap=p.up_kmer))
-        self.counters["edges"] = edges.count()
-        self._log(f"build_overlap: {self.counters['edges']} edges")
-        return edges
 
     # -- buildStringGraph (BrushAssembler.java:337-396) --------------------
     def build_string_graph(self, nodes: DataFrame, edges: DataFrame
                            ) -> tuple[DataFrame, DataFrame]:
         p = self.params
-        for rnd in range(2):  # loop <= 2 rounds (BrushAssembler.java:347-367)
-            cuts = cut(consensus_ops.cut_chimeric_links(
-                nodes, edges, p.majority, p.pwm_n))
-            n_cut = cuts.count()
-            self.counters[f"chimeric_cut_r{rnd}"] = n_cut
-            if n_cut == 0:
-                break
-            edges = cut(graph.remove_edges(edges, cuts))
-        edges = cut(graph.transitive_reduction(nodes, edges))
-        self.counters["edges_after_tr"] = edges.count()
-        nodes, edges = self.compress_chains(nodes, edges)
-        self._log(f"string graph: {self.counters['edges_after_tr']} edges after TR")
+        self.counters["edges"], g = self._sized_graph(
+            "build_string_graph", nodes, edges)
+        if g is not None:
+            nodes, edges = self._frames(self._string_graph_small(*g), nodes, edges)
+        else:
+            for rnd in range(2):  # loop <= 2 rounds (BrushAssembler.java:347-367)
+                cuts = cut(consensus_ops.cut_chimeric_links(
+                    nodes, edges, p.majority, p.pwm_n))
+                n_cut = cuts.count()
+                self.counters[f"chimeric_cut_r{rnd}"] = n_cut
+                if n_cut == 0:
+                    break
+                edges = cut(graph.remove_edges(edges, cuts))
+            edges = cut(graph.transitive_reduction(nodes, edges))
+            self.counters["edges_after_tr"] = edges.count()
+            nodes, edges = self.compress_chains(nodes, edges)
+        self._log(f"string graph: {self.counters['edges']} overlap edges, "
+                  f"{self.counters['edges_after_tr']} after TR")
         return nodes, edges
 
     # -- compressChains (BrushAssembler.java:468-560) ----------------------
@@ -402,8 +435,12 @@ class Assembler:
             nodes, edges = self.pair_edge_adjustment(nodes, edges)
         nodes, edges = self._stage(
             "05_edgeadjust", lambda: self.edge_adjustment(nodes, edges))
-        self.counters["final_nodes"] = nodes.count()
-        self.counters["final_edges"] = edges.count()
+        g = self._held_graph(nodes, edges)
+        if g is not None:
+            self.counters["final_nodes"], self.counters["final_edges"] = map(len, g)
+        else:
+            self.counters["final_nodes"] = nodes.count()
+            self.counters["final_edges"] = edges.count()
         return nodes, edges
 
     def stats_report(self, nodes: DataFrame,

@@ -31,6 +31,7 @@ _SLOW_TESTS = {
     "test_cli_assemble_stats_convert",
     "test_assembly_digest_invariant_to_partitions_and_aqe",
     "test_assembly_digest_invariant_to_core_count",
+    "test_driver_finish_digest_matches_distributed_on_repeat_genomes",
 }
 
 

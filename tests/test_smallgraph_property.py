@@ -1,13 +1,17 @@
-"""Seeded agreement tests: each driver-side cleanup operator in
+"""Seeded agreement tests: each driver-side operator in
 ``operators.smallgraph`` against its distributed twin in ``graph``,
-``bubbles`` and ``contraction`` on random graphs.
+``bubbles`` and ``contraction`` on random graphs, and the driver
+string-graph stage against the distributed one.  (The chimeric-link cut
+is pinned in ``tests/test_consensus_property.py``.)
 
 The generators aim at the tie rules: tip sides that hold only tips or
 tips and other nodes, with equal ``len - ov`` and ids drawn in random
 order; bubble interiors a few edits either side of the edit-rate bound,
 with equal coverages and survivors that are popped themselves; sides
-whose overlap values repeat; and chains, cycles and branches whose nodes
-carry ``pair_ends`` read lists.
+whose overlap values repeat; transitive triples with equal implied
+overlaps, an implied overlap of 0, self-loops and a missing middle node;
+and chains, cycles and branches whose nodes carry ``pair_ends`` read
+lists.
 """
 
 import random
@@ -197,6 +201,52 @@ def test_edge_adjustment_cuts_match_distributed(spark, seed):
         {tuple(r) for r in graph.remove_edges(edf, cuts_df).collect()}
 
 
+def _tr_graph(rng):
+    """Random edges with repeated overlap values plus planted a->b->c
+    triples: several b implying one a->c, an implied overlap of exactly
+    0, a path through a self-loop, a path that returns to a (a == c),
+    and a b absent from ``nodes`` (``ghost…``)."""
+    new = _Ids(rng)
+    nodes = {new(): (_seq(rng, rng.choice((20, 25, 30))), 1.0, None)
+             for _ in range(24)}
+    ids = sorted(nodes)
+    links = [(rng.choice(ids), rng.choice("fr") + rng.choice("fr"), rng.choice(ids),
+              rng.choice((5, 10, 15, 20))) for _ in range(40)]
+    kept = []
+
+    def path(a, b, c, blen, ov_ac):
+        d1, d, d3 = (rng.choice("fr") for _ in range(3))
+        ov_ab = rng.randint(1, blen - 1)
+        links.extend([(a, d1 + d, b, ov_ab), (b, d + d3, c, blen + ov_ac - ov_ab),
+                      (a, d1 + d3, c, ov_ac)])
+        return (a, d1 + d3, c, ov_ac)
+
+    for _ in range(8):
+        a, c = rng.sample(ids, 2)
+        ov_ac = rng.choice((5, 10))
+        for b in rng.sample([i for i in ids if i not in (a, c)], rng.randint(1, 3)):
+            path(a, b, c, len(nodes[b][0]), ov_ac)
+    a, b, c = rng.sample(ids, 3)
+    kept.append(path(a, b, c, len(nodes[b][0]), 0))       # implied ov 0
+    a, c = rng.sample(ids, 2)
+    path(a, a, c, len(nodes[a][0]), rng.choice((5, 10)))  # through a self-loop
+    a, b = rng.sample(ids, 2)
+    kept.append(path(a, b, a, len(nodes[b][0]), 7))       # back to a
+    a, c = rng.sample(ids, 2)
+    kept.append(path(a, "ghost", c, 25, 10))              # b not a node
+    return nodes, _sym(links), kept
+
+
+@pytest.mark.parametrize("seed", [4, 13, 52])
+def test_transitive_reduction_matches_distributed(spark, seed):
+    nodes, edges, kept = _tr_graph(random.Random(seed))
+    ndf, edf = _frames(spark, nodes, edges)
+    want = {tuple(r) for r in graph.transitive_reduction(ndf, edf).collect()}
+    got = smallgraph.transitive_reduction(nodes, edges)
+    assert got == want
+    assert len(got) < len(edges) and set(kept) <= got
+
+
 def _chain_graph(rng):
     """Chains, cycles (ids ``y…``) and branches whose node sequences are
     slices of one walk string, so every link's overlap is consistent."""
@@ -262,6 +312,57 @@ def test_contract_matches_distributed(spark, seed):
     n_dis, _, _ = contraction.contract_chains(ndf, edf, seed=seed, serial_threshold=0)
     assert contigs((n, a[0], a[2]) for n, a in got_nodes.items()) == \
         contigs((r.node_id, r.seq, r.pair_ends) for r in n_dis.collect())
+
+
+def _tiled_graph(rng):
+    """Noisy, randomly oriented windows of one 240 bp template with an
+    edge for every pair of windows that overlap on it: consensus sides
+    with agreeing and disagreeing extensions, transitive triples and
+    chains."""
+    genome = _seq(rng, 240)
+    nodes, placed = {}, []
+    for i in range(60):
+        ln = rng.randint(18, 30)
+        off = rng.randint(0, len(genome) - ln)
+        s = list(genome[off:off + ln])
+        for _ in range(rng.choice((0, 0, 0, 1, 2))):
+            j = rng.randrange(ln)
+            s[j] = rng.choice([c for c in "ACGT" if c != s[j]])
+        o = rng.choice("fr")
+        nid = f"n{i:03d}"
+        s = "".join(s)
+        nodes[nid] = (s if o == "f" else rc_py(s), float(rng.choice((1, 2, 3, 5))), [nid])
+        placed.append((off, ln, nid, o))
+    links = [(a, oa + ob, b, off_a + ln_a - off_b)
+             for off_a, ln_a, a, oa in placed for off_b, ln_b, b, ob in placed
+             if off_a < off_b < off_a + ln_a < off_b + ln_b]
+    return nodes, _sym(links)
+
+
+@pytest.mark.parametrize("seed", [3, 10])
+def test_string_graph_stage_matches_distributed(spark, monkeypatch, seed):
+    """``Assembler.build_string_graph`` in the driver against the same
+    stage at bound 0 (distributed cuts, TR and contraction) on a graph
+    whose chimeric cut runs two rounds."""
+    from cloudbrush_spark.pipeline.assembler import Assembler
+    nodes, edges = _tiled_graph(random.Random(seed))
+    ndf = spark.createDataFrame(
+        [(n, s, c, p) for n, (s, c, p) in nodes.items()],
+        "node_id string, seq string, cov double, pair_ends array<string>")
+    edf = make_edges(spark, sorted(edges))
+    out = {}
+    for bound in (smallgraph.DRIVER_MAX_BYTES, 0):
+        monkeypatch.setattr(smallgraph, "DRIVER_MAX_BYTES", bound)
+        asm = Assembler(spark)
+        n_df, e_df = asm.build_string_graph(ndf, edf)
+        out[bound] = ({r.node_id: (r.seq, r.cov, r.pair_ends) for r in n_df.collect()},
+                      {tuple(r) for r in e_df.collect()}, asm.counters)
+    (d_nodes, d_edges, d_counters), (nodes0, edges0, counters0) = out.values()
+    assert d_counters.pop("driver_finish") == 1 and "driver_finish" not in counters0
+    assert d_counters == counters0
+    assert d_counters["chimeric_cut_r1"] > 0
+    assert (d_nodes, d_edges) == (nodes0, edges0)
+    assert len(d_nodes) < len(nodes)
 
 
 def test_driver_bytes_counts_read_lists(spark, monkeypatch):
