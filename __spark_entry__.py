@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import text as textfn
-from cloudbrush_spark.operators import dedup, similarity, stats, textops
+from cloudbrush_spark.operators import dedup, stats, textops
 
 
 # Tables whose consumers are MAP-HEAVY per input byte — the text corpus
@@ -469,84 +469,7 @@ def q_curation_filter(spark, sf_dir):
         F.lit("heavy").alias("op"), F.lit("heavy_tok").alias("k1"),
         F.col("tok").alias("k2"), F.col("cnt").alias("v1"),
         F.lit(0).cast("long").alias("v2"), F.col("fi_ok").alias("v3"))
-    # r10 'bm25': ranked full-text retrieval (operators/textsearch.bm25_topk)
-    # as a soundness/size contract row (BM25
-    # scores are floats whose last-ULP ln() differences across engines
-    # would flap a value hash): v1 = candidate docs (>=1 query term),
-    # recomputed INDEPENDENTLY by DuckDB from the raw text; v2 = invalid
-    # rows computed in Spark (result doc without any query term, duplicate
-    # ranks, score-order violations, wrong result size); v3 = result rows
-    # = least(k, candidates) by construction.  Exactness vs a pure-python
-    # BM25 reference is pinned in tests/test_textsearch.py.
-    from pyspark.sql import Window
-
-    from cloudbrush_spark.operators.textsearch import bm25_topk
-    bmq = ["merge", "spark", "window"]
-    bm_k = 25
-    bm_docs = _t(spark, sf_dir, "documents")
-    arr = F.array(*[F.lit(t) for t in bmq])
-    tok_expr = F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
-                        lambda t: t != F.lit(""))
-    bm = bm25_topk(bm_docs, bmq, k=bm_k)
-    cand = bm_docs.select(
-        F.arrays_overlap(tok_expr, arr).cast("long").alias("h")) \
-        .agg(F.sum("h").alias("cand"))
-    noterm = (bm.join(bm_docs.select("doc_id", tok_expr.alias("tk")),
-                      "doc_id")
-              .agg(F.coalesce(F.sum((~F.arrays_overlap("tk", arr))
-                                    .cast("long")), F.lit(0))
-                   .alias("badterm")))
-    w_bm = Window.orderBy("rank")
-    viol = (bm.withColumn("prev", F.lag("score").over(w_bm))
-            .agg(F.coalesce(
-                F.sum(F.when(F.col("score") > F.col("prev") + 1e-9, 1)
-                      .otherwise(0)), F.lit(0)).alias("ord_bad"),
-                (F.count(F.lit(1)) - F.count_distinct("rank"))
-                .alias("rank_dup"),
-                F.count(F.lit(1)).alias("nres")))
-    bm_row = cand.crossJoin(noterm).crossJoin(viol).select(
-        F.lit("bm25").alias("op"), F.lit("").alias("k1"),
-        F.lit("|".join(bmq)).alias("k2"),
-        F.col("cand").alias("v1"),
-        (F.col("badterm") + F.col("ord_bad") + F.col("rank_dup")
-         + (F.col("nres") != F.least(F.lit(bm_k).cast("long"),
-                                     F.col("cand"))).cast("long"))
-        .alias("v2"),
-        F.least(F.lit(bm_k).cast("long"), F.col("cand")).alias("v3"))
-    # r10 'lm' / 'lm_sum': corpus-trained bigram-LM scoring (operators/
-    # lm.py — the CCNet-style perplexity quality lever).  The EXACT
-    # integer surface is cross-engine checked: per-doc bigram counts
-    # ('lm' rows — one per document, proving the score pass preserved
-    # every doc through the explode/join/group) and the training
-    # aggregates (total bigrams / vocabulary size / docs scored in
-    # 'lm_sum').  The float log-prob itself is per-engine deterministic
-    # but ULP-sensitive cross-engine, so score parity and fluent-vs-
-    # gibberish separation are pinned in tests/test_lm.py instead.
-    from cloudbrush_spark.operators import lm as lmod
-    uni_lm, big_lm, V_lm = lmod.bigram_lm(bm_docs)
-    lm_sc = lmod.lm_score(bm_docs, uni_lm, big_lm, V_lm)
-    lm_doc = lm_sc.select(
-        F.lit("lm").alias("op"), F.col("doc_id").cast("string").alias("k1"),
-        F.lit("").alias("k2"), F.col("n_bigrams").alias("v1"),
-        F.lit(0).cast("long").alias("v2"), F.lit(0).cast("long").alias("v3"))
-    lm_sum = lm_sc.agg(
-        F.sum("n_bigrams").alias("tb"),
-        F.count(F.lit(1)).alias("nd")).select(
-        F.lit("lm_sum").alias("op"), F.lit("").alias("k1"),
-        F.lit("").alias("k2"), F.col("tb").alias("v1"),
-        F.lit(V_lm).cast("long").alias("v2"), F.col("nd").alias("v3"))
-    return (doc.unionByName(rep).unionByName(hv).unionByName(bm_row)
-            .unionByName(lm_doc).unionByName(lm_sum))
-
-
-def q_bm25_only(spark, sf_dir):
-    """Single-op BM25 form (bench + scale probes): top-25 documents for
-    the three-term query over the documents table — the plain retrieval
-    product (doc_id, rank, score); the driver-verified contract form is
-    the `curation_filter` 'bm25' leg."""
-    from cloudbrush_spark.operators.textsearch import bm25_topk
-    return bm25_topk(_t(spark, sf_dir, "documents"),
-                     ["merge", "spark", "window"], k=25)
+    return doc.unionByName(rep).unionByName(hv)
 
 
 def q_corpus_guard_base(spark, sf_dir):
@@ -1361,15 +1284,6 @@ def q_tpch_suite(spark, sf_dir):
             .unionByName(q21).unionByName(q8).unionByName(q9))
 
 
-def q_ann_topk(spark, sf_dir):
-    """Brute-force cosine top-5 neighbors for query vectors vec_id < 20
-    (ids + rank only; exact parity with the oracle)."""
-    emb = _emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 20)
-    out = similarity.cosine_topk_bruteforce(emb, q, k=5)
-    return out.select("query_id", "neighbor_id", "rank")
-
-
 def _emb(spark, sf_dir):
     return _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
@@ -1528,40 +1442,28 @@ def q_rawsql(spark, sf_dir):
 
 
 def q_relational_extras(spark, sf_dir):
-    """SURVEY §2.8 relational extensions in ONE hash-checked union — as-of
-    join, bounded range join, ROLLUP, grouped top-k, EXCEPT DISTINCT,
+    """SURVEY §2.8 relational extensions in ONE hash-checked union, all
+    plain DataFrame/SQL code: ROLLUP, grouped top-k, EXCEPT DISTINCT,
     (late r9) BAG-semantics EXCEPT ALL / INTERSECT ALL canonicalized as
     exact per-key multiplicities, and (late r9) a RANGE-frame window
     (trailing-30-day spend on integer epoch-days — value-based frames
     with peer-row tie semantics, the family ROWS frames can't express),
-    (r9) snapshot MERGE (insert/update/keep/delete + version bump),
     and (r8) INTERSECT DISTINCT plus the analytic window-function family
     (row_number / running sum / rank / lag, see q_window_suite; r9 adds
     the distribution family — ntile(4) with a total-order tiebreak and
     first_value, see q_window_dist), CUBE
     (both single-axis margins ROLLUP lacks), explicit GROUPING SETS
     (late r9 — margins WITHOUT the two-key cells, the form neither
-    ROLLUP nor CUBE expresses) and PIVOT (explicit value
+    ROLLUP nor CUBE expresses), PIVOT (explicit value
     list, melted back via stack; absent cells survive as REAL zero rows
     so the densification semantics sit on the hash — the DuckDB twin
-    rebuilds them with a cross join + coalesce) —
+    rebuilds them with a cross join + coalesce) and a raw-SQL leg —
     tagged by ``op`` and canonicalized to a shared
     (op, k1, k2, v1, v2) schema (keys as strings, money as exact integer
     cents, -1/0 sentinels instead of NULLs so both engines' null
-    handling stays out of the hash).  Merged from five separate entries
-    (all green in round 3) to fit the driver's 50-query window; the
-    underlying single-op forms remain above and in operators/joins.py."""
+    handling stays out of the hash).  The single-op forms remain above."""
     s = lambda c: F.col(c).cast("string")  # noqa: E731
     cents = lambda c: (F.col(c).cast("decimal(18,2)") * 100).cast("long")  # noqa: E731
-    asof = q_asof_join(spark, sf_dir).select(
-        F.lit("asof").alias("op"), s("user_id").alias("k1"),
-        s("tus").alias("k2"),
-        F.coalesce(F.col("last_purchase_us"), F.lit(-1)).alias("v1"),
-        F.lit(0).cast("long").alias("v2"))
-    rng = q_range_join(spark, sf_dir).select(
-        F.lit("range").alias("op"), s("user_id").alias("k1"),
-        s("tus").alias("k2"), F.col("matched_ts").alias("v1"),
-        F.lit(0).cast("long").alias("v2"))
     # margin rows are keyed by grouping_id, not a NULL-coalesce sentinel:
     # a genuine NULL group value (gid bit 0) can never collide with a
     # ROLLUP/CUBE margin (gid bit 1) even if both render "(null)"
@@ -1614,18 +1516,10 @@ def q_relational_extras(spark, sf_dir):
         F.lit("pivot").alias("op"), "k1", "k2",
         F.coalesce(F.col("cents"), F.lit(0)).cast("long").alias("v1"),
         F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("v2"))
-    mrg = q_merge_upsert(spark, sf_dir).select(
-        F.lit("merge").alias("op"), s("doc_id").alias("k1"),
-        F.col("action").alias("k2"), F.col("version").alias("v1"),
-        F.lit(0).cast("long").alias("v2"))
     ntl = q_window_dist(spark, sf_dir).select(
         F.lit("win_ntile").alias("op"), s("o_custkey").alias("k1"),
         s("o_orderkey").alias("k2"), F.col("tile").cast("long").alias("v1"),
         F.col("first_ok").cast("long").alias("v2"))
-    sal = q_salted_join(spark, sf_dir).select(
-        F.lit("salted").alias("op"), F.col("o_orderstatus").alias("k1"),
-        F.lit("").alias("k2"), F.col("qty_cents").alias("v1"),
-        F.col("cnt").alias("v2"))
     bag = q_bag_set_ops(spark, sf_dir).select(
         F.col("bop").alias("op"), s("o_custkey").alias("k1"),
         F.lit("").alias("k2"), F.col("mult").cast("long").alias("v1"),
@@ -1637,12 +1531,11 @@ def q_relational_extras(spark, sf_dir):
     # r10: the raw-SQL entry surface — already canonical (op,k1,k2,v1,v2)
     # straight from the textual query
     raw = q_rawsql(spark, sf_dir)
-    return asof.unionByName(rng).unionByName(rol) \
-        .unionByName(top).unionByName(exc).unionByName(uni) \
+    return rol.unionByName(top).unionByName(exc).unionByName(uni) \
         .unionByName(win).unionByName(lag) \
         .unionByName(cub).unionByName(gst).unionByName(piv) \
-        .unionByName(sal).unionByName(ntl).unionByName(mrg) \
-        .unionByName(bag).unionByName(wrange).unionByName(raw)
+        .unionByName(ntl).unionByName(bag).unionByName(wrange) \
+        .unionByName(raw)
 
 
 def q_g1_pwm_consensus(spark, sf_dir):
@@ -1722,37 +1615,6 @@ def q_a8_precorrect(spark, sf_dir):
     )
 
 
-def q_asof_join(spark, sf_dir):
-    """As-of join (engine extension, SURVEY §2.3 note: the reference has
-    no range/as-of joins): for each click event, the user's most recent
-    purchase at-or-before it.  Union + per-key ordered window — one
-    shuffle, no theta-join."""
-    from cloudbrush_spark.operators import joins
-    ev = _events(spark, sf_dir)
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "tus")
-    buys = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("tus").alias("bus"))
-    out = joins.asof_join(clicks, buys, on="user_id",
-                          left_ts="tus", right_ts="bus")
-    return out.select("user_id", "tus", F.col("asof_ts").alias("last_purchase_us"))
-
-
-def q_range_join(spark, sf_dir):
-    """Bounded range join: (click, purchase) pairs of the same user with
-    the purchase 0..1h after the click — bucketed equi-join + exact
-    filter, bounded fan-out."""
-    from cloudbrush_spark.operators import joins
-    ev = _events(spark, sf_dir)
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "tus")
-    buys = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("tus").alias("bus"))
-    hour_us = 3_600_000_000
-    out = joins.range_join(clicks, buys, on="user_id",
-                           left_ts="tus", right_ts="bus",
-                           lower=0, upper=hour_us)
-    return out.select("user_id", "tus", "matched_ts")
-
-
 def q_rollup(spark, sf_dir):
     """ROLLUP aggregate (free from Spark SQL; SURVEY §2.8 exposure)."""
     li = _t(spark, sf_dir, "lineitem")
@@ -1764,25 +1626,6 @@ def q_rollup(spark, sf_dir):
             F.count(F.lit(1)).alias("cnt"),
         )
     )
-
-
-def q_salted_join(spark, sf_dir):
-    """Skew-resistant salted equi-join (operators/joins.salted_equijoin):
-    lineitem x orders on the order key with salt=8 — the join shuffles on
-    (key, salt) so a hot key spreads across 8 reducers — then a status
-    aggregate whose exact sums prove no row was lost or duplicated by the
-    salt/replicate dance.  The DuckDB twin is the PLAIN join: salting
-    must be invisible in the result."""
-    from cloudbrush_spark.operators import joins as _joins
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("k"), "l_quantity")
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"), "o_orderstatus")
-    j = _joins.salted_equijoin(li, orders, "k", salt=8)
-    return j.groupBy("o_orderstatus").agg(
-        (F.sum(F.col("l_quantity").cast("decimal(18,2)")) * 100)
-        .cast("long").alias("qty_cents"),
-        F.count(F.lit(1)).alias("cnt"))
 
 
 def q_cube_qty(spark, sf_dir):
@@ -1948,25 +1791,6 @@ def q_window_suite(spark, sf_dir):
             F.lit(-1)).cast("long").alias("gap_days"))
 
 
-def q_merge_upsert(spark, sf_dir):
-    """Snapshot MERGE (operators/joins.merge_upsert, SURVEY §2.8): base
-    snapshot = documents with doc_id % 3 != 0, incoming crawl =
-    doc_id % 2 == 0 with every fifth document's text changed — so all
-    four actions (insert / update / keep / delete) occur, and the
-    version bump rides the driver hash.  The engine compares md5
-    digests computed BEFORE the full-outer join (the shuffle carries
-    hashes, not text); the oracle re-derives the actions from the
-    residues alone, so a digest-comparison bug cannot hide."""
-    from cloudbrush_spark.operators import joins as _joins
-    docs = _t(spark, sf_dir, "documents")
-    base = docs.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
-    updates = docs.filter(F.col("doc_id") % 2 == 0).select(
-        "doc_id",
-        F.when(F.col("doc_id") % 5 == 0, F.concat("text", F.lit(" v2")))
-         .otherwise(F.col("text")).alias("text"))
-    return _joins.merge_upsert(base, updates, delete_missing=True)
-
-
 def q_window_dist(spark, sf_dir):
     """Distribution-family window functions over the same order-history
     slice as q_window_suite: ntile(4) by order value (TOTAL order — the
@@ -1987,43 +1811,6 @@ def q_window_dist(spark, sf_dir):
         "o_custkey", "o_orderkey",
         F.ntile(4).over(byval).alias("tile"),
         F.first_value(F.col("o_orderkey")).over(seq).alias("first_ok"))
-
-
-def _blob_fixture(spark, sf_dir):
-    """Deterministic multimodal fixture derived from documents: text bytes
-    as the opaque payload, with magic-byte prefixes spliced in by doc_id
-    residue so the format sniffer has real work (PNG / JPEG / raw)."""
-    docs = _t(spark, sf_dir, "documents")
-    hexed = F.hex(F.encode(F.col("text"), "utf-8"))
-    prefixed = (
-        F.when(F.col("doc_id") % 3 == 0, F.concat(F.lit("89504E47"), hexed))
-        .when(F.col("doc_id") % 3 == 1, F.concat(F.lit("FFD8FF"), hexed))
-        .otherwise(hexed)
-    )
-    return docs.select("doc_id", F.unhex(prefixed).alias("payload"))
-
-
-def q_mm_metadata(spark, sf_dir):
-    """Multimodal: typed metadata over an opaque binary column (byte length
-    + magic-byte format sniff), pure JVM expressions."""
-    from cloudbrush_spark.operators import multimodal
-    blobs = _blob_fixture(spark, sf_dir)
-    meta = multimodal.binary_metadata(blobs, content_col="payload", id_col="doc_id")
-    return meta.select("doc_id", "byte_len", "format")
-
-
-def q_mm_binary_dedup(spark, sf_dir):
-    """Multimodal: exact binary-payload dedup via content digest — the
-    P1 dedup shape over opaque bytes.  Payload = (lang, source) pair bytes,
-    so real duplicate groups exist."""
-    from cloudbrush_spark.operators import multimodal
-    docs = _t(spark, sf_dir, "documents")
-    blobs = docs.select(
-        "doc_id",
-        F.encode(F.concat_ws(":", "lang", "source"), "utf-8").alias("payload"),
-    )
-    return multimodal.exact_binary_dedup(blobs, content_col="payload",
-                                         id_col="doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -2468,42 +2255,6 @@ _ORACLES: dict[str, str] = {
                (mass / 10000.0 - n * 0.6931471805599453) > 10.0 AS unique_class
         FROM per_cust
     """,
-    "ann_topk": """
-        WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        q AS (SELECT vec_id AS query_id, v AS qv FROM emb WHERE vec_id < 20),
-        scored AS (
-            SELECT q.query_id, c.vec_id AS neighbor_id,
-                   list_dot_product(qv, c.v) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v))) AS cosine
-            FROM q, emb c WHERE c.vec_id <> q.query_id
-        )
-        SELECT query_id, neighbor_id, rank FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM scored)
-        WHERE rank <= 5
-    """,
-    "mm_metadata": """
-        WITH blobs AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % 3 = 0 THEN unhex('89504E47' || hex(encode(text)))
-                        WHEN doc_id % 3 = 1 THEN unhex('FFD8FF' || hex(encode(text)))
-                        ELSE encode(text) END AS payload
-            FROM documents
-        )
-        SELECT doc_id,
-               CAST(octet_length(payload) AS BIGINT) AS byte_len,
-               CASE WHEN substring(hex(payload), 1, 8) = '89504E47' THEN 'png'
-                    WHEN substring(hex(payload), 1, 6) = 'FFD8FF' THEN 'jpeg'
-                    ELSE 'unknown' END AS format
-        FROM blobs
-    """,
-    "mm_binary_dedup": """
-        SELECT md5(lang || ':' || source) AS content_md5,
-               min(doc_id) AS survivor_id,
-               count(*) AS n_copies,
-               CAST(sum(octet_length(encode(lang || ':' || source))) AS BIGINT) AS total_bytes
-        FROM documents GROUP BY 1
-    """,
     "minhash_lsh_dedup": None,   # filled below (shared shingle CTEs)
     "g1_pwm_consensus": """
         WITH chars AS (
@@ -2884,30 +2635,6 @@ _ORACLES["curation_filter"] = f"""
          (SELECT count(*) AS n
           FROM (SELECT unnest({_TOKS}) AS tok FROM documents))
     WHERE cnt * 100 > 2 * n
-    UNION ALL
-    SELECT 'bm25' AS op, '' AS k1, 'merge|spark|window' AS k2,
-           CAST(c.n AS BIGINT) AS v1, CAST(0 AS BIGINT) AS v2,
-           CAST(least(25, c.n) AS BIGINT) AS v3
-    FROM (SELECT count(*) AS n FROM documents
-          WHERE list_has_any({_TOKS},
-                             ['merge', 'spark', 'window'])) c
-    UNION ALL
-    SELECT 'lm' AS op, CAST(doc_id AS VARCHAR) AS k1, '' AS k2,
-           CAST(greatest(nt - 1, 0) AS BIGINT) AS v1,
-           CAST(0 AS BIGINT) AS v2, CAST(0 AS BIGINT) AS v3
-    FROM (SELECT doc_id,
-                 CASE WHEN {_NORM} = '' THEN 0 ELSE len({_TOKS}) END AS nt
-          FROM documents)
-    UNION ALL
-    SELECT 'lm_sum' AS op, '' AS k1, '' AS k2,
-           CAST(sum(greatest(nt - 1, 0)) AS BIGINT) AS v1,
-           CAST(vc AS BIGINT) AS v2, CAST(count(*) AS BIGINT) AS v3
-    FROM (SELECT CASE WHEN {_NORM} = '' THEN 0 ELSE len({_TOKS}) END AS nt
-          FROM documents),
-         (SELECT count(DISTINCT w) AS vc
-          FROM (SELECT unnest({_TOKS}) AS w FROM documents
-                WHERE {_NORM} <> ''))
-    GROUP BY vc
 """
 
 _ORACLES["j1_candidates"] = f"""
@@ -3192,27 +2919,12 @@ _ORACLES["a7_tag_trusted"] = f"""
 """
 
 _ORACLES["relational_extras"] = """
-    WITH ev AS (SELECT user_id, epoch_us(ts) AS tus, event_type FROM events),
-         c AS (SELECT user_id, tus FROM ev WHERE event_type = 'click'),
-         b AS (SELECT user_id, tus AS bus FROM ev WHERE event_type = 'purchase')
-    SELECT 'asof' AS op, CAST(user_id AS VARCHAR) AS k1,
-           CAST(tus AS VARCHAR) AS k2,
-           CAST(coalesce(bus, -1) AS BIGINT) AS v1, CAST(0 AS BIGINT) AS v2
-    FROM (SELECT c.user_id, c.tus, b.bus
-          FROM c ASOF LEFT JOIN b ON c.user_id = b.user_id AND b.bus <= c.tus)
-    UNION ALL
-    SELECT 'range', CAST(user_id AS VARCHAR), CAST(tus AS VARCHAR),
-           CAST(bus AS BIGINT), CAST(0 AS BIGINT)
-    FROM (SELECT DISTINCT c.user_id, c.tus, b.bus
-          FROM c JOIN b ON c.user_id = b.user_id
-          WHERE b.bus - c.tus BETWEEN 0 AND 3600000000)
-    UNION ALL
-    SELECT 'rollup',
+    SELECT 'rollup' AS op,
            CAST(GROUPING(l_returnflag, l_linestatus) AS VARCHAR) || ':' ||
-               coalesce(l_returnflag, '(null)'),
-           coalesce(l_linestatus, '(null)'),
-           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) * 100 AS BIGINT),
-           count(*)
+               coalesce(l_returnflag, '(null)') AS k1,
+           coalesce(l_linestatus, '(null)') AS k2,
+           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) * 100 AS BIGINT) AS v1,
+           count(*) AS v2
     FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
     UNION ALL
     SELECT 'topk', p_brand, CAST(p_partkey AS VARCHAR),
@@ -3262,25 +2974,6 @@ _ORACLES["relational_extras"] = """
                      AS val_rank
           FROM orders WHERE o_custkey % 7 = 0)
     UNION ALL
-    SELECT 'merge', CAST(doc_id AS VARCHAR), action,
-           CAST(version AS BIGINT), CAST(0 AS BIGINT)
-    FROM (
-        -- re-derived from the residues, independent of the engine's
-        -- digest comparison
-        WITH b AS (SELECT doc_id FROM documents WHERE doc_id % 3 <> 0),
-             u AS (SELECT doc_id,
-                          CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END AS m
-                   FROM documents WHERE doc_id % 2 = 0)
-        SELECT coalesce(b.doc_id, u.doc_id) AS doc_id,
-               CASE WHEN b.doc_id IS NULL THEN 'insert'
-                    WHEN u.doc_id IS NULL THEN 'delete'
-                    WHEN u.m = 1 THEN 'update'
-                    ELSE 'keep' END AS action,
-               CASE WHEN b.doc_id IS NULL THEN 1
-                    WHEN u.doc_id IS NOT NULL AND u.m = 1 THEN 2
-                    ELSE 1 END AS version
-        FROM b FULL OUTER JOIN u ON b.doc_id = u.doc_id)
-    UNION ALL
     SELECT 'win_ntile', CAST(o_custkey AS VARCHAR), CAST(o_orderkey AS VARCHAR),
            CAST(tile AS BIGINT), CAST(first_ok AS BIGINT)
     FROM (SELECT o_custkey, o_orderkey,
@@ -3316,12 +3009,6 @@ _ORACLES["relational_extras"] = """
                            sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS cents
                     FROM orders GROUP BY 1, 2) g
            ON g.o_orderpriority = k1 AND g.o_orderstatus = k2
-    UNION ALL
-    SELECT 'salted', o_orderstatus, '',
-           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) * 100 AS BIGINT),
-           count(*)
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    GROUP BY 2
     UNION ALL
     SELECT 'xall', CAST(o_custkey AS VARCHAR), '', count(*), CAST(0 AS BIGINT)
     FROM (SELECT o_custkey FROM orders
@@ -3893,7 +3580,7 @@ _ORACLES["sink_formats"] = f"""
 #   - ann_topk_lsh/ann_topk_ivf/emb_near_dup_lsh/emb_near_dup -> ann_contracts
 #   - ann_contracts        -> gone with the approximate vector-search
 #     operators it checked (LSH/IVF/int8 top-k, embedding near-dup pairs,
-#     clusters and cross-corpus dedup); ann_topk still checks the exact one
+#     clusters and cross-corpus dedup)
 #   - asof/range/rollup/topk_per_group/set_ops -> relational_extras
 #   - winnow_fp/hash_split -> text_fp_split tagged union (r7; both
 #     still verified)
@@ -3901,6 +3588,10 @@ _ORACLES["sink_formats"] = f"""
 #     gone with the SimHash/Hamming, n-gram Jaccard and blockhash near-dup
 #     operators they checked; minhash_lsh_dedup and dedup_clusters check
 #     the near-dup path curation runs
+#   - ann_topk/mm_metadata/mm_binary_dedup, the relational_extras
+#     asof/range/merge/salted legs and the curation_filter bm25/lm/lm_sum
+#     legs -> gone with the brute-force cosine top-k, binary-payload,
+#     join-extension, BM25 and bigram-LM operators they checked
 #   - s1_fastq_roundtrip/s2_sfa_roundtrip -> source_roundtrips tagged
 #     union (r7; slot freed for corpus_guard — both legs still verified)
 #   - k1_fasta_format/k2_explode_emit -> sink_formats tagged union (r7;
@@ -3912,7 +3603,7 @@ _ORACLES["sink_formats"] = f"""
 # name goes with its operator too.
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- red in r8 (oracle HUGEINT leak, fixed r9) — never-green-first ---
-    "relational_extras": q_relational_extras,    # asof/range/rollup/topk/except
+    "relational_extras": q_relational_extras,    # rollup/cube/topk/set ops/windows
     # --- new in round 7 ---
     "corpus_guard": q_corpus_guard,              # decontam / pii / repetition
     "source_roundtrips": q_source_roundtrips,    # s1 fastq + s2 sfa union
@@ -3928,8 +3619,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "j4_mate_adjust": q_j4_mate_adjust,
     "a7_tag_trusted": q_a7_tag_trusted,
     "overlap_graph": q_overlap_graph,
-    "mm_metadata": q_mm_metadata,
-    "mm_binary_dedup": q_mm_binary_dedup,
     # --- SURVEY §2 core (green in r4) ---
     "p1_dedup_exact": q_p1_dedup_exact,
     "p2_filter_contained": q_p2_filter_contained,
@@ -3954,9 +3643,8 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "c1_tips": q_c1_tips,
     "c2_find_bubbles": q_c2_find_bubbles,
     "c5_astat": q_c5_astat,
-    # --- LLM-pipeline dedup/similarity/curation surface ---
+    # --- LLM-pipeline dedup/curation surface ---
     "minhash_lsh_dedup": q_minhash_lsh_dedup,
-    "ann_topk": q_ann_topk,
     "curation_filter": q_curation_filter,
 }
 

@@ -34,11 +34,8 @@ HEADLINE = [
     "a5_token_freq_per_doc",
     "lang_id",
     "quality",
-    "ann_topk",
     "minhash_lsh_dedup",
     "g3_transitive_reduction",
-    "asof_join",
-    "mm_binary_dedup",
     "overlap_graph",
     # added round 6 (appended so earlier entries keep their warm-up
     # context and stay comparable across rounds)
@@ -56,9 +53,6 @@ HEADLINE = [
     # added late round 9: the two join-heaviest new tpch_suite legs
     "tpch_q8",
     "tpch_q9",
-    # added round 10 (appended; single-op form — the driver row is the
-    # curation_filter 'bm25' contract leg)
-    "bm25",
 ]
 
 # Registry rows that grew into tagged unions keep their original
@@ -75,7 +69,6 @@ OVERRIDES = {
     "corpus_guard": entrymod.q_corpus_guard_base,
     "repeated_spans": entrymod.q_repeated_spans_only,
     "span_scrub": entrymod.q_span_scrub_only,
-    "bm25": entrymod.q_bm25_only,
 }
 
 

@@ -13,9 +13,10 @@ as:
                     analysis).  No UDF where a built-in expression
                     exists.
 - ``operators/``  — the generic relational/graph operator library
-                    (duckdb-oracle-checkable) + LLM-data-pipeline operators
-                    (dedup families, similarity search, binary-payload
-                    dedup).
+                    (duckdb-oracle-checkable) + the LLM-data-pipeline
+                    operators ``curate`` and the CLI run (MinHash/LSH
+                    dedup, sampling, text scoring, corpus guard and
+                    report).
 - ``sources/``    — FASTA/FASTQ/SFA scans and sinks.
 - ``pipeline/``   — the assembly composites (SURVEY §2.7 control flow).
 - ``plans/``      — the stage-boundary checkpoint for the iterative parts.

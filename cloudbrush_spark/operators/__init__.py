@@ -1,6 +1,6 @@
-"""Operator library: reference surface (SURVEY §2) + LLM-pipeline
-(dedup, similarity, sampling, scoring) + binary-payload dedup + join
-extensions."""
+"""Operator library: the reference surface (SURVEY §2) plus the
+LLM-pipeline operators the ``curate`` verb and the CLI run (dedup,
+sampling, text scoring, corpus guard and report)."""
 
 from cloudbrush_spark.operators import (  # noqa: F401
     bubbles,
@@ -8,12 +8,9 @@ from cloudbrush_spark.operators import (  # noqa: F401
     contraction,
     dedup,
     graph,
-    joins,
     kmers,
     mates,
-    multimodal,
     overlap,
-    similarity,
     stats,
     textops,
 )

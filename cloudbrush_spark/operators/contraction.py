@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import dna
 from cloudbrush_spark.operators import smallgraph
-from cloudbrush_spark.operators.graph import D1, D2, compressible
+from cloudbrush_spark.operators.graph import D1, D2, compressible, remove_edges
 from cloudbrush_spark.plans import cut
 
 
@@ -147,27 +147,18 @@ def merge_nodes(nodes: DataFrame, merges: DataFrame) -> DataFrame:
         .unionByName(merged)
 
 
-def _rewrite_edges(edges: DataFrame, merges: DataFrame) -> DataFrame:
-    """Drop consumed link edges; re-point third-party edges of merged males."""
-    link = merges.select("a", F.concat("d1", "d2").alias("et"), F.col("b").alias("dst_b"), "ov")
-    consumed = link.select(F.col("a").alias("src"), "et", F.col("dst_b").alias("dst"), "ov")
-    consumed_rev = link.select(
-        F.col("dst_b").alias("src"), dna.flip_link("et").alias("et"),
-        F.col("a").alias("dst"), "ov",
-    )
-    kept = edges.join(consumed.unionByName(consumed_rev).distinct(),
-                      ["src", "et", "dst", "ov"], "left_anti")
-    mapping = merges.select(F.col("a").alias("m_id"), F.col("b").alias("m_to"), "o_a")
-    # rewrite src side
+def _repoint(edges: DataFrame, mapping: DataFrame) -> DataFrame:
+    """Re-point the edge ends of merged nodes through ``mapping`` (m_id,
+    m_to, o_a): an end at m_id moves to m_to, keeping its orientation
+    letter when it equals o_a and flipping it otherwise."""
     s = (
-        kept.join(mapping.withColumnRenamed("m_id", "src"), "src", "left")
+        edges.join(mapping.withColumnRenamed("m_id", "src"), "src", "left")
         .withColumn("n_src", F.coalesce(F.col("m_to"), F.col("src")))
         .withColumn("n_d1", F.when(F.col("m_to").isNull(), D1())
                     .when(D1() == F.col("o_a"), F.lit("f")).otherwise(F.lit("r")))
         .select(F.col("n_src").alias("src"),
                 F.concat("n_d1", D2()).alias("et"), "dst", "ov")
     )
-    # rewrite dst side
     d = (
         s.join(mapping.withColumnRenamed("m_id", "dst"), "dst", "left")
         .withColumn("n_dst", F.coalesce(F.col("m_to"), F.col("dst")))
@@ -177,6 +168,15 @@ def _rewrite_edges(edges: DataFrame, merges: DataFrame) -> DataFrame:
                 F.col("n_dst").alias("dst"), "ov")
     )
     return d.distinct()
+
+
+def _rewrite_edges(edges: DataFrame, merges: DataFrame) -> DataFrame:
+    """Drop consumed link edges; re-point third-party edges of merged males."""
+    consumed = merges.select(F.col("a").alias("src"),
+                             F.concat("d1", "d2").alias("et"),
+                             F.col("b").alias("dst"), "ov")
+    mapping = merges.select(F.col("a").alias("m_id"), F.col("b").alias("m_to"), "o_a")
+    return _repoint(remove_edges(edges, consumed), mapping)
 
 
 def _serial_contract(nodes: DataFrame, edges: DataFrame,
@@ -211,30 +211,10 @@ def _serial_contract(nodes: DataFrame, edges: DataFrame,
         ", pair_ends array<string>" if "pair_ends" in nodes.columns else ""))
     mapping = frame(mapping_rows, "m_id string, m_to string, o_a string")
     drops = frame(drop_rows, "src string, et string, dst string, ov int")
-    drops_rev = drops.select(F.col("dst").alias("src"), dna.flip_link("et").alias("et"),
-                             F.col("src").alias("dst"), "ov")
     consumed = mapping.select(F.col("m_id").alias("node_id"))
     out_nodes = (nodes.join(consumed, "node_id", "left_anti")
                  .unionByName(new_nodes_df))
-    kept = edges.join(drops.unionByName(drops_rev).distinct(),
-                      ["src", "et", "dst", "ov"], "left_anti")
-    s = (
-        kept.join(F.broadcast(mapping.withColumnRenamed("m_id", "src")), "src", "left")
-        .withColumn("n_src", F.coalesce(F.col("m_to"), F.col("src")))
-        .withColumn("n_d1", F.when(F.col("m_to").isNull(), D1())
-                    .when(D1() == F.col("o_a"), F.lit("f")).otherwise(F.lit("r")))
-        .select(F.col("n_src").alias("src"),
-                F.concat("n_d1", D2()).alias("et"), "dst", "ov")
-    )
-    d = (
-        s.join(F.broadcast(mapping.withColumnRenamed("m_id", "dst")), "dst", "left")
-        .withColumn("n_dst", F.coalesce(F.col("m_to"), F.col("dst")))
-        .withColumn("n_d2", F.when(F.col("m_to").isNull(), D2())
-                    .when(D2() == F.col("o_a"), F.lit("f")).otherwise(F.lit("r")))
-        .select("src", F.concat(D1(), "n_d2").alias("et"),
-                F.col("n_dst").alias("dst"), "ov")
-    )
-    return out_nodes, d.distinct()
+    return out_nodes, _repoint(remove_edges(edges, drops), F.broadcast(mapping))
 
 
 def contract_chains(nodes: DataFrame, edges: DataFrame, seed: int = 42,

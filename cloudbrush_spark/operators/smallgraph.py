@@ -344,11 +344,15 @@ def remove_nodes(nodes: dict, edges: set, doomed) -> tuple[dict, set]:
             {e for e in edges if e[0] not in doomed and e[2] not in doomed})
 
 
+def with_reverses(removals) -> set:
+    """The removal edges and their reverses: what G2 drops."""
+    return set(removals) | {(d, flip_link_py(et), s, ov)
+                            for s, et, d, ov in removals}
+
+
 def remove_edges(edges: set, removals) -> set:
     """G2: drop the removal edges and their reverses."""
-    gone = set(removals) | {(d, flip_link_py(et), s, ov)
-                            for s, et, d, ov in removals}
-    return edges - gone
+    return edges - with_reverses(removals)
 
 
 def find_tips(nodes: dict, edges: set, tiplength: int) -> tuple[set, int]:

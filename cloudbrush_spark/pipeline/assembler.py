@@ -147,12 +147,19 @@ class Assembler:
     # loop of the stage method below it, on ``smallgraph`` (nodes, edges)
     def _string_graph_small(self, nodes: dict, edges: set) -> tuple[dict, set]:
         p = self.params
+        # a side's consensus reads only that side's edges, so round 1
+        # re-votes only the sides that lost an edge (or its reverse) in
+        # round 0; every other side already voted on the same edges
+        voters = edges
         for rnd in range(2):
-            cuts = smallgraph.chimeric_cuts(nodes, edges, p.majority, p.pwm_n)
+            cuts = smallgraph.chimeric_cuts(nodes, voters, p.majority, p.pwm_n)
             self.counters[f"chimeric_cut_r{rnd}"] = len(cuts)
             if not cuts:
                 break
-            edges = smallgraph.remove_edges(edges, cuts)
+            gone = smallgraph.with_reverses(cuts)
+            edges = edges - gone
+            touched = {(s, et[0]) for s, et, _, _ in gone}
+            voters = [e for e in edges if (e[0], e[1][0]) in touched]
         edges = smallgraph.transitive_reduction(nodes, edges)
         self.counters["edges_after_tr"] = len(edges)
         return self._compress_small(nodes, edges)

@@ -25,9 +25,7 @@ _SLOW_TESTS = {
     "test_overlap_graph_matches_reference_contract",
     "test_repetition_matches_python_reference",
     "test_corpus_report_sections",
-    "test_salted_join_property_random_frames",
     "test_corpus_report_deterministic_under_repartition",
-    "test_merge_upsert_digest_property",
     "test_cli_assemble_stats_convert",
     "test_assembly_digest_invariant_to_partitions_and_aqe",
     "test_assembly_digest_invariant_to_core_count",

@@ -1,4 +1,5 @@
-"""PIVOT densification and CUBE grouping-set semantics.
+"""PIVOT densification and CUBE grouping-set semantics, plus the bag
+set operations and the RANGE-frame window of `relational_extras`.
 
 The `relational_extras` driver legs hash-pin both against DuckDB at
 three SFs, but the testdata happens to populate EVERY
@@ -125,3 +126,28 @@ def test_grouping_sets_gid_bit_order_matches_duckdb(spark):
         "t(flag, status, qty) "
         "GROUP BY GROUPING SETS ((flag), (status), ())").fetchall()
     assert {(k1, k2): q for k1, k2, q in duck} == got
+
+
+def test_bag_set_ops_multiplicity_and_range_frame_peers(spark):
+    """EXCEPT ALL keeps max(l-r, 0) copies per key (bag semantics, not
+    the DISTINCT legs' set semantics); a RANGE frame gives PEER rows
+    (same order day) the identical trailing total, where a ROWS frame
+    would order-dependently split them."""
+    from pyspark.sql import Window
+    import pyspark.sql.functions as F
+    left = spark.createDataFrame([(1,)] * 5 + [(2,)] * 2, "k long")
+    right = spark.createDataFrame([(1,)] * 2 + [(2,)] * 3, "k long")
+    xall = {r.k: r.n for r in left.exceptAll(right).groupBy("k")
+            .agg(F.count(F.lit(1)).alias("n")).collect()}
+    iall = {r.k: r.n for r in left.intersectAll(right).groupBy("k")
+            .agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert xall == {1: 3} and iall == {1: 2, 2: 2}
+
+    rows = [(1, 10, 0, 100), (1, 11, 20, 50), (1, 12, 20, 70),
+            (1, 13, 60, 10)]
+    df = spark.createDataFrame(rows, "c long, o long, day long, cents long")
+    w = Window.partitionBy("c").orderBy("day").rangeBetween(-30, 0)
+    got = {r.o: r.t for r in
+           df.select("o", F.sum("cents").over(w).alias("t")).collect()}
+    # the two day-20 peers both see 100+50+70; day-60 sees only itself
+    assert got == {10: 100, 11: 220, 12: 220, 13: 10}

@@ -37,15 +37,26 @@ def test_small_dim_join_broadcasts(spark, part):
     assert plan_checks.has_broadcast_join(q)
 
 
-def test_asof_join_avoids_nested_loop(spark):
-    """The as-of join must plan as union + window (one hash shuffle), never
-    a range-condition join (which Spark plans as broadcast nested loop)."""
-    from cloudbrush_spark.operators import joins
-    left = spark.createDataFrame([("u", 100)], "k string, lts long")
-    right = spark.createDataFrame([("u", 90)], "k string, rts long")
-    plan = plan_checks.explain_str(joins.asof_join(left, right, "k", "lts", "rts"))
-    assert "NestedLoop" not in plan and "CartesianProduct" not in plan
-    assert "Window" in plan
+def test_serial_contract_broadcasts_the_mapping(spark):
+    """The G7/G8 serial finish re-points edges through a driver-built
+    mapping of at most a few thousand rows: both mapping joins broadcast
+    by hint, not by size estimate."""
+    from cloudbrush_spark.operators import contraction, graph
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        nodes = spark.createDataFrame(
+            [("a", "ACGTAC", 1.0), ("b", "TACGGA", 2.0), ("x", "TTTTT", 1.0)],
+            "node_id string, seq string, cov double")
+        edges = spark.createDataFrame(
+            [("a", "ff", "b", 3), ("b", "rr", "a", 3)],
+            "src string, et string, dst string, ov int")
+        links = graph.compressible(nodes, edges).collect()
+        _, out = contraction._serial_contract(nodes, edges, links)
+        plan = plan_checks.explain_str(out)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert plan.count("BroadcastHashJoin LeftOuter") == 2, plan
 
 
 def test_overlap_posting_join_never_broadcasts_postings(spark):
