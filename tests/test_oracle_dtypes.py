@@ -89,7 +89,7 @@ def test_no_hugeint_and_integral_parity(spark):
                 )
         checked += 1
     assert not problems, "\n".join(problems)
-    assert checked >= 40, f"sweep only bound {checked} oracles — registry shrank?"
+    assert checked >= 38, f"sweep only bound {checked} oracles — registry shrank?"
 
 
 def test_compare_is_dtype_strict(spark):
