@@ -122,11 +122,14 @@ def _postings(nodes: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
 
 def _drop_noise_keys(postings: DataFrame, k: int, high_kmers: DataFrame | None) -> DataFrame:
     """Homopolymer + high-frequency seed removal (skew control) at the
-    string level."""
+    string level.  The blacklist holds canonical k-mers (P3), so a seed
+    is matched by its canonical form, whichever strand it was read on
+    (src/Brush/MatchPrefix.java:122-141,160-174)."""
     homopolymers = [c * k for c in "ACGT"]
     out = postings.filter(~F.col("kmer").isin(homopolymers))
     if high_kmers is not None:
-        out = out.join(F.broadcast(high_kmers.select("kmer")), "kmer", "left_anti")
+        hk = F.broadcast(high_kmers.select(F.col("kmer").alias("__hk")))
+        out = out.join(hk, dna.canonical(F.col("kmer")) == F.col("__hk"), "left_anti")
     return out
 
 

@@ -1,22 +1,24 @@
-"""The assembly graph after the overlap join, over driver-side dicts: the
+"""The assembly graph from the reads, over driver-side dicts: read dedup
+(P1/P2), the high-k-mer blacklist (P3), the overlap join (J1-J3), the
 chimeric-link cut (G1), transitive reduction (G3), chain contraction
 (G7/G8), tips (C1), bubbles (C2/C3), low coverage (C4) and the
 A-statistic self-loop/boundary cuts (C5).
 
 The overlap graph of a small genome fits in the driver (a 3 kb genome at
-72x gives ~3.4k nodes and ~69k edges, ~5k edges after transitive
-reduction), yet every distributed round of the string-graph and cleanup
-loops costs a fixed handful of Spark jobs.  The reference hands such
-residual graphs to one reducer (QuickMark / QuickMerge,
-src/Brush/BrushAssembler.java:506-556); the assembler does the same with
-these functions, from the string graph on, once ``driver_bytes``
-estimates that the graph fits in ``DRIVER_MAX_BYTES`` of driver memory.
+72x gives 6k reads, ~3.4k nodes and ~69k edges, ~5k edges after
+transitive reduction), yet every distributed stage costs a fixed handful
+of Spark jobs.  The reference hands such residual graphs to one reducer
+(QuickMark / QuickMerge, src/Brush/BrushAssembler.java:506-556); the
+assembler does the same with these functions, from the reads on, once
+``driver_bytes`` estimates that the reads fit in ``DRIVER_MAX_BYTES`` of
+driver memory and ``overlap_bytes`` that the nodes and the overlap
+candidates do.
 
-Every function mirrors its distributed twin in ``consensus``, ``graph``,
-``bubbles`` and ``contraction`` with the same tie rules, and
-``tests/test_smallgraph_property.py`` and
+Every function mirrors its distributed twin in ``dedup``, ``kmers``,
+``overlap``, ``consensus``, ``graph``, ``bubbles`` and ``contraction``
+with the same tie rules, and ``tests/test_smallgraph_property.py`` and
 ``tests/test_consensus_property.py`` pin each pair to agree on seeded
-random graphs.  One difference is deliberate: ``contract`` is always the
+random inputs.  One difference is deliberate: ``contract`` is always the
 full chain walk (the G7/G8 serial finish), never the seeded G5/G6
 pairwise rounds.  Contracting a chain gives the same sequence either
 way; only the length-weighted coverage depends on merge order.
@@ -29,6 +31,7 @@ distributed edge frame.
 from __future__ import annotations
 
 import math
+import re
 from collections import Counter, defaultdict
 
 from cloudbrush_spark.functions.dna import flip_dir_py, flip_link_py, rc_py
@@ -42,19 +45,32 @@ from cloudbrush_spark.functions.dna import flip_dir_py, flip_link_py, rc_py
 # its Arrow output tables, on chain graphs of 2k-300k nodes whose read
 # lists hold up to 3.6M ids of 9-24 characters and whose sequences are
 # up to 10 kb (4-core x86-64, CPython 3, local Spark).  At the budget
-# that is at most about 0.5 GB of driver RSS.  The string-graph stage
-# (collect, two chimeric-cut rounds, transitive reduction, contraction
-# and output tables) of a 24 kb genome's 72x overlap graph, 27,400 nodes
-# and 561,698 edges estimated at 490 MiB, grew the peak RSS by 349 MiB.
+# that is at most about 0.5 GB of driver RSS.  A 24 kb genome at 72x
+# (48,000 36 bp reads, 27,400 nodes, 640,419 overlap candidates, 561,698
+# edges) measured on the same host:
+# - reads to string graph all in the driver (read collect, dedup, seed
+#   index, overlap join, chimeric cuts, transitive reduction,
+#   contraction and output tables), the nodes plus candidates estimated
+#   at 555 MiB: peak RSS +269 MiB;
+# - at this budget the candidates do not fit, so the distributed join
+#   runs and the string-graph stage collects its 561,698 edges
+#   (estimated at 490 MiB): peak RSS +361 MiB.
 DRIVER_MAX_BYTES = 512 << 20
 ROW_BYTES = 800     # per node or edge row
 CHAR_BYTES = 5      # per character of an id or sequence string
 ID_BYTES = 64       # per ``pair_ends`` entry, beyond its characters
 
 
-def driver_bytes(nodes, edges) -> tuple[int, int, int]:
+def _estimate(rows: int, chars: int, ids: int) -> int:
+    """Estimated driver bytes of ``rows`` node and edge rows holding
+    ``chars`` id and sequence characters and ``ids`` read-list entries."""
+    return ROW_BYTES * rows + CHAR_BYTES * chars + ID_BYTES * ids
+
+
+def driver_bytes(nodes, edges=None) -> tuple[int, int, int]:
     """``(node rows, edge rows, estimated driver bytes)`` of a graph's
-    frames from one aggregate over both tables; no row is collected."""
+    frames, or of the node frame alone when ``edges`` is None, from one
+    aggregate; no row is collected."""
     from pyspark.sql import functions as F
 
     def length(c):
@@ -71,14 +87,14 @@ def driver_bytes(nodes, edges) -> tuple[int, int, int]:
     sized = nodes.select(
         F.lit(1).alias("n_nodes"), F.lit(0).alias("n_edges"),
         (length("node_id") + length("seq") + id_chars).alias("chars"),
-        ids.alias("ids")
-    ).unionByName(edges.select(
-        F.lit(0).alias("n_nodes"), F.lit(1).alias("n_edges"),
-        (length("src") + length("dst")).alias("chars"), zero.alias("ids")))
+        ids.alias("ids"))
+    if edges is not None:
+        sized = sized.unionByName(edges.select(
+            F.lit(0).alias("n_nodes"), F.lit(1).alias("n_edges"),
+            (length("src") + length("dst")).alias("chars"), zero.alias("ids")))
     row = sized.agg(*[F.coalesce(F.sum(c), zero).alias(c) for c in cols]).first()
     n_nodes, n_edges, chars, n_ids = (int(row[c]) for c in cols)
-    return (n_nodes, n_edges, ROW_BYTES * (n_nodes + n_edges)
-            + CHAR_BYTES * chars + ID_BYTES * n_ids)
+    return n_nodes, n_edges, _estimate(n_nodes + n_edges, chars, n_ids)
 
 
 def collect(nodes, edges=None) -> tuple[dict, set]:
@@ -107,6 +123,120 @@ def arrow_frame(spark, columns: dict, schema):
     parts = max(1, min(spark.sparkContext.defaultParallelism,
                        -(-table.num_rows // 50_000)))
     return spark.createDataFrame(table, schema).coalesce(parts)
+
+
+_ACGT = re.compile("[ACGT]+")
+
+
+def dedup_reads(reads, k: int) -> dict:
+    """P1+P2 (``dedup.dedup_reads``) over ``(read_id, seq)`` pairs.  A read
+    is kept when its upper-cased sequence is ACGT only and it is longer
+    than ``k``; reads are grouped by the canonical form of the upper-cased
+    sequence, and each group becomes the node of its smallest read id,
+    with that read's sequence as read, the member count as coverage and
+    the sorted member ids as ``pair_ends``.  A read without an id counts
+    toward its group's coverage only, as Spark's min and collect_list
+    skip nulls.  A group without any id makes no node here, where
+    ``dedup.dedup_reads`` makes one with a null id, which no driver stage
+    could hold."""
+    groups = defaultdict(list)
+    for rid, seq in reads:
+        if seq is None or len(seq) <= k:
+            continue
+        up = seq.upper()
+        if _ACGT.fullmatch(up):
+            groups[min(up, rc_py(up))].append((rid, seq))
+    nodes = {}
+    for members in groups.values():
+        named = sorted(m for m in members if m[0] is not None)
+        if named:
+            nodes[named[0][0]] = (named[0][1], float(len(members)),
+                                  [m[0] for m in named])
+    return nodes
+
+
+def high_kmers(nodes: dict, k: int, up_kmer: int) -> dict:
+    """P3 (``kmers.high_kmers``): ``{canonical k-mer: count}`` of the node
+    k-mers whose coverage-weighted count, cast to an integer, exceeds
+    ``up_kmer``."""
+    counts = defaultdict(float)
+    for seq, cov, _ in nodes.values():
+        n, rc = len(seq), rc_py(seq)
+        for i in range(n - k + 1):
+            km, kr = seq[i:i + k], rc[n - i - k:n - i]
+            counts[min(km, kr)] += cov
+    return {km: int(c) for km, c in counts.items() if int(c) > up_kmer}
+
+
+def _oriented(nodes: dict):
+    """``(node, d, oriented seq)`` for both orientations of every node."""
+    for n, (seq, _, _) in nodes.items():
+        yield n, "f", seq
+        yield n, "r", rc_py(seq)
+
+
+def seed_index(nodes: dict, k: int, high_kmers) -> dict:
+    """J1's postings (``overlap._postings`` and ``_drop_noise_keys``):
+    ``{seed: (prefixes, windows)}``.  ``prefixes`` lists the ``(node, d)``
+    whose oriented sequence starts with the seed; ``windows`` the
+    ``(node, d, ov)`` whose oriented sequence holds the seed at 1-based
+    position p >= 2 with ov = len - p + 1 >= k.  Homopolymer seeds and
+    seeds whose canonical form is in ``high_kmers`` are dropped, and so are
+    the windows of a seed that starts no node: they join nothing."""
+    noise = {c * k for c in "ACGT"}
+    oriented = list(_oriented(nodes))
+    index = {}
+    for n, d, o in oriented:
+        km = o[:k]
+        if km not in noise and min(km, rc_py(km)) not in high_kmers:
+            index.setdefault(km, ([], []))[0].append((n, d))
+    for n, d, o in oriented:
+        ln = len(o)
+        for j in range(1, ln - k + 1):
+            hit = index.get(o[j:j + k])
+            if hit is not None:
+                hit[1].append((n, d, ln - j))
+    return index
+
+
+def overlap_bytes(nodes: dict, index: dict) -> tuple[int, int]:
+    """``(candidates, estimated driver bytes)``: the candidate pairs the
+    ``seed_index`` postings join into, counted before any is built, and
+    the ``driver_bytes`` estimate of ``nodes`` plus one edge row per
+    candidate."""
+    rows = chars = ids = 0
+    for prefixes, windows in index.values():
+        if windows:
+            rows += len(prefixes) * len(windows)
+            chars += len(windows) * sum(len(n) for n, _ in prefixes) \
+                + len(prefixes) * sum(len(n) for n, _, _ in windows)
+    for n, (seq, _, pairs) in nodes.items():
+        chars += len(n) + len(seq) + sum(map(len, pairs or ()))
+        ids += len(pairs or ())
+    return rows, _estimate(len(nodes) + rows, chars, ids)
+
+
+def overlap_graph(nodes: dict, index: dict) -> set:
+    """J1 -> J2 -> J3 (``overlap.build_overlap_graph`` with a blacklist)
+    over a ``seed_index``: every window joins every prefix of its seed on
+    another node; each oriented pair keeps its largest ov, which must then
+    pass the exact suffix/prefix check with ov below both lengths (a pair
+    whose largest ov fails is not retried at a smaller one); each edge is
+    emitted with its flip."""
+    best = {}
+    for prefixes, windows in index.values():
+        for src, d1, ov in windows:
+            for dst, d2 in prefixes:
+                if src != dst and best.get(key := (src, d1, dst, d2), 0) < ov:
+                    best[key] = ov
+    oriented = {(n, d): o for n, d, o in _oriented(nodes)}
+    edges = set()
+    for (src, d1, dst, d2), ov in best.items():
+        a, b = oriented[(src, d1)], oriented[(dst, d2)]
+        if ov < len(a) and ov < len(b) and a[-ov:] == b[:ov]:
+            edges.add((src, d1 + d2, dst, ov))
+            edges.add((dst, flip_link_py(d1 + d2), src, ov))
+    return edges
 
 
 def _consensus_sides(nodes: dict, edges, majority: float, pwm_n: float,

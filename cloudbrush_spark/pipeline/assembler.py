@@ -8,17 +8,24 @@ the reference's HDFS directory renames; a reliable checkpoint when
 (replacing Hadoop counters).  Every stage returns/records its counters in
 ``self.counters`` mirroring the reference's per-stage printouts.
 
-Every stage after the overlap join (``build_string_graph``,
+The graph is built and finished in the driver when it fits in
+``smallgraph.DRIVER_MAX_BYTES`` of driver memory, as the reference hands
+small residual graphs to one reducer
+(src/Brush/BrushAssembler.java:506-556).  ``preprocess`` sizes the read
+frame with one aggregate; reads that fit are collected once, deduplicated
+and counted into the high-k-mer blacklist over driver dicts.
+``build_overlap`` then counts the overlap candidates of those nodes
+before building any; when the nodes and candidates fit too, the overlap
+graph is built in the driver, otherwise the distributed J1-J3 join runs
+on the driver-built node frame.  Every later stage (``build_string_graph``,
 ``compress_chains`` and the tips, bubbles, low-coverage and
-edge-adjustment stages) starts with one aggregate that sizes the edge and
-node tables.  When the graph fits in ``smallgraph.DRIVER_MAX_BYTES`` of
-driver memory the stage's whole loop runs over driver dicts and builds
-its output frames once, as the reference hands small residual graphs to
-one reducer (src/Brush/BrushAssembler.java:506-556); otherwise the
-distributed loop below runs.  A stage handed the frames the previous
-driver finish built takes that graph back without sizing it, so a graph
-that fits after the overlap join is sized and collected once and stays
-in the driver to the end of ``assemble``.
+edge-adjustment stages) runs its whole loop over driver dicts when its
+graph fits, and the distributed loop below otherwise.  A stage handed the
+frames the previous driver stage built takes that stage's dicts back
+without sizing or collecting anything, so when the reads and their
+overlap candidates fit, the reads are collected once and the graph stays
+in the driver to the end of ``assemble``; a stage handed other frames
+sizes them with one aggregate first.
 """
 
 from __future__ import annotations
@@ -27,6 +34,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from cloudbrush_spark.config import BrushParams
 from cloudbrush_spark.operators import bubbles as bubbles_ops
@@ -35,6 +43,10 @@ from cloudbrush_spark.operators import (
     contraction, dedup, graph, kmers, mates, overlap, smallgraph)
 from cloudbrush_spark.operators import stats as stats_ops
 from cloudbrush_spark.plans import cut
+
+# the overlap graph's edge frame (``overlap.build_overlap_graph``)
+_EDGE_SCHEMA = StructType([StructField(c, StringType()) for c in ("src", "et", "dst")]
+                          + [StructField("ov", IntegerType())])
 
 
 @dataclass
@@ -50,9 +62,12 @@ class Assembler:
     # what makes a multi-day 100 TB assembly restartable.  Counters of
     # skipped stages are not re-emitted.
     checkpoint_dir: str | None = None
-    # (nodes frame, edges frame, graph) of the last driver finish: the
-    # next stage takes the graph back instead of sizing and collecting
-    # the frames that were just built from it
+    # (first frame, second frame, driver form) of the last stage that
+    # ran in the driver: the next stage takes the driver form back instead
+    # of sizing and collecting the frames that were just built from it.
+    # After ``preprocess`` the frames are (nodes, high k-mers) and the
+    # driver form is (nodes dict, {k-mer: count}); after a graph stage
+    # they are (nodes, edges) and a ``smallgraph`` graph.
     _held: tuple | None = field(default=None, init=False, repr=False)
 
     def _stage(self, name: str, fn) -> tuple[DataFrame, DataFrame]:
@@ -82,65 +97,68 @@ class Assembler:
             import time
             print(f"[assembler {time.strftime('%H:%M:%S')}] {msg}", flush=True)
 
-    def _held_graph(self, nodes: DataFrame, edges: DataFrame):
-        """The graph of the last driver finish when ``nodes`` and ``edges``
-        are the very frames it built, else None."""
+    def _held_graph(self, first: DataFrame, second: DataFrame):
+        """The driver form held by the last driver stage when ``first`` and
+        ``second`` are the very frames it built, else None."""
         held = self._held
-        if held is not None and held[0] is nodes and held[1] is edges:
+        if held is not None and held[0] is first and held[1] is second:
             return held[2]
         return None
 
     def _driver_graph(self, stage: str, nodes: DataFrame, edges: DataFrame):
-        """``smallgraph`` (nodes, edges) when the graph fits the driver
-        budget (``_sized_graph``), else None.  Given the very frames the
-        previous driver finish returned, it returns that stage's graph
-        without a job."""
+        """``(edge rows, graph)``: the graph is the ``smallgraph`` (nodes,
+        edges) when it fits the driver budget, else None.  Given the very
+        frames the previous driver stage returned, it takes that stage's
+        graph back without a job; otherwise ``smallgraph.driver_bytes``
+        sizes the frames with one aggregate, so a graph that stays
+        distributed moves no rows to the driver, and one that fits
+        ``smallgraph.DRIVER_MAX_BYTES`` is collected."""
         g, self._held = self._held_graph(nodes, edges), None
         if g is not None:
             self._log(f"{stage}: driver finish (graph held from the previous stage)")
-            self.counters["driver_finish"] += 1
-            return g
-        return self._sized_graph(stage, nodes, edges)[1]
-
-    def _sized_graph(self, stage: str, nodes: DataFrame, edges: DataFrame):
-        """``(edge rows, graph)``: the graph is the collected ``smallgraph``
-        (nodes, edges) when ``smallgraph.driver_bytes`` estimates that it
-        fits in ``smallgraph.DRIVER_MAX_BYTES``, else None.  The estimate
-        is one aggregate, so a graph that stays distributed moves no rows
-        to the driver."""
-        n_nodes, n_edges, est = smallgraph.driver_bytes(nodes, edges)
-        size = f"{n_nodes} nodes, {n_edges} edges, ~{est / 2**20:.1f} MB in the driver"
-        if est > smallgraph.DRIVER_MAX_BYTES:
-            self._log(f"{stage}: distributed ({size})")
-            return n_edges, None
-        self._log(f"{stage}: driver finish ({size})")
+        else:
+            n_nodes, n_edges, est = smallgraph.driver_bytes(nodes, edges)
+            size = f"{n_nodes} nodes, {n_edges} edges, ~{est / 2**20:.1f} MB in the driver"
+            if est > smallgraph.DRIVER_MAX_BYTES:
+                self._log(f"{stage}: distributed ({size})")
+                return n_edges, None
+            self._log(f"{stage}: driver finish ({size})")
+            g = smallgraph.collect(nodes, edges)
         self.counters["driver_finish"] = self.counters.get("driver_finish", 0) + 1
-        return n_edges, smallgraph.collect(nodes, edges)
+        return len(g[1]), g
+
+    def _node_frame(self, g_nodes: dict, schema: StructType) -> DataFrame:
+        """Driver nodes as a frame of ``schema``, id-sorted, built from an
+        Arrow table (``smallgraph.arrow_frame``)."""
+        ids = sorted(g_nodes)
+        cols = {"node_id": ids,
+                "seq": [g_nodes[n][0] for n in ids],
+                "cov": [g_nodes[n][1] for n in ids],
+                "pair_ends": [g_nodes[n][2] for n in ids]}
+        return smallgraph.arrow_frame(
+            self.spark, {c: cols[c] for c in schema.names}, schema)
+
+    def _edge_frame(self, g_edges: set, schema: StructType) -> DataFrame:
+        """Driver edges as a sorted frame of ``schema``, like ``_node_frame``."""
+        rows = sorted(g_edges)
+        cols = {c: [e[i] for e in rows]
+                for i, c in enumerate(("src", "et", "dst", "ov"))}
+        return smallgraph.arrow_frame(
+            self.spark, {c: cols[c] for c in schema.names}, schema)
 
     def _frames(self, g: tuple[dict, set], nodes: DataFrame, edges: DataFrame
                 ) -> tuple[DataFrame, DataFrame]:
         """A driver graph as frames with the schemas of ``nodes`` and
-        ``edges``, built from Arrow tables (``smallgraph.arrow_frame``).
-        The graph is held, in the node order the frames collect in, for
-        the next stage's ``_driver_graph``."""
+        ``edges``.  The graph is held, in the node order the frames collect
+        in and as ``smallgraph.collect`` would read them back, for the next
+        stage's ``_driver_graph``."""
         g_nodes, g_edges = g
-        ids = sorted(g_nodes)
-        node_cols = {"node_id": ids,
-                     "seq": [g_nodes[n][0] for n in ids],
-                     "cov": [g_nodes[n][1] for n in ids],
-                     "pair_ends": [g_nodes[n][2] for n in ids]}
-        edge_rows = sorted(g_edges)
-        edge_cols = {c: [e[i] for e in edge_rows]
-                     for i, c in enumerate(("src", "et", "dst", "ov"))}
-        out_nodes = smallgraph.arrow_frame(
-            self.spark, {c: node_cols[c] for c in nodes.columns}, nodes.schema)
-        out_edges = smallgraph.arrow_frame(
-            self.spark, {c: edge_cols[c] for c in edges.columns}, edges.schema)
-        # as ``smallgraph.collect`` would read the frames back
+        out_nodes = self._node_frame(g_nodes, nodes.schema)
+        out_edges = self._edge_frame(g_edges, edges.schema)
         pairs = "pair_ends" in nodes.columns
         self._held = (out_nodes, out_edges,
                       ({n: g_nodes[n] if pairs else (*g_nodes[n][:2], None)
-                        for n in ids}, g_edges))
+                        for n in sorted(g_nodes)}, g_edges))
         return out_nodes, out_edges
 
     # -- driver forms of the stage loops: each mirrors the distributed
@@ -253,19 +271,70 @@ class Assembler:
                 reads.join(tr.filter("trusted"), on="read_id", how="left_semi"))
             self.counters["trusted_reads"] = reads.count()
             self._log(f"trust_filter: kept {self.counters['trusted_reads']} trusted reads")
-        nodes = cut(dedup.dedup_reads(reads, k=p.k))
-        self.counters["nodes"] = nodes.count()
-        hk = cut(kmers.high_kmers(
-            nodes, p.k, up_kmer=p.up_kmer, id_col="node_id", cov_col="cov"))
-        self.counters["high_kmers"] = hk.count()
+        nodes = dedup.dedup_reads(reads, k=p.k)
+
+        def high(nodes):
+            return kmers.high_kmers(
+                nodes, p.k, up_kmer=p.up_kmer, id_col="node_id", cov_col="cov")
+
+        if self._reads_fit(reads):
+            r = reads.select("read_id", "seq").toArrow().to_pydict()
+            g_nodes = smallgraph.dedup_reads(zip(r["read_id"], r["seq"]), p.k)
+            g_hk = smallgraph.high_kmers(g_nodes, p.k, p.up_kmer)
+            nodes = self._node_frame(g_nodes, nodes.schema)
+            kms = sorted(g_hk)
+            hk = smallgraph.arrow_frame(
+                self.spark, {"kmer": kms, "cnt": [g_hk[km] for km in kms]},
+                high(nodes).schema)
+            self._held = (nodes, hk, (g_nodes, g_hk))
+            self.counters["nodes"], self.counters["high_kmers"] = len(g_nodes), len(g_hk)
+        else:
+            nodes = cut(nodes)
+            self.counters["nodes"] = nodes.count()
+            hk = cut(high(nodes))
+            self.counters["high_kmers"] = hk.count()
         self._log(f"preprocess: {self.counters['nodes']} nodes, "
                   f"{self.counters['high_kmers']} high kmers")
         return nodes, hk
 
+    def _reads_fit(self, reads: DataFrame) -> bool:
+        """Whether the reads fit the driver budget, sized as the node frame
+        they would make with no duplicate: each read a node whose read
+        list holds its own id.  No read fits a budget below one row's
+        cost, so that budget is not probed."""
+        if smallgraph.DRIVER_MAX_BYTES < smallgraph.ROW_BYTES:
+            return False
+        n_reads, _, est = smallgraph.driver_bytes(reads.select(
+            F.col("read_id").alias("node_id"), "seq",
+            F.array("read_id").alias("pair_ends")))
+        size = f"{n_reads} reads, ~{est / 2**20:.1f} MB in the driver"
+        fits = est <= smallgraph.DRIVER_MAX_BYTES
+        self._log(f"preprocess: {'in the driver' if fits else 'distributed'} ({size})")
+        return fits
+
     # -- buildOverlap: J1 -> J2 -> J3 (BrushAssembler.java:313-333) --------
     def build_overlap(self, nodes: DataFrame, high_kmers: DataFrame) -> DataFrame:
+        """Handed the frames a driver ``preprocess`` built, the overlap
+        candidates are counted from the driver seed index; when the nodes
+        and candidates fit the budget the edges are built in the driver
+        and held for ``build_string_graph``.  Otherwise the distributed
+        join runs; the edge count is then taken by build_string_graph's
+        size probe."""
         p = self.params
-        # the edge count is taken by build_string_graph's size probe
+        held, self._held = self._held_graph(nodes, high_kmers), None
+        if held is not None:
+            g_nodes, g_hk = held
+            index = smallgraph.seed_index(g_nodes, p.k, g_hk)
+            n_cand, est = smallgraph.overlap_bytes(g_nodes, index)
+            size = (f"{len(g_nodes)} nodes, {n_cand} candidates, "
+                    f"~{est / 2**20:.1f} MB in the driver")
+            if est <= smallgraph.DRIVER_MAX_BYTES:
+                self._log(f"build_overlap: in the driver ({size})")
+                g_edges = smallgraph.overlap_graph(g_nodes, index)
+                edges = self._edge_frame(g_edges, _EDGE_SCHEMA)
+                self._held = (nodes, edges, (g_nodes, g_edges))
+                return edges
+            self._log(f"build_overlap: distributed ({size})")
         return cut(overlap.build_overlap_graph(
             nodes, p.k, high_kmers, per_key_cap=p.up_kmer))
 
@@ -273,7 +342,7 @@ class Assembler:
     def build_string_graph(self, nodes: DataFrame, edges: DataFrame
                            ) -> tuple[DataFrame, DataFrame]:
         p = self.params
-        self.counters["edges"], g = self._sized_graph(
+        self.counters["edges"], g = self._driver_graph(
             "build_string_graph", nodes, edges)
         if g is not None:
             nodes, edges = self._frames(self._string_graph_small(*g), nodes, edges)
@@ -296,7 +365,7 @@ class Assembler:
     # -- compressChains (BrushAssembler.java:468-560) ----------------------
     def compress_chains(self, nodes: DataFrame, edges: DataFrame
                         ) -> tuple[DataFrame, DataFrame]:
-        g = self._driver_graph("compress_chains", nodes, edges)
+        _, g = self._driver_graph("compress_chains", nodes, edges)
         if g is not None:
             return self._frames(self._compress_small(*g), nodes, edges)
         return self._contract(nodes, edges)
@@ -316,7 +385,7 @@ class Assembler:
     # -- removeTips (BrushAssembler.java:565-618) --------------------------
     def remove_tips(self, nodes: DataFrame, edges: DataFrame
                     ) -> tuple[DataFrame, DataFrame]:
-        g = self._driver_graph("remove_tips", nodes, edges)
+        _, g = self._driver_graph("remove_tips", nodes, edges)
         if g is not None:
             return self._frames(self._tips_small(*g), nodes, edges)
         p = self.params
@@ -342,7 +411,7 @@ class Assembler:
     # -- popallbubbles (BrushAssembler.java:623-676) -----------------------
     def pop_all_bubbles(self, nodes: DataFrame, edges: DataFrame
                         ) -> tuple[DataFrame, DataFrame]:
-        g = self._driver_graph("pop_all_bubbles", nodes, edges)
+        _, g = self._driver_graph("pop_all_bubbles", nodes, edges)
         if g is not None:
             return self._frames(self._bubbles_small(*g), nodes, edges)
         p = self.params
@@ -363,7 +432,7 @@ class Assembler:
     # -- removelowcov (BrushAssembler.java:682-703) ------------------------
     def remove_low_cov(self, nodes: DataFrame, edges: DataFrame
                        ) -> tuple[DataFrame, DataFrame]:
-        g = self._driver_graph("remove_low_cov", nodes, edges)
+        _, g = self._driver_graph("remove_low_cov", nodes, edges)
         if g is not None:
             return self._frames(self._low_cov_small(*g), nodes, edges)
         p = self.params
@@ -379,7 +448,7 @@ class Assembler:
     # -- edgeAdjustment: C5 loop (BrushAssembler.java:400-464) -------------
     def edge_adjustment(self, nodes: DataFrame, edges: DataFrame,
                         max_rounds: int = 4) -> tuple[DataFrame, DataFrame]:
-        g = self._driver_graph("edge_adjustment", nodes, edges)
+        _, g = self._driver_graph("edge_adjustment", nodes, edges)
         if g is not None:
             return self._frames(self._edge_adjust_small(*g, max_rounds), nodes, edges)
         p = self.params

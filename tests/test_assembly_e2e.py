@@ -7,10 +7,10 @@ random genome, 36 bp reads at 72x, random strand, 0.5% substitutions),
 re-stated here so the test stands on its own.  The canonical contig
 digest pins the whole pipeline: any change to a stage that moves one
 contig base fails it.  It runs twice: with the default driver-finish
-bound, where everything after the overlap join (the string graph and
-the whole cleanup tail) runs in the driver, and with the bound forced to
-0, where every stage takes the distributed loop.  Each run also pins the
-Spark jobs every stage starts.
+bound, where everything from the reads on (dedup, the overlap join, the
+string graph and the whole cleanup tail) runs in the driver, and with
+the bound forced to 0, where every stage takes the distributed loop.
+Each run also pins the Spark jobs every stage starts.
 """
 
 import hashlib
@@ -92,15 +92,16 @@ STAGES = ("assemble", "preprocess", "build_overlap", "build_string_graph",
           "remove_low_cov", "edge_adjustment", "stats_report")
 
 # bound -> (smallgraph.DRIVER_MAX_BYTES, stages finished in the driver,
-# size probes, Spark jobs per stage).  Within the bound the string graph
-# sizes the overlap graph once and builds, contracts and cleans it in
-# the driver; each later stage takes back the graph the one before it
-# held.  At bound 0 every stage sizes its input (remove_low_cov's inner
-# tips and bubbles passes included) and runs its distributed loop.
+# size probes, Spark jobs per stage).  Within the bound preprocess sizes
+# the reads once and collects them, and the overlap graph is built,
+# contracted and cleaned in the driver; each later stage takes back the
+# graph the one before it held.  At bound 0 preprocess skips its probe (no
+# read fits), and every graph stage sizes its input (remove_low_cov's
+# inner tips and bubbles passes included) and runs its distributed loop.
 CASES = {
     "default_bound": (smallgraph.DRIVER_MAX_BYTES, 5, 1, {
-        "assemble": 0, "preprocess": 8, "build_overlap": 11,
-        "build_string_graph": 4, "compress_chains": 0, "remove_tips": 0,
+        "assemble": 0, "preprocess": 3, "build_overlap": 0,
+        "build_string_graph": 0, "compress_chains": 0, "remove_tips": 0,
         "pop_all_bubbles": 0, "remove_low_cov": 0, "edge_adjustment": 0,
         "stats_report": 1}),
     "bound_0": (0, 0, 8, {
@@ -148,7 +149,7 @@ def assembled(request, spark, tmp_path_factory):
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(smallgraph, "DRIVER_MAX_BYTES", bound)
         mp.setattr(smallgraph, "driver_bytes",
-                   lambda n, e: sized.append(1) or driver_bytes(n, e))
+                   lambda n, e=None: sized.append(1) or driver_bytes(n, e))
         _job_groups(mp, spark, prefix)
         asm = Assembler(spark, BrushParams(k=21, readlen=36))
         nodes, _ = asm.assemble(read_sfa(spark, str(path)))
@@ -173,7 +174,7 @@ def test_assemble_small_genome_end_to_end(assembled):
 
 
 # Spark jobs the STAGES methods start in one pass
-PASS_JOBS = {"default_bound": 24, "bound_0": 158}
+PASS_JOBS = {"default_bound": 4, "bound_0": 158}
 
 
 def test_jobs_per_stage(request, assembled):
@@ -187,8 +188,8 @@ def test_driver_finish_digest_matches_distributed_on_repeat_genomes(
         spark, tmp_path, monkeypatch):
     """Five seeded 2 kb genomes, each with two planted repeats longer
     than a read, assemble to the same contigs with the driver-finish
-    bound at its default (string graph and cleanup in the driver) and
-    at 0 (every stage distributed)."""
+    bound at its default (from the reads on, everything in the driver)
+    and at 0 (every stage distributed)."""
     mismatched, default = [], smallgraph.DRIVER_MAX_BYTES
     for seed in (11, 12, 13, 14, 15):
         genome, reads = _reads(seed, 2000, 36, 72, 0.005, repeats=(80, 150))

@@ -14,7 +14,10 @@ fixture cannot flip modes) and asserts:
 2. reliable checkpoint files actually landed in the checkpoint dir
    (the mode really ran) — and the assembly alone, before any curation
    work, already writes them: its stage and contraction boundaries go
-   through the same helper;
+   through the same helper.  The assembly runs with the driver budget
+   at 0 on both sides, so every stage takes its distributed loop; within
+   the budget this small genome is built and finished in the driver,
+   where no stage boundary is cut;
 3. the ContextCleaner (``spark.cleaner.referenceTracking.cleanCheckpoints``
    is set in ``get_spark``) removes the checkpoint data once the frames
    are unreachable — a long-running curation service must not fill the
@@ -29,7 +32,7 @@ import sys
 from pyspark.sql import functions as F  # noqa: F401  (parity with sibling tests)
 
 from cloudbrush_spark.config import BrushParams
-from cloudbrush_spark.operators import dedup
+from cloudbrush_spark.operators import dedup, smallgraph
 from cloudbrush_spark.pipeline import curation
 from cloudbrush_spark.pipeline.assembler import Assembler
 from cloudbrush_spark.sources.fasta import read_sfa
@@ -53,11 +56,12 @@ sys.path.insert(0, os.environ["CB_REPO"])
 from pyspark.sql import functions as F
 from cloudbrush_spark.session import get_spark
 from cloudbrush_spark.config import BrushParams
-from cloudbrush_spark.operators import dedup
+from cloudbrush_spark.operators import dedup, smallgraph
 from cloudbrush_spark.pipeline import curation
 from cloudbrush_spark.pipeline.assembler import Assembler
 from cloudbrush_spark.sources.fasta import read_sfa
 
+smallgraph.DRIVER_MAX_BYTES = 0   # every assembly stage distributed
 ckdir = tempfile.mkdtemp(prefix="cb-ck-")
 # the assembly runs at the session fixture's shuffle width, so only the
 # checkpoint mode differs from the in-session run it is compared with
@@ -111,11 +115,12 @@ print("RESULT " + json.dumps({"rows": rows, "crows": crows,
 '''
 
 
-def test_reliable_checkpoint_mode_matches_and_cleans(spark, tmp_path):
+def test_reliable_checkpoint_mode_matches_and_cleans(spark, tmp_path, monkeypatch):
     _, reads = _reads(seed=7, genome_size=600, read_len=36, coverage=72,
                       error_rate=0.005)
     reads_path = tmp_path / "reads.sfa"
     reads_path.write_text("".join(f"r{i}\t{s}\n" for i, s in enumerate(reads)))
+    monkeypatch.setattr(smallgraph, "DRIVER_MAX_BYTES", 0)
     nodes, _ = Assembler(spark, BrushParams(k=21, readlen=36)).assemble(
         read_sfa(spark, str(reads_path)))
     want_contigs = sorted(r.seq for r in nodes.select("seq").collect())

@@ -4,6 +4,8 @@ Every emitted edge must satisfy the overlap predicate by construction;
 symmetric closure must hold (SURVEY §7 M2 test contract).
 """
 
+import random
+
 from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import dna
@@ -69,6 +71,36 @@ def test_high_kmer_blacklist_blocks_seed(spark):
         "kmer string")
     edges = overlap.build_overlap_graph(nodes, K, high_kmers=hk)
     assert ("a", "ff", "b", 8) not in edge_set(edges)
+
+
+def test_high_kmer_blacklist_matches_seeds_on_both_strands(spark):
+    """``kmers.high_kmers`` lists canonical k-mers only, so a seed read on
+    the strand whose form is not the canonical one must be dropped all
+    the same.  A 16 bp repeat sits in seven reads, three of them
+    reverse-complemented; ``a`` and ``b`` overlap on the repeat alone, and
+    both seeds of that overlap (``b``'s prefix and ``rc(a)``'s) are the
+    non-canonical forms of listed k-mers."""
+    from cloudbrush_spark.operators import kmers
+    k, rep = 8, "TTGCCATGAGCTACGA"
+    rng = random.Random(7)
+
+    def flank():
+        return "".join(rng.choice("ACGT") for _ in range(10))
+    reads = [("a", flank() + rep), ("b", rep + flank())]
+    reads += [(f"f{i}", flank() + rep + flank()) for i in range(2)]
+    reads += [(f"r{i}", dna.rc_py(flank() + rep + flank())) for i in range(3)]
+    nodes = make_nodes(spark, [(n, s, 1.0) for n, s in reads])
+    hk = kmers.high_kmers(nodes, k, up_kmer=4, id_col="node_id", cov_col="cov")
+    listed = {r.kmer for r in hk.collect()}
+    canon = {min(w, dna.rc_py(w)) for w in (rep[i:i + k] for i in range(len(rep) - k + 1))}
+    assert canon <= listed
+    assert rep[:k] not in listed and dna.rc_py(rep[-k:]) not in listed
+    prefixes, suffixes = overlap._postings(nodes, k)
+    kept = [r.kmer for p in (prefixes, suffixes)
+            for r in overlap._drop_noise_keys(p, k, hk).collect()]
+    assert kept and not {min(w, dna.rc_py(w)) for w in kept} & listed
+    edges = overlap.build_overlap_graph(nodes, k, high_kmers=hk)
+    assert not {e for e in edge_set(edges) if {e[0], e[2]} == {"a", "b"}}
 
 
 def test_three_read_path(spark):

@@ -1,8 +1,16 @@
 """Seeded agreement tests: each driver-side operator in
-``operators.smallgraph`` against its distributed twin in ``graph``,
-``bubbles`` and ``contraction`` on random graphs, and the driver
-string-graph stage against the distributed one.  (The chimeric-link cut
-is pinned in ``tests/test_consensus_property.py``.)
+``operators.smallgraph`` against its distributed twin in ``dedup``,
+``kmers``, ``overlap``, ``graph``, ``bubbles`` and ``contraction`` on
+random reads and graphs, and the driver string-graph stage against the
+distributed one.  (The chimeric-link cut is pinned in
+``tests/test_consensus_property.py``.)
+
+The read sets aim at the P1-P3 and J1-J3 rules: lowercase, ``N``-bearing
+and too-short reads; exact and reverse-complement duplicates whose ids
+come in random order; homopolymer seeds; a planted repeat that fills the
+high-k-mer blacklist; a read that overlaps itself; contained reads and a
+node whose reverse complement is another node; and a pair whose largest
+seeded overlap fails the exact check while a smaller one would pass.
 
 The generators aim at the tie rules: tip sides that hold only tips or
 tips and other nodes, with equal ``len - ov`` and ids drawn in random
@@ -18,8 +26,10 @@ import random
 
 import pytest
 
+from cloudbrush_spark.config import BrushParams
 from cloudbrush_spark.functions.dna import rc_py
-from cloudbrush_spark.operators import bubbles, contraction, graph, smallgraph
+from cloudbrush_spark.operators import (
+    bubbles, contraction, dedup, graph, kmers, overlap, smallgraph)
 from tests.conftest import make_edges, make_nodes
 
 _FLIP = {"f": "r", "r": "f"}
@@ -408,3 +418,118 @@ def test_arrow_frame_partitions_per_50k_rows(spark):
         df = smallgraph.arrow_frame(spark, {"x": list(range(rows))}, "x long")
         assert df.rdd.getNumPartitions() == want
         assert df.count() == rows
+
+
+K_READS = 11
+NODE_SCHEMA = "node_id string, seq string, cov double, pair_ends array<string>"
+
+
+def _read_set(rng):
+    """``(read_id, seq)`` rows: reads of both strands tiled over a 240 bp
+    genome with a 24 bp repeat planted three times, some repeated (as read
+    or reverse-complemented, once without an id) and some lowercased,
+    plus the special reads ``s…``: ``N``-bearing, k and k - 3 long, two
+    that overlap on a run of A only, and one of period 7 that overlaps
+    itself."""
+    genome = _seq(rng, 240)
+    repeat = _seq(rng, 24)
+    for at in (30, 120, 200):
+        genome = genome[:at] + repeat + genome[at + len(repeat):]
+    seqs = []
+    for _ in range(90):
+        ln = rng.randint(20, 40)
+        off = rng.randrange(len(genome) - ln + 1)
+        seqs.append(genome[off:off + ln])
+    seqs += [rng.choice(seqs) for _ in range(15)]
+    seqs = [rc_py(x) if rng.random() < 0.5 else x for x in seqs]
+    seqs = [x.lower() if i % 7 == 0 else x for i, x in enumerate(seqs)]
+    ids = rng.sample(range(10_000), len(seqs))
+    special = {"s_n": _seq(rng, 8) + "N" + _seq(rng, 20),
+               "s_k": _seq(rng, K_READS), "s_short": _seq(rng, K_READS - 3),
+               "s_polya": _seq(rng, 9) + "A" * 14, "s_apoly": "A" * 14 + _seq(rng, 10),
+               "s_period": _seq(rng, 7) * 6}
+    return ([(f"r{i}", x) for i, x in zip(ids, seqs)] + [(None, seqs[0])]
+            + list(special.items()))
+
+
+def _plant_overlap_cases(rng, nodes):
+    """Add node pairs to ``nodes``: ``p_a``/``p_b`` overlap by 23 bp on
+    both strand pairs, but each strand pair's seed also matches at a
+    larger overlap that fails the exact check; ``p_x``/``p_rx`` are each
+    other's reverse complement."""
+    pre, suf, x1, y1, r1, r2 = (_seq(rng, n) for n in (K_READS, 12, 5, 5, 6, 6))
+    nodes["p_a"] = (r1 + pre + x1 + pre + suf, 1.0, ["p_a"])
+    nodes["p_b"] = (pre + suf + y1 + suf[-K_READS:] + r2, 1.0, ["p_b"])
+    x = _seq(rng, 30)
+    nodes["p_x"], nodes["p_rx"] = (x, 1.0, ["p_x"]), (rc_py(x), 1.0, ["p_rx"])
+
+
+@pytest.mark.parametrize("seed", [0, 1, 3])
+def test_reads_to_overlap_graph_match_distributed(spark, seed):
+    """P1+P2, P3 and J1-J3 in the driver against ``dedup.dedup_reads``,
+    ``kmers.high_kmers`` and ``overlap.build_overlap_graph``."""
+    rng = random.Random(seed)
+    reads = _read_set(rng)
+    rdf = spark.createDataFrame(reads, "read_id string, seq string")
+    nodes = smallgraph.dedup_reads(reads, K_READS)
+    ndf = dedup.dedup_reads(rdf, k=K_READS)
+    assert nodes == {r.node_id: (r.seq, r.cov, r.pair_ends) for r in ndf.collect()}
+    assert not {"s_n", "s_k", "s_short"} & set(nodes)
+    assert max(c for _, c, _ in nodes.values()) > 1.0
+    assert any(c > len(p) for _, c, p in nodes.values())   # the id-less read
+
+    hk = smallgraph.high_kmers(nodes, K_READS, 20)
+    hk_df = kmers.high_kmers(ndf, K_READS, up_kmer=20, id_col="node_id", cov_col="cov")
+    assert hk == {r.kmer: r.cnt for r in hk_df.collect()}
+    assert hk
+
+    _plant_overlap_cases(rng, nodes)
+    ndf = spark.createDataFrame(
+        [(n, x, c, p) for n, (x, c, p) in nodes.items()], NODE_SCHEMA)
+    want = {tuple(r) for r in overlap.build_overlap_graph(ndf, K_READS, hk_df).collect()}
+    index = smallgraph.seed_index(nodes, K_READS, hk)
+    got = smallgraph.overlap_graph(nodes, index)
+    assert got == want
+    # the planted cases are there and are not edges
+    a, b = nodes["p_a"][0], nodes["p_b"][0]
+    assert a[-23:] == b[:23]
+    period = nodes["s_period"][0]
+    assert period[7:] == period[:-7]
+    assert not {e for e in got if {e[0], e[2]} == {"p_a", "p_b"}
+                or e[0] == e[2] or "s_polya" in (e[0], e[2])}
+    # some candidate is a contained read
+    assert any(ov >= len(nodes[dst][0]) for prefixes, windows in index.values()
+               for _, _, ov in windows for dst, _ in prefixes)
+
+
+def test_overlap_falls_back_to_distributed_join(spark, monkeypatch):
+    """With a budget the reads fit but the nodes plus the overlap
+    candidates do not, ``build_overlap`` runs the distributed join on the
+    node frame the driver built, with the edges and counters of the
+    driver overlap graph."""
+    from cloudbrush_spark.pipeline.assembler import Assembler
+    reads = spark.createDataFrame(_read_set(random.Random(0)),
+                                  "read_id string, seq string")
+    sizes = []
+    driver_bytes = smallgraph.driver_bytes
+    monkeypatch.setattr(smallgraph, "driver_bytes",
+                        lambda n, e=None: sizes.append(driver_bytes(n, e)) or sizes[-1])
+
+    def overlap_at(bound):
+        monkeypatch.setattr(smallgraph, "DRIVER_MAX_BYTES", bound)
+        asm = Assembler(spark, BrushParams(k=K_READS, up_kmer=20))
+        nodes, hk = asm.preprocess(reads)
+        held_nodes, held_hk, (g_nodes, g_hk) = asm._held
+        assert held_nodes is nodes and held_hk is hk
+        index = smallgraph.seed_index(g_nodes, K_READS, g_hk)
+        fits = smallgraph.overlap_bytes(g_nodes, index)[1] <= bound
+        edges = asm.build_overlap(nodes, hk)
+        assert (asm._held is not None) == fits
+        return {tuple(r) for r in edges.collect()}, asm.counters, fits
+
+    driver, counters, fits = overlap_at(smallgraph.DRIVER_MAX_BYTES)
+    # a budget of exactly the reads' estimate
+    fallback, counters_fb, fits_fb = overlap_at(sizes[0][2])
+    assert fits and not fits_fb and len(sizes) == 2
+    assert driver == fallback and counters == counters_fb
+    assert counters["high_kmers"] > 0
