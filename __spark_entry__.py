@@ -83,71 +83,6 @@ def _widen_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     return df
 
 
-_EVENTS_NANOS_SCHEMA = (
-    "event_id long, ts long, user_id long, event_type string, "
-    "value double, props string"
-)
-
-# Explicit TimestampType (LTZ) schema: Spark 4 would otherwise infer
-# TIMESTAMP_NTZ for isAdjustedToUTC=false parquet, and unix_micros() only
-# accepts TIMESTAMP.  The parquet reader copies the stored INT64 micros
-# into the internal value either way (no TZ shift on read), so unix_micros
-# yields the raw stored micros independent of the session time zone.
-_EVENTS_TS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-
-
-def _events_ts_unit(path: str) -> str:
-    """Sniff the parquet time unit of ``ts`` ('ns'/'us'/'ms'/'s').
-
-    The driver's testdata has switched physical types across generations
-    (TIMESTAMP(NANOS) in earlier rounds, TIMESTAMP(MICROS) now), and
-    hard-coding either unit silently scales every window/session/as-of
-    computation by 1000x — so read the footer instead of guessing.
-
-    Guarded: any sniff failure (absent pyarrow, unreadable/missing footer)
-    degrades to 'us', the driver's current grain — every caller gets the
-    same graceful default.  For a directory
-    dataset each part-file footer is tried until one succeeds (parts of
-    one dataset share a schema, so the first readable footer decides)."""
-    try:
-        import pyarrow.parquet as pq
-        candidates = [path]
-        if os.path.isdir(path):
-            candidates = sorted(
-                os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
-            ) or [path]
-        for cand in candidates:
-            try:
-                t = pq.ParquetFile(cand).schema_arrow.field("ts").type
-                return getattr(t, "unit", "us")
-            except Exception:
-                continue
-    except Exception:
-        pass
-    return "us"
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events table with a uniform ``tus`` column: epoch-MICROS as a long.
-
-    Micros is Spark's native timestamp grain (`unix_micros` is a lossless
-    read of the internal value, independent of the session time zone) and
-    DuckDB's too (`epoch_us`), so both engines agree bit-for-bit; for
-    nanos-grain files (which Spark's reader rejects as TimestampType) the
-    explicit LongType schema reads raw nanos and integer-divides, matching
-    DuckDB's truncate-to-micros read of the same file."""
-    path = os.path.join(sf_dir, "events.parquet")
-    unit = _events_ts_unit(path)  # internally guarded, defaults to 'us'
-    if unit == "ns":
-        return spark.read.schema(_EVENTS_NANOS_SCHEMA).parquet(path) \
-            .withColumn("tus", F.expr("ts div 1000"))
-    return spark.read.schema(_EVENTS_TS_SCHEMA).parquet(path) \
-        .withColumn("tus", F.unix_micros("ts"))
-
-
 # ---------------------------------------------------------------------------
 # Query implementations (spark, sf_dir) -> DataFrame
 # ---------------------------------------------------------------------------
@@ -203,8 +138,11 @@ def q_a3_ngram_doc_counts(spark, sf_dir):
 
 
 def q_a4_count_histogram(spark, sf_dir):
-    """A4 KmerStatus generic: histogram of per-user event counts."""
-    events = _events(spark, sf_dir)
+    """A4 KmerStatus generic: histogram of per-user event counts.  Reads
+    the one column it counts, so the file's timestamp unit never
+    matters."""
+    events = spark.read.schema("user_id long") \
+        .parquet(os.path.join(sf_dir, "events.parquet"))
     per_user = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt"))
     return per_user.groupBy("cnt").agg(F.count(F.lit(1)).alias("num_users"))
 

@@ -11,14 +11,17 @@ What stays is what the pipelines run:
 - ``fingerprint_dedup``: normalized-token exact dedup of documents;
 - MinHash/LSH candidate pairs verified by exact Jaccard
   (``minhash_dedup_pairs*``, ``cross_corpus_near_dups``) — the near-dup
-  method curation runs.  Per-bucket pair expansion is capped
-  (``max_bucket``) like the reference caps candidates per k-mer key
-  (src/Brush/MatchPrefix.java:366-380);
+  method curation runs.  The self-join and the cross-corpus join share
+  one bucket split (``_band_buckets``) and one verify
+  (``_verified_pairs``); each keeps its own pairing rule.  Per-bucket
+  pair expansion is capped (``max_bucket``) like the reference caps
+  candidates per k-mer key (src/Brush/MatchPrefix.java:366-380);
 - ``dedup_clusters``: connected components of a verified pair set.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -128,7 +131,10 @@ def dedup_reads(reads: DataFrame, id_col: str = "read_id", seq_col: str = "seq",
     groups (src/Brush/GenNonContainedReads.java:174-248); grouping by the
     full canonical sequence gives the same survivors (min-id representative,
     +1 coverage per duplicate, rc-duplicates collapsed) in one hash
-    aggregate with map-side partial aggregation.
+    aggregate with map-side partial aggregation.  A read without an id
+    counts toward its group's coverage only (min and collect_list skip
+    nulls), and a group without any id makes no node, as in
+    ``smallgraph.dedup_reads``.
     """
     valid = reads.filter(dna.valid_seq(F.upper(F.col(seq_col)))).filter(F.length(seq_col) > k)
     return (
@@ -142,6 +148,7 @@ def dedup_reads(reads: DataFrame, id_col: str = "read_id", seq_col: str = "seq",
             # src/Brush/Node.java:1603-1660); sorted for determinism
             F.array_sort(F.collect_list(id_col)).alias("pair_ends"),
         )
+        .filter(F.col("node_id").isNotNull())
         .drop("__canon")
     )
 
@@ -160,12 +167,19 @@ def fingerprint_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
+# Candidate-pair bound for filtering the shingles to the candidates' docs
+# before the exact-Jaccard verify: past it the candidate set is itself
+# corpus-scale and the verify reads the whole (distinct) shingle stream.
+# Every broadcast hint of the verify sits under it (_bcast_rows_bound).
+VERIFY_FILTER_MAX = 2_000_000
+
 
 def minhash_signatures_from_shingles(shingles: DataFrame, id_col: str = "doc_id",
                                      num_hashes: int = 16) -> DataFrame:
-    """MinHash signatures over a prepared distinct (id, sh) shingle set —
-    lets pipelines share one shingle materialization between signature
-    generation and exact-Jaccard verification."""
+    """MinHash signatures over an (id, sh) shingle frame — lets pipelines
+    share one shingle materialization between signature generation and
+    exact-Jaccard verification.  The min aggregate is multiset-invariant,
+    so the frame may carry duplicate shingles."""
     wide = shingles.groupBy(id_col).agg(*[
         F.min(F.md5(F.concat_ws("|", F.lit(str(h)), F.col("sh")))).alias(f"__h{h}")
         for h in range(num_hashes)
@@ -181,19 +195,38 @@ def minhash_signatures_from_shingles(shingles: DataFrame, id_col: str = "doc_id"
                          F.col("hm.minhash").alias("minhash"))
 
 
-def _band_keys(signatures: DataFrame, id_col: str,
-               bands: int, rows_per_band: int) -> DataFrame:
-    """(id, band, bkey) band-bucket keys from melted (id, h, minhash)
-    signatures — band key = md5 of the sorted concatenated row
-    minhashes.  Shared by the self-join (lsh_candidate_pairs) and
-    cross-corpus (cross_corpus_near_dups) banding paths."""
-    return (
+def _band_buckets(signatures: DataFrame, id_col: str, bands: int,
+                  rows_per_band: int, max_bucket: int, overcap: str):
+    """Band melted (id, h, minhash) signatures into (id, band, bkey)
+    bucket rows — band key = md5 of the sorted concatenated row minhashes
+    — and split them on the bucket cap.  Returns ``(small, hot)``: the
+    rows of buckets with at most ``max_bucket`` members, and the rows of
+    the buckets over it (None unless ``overcap == "star"``).  Shared by
+    the self-join (``lsh_candidate_pairs``) and cross-corpus
+    (``cross_corpus_near_dups``) paths; each pairs the rows its own way.
+
+    The banded table (``bands`` rows per doc) is materialized before the
+    fan-out: the cap branch and both join sides would otherwise each
+    re-run the signature pipeline, in PARALLEL stages that race any
+    upstream cache while it is still cold (observed: the shingle and
+    signature stages ran 4x).  Big buckets are found by a groupBy
+    (map-side partials, skew-proof) and split off by broadcast anti- and
+    semi-joins — never a window holding a whole hot bucket in one task.
+    """
+    if overcap not in ("drop", "star"):
+        raise ValueError(f"overcap must be 'drop' or 'star', got {overcap!r}")
+    banded = cut(
         signatures.withColumn("band", (F.col("h") / rows_per_band).cast("int"))
         .filter(F.col("band") < bands)
         .groupBy(id_col, "band")
         .agg(F.md5(F.concat_ws("|", F.array_sort(F.collect_list(
-            F.concat_ws(":", F.col("h").cast("string"), F.col("minhash")))))).alias("bkey"))
-    )
+            F.concat_ws(":", F.col("h").cast("string"), F.col("minhash")))))).alias("bkey")))
+    big = F.broadcast(banded.groupBy("band", "bkey").count()
+                      .filter(F.col("count") > max_bucket).select("band", "bkey"))
+    small = banded.join(big, ["band", "bkey"], "left_anti")
+    hot = banded.join(big, ["band", "bkey"], "left_semi") \
+        if overcap == "star" else None
+    return small, hot
 
 
 def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
@@ -202,7 +235,6 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
                         overcap: str = "drop") -> DataFrame:
     """Band the signatures and emit candidate pairs sharing >= 1 band bucket.
 
-    Band key = md5 of the concatenated row minhashes; join on (band, key).
     ``max_bucket`` caps bucket width before pair expansion (skew control,
     mirrors src/Brush/MatchPrefix.java:366-380) — the cap is part of the
     operator's CONTRACT and the DuckDB oracle twin implements it too.
@@ -228,27 +260,8 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
 
     Output: (a, b) with a < b, distinct.
     """
-    if overcap not in ("drop", "star"):
-        raise ValueError(f"overcap must be 'drop' or 'star', got {overcap!r}")
-    banded = _band_keys(signatures, id_col, bands, rows_per_band)
-    # Materialize the banded table (``bands`` rows per doc — a bounded,
-    # shuffle-sized frame) before fanning out: the bucket-cap broadcast
-    # branch and both self-join sides otherwise re-execute the whole
-    # signature pipeline each, and because those stages launch in
-    # PARALLEL they race any upstream cache while it is still cold
-    # (observed: the shingle+signature stages ran 4x, tripling the
-    # query).  One eager cut turns the DAG into linear-once + cheap
-    # fan-out — the same role a shuffle materialization plays at scale.
-    #
-    # On a cluster, set spark.checkpoint.dir so the cut is a reliable
-    # checkpoint (plans.cut) rather than executor-local blocks.
-    banded = cut(banded)
-    # oversized-bucket detection via groupBy (map-side partials, skew-proof)
-    # + broadcast anti-join — never a window holding a whole hot bucket in
-    # one task.
-    big = (banded.groupBy("band", "bkey").count()
-           .filter(F.col("count") > max_bucket).select("band", "bkey"))
-    small = banded.join(F.broadcast(big), ["band", "bkey"], "left_anti")
+    small, hot = _band_buckets(signatures, id_col, bands, rows_per_band,
+                               max_bucket, overcap)
     a = small.select(F.col(id_col).alias("a"), "band", "bkey")
     b = small.select(F.col(id_col).alias("b"), "band", "bkey")
     pairs = (
@@ -256,8 +269,7 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
         .filter(F.col("a") < F.col("b"))
         .select("a", "b")
     )
-    if overcap == "star":
-        hot = banded.join(F.broadcast(big), ["band", "bkey"], "left_semi")
+    if hot is not None:
         reps = hot.groupBy("band", "bkey").agg(F.min(id_col).alias("a"))
         star = (
             hot.join(reps, ["band", "bkey"])
@@ -268,24 +280,71 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     return pairs.distinct()
 
 
+def _verified_pairs(shingles: DataFrame, cands: DataFrame, id_col: str,
+                    jaccard_threshold: float) -> DataFrame:
+    """Exact Jaccard of distinct (a, b) candidate pairs against an
+    (id, sh) shingle stream (duplicates allowed), filtered to
+    ``jaccard_threshold`` — the "candidates then theta-check" shape of
+    J2 (src/Brush/VerifyOverlap.java:287-309).  Returns (a, b, jaccard)
+    uncut, so each caller cuts its own projection once.
+
+    The candidates are cut and counted once; the count sizes the rest.
+    At or under ``VERIFY_FILTER_MAX`` pairs the shingles are semi-joined
+    to the candidates' ids, made distinct (the math needs set semantics)
+    and cut: the size aggregate and both intersection join sides read
+    that candidate-width frame, where uncut each would replay the
+    semi-join and distinct as its own stage chain.  Past the bound the
+    candidate set is corpus-scale itself, so the stream is only made
+    distinct.  Under ``_bcast_rows_bound`` the id set, the pair frame,
+    the per-pair intersection counts (<= n rows) and the per-doc sizes
+    (<= 2n rows, as the shingles were filtered) are broadcast
+    statically: AQE's runtime SMJ->BHJ conversion would still
+    shuffle-write both sides and pay a stage job per exchange.
+    """
+    cands = cut(cands)
+    n = cands.count()
+    filtered = n <= VERIFY_FILTER_MAX
+    hint = filtered and n <= _bcast_rows_bound(cands.schema["a"].dataType)
+    if filtered:
+        ids = (cands.select(F.col("a").alias(id_col))
+               .unionByName(cands.select(F.col("b").alias(id_col)))
+               .distinct())
+        sh = cut(shingles.join(F.broadcast(ids) if hint else ids,
+                               id_col, "left_semi").distinct())
+    else:
+        sh = shingles.distinct()
+    p = F.broadcast(cands) if hint else cands
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+    inter = (
+        p.join(sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sha")), "a")
+        .join(sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sha")), ["b", "sha"])
+        .groupBy("a", "b").agg(F.count(F.lit(1)).alias("inter"))
+    )
+    sa = sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sza"))
+    sb = sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("szb"))
+    if hint:
+        inter, sa, sb = F.broadcast(inter), F.broadcast(sa), F.broadcast(sb)
+    return (
+        cands.join(inter, ["a", "b"], "left")
+        .na.fill({"inter": 0})
+        .join(sa, "a").join(sb, "b")
+        .withColumn("jaccard", F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")))
+        .select("a", "b", "jaccard")
+        .filter(F.col("jaccard") >= jaccard_threshold)
+    )
+
+
 def minhash_dedup_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                         shingle_n: int = 3, num_hashes: int = 16,
                         bands: int = 4, rows_per_band: int = 4,
                         jaccard_threshold: float = 0.5,
                         overcap: str = "drop") -> DataFrame:
     """Full near-dup pipeline: MinHash -> LSH candidates -> exact-Jaccard
-    verification (the verify step mirrors J2's "candidates then theta-check"
-    shape, src/Brush/VerifyOverlap.java:287-309).  Thin tokenizing wrapper
-    over ``minhash_dedup_pairs_from_shingles`` (see there for the shingle
-    cache-lifecycle notes).
+    verification.  Thin tokenizing wrapper over
+    ``minhash_dedup_pairs_from_shingles``.
 
     Output: (a, b, jaccard) pairs above threshold, a < b.
     """
-    # the RAW shingle stream, not the distinct set: the signature
-    # aggregate is multiset-invariant (min over duplicates == min over
-    # the set) and the Jaccard verify re-distincts AFTER the candidate
-    # filter, so the corpus-width distinct exchange here bought nothing
-    # (r14, guide §2.4 — one full-width shuffle removed)
     stream = docs.select(
         F.col(id_col),
         F.explode(text.word_shingles(text.tokens(text_col), shingle_n))
@@ -293,117 +352,42 @@ def minhash_dedup_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str =
     return minhash_dedup_pairs_from_shingles(
         stream, id_col=id_col,
         num_hashes=num_hashes, bands=bands, rows_per_band=rows_per_band,
-        jaccard_threshold=jaccard_threshold, overcap=overcap,
-        shingles_distinct=False)
+        jaccard_threshold=jaccard_threshold, overcap=overcap)
 
 
 def minhash_dedup_pairs_from_shingles(shingles: DataFrame, id_col: str = "doc_id",
                                       num_hashes: int = 16,
                                       bands: int = 4, rows_per_band: int = 4,
                                       jaccard_threshold: float = 0.5,
-                                      overcap: str = "drop",
-                                      shingles_distinct: bool = True) -> DataFrame:
-    """``minhash_dedup_pairs`` over a PREPARED (id, sh) shingle frame —
+                                      overcap: str = "drop") -> DataFrame:
+    """``minhash_dedup_pairs`` over a PREPARED (id, sh) shingle stream —
     the threading entry for pipelines (curation) that already
     materialized the token stream in an earlier stage and shingle from it
     directly, so the tokenizer regex runs once per document across the
-    whole composite instead of once per stage.
+    whole composite instead of once per stage.  The stream may repeat a
+    shingle: the signatures are multiset-invariant and the verify makes
+    the shingles distinct after the candidate filter, at candidate width,
+    so callers should not pay a corpus-width distinct up front.
 
-    ``shingles_distinct=False`` declares the frame a raw shingle STREAM
-    (duplicates possible).  The signature aggregate is multiset-invariant
-    either way; the exact-Jaccard verify then re-distincts AFTER the
-    candidate filter (candidate-width), so callers should NOT pay a
-    corpus-width distinct up front (r14).
-
-    The shingle frame feeds both the signature aggregate and the exact-
-    Jaccard verification — persisted here so it evaluates once.
-    persist(), not a lazy (``eager=False``) local checkpoint: that
-    materializes by RE-RUNNING the marked tasks after the driving query's
-    execution is torn down, and those replayed tasks report to that
-    query's already-unregistered SQLMetrics accumulators — the source of
-    the benign-but-noisy "attempted to access non-existent accumulator"
-    ERROR storm in earlier bench logs.
-
-    Cache lifecycle: the returned pair set is FAR smaller than the
-    shingle set, so the final result is eagerly materialized
-    (``plans.cut``) and the shingle cache released before
-    returning — a long-running session calling this repeatedly holds
-    storage memory only for its own results, never for leaked
-    intermediates (the round-4 bench leak: +6s on this query and memory
-    pressure on everything after it).
+    The stream feeds both the signature aggregate and the verify, so it
+    is persisted here and evaluates once.  persist(), not a lazy
+    (``eager=False``) local checkpoint: that materializes by RE-RUNNING
+    the marked tasks after the driving query's execution is torn down,
+    and those replayed tasks report to that query's already-unregistered
+    SQLMetrics accumulators (a noisy "attempted to access non-existent
+    accumulator" ERROR storm).  The result, far smaller than the
+    shingles, is cut and the persisted stream released before returning,
+    so a session calling this repeatedly holds storage memory only for
+    its results.
     """
-    from pyspark import StorageLevel
     shingles = shingles.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         sigs = minhash_signatures_from_shingles(shingles, id_col, num_hashes)
-        # materialize the (tiny) candidate set before the verify joins:
-        # _jaccard_for_pairs references the pair frame in several join
-        # branches, and without a cut the whole signature aggregate +
-        # banding pipeline re-executes once per branch (measured 2-3x)
-        cands = cut(lsh_candidate_pairs(sigs, id_col, bands,
-                                        rows_per_band, overcap=overcap))
-        # ONE count over the checkpointed candidate frame serves every
-        # bounded-size decision below (the old shape paid a separate
-        # limit().count() job inside _candidate_shingles — r14 verdict #5)
-        n_cands = cands.count()
-        sh_v = _candidate_shingles(shingles, cands, id_col, n_cands=n_cands)
-        if sh_v is not shingles:
-            if not shingles_distinct:
-                # the verify math needs SET semantics (sizes,
-                # intersections); after the candidate filter this
-                # distinct is candidate-width
-                sh_v = sh_v.distinct()
-            # the verify references the filtered shingle frame FOUR ways
-            # (both intersection join sides + the two size projections);
-            # uncut, each reference re-runs the semi-join + distinct as
-            # its own parallel AQE stage chain (profiled at sf0.1: the
-            # candidate-width distinct executed 4x — 8 of the query's 30
-            # jobs).  One candidate-width cut replaces the four replays.
-            # Past the _candidate_shingles gate the frame IS the
-            # corpus-width stream — there the cut would materialize a
-            # corpus-width distinct and is deliberately skipped.
-            sh_v = cut(sh_v)
-        elif not shingles_distinct:
-            sh_v = sh_v.distinct()
-        jac = _jaccard_for_pairs(sh_v, cands, id_col, n_pairs=n_cands)
-        return cut(jac.filter(F.col("jaccard") >= jaccard_threshold))
+        cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band,
+                                    overcap=overcap)
+        return cut(_verified_pairs(shingles, cands, id_col, jaccard_threshold))
     finally:
         shingles.unpersist()
-
-
-def _candidate_shingles(sh: DataFrame, cands: DataFrame,
-                        id_col: str, n_cands: int | None = None) -> DataFrame:
-    """Restrict a shingle table to the documents named by a MATERIALIZED
-    candidate-pair frame before the exact-Jaccard verify joins.
-
-    ``_jaccard_for_pairs`` only ever consumes shingle rows of docs that
-    appear in the pair set (every reference is an inner join keyed on
-    a/b), so the filter is output-invisible — but without it the verify's
-    size aggregate and both intersection joins each EXCHANGE the full
-    corpus-width shingle table (guide §2.3: shuffle candidate-width
-    bytes, not corpus-width).  The broadcast semi-join is hinted only
-    when the pair count is provably bounded; past the bound the table
-    passes through unfiltered — the candidate set is then corpus-scale
-    itself and the filter would buy little.  ``n_cands`` threads a count
-    the caller already paid for (the checkpointed frame's count) so this
-    check costs zero jobs; only an explicit ``None`` runs the bounded
-    limit-count probe.
-    """
-    if n_cands is None:
-        n_cands = cands.limit(2_000_001).count()
-    if n_cands > 2_000_000:
-        return sh
-    ids = (cands.select(F.col("a").alias(id_col))
-           .unionByName(cands.select(F.col("b").alias(id_col)))
-           .distinct())
-    # dtype-aware broadcast hint (r15, advisor): 2x2M fixed-width ids is
-    # tens of MB framed — safe to force; ids of UNKNOWN width (strings —
-    # long URLs would be GBs at the same row count) get the forced hint
-    # only under a 16x smaller bound and otherwise leave the strategy to
-    # AQE's actual-size decision (the semi-join itself stays).
-    if n_cands <= _bcast_rows_bound(cands.schema["a"].dataType):
-        ids = F.broadcast(ids)
-    return sh.join(ids, id_col, "left_semi")
 
 
 def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
@@ -432,26 +416,21 @@ def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
     cross join fires on exactly the buckets a concatenated self-join
     would, minus the within-side pair expansion.
 
-    Scale shape: both sides' (tagged) shingle sets union into ONE
-    signature aggregate and ONE banding pass; the bucket join is
-    new-side x ref-side only, so within-side duplicates (the reference
-    corpus is typically the big, already-deduped one) never expand.
-    The bucket cap drops buckets over ``max_bucket`` TOTAL members;
-    ``overcap='star'`` instead pairs each over-cap NEW member with the
-    bucket's min REF member (linear — the mass-boilerplate case where
-    a template floods a bucket on both sides), verified like every
+    Scale shape: both sides' (tagged) shingle streams union into ONE
+    signature aggregate, ONE banding pass and ONE verify; the bucket
+    join is new-side x ref-side only, so within-side duplicates (the
+    reference corpus is typically the big, already-deduped one) never
+    expand.  The bucket cap drops buckets over ``max_bucket`` TOTAL
+    members; ``overcap='star'`` instead pairs each over-cap NEW member
+    with the bucket's min REF member (linear — the mass-boilerplate case
+    where a template floods a bucket on both sides), verified like every
     other candidate.
     """
-    if overcap not in ("drop", "star"):
-        raise ValueError(f"overcap must be 'drop' or 'star', got {overcap!r}")
     new_t, ref_t = new_docs.schema[id_col].dataType, \
         ref_docs.schema[id_col].dataType
 
     def _tagged(docs: DataFrame, tag: str,
                 tokens_col: str | None = None) -> DataFrame:
-        # raw shingle STREAMS (no distinct): signatures are multiset-
-        # invariant and the verify re-distincts after the candidate
-        # filter — see minhash_dedup_pairs_from_shingles (r14)
         toks = text.tokens(F.col(text_col)) if tokens_col is None \
             else F.col(tokens_col)
         sh = docs.select(
@@ -461,23 +440,19 @@ def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
             F.concat(F.lit(tag), F.col(id_col).cast("string")).alias(id_col),
             "sh")
 
-    from pyspark import StorageLevel
     sh = _tagged(new_docs, "n|", new_tokens_col) \
         .unionByName(_tagged(ref_docs, "r|")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     try:
         sigs = minhash_signatures_from_shingles(sh, id_col, num_hashes)
-        banded = cut(_band_keys(sigs, id_col, bands, rows_per_band))
-        big = (banded.groupBy("band", "bkey").count()
-               .filter(F.col("count") > max_bucket).select("band", "bkey"))
-        small = banded.join(F.broadcast(big), ["band", "bkey"], "left_anti")
+        small, hot = _band_buckets(sigs, id_col, bands, rows_per_band,
+                                   max_bucket, overcap)
         n_side = small.filter(F.col(id_col).startswith("n|")) \
             .select(F.col(id_col).alias("a"), "band", "bkey")
         r_side = small.filter(F.col(id_col).startswith("r|")) \
             .select(F.col(id_col).alias("b"), "band", "bkey")
         pairs = n_side.join(r_side, ["band", "bkey"]).select("a", "b")
-        if overcap == "star":
-            hot = banded.join(F.broadcast(big), ["band", "bkey"], "left_semi")
+        if hot is not None:
             # rep = min REF member per hot bucket; buckets with no ref
             # member contribute nothing (there is no ref to match)
             reps = (hot.filter(F.col(id_col).startswith("r|"))
@@ -486,68 +461,13 @@ def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
                     .join(reps, ["band", "bkey"])
                     .select(F.col(id_col).alias("a"), "b"))
             pairs = pairs.unionByName(star)
-        cands = cut(pairs.distinct())
-        # one count over the checkpointed frame feeds every bounded-size
-        # decision (candidate filter, verify broadcast hints) — r15, the
-        # same zero-extra-jobs plumbing as the self-join path
-        n_cands = cands.count()
-        sh_v = _candidate_shingles(sh, cands, id_col, n_cands=n_cands)
-        if sh_v is not sh:
-            sh_v = cut(sh_v.distinct())
-        else:
-            sh_v = sh_v.distinct()
-        jac = _jaccard_for_pairs(sh_v, cands, id_col, n_pairs=n_cands)
-        out = jac.filter(F.col("jaccard") >= jaccard_threshold).select(
+        jac = _verified_pairs(sh, pairs.distinct(), id_col, jaccard_threshold)
+        return cut(jac.select(
             F.expr("substring(a, 3)").cast(new_t).alias("new_id"),
             F.expr("substring(b, 3)").cast(ref_t).alias("ref_id"),
-            "jaccard")
-        return cut(out)
+            "jaccard"))
     finally:
         sh.unpersist()
-
-
-def _jaccard_for_pairs(sh: DataFrame, pairs: DataFrame, id_col: str,
-                       n_pairs: int | None = None) -> DataFrame:
-    """Exact Jaccard for (a, b) candidate pairs against an (id, sh)
-    shingle table.
-
-    ``n_pairs`` (when the caller already counted its materialized pair
-    frame) enables explicit broadcast hints on every provably-bounded
-    side — the pair frame itself, the per-pair intersection counts
-    (<= n_pairs rows) and the per-doc size table (<= 2 * n_pairs rows
-    after the candidate filter).  Statically-planned broadcast joins
-    skip the probe-side exchange altogether, where leaving them to
-    AQE's runtime SMJ->BHJ conversion still shuffles-writes both sides
-    and pays one sequential stage job per exchange (r15; the verify's
-    join chain was ~8 such jobs at bench scale).  Unhinted (n_pairs
-    None or over the broadcast bound) the shape is unchanged and AQE
-    decides."""
-    hint = n_pairs is not None and \
-        n_pairs <= _bcast_rows_bound(pairs.schema["a"].dataType)
-    p = F.broadcast(pairs) if hint else pairs
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a_sh = sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sha"))
-    inter = (
-        p.join(a_sh, "a")
-        .join(sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sha")), ["b", "sha"])
-        .groupBy("a", "b").agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("szb"))
-    if hint:
-        # inter is bounded by the pair count; the size tables are only
-        # broadcastable when the shingle frame was candidate-filtered
-        # (sizes is then <= 2 * n_pairs rows) — a corpus-width pass-
-        # through keeps the shuffle join for them
-        inter = F.broadcast(inter)
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    return (
-        pairs.join(inter, ["a", "b"], "left")
-        .na.fill({"inter": 0})
-        .join(sa, "a").join(sb, "b")
-        .withColumn("jaccard", F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")))
-        .select("a", "b", "jaccard")
-    )
 
 
 def dedup_clusters(pairs: DataFrame, items: DataFrame | None = None,

@@ -393,8 +393,7 @@ def semantic_decontaminate(vectors: DataFrame, benchmark: DataFrame,
 
 def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text", n: int = 13,
-                   min_df: int = 2, hash_prefilter: bool = True,
-                   tokenizer=None) -> DataFrame:
+                   min_df: int = 2, tokenizer=None) -> DataFrame:
     """Cross-document repeated-passage detection: for every document,
     the maximal token spans all of whose word ``n``-grams occur in at
     least ``min_df`` distinct documents — the gram-level approximation
@@ -417,15 +416,6 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     maximal runs (the sessionize run-grouping shape: lag + conditional
     cumsum, per-doc bounded sorts).  Output rows are intrinsically
     bounded by the repeated-content volume, never the corpus size.
-
-    ``hash_prefilter`` trades one extra linear pass for cheap shuffle
-    keys.  Default ON — the 100 TB design point, where repeats are the
-    rare case and the exact string stage shrinks to almost nothing.  On
-    a repeat-SATURATED corpus the prefilter removes little and its pass
-    is pure overhead (~20% at the sf0.1 fixture, measured head-to-head:
-    warm 6.8 s exact-only vs 8.1 s prefiltered); pass False when most
-    of the corpus is known to repeat.  Results are identical either way
-    (the string stage always re-verifies df on the true grams).
 
     Output: (id_col, span_start, span_end, n_grams) in 1-based TOKEN
     coordinates; span_end = last token index covered (start of the last
@@ -464,16 +454,14 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
         return (g.agg(F.count_distinct(F.col(id_col)).alias("df"))
                 .filter(F.col("df") >= min_df).select(key))
 
-    cand = grams
-    if hash_prefilter:
-        hashed = grams.withColumn("gh", F.xxhash64("g"))
-        hot = _df_keys(hashed, "gh")
-        # cut the candidate frame: it is SMALL (the repeated-content
-        # subset) and consumed twice below — materializing it means the
-        # full-corpus explode runs exactly twice (df pass + this pass),
-        # same as the exact-only plan, while the full-width shuffle
-        # carries 8-byte hashes instead of ~100-byte gram strings
-        cand = cut(hashed.join(hot, "gh", "left_semi").drop("gh"))
+    hashed = grams.withColumn("gh", F.xxhash64("g"))
+    hot = _df_keys(hashed, "gh")
+    # cut the candidate frame: it is SMALL (the repeated-content subset)
+    # and consumed twice below — materializing it means the full-corpus
+    # explode runs exactly twice (df pass + this pass), while the
+    # full-width shuffle carries 8-byte hashes instead of ~100-byte gram
+    # strings
+    cand = cut(hashed.join(hot, "gh", "left_semi").drop("gh"))
     shared = _df_keys(cand, "g")
     hits = cand.join(shared, "g", "left_semi").select(id_col, "pos")
     w = Window.partitionBy(id_col).orderBy("pos")
@@ -503,7 +491,7 @@ def _ws_tokens(col):
 
 def span_scrub(docs: DataFrame, id_col: str = "doc_id",
                text_col: str = "text", n: int = 13,
-               min_df: int = 2, hash_prefilter: bool = True) -> DataFrame:
+               min_df: int = 2) -> DataFrame:
     """Cross-document repeated-passage REMOVAL — the scrub counterpart of
     :func:`repeated_spans` (which only reports).  Every maximal passage
     whose word ``n``-grams occur in >= ``min_df`` distinct documents is
@@ -534,8 +522,7 @@ def span_scrub(docs: DataFrame, id_col: str = "doc_id",
     caller can join it back 1:1.
     """
     spans = repeated_spans(docs, id_col=id_col, text_col=text_col, n=n,
-                           min_df=min_df, hash_prefilter=hash_prefilter,
-                           tokenizer=_ws_tokens)
+                           min_df=min_df, tokenizer=_ws_tokens)
     per_doc = spans.groupBy(id_col).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans"),
         F.count(F.lit(1)).alias("spans_removed"),

@@ -136,9 +136,7 @@ def dedup_reads(reads, k: int) -> dict:
     with that read's sequence as read, the member count as coverage and
     the sorted member ids as ``pair_ends``.  A read without an id counts
     toward its group's coverage only, as Spark's min and collect_list
-    skip nulls.  A group without any id makes no node here, where
-    ``dedup.dedup_reads`` makes one with a null id, which no driver stage
-    could hold."""
+    skip nulls, and a group without any id makes no node."""
     groups = defaultdict(list)
     for rid, seq in reads:
         if seq is None or len(seq) <= k:

@@ -216,7 +216,7 @@ def curate(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     pairs = dedup.minhash_dedup_pairs_from_shingles(
         shingles, id_col=id_col, num_hashes=num_hashes, bands=bands,
         rows_per_band=rows_per_band, jaccard_threshold=jaccard_threshold,
-        overcap="star", shingles_distinct=False)
+        overcap="star")
     clusters = dedup.dedup_clusters(pairs, items=src.select(id_col),
                                     id_col=id_col)
     reps = clusters.filter(F.col("member") == F.col("cluster_rep")) \

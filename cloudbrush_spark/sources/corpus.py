@@ -20,23 +20,26 @@ src/Brush/Graph2Fasta.java:54-77); a document corpus instead needs:
   (hash-repartition collides distinct (split, bucket) keys into shared
   tasks at the birthday rate, silently merging files and doubling their
   size).  Adjacent buckets may still share a task, so file sizes are
-  approximately — not exactly — balanced; ``max_records_per_file`` is
+  approximately — not exactly — balanced; ``MAX_RECORDS_PER_FILE`` is
   the hard overflow valve.  Callers size files_per_split =
   split_bytes / target_file_size.
 - **Within-file ordering** (``sortWithinPartitions(id)``) so parquet
   min/max column stats on the id are tight and id-range scans prune at
   the row-group level.
 
-The join manifest->corpus is an inner equi-join on the id: broadcast it
-when the manifest is small after heavy curation; at full scale it is a
-plain shuffle join AQE can split — pass ``broadcast_manifest=False``
-(the default) and let stats decide.
+The join manifest->corpus is an inner equi-join on the id, left to AQE's
+size statistics.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# the train/val/test splits ``sampling.assign_split`` emits
+N_SPLITS = 3
+MAX_RECORDS_PER_FILE = 5_000_000
+COMPRESSION = "zstd"
 
 
 def _hfs(spark: SparkSession, path: str):
@@ -69,11 +72,7 @@ def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
 
 def publish_corpus(docs: DataFrame, manifest: DataFrame, path: str,
                    id_col: str = "doc_id", split_col: str = "split",
-                   files_per_split: int = 16,
-                   n_splits: int = 3,
-                   max_records_per_file: int = 5_000_000,
-                   broadcast_manifest: bool = False,
-                   compression: str = "zstd") -> None:
+                   files_per_split: int = 16) -> None:
     """Join the curation manifest back to the raw corpus and write the
     published training set at ``path`` partitioned by split.
 
@@ -83,13 +82,10 @@ def publish_corpus(docs: DataFrame, manifest: DataFrame, path: str,
     output ambiguous."""
     if split_col in docs.columns:
         docs = docs.drop(split_col)
-    m = manifest.select(id_col, split_col)
-    if broadcast_manifest:
-        m = F.broadcast(m)
     out = (
-        docs.join(m, id_col)
+        docs.join(manifest.select(id_col, split_col), id_col)
         .repartitionByRange(
-            n_splits * files_per_split,
+            N_SPLITS * files_per_split,
             F.col(split_col),
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_split)))
         # split_col leads the sort: partitionBy's required ordering (the
@@ -99,8 +95,8 @@ def publish_corpus(docs: DataFrame, manifest: DataFrame, path: str,
         .sortWithinPartitions(split_col, id_col)
     )
     (out.write.mode("overwrite")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("compression", COMPRESSION)
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .partitionBy(split_col)
         .parquet(path))
 

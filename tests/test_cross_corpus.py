@@ -4,7 +4,10 @@ pairs only, self-join equivalence, id-space separation, star over-cap
 mode."""
 
 import os
+import random
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -91,7 +94,41 @@ def test_no_matches_empty_result(spark):
 
 
 def test_rejects_bad_overcap(spark):
-    import pytest
     new = _df(spark, [(1, BASE)])
     with pytest.raises(ValueError, match="overcap"):
         dedup.cross_corpus_near_dups(new, new, overcap="keep")
+
+
+def _near_dups(spark):
+    """Self and cross near-dup rows, jaccard rounded, over a seeded corpus
+    of small-vocabulary texts (shingles repeat inside a document) and
+    their one-token edits."""
+    rng = random.Random(11)
+    vocab = [f"t{i}" for i in range(6)]
+    rows = []
+    for i in range(40):
+        toks = [rng.choice(vocab) for _ in range(14)]
+        rows.append((i, " ".join(toks)))
+        toks[rng.randrange(len(toks))] = rng.choice(vocab)
+        rows.append((100 + i, " ".join(toks)))
+    docs = _df(spark, rows)
+    self_rows = {(r.a, r.b, round(r.jaccard, 9))
+                 for r in dedup.minhash_dedup_pairs(docs).collect()}
+    cross_rows = {(r.new_id, r.ref_id, round(r.jaccard, 9))
+                  for r in dedup.cross_corpus_near_dups(
+                      docs.filter("doc_id < 100"),
+                      docs.filter("doc_id >= 100")).collect()}
+    return self_rows, cross_rows
+
+
+@pytest.mark.parametrize("patch", ["pass_through", "unhinted"])
+def test_verify_shapes_agree(spark, monkeypatch, patch):
+    """The verify's large-input shapes give the rows of its default one:
+    ``pass_through`` (no candidate filter, no broadcast hint) and
+    ``unhinted`` (candidate filter without the broadcast hints)."""
+    want = _near_dups(spark)
+    assert all(want) and any(j < 1.0 for _, _, j in want[0])
+    if patch == "pass_through":
+        monkeypatch.setattr(dedup, "VERIFY_FILTER_MAX", 0)
+    monkeypatch.setattr(dedup, "_bcast_rows_bound", lambda dtype: 0)
+    assert _near_dups(spark) == want

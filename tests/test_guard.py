@@ -551,18 +551,18 @@ def test_repeated_spans_gap_splits_runs(spark):
     assert sorted(per_doc[2]) == [(1, 3, 1), (6, 8, 1)]
 
 
-def test_repeated_spans_prefilter_is_result_invariant(spark):
+def test_repeated_spans_rows_of_a_shared_passage(spark):
+    """The hashed df prefilter keeps every gram of the shared passage:
+    tokens 2-7 of each carrier (its four shared 3-grams) come out as one
+    span, and the unrepeated document has none."""
     from cloudbrush_spark.operators.guard import repeated_spans
     shared = "one two three four five six"
     docs = spark.createDataFrame(
         [(i, f"head{i} " + shared + f" tail{i}") for i in range(6)]
         + [(9, "entirely unrepeated content words here")],
         "doc_id long, text string")
-    a = sorted(map(tuple, repeated_spans(
-        docs, n=3, hash_prefilter=True).collect()))
-    b = sorted(map(tuple, repeated_spans(
-        docs, n=3, hash_prefilter=False).collect()))
-    assert a == b and len(a) == 6
+    got = sorted(map(tuple, repeated_spans(docs, n=3).collect()))
+    assert got == [(i, 2, 7, 4) for i in range(6)]
 
 
 def test_span_scrub_removes_shared_passage_byte_faithfully(spark):

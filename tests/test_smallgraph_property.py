@@ -430,7 +430,8 @@ def _read_set(rng):
     or reverse-complemented, once without an id) and some lowercased,
     plus the special reads ``s…``: ``N``-bearing, k and k - 3 long, two
     that overlap on a run of A only, and one of period 7 that overlaps
-    itself."""
+    itself; and a read whose two copies (one reverse-complemented) both
+    lack an id."""
     genome = _seq(rng, 240)
     repeat = _seq(rng, 24)
     for at in (30, 120, 200):
@@ -448,8 +449,9 @@ def _read_set(rng):
                "s_k": _seq(rng, K_READS), "s_short": _seq(rng, K_READS - 3),
                "s_polya": _seq(rng, 9) + "A" * 14, "s_apoly": "A" * 14 + _seq(rng, 10),
                "s_period": _seq(rng, 7) * 6}
+    orphan = _seq(rng, 30)
     return ([(f"r{i}", x) for i, x in zip(ids, seqs)] + [(None, seqs[0])]
-            + list(special.items()))
+            + list(special.items()) + [(None, orphan), (None, rc_py(orphan))])
 
 
 def _plant_overlap_cases(rng, nodes):
