@@ -354,8 +354,7 @@ def q_hash_split(spark, sf_dir):
     unlike rand()-based sampling)."""
     from cloudbrush_spark.operators import sampling
     docs = _t(spark, sf_dir, "documents")
-    out = sampling.assign_split(docs.select("doc_id"), "doc_id",
-                                train=0.9, val=0.05, seed="split")
+    out = sampling.assign_split(docs.select("doc_id"), "doc_id")
     return out.select("doc_id", "split")
 
 
@@ -1232,11 +1231,7 @@ def q_minhash_pairs_self(spark, sf_dir):
     """The classic within-corpus MinHash pair product — the r7-comparable
     single-op form `bench.py` times under the `minhash_lsh_dedup` name
     (the driver row below is the widened union)."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_dedup_pairs(
-        docs, shingle_n=3, num_hashes=16, bands=4, rows_per_band=4,
-        jaccard_threshold=0.5,
-    )
+    pairs = dedup.minhash_dedup_pairs(_t(spark, sf_dir, "documents"))
     return pairs.select("a", "b", F.round("jaccard", 4).alias("jaccard"))
 
 
@@ -1257,9 +1252,7 @@ def q_minhash_lsh_dedup(spark, sf_dir):
         F.lit("self").alias("op"), "a", "b", "jaccard")
     cross = dedup.cross_corpus_near_dups(
         docs.filter(F.col("doc_id") % 5 == 0),
-        docs.filter(F.col("doc_id") % 5 != 0),
-        shingle_n=3, num_hashes=16, bands=4, rows_per_band=4,
-        jaccard_threshold=0.5)
+        docs.filter(F.col("doc_id") % 5 != 0))
     cross_leg = cross.select(
         F.lit("cross").alias("op"), F.col("new_id").alias("a"),
         F.col("ref_id").alias("b"), F.round("jaccard", 4).alias("jaccard"))
@@ -1273,10 +1266,7 @@ def q_dedup_clusters(spark, sf_dir):
     via the documents id universe.  The scalable product replacing the
     quadratic pair enumeration; see dedup.dedup_clusters."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_dedup_pairs(
-        docs, shingle_n=3, num_hashes=16, bands=4, rows_per_band=4,
-        jaccard_threshold=0.5,
-    )
+    pairs = dedup.minhash_dedup_pairs(docs)
     return dedup.dedup_clusters(pairs, items=docs, id_col="doc_id")
 
 
@@ -2375,14 +2365,14 @@ _SPLIT_SQL = """
 
 def _minhash_lsh_sql() -> str:
     """DuckDB twin of q_minhash_lsh_dedup's op-tagged union: the 'self'
-    leg mirrors dedup.minhash_dedup_pairs(shingle_n=3, num_hashes=16,
-    bands=4, rows_per_band=4, jaccard_threshold=0.5, max_bucket=50); the
-    'cross' leg mirrors dedup.cross_corpus_near_dups over the doc_id % 5
-    split via the SAME candidate CTE chain run on 'n|'/'r|'-tagged
-    shingles (cross=True: new-side x ref-side candidates only).  The
-    md5-based hash family is engine-portable by design (dedup.py).  Each
-    leg is its own parenthesized WITH subquery so the shared CTE names
-    don't collide."""
+    leg mirrors dedup.minhash_dedup_pairs and the scheme the dedup
+    constants fix (SHINGLE_N 3, NUM_HASHES 16, ROWS_PER_BAND 4,
+    MAX_BUCKET 50, JACCARD_THRESHOLD 0.5); the 'cross' leg mirrors
+    dedup.cross_corpus_near_dups over the doc_id % 5 split via the SAME
+    candidate CTE chain run on 'n|'/'r|'-tagged shingles (cross=True:
+    new-side x ref-side candidates only).  The md5-based hash family is
+    engine-portable by design (dedup.py).  Each leg is its own
+    parenthesized WITH subquery so the shared CTE names don't collide."""
     self_q = f"""
         WITH {_SHINGLES_CTE},
         {_lsh_cand_ctes("sh")}

@@ -235,25 +235,21 @@ def main(argv: list[str] | None = None) -> int:
                 semantic_threshold=args.semantic_threshold)
         if args.prior:
             sem_kw["reference_docs"] = spark.read.parquet(args.prior)
+
+        def scrubbed(docs, cleaned):
+            # the scrubbed clean_text replaces the corpus text, so the
+            # published text (not just the gate) is scrubbed
+            other = [c for c in docs.columns if c != "text"]
+            return docs.select(*other).join(
+                cleaned.select("doc_id", F.col("clean_text").alias("text")),
+                "doc_id")
+
         if args.boiler_df is not None:
-            # scrub the corpus itself so the published text (not just
-            # the gate) is boilerplate-free
             from cloudbrush_spark.operators.guard import boilerplate_scrub
-            cleaned = boilerplate_scrub(docs, max_df=args.boiler_df)
-            other = [c for c in docs.columns if c != "text"]
-            docs = docs.select(*other).join(
-                cleaned.select("doc_id",
-                               F.col("clean_text").alias("text")),
-                "doc_id")
+            docs = scrubbed(docs, boilerplate_scrub(docs, max_df=args.boiler_df))
         if args.scrub_spans_df is not None:
-            # before curate, like the boilerplate scrub
             from cloudbrush_spark.operators.guard import span_scrub
-            cleaned = span_scrub(docs, min_df=args.scrub_spans_df)
-            other = [c for c in docs.columns if c != "text"]
-            docs = docs.select(*other).join(
-                cleaned.select("doc_id",
-                               F.col("clean_text").alias("text")),
-                "doc_id")
+            docs = scrubbed(docs, span_scrub(docs, min_df=args.scrub_spans_df))
         manifest = curate(
             docs, quality_min=args.quality_min, lang=args.lang,
             min_tokens=args.min_tokens, max_tokens=args.max_tokens,

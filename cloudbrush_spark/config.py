@@ -19,8 +19,6 @@ class BrushParams:
     kmer_cov: float = 30.0          # expected k-mer coverage for A-statistic
     inslen: int = 200               # mate-pair insert length
     inslen_sd: int = 20
-    random_seed: int = 42           # pinned (reference uses Math.random():
-                                    # src/Brush/BrushAssembler.java:534-537)
     serial_threshold: int = 4096    # residual-subgraph size at which chain
                                     # contraction switches to the driver-side
                                     # serial finish — the reference's -nodes
@@ -42,14 +40,14 @@ class BrushParams:
     trust_filter: bool = False      # A6 IdentifyTrustedReads as a POST-
                                     # correction gate: drop reads still
                                     # carrying a k-mer at frequency <=
-                                    # trust_threshold after PreCorrect
+                                    # assembler.TRUST_THRESHOLD after
+                                    # PreCorrect
                                     # (src/Brush/IdentifyTrustedReads.java:
                                     # 73-94) — the CloudRS flow's second
                                     # half; uncorrectable error reads are
                                     # what the residual assembly base
                                     # error merges through.  Off by
                                     # default like precorrect.
-    trust_threshold: int = 1
 
     # derived (src/Brush/BrushConfig.java:86-103)
     tiplength: int = field(init=False)

@@ -40,6 +40,10 @@ from cloudbrush_spark.operators import smallgraph
 from cloudbrush_spark.operators.graph import D1, D2, compressible, remove_edges
 from cloudbrush_spark.plans import cut
 
+# Round budget of contract_chains: rounds halve the chains, and a round that
+# merges nothing re-seeds, so 64 rounds is far past any real chain length.
+MAX_ROUNDS = 64
+
 
 def _orient(seq, d):
     return F.when(d == "f", seq).otherwise(dna.rc(seq))
@@ -218,7 +222,7 @@ def _serial_contract(nodes: DataFrame, edges: DataFrame,
 
 
 def contract_chains(nodes: DataFrame, edges: DataFrame, seed: int = 42,
-                    max_rounds: int = 64, serial_threshold: int = 4096,
+                    serial_threshold: int = 4096,
                     verbose: bool = False) -> tuple[DataFrame, DataFrame, int]:
     """Contract all compressible chains to single nodes.
 
@@ -229,11 +233,14 @@ def contract_chains(nodes: DataFrame, edges: DataFrame, seed: int = 42,
     of tiny rounds (each round is a fixed number of Spark jobs, so the
     tail costs O(log n) jobs distributed vs O(1) serial).
 
-    Returns (nodes, edges, rounds_run).  Deterministic for a fixed seed.
+    Returns (nodes, edges, rounds_run) after at most ``MAX_ROUNDS``
+    rounds.  Deterministic for a fixed seed; the assembler runs the
+    default 42 (the reference draws Math.random() seeds,
+    src/Brush/BrushAssembler.java:534-537).
     """
     import time
     rounds = 0
-    for rnd in range(max_rounds):
+    for rnd in range(MAX_ROUNDS):
         t0 = time.time()
         links = cut(compressible(nodes, edges), sever=True)
         n_links = links.count()

@@ -11,11 +11,14 @@ What stays is what the pipelines run:
 - ``fingerprint_dedup``: normalized-token exact dedup of documents;
 - MinHash/LSH candidate pairs verified by exact Jaccard
   (``minhash_dedup_pairs*``, ``cross_corpus_near_dups``) — the near-dup
-  method curation runs.  The self-join and the cross-corpus join share
-  one bucket split (``_band_buckets``) and one verify
-  (``_verified_pairs``); each keeps its own pairing rule.  Per-bucket
-  pair expansion is capped (``max_bucket``) like the reference caps
-  candidates per k-mer key (src/Brush/MatchPrefix.java:366-380);
+  method curation runs, with ONE fixed scheme: word ``SHINGLE_N``-gram
+  shingles, ``NUM_HASHES`` md5 minhashes in ``BANDS`` bands of
+  ``ROWS_PER_BAND`` rows, pairs kept at Jaccard >= ``JACCARD_THRESHOLD``.
+  The self-join and the cross-corpus join share one bucket split
+  (``_band_buckets``) and one verify (``_verified_pairs``); each keeps
+  its own pairing rule.  Per-bucket pair expansion is capped
+  (``MAX_BUCKET``) like the reference caps candidates per k-mer key
+  (``UP_KMER``, src/Brush/MatchPrefix.java:366-380);
 - ``dedup_clusters``: connected components of a verified pair set.
 """
 
@@ -37,6 +40,10 @@ from cloudbrush_spark.plans import cut
 # costs ~6 sequential driver round-trips per round for up to
 # ~log2(diameter) rounds.  Past the bound the loop is the 100 TB path.
 DRIVER_CC_MAX = 2_000_000
+
+# Round budget of dedup_clusters' distributed loop (pointer jumping: 50
+# rounds cover component diameter ~2^50)
+CC_MAX_ITER = 50
 
 
 def _driver_cc_max(dtype) -> int:
@@ -167,6 +174,15 @@ def fingerprint_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
+# The one near-dup scheme; the DuckDB twin in __spark_entry__.py hard-codes
+# the same numbers.
+SHINGLE_N = 3
+NUM_HASHES = 16
+ROWS_PER_BAND = 4
+BANDS = NUM_HASHES // ROWS_PER_BAND
+MAX_BUCKET = 50
+JACCARD_THRESHOLD = 0.5
+
 # Candidate-pair bound for filtering the shingles to the candidates' docs
 # before the exact-Jaccard verify: past it the candidate set is itself
 # corpus-scale and the verify reads the whole (distinct) shingle stream.
@@ -174,75 +190,64 @@ def fingerprint_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
 VERIFY_FILTER_MAX = 2_000_000
 
 
-def minhash_signatures_from_shingles(shingles: DataFrame, id_col: str = "doc_id",
-                                     num_hashes: int = 16) -> DataFrame:
-    """MinHash signatures over an (id, sh) shingle frame — lets pipelines
-    share one shingle materialization between signature generation and
-    exact-Jaccard verification.  The min aggregate is multiset-invariant,
-    so the frame may carry duplicate shingles."""
-    wide = shingles.groupBy(id_col).agg(*[
-        F.min(F.md5(F.concat_ws("|", F.lit(str(h)), F.col("sh")))).alias(f"__h{h}")
-        for h in range(num_hashes)
-    ])
-    melted = wide.select(
-        F.col(id_col),
-        F.explode(F.array(*[
-            F.struct(F.lit(h).alias("h"), F.col(f"__h{h}").alias("minhash"))
-            for h in range(num_hashes)
-        ])).alias("hm"),
-    )
-    return melted.select(id_col, F.col("hm.h").alias("h"),
-                         F.col("hm.minhash").alias("minhash"))
+def _band_key(band: int):
+    """md5 of the band's "h:minhash" strings joined by "|" in the string
+    order of h (band 2 reads rows 10, 11, 8, 9)."""
+    hs = sorted(str(h) for h in range(band * ROWS_PER_BAND,
+                                      (band + 1) * ROWS_PER_BAND))
+    return F.md5(F.concat_ws("|", *[
+        F.concat_ws(":", F.lit(h), F.col(f"__h{h}")) for h in hs]))
 
 
-def _band_buckets(signatures: DataFrame, id_col: str, bands: int,
-                  rows_per_band: int, max_bucket: int, overcap: str):
-    """Band melted (id, h, minhash) signatures into (id, band, bkey)
-    bucket rows — band key = md5 of the sorted concatenated row minhashes
-    — and split them on the bucket cap.  Returns ``(small, hot)``: the
-    rows of buckets with at most ``max_bucket`` members, and the rows of
-    the buckets over it (None unless ``overcap == "star"``).  Shared by
-    the self-join (``lsh_candidate_pairs``) and cross-corpus
+def _band_buckets(shingles: DataFrame, id_col: str, overcap: str):
+    """Cut the (id, band, bkey) bucket rows of an (id, sh) shingle stream
+    and split them on the bucket cap.  Returns ``(small, hot)``: the rows
+    of buckets with at most ``MAX_BUCKET`` members, and the rows of the
+    buckets over it (None unless ``overcap == "star"``).  Shared by the
+    self-join (``lsh_candidate_pairs``) and cross-corpus
     (``cross_corpus_near_dups``) paths; each pairs the rows its own way.
 
-    The banded table (``bands`` rows per doc) is materialized before the
-    fan-out: the cap branch and both join sides would otherwise each
-    re-run the signature pipeline, in PARALLEL stages that race any
-    upstream cache while it is still cold (observed: the shingle and
-    signature stages ran 4x).  Big buckets are found by a groupBy
-    (map-side partials, skew-proof) and split off by broadcast anti- and
-    semi-joins — never a window holding a whole hot bucket in one task.
+    One aggregate takes each document's ``NUM_HASHES`` minhashes (min is
+    multiset-invariant, so the stream may repeat a shingle; a document
+    without shingles makes no row), and one projection of that row gives
+    its ``BANDS`` band keys (``_band_key``).  The banded table is
+    materialized before the fan-out: the cap branch and both join sides
+    would otherwise each re-run the signature pipeline, in PARALLEL
+    stages that race any upstream cache while it is still cold
+    (observed: the shingle and signature stages ran 4x).  Big buckets
+    are found by a groupBy (map-side partials, skew-proof) and split off
+    by broadcast anti- and semi-joins — never a window holding a whole
+    hot bucket in one task.
     """
     if overcap not in ("drop", "star"):
         raise ValueError(f"overcap must be 'drop' or 'star', got {overcap!r}")
-    banded = cut(
-        signatures.withColumn("band", (F.col("h") / rows_per_band).cast("int"))
-        .filter(F.col("band") < bands)
-        .groupBy(id_col, "band")
-        .agg(F.md5(F.concat_ws("|", F.array_sort(F.collect_list(
-            F.concat_ws(":", F.col("h").cast("string"), F.col("minhash")))))).alias("bkey")))
+    mins = shingles.groupBy(id_col).agg(*[
+        F.min(F.md5(F.concat_ws("|", F.lit(str(h)), F.col("sh")))).alias(f"__h{h}")
+        for h in range(NUM_HASHES)])
+    banded = cut(mins.select(id_col, F.inline(F.array(*[
+        F.struct(F.lit(b).alias("band"), _band_key(b).alias("bkey"))
+        for b in range(BANDS)]))))
     big = F.broadcast(banded.groupBy("band", "bkey").count()
-                      .filter(F.col("count") > max_bucket).select("band", "bkey"))
+                      .filter(F.col("count") > MAX_BUCKET).select("band", "bkey"))
     small = banded.join(big, ["band", "bkey"], "left_anti")
     hot = banded.join(big, ["band", "bkey"], "left_semi") \
         if overcap == "star" else None
     return small, hot
 
 
-def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
-                        bands: int = 4, rows_per_band: int = 4,
-                        max_bucket: int = 50,
+def lsh_candidate_pairs(shingles: DataFrame, id_col: str = "doc_id",
                         overcap: str = "drop") -> DataFrame:
-    """Band the signatures and emit candidate pairs sharing >= 1 band bucket.
+    """Band the MinHash signatures of an (id, sh) shingle stream and emit
+    candidate pairs sharing >= 1 band bucket.
 
-    ``max_bucket`` caps bucket width before pair expansion (skew control,
+    ``MAX_BUCKET`` caps bucket width before pair expansion (skew control,
     mirrors src/Brush/MatchPrefix.java:366-380) — the cap is part of the
     operator's CONTRACT and the DuckDB oracle twin implements it too.
 
     ``overcap`` picks what happens to buckets over the cap:
 
     - ``"drop"`` (default): dropped whole.  Right for the PAIR product —
-      a >max_bucket cluster's full pair expansion is quadratic and wrong
+      a >MAX_BUCKET cluster's full pair expansion is quadratic and wrong
       at any cap; exact duplicates belong to the upstream hash dedup
       (P1 / fingerprint_dedup), which MinHash+LSH assumes ran first.
     - ``"star"``: emit (bucket-min-id, member) candidates instead — ONE
@@ -260,8 +265,7 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
 
     Output: (a, b) with a < b, distinct.
     """
-    small, hot = _band_buckets(signatures, id_col, bands, rows_per_band,
-                               max_bucket, overcap)
+    small, hot = _band_buckets(shingles, id_col, overcap)
     a = small.select(F.col(id_col).alias("a"), "band", "bkey")
     b = small.select(F.col(id_col).alias("b"), "band", "bkey")
     pairs = (
@@ -280,11 +284,11 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     return pairs.distinct()
 
 
-def _verified_pairs(shingles: DataFrame, cands: DataFrame, id_col: str,
-                    jaccard_threshold: float) -> DataFrame:
+def _verified_pairs(shingles: DataFrame, cands: DataFrame,
+                    id_col: str) -> DataFrame:
     """Exact Jaccard of distinct (a, b) candidate pairs against an
     (id, sh) shingle stream (duplicates allowed), filtered to
-    ``jaccard_threshold`` — the "candidates then theta-check" shape of
+    ``JACCARD_THRESHOLD`` — the "candidates then theta-check" shape of
     J2 (src/Brush/VerifyOverlap.java:287-309).  Returns (a, b, jaccard)
     uncut, so each caller cuts its own projection once.
 
@@ -330,35 +334,26 @@ def _verified_pairs(shingles: DataFrame, cands: DataFrame, id_col: str,
         .join(sa, "a").join(sb, "b")
         .withColumn("jaccard", F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")))
         .select("a", "b", "jaccard")
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 
-def minhash_dedup_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                        shingle_n: int = 3, num_hashes: int = 16,
-                        bands: int = 4, rows_per_band: int = 4,
-                        jaccard_threshold: float = 0.5,
-                        overcap: str = "drop") -> DataFrame:
+def minhash_dedup_pairs(docs: DataFrame, id_col: str = "doc_id",
+                        text_col: str = "text") -> DataFrame:
     """Full near-dup pipeline: MinHash -> LSH candidates -> exact-Jaccard
-    verification.  Thin tokenizing wrapper over
+    verification, over-cap buckets dropped.  Thin tokenizing wrapper over
     ``minhash_dedup_pairs_from_shingles``.
 
     Output: (a, b, jaccard) pairs above threshold, a < b.
     """
     stream = docs.select(
         F.col(id_col),
-        F.explode(text.word_shingles(text.tokens(text_col), shingle_n))
+        F.explode(text.word_shingles(text.tokens(text_col), SHINGLE_N))
         .alias("sh"))
-    return minhash_dedup_pairs_from_shingles(
-        stream, id_col=id_col,
-        num_hashes=num_hashes, bands=bands, rows_per_band=rows_per_band,
-        jaccard_threshold=jaccard_threshold, overcap=overcap)
+    return minhash_dedup_pairs_from_shingles(stream, id_col=id_col)
 
 
 def minhash_dedup_pairs_from_shingles(shingles: DataFrame, id_col: str = "doc_id",
-                                      num_hashes: int = 16,
-                                      bands: int = 4, rows_per_band: int = 4,
-                                      jaccard_threshold: float = 0.5,
                                       overcap: str = "drop") -> DataFrame:
     """``minhash_dedup_pairs`` over a PREPARED (id, sh) shingle stream —
     the threading entry for pipelines (curation) that already
@@ -382,20 +377,14 @@ def minhash_dedup_pairs_from_shingles(shingles: DataFrame, id_col: str = "doc_id
     """
     shingles = shingles.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        sigs = minhash_signatures_from_shingles(shingles, id_col, num_hashes)
-        cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band,
-                                    overcap=overcap)
-        return cut(_verified_pairs(shingles, cands, id_col, jaccard_threshold))
+        cands = lsh_candidate_pairs(shingles, id_col, overcap)
+        return cut(_verified_pairs(shingles, cands, id_col))
     finally:
         shingles.unpersist()
 
 
 def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
                            id_col: str = "doc_id", text_col: str = "text",
-                           shingle_n: int = 3, num_hashes: int = 16,
-                           bands: int = 4, rows_per_band: int = 4,
-                           jaccard_threshold: float = 0.5,
-                           max_bucket: int = 50,
                            overcap: str = "drop",
                            new_tokens_col: str | None = None) -> DataFrame:
     """Near-dup pairs BETWEEN two corpora: every new document that
@@ -420,7 +409,7 @@ def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
     signature aggregate, ONE banding pass and ONE verify; the bucket
     join is new-side x ref-side only, so within-side duplicates (the
     reference corpus is typically the big, already-deduped one) never
-    expand.  The bucket cap drops buckets over ``max_bucket`` TOTAL
+    expand.  The bucket cap drops buckets over ``MAX_BUCKET`` TOTAL
     members; ``overcap='star'`` instead pairs each over-cap NEW member
     with the bucket's min REF member (linear — the mass-boilerplate case
     where a template floods a bucket on both sides), verified like every
@@ -435,7 +424,7 @@ def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
             else F.col(tokens_col)
         sh = docs.select(
             F.col(id_col),
-            F.explode(text.word_shingles(toks, shingle_n)).alias("sh"))
+            F.explode(text.word_shingles(toks, SHINGLE_N)).alias("sh"))
         return sh.select(
             F.concat(F.lit(tag), F.col(id_col).cast("string")).alias(id_col),
             "sh")
@@ -444,9 +433,7 @@ def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
         .unionByName(_tagged(ref_docs, "r|")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        sigs = minhash_signatures_from_shingles(sh, id_col, num_hashes)
-        small, hot = _band_buckets(sigs, id_col, bands, rows_per_band,
-                                   max_bucket, overcap)
+        small, hot = _band_buckets(sh, id_col, overcap)
         n_side = small.filter(F.col(id_col).startswith("n|")) \
             .select(F.col(id_col).alias("a"), "band", "bkey")
         r_side = small.filter(F.col(id_col).startswith("r|")) \
@@ -461,7 +448,7 @@ def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
                     .join(reps, ["band", "bkey"])
                     .select(F.col(id_col).alias("a"), "b"))
             pairs = pairs.unionByName(star)
-        jac = _verified_pairs(sh, pairs.distinct(), id_col, jaccard_threshold)
+        jac = _verified_pairs(sh, pairs.distinct(), id_col)
         return cut(jac.select(
             F.expr("substring(a, 3)").cast(new_t).alias("new_id"),
             F.expr("substring(b, 3)").cast(ref_t).alias("ref_id"),
@@ -471,7 +458,7 @@ def cross_corpus_near_dups(new_docs: DataFrame, ref_docs: DataFrame,
 
 
 def dedup_clusters(pairs: DataFrame, items: DataFrame | None = None,
-                   id_col: str = "doc_id", max_iter: int = 50) -> DataFrame:
+                   id_col: str = "doc_id") -> DataFrame:
     """Duplicate CLUSTERS from a verified near-dup pair set — the linear
     product a 100 TB pipeline consumes, vs the pair enumeration that is
     inherently quadratic in duplicate-cluster size (m docs sharing a
@@ -505,11 +492,12 @@ def dedup_clusters(pairs: DataFrame, items: DataFrame | None = None,
     rounds = O(log diameter), not diameter: near-dup clusters are dense
     quasi-cliques that converge in 2-3 rounds either way, but an
     adversarial chain of incrementally-edited versions (diameter ≫
-    max_iter) would otherwise exit with labels that name no real
+    ``CC_MAX_ITER``) would otherwise exit with labels that name no real
     representative — and a downstream ``member == cluster_rep`` filter
-    would then silently drop whole clusters.  With jumping, 50
-    iterations cover diameter ~2^50; if the fixpoint is somehow still
-    not reached the function RAISES rather than returning wrong labels.
+    would then silently drop whole clusters.  With jumping, the
+    ``CC_MAX_ITER`` = 50 rounds cover diameter ~2^50; if the fixpoint is
+    somehow still not reached the function RAISES rather than returning
+    wrong labels.
     ``plans.cut`` truncates lineage each round like the assembler's
     contraction loop; the driver-side loop holds only a changed-row
     probe, never data.
@@ -576,7 +564,7 @@ def dedup_clusters(pairs: DataFrame, items: DataFrame | None = None,
     delta = labels  # round 0: every node is fresh
     n_delta = n_nodes
     converged = not distributed  # union-find is already at the fixpoint
-    for it in range(max_iter if distributed else 0):
+    for it in range(CC_MAX_ITER if distributed else 0):
         send = delta.select(F.col("member").alias("a"), "label")
         if n_delta <= bcast_max:
             # the frontier is materialized and counted, so the broadcast
@@ -630,10 +618,10 @@ def dedup_clusters(pairs: DataFrame, items: DataFrame | None = None,
             break
     if not converged:
         raise RuntimeError(
-            f"dedup_clusters did not reach a fixpoint in {max_iter} "
-            "iterations — refusing to return labels that may name no real "
-            "representative (raise max_iter; with pointer jumping "
-            "max_iter=50 covers component diameter ~2^50)")
+            f"dedup_clusters did not reach a fixpoint in CC_MAX_ITER="
+            f"{CC_MAX_ITER} iterations — refusing to return labels that may "
+            "name no real representative (raise dedup.CC_MAX_ITER; with "
+            "pointer jumping 50 rounds cover component diameter ~2^50)")
     # paired clusters: sizes aggregated over the PAIRED label table only
     # (bounded by 2x|pairs| — node-level, never corpus-level).  Singletons
     # are (member, member, 1) by definition, so unioning them AFTER the

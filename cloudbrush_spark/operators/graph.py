@@ -235,9 +235,14 @@ def self_loops(edges: DataFrame) -> DataFrame:
     return edges.filter(F.col("src") == F.col("dst")).select("src", "et", "dst", "ov")
 
 
-def overlap_boundary_cuts(edges: DataFrame, min_support: int = 2) -> DataFrame:
+# C5(d): an overlap size is a side's boundary once this many of its edges
+# share it (the reference stops at the first repeated overlap value)
+BOUNDARY_MIN_SUPPORT = 2
+
+
+def overlap_boundary_cuts(edges: DataFrame) -> DataFrame:
     """C5(d) boundary heuristic: per (node, side), the boundary is the
-    largest overlap size shared by >= ``min_support`` edges
+    largest overlap size shared by >= ``BOUNDARY_MIN_SUPPORT`` edges
     (src/Brush/CutRepeatBoundary.java:390-401 walks the sorted list and
     stops at the first repeated overlap value); cuts fire only when that
     boundary is strictly below the side's maximum overlap (:402-404), and
@@ -247,7 +252,7 @@ def overlap_boundary_cuts(edges: DataFrame, min_support: int = 2) -> DataFrame:
     supp = sided.groupBy("src", "d", "ov").agg(F.count(F.lit(1)).alias("supp"))
     side_max = sided.groupBy("src", "d").agg(F.max("ov").alias("max_ov"))
     boundary = (
-        supp.filter(F.col("supp") >= min_support)
+        supp.filter(F.col("supp") >= BOUNDARY_MIN_SUPPORT)
         .groupBy("src", "d").agg(F.max("ov").alias("bov"))
         .join(side_max, ["src", "d"])
         .filter(F.col("bov") < F.col("max_ov"))

@@ -16,28 +16,33 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def hash_bucket(id_col: Column | str, buckets: int = 100,
-                seed: str = "split") -> Column:
-    """Stable bucket in [0, buckets) from md5(seed | id)."""
+def _md5_long(id_col: Column | str, seed: str) -> Column:
+    """First 8 hex chars of md5(seed|id) as a long in [0, 2^32) — the
+    engine-portable hash behind every bucket and order key here."""
     col = F.col(id_col) if isinstance(id_col, str) else id_col
-    hv = F.conv(
+    return F.conv(
         F.substring(F.md5(F.concat_ws("|", F.lit(seed), col.cast("string"))), 1, 8),
         16, 10,
     ).cast("long")
-    return (hv % buckets).cast("int")
 
 
-def assign_split(df: DataFrame, id_col: str, train: float = 0.9,
-                 val: float = 0.05, seed: str = "split") -> DataFrame:
+def hash_bucket(id_col: Column | str, buckets: int = 100,
+                seed: str = "split") -> Column:
+    """Stable bucket in [0, buckets) from md5(seed | id)."""
+    return (_md5_long(id_col, seed) % buckets).cast("int")
+
+
+def assign_split(df: DataFrame, id_col: str) -> DataFrame:
     """Adds a ``split`` column ('train'/'val'/'test') by hash bucket —
-    deterministic, disjoint, and stable under any reordering of the data."""
-    b = hash_bucket(id_col, 1000, seed)
-    t_hi = int(train * 1000)
-    v_hi = t_hi + int(val * 1000)
+    deterministic, disjoint, and stable under any reordering of the data.
+    One fixed scheme, which the DuckDB twin in ``__spark_entry__.py``
+    hard-codes too: md5("split" | id) in 1000 buckets, cut at 900 and 950
+    (~90% train, 5% val, 5% test)."""
+    b = hash_bucket(id_col, 1000, "split")
     return df.withColumn(
         "split",
-        F.when(b < t_hi, F.lit("train"))
-        .when(b < v_hi, F.lit("val"))
+        F.when(b < 900, F.lit("train"))
+        .when(b < 950, F.lit("val"))
         .otherwise(F.lit("test")),
     )
 
@@ -80,17 +85,6 @@ def mixture_resample(df: DataFrame, weights: dict[str, float],
         .withColumn("copy", F.explode(F.sequence(F.lit(1), F.col("__n"))))
         .drop("__n")
     )
-
-
-def _md5_long(id_col: str, seed: str) -> Column:
-    """First 8 hex chars of md5(seed|id) as a long in [0, 2^32) — the
-    engine-portable order/bucket key of ``stratified_sample``."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", F.lit(seed), F.col(id_col).cast("string"))),
-            1, 8),
-        16, 10,
-    ).cast("long")
 
 
 def calibrated_quality(df: DataFrame, quality_col: str,

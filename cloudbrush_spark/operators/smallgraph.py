@@ -35,6 +35,7 @@ import re
 from collections import Counter, defaultdict
 
 from cloudbrush_spark.functions.dna import flip_dir_py, flip_link_py, rc_py
+from cloudbrush_spark.operators.graph import BOUNDARY_MIN_SUPPORT
 
 # Driver-memory budget for finishing a stage in the driver, in the bytes
 # ``driver_bytes`` estimates.  The read lists dominate on real data: after
@@ -603,15 +604,16 @@ def self_loops(edges) -> set:
     return {e for e in edges if e[0] == e[2]}
 
 
-def overlap_boundary_cuts(edges, min_support: int = 2) -> set:
+def overlap_boundary_cuts(edges) -> set:
     """C5(d) (``graph.overlap_boundary_cuts``): per (node, side), the
-    boundary is the largest overlap shared by >= ``min_support`` edges;
-    when it is below the side's largest overlap, every edge with
+    boundary is the largest overlap shared by >= ``BOUNDARY_MIN_SUPPORT``
+    edges; when it is below the side's largest overlap, every edge with
     ov <= boundary is cut."""
     cuts = set()
     for side in _by_side(edges).values():
         supp = Counter(e[3] for e in side)
-        bov = max((ov for ov, c in supp.items() if c >= min_support), default=None)
+        bov = max((ov for ov, c in supp.items() if c >= BOUNDARY_MIN_SUPPORT),
+                  default=None)
         if bov is not None and bov < max(supp):
             cuts.update(e for e in side if e[3] <= bov)
     return cuts

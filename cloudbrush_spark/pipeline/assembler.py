@@ -48,6 +48,12 @@ from cloudbrush_spark.plans import cut
 _EDGE_SCHEMA = StructType([StructField(c, StringType()) for c in ("src", "et", "dst")]
                           + [StructField("ov", IntegerType())])
 
+# Round budget of the two edge-adjustment loops (C5, and the mate-pair J4)
+EDGE_ADJUST_ROUNDS = 4
+# trust_filter keeps a read only when every k-mer of it is seen more often
+# than this (src/Brush/IdentifyTrustedReads.java:73-94)
+TRUST_THRESHOLD = 1
+
 
 @dataclass
 class Assembler:
@@ -231,10 +237,9 @@ class Assembler:
         self._log(f"remove_low_cov: {len(doomed)} removed")
         return nodes, edges
 
-    def _edge_adjust_small(self, nodes: dict, edges: set,
-                           max_rounds: int) -> tuple[dict, set]:
+    def _edge_adjust_small(self, nodes: dict, edges: set) -> tuple[dict, set]:
         p = self.params
-        for _ in range(max_rounds):
+        for _ in range(EDGE_ADJUST_ROUNDS):
             uniq = smallgraph.unique_nodes(nodes, p.kmer_cov, p.readlen, p.k)
             removals = smallgraph.self_loops(edges) | smallgraph.overlap_boundary_cuts(
                 [e for e in edges if e[0] in uniq])
@@ -262,11 +267,11 @@ class Assembler:
             self._log(f"precorrect: {self.counters.get('precorrect_fixes', 0)} fixes")
         if p.trust_filter:
             # A6 as a post-correction gate (IdentifyTrustedReads.java:73-94):
-            # a read still holding a <= trust_threshold k-mer after
+            # a read still holding a <= TRUST_THRESHOLD k-mer after
             # correction is an uncorrectable error read — at assembly-grade
             # coverage a true k-mer is seen tens of times, so these are the
             # reads whose merge-through causes the residual base error.
-            tr = kmers.trusted_reads(reads, p.k, p.trust_threshold)
+            tr = kmers.trusted_reads(reads, p.k, TRUST_THRESHOLD)
             reads = cut(
                 reads.join(tr.filter("trusted"), on="read_id", how="left_semi"))
             self.counters["trusted_reads"] = reads.count()
@@ -375,8 +380,7 @@ class Assembler:
         """Distributed chain contraction, for the loops of stages that
         were too large for the driver."""
         nodes, edges, rounds = contraction.contract_chains(
-            nodes, edges, seed=self.params.random_seed,
-            serial_threshold=self.params.serial_threshold,
+            nodes, edges, serial_threshold=self.params.serial_threshold,
             verbose=self.verbose)
         self.counters["compress_rounds"] = \
             self.counters.get("compress_rounds", 0) + rounds
@@ -446,13 +450,13 @@ class Assembler:
         return nodes, edges
 
     # -- edgeAdjustment: C5 loop (BrushAssembler.java:400-464) -------------
-    def edge_adjustment(self, nodes: DataFrame, edges: DataFrame,
-                        max_rounds: int = 4) -> tuple[DataFrame, DataFrame]:
+    def edge_adjustment(self, nodes: DataFrame, edges: DataFrame
+                        ) -> tuple[DataFrame, DataFrame]:
         _, g = self._driver_graph("edge_adjustment", nodes, edges)
         if g is not None:
-            return self._frames(self._edge_adjust_small(*g, max_rounds), nodes, edges)
+            return self._frames(self._edge_adjust_small(*g), nodes, edges)
         p = self.params
-        for _ in range(max_rounds):
+        for _ in range(EDGE_ADJUST_ROUNDS):
             loops = graph.self_loops(edges)
             classified = graph.a_statistic(nodes, p.kmer_cov, p.readlen, p.k)
             uniq = classified.filter(F.col("unique")).select(
@@ -470,10 +474,10 @@ class Assembler:
         return nodes, edges
 
     # -- pairedgeAdjustment: A2 -> J4 -> G2 loop (BrushAssembler.java:705-775)
-    def pair_edge_adjustment(self, nodes: DataFrame, edges: DataFrame,
-                             max_rounds: int = 4) -> tuple[DataFrame, DataFrame]:
+    def pair_edge_adjustment(self, nodes: DataFrame, edges: DataFrame
+                             ) -> tuple[DataFrame, DataFrame]:
         p = self.params
-        for _ in range(max_rounds):
+        for _ in range(EDGE_ADJUST_ROUNDS):
             counts = stats_ops.global_counts(nodes).collect()[0]
             removals = mates.adjust_mate_edges(
                 nodes, edges, counts["reads"], counts["ctg_sum"],

@@ -17,8 +17,11 @@ src/Brush/BrushAssembler.java:829-893), re-targeted at documents:
 3. **Near-dup cluster dedup** — MinHash/LSH verified pairs -> hash-min
    connected components -> keep each cluster's representative.  Linear in
    corpus size (the cluster product, not the quadratic pair enumeration).
-4. **Split** — deterministic md5-bucket train/val/test assignment,
-   reproducible under any repartitioning.
+   The scheme is fixed in ``operators/dedup.py`` (word 3-gram shingles,
+   16 minhashes in 4 bands of 4 rows, Jaccard >= 0.5).
+4. **Split** — deterministic md5-bucket train/val/test assignment
+   (90/5/5, fixed in ``sampling.assign_split``), reproducible under any
+   repartitioning.
 
 Scale shape: every stage is an already-audited operator; the composite
 adds NO new shuffle pattern.  The gate and split are narrow; exact dedup
@@ -96,10 +99,6 @@ def gate_features(docs: DataFrame, id_col: str = "doc_id",
 def curate(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
            *, quality_min: float = 0.5, lang: str = "en",
            min_tokens: int = 10, max_tokens: int = 1000,
-           shingle_n: int = 3, num_hashes: int = 16, bands: int = 4,
-           rows_per_band: int = 4, jaccard_threshold: float = 0.5,
-           train: float = 0.9, val: float = 0.05,
-           seed: str = "split",
            benchmark: DataFrame | None = None,
            decontam_n: int = 13,
            benchmark_vectors: DataFrame | None = None,
@@ -172,9 +171,6 @@ def curate(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         prior_hits = (
             dedup.cross_corpus_near_dups(
                 kept, reference_docs, id_col=id_col, text_col=text_col,
-                shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
-                rows_per_band=rows_per_band,
-                jaccard_threshold=jaccard_threshold,
                 overcap="star", new_tokens_col="__toks")
             .select(F.col("new_id").alias(id_col)).distinct())
         kept = kept.join(prior_hits, id_col, "left_anti")
@@ -211,17 +207,16 @@ def curate(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # the same stream ``dedup.minhash_dedup_pairs`` builds from text.
     shingles = (
         src.select(F.col(id_col),
-                   F.explode(text.word_shingles(F.col("__toks"), shingle_n))
+                   F.explode(text.word_shingles(F.col("__toks"),
+                                                dedup.SHINGLE_N))
                    .alias("sh")))
     pairs = dedup.minhash_dedup_pairs_from_shingles(
-        shingles, id_col=id_col, num_hashes=num_hashes, bands=bands,
-        rows_per_band=rows_per_band, jaccard_threshold=jaccard_threshold,
-        overcap="star")
+        shingles, id_col=id_col, overcap="star")
     clusters = dedup.dedup_clusters(pairs, items=src.select(id_col),
                                     id_col=id_col)
     reps = clusters.filter(F.col("member") == F.col("cluster_rep")) \
         .select(F.col("member").alias(id_col))
 
-    out = sampling.assign_split(reps, id_col, train=train, val=val, seed=seed)
+    out = sampling.assign_split(reps, id_col)
     return out.join(src.select(id_col, "ws_tokens", "quality"), id_col) \
         .select(id_col, "split", "ws_tokens", "quality")

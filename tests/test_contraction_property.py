@@ -15,7 +15,7 @@ equality-checked.
 Termination: PairMark's coin pathology (a round where every chain node
 draws the same sex — the F-F-F local-minimum family,
 src/Brush/PairMark.java:133-171) merges nothing; contract_chains re-seeds
-each round, so the fixpoint must still be reached well inside max_rounds
+each round, so the fixpoint must still be reached well inside MAX_ROUNDS
 and must leave ZERO compressible links.
 """
 

@@ -32,8 +32,7 @@ def test_cross_pairs_found_within_side_ignored(spark):
     ref = _df(spark, [(10, BASE + " reftail"),
                       (11, BASE + " refother"),
                       (12, "unrelated reference document body text")])
-    got = dedup.cross_corpus_near_dups(new, ref,
-                                       jaccard_threshold=0.5).collect()
+    got = dedup.cross_corpus_near_dups(new, ref).collect()
     pairs = {(r.new_id, r.ref_id) for r in got}
     assert (1, 10) in pairs and (2, 10) in pairs
     assert all(n in (1, 2) and r in (10, 11) for n, r in pairs)
@@ -72,16 +71,16 @@ def test_equals_concatenated_self_join_cross_slice(spark):
     assert cross == self_pairs and cross
 
 
-def test_star_overcap_pairs_new_members_with_min_ref(spark):
-    # 6 identical docs per side with max_bucket=4: every bucket
+def test_star_overcap_pairs_new_members_with_min_ref(spark, monkeypatch):
+    # 6 identical docs per side with MAX_BUCKET=4: every bucket
     # overflows; star mode must pair each NEW member with the min REF
     # member, and drop mode must return nothing
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 4)
     new = _df(spark, [(i, BASE) for i in range(6)])
     ref = _df(spark, [(100 + i, BASE) for i in range(6)])
-    dropped = dedup.cross_corpus_near_dups(new, ref, max_bucket=4).collect()
+    dropped = dedup.cross_corpus_near_dups(new, ref).collect()
     assert dropped == []
-    star = dedup.cross_corpus_near_dups(new, ref, max_bucket=4,
-                                        overcap="star").collect()
+    star = dedup.cross_corpus_near_dups(new, ref, overcap="star").collect()
     got = {(r.new_id, r.ref_id) for r in star}
     assert got == {(i, 100) for i in range(6)}
     assert all(r.jaccard == 1.0 for r in star)

@@ -7,14 +7,14 @@ from cloudbrush_spark.operators import sampling
 
 def test_assign_split_disjoint_stable_and_proportional(spark):
     df = spark.range(0, 20000).withColumnRenamed("id", "doc_id")
-    out = sampling.assign_split(df, "doc_id", train=0.9, val=0.05)
+    out = sampling.assign_split(df, "doc_id")
     counts = {r.split: r.cnt for r in
               out.groupBy("split").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     assert set(counts) == {"train", "val", "test"}
     assert abs(counts["train"] / 20000 - 0.9) < 0.02
     assert abs(counts["val"] / 20000 - 0.05) < 0.01
     # stability: same assignment on re-computation and under repartition
-    again = sampling.assign_split(df.repartition(17), "doc_id", train=0.9, val=0.05)
+    again = sampling.assign_split(df.repartition(17), "doc_id")
     diff = (out.withColumnRenamed("split", "s1")
             .join(again.withColumnRenamed("split", "s2"), "doc_id")
             .filter(F.col("s1") != F.col("s2")).count())
